@@ -33,22 +33,39 @@ object Artifacts {
 
   /** Persist a [[Dedup.MinhashIndex]] as `dir/buckets` + `dir/content`.
     * Bucket rows land PARTITIONED BY `band` (one directory per band,
-    * rows clustered on the (band, bucket) probe key within it): the
-    * streaming gate's per-band anti-joins
-    * ([[graft.streaming.EventStreams.incrementalNearIntake]] runs one
-    * per band) each prune to 1/bands of the files instead of scanning
-    * the whole index `bands` times — the same at-rest pruning story as
-    * the IVF-PQ cell layout. Appends from
-    * [[graft.streaming.EventStreams.maintainedNearIntake]] use the SAME
-    * `partitionBy("band")` layout (a mixed layout would break partition
-    * discovery); the next [[compactMinhashIndex]] re-clusters within
-    * bands and re-enforces the cap.
+    * rows clustered on the (band, bucket) probe key within it) — the
+    * same at-rest pruning story as the IVF-PQ cell layout. The
+    * streaming gate ([[graft.streaming.EventStreams.incrementalNearIntake]])
+    * probes every band in ONE two-key (band, bucket) join over a single
+    * scan of the bucket relation; a reader that probes one band prunes
+    * to 1/bands of the files. Appends ([[appendMinhashIndex]]) write the
+    * SAME layout (a mixed layout would break partition discovery); the
+    * next [[compactMinhashIndex]] re-clusters within bands and
+    * re-enforces the cap.
     */
-  def saveMinhashIndex(index: Dedup.MinhashIndex, dir: String): Unit = {
-    index.buckets.select(col("id"), col("band"), col("bucket"))
-      .repartition(col("band"), col("bucket"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/buckets")
-    index.content.write.mode("overwrite").parquet(s"$dir/content")
+  def saveMinhashIndex(index: Dedup.MinhashIndex, dir: String): Unit =
+    writeMinhashIndex(
+      index.buckets.select(col("id"), col("band"), col("bucket"))
+        .repartition(col("band"), col("bucket")),
+      index.content, dir, "overwrite")
+
+  /** Append `docs`' index rows — band-bucket rows and shingle sets, the
+    * [[Dedup.minhashIndex]] shapes without its bucket cap and per-id
+    * dedup, which [[compactMinhashIndex]] re-enforces — to the persisted
+    * index at `dir`: the closed-loop step of the near-dup intakes, so
+    * the next cycle's gate sees this cycle's docs.
+    */
+  def appendMinhashIndex(docs: DataFrame, dir: String, nShingle: Int,
+      bands: Int, rowsPerBand: Int): Unit =
+    writeMinhashIndex(Dedup.minhashBuckets(docs, nShingle, bands, rowsPerBand),
+      docs.select(col("doc_id").as("id"),
+        Dedup.shingles(col("text"), nShingle).as("sh")),
+      dir, "append")
+
+  private def writeMinhashIndex(buckets: DataFrame, content: DataFrame,
+      dir: String, mode: String): Unit = {
+    buckets.write.mode(mode).partitionBy("band").parquet(s"$dir/buckets")
+    content.write.mode(mode).parquet(s"$dir/content")
   }
 
   /** Load pair of [[saveMinhashIndex]]. Resolves the crash-safe `_LATEST`
@@ -548,11 +565,6 @@ object Artifacts {
       (fit: => TextAnalysis.QualityLrModel): TextAnalysis.QualityLrModel =
     if (artifactExists(spark, dir)) loadQualityLr(spark, dir)
     else { val m = fit; saveQualityLr(spark, m, dir); m }
-
-  def loadOrBuildMinhashIndex(spark: SparkSession, dir: String)
-      (build: => Dedup.MinhashIndex): Dedup.MinhashIndex =
-    if (artifactExists(spark, dir)) loadMinhashIndex(spark, dir)
-    else { val idx = build; saveMinhashIndex(idx, dir); loadMinhashIndex(spark, dir) }
 
   /** The fitted ALS factor model — the reference's FLAGSHIP artifact (the
     * ~30-minute cluster fit of `als.py:87` that the reference recomputes

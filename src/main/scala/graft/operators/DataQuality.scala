@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: all row-level constraints are evaluated in ONE pass over
   * the relation (a single aggregate of `sum(when(!p, 1))` columns — never
   * one scan per check), then unpivoted to the long (check, n_bad) report
-  * form. Referential checks are left-anti joins against the DISTINCT
+  * form. Referential checks left-join the child against the DISTINCT
   * parent keys (parent side reduces before the join; broadcast when the
   * key set is small).
   */
@@ -29,16 +29,6 @@ object DataQuality {
         "check", "n_bad")
       .select(col("check"), col("n_bad"), col("__n").as("n_rows"))
   }
-
-  /** Count of child rows whose key has no parent — the referential-
-    * integrity check as a left-anti join against distinct parent keys.
-    */
-  def referentialViolations(child: DataFrame, childKey: String,
-      parent: DataFrame, parentKey: String): DataFrame =
-    child.select(col(childKey))
-      .join(parent.select(col(parentKey).as(childKey)).distinct(),
-        Seq(childKey), "left_anti")
-      .agg(count(lit(1)).as("n_bad"))
 
   /** Referential check in [[constraintReport]]'s row shape
     * (check, n_bad, n_rows), via ONE pass over the child (left join +

@@ -3,8 +3,10 @@ package graft.operators
 import graft.functions.TextHashFunctions
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Document deduplication for training-data pipelines: exact,
   * MinHash+LSH (Jaccard), SimHash (Hamming), n-gram Jaccard, and
@@ -129,19 +131,6 @@ object Dedup {
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
-  /** MinHash signature as an array of k minima: element j is
-    * `min over shingles s of xxhash64(j, s)` — the standard unbiased
-    * Jaccard estimator family, expressed entirely with built-in
-    * higher-order functions (no UDF).
-    */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    transform(sequence(lit(1), lit(k)),
-      j => array_min(transform(shingleCol, s => xxhash64(j, s))))
-
-  /** MinHash LSH candidate pairs: docs whose signatures collide in ≥1 band,
-    * with the exact Jaccard of their shingle sets attached for
-    * thresholding. `bands × rowsPerBand = k` hash functions.
-    */
   /** The (band, bucket, id) bucket relation of the MinHash banding —
     * exposed so [[bucketStats]] can audit the REAL banding's health
     * (q_minhash_bucket_health), not just a stand-in.
@@ -154,6 +143,10 @@ object Dedup {
         shingles(col(textCol), nShingle), bands, rowsPerBand))
         .as(Seq("band", "bucket")))
 
+  /** MinHash LSH candidate pairs: docs whose signatures collide in ≥1 band,
+    * with the exact Jaccard of their shingle sets attached for
+    * thresholding. `bands × rowsPerBand = k` hash functions.
+    */
   def minhashCandidates(
       docs: DataFrame, nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
@@ -917,42 +910,21 @@ object Dedup {
 
   /** Passage-granularity exact dedup (the sub-document pass a training
     * corpus runs when whole-doc dedup is too coarse — boilerplate,
-    * repeated headers, syndicated spans): split each document's token
-    * stream into fixed `k`-token passages, keep only each passage's FIRST
-    * corpus-wide occurrence (ordered by (doc_id, idx) — deterministic),
-    * and report per doc how much survived.
-    *
-    * Returns (doc_id, idx, para) rows of surviving passages.
+    * repeated headers, syndicated spans) as a per-document report in ONE
+    * tokenization pass: each document's token stream splits into fixed
+    * `k`-token passages, and only each passage's FIRST corpus-wide
+    * occurrence (ordered by (doc_id, idx) — deterministic) survives.
+    * Returns (doc_id, n_chunks, n_kept, dedup_hash) where `n_chunks`
+    * counts all of the doc's passages, `n_kept` the first occurrences
+    * among them, and `dedup_hash` fingerprints the surviving text in
+    * passage order.
     *
     * Scale shape: tokenization is one fused pass behind an aggregate
     * barrier (the chunking `transform` would otherwise re-run the
     * tokenizer per passage — Catalyst HOF semantics); first-occurrence
     * selection is ONE shuffle on the passage hash with a `row_number`
-    * kept at 1 (bounded per-group state, same spill posture as
-    * [[bucketPairs]]'s cap window).
-    */
-  def passageDedup(docs: DataFrame, k: Int = 20,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toksDf = docs
-      .select(col(idCol), tokens(col(textCol)).as("toks"))
-      .groupBy(col(idCol)).agg(first(col("toks")).as("toks")) // HOF barrier
-      .filter(size(col("toks")) > 0)
-    val chunks = toksDf.select(col(idCol),
-      posexplode(transform(
-        sequence(lit(0), ceil(size(col("toks")) / lit(k.toDouble)).cast("int") - 1),
-        i => array_join(slice(col("toks"), i * k + 1, lit(k)), " ")))
-        .as(Seq("idx", "para")))
-    val w = Window.partitionBy(md5(col("para"))).orderBy(col(idCol), col("idx"))
-    chunks.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** Per-document passage-dedup report in ONE tokenization pass:
-    * (doc_id, n_chunks, n_kept, dedup_hash) where `n_chunks` counts all of
-    * the doc's `k`-token passages, `n_kept` the corpus-wide first
-    * occurrences among them, and `dedup_hash` fingerprints the surviving
-    * text in passage order.
+    * (bounded per-group state, same spill posture as [[bucketPairs]]'s
+    * cap window).
     *
     * The round-3 form re-ran the full-corpus tokenizer a second time just
     * to compute `n_chunks` and joined it back (tokenization dominated the
@@ -1044,13 +1016,12 @@ object Dedup {
     // guard-bounded collect + one parallelize. At real scale the guard
     // fails and the pointer-jumping loop runs unchanged — the 100 TB
     // path is untouched; DedupSimilaritySpec asserts both paths equal
-    // driver union-find on the same graphs. Integral ids take the
-    // primitive-long twin; STRING ids (the entity-resolution graphs —
-    // q_er_clusters clusters p_name strings and paid the full
-    // pointer-jumping job floor, measured r18: 29 jobs / ~1.0 s of
-    // ~50 ms launches on byte-tiny shuffles) take a UTF8String
-    // union-find whose min-root convention is the same BINARY order
-    // Spark's least()/min use for strings. Other id types stay
+    // driver union-find on the same graphs. Integral ids union as
+    // longs; STRING ids (the entity-resolution graphs — q_er_clusters
+    // clusters p_name strings and paid the full pointer-jumping job
+    // floor, measured r18: 29 jobs / ~1.0 s of ~50 ms launches on
+    // byte-tiny shuffles) union as UTF8String under the same BINARY
+    // order Spark's least()/min use for strings. Other id types stay
     // distributed.
     // id type read from the (id_a, id_b) PROJECTION, not the raw caller
     // frame — a caller with extra/reordered columns must not change
@@ -1068,8 +1039,16 @@ object Dedup {
       })
     Guarded.iterate(proj,
         if (localizable) localThreshold else -1L) { (p, _) =>
-      if (idT == org.apache.spark.sql.types.StringType) localCCString(p)
-      else localCC(p, idT)
+      val spark = p.sparkSession
+      import spark.implicits._
+      if (idT == org.apache.spark.sql.types.StringType)
+        localCC[UTF8String](p, _.getUTF8String(_), _.compareTo(_))
+          .map { case (id, c) => (id.toString, c.toString) }.toDF("id", "comp")
+      else
+        // integral ids union as longs and cast back to the caller's type
+        localCC[Long](p, _.get(_, idT).asInstanceOf[Number].longValue,
+            java.lang.Long.compare).toDF("id", "comp")
+          .select(col("id").cast(idT).as("id"), col("comp").cast(idT).as("comp"))
     } { (p, _) =>
       distributedCC(p, maxIter, checkpointEvery)
     }
@@ -1130,83 +1109,41 @@ object Dedup {
 
   /** Driver-local CC twin of the distributed loop: union-find with
     * union-BY-MIN-root + path compression, so every root IS the min id of
-    * its component — exactly the distributed loop's fixpoint label. Input
-    * is bounded (≤ `localThreshold` edge rows — the caller's count guard),
-    * output preserves the caller's integral id type.
+    * its component — exactly the distributed loop's fixpoint label.
+    * `key` reads an endpoint of the collected internal row and `cmp` is
+    * the id order Spark's least()/min use for that type; keys must be
+    * valid hash keys (boxed longs, or UTF8String's byte equality — see
+    * Guarded.collectInternal). Input is bounded (≤ `localThreshold` edge
+    * rows — the caller's count guard); null endpoints are skipped.
+    * Returns (id, root) for every node.
     */
-  private def localCC(p: DataFrame,
-      idT: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = p.sparkSession
-    import spark.implicits._
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+  private def localCC[K](p: DataFrame, key: (InternalRow, Int) => K,
+      cmp: (K, K) => Int): Seq[(K, K)] = {
+    val parent = new java.util.HashMap[K, K]()
+    def find(x: K): K = {
       var r = x
       while (parent.get(r) != r) r = parent.get(r)
       var c = x
       while (parent.get(c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    // bounded by the caller's count guard; internal-format collect
-    // (Guarded.collectInternal doc) — no external-Row conversion
-    val dts = p.schema.fields.map(_.dataType)
     Guarded.collectInternal(p).foreach { row =>
       if (!row.isNullAt(0) && !row.isNullAt(1)) {
-        val a = row.get(0, dts(0)).asInstanceOf[Number].longValue
-        val b = row.get(1, dts(1)).asInstanceOf[Number].longValue
+        val a = key(row, 0)
+        val b = key(row, 1)
         parent.putIfAbsent(a, a)
         parent.putIfAbsent(b, b)
         val ra = find(a); val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
+        val c = cmp(ra, rb)
+        if (c < 0) parent.put(rb, ra)
+        else if (c > 0) parent.put(ra, rb)
       }
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    val out = new scala.collection.mutable.ArrayBuffer[(K, K)](parent.size)
     parent.keySet.forEach(id => out += ((id, find(id))))
-    spark.createDataset(out.toSeq).toDF("id", "comp")
-      .select(col("id").cast(idT).as("id"), col("comp").cast(idT).as("comp"))
+    out.toSeq
   }
 
-  /** [[localCC]] for STRING ids: union-find keyed by UTF8String (valid
-    * hash keys — byte equality/hashing, see Guarded.collectInternal),
-    * union-by-min under UTF8String.compareTo — the same unsigned-byte
-    * order Spark's least()/min comparisons use for StringType, so the
-    * root of every component is exactly the distributed loop's fixpoint
-    * label. Null endpoints are skipped (the long twin's convention).
-    */
-  private def localCCString(p: DataFrame): DataFrame = {
-    val spark = p.sparkSession
-    import spark.implicits._
-    import org.apache.spark.unsafe.types.UTF8String
-    val parent = new java.util.HashMap[UTF8String, UTF8String]()
-    def find(x: UTF8String): UTF8String = {
-      var r = x
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = x
-      while (parent.get(c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
-    Guarded.collectInternal(p).foreach { row =>
-      if (!row.isNullAt(0) && !row.isNullAt(1)) {
-        val a = row.getUTF8String(0)
-        val b = row.getUTF8String(1)
-        parent.putIfAbsent(a, a)
-        parent.putIfAbsent(b, b)
-        val ra = find(a); val rb = find(b)
-        val cmp = ra.compareTo(rb)
-        if (cmp < 0) parent.put(rb, ra)
-        else if (cmp > 0) parent.put(ra, rb)
-      }
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[(String, String)](parent.size)
-    parent.keySet.forEach(id => out += ((id.toString, find(id).toString)))
-    spark.createDataset(out.toSeq).toDF("id", "comp")
-  }
-
-  /** [[dedupKeepSet]] with full transitive closure: in every connected
-    * component of the pair graph only the min id survives. The planted
-    * chain A~B, B~C (A≁C) keeps exactly {A}, where the one-hop form
-    * keeps {A} only if B happened to be listed as an `id_b`.
-    */
   /** INCREMENTAL connected components — merge a NEW batch of edges into
     * an existing label relation WITHOUT recomputing the closure over the
     * historical graph. The at-scale form of graph maintenance for the
@@ -1257,6 +1194,11 @@ object Dedup {
     remapped.unionByName(newNodes.select(col("id"), col("comp")))
   }
 
+  /** [[dedupKeepSet]] with full transitive closure: in every connected
+    * component of the pair graph only the min id survives. The planted
+    * chain A~B, B~C (A≁C) keeps exactly {A}, where the one-hop form
+    * keeps {A} only if B happened to be listed as an `id_b`.
+    */
   def dedupKeepSetClosure(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIter: Int = 20): DataFrame = {
     val demoted = connectedComponents(pairs, maxIter)

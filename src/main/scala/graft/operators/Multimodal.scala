@@ -86,15 +86,6 @@ object Multimodal {
       }
       (h, sums)
     }
-    /** Deterministic fake resize: recompute metadata only (real impl:
-      * scale pixels). */
-    def resizeMeta(w: Int, h: Int, maxSide: Int): (Int, Int) = {
-      if (math.max(w, h) <= maxSide || math.max(w, h) == 0) (w, h)
-      else {
-        val s = maxSide.toDouble / math.max(w, h)
-        (math.max(1, (w * s).toInt), math.max(1, (h * s).toInt))
-      }
-    }
   }
 
   // ------------------------------------------------------------------

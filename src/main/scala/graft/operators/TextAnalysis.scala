@@ -36,7 +36,7 @@ object TextAnalysis {
     * totals via the left joins.
     *
     * Scale shape: ONE tokenize pass behind an aggregate barrier (the
-    * passageDedup HOF discipline), checkpointed once and read by the
+    * passageDedupReport HOF discipline), checkpointed once and read by the
     * three n-gram branches; each branch is explode → two-level count
     * (map-side combinable, keys bounded per doc by its own length); the
     * assembly joins are per-doc-keyed. Nothing global, nothing driver-
@@ -138,6 +138,14 @@ object TextAnalysis {
     when(top.getField("neg_hits") === 0, lit("und")).otherwise(top.getField("lang"))
   }
 
+  /** The heuristic curation gate every quality-filtered intake and the
+    * batch `q_corpus_clean` share: [[qualityScore]] at `minQuality`+ AND
+    * [[langId]] `en`. One map-only predicate (two fused text passes), so
+    * it runs ahead of any stateful or join stage.
+    */
+  def heuristicGate(text: Column, minQuality: Double): Column =
+    qualityScore(text) >= minQuality && langId(text) === "en"
+
   /** Per-language hit counts (for inspection / oracle parity). */
   def langHits(text: Column): Seq[Column] = {
     val hits = graft.functions.TextStats.lang_hits(text)
@@ -206,7 +214,7 @@ object TextAnalysis {
     *
     * Scale shape: tokenization runs ONCE per doc behind an aggregate
     * barrier (the chunk `transform` would otherwise re-run the tokenizer
-    * per chunk index — the [[Dedup.passageDedup]] HOF lesson), then
+    * per chunk index — the [[Dedup.passageDedupReport]] HOF lesson), then
     * chunking is a pure map-side explode: zero shuffles beyond the
     * 1-row-per-doc barrier aggregate. `sequence(0, nChunks−1)` is guarded
     * (greatest 0) against the `sequence(0, −1) == [0, −1]` trap.
@@ -472,12 +480,11 @@ object TextAnalysis {
     * not a law: at a 100 TB train corpus with a large eval suite the
     * distinct 5-grams can exceed executor broadcast limits, and Spark's
     * failure mode is an OOM mid-join, not a clean error. So the gram
-    * count is measured FIRST (the grams are eagerly localCheckpoint'ed,
-    * so the count and the join share one evaluation) and the join
-    * degrades to a shuffled equi-join above `maxBroadcastGrams` — same
-    * rows, different exchange. The choice is not silent: it is logged
-    * AND returned in the plan record (the repo's no-silent-caps norm);
-    * both paths are asserted value-equal in CurationSpec.
+    * count is measured FIRST ([[benchGrams]]) and the join degrades to a
+    * shuffled equi-join above `maxBroadcastGrams` — same rows, different
+    * exchange. The choice is not silent: it is logged AND returned in
+    * the plan record (the repo's no-silent-caps norm); both paths are
+    * asserted value-equal in CurationSpec.
     *
     * Default threshold: 5M grams ≈ a few hundred MB broadcast at ~30
     * bytes/gram — inside the 8GB broadcast-table hard cap with a wide
@@ -488,34 +495,53 @@ object TextAnalysis {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The distinct bench-side `n`-gram relation, eagerly materialized
-    * (localCheckpoint) so the count and every downstream join share one
-    * evaluation — factored out so long-lived consumers (the streaming
-    * decontamination intake) can pay the bench scan ONCE instead of per
-    * micro-batch.
+  /** The bench side every decontamination gate shares — the batch
+    * operators below and the streaming intakes, which build it ONCE at
+    * wiring so they pay the bench scan once instead of per micro-batch:
+    * the distinct `n`-gram relation (eagerly localCheckpoint'ed, so the
+    * count and every downstream join share one evaluation), its count,
+    * and the measured broadcast choice for the verify join.
     */
-  def benchGramSet(bench: DataFrame, n: Int = 5,
-      textCol: String = "text"): (DataFrame, Long) = {
+  private[graft] final case class BenchGrams(grams: DataFrame, nGrams: Long,
+      n: Int, broadcastUsed: Boolean) {
+    /** In-scan bloom pre-filter on `text`
+      * ([[graft.functions.TextHashFunctions.BloomGramHit]]): no false
+      * negatives, so a doc it rejects is PROVEN clean. The bloom is one
+      * distributed aggregate over the grams, built only by the callers
+      * that probe — the exact path never builds one.
+      */
+    def probe(text: Column, fpp: Double): Column =
+      graft.functions.TextHashFunctions.bloom_gram_hit(text,
+        grams.stat.bloomFilter("g", math.max(nGrams, 1L), fpp), n)
+
+    /** The exact verify: ids of `docs` sharing an `n`-gram with the
+      * bench — explode → guarded join → distinct ids.
+      */
+    def hitIds(docs: DataFrame, textCol: String = "text",
+        idCol: String = "doc_id"): DataFrame =
+      docs.select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
+        .join(if (broadcastUsed) broadcast(grams) else grams, Seq("g"))
+        .select(col(idCol)).distinct()
+  }
+
+  private[graft] def benchGrams(bench: DataFrame, n: Int = 5,
+      maxBroadcastGrams: Long = 5000000L, textCol: String = "text"): BenchGrams = {
     val grams = bench
       .select(explode(Dedup.shingles(col(textCol), n)).as("g"))
       .distinct().localCheckpoint(true)
-    (grams, grams.count())
+    val nG = grams.count()
+    val useBroadcast = nG <= maxBroadcastGrams
+    logger.info(s"decontamination: $nG distinct bench $n-grams -> " +
+      (if (useBroadcast) "broadcast" else
+        s"SHUFFLE join (over maxBroadcastGrams=$maxBroadcastGrams)"))
+    BenchGrams(grams, nG, n, useBroadcast)
   }
 
   def contaminationPlan(train: DataFrame, bench: DataFrame, n: Int = 5,
       maxBroadcastGrams: Long = 5000000L,
       textCol: String = "text", idCol: String = "doc_id"): DecontaminationPlan = {
-    val (grams, nG) = benchGramSet(bench, n, textCol)
-    val useBroadcast = nG <= maxBroadcastGrams
-    logger.info(s"decontamination: $nG distinct bench $n-grams -> " +
-      (if (useBroadcast) "broadcast" else
-        s"SHUFFLE join (over maxBroadcastGrams=$maxBroadcastGrams)"))
-    val benchSide = if (useBroadcast) broadcast(grams) else grams
-    val ids = train
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
-      .join(benchSide, Seq("g"))
-      .select(col(idCol)).distinct()
-    DecontaminationPlan(ids, nG, useBroadcast)
+    val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
+    DecontaminationPlan(g.hitIds(train, textCol, idCol), g.nGrams, g.broadcastUsed)
   }
 
   /** Remove every train doc sharing an `n`-gram with the bench set —
@@ -538,31 +564,18 @@ object TextAnalysis {
     * [[graft.functions.TextHashFunctions.BloomGramHit]] predicate —
     * early-exit per doc, no gram array allocated — and only the docs
     * that MIGHT overlap (true contamination + fpp of the rest) pay the
-    * explode→join. Bloom filters have no false negatives and gram
-    * construction is byte-identical to `shingle_set`, so candidates ⊇
-    * contaminated exactly, and the final anti-join result equals the
+    * explode→join, under the same guarded-broadcast rule as
+    * [[contaminationPlan]]. Bloom filters have no false negatives and
+    * gram construction is byte-identical to `shingle_set`, so candidates
+    * ⊇ contaminated exactly, and the final anti-join result equals the
     * exact path's — same oracle SQL verifies both.
     */
   def decontaminateBloom(train: DataFrame, bench: DataFrame, n: Int = 5,
       fpp: Double = 0.01, maxBroadcastGrams: Long = 5000000L,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val (grams, nG) = benchGramSet(bench, n, textCol)
-    val bloom = grams.stat.bloomFilter("g", math.max(nG, 1L), fpp)
-    val candidates = train.filter(
-      graft.functions.TextHashFunctions.bloom_gram_hit(col(textCol), bloom, n))
-    // verify join uses the SAME guarded-broadcast rule as
-    // contaminationPlan — above the threshold it degrades to a shuffled
-    // equi-join rather than silently forcing a huge broadcast
-    val useBroadcast = nG <= maxBroadcastGrams
-    logger.info(s"decontaminateBloom verify: $nG distinct bench $n-grams -> " +
-      (if (useBroadcast) "broadcast" else
-        s"SHUFFLE join (over maxBroadcastGrams=$maxBroadcastGrams)"))
-    val benchSide = if (useBroadcast) broadcast(grams) else grams
-    val contaminatedIds = candidates
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
-      .join(benchSide, Seq("g"))
-      .select(col(idCol)).distinct()
-    train.join(contaminatedIds, Seq(idCol), "left_anti")
+    val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
+    val candidates = train.filter(g.probe(col(textCol), fpp))
+    train.join(g.hitIds(candidates, textCol, idCol), Seq(idCol), "left_anti")
   }
 
   /** Feature vector the trained quality gate fits AND serves on — one
@@ -649,11 +662,6 @@ object TextAnalysis {
     QualityLrModel(m.intercept, m.coefficients.toArray)
   }
 
-  /** Serve the trained gate as ONE map-only column: `sigmoid(b + w·x)`
-    * over the same feature expressions the fit used. Stateless —
-    * pipelines into a parquet curation chain or a STREAMING select with
-    * no state store (the DSIR/LM serving shape).
-    */
   /** Token-length-bucket reference distribution — the drift-detection
     * build artifact: ≤ `nBuckets`+1 doubles of driver state, fit once
     * over a trusted corpus snapshot and compared against every incoming
@@ -672,16 +680,23 @@ object TextAnalysis {
     least(floor(coalesce(tokenCountWs(text), lit(0L)) / 8),
       lit(nBuckets.toLong)).cast("long")
 
-  /** Fit the reference histogram: one bounded aggregate (≤ nBuckets+1
-    * rows collected). Laplace-smoothed so JSD against it is finite for
-    * any batch (empty reference cells get pseudo-count 1).
+  /** Doc counts per [[lenBucket]] — one bounded aggregate (≤ nBuckets+1
+    * rows collected). The histogram every drift check reads: the
+    * reference fit below, and each batch compared by [[jsdVsRef]].
+    */
+  def lenBucketCounts(docs: DataFrame, nBuckets: Int = 20,
+      textCol: String = "text"): Map[Int, Long] =
+    docs.select(lenBucket(col(textCol), nBuckets).as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
+      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+
+  /** Fit the reference histogram from [[lenBucketCounts]],
+    * Laplace-smoothed so JSD against it is finite for any batch (empty
+    * reference cells get pseudo-count 1).
     */
   def fitLenHistogram(docs: DataFrame, nBuckets: Int = 20,
       textCol: String = "text"): LenHistogram = {
-    val counts = docs
-      .select(lenBucket(col(textCol), nBuckets).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val counts = lenBucketCounts(docs, nBuckets, textCol)
     val raw = Array.tabulate(nBuckets + 1)(i => counts.getOrElse(i, 0L) + 1.0)
     val z = raw.sum
     LenHistogram(raw.map(_ / z))
@@ -784,6 +799,11 @@ object TextAnalysis {
       })
   }
 
+  /** Serve the trained gate as ONE map-only column: `sigmoid(b + w·x)`
+    * over the same feature expressions the fit used. Stateless —
+    * pipelines into a parquet curation chain or a STREAMING select with
+    * no state store (the DSIR/LM serving shape).
+    */
   def qualityLrScore(m: QualityLrModel)(text: Column): Column = {
     require(m.weights.length == qualityLrDim,
       s"expected $qualityLrDim weights, got ${m.weights.length}")

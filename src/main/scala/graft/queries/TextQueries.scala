@@ -657,8 +657,7 @@ object TextQueries {
       val base = docs(s, d)
       val keep = Dedup.exactDedup(base).select(col("keep_id").as("doc_id"))
       base.join(keep, Seq("doc_id"))
-        .filter(TextAnalysis.qualityScore(col("text")) >= 0.5)
-        .filter(TextAnalysis.langId(col("text")) === "en")
+        .filter(TextAnalysis.heuristicGate(col("text"), 0.5))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars_total"))
         .orderBy(col("source"))
@@ -876,10 +875,7 @@ object TextQueries {
         1L -> all.filter(pmod(col("doc_id"), lit(8)) === 0 &&
           col("n_chars") >= 400))
       val rows = batches.map { case (bid, b) =>
-        val counts = b
-          .select(TextAnalysis.lenBucket(col("text")).as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+        val counts = TextAnalysis.lenBucketCounts(b)
         val jsd = TextAnalysis.jsdVsRef(counts, ref)
         (bid, counts.values.sum, jsd, if (jsd > 0.15) 1L else 0L)
       }

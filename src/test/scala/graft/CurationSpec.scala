@@ -251,9 +251,7 @@ class CurationSpec extends SparkTestBase {
     import spark.implicits._
     val bench = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "tiny doc")).toDF("doc_id", "text") // doc 2: m<n whole-doc gram
-    val (grams, nG) = graft.operators.TextAnalysis.benchGramSet(bench, 5)
-    val bloom = grams.stat.bloomFilter("g", math.max(nG, 1L), 0.01)
-    val pred = graft.functions.TextHashFunctions.bloom_gram_hit(col("text"), bloom, 5)
+    val pred = graft.operators.TextAnalysis.benchGrams(bench, 5).probe(col("text"), 0.01)
     val probe = Seq(
       (1L, "alpha beta gamma delta epsilon"),      // exact 5-gram overlap → true
       (2L, "TINY, doc!"),                           // normalizes to the m<n gram → true

@@ -67,6 +67,88 @@ class RegistrySpec extends SparkTestBase {
     }
   }
 
+  test("every def in src/main has a non-comment reference besides its declaration (source scan)") {
+    // an unused definition is code every reader still has to check. A
+    // reference counts anywhere in the engine, test or perfbench sources,
+    // string literals included; comments are stripped, so a scaladoc
+    // link alone does not keep a definition alive. `override` defs are
+    // called by their framework, and so are the names below, which
+    // implement abstract members without the keyword (the JVM entry
+    // point, Spark Aggregator's encoders).
+    val frameworkCalled = Set("main", "bufferEncoder", "outputEncoder")
+    val mainDir = new java.io.File("src/main/scala")
+    assume(mainDir.isDirectory, "source dir not visible from test cwd")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory) d.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
+      else if (d.getName.endsWith(".scala")) Seq(d) else Nil
+    // drops // and (nested) /* */ comments; string and char literals are
+    // copied through, so a "//" or quote inside one is not misread
+    def stripComments(t: String): String = {
+      val out = new StringBuilder
+      var i = 0
+      val n = t.length
+      while (i < n) {
+        if (t.startsWith("//", i)) {
+          while (i < n && t(i) != '\n') i += 1
+        } else if (t.startsWith("/*", i)) {
+          var depth = 0
+          while (i < n && !(depth == 1 && t.startsWith("*/", i))) {
+            if (t.startsWith("/*", i)) { depth += 1; i += 2 }
+            else if (t.startsWith("*/", i)) { depth -= 1; i += 2 }
+            else i += 1
+          }
+          i += 2
+        } else if (t.startsWith("\"\"\"", i)) {
+          val end = t.indexOf("\"\"\"", i + 3)
+          val stop = if (end < 0) n else end + 3
+          out ++= t.substring(i, stop)
+          i = stop
+        } else if (t(i) == '"') {
+          out += t(i)
+          i += 1
+          while (i < n && t(i) != '"' && t(i) != '\n') {
+            if (t(i) == '\\' && i + 1 < n) { out += t(i); i += 1 }
+            out += t(i)
+            i += 1
+          }
+        } else if (t(i) == '\'' && i + 2 < n && t(i + 2) == '\'') {
+          out ++= t.substring(i, i + 3)
+          i += 3
+        } else if (t(i) == '\'' && i + 3 < n && t(i + 1) == '\\' && t(i + 3) == '\'') {
+          out ++= t.substring(i, i + 4)
+          i += 4
+        } else {
+          out += t(i)
+          i += 1
+        }
+      }
+      out.toString
+    }
+    def read(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try stripComments(src.mkString) finally src.close()
+    }
+    val mainTexts = scalaFiles(mainDir).map(read)
+    val otherTexts = Seq("src/test/scala", "perfbench/src/main/scala")
+      .flatMap(d => scalaFiles(new java.io.File(d))).map(read)
+    val defRe = """\bdef\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+    val declared = mainTexts.flatMap { t =>
+      defRe.findAllMatchIn(t).filterNot { m =>
+        t.substring(t.lastIndexOf('\n', m.start) + 1, m.start).contains("override")
+      }.map(_.group(1))
+    }.toSet -- frameworkCalled
+    val all = mainTexts ++ otherTexts
+    // every `def name` is itself one occurrence of `name`: a name is used
+    // iff it occurs more often than it is declared
+    val declCount = all.flatMap(t => defRe.findAllMatchIn(t).map(_.group(1)))
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+    val occurrences = all.flatMap(t =>
+      "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(t).filter(declared))
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+    val unused = declared.filter(d => occurrences(d) <= declCount(d)).toSeq.sorted
+    assert(unused.isEmpty, s"definitions with no reference: ${unused.mkString(", ")}")
+  }
+
   test("README surface ledger matches the registry and the test sources") {
     // the README's headline counts drifted twice (r16 VERDICT Wrong #3:
     // claimed 306 oracled / 18 exempt vs actual 305/19, 17 suites / 310

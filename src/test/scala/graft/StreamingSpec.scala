@@ -1408,6 +1408,67 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(indexDir).distinct().count() == 4L)
   }
 
+  test("curationIntake fallbacks (shuffle verify, no index bloom, >64 flagged " +
+      "hashes) leave the default wiring's sink and ledger") {
+    implicit val sc = spark.sqlContext
+    import graft.operators.TextAnalysis
+    val quality = TextAnalysis.QualityLrModel(1.0,
+      Array.tabulate(TextAnalysis.qualityLrDim)(i => if (i == 0) -10.0 else 0.0))
+    val bm25 = TextAnalysis.Bm25Model(1.2, 0.75, 9.0, Map("data" -> 1.5))
+    val bench = Seq((100L, "the secret benchmark answer key for the eval suite tonight"))
+      .toDF("doc_id", "text")
+    val novel = Seq("one", "two", "three", "four")
+      .map(w => s"data document $w with clean english words for the intake test")
+    val ref = TextAnalysis.fitLenHistogram(novel.toDF("text"))
+    // 70 distinct gate-passing docs already in the index
+    val known = (0 until 70).map(i => s"data known doc $i already sits in the corpus index")
+    def doc(id: Long, min: Int, text: String) = EventStreams.SourcedDoc(id, ts(min), "s1", text)
+    // batch 1 flags 3 index hashes (the pushed-literal probe); batch 2
+    // flags the other 67 (above the 64-hash cap: the broadcast semi-join)
+    val batch1 = Seq(
+      doc(1, 0, "$$% ##@ !!++ ^^&& ;;:: ??//"),
+      doc(2, 1, "the filler words carry no relevance to the fixed terms"),
+      doc(3, 2, "data point where the secret benchmark answer key appears"),
+      doc(4, 3, novel(0)), doc(5, 4, novel(0)), doc(6, 5, novel(1))) ++
+      known.take(3).zipWithIndex.map { case (t, i) => doc(10 + i, 6 + i, t) }
+    val batch2 = Seq(
+      doc(201, 120, "data row two where the secret benchmark answer key appears"),
+      doc(202, 121, novel(2)), doc(203, 122, novel(3))) ++
+      known.drop(3).zipWithIndex.map { case (t, i) => doc(300 + i, 130 + i, t) }
+    def run(maxBroadcastGrams: Long, maxBloomHashes: Long)
+        : (Set[String], Seq[(Long, Long, Long, Double, Boolean)]) = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_curation_fb").toString
+      known.toDF("text").select(md5(col("text")).as("content_hash"))
+        .write.parquet(s"$tmp/index")
+      val mem = MemoryStream[EventStreams.SourcedDoc]
+      val q = EventStreams.curationIntake(mem.toDF(), quality, 0.5, bm25, 0.01,
+        bench, ref, 0.6, None, s"$tmp/index", s"$tmp/sink", s"$tmp/ledger",
+        maxBroadcastGrams = maxBroadcastGrams, maxBloomHashes = maxBloomHashes)
+        .start()
+      try {
+        mem.addData(batch1: _*); q.processAllAvailable()
+        mem.addData(batch2: _*); q.processAllAvailable()
+      } finally q.stop()
+      (spark.read.parquet(s"$tmp/sink").select(col("text")).as[String].collect().toSet,
+        spark.read.parquet(s"$tmp/ledger").orderBy(col("n_batch"))
+          .select(col("n_batch"), col("n_clean"), col("n_admitted"),
+            col("jsd_r"), col("alarm"))
+          .as[(Long, Long, Long, Double, Boolean)].collect().toSeq)
+    }
+    val (defaultSink, defaultLedger) = run(5000000L, 10000000L)
+    assert(defaultSink == novel.toSet, s"default wiring admitted $defaultSink")
+    // batch 1: 6 past the plan gates (soup, off-topic, in-stream dup
+    // dropped) → 2 clean; batch 2: 70 → 2 clean; no budget
+    assert(defaultLedger.map(r => (r._1, r._2, r._3)) == Seq((6L, 2L, 2L), (70L, 2L, 2L)),
+      s"default ledger $defaultLedger")
+    for ((name, (sink, ledger)) <- Seq(
+        "maxBroadcastGrams = 0" -> run(0L, 10000000L),
+        "maxBloomHashes = 0" -> run(5000000L, 0L))) {
+      assert(sink == defaultSink, s"$name: sink $sink")
+      assert(ledger == defaultLedger, s"$name: ledger $ledger vs $defaultLedger")
+    }
+  }
+
   test("heavyHittersIntake: hard-bounded sharded state; MG membership and error invariants") {
     implicit val sc = spark.sqlContext
     val K = 4
