@@ -32,208 +32,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Headline set: every operator family, excluding only the ML-training
-    * queries (ALS fit dominates wall-clock and is benchmarked separately
-    * in scalatest with metric bands — a model fit isn't a query).
+  /** Headline set: the queries declared with `headline = true`, in
+    * declaration order. The ML-training queries stay out (ALS fit
+    * dominates wall-clock and is benchmarked separately in scalatest with
+    * metric bands — a model fit isn't a query).
     */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q_scan_project", "q_ratings", "q_pop_top100",
-    "q_join_inner", "q_join_multi", "q_join_anti", "q_exceptall",
-    "q_window_topk", "q_window_running", "q_collect_list",
-    "q_split_hash", "q_eval_hit_ratio", "q_eval_map_user", "q_eval_map_std",
-    "q_token_count", "q_text_quality", "q_lang_id",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
-    "q_cosine_topk", "q_cosine_ann", "q_embed_norms",
-    "q_events_hourly", "q_events_sessions", "q_events_session_window",
-    "q_events_asof", "q_media_features",
-    // round-2 additions: full TPC-H shapes, stats aggs, non-equi range
-    // join, stream-shaped interval join, training-data composition
-    "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q6", "q_stats_agg",
-    "q_range_join", "q_events_interval", "q_corpus_clean", "q_data_mix",
-    "q_pack_tokens", "q_window_range_frame",
-    // round-3 additions: correlated-subquery shapes, recursive CTE,
-    // lateral, variant, dedup closure, TF-IDF, contamination, DQ gate
-    "q_tpch_q4", "q_tpch_q17", "q_tpch_q18", "q_tpch_q22",
-    "q_cc_recursive", "q_lateral_topk", "q_events_variant",
-    "q_dedup_cc", "q_tfidf_top3", "q_contamination", "q_repetition",
-    "q_dq_report", "q_bucket_stats", "q_dedup_passages",
-    "q_minhash_bucket_health",
-    // round-4 additions: remaining expressible TPC-H shapes, precision@k,
-    // trigram-LM quality scoring, composed IVF-PQ ANN
-    "q_tpch_q8", "q_tpch_q12", "q_tpch_q15", "q_tpch_q19", "q_tpch_q21",
-    "q_eval_precision_k", "q_lm_score", "q_cosine_ivfpq",
-    // round-5 additions: IVF cell-balance health, iterative BPE vocab
-    // training + trained-merge tokenization, end-to-end semantic dedup
-    "q_ivf_cell_health", "q_bpe_vocab", "q_corpus_clean_semantic",
-    "q_bpe_tokenize", "q_dedup_incremental", "q_chunk_docs",
-    // round-5 curation analytics: DSIR importance weights, robust
-    // length outliers, cross-source overlap, packing planner, cohort
-    // retention, class centroids
-    "q_dsir_weights", "q_mad_outliers", "q_source_overlap",
-    "q_seq_len_plan", "q_events_retention", "q_embed_centroids",
-    "q_quality_classifier",
-    // round-5 compositions: DSIR selection, decontamination, cluster
-    // observability (sizes + cohesion), intake anomaly alarm
-    "q_dsir_select", "q_decontaminate", "q_dedup_cluster_sizes",
-    "q_embed_dispersion", "q_events_anomaly", "q_corpus_pipeline",
-    // round-6 additions: at-rest IVF-PQ serving (partition-pruned scan,
-    // encode paid at index-build time), the real image-decode path, the
-    // deflate redundancy gate, and per-source lexical diversity
-    "q_cosine_ivfpq_disk", "q_media_decode", "q_audio_decode",
-    "q_compress_ratio", "q_lexical_diversity", "q_dedup_keep_best",
-    // round-7 additions: real MJPEG-in-AVI video decode, stratified
-    // exact-N holdout, at-rest/in-memory ANN serving agreement,
-    // temperature-scaled mixing weights, semantic-balanced sampling
-    "q_video_decode", "q_sample_stratified", "q_cosine_ivfpq_paths_agree",
-    "q_mix_temperature", "q_sample_balanced_cells", "q_dedup_cc_incremental",
-    "q_mix_select",
-    // round-8 additions: snapshot diff, scale-safe exact-ntile
-    // curriculum, cross-source dup report, the resolved online label
-    // map, and arrival-order budgeted admission
-    "q_snapshot_diff", "q_curriculum", "q_cross_source_dups",
-    "q_dedup_labels_resolved", "q_mix_admit",
-    // round-9 additions: bloom-pre-filtered decontamination (the
-    // map-side-pruned 100 TB variant of q_decontaminate) and BM25
-    // query-relevance ranking
-    "q_decontaminate_bloom", "q_bm25_topk", "q_bm25_serve",
-    "q_corpus_pipeline_v2", "q_bm25_multi", "q_rank_fusion",
-    "q_events_hopping", "q_mix_apportion",
-    // round-10 additions: the full intake funnel with budget admission
-    // (batch twin of the composed curationIntake loop) and the oracled
-    // drift-alarm batch twin
-    "q_corpus_pipeline_v3", "q_drift_alarm", "q_bm25_table",
-    // round-10 late additions: iterative PageRank, Z-order layout
-    // clustering, SCD2 interval build, and the salted/bucketed join twins
-    "q_pagerank", "q_zorder_cluster", "q_scd2_intervals",
-    "q_join_salted", "q_join_bucketed", "q_item_neighbors", "q_item_recs",
-    "q_item_rules", "q_pop_decayed", "q_ppr_suppliers", "q_fuzzy_parts",
-    // round-11 additions: the batch Misra-Gries heavy-hitters twin, the
-    // 3-stage ordered conversion funnel, the single-scan ANALYZE stats
-    // pass, last-touch attribution over the as-of operator, and the
-    // max_by CDC merge compaction
-    "q_heavy_hitters", "q_funnel_steps", "q_table_stats",
-    "q_attribution", "q_cdc_merge", "q_col_histogram",
-    "q_rfm_segments", "q_event_transitions", "q_events_ewma",
-    "q_skew_report",
-    // round-11 late additions: degree-oriented triangle census, the
-    // as-of point-in-time SCD2 dimension lookup, Jaro-Winkler blocked
-    // fuzzy matching (codegen'd native expression), and the equi-depth
-    // ANALYZE histogram (windowless exact NTILE)
-    "q_triangles", "q_scd2_lookup", "q_fuzzy_jw", "q_histogram_eqdepth",
-    // nearest-direction as-of (two sweeps + least-distance pick)
-    "q_events_asof_nearest",
-    // distributed skyline, sorted-neighborhood ER, bounded-pool negative
-    // sampling, and the temporal split with cold-start leakage report
-    "q_skyline", "q_fuzzy_snm", "q_negative_sample", "q_split_temporal",
-    // HITS hubs/authorities, winsorized robust scaling, the composed
-    // block→score→match→cluster entity-resolution flow, and the k-hop
-    // BFS reach curve
-    "q_hits", "q_winsorize", "q_er_clusters", "q_khop",
-    // weighted shortest paths, signed-delta MV refresh, and the oracled
-    // fixed-round Lloyd clustering
-    "q_sssp", "q_mv_refresh", "q_kmeans_steps",
-    // rolling distinct users (bucket-explode) + peak-concurrency sweep
-    "q_rolling_dau", "q_concurrency",
-    // round-12 additions: the quota-packing OPTIMIZE report, the
-    // two-epoch constraint-drift diff, and the value-oracled MinHash
-    // band-bucket relation
-    "q_compaction_plan", "q_dq_drift", "q_minhash_sigs",
-    // round-12 additions: the k-core peel curve, the lossless PPJoin
-    // set-similarity join + its pruning funnel, the Gopher repetition
-    // gate, the exact-moments correlation matrix, and the deterministic
-    // random-walk sampler
-    "q_kcore", "q_ssjoin_exact", "q_ssjoin_stats", "q_gopher_gate",
-    "q_corr_matrix", "q_random_walks",
-    // round-12 late additions: KNN-Shapley data valuation, label
-    // propagation communities, skip-gram/PMI statistics, and the
-    // incremental PPJoin probe
-    "q_knn_shapley", "q_lpa_communities", "q_walk_skipgrams",
-    "q_ssjoin_incremental",
-    // the deterministic Poisson-bootstrap CI, contamination severity,
-    // and the robust-trend pair (MK S + Theil-Sen vs OLS)
-    "q_bootstrap_ci", "q_contamination_span", "q_trend_robust",
-    // round-13: link prediction (wedge join), exact-moments OLS,
-    // chi2/KS distribution tests, governance audits, join-delta IVM,
-    // PMI collocations, quantile normalization (two global ranks)
-    "q_link_predict", "q_link_recs", "q_ols_fit", "q_ols_multi",
-    "q_chi2_independence", "q_ks_two_sample", "q_k_anonymity",
-    "q_l_diversity", "q_anon_ladder", "q_mv_join_refresh",
-    "q_pmi_bigrams", "q_quantile_norm",
-    // round-13 batch 2: ANOVA/entropy/Benford/ACF/Holt stats tier +
-    // truncated closeness centrality (3-hop multi-seed BFS)
-    "q_anova_f", "q_entropy_report", "q_benford", "q_acf",
-    "q_holt_linear", "q_closeness",
-    // round-13 batch 3: exact prefix-sum ABC classes + per-day TWAP
-    "q_abc_classes", "q_twap",
-    // round-13 batch 4: graph stats (degree histogram, per-node LCC),
-    // Gini concentration, exact weighted median
-    "q_degree_dist", "q_lcc_topk", "q_gini_revenue", "q_weighted_median",
-    // round-13 batch 5: seasonality profile, WoW growth, systematic
-    // sample, per-user activity streaks
-    "q_seasonality", "q_growth_rates", "q_sample_systematic", "q_streaks",
-    // round-14: cohort retention matrix, 30-min sessionization census,
-    // click-path trigrams, exact-integer CUSUM change-point, the
-    // token-budget curriculum sampler, multi-touch linear attribution
-    "q_cohort_retention", "q_sessionize", "q_session_paths",
-    "q_cusum_shift", "q_token_curriculum", "q_attribution_multi",
-    // cross-document shared-substring spans (rare-gram diagonal islands)
-    "q_cross_doc_spans",
-    // weekly growth accounting, chi2 cell residuals, inter-arrival gaps
-    "q_growth_accounting", "q_chi2_residuals", "q_interarrival",
-    // PIVOT long->wide + calendar spine gap-fill
-    "q_pivot", "q_gap_fill",
-    // round-14 batch 2: two-proportion A/B z-test, Kaplan–Meier reorder
-    // survival, exact 7-day rolling median
-    "q_ab_test", "q_kaplan_meier", "q_rolling_median",
-    // round-14 batch 3: tie-corrected Mann–Whitney, Levenshtein fuzzy
-    // join, deterministic per-group mode
-    "q_mann_whitney", "q_fuzzy_edit", "q_group_mode",
-    // round-14 batch 4: directional containment join (sub-document
-    // dedup), Zipf rank-frequency fit
-    "q_containment_join", "q_zipf_fit",
-    // round-14 batch 5: Fano burstiness, WoW audience overlap,
-    // power-iteration PCA on the exact correlation matrix
-    "q_fano_burstiness", "q_audience_overlap", "q_pca_power",
-    // round-14 batch 6: Lorenz knee, degree assortativity, order-to-
-    // ship latency order statistics
-    "q_lorenz_knee", "q_degree_assortativity", "q_ship_latency",
-    // round-14 batch 7: Cramér's V, grouped exact-ratio regression,
-    // Herfindahl concentration
-    "q_cramers_v", "q_ols_grouped", "q_hhi",
-    // round-14 batch 8: Markov stationary distribution, additive
-    // Holt–Winters
-    "q_markov_steady", "q_holt_winters",
-    // round-14 batch 9: exact MRR, blocking-quality audit, churn hazard
-    "q_eval_mrr", "q_blocking_quality", "q_churn_hazard",
-    // round-14 batch 10: LPA modularity, exact seasonal decomposition
-    "q_modularity", "q_seasonal_decompose",
-    // round-14 batch 11: Markov removal-effect attribution, JS drift
-    "q_markov_attribution", "q_js_divergence",
-    // round-14 batch 12: fixed-k reservoir, share-of-parent rollup
-    "q_sample_reservoir", "q_share_of_parent",
-    // round-14 batch 13: WoW rank movers, local-peak detection
-    "q_rank_movers", "q_peaks",
-    // round-14 batch 14: LSH recall audit, rolling P10/P90 band,
-    // 3-way Venn census
-    "q_lsh_recall", "q_rolling_band", "q_venn3",
-    // round-15: image perceptual-hash (real PNG decode → integer aHash),
-    // the banded hamming near-dup join over the multimodal column, and
-    // the corpus-vs-corpus span-overlap rollup
-    "q_image_phash", "q_image_phash_dups", "q_source_span_overlap",
-    "q_image_phash_stability",
-    // round-16: audio perceptual-hash dedup (real WAV decode → integer
-    // frame-energy signature), the incremental image band-index probe,
-    // and the two de-exempted real-decode paths already present above
-    "q_audio_phash", "q_audio_phash_dups", "q_image_dedup_incremental",
-    "q_phash_bucket_health",
-    // round-17: the audio twin of the incremental image band-index
-    // probe, the video perceptual-hash family completing the
-    // image/audio/video near-dup triad, and the de-exempted
-    // media-features line already above
-    "q_audio_dedup_incremental", "q_video_phash", "q_video_phash_dups",
-    // measured IVF-PQ serving recall@50 (fit memoized by the fit
-    // section — this line times brute-truth + serve + one ratio row)
-    "q_ann_recall")
+  val headline: Seq[String] =
+    SparkEntry.declarations.filter(_.headline).map(_.name)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,65 +1,40 @@
 package graft
+import graft.queries._
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_pop_top100")(spark, "/root/testdata/sf0.001")
+  /** Every query, as its module declares it, in module order. */
+  def declarations: Seq[Query] =
+    CoreQueries.declarations ++ RelationalQueries.declarations ++
+      PipelineQueries.declarations ++ TextQueries.declarations ++
+      EventQueries.declarations ++ SimilarityQueries.declarations ++
+      AnalyticsQueries.declarations
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-      graft.queries.RelationalQueries.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.EventQueries.queries ++
-      graft.queries.SimilarityQueries.queries ++
-      graft.queries.AnalyticsQueries.queries
+    declarations.map(q => q.name -> q.run).toMap
+
   /** Oracles whose SQL embeds a FITTED model's parameters as literals —
     * they need a live SparkSession + scale dir, so Verify generates them
     * at dump time and merges them into oracle_sql.json next to
-    * [[oracleSql]]. Names here must be disjoint from the static map
-    * (RegistrySpec asserts it).
+    * [[oracleSql]].
     */
   def dynamicOracleSql(spark: SparkSession, sfDir: String): Map[String, String] =
-    graft.queries.TextQueries.dynamicOracleSql(spark, sfDir)
+    declarations.collect { case Query(n, _, Fitted(gen), _) => n -> gen(spark, sfDir) }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracleSql ++
-      graft.queries.RelationalQueries.oracleSql ++
-      graft.queries.PipelineQueries.oracleSql ++
-      graft.queries.TextQueries.oracleSql ++
-      graft.queries.EventQueries.oracleSql ++
-      graft.queries.SimilarityQueries.oracleSql ++
-      graft.queries.AnalyticsQueries.oracleSql
+    declarations.collect { case Query(n, _, Sql(text), _) => n -> text }.toMap
 
-  /** Every query WITHOUT an [[oracleSql]] entry, with the reason the
-    * omission is a design decision (SURVEY §7.4) rather than a gap.
-    * RegistrySpec asserts this list matches the no-oracle set EXACTLY, so
-    * a new query can't silently ship unverified: it either gets an oracle
-    * or an explicit reason here. Each reason also names the non-oracle
-    * coverage (scalatest band / invariant / determinism check).
+  /** Every query with neither a static nor a fitted oracle, with the
+    * reason the omission is a design decision (SURVEY §7.4) rather than
+    * a gap. Each reason also names the non-oracle coverage (scalatest
+    * band / invariant / determinism check).
     */
-  val oracleExempt: Map[String, String] = Map(
-    "q_als_rmse" -> "ALS factors not SQL-expressible; RMSE band in RecommendSpec/IngestSpec",
-    "q_als_ref_rmse" -> "ALS at flagship config; config columns exact + RMSE band in IngestSpec",
-    "q_als_map" -> "ALS lifecycle; MAP math itself oracled via q_eval_map_std, band in IngestSpec",
-    "q_als_recs" -> "ALS factors not SQL-expressible; block-structure recall in RecommendSpec",
-    "q_approx_distinct" -> "HLL estimate is engine-specific; rsd tolerance vs exact in IngestSpec",
-    "q_hll_sketch" -> "HLL sketch bytes are engine-specific; merge/estimate invariants in scalatest",
-    "q_cosine_ivf_km" -> "KMeans cells are fit artifacts; recall vs hash-IVF + brute force",
-    "q_cosine_pq" -> "KMeans codebooks are fit artifacts; recall floor in DedupSimilaritySpec",
-    "q_cosine_ivfpq" -> "KMeans cells+codebooks; recall floor + cell-pruned plan assertion",
-    "q_cosine_ivfpq_disk" -> "at-rest IVF layout; equals in-memory apply + partition-pruned plan assertion in DedupSimilaritySpec",
-    "q_ann_recall" -> "IVF-PQ cells/codebooks are KMeans fit artifacts; the row IS the measured recall@50 vs the in-query brute-force truth (driver-committed each round); production 0.8 floor asserted in DedupSimilaritySpec",
-    "q_ivf_cell_health" -> "cells are KMeans fit artifacts; planted-skew + shape tests in DedupSimilaritySpec",
-    "q_ivf_layout_health" -> "FS-metadata file counts of the at-rest index, not expressible over the parquet tables; fresh-build shape + planted-skew trigger tests in DedupSimilaritySpec",
-    "q_sample_balanced_cells" -> "KMeans cell assignment not SQL-expressible; per-cell-count + determinism spec in DedupSimilaritySpec",
-    "q_video_decode" -> "PERMANENTLY exempt: MJPEG frames are LOSSY JPEG — decoded pixels are a codec implementation detail, not replayable arithmetic (unlike the lossless PNG/WAV paths, de-exempted r16); generator-parity + determinism tests in RecommendSpec",
-    "q_video_phash" -> "PERMANENTLY exempt (the q_video_decode class): the temporal-average aHash reads LOSSY JPEG pixels; determinism + discrimination census in RecommendSpec",
-    "q_video_phash_dups" -> "PERMANENTLY exempt (lossy JPEG pixels); planted-witness form — re-keyed copies ride the query so the row set is never vacuously empty; exact pair-set + noise-rejection test in RecommendSpec",
-    "q_split_v1_report" -> "seeded sampleBy never value-matches cross-engine; partition invariant",
-    "q_split_v2_report" -> "seeded per-user sample; disjointness invariants (1 row, zeros)",
-    "q_compress_ratio" -> "PERMANENTLY exempt: zlib deflate output bytes are a compressor implementation detail, not replayable arithmetic; monotonicity (repetitive < prose < mash) + determinism tests in TextSpec")
+  lazy val oracleExempt: Map[String, String] =
+    declarations.collect { case Query(n, _, Exempt(reason), _) => n -> reason }.toMap
 }

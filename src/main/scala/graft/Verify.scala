@@ -40,7 +40,7 @@ object Verify {
       case c => c.toString
     } + "\""
     // static oracles + the model-literal oracles generated against THIS
-    // session/scale (deterministic fits — TextQueries.dynamicOracleSql)
+    // session/scale (deterministic fits — the `Fitted` declarations)
     val dynamic =
       try SparkEntry.dynamicOracleSql(spark, sfDir)
       catch { case e: Throwable =>

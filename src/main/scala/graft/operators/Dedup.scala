@@ -542,13 +542,9 @@ object Dedup {
     // INDEPENDENT eager checkpoints — run each pair overlapped from two
     // driver threads (guide §2.6, the q_lsh_recall pattern) instead of
     // serially; neither pipeline's own result depends on the other
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val cSetsF = Future(shingleSets(corpus, nShingle, textCol, idCol))
-    val bSetsF = Future(shingleSets(batch, nShingle, textCol, idCol))
-    val cSets = Await.result(cSetsF, Duration.Inf)
-    val bSets = Await.result(bSetsF, Duration.Inf)
+    val Seq(cSets, bSets) = Guarded.pinAll(corpus.sparkSession)(Seq(
+      () => shingleSets(corpus, nShingle, textCol, idCol),
+      () => shingleSets(batch, nShingle, textCol, idCol)))
     val dfreq = cSets.select(explode(col("shs")).as("g"))
       .unionAll(bSets.select(explode(col("shs")).as("g")))
       .groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
@@ -560,12 +556,13 @@ object Dedup {
     // than the parallelism bought (q_ssjoin_incremental 1.5→2.3 s with
     // the pins, the one benchdiff flag of the round); the prefixOf rank
     // windows keep their pins — that is where the probe's real CPU is
-    val bPreF = Future(prefixOf(bSets, dfreq, tn, td))
-    val cPreF = Future(prefixOf(cSets, dfreq, tn, td))
-    val cand = Await.result(bPreF, Duration.Inf)
+    val Seq(bPre, cPre) = Guarded.pinAll(corpus.sparkSession)(Seq(
+      () => prefixOf(bSets, dfreq, tn, td),
+      () => prefixOf(cSets, dfreq, tn, td)))
+    val cand = bPre
       .select(col("g"), col("id").as("new_id"), col("sz").as("sza"),
         col("pos").as("pa"))
-      .join(Await.result(cPreF, Duration.Inf)
+      .join(cPre
         .select(col("g"), col("id").as("corpus_id"), col("sz").as("szb"),
           col("pos").as("pb")),
         Seq("g"))

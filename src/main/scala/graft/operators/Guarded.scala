@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The count-guarded driver fast-path dispatch shared by every iterative
   * operator ([[Graph]] power iteration, [[Dedup.connectedComponents]]
-  * pointer jumping, [[TextAnalysis.bpeMerges]] merge rounds).
+  * pointer jumping, [[TextAnalysis.bpeMerges]] merge rounds), and
+  * [[pinAll]], the one way to overlap independent eager pins.
   *
   * The pattern exists because below a few hundred thousand input rows an
   * iterative distributed loop's wall time is pure JOB-SCHEDULING FLOOR —
@@ -91,6 +93,45 @@ object Guarded {
       out
     }
   }
+
+  /** Run independent eager pins concurrently and return their results
+    * in `pins` order. Overlapping pins only overlaps their job-submission
+    * floors; each pin's own result is untouched by the overlap.
+    *
+    * Each pin runs on a thread created for this call, so it inherits the
+    * caller's Spark local properties (job group, description, tags) —
+    * pooled threads would carry whatever they held when the pool made
+    * them. All pins' jobs carry one tag per call: when a pin throws, the
+    * siblings' jobs with that tag are cancelled (again every 50 ms, in
+    * case a sibling submits a later job), every pin is waited for, and
+    * the first failure is rethrown — no sibling job outlives the call.
+    */
+  def pinAll[T](spark: SparkSession)(pins: Seq[() => T]): Seq[T] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-pinall-${pinAllCalls.incrementAndGet()}"
+    val results = new Array[Any](pins.size)
+    val failure = new AtomicReference[Throwable]()
+    val threads = pins.zipWithIndex.map { case (pin, i) =>
+      val th = new Thread(() => {
+        sc.addJobTag(tag)
+        try results(i) = pin()
+        catch { case e: Throwable => failure.compareAndSet(null, e) }
+      }, s"$tag-$i")
+      th.setDaemon(true)
+      th
+    }
+    threads.foreach(_.start())
+    threads.foreach { th =>
+      while (th.isAlive) {
+        if (failure.get != null) sc.cancelJobsWithTag(tag)
+        th.join(50)
+      }
+    }
+    if (failure.get != null) throw failure.get
+    results.toSeq.map(_.asInstanceOf[T])
+  }
+
+  private val pinAllCalls = new AtomicLong
 
   /** Internal→external value for output-row assembly (UTF8String →
     * String; everything else is already the external representation for

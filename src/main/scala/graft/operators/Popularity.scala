@@ -47,21 +47,22 @@ object Popularity {
     *                 reference `README.md:57`)
     */
   def topMovies(ratings: DataFrame, quantile: Double = 0.9, k: Int = 100): DataFrame =
-    scoreAll(aggRatings(ratings), expr(s"percentile(user_count, $quantile)"))
-      .select(col("movieId"), col("avg_rating"), col("user_count"), col("score"))
-      // rank on the ROUNDED score with a movieId tiebreak (SURVEY §7.4):
-      // ranking on the raw double lets sub-1e-6 cross-engine float drift
-      // flip which movie holds the rank-k cutoff
-      .orderBy(round(col("score"), 6).desc, col("movieId").asc)
-      .limit(k)
+    topScored(scoreAll(aggRatings(ratings), expr(s"percentile(user_count, $quantile)")), k)
 
   /** Sketch-based variant for the true 100 TB path: `percentile_approx`
     * (KLL/GK, mergeable, single pass) — same shape, approximate cutoff.
     * Kept out of the oracle set (approx ≠ DuckDB exact).
     */
   def topMoviesApprox(ratings: DataFrame, quantile: Double = 0.9, k: Int = 100): DataFrame =
-    scoreAll(aggRatings(ratings),
-      percentile_approx(col("user_count"), lit(quantile), lit(10000)))
+    topScored(scoreAll(aggRatings(ratings),
+      percentile_approx(col("user_count"), lit(quantile), lit(10000))), k)
+
+  /** The k best scored movies, ranked on the ROUNDED score with a movieId
+    * tiebreak (SURVEY §7.4): ranking on the raw double lets sub-1e-6
+    * cross-engine float drift flip which movie holds the rank-k cutoff.
+    */
+  private def topScored(scored: DataFrame, k: Int): DataFrame =
+    scored
       .select(col("movieId"), col("avg_rating"), col("user_count"), col("score"))
       .orderBy(round(col("score"), 6).desc, col("movieId").asc)
       .limit(k)

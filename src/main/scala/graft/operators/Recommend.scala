@@ -55,13 +55,7 @@ object Recommend {
     * (`als.py:96,120`), downstream joins get plain columns.
     */
   def recommendTopK(model: ALSModel, k: Int): DataFrame =
-    model.recommendForAllUsers(k)
-      .select(col("userId"),
-        posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("userId"),
-        col("rec.movieId").as("movieId"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("rec.rating").as("score"))
+    flatRecs(model.recommendForAllUsers(k), "userId", "movieId")
 
   /** M4 (item side): per-item top-k users, flat rows — the
     * `recommendForAllItems` twin of [[recommendTopK]] (audience targeting /
@@ -69,24 +63,24 @@ object Recommend {
     * same MLlib surface).
     */
   def recommendUsersTopK(model: ALSModel, k: Int): DataFrame =
-    model.recommendForAllItems(k)
-      .select(col("movieId"),
-        posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("movieId"),
-        col("rec.userId").as("userId"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("rec.rating").as("score"))
+    flatRecs(model.recommendForAllItems(k), "movieId", "userId")
 
   /** M4 (subset): recommendations for a user subset only — at scale the
     * subset is the probe side; MLlib joins it against the factor matrix
     * before the blocked top-k, so cost tracks |subset|, not |all users|.
     */
   def recommendForUsers(model: ALSModel, users: DataFrame, k: Int): DataFrame =
-    model.recommendForUserSubset(users, k)
-      .select(col("userId"),
+    flatRecs(model.recommendForUserSubset(users, k), "userId", "movieId")
+
+  /** MLlib's per-key `recommendations` array exploded to flat
+    * (key, item, rank, score) rows, rank 1-based.
+    */
+  private def flatRecs(nested: DataFrame, key: String, item: String): DataFrame =
+    nested
+      .select(col(key),
         posexplode(col("recommendations")).as(Seq("pos", "rec")))
-      .select(col("userId"),
-        col("rec.movieId").as("movieId"),
+      .select(col(key),
+        col(s"rec.$item").as(item),
         (col("pos") + 1).cast("long").as("rank"),
         col("rec.rating").as("score"))
 

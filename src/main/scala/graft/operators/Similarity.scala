@@ -278,7 +278,7 @@ object Similarity {
     val dsub = dim / m
     val pinned = fitInput(corpus, vecCol).persist()
     try {
-      parSubspaceFits(m, s =>
+      parSubspaceFits(pinned, m, s =>
         fitKmeans(pinned.select(slice(col("__v"), s * dsub + 1, dsub).as("__v")),
           nCentroids, seed + s))
     } finally pinned.unpersist()
@@ -291,14 +291,9 @@ object Similarity {
     * (9 sequential MLlib fits cost ~8 s of mostly scheduling at the
     * bounded sample size; overlapped they share it).
     */
-  private def parSubspaceFits(m: Int,
-      fit: Int => Array[Array[Float]]): Array[Array[Array[Float]]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence((0 until m).toList.map(s => Future(fit(s)))),
-      scala.concurrent.duration.Duration.Inf).toArray
-  }
+  private def parSubspaceFits(pinned: DataFrame, m: Int,
+      fit: Int => Array[Array[Float]]): Array[Array[Array[Float]]] =
+    Guarded.pinAll(pinned.sparkSession)((0 until m).map(s => () => fit(s))).toArray
 
   // ---- PQ building blocks (shared by pqTopK and ivfPqTopK) ----
 
@@ -441,7 +436,7 @@ object Similarity {
       // residuals of the pinned sample: map-only projection, order
       // preserved — the subspace fits stay deterministic
       val resid = pinned.select(residual(cents, col("__v")).as("__v"))
-      val books = parSubspaceFits(m, s =>
+      val books = parSubspaceFits(pinned, m, s =>
         fitKmeans(resid.select(slice(col("__v"), s * dsub + 1, dsub).as("__v")),
           nCentroids, seed + 1 + s))
       IvfPqModel(cents, books)

@@ -184,11 +184,11 @@ object AnalyticsQueries {
   private val duckDocToks =
     """list_filter(string_split_regex(lower(regexp_replace(text, '[^\p{L}\p{N}\s]', ' ', 'g')), '\s+'), x -> len(x) > 0)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val declarations: Seq[Query] = Seq(
     // FULL OUTER join of two pre-aggregated relations (per-nation customer
     // vs supplier counts): both sides reduced before the join, so the
     // outer join itself is tiny regardless of fact scale.
-    "q_join_outer" -> ((s, d) => {
+    Query("q_join_outer", (s, d) => {
       val c = t(s, d, "customer").groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_cust"))
       val sp = t(s, d, "supplier").groupBy(col("s_nationkey"))
@@ -199,11 +199,17 @@ object AnalyticsQueries {
           coalesce(col("n_cust"), lit(0L)).as("n_cust"),
           coalesce(col("n_supp"), lit(0L)).as("n_supp"))
         .orderBy(col("nationkey"))
-    }),
+    }, Sql(
+      """WITH c AS (SELECT c_nationkey, COUNT(*) AS n_cust FROM customer GROUP BY 1),
+        |s AS (SELECT s_nationkey, COUNT(*) AS n_supp FROM supplier GROUP BY 1)
+        |SELECT CAST(COALESCE(c_nationkey, s_nationkey) AS BIGINT) AS nationkey,
+        |  COALESCE(n_cust, 0) AS n_cust, COALESCE(n_supp, 0) AS n_supp
+        |FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey
+        |ORDER BY nationkey""".stripMargin), headline = false),
 
     // LEFT OUTER fact-side: every order keeps a row even with no matching
     // (filtered) lineitems — revenue coalesced to 0.
-    "q_join_left" -> ((s, d) => {
+    Query("q_join_left", (s, d) => {
       val li = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
         .groupBy(col("l_orderkey"))
         .agg(sum(cents(col("l_extendedprice"))).as("ret_rev_c"))
@@ -212,12 +218,19 @@ object AnalyticsQueries {
         .select(col("o_orderkey"), col("o_custkey"),
           coalesce(col("ret_rev_c"), lit(0L)).as("ret_rev_c"))
         .orderBy(col("o_orderkey"))
-    }),
+    }, Sql(
+      """WITH li AS (
+        |  SELECT l_orderkey,
+        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS ret_rev_c
+        |  FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1)
+        |SELECT o_orderkey, o_custkey, COALESCE(ret_rev_c, 0) AS ret_rev_c
+        |FROM orders LEFT JOIN li ON o_orderkey = l_orderkey
+        |ORDER BY o_orderkey""".stripMargin), headline = false),
 
     // Analytic window battery per customer: lead, first/last value with an
     // explicit full frame, ntile, percent_rank, cume_dist. Partitioned on
     // the high-cardinality key — no global window.
-    "q_window_analytics" -> ((s, d) => {
+    Query("q_window_analytics", (s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -241,12 +254,28 @@ object AnalyticsQueries {
           col("first_price_c"), col("last_price_c"), col("quartile"),
           col("pr"), col("cd"))
         .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
+    }, Sql(
+      s"""SELECT o_custkey, o_orderkey,
+        |  LEAD(o_orderkey, 1) OVER w AS next_order,
+        |  FIRST_VALUE(price_c) OVER wf AS first_price_c,
+        |  LAST_VALUE(price_c) OVER wf AS last_price_c,
+        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
+        |  CASE WHEN COUNT(*) OVER wp = 1 THEN 0.0
+        |       ELSE ${ratio6Sql("RANK() OVER w - 1", "COUNT(*) OVER wp - 1")}
+        |  END AS pr,
+        |  ${ratio6Sql("COUNT(*) OVER w", "COUNT(*) OVER wp")} AS cd
+        |FROM (SELECT o_custkey, o_orderkey, o_orderdate,
+        |        CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c FROM orders)
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+        |  wp AS (PARTITION BY o_custkey),
+        |  wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin), headline = false),
 
     // Statistical aggregate suite per return flag. Spark's skewness /
     // kurtosis are POPULATION moments (g1, excess g2); the oracle converts
     // DuckDB's sample skewness back to g1 and uses kurtosis_pop directly.
-    "q_stats_agg" -> ((s, d) => {
+    Query("q_stats_agg", (s, d) => {
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -261,11 +290,23 @@ object AnalyticsQueries {
           round(skewness(col("l_quantity")), 6).as("skew_qty"),
           round(kurtosis(col("l_quantity")), 6).as("kurt_qty"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  ROUND(stddev_samp(l_quantity), 6) AS sd_qty,
+        |  ROUND(stddev_pop(l_quantity), 6) AS sdp_qty,
+        |  ROUND(var_samp(l_quantity), 6) AS var_qty,
+        |  ROUND(var_pop(l_quantity), 6) AS varp_qty,
+        |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
+        |  ROUND(covar_samp(l_quantity, l_discount), 6) AS cov_qd,
+        |  ROUND(covar_pop(l_quantity, l_discount), 6) AS covp_qd,
+        |  ROUND(skewness(l_quantity) * (COUNT(*)-2)
+        |        / sqrt(COUNT(*)*(COUNT(*)-1.0)), 6) AS skew_qty,
+        |  ROUND(kurtosis_pop(l_quantity), 6) AS kurt_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // Exact percentiles (interpolated) + median per return flag — the
     // exact path next to percentile_approx (A3's sketch form, q_pop_stats).
-    "q_percentiles" -> ((s, d) => {
+    Query("q_percentiles", (s, d) => {
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -274,13 +315,20 @@ object AnalyticsQueries {
           round(expr("percentile(l_quantity, 0.75)"), 6).as("p75"),
           round(median(col("l_quantity")), 6).as("med"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag,
+        |  ROUND(CAST(quantile_cont(l_quantity, 0.25) AS DOUBLE), 6) AS p25,
+        |  ROUND(CAST(quantile_cont(l_quantity, 0.5) AS DOUBLE), 6) AS p50,
+        |  ROUND(CAST(quantile_cont(l_quantity, 0.75) AS DOUBLE), 6) AS p75,
+        |  ROUND(CAST(median(l_quantity) AS DOUBLE), 6) AS med
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Positional aggregates: deterministic argmax/argmin via max/min over
     // a totally-ordered struct (price, orderkey, linenumber — no ties
     // possible), plus max_by/min_by on the equivalent packed key, plus a
     // deterministic mode.
-    "q_minmax_by" -> ((s, d) => {
+    Query("q_minmax_by", (s, d) => {
       val priced = t(s, d, "lineitem").select(
         col("l_linestatus"),
         cents(col("l_extendedprice")).as("price_c"),
@@ -302,12 +350,37 @@ object AnalyticsQueries {
           col("mn.price_c").as("min_price_c"),
           col("argmax_okey"), col("argmin_okey"), col("mode_rf"))
         .orderBy(col("l_linestatus"))
-    }),
+    }, Sql(
+      """WITH priced AS (
+        |  SELECT l_linestatus,
+        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c,
+        |    l_orderkey, CAST(l_linenumber AS BIGINT) AS lineno, l_returnflag
+        |  FROM lineitem),
+        |rfc AS (
+        |  SELECT l_linestatus, l_returnflag, COUNT(*) AS c
+        |  FROM priced GROUP BY 1, 2),
+        |modes AS (
+        |  SELECT l_linestatus, l_returnflag AS mode_rf
+        |  FROM rfc
+        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY l_linestatus
+        |    ORDER BY c DESC, l_returnflag) = 1),
+        |g AS (
+        |  SELECT l_linestatus,
+        |    max({'price_c': price_c, 'l_orderkey': l_orderkey, 'lineno': lineno}) AS mx,
+        |    min({'price_c': price_c, 'l_orderkey': l_orderkey, 'lineno': lineno}) AS mn,
+        |    arg_max(l_orderkey, price_c*100000000 + l_orderkey*10 + lineno) AS argmax_okey,
+        |    arg_min(l_orderkey, price_c*100000000 + l_orderkey*10 + lineno) AS argmin_okey
+        |  FROM priced GROUP BY l_linestatus)
+        |SELECT g.l_linestatus,
+        |  mx.price_c AS max_price_c, mx.l_orderkey AS max_okey, mx.lineno AS max_lineno,
+        |  mn.price_c AS min_price_c, argmax_okey, argmin_okey, mode_rf
+        |FROM g JOIN modes ON g.l_linestatus = modes.l_linestatus
+        |ORDER BY g.l_linestatus""".stripMargin), headline = false),
 
     // String scalar-function suite over a pushed-down part slice (predicate
     // reaches the parquet scan; the suite itself is pure codegen'd
     // projection).
-    "q_string_funcs" -> ((s, d) => {
+    Query("q_string_funcs", (s, d) => {
       t(s, d, "part").filter(col("p_partkey") < 100)
         .select(
           col("p_partkey"),
@@ -325,12 +398,27 @@ object AnalyticsQueries {
           repeat(col("p_brand"), 2).as("rep"),
           concat_ws("|", col("p_brand"), col("p_type")).as("cw"))
         .orderBy(col("p_partkey"))
-    }),
+    }, Sql(
+      """SELECT p_partkey,
+        |  upper(p_name) AS u,
+        |  CAST(length(p_name) AS BIGINT) AS len,
+        |  substring(p_name, 1, 5) AS sub,
+        |  lpad(p_brand, 12, '*') AS lp,
+        |  rpad(p_type, 10, '.') AS rp,
+        |  reverse(p_type) AS rev,
+        |  translate(p_name, 'aeiou', 'AEIOU') AS tr,
+        |  CAST(levenshtein(p_brand, 'Brand#11') AS BIGINT) AS lev,
+        |  regexp_extract(p_name, '^(\w+)', 1) AS first_word,
+        |  string_split(p_name, ' ')[-1] AS last_word,
+        |  CAST(strpos(p_name, 'e') AS BIGINT) AS pos_e,
+        |  repeat(p_brand, 2) AS rep,
+        |  concat_ws('|', p_brand, p_type) AS cw
+        |FROM part WHERE p_partkey < 100 ORDER BY p_partkey""".stripMargin), headline = false),
 
     // Date/time scalar-function suite over an orders slice. dayofweek is
     // 1=Sunday in Spark vs 0=Sunday in DuckDB (oracle adds 1); both use
     // ISO weeks. Timestamps leave the query as DATE (µs-safe, TZ-free).
-    "q_date_funcs" -> ((s, d) => {
+    Query("q_date_funcs", (s, d) => {
       t(s, d, "orders").filter(col("o_orderkey") < 500)
         .select(
           col("o_orderkey"),
@@ -346,12 +434,25 @@ object AnalyticsQueries {
           add_months(col("o_orderdate").cast("date"), 3).as("plus3m"),
           last_day(col("o_orderdate").cast("date")).as("eom"))
         .orderBy(col("o_orderkey"))
-    }),
+    }, Sql(
+      """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS BIGINT) AS y,
+        |  CAST(month(o_orderdate) AS BIGINT) AS m,
+        |  CAST(quarter(o_orderdate) AS BIGINT) AS q,
+        |  CAST(dayofmonth(o_orderdate) AS BIGINT) AS dom,
+        |  CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
+        |  CAST(weekofyear(o_orderdate) AS BIGINT) AS woy,
+        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
+        |  CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
+        |    AS days_since_epoch_start,
+        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3m,
+        |  last_day(CAST(o_orderdate AS DATE)) AS eom
+        |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""".stripMargin), headline = false),
 
     // Array function suite: construction (sequence/split), sort, contains,
     // position, element math via zip_with, flatten — emitted as scalars /
     // joined strings so the value-hash is engine-independent.
-    "q_array_funcs" -> ((s, d) => {
+    Query("q_array_funcs", (s, d) => {
       val seqCol = sequence(lit(1), (col("p_size") % 5) + 1)
       t(s, d, "part").filter(col("p_partkey") < 200)
         .select(
@@ -366,12 +467,22 @@ object AnalyticsQueries {
           concat_ws(",", flatten(array(array(col("p_brand")), array(col("p_type")))))
             .as("flat"))
         .orderBy(col("p_partkey"))
-    }),
+    }, Sql(
+      """SELECT p_partkey,
+        |  array_to_string(list_sort(string_split(p_name, ' ')), ',') AS sorted_words,
+        |  list_contains(string_split(p_name, ' '), 'red') AS has_red,
+        |  CAST(list_position(string_split(p_name, ' '),
+        |    string_split(p_name, ' ')[-1]) AS BIGINT) AS last_pos,
+        |  CAST(p_size % 5 + 1 AS BIGINT) AS seq_n,
+        |  CAST(list_reduce(range(1, p_size % 5 + 2), (a, b) -> a + b) AS BIGINT) AS seq_sum,
+        |  array_to_string(list_transform(range(1, p_size % 5 + 2), x -> x * 2), ',') AS doubled,
+        |  concat_ws(',', p_brand, p_type) AS flat
+        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin), headline = false),
 
     // Map type surface: build, extract, cardinality, sorted keys — scalar
     // outputs (map parquet encodings are not hash-comparable across
     // engines).
-    "q_map_funcs" -> ((s, d) => {
+    Query("q_map_funcs", (s, d) => {
       val m = map_from_arrays(
         array(lit("brand"), lit("type")),
         array(col("p_brand"), col("p_type")))
@@ -383,12 +494,19 @@ object AnalyticsQueries {
           size(m).cast("long").as("m_n"),
           concat_ws(",", array_sort(map_keys(m))).as("m_keys"))
         .orderBy(col("p_partkey"))
-    }),
+    }, Sql(
+      """SELECT p_partkey,
+        |  map_extract(map(['brand','type'], [p_brand, p_type]), 'brand')[1] AS brand_v,
+        |  map_extract(map(['brand','type'], [p_brand, p_type]), 'type')[1] AS type_v,
+        |  CAST(cardinality(map(['brand','type'], [p_brand, p_type])) AS BIGINT) AS m_n,
+        |  array_to_string(list_sort(map_keys(map(['brand','type'], [p_brand, p_type]))), ',')
+        |    AS m_keys
+        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin), headline = false),
 
     // TPC-H Q1 (full): the canonical scan→filter→agg shape; shipdate
     // predicate pushed to parquet, money exact in cents (discount/tax in
     // tenths of a percent to stay integral).
-    "q_tpch_q1" -> ((s, d) => {
+    Query("q_tpch_q1", (s, d) => {
       t(s, d, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -404,12 +522,25 @@ object AnalyticsQueries {
             .as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    }, Sql(
+      s"""SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_c,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS sum_disc_c,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*(1.0+l_tax)*100) AS BIGINT)) AS BIGINT) AS sum_charge_c,
+        |  ${ratio6Sql("SUM(CAST(ROUND(l_quantity*100) AS BIGINT))",
+                       "COUNT(*) * 100")} AS avg_qty,
+        |  ${ratio6Sql("SUM(CAST(ROUND(l_discount*100) AS BIGINT))",
+                       "COUNT(*) * 100")} AS avg_disc,
+        |  COUNT(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // TPC-H Q3 shape: segment-filtered customer (broadcast) ⋈ orders ⋈
     // lineitem, revenue top-10 with full tiebreak — orderBy+limit is
     // TakeOrdered, not a global sort.
-    "q_tpch_q3" -> ((s, d) => {
+    Query("q_tpch_q3", (s, d) => {
       val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"))
       val o = t(s, d, "orders")
@@ -427,10 +558,21 @@ object AnalyticsQueries {
           col("o_orderpriority"), col("revenue_c"))
         .orderBy(col("revenue_c").desc, col("o_orderkey"))
         .limit(10)
-    }),
+    }, Sql(
+      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate, o_orderpriority,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue_c DESC, o_orderkey
+        |LIMIT 10""".stripMargin)),
 
     // TPC-H Q10 shape: returned-item revenue per customer, top 20.
-    "q_tpch_q10" -> ((s, d) => {
+    Query("q_tpch_q10", (s, d) => {
       val l = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"),
           cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev_c"))
@@ -449,10 +591,23 @@ object AnalyticsQueries {
           round(min(col("c_acctbal")), 6).as("acctbal"))
         .orderBy(col("revenue_c").desc, col("c_custkey"))
         .limit(20)
-    }),
+    }, Sql(
+      """SELECT c_custkey, c_name, n_name,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c,
+        |  ROUND(MIN(c_acctbal), 6) AS acctbal
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue_c DESC, c_custkey
+        |LIMIT 20""".stripMargin), headline = false),
 
     // TPC-H Q5 shape: region-filtered six-way join, revenue per nation.
-    "q_tpch_q5" -> ((s, d) => {
+    Query("q_tpch_q5", (s, d) => {
       val r = t(s, d, "region").filter(col("r_name") === "ASIA")
         .select(col("r_regionkey"))
       val n = t(s, d, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -474,10 +629,22 @@ object AnalyticsQueries {
         .groupBy(col("n_name"))
         .agg(sum(col("rev_c")).as("revenue_c"))
         .orderBy(col("revenue_c").desc, col("n_name"))
-    }),
+    }, Sql(
+      """SELECT n_name,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY n_name ORDER BY revenue_c DESC, n_name""".stripMargin)),
 
     // TPC-H Q6 shape: pure scan-filter-aggregate (the pushdown showcase).
-    "q_tpch_q6" -> ((s, d) => {
+    Query("q_tpch_q6", (s, d) => {
       t(s, d, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp"))
         .filter(col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
@@ -485,10 +652,18 @@ object AnalyticsQueries {
         .filter(col("l_quantity") < 24)
         .agg(sum(cents(col("l_extendedprice") * col("l_discount"))).as("revenue_c"),
           count(lit(1)).as("n"))
-    }),
+    }, Sql(
+      """SELECT
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*l_discount*100) AS BIGINT)) AS BIGINT) AS revenue_c,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |  AND l_discount BETWEEN 0.03 AND 0.05
+        |  AND l_quantity < 24""".stripMargin)),
 
     // TPC-H Q14 shape: conditional aggregation ratio (promo revenue share).
-    "q_tpch_q14" -> ((s, d) => {
+    Query("q_tpch_q14", (s, d) => {
       val p = t(s, d, "part").select(col("p_partkey"), col("p_type"))
       t(s, d, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp"))
@@ -499,7 +674,16 @@ object AnalyticsQueries {
         .agg(ratio6(
           sum(when(col("p_type").startsWith("PROMO"), col("rev_c")).otherwise(0L))
             * 100, sum(col("rev_c"))).as("promo_pct"))
-    }),
+    }, Sql(
+      s"""SELECT ${ratio6Sql(
+             "SUM(CASE WHEN p_type LIKE 'PROMO%' " +
+               "THEN CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT) " +
+               "ELSE 0 END) * 100",
+             "SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT))")}
+        |  AS promo_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin), headline = false),
 
     // TPC-H Q4 shape: correlated EXISTS (predicate subquery). Catalyst's
     // RewritePredicateSubquery turns the EXISTS into a LEFT SEMI join on
@@ -507,7 +691,7 @@ object AnalyticsQueries {
     // reduced by the pushed returnflag predicate before the join.
     // (The testdata has no l_commitdate/l_receiptdate; the returnflag
     // predicate stands in — the decorrelation shape is identical.)
-    "q_tpch_q4" -> ((s, d) => {
+    Query("q_tpch_q4", (s, d) => {
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
       s.sql(
@@ -519,7 +703,15 @@ object AnalyticsQueries {
           |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
           |GROUP BY o_orderpriority
           |ORDER BY o_orderpriority""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT o_orderpriority, COUNT(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
 
     // TPC-H Q17 shape: correlated SCALAR subquery (per-part average
     // threshold). RewriteCorrelatedScalarSubquery decorrelates it into
@@ -527,7 +719,7 @@ object AnalyticsQueries {
     // runs ONCE over lineitem, not once per outer row. l_quantity is
     // integral-valued double, so the 0.5*AVG threshold is exact under any
     // partial-aggregation order (no float-drift flakiness in the <).
-    "q_tpch_q17" -> ((s, d) => {
+    Query("q_tpch_q17", (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
       t(s, d, "part").createOrReplaceTempView("graft_part")
       s.sql(
@@ -538,12 +730,19 @@ object AnalyticsQueries {
           |WHERE p_brand = 'Brand#1'
           |  AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
           |                    FROM graft_li l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_c,
+        |  COUNT(*) AS n
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand = 'Brand#1'
+        |  AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
+        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)),
 
     // TPC-H Q18 shape: IN-subquery over a HAVING-filtered aggregate
     // (large-volume orders). Planned as one lineitem aggregate → filter →
     // LEFT SEMI join into the fact path; customer dim broadcasts.
-    "q_tpch_q18" -> ((s, d) => {
+    Query("q_tpch_q18", (s, d) => {
       t(s, d, "customer").createOrReplaceTempView("graft_cust")
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
@@ -560,13 +759,25 @@ object AnalyticsQueries {
           |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
           |ORDER BY totalprice_c DESC, o_orderkey
           |LIMIT 100""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT c_name, c_custkey, o_orderkey,
+        |  CAST(o_orderdate AS DATE) AS odate,
+        |  CAST(ROUND(o_totalprice*100) AS BIGINT) AS totalprice_c,
+        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
+        |                     GROUP BY l_orderkey HAVING SUM(l_quantity) > 250)
+        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+        |ORDER BY totalprice_c DESC, o_orderkey
+        |LIMIT 100""".stripMargin)),
 
     // TPC-H Q22 shape: NOT EXISTS (anti join) + uncorrelated scalar AVG
     // subquery — "positive-balance recently-inactive customers above the average". The scalar subquery plans as a 1-row broadcast; NOT
     // EXISTS becomes a LEFT ANTI join on custkey. Completes the subquery
     // family alongside Q4 (EXISTS), Q17 (correlated scalar), Q18 (IN).
-    "q_tpch_q22" -> ((s, d) => {
+    Query("q_tpch_q22", (s, d) => {
       t(s, d, "customer").createOrReplaceTempView("graft_cust")
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       s.sql(
@@ -581,13 +792,24 @@ object AnalyticsQueries {
           |                    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
           |GROUP BY c_nationkey
           |ORDER BY c_nationkey""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT c_nationkey,
+        |  COUNT(*) AS numcust,
+        |  CAST(SUM(CAST(ROUND(c_acctbal*100) AS BIGINT)) AS BIGINT) AS totacctbal_c
+        |FROM customer
+        |WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
+        |                   WHERE c_acctbal > 0.0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+        |GROUP BY c_nationkey
+        |ORDER BY c_nationkey""".stripMargin)),
 
     // TPC-H Q7 shape: bilateral nation-pair trade volume per ship year.
     // Fact shuffles once on orderkey; supplier/customer/nation dims all
     // broadcast; the symmetric pair predicate evaluates after the dim
     // attach (no union of two plans).
-    "q_tpch_q7" -> ((s, d) => {
+    Query("q_tpch_q7", (s, d) => {
       val n1 = t(s, d, "nation")
         .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
       val n2 = t(s, d, "nation")
@@ -611,11 +833,23 @@ object AnalyticsQueries {
         .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
         .agg(sum(col("vol_c")).as("revenue_c"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
+    }, Sql(
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
+        |FROM supplier, lineitem, orders, customer, nation n1, nation n2
+        |WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
+        |  AND c_custkey = o_custkey
+        |  AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
+        |  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin), headline = false),
 
     // TPC-H Q13 shape: customer distribution by order count — the LEFT
     // JOIN histogram (zero-order customers must appear in bucket 0).
-    "q_tpch_q13" -> ((s, d) => {
+    Query("q_tpch_q13", (s, d) => {
       val o = t(s, d, "orders")
         .filter(col("o_orderpriority") =!= "1-URGENT")
         .select(col("o_orderkey"), col("o_custkey"))
@@ -626,7 +860,14 @@ object AnalyticsQueries {
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
         .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
+    }, Sql(
+      """SELECT c_count, COUNT(*) AS custdist FROM (
+        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+        |  GROUP BY c_custkey
+        |)
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin), headline = false),
 
     // TPC-H Q8 shape: national market share — two-level conditional-
     // aggregation ratio per year over a 5-table star. Fact shuffles once
@@ -634,7 +875,7 @@ object AnalyticsQueries {
     // customer attach (both large at scale); part/supplier/nation/region
     // dims broadcast. Money in cents so the ratio is a quotient of exact
     // integers (deterministic under any partial-agg order).
-    "q_tpch_q8" -> ((s, d) => {
+    Query("q_tpch_q8", (s, d) => {
       val p = t(s, d, "part").filter(col("p_type") === "PROMO")
         .select(col("p_partkey"))
       val sup = t(s, d, "supplier").select(col("s_suppkey"), col("s_nationkey"))
@@ -665,7 +906,25 @@ object AnalyticsQueries {
           sum(when(col("supp_nation") === "NATION_3", col("vol_c")).otherwise(0L)),
           sum(col("vol_c"))).as("mkt_share"))
         .orderBy(col("o_year"))
-    }),
+    }, Sql(
+      s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |  ${ratio6Sql(
+             "SUM(CASE WHEN n1.n_name = 'NATION_3' " +
+               "THEN CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT) " +
+               "ELSE 0 END)",
+             "SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT))")}
+        |    AS mkt_share
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |JOIN region ON n2.n_regionkey = r_regionkey AND r_name = 'ASIA'
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // TPC-H Q12 shape: late-shipment counts by category with dual
     // conditional aggregation. The fixture has no l_shipmode /
@@ -673,7 +932,7 @@ object AnalyticsQueries {
     // and "late" = shipped >60 days after the order date — the shape
     // (fact-fact equi-join + interval predicate + two CASE counts) is
     // identical. One orderkey shuffle; no dim tables at all.
-    "q_tpch_q12" -> ((s, d) => {
+    Query("q_tpch_q12", (s, d) => {
       val o = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       t(s, d, "lineitem")
@@ -691,14 +950,24 @@ object AnalyticsQueries {
             col("o_orderpriority") =!= "2-HIGH", 1L).otherwise(0L))
             .as("low_line_count"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // TPC-H Q15 shape: top supplier by windowed revenue — an aggregate
     // VIEW consumed twice (once for the max, once for the equality
     // probe). The revenue CTE materializes one supplier-keyed aggregate;
     // the scalar MAX is a 1-row broadcast; revenue ties all surface
     // (TPC-H semantics), made deterministic by the cents revenue.
-    "q_tpch_q15" -> ((s, d) => {
+    Query("q_tpch_q15", (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
       t(s, d, "supplier").createOrReplaceTempView("graft_supp")
       s.sql(
@@ -715,7 +984,20 @@ object AnalyticsQueries {
           |FROM graft_supp JOIN revenue ON s_suppkey = supplier_no
           |WHERE total_revenue_c = (SELECT MAX(total_revenue_c) FROM revenue)
           |ORDER BY s_suppkey""".stripMargin)
-    }),
+    }, Sql(
+      """WITH revenue AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
+        |      AS total_revenue_c
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey
+        |)
+        |SELECT s_suppkey, s_name, total_revenue_c
+        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
+        |WHERE total_revenue_c = (SELECT MAX(total_revenue_c) FROM revenue)
+        |ORDER BY s_suppkey""".stripMargin)),
 
     // TPC-H Q19 shape: disjunctive multi-column predicates (OR of three
     // brand/size/quantity conjunct groups) over a part equi-join — the
@@ -723,7 +1005,7 @@ object AnalyticsQueries {
     // cleanly; the residual OR evaluates post-join without a
     // CartesianProduct. Part filtered to the union of brands before
     // broadcast.
-    "q_tpch_q19" -> ((s, d) => {
+    Query("q_tpch_q19", (s, d) => {
       val p = t(s, d, "part")
         .filter(col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"))
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
@@ -739,7 +1021,18 @@ object AnalyticsQueries {
           (col("p_brand") === "Brand#3" && col("p_size").between(1, 40) &&
             col("l_quantity").between(20, 30)))
         .agg(sum(col("rev_c")).as("revenue_c"), count(lit(1)).as("n"))
-    }),
+    }, Sql(
+      """SELECT
+        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
+        |    AS revenue_c,
+        |  COUNT(*) AS n
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
+        |       AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 40
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
     // TPC-H Q21 shape: suppliers who were the SOLE problem on multi-
     // supplier orders — the famous EXISTS + NOT EXISTS pair, planned as
@@ -747,7 +1040,7 @@ object AnalyticsQueries {
     // relation. No l_commitdate/l_receiptdate in the fixture: returnflag
     // 'R' stands in for "late" (same decorrelation shape). Orders status
     // filter prunes before the joins.
-    "q_tpch_q21" -> ((s, d) => {
+    Query("q_tpch_q21", (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       t(s, d, "supplier").createOrReplaceTempView("graft_supp")
@@ -768,7 +1061,23 @@ object AnalyticsQueries {
           |GROUP BY s_name
           |ORDER BY numwait DESC, s_name
           |LIMIT 100""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT s_name, COUNT(*) AS numwait
+        |FROM supplier
+        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |WHERE o_orderstatus = 'F'
+        |  AND l1.l_returnflag = 'R'
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_returnflag = 'R')
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 100""".stripMargin)),
 
     // Exact distinct count via BITMAP aggregates: bucket the key space,
     // build one bitmap per (group, bucket) with map-side partial merge,
@@ -777,7 +1086,7 @@ object AnalyticsQueries {
     // bitmaps — the mergeable EXACT-distinct pattern that complements
     // the approximate HLL path (q_approx_distinct). Oracle is the plain
     // COUNT(DISTINCT) it must equal.
-    "q_bitmap_distinct" -> ((s, d) => {
+    Query("q_bitmap_distinct", (s, d) => {
       t(s, d, "lineitem")
         .select(col("l_returnflag"),
           expr("bitmap_bucket_number(l_partkey)").as("bkt"),
@@ -787,12 +1096,16 @@ object AnalyticsQueries {
         .groupBy(col("l_returnflag"))
         .agg(sum(col("c")).as("n_parts"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag,
+        |  CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin), headline = false),
 
     // Spark 3.4+ regexp surface beyond extract: count and first-match
     // substring (null-vs-empty semantics normalized to '' on both
     // engines), over a pushed-down part slice.
-    "q_regexp_funcs" -> ((s, d) => {
+    Query("q_regexp_funcs", (s, d) => {
       t(s, d, "part").filter(col("p_partkey") < 200)
         .select(col("p_partkey"),
           regexp_count(col("p_name"), lit("[aeiou]")).as("n_vowels"),
@@ -800,7 +1113,13 @@ object AnalyticsQueries {
             .as("first_long_word"),
           regexp_count(col("p_type"), lit("ED")).as("n_ed"))
         .orderBy(col("p_partkey"))
-    }),
+    }, Sql(
+      """SELECT p_partkey,
+        |  CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS BIGINT) AS n_vowels,
+        |  regexp_extract(p_name, '[a-z]{5,}') AS first_long_word,
+        |  CAST(len(regexp_extract_all(p_type, 'ED')) AS BIGINT) AS n_ed
+        |FROM part WHERE p_partkey < 200
+        |ORDER BY p_partkey""".stripMargin), headline = false),
 
     // Recursive CTE (Spark 4 WITH RECURSIVE): transitive closure over the
     // same chain-pair graph as q_dedup_cc — the SQL-text twin of the
@@ -809,7 +1128,7 @@ object AnalyticsQueries {
     // loop cross-check each other through the oracle. Edges always point
     // from higher to lower id (LAG construction), so the recursion is
     // finite without cycle detection.
-    "q_cc_recursive" -> ((s, d) => {
+    Query("q_cc_recursive", (s, d) => {
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       s.sql(
         """WITH RECURSIVE ch AS (
@@ -830,13 +1149,31 @@ object AnalyticsQueries {
           |  UNION ALL SELECT id_b, id_b FROM pairs
           |  UNION ALL SELECT id, cur FROM reach
           |) GROUP BY id ORDER BY id""".stripMargin)
-    }),
+    }, Sql(
+      """WITH RECURSIVE ch AS (
+        |  SELECT o_custkey, o_orderkey,
+        |    LAG(o_orderkey) OVER (PARTITION BY o_custkey
+        |                          ORDER BY o_orderkey) AS prev
+        |  FROM orders WHERE o_orderkey < 5000
+        |), pairs AS (
+        |  SELECT prev AS id_a, o_orderkey AS id_b FROM ch
+        |  WHERE prev IS NOT NULL
+        |), reach(id, cur) AS (
+        |  SELECT id_b, id_a FROM pairs
+        |  UNION ALL
+        |  SELECT r.id, p.id_a FROM reach r JOIN pairs p ON r.cur = p.id_b
+        |)
+        |SELECT id, MIN(cur) AS comp FROM (
+        |  SELECT id_a AS id, id_a AS cur FROM pairs
+        |  UNION ALL SELECT id_b, id_b FROM pairs
+        |  UNION ALL SELECT id, cur FROM reach
+        |) GROUP BY id ORDER BY id""".stripMargin)),
 
     // Data-quality gate: all row-level constraints in ONE lineitem pass
     // (single aggregate, then unpivot to the long report) + the
     // orders→customer referential check as a one-pass left join. The
     // expectations report every ingest runs before a table ships.
-    "q_dq_report" -> ((s, d) => {
+    Query("q_dq_report", (s, d) => {
       val rowChecks = graft.operators.DataQuality.constraintReport(
         t(s, d, "lineitem"), Seq(
           "discount_range" -> (col("l_discount") >= 0.0 && col("l_discount") <= 0.1),
@@ -848,13 +1185,36 @@ object AnalyticsQueries {
         t(s, d, "orders"), "o_custkey",
         t(s, d, "customer"), "c_custkey", "orders_custkey_fk")
       rowChecks.unionByName(fk).orderBy(col("check"))
-    }),
+    }, Sql(
+      """WITH a AS (
+        |  SELECT COUNT(*) AS n_rows,
+        |    CAST(SUM(CASE WHEN l_discount >= 0.0 AND l_discount <= 0.1 THEN 0 ELSE 1 END) AS BIGINT) AS discount_range,
+        |    CAST(SUM(CASE WHEN l_extendedprice > 0.0 THEN 0 ELSE 1 END) AS BIGINT) AS price_positive,
+        |    CAST(SUM(CASE WHEN l_quantity >= 1.0 AND l_quantity <= 60.0 THEN 0 ELSE 1 END) AS BIGINT) AS quantity_range,
+        |    CAST(SUM(CASE WHEN l_shipdate IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS shipdate_not_null,
+        |    CAST(SUM(CASE WHEN l_tax >= 0.0 AND l_tax <= 0.1 THEN 0 ELSE 1 END) AS BIGINT) AS tax_range
+        |  FROM lineitem
+        |), fk AS (
+        |  SELECT CAST(SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
+        |         COUNT(*) AS n_rows
+        |  FROM orders o
+        |  LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
+        |    ON o.o_custkey = c.c_custkey
+        |)
+        |SELECT * FROM (
+        |  SELECT 'discount_range' AS "check", discount_range AS n_bad, n_rows FROM a
+        |  UNION ALL SELECT 'price_positive', price_positive, n_rows FROM a
+        |  UNION ALL SELECT 'quantity_range', quantity_range, n_rows FROM a
+        |  UNION ALL SELECT 'shipdate_not_null', shipdate_not_null, n_rows FROM a
+        |  UNION ALL SELECT 'tax_range', tax_range, n_rows FROM a
+        |  UNION ALL SELECT 'orders_custkey_fk', n_bad, n_rows FROM fk
+        |) ORDER BY "check"""".stripMargin)),
 
     // LATERAL correlated subquery with ORDER BY + LIMIT: top-2 orders per
     // customer, the SQL-text twin of the window top-k. Catalyst
     // decorrelates the lateral into a ranked join (DecorrelateInnerQuery
     // handles the correlated LIMIT) — no per-row subquery execution.
-    "q_lateral_topk" -> ((s, d) => {
+    Query("q_lateral_topk", (s, d) => {
       t(s, d, "customer").createOrReplaceTempView("graft_cust")
       t(s, d, "orders").createOrReplaceTempView("graft_ord")
       s.sql(
@@ -867,12 +1227,21 @@ object AnalyticsQueries {
           |         ORDER BY price_c DESC, o_orderkey LIMIT 2) o
           |WHERE c.c_custkey < 200
           |ORDER BY c_custkey, price_c DESC, o_orderkey""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT c.c_custkey, o.o_orderkey, o.price_c
+        |FROM customer c,
+        |LATERAL (SELECT o_orderkey,
+        |                CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c
+        |         FROM orders
+        |         WHERE o_custkey = c.c_custkey
+        |         ORDER BY price_c DESC, o_orderkey LIMIT 2) o
+        |WHERE c.c_custkey < 200
+        |ORDER BY c_custkey, price_c DESC, o_orderkey""".stripMargin)),
 
     // Value-based RANGE window frame: trailing-7-day revenue per customer
     // (frame bounded by the ORDER-BY VALUE, not row counts — the frame
     // kind the rows-based queries don't exercise).
-    "q_window_range_frame" -> ((s, d) => {
+    Query("q_window_range_frame", (s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("day_sec"))
         .rangeBetween(-7L * 86400L, 0L)
@@ -883,7 +1252,12 @@ object AnalyticsQueries {
         .withColumn("trailing7d_c", sum(col("price_c")).over(w))
         .select(col("o_custkey"), col("o_orderkey"), col("trailing7d_c"))
         .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
+    }, Sql(
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) OVER (
+        |    PARTITION BY o_custkey ORDER BY CAST(FLOOR(date_part('epoch', o_orderdate)) AS BIGINT)
+        |    RANGE BETWEEN 604800 PRECEDING AND 0 FOLLOWING) AS BIGINT) AS trailing7d_c
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
     // The full analytic ranking-function family over one partitioned
     // window: rank / dense_rank / ntile / percent_rank / cume_dist /
@@ -891,7 +1265,7 @@ object AnalyticsQueries {
     // (one window spec → one WindowExec, plan shares the exchange).
     // Percent/cume are exact rationals of integer counts → rounded 6dp
     // identically in DuckDB. Customer slice keeps the output bounded.
-    "q_window_rank_family" -> ((s, d) => {
+    Query("q_window_rank_family", (s, d) => {
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("price_c"), col("o_orderkey"))
       t(s, d, "orders")
         .filter(col("o_custkey") < 50)
@@ -910,7 +1284,27 @@ object AnalyticsQueries {
         .withColumn("next_price_c", lead(col("price_c"), 1).over(w))
         .withColumn("min_price_c", first(col("price_c")).over(w))
         .orderBy(col("o_custkey"), col("rnk"), col("o_orderkey"))
-    }),
+    }, Sql(
+      s"""WITH o AS (
+        |  SELECT o_custkey, o_orderkey,
+        |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c
+        |  FROM orders WHERE o_custkey < 50
+        |)
+        |SELECT o_custkey, o_orderkey, price_c,
+        |  CAST(RANK() OVER w AS BIGINT) AS rnk,
+        |  CAST(DENSE_RANK() OVER w AS BIGINT) AS drnk,
+        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
+        |  CASE WHEN COUNT(*) OVER wp = 1 THEN 0.0
+        |       ELSE ${ratio6Sql("RANK() OVER w - 1", "COUNT(*) OVER wp - 1")}
+        |  END AS pct_rank,
+        |  ${ratio6Sql("COUNT(*) OVER w", "COUNT(*) OVER wp")} AS cume,
+        |  LAG(price_c, 1) OVER w AS prev_price_c,
+        |  LEAD(price_c, 1) OVER w AS next_price_c,
+        |  FIRST_VALUE(price_c) OVER w AS min_price_c
+        |FROM o
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY price_c, o_orderkey),
+        |  wp AS (PARTITION BY o_custkey)
+        |ORDER BY o_custkey, rnk, o_orderkey""".stripMargin), headline = false),
 
     // Vocabulary coverage (Zipf head): top-20 corpus terms with running
     // cumulative share of ALL token occurrences — the "how much does a
@@ -918,7 +1312,7 @@ object AnalyticsQueries {
     // Shape: one (term) aggregate; TakeOrdered bounds to 20 rows BEFORE
     // the running-sum window (single-partition window over 20 rows, the
     // bounded-then-rank pattern); total attaches as a 1-row broadcast.
-    "q_vocab_coverage" -> ((s, d) => {
+    Query("q_vocab_coverage", (s, d) => {
       val tf = Tables.documents(s, d)
         .select(explode(graft.operators.Dedup.tokens(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("c"))
@@ -932,7 +1326,21 @@ object AnalyticsQueries {
         .select(col("rank"), col("term"), col("c"),
           ratio6(col("cum_c"), col("n")).as("cum_share"))
         .orderBy(col("rank"))
-    }),
+    }, Sql(
+      s"""WITH tok AS (
+        |  SELECT unnest($duckDocToks) AS term FROM documents
+        |), tf AS (SELECT term, COUNT(*) AS c FROM tok GROUP BY term),
+        |tot AS (SELECT SUM(c) AS n FROM tf),
+        |top AS (
+        |  SELECT term, c,
+        |    CAST(ROW_NUMBER() OVER (ORDER BY c DESC, term) AS BIGINT) AS rank
+        |  FROM tf QUALIFY rank <= 20
+        |)
+        |SELECT rank, term, c,
+        |  ${ratio6Sql(
+             "SUM(c) OVER (ORDER BY rank ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
+             "n")} AS cum_share
+        |FROM top, tot ORDER BY rank""".stripMargin), headline = false),
 
     // Heavy hitters via the datasketches frequent-items aggregate
     // (approx_top_k): the mergeable one-pass top-k every vocab/label
@@ -944,7 +1352,7 @@ object AnalyticsQueries {
     // tie order is unspecified, so the query explodes the result and
     // re-ranks deterministically (count desc, term) before the top-10
     // cut.
-    "q_approx_top_k" -> ((s, d) => {
+    Query("q_approx_top_k", (s, d) => {
       val w = Window.orderBy(col("cnt").desc, col("term"))
       Tables.documents(s, d)
         .select(explode(graft.operators.Dedup.tokens(col("text"))).as("term"))
@@ -955,7 +1363,16 @@ object AnalyticsQueries {
         .withColumn("rank", row_number().over(w).cast("long"))
         .select(col("rank"), col("term"), col("cnt"))
         .orderBy(col("rank"))
-    }),
+    }, Sql(
+      s"""WITH tok AS (
+        |  SELECT unnest($duckDocToks) AS term FROM documents
+        |), tf AS (SELECT term, COUNT(*) AS cnt FROM tok GROUP BY term),
+        |top AS (
+        |  SELECT term, cnt,
+        |    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, term) AS BIGINT) AS rank
+        |  FROM tf QUALIFY rank <= 10
+        |)
+        |SELECT rank, term, cnt FROM top ORDER BY rank""".stripMargin), headline = false),
 
     // Theta-sketch SET ALGEBRA over distinct keys: per-flag sketches in
     // one grouped pass, then union / intersection / difference
@@ -967,7 +1384,7 @@ object AnalyticsQueries {
     // Theta retention keeps the k SMALLEST key hashes — a function of
     // the SET, not partitioning — so exact-regime results are
     // deterministic across any parallelism.
-    "q_theta_sets" -> ((s, d) => {
+    Query("q_theta_sets", (s, d) => {
       val sk = t(s, d, "lineitem")
         .filter(col("l_returnflag").isin("A", "R"))
         .groupBy(col("l_returnflag"))
@@ -983,12 +1400,21 @@ object AnalyticsQueries {
         expr("theta_sketch_estimate(theta_union(ska, skr, 16))").cast("long").as("n_union"),
         expr("theta_sketch_estimate(theta_intersection(ska, skr))").cast("long").as("n_inter"),
         expr("theta_sketch_estimate(theta_difference(ska, skr))").cast("long").as("n_diff"))
-    }),
+    }, Sql(
+      """WITH a AS (SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'A'),
+        |r AS (SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'R')
+        |SELECT
+        |  (SELECT COUNT(*) FROM a) AS n_a,
+        |  (SELECT COUNT(*) FROM r) AS n_r,
+        |  (SELECT COUNT(*) FROM (SELECT * FROM a UNION SELECT * FROM r)) AS n_union,
+        |  (SELECT COUNT(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM r)) AS n_inter,
+        |  (SELECT COUNT(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM r)) AS n_diff""".stripMargin),
+      headline = false),
 
     // Non-equi RANGE join: price-band bucketing via a broadcast
     // nested-loop join against a 4-row literal band table — the band side
     // is always broadcast; the fact side never shuffles.
-    "q_range_join" -> ((s, d) => {
+    Query("q_range_join", (s, d) => {
       val spark = s
       import spark.implicits._
       val bands = Seq(
@@ -1004,11 +1430,18 @@ object AnalyticsQueries {
           // the terminating-ratio ROUND(DOUBLE) seam (ExactRatio scaladoc)
           ratio6(sum(col("p_size")), count(lit(1))).as("avg_size"))
         .orderBy(col("band_id"))
-    }),
+    }, Sql(
+      s"""WITH bands(band_id, lo, hi) AS (
+        |  VALUES (1, 900.0, 925.0), (2, 925.0, 950.0),
+        |         (3, 950.0, 975.0), (4, 975.0, 1000.0))
+        |SELECT CAST(band_id AS BIGINT) AS band_id, COUNT(*) AS n_parts,
+        |  ${ratio6Sql("SUM(p_size)", "COUNT(*)")} AS avg_size
+        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
+        |GROUP BY band_id ORDER BY band_id""".stripMargin)),
 
     // Unpivot (wide → long): per-flag metric columns melted to
     // (flag, metric, value) rows.
-    "q_unpivot" -> ((s, d) => {
+    Query("q_unpivot", (s, d) => {
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(sum(cents(col("l_quantity"))).as("qty_c"),
@@ -1016,14 +1449,22 @@ object AnalyticsQueries {
         .unpivot(Array(col("l_returnflag")),
           Array(col("qty_c"), col("price_c")), "metric", "v")
         .orderBy(col("l_returnflag"), col("metric"))
-    }),
+    }, Sql(
+      """WITH wide AS (
+        |  SELECT l_returnflag,
+        |    CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS qty_c,
+        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS price_c
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, metric, v
+        |FROM wide UNPIVOT (v FOR metric IN (qty_c, price_c))
+        |ORDER BY l_returnflag, metric""".stripMargin), headline = false),
 
     // PIVOT (long → wide, the unpivot's inverse): per-returnflag revenue
     // cents pivoted on the CLOSED linestatus domain {F, O} — explicit
     // value list, so the output schema is static and the relational
     // rewrite (one conditional aggregation) is exactly what the oracle
     // writes by hand. One shuffle, exact integers.
-    "q_pivot" -> ((s, d) => {
+    Query("q_pivot", (s, d) => {
       t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"),
           cents(col("l_extendedprice")).as("price_c"))
@@ -1034,14 +1475,24 @@ object AnalyticsQueries {
           coalesce(col("F"), lit(0L)).as("f_price_c"),
           coalesce(col("O"), lit(0L)).as("o_price_c"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      // the pivot's relational rewrite, written by hand
+      """SELECT l_returnflag,
+        |  CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'F'
+        |    THEN CAST(ROUND(l_extendedprice*100) AS BIGINT) END), 0)
+        |    AS BIGINT) AS f_price_c,
+        |  CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'O'
+        |    THEN CAST(ROUND(l_extendedprice*100) AS BIGINT) END), 0)
+        |    AS BIGINT) AS o_price_c
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin)),
 
     // Calendar gap-fill (the time-series spine every dashboard needs
     // before charting a daily metric): the full [min_day, max_day]
     // spine via sequence() (domain-bounded — |days| rows, never a
     // per-event explode), left join of the daily counts, zeros filled,
     // missing days flagged. Exact integers throughout.
-    "q_gap_fill" -> ((s, d) => {
+    Query("q_gap_fill", (s, d) => {
       val daily = Tables.events(s, d)
         .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
           .as("day"))
@@ -1053,12 +1504,21 @@ object AnalyticsQueries {
         .select(col("day"), coalesce(col("n"), lit(0L)).as("n"),
           col("n").isNull.as("is_gap"))
         .orderBy(col("day"))
-    }),
+    }, Sql(
+      // generate_series spine over the bounded day domain; zeros filled
+      """WITH daily AS (
+        |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
+        |  FROM events GROUP BY 1),
+        |b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
+        |spine AS (SELECT UNNEST(generate_series(lo, hi)) AS day FROM b)
+        |SELECT s.day, COALESCE(d.n, 0) AS n, d.n IS NULL AS is_gap
+        |FROM spine s LEFT JOIN daily d USING (day)
+        |ORDER BY s.day""".stripMargin)),
 
     // SQL-text entry point + GROUPING SETS (neither ROLLUP nor CUBE):
     // exercises spark.sql over a registered view — the engine's parser
     // surface.
-    "q_grouping_sets" -> ((s, d) => {
+    Query("q_grouping_sets", (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("graft_li")
       s.sql(
         """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
@@ -1068,13 +1528,20 @@ object AnalyticsQueries {
           |FROM graft_li
           |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
           |ORDER BY rf, ls""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
+        |       COALESCE(l_linestatus, 'ALL') AS ls,
+        |       COUNT(*) AS n,
+        |       CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS qty_c
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+        |ORDER BY rf, ls""".stripMargin), headline = false),
 
     // Typed Dataset surface (SURVEY §1.5): case-class Encoder +
     // groupByKey/mapGroups. Kept for API parity — the per-group closure
     // exits codegen, so the column form (q1_agg etc.) is the perf path;
     // rounding happens in DataFrame-land so both engines share one rule.
-    "q_typed_agg" -> ((s, d) => {
+    Query("q_typed_agg", (s, d) => {
       val spark = s
       import spark.implicits._
       Tables.ratingsDs(s, d)
@@ -1092,12 +1559,16 @@ object AnalyticsQueries {
           ratio6((col("sum_rating") * 2).cast("decimal(38,0)"), col("n") * 2)
             .as("avg_rating"))
         .orderBy(col("userId"))
-    }),
+    }, Sql(
+      s"""WITH ${Tables.ratingsSql}
+         |SELECT userId, COUNT(*) AS n,
+         |  ${ratio6Sql("CAST(SUM(rating)*2 AS HUGEINT)", "COUNT(*)*2")} AS avg_rating
+         |FROM ratings GROUP BY userId ORDER BY userId""".stripMargin), headline = false),
 
     // Null-safety surface: nulls manufactured with nullif, then repaired/
     // filtered with na.fill, na.drop, coalesce, nvl2, and ANSI-safe try_*
     // arithmetic (division by zero → NULL, not an exception).
-    "q_null_safety" -> ((s, d) => {
+    Query("q_null_safety", (s, d) => {
       val base = t(s, d, "orders")
         .withColumn("p0", nullif(col("o_totalprice"), col("o_totalprice"))) // always null
         .withColumn("st_n", nullif(col("o_orderstatus"), lit("O")))
@@ -1112,12 +1583,22 @@ object AnalyticsQueries {
           count(col("ratio")).as("n_ratio_nonnull"),
           round(min(col("p0")), 6).as("filled_min"))
         .orderBy(col("st_n"), col("tag"))
-    }),
+    }, Sql(
+      """WITH t AS (
+        |  SELECT CASE WHEN o_orderstatus = 'O' THEN 'OPEN'
+        |              ELSE o_orderstatus END AS st_n,
+        |         CASE WHEN o_orderstatus = 'F' THEN 'was_f'
+        |              ELSE 'not_f' END AS tag
+        |  FROM orders)
+        |SELECT st_n, tag, COUNT(*) AS n,
+        |  CAST(0 AS BIGINT) AS n_ratio_nonnull,
+        |  CAST(-1.0 AS DOUBLE) AS filled_min
+        |FROM t GROUP BY st_n, tag ORDER BY st_n, tag""".stripMargin), headline = false),
 
     // Array higher-order predicates + construction surface: exists,
     // forall, array_compact, array_append/prepend, array_repeat —
     // emitted as scalars/joined strings.
-    "q_array_hof" -> ((s, d) => {
+    Query("q_array_hof", (s, d) => {
       val words = split(col("p_name"), " ")
       t(s, d, "part").filter(col("p_partkey") < 200)
         .select(
@@ -1130,11 +1611,21 @@ object AnalyticsQueries {
           concat_ws(",", array_prepend(words, lit("BEGIN"))).as("prepended"),
           concat_ws(",", array_repeat(col("p_brand"), 2)).as("repeated"))
         .orderBy(col("p_partkey"))
-    }),
+    }, Sql(
+      """SELECT p_partkey,
+        |  len(list_filter(string_split(p_name, ' '), x -> len(x) > 4)) > 0 AS has_long_word,
+        |  len(list_filter(string_split(p_name, ' '), x -> len(x) > 2))
+        |    = len(string_split(p_name, ' ')) AS all_gt2,
+        |  CAST(len(list_filter([p_brand, NULL, p_type], x -> x IS NOT NULL)) AS BIGINT)
+        |    AS n_compact,
+        |  array_to_string(list_append(string_split(p_name, ' '), 'END'), ',') AS appended,
+        |  array_to_string(list_prepend('BEGIN', string_split(p_name, ' ')), ',') AS prepended,
+        |  p_brand || ',' || p_brand AS repeated
+        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin), headline = false),
 
     // df.stat.crosstab: contingency table with an explicit stable column
     // projection (crosstab column order is value-dependent).
-    "q_crosstab" -> ((s, d) => {
+    Query("q_crosstab", (s, d) => {
       val aliases = Seq("1-URGENT" -> "n_urgent", "2-HIGH" -> "n_high",
         "3-MEDIUM" -> "n_medium", "4-NOT SPECIFIED" -> "n_notspec",
         "5-LOW" -> "n_low")
@@ -1145,27 +1636,40 @@ object AnalyticsQueries {
         .select(col("o_orderstatus_o_orderpriority").as("status") +:
           aliases.map { case (_, a) => col(a) }: _*)
         .orderBy(col("status"))
-    }),
+    }, Sql(
+      """SELECT o_orderstatus AS status,
+        |  COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent,
+        |  COUNT(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS n_high,
+        |  COUNT(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS n_medium,
+        |  COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS n_notspec,
+        |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS n_low
+        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin), headline = false),
 
     // Two-phase salted aggregation (explicit skew mitigation — the form
     // for hot group keys AQE can't split because it's an aggregate, not a
     // join). Result provably identical to the direct groupBy.
-    "q_salted_agg" -> ((s, d) => {
+    Query("q_salted_agg", (s, d) => {
       graft.operators.Skew.saltedSumCount(Tables.ratings(s, d),
         "movieId", "rating", spread = Seq("userId", "ts"), buckets = 16)
         .select(col("movieId"),
           round(col("sum_rating"), 6).as("sum_rating_r"), col("n"))
         .orderBy(col("movieId"))
-    }),
+    }, Sql(
+      s"""WITH ${Tables.ratingsSql}
+         |SELECT movieId, ROUND(SUM(rating), 6) AS sum_rating_r,
+         |  COUNT(*) AS n
+         |FROM ratings GROUP BY movieId ORDER BY movieId""".stripMargin), headline = false),
 
     // Mergeable DataSketches HLL (the 100 TB count-distinct path: partial
     // sketches union across partitions/days). Sketch-specific → rows-only;
     // tolerance vs exact asserted in scalatest.
-    "q_hll_sketch" -> ((s, d) => {
+    Query("q_hll_sketch", (s, d) => {
       t(s, d, "lineitem").agg(
         hll_sketch_estimate(hll_sketch_agg(col("l_partkey"))).as("est_parts"),
         hll_sketch_estimate(hll_sketch_agg(col("l_suppkey"))).as("est_supps"))
-    }),
+    }, Exempt(
+      "HLL sketch bytes are engine-specific; merge/estimate invariants in scalatest"),
+      headline = false),
 
     // PageRank (5 fixed power-iteration rounds, damping 0.85) over the
     // symmetric customer↔supplier trade graph mined from orders⋈lineitem.
@@ -1174,7 +1678,8 @@ object AnalyticsQueries {
     // oracle is the SAME recurrence unrolled into 5 generated SQL CTEs,
     // so the iteration math is witnessed end-to-end; final ranks rounded
     // 6dp (double-sum addition-order seam, SCALING.md contract).
-    "q_pagerank" -> ((s, d) => pagerankFull(s, d, localThreshold = 2000000L)),
+    Query("q_pagerank", (s, d) => pagerankFull(s, d, localThreshold = 2000000L),
+      Sql(pagerankOracle)),
 
     // Personalized PageRank: teleport mass pinned to the BUILDING-segment
     // customers — rank concentrates in their trading neighborhood, so the
@@ -1182,7 +1687,7 @@ object AnalyticsQueries {
     // orbit" (the graph-based related-entities recommender). Same
     // generated-CTE oracle as q_pagerank with a seed-normalized teleport
     // CTE swapped in; supplier nodes only in the output.
-    "q_ppr_suppliers" -> ((s, d) => {
+    Query("q_ppr_suppliers", (s, d) => {
       val seeds = t(s, d, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select((col("c_custkey") * 2L).as("node")).distinct()
@@ -1192,7 +1697,7 @@ object AnalyticsQueries {
         .select(tradeNodeLabel(col("node")).as("node"),
           round(col("rank"), 6).as("rank_r"))
         .orderBy(col("node"))
-    }),
+    }, Sql(pprOracle)),
 
     // Exact triangle census + global clustering coefficient of the
     // parts-co-ordered-together graph (edge {p1, p2} iff ≥2 distinct
@@ -1212,11 +1717,34 @@ object AnalyticsQueries {
     // never binds here, but an unbounded basket would otherwise expand
     // quadratically). The one double (gcc = 3·tri/wedges) is a single
     // IEEE multiply+divide over exact integers on both engines, 6dp.
-    "q_triangles" -> ((s, d) => {
+    Query("q_triangles", (s, d) => {
       graft.operators.Graph.triangleStats(coPurchaseEdges(s, d))
         .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
           col("n_triangles"), round(col("gcc"), 6).as("gcc_r"))
-    }),
+    }, Sql(
+      // Value-identical unoriented 3-way join over the same canonical
+      // (u < v) edge set — with a < b < c each triangle matches the join
+      // pattern (a,b)(b,c)(a,c) exactly once. The engine's orientation
+      // changes the plan's fan-out, never the census (the salted-join
+      // convention: the oracle witnesses the relation, not the layout).
+      s"""WITH $coPurchaseCte,
+        |deg AS (
+        |  SELECT node, COUNT(*) AS dg FROM (
+        |    SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges)
+        |  GROUP BY 1),
+        |base AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
+        |         CAST(COALESCE(SUM(dg * (dg - 1) // 2), 0) AS BIGINT) AS n_wedges
+        |  FROM deg),
+        |en AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM edges),
+        |tri AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+        |  FROM edges e1 JOIN edges e2 ON e1.v = e2.u
+        |       JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v)
+        |SELECT n_nodes, n_edges, n_wedges, n_triangles,
+        |  ROUND(CASE WHEN n_wedges > 0
+        |             THEN 3.0 * n_triangles / n_wedges ELSE 0 END, 6) AS gcc_r
+        |FROM base, en, tri""".stripMargin)),
 
     // k-core decomposition (fixed-round synchronous peel, k=3 over the
     // q_triangles co-purchase graph — ONE edge definition shared via
@@ -1230,9 +1758,10 @@ object AnalyticsQueries {
     // hash semi-joins, per-round checkpoint, Guarded.iterate fast path
     // under the measured-edge guard, constant-tail fast exit once the
     // peel empties).
-    "q_kcore" -> ((s, d) =>
+    Query("q_kcore", (s, d) =>
       graft.operators.Graph.kcorePeel(coPurchaseEdges(s, d), k = 3,
-        rounds = 6, localThreshold = 2000000L)),
+        rounds = 6, localThreshold = 2000000L),
+      Sql(kcoreOracle)),
 
     // Blocked fuzzy matching (the entity-resolution pattern): candidate
     // pairs come from a BLOCK KEY (the name's last token), never an
@@ -1250,13 +1779,36 @@ object AnalyticsQueries {
     // The expensive edit distance runs only on blocked candidates;
     // levenshtein is the standard DP distance on both engines — exact
     // integer, no float seam.
-    "q_fuzzy_parts" -> ((s, d) => {
+    Query("q_fuzzy_parts", (s, d) => {
       blockedPartPairs(s, d)
         .select(col("block"), col("a"), col("b"),
           levenshtein(col("a"), col("b")).cast("long").as("dist"))
         .filter(col("dist") <= 2)
         .orderBy(col("a"), col("b"))
-    }),
+    }, Sql(
+      // mirrors Dedup.blockedPairs' CAP: rn ≤ 1000 members pair fully,
+      // overflow members pair once against the block min (rn = 1)
+      """WITH n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part
+        |), r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n
+        |), cand AS (
+        |  SELECT a.block, a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+        |  WHERE a.rn <= 1000 AND b.rn <= 1000
+        |  UNION ALL
+        |  SELECT o.block, m.p_name AS a, o.p_name AS b
+        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+        |  WHERE o.rn > 1000
+        |)
+        |SELECT block, a, b, CAST(levenshtein(a, b) AS BIGINT) AS dist
+        |FROM cand
+        |WHERE levenshtein(a, b) <= 2
+        |ORDER BY a, b""".stripMargin)),
 
     // The edit-distance-free fuzzy-matching twin: same capped blocked
     // candidate generation, scored by the codegen'd Jaro-Winkler
@@ -1267,11 +1819,39 @@ object AnalyticsQueries {
     // tolerant, no DP table); the threshold compares the 6dp-ROUNDED
     // score on both engines so a last-ulp wobble cannot flip a row's
     // membership.
-    "q_fuzzy_jw" -> ((s, d) => {
+    Query("q_fuzzy_jw", (s, d) => {
       jwMatches(s, d)
         .select(col("block"), col("a"), col("b"), col("jw_r"))
         .orderBy(col("a"), col("b"))
-    }),
+    }, Sql(
+      // same capped blocked-candidate CTE; DuckDB's
+      // jaro_winkler_similarity is the same standard variant as the
+      // engine's codegen'd expression, so the 6dp-rounded SCORE is the
+      // compared value (threshold on the rounded score on both sides)
+      """WITH n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part
+        |), r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n
+        |), cand AS (
+        |  SELECT a.block, a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+        |  WHERE a.rn <= 1000 AND b.rn <= 1000
+        |  UNION ALL
+        |  SELECT o.block, m.p_name AS a, o.p_name AS b
+        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+        |  WHERE o.rn > 1000
+        |), scored AS (
+        |  SELECT block, a, b,
+        |    ROUND(jaro_winkler_similarity(a, b), 6) AS jw_r
+        |  FROM cand
+        |)
+        |SELECT block, a, b, jw_r FROM scored
+        |WHERE jw_r >= 0.9
+        |ORDER BY a, b""".stripMargin)),
 
     // Z-order layout clustering: Morton-interleave (l_partkey, l_suppkey)
     // mod 1024 into one sort key and report each of the 64 coarse
@@ -1280,7 +1860,7 @@ object AnalyticsQueries {
     // on EITHER dimension. Pure codegen'd bit arithmetic; the oracle's
     // interleave expression is GENERATED from the same spec
     // (Layout.zvalueSql), so the bit layout can't drift between engines.
-    "q_zorder_cluster" -> ((s, d) => {
+    Query("q_zorder_cluster", (s, d) => {
       val li = t(s, d, "lineitem").select(
         pmod(col("l_partkey"), lit(1024L)).cast("long").as("x"),
         pmod(col("l_suppkey"), lit(1024L)).cast("long").as("y"))
@@ -1292,7 +1872,15 @@ object AnalyticsQueries {
           min(col("x")).as("x_min"), max(col("x")).as("x_max"),
           min(col("y")).as("y_min"), max(col("y")).as("y_max"))
         .orderBy(col("zbucket"))
-    }),
+    }, Sql(
+      s"""WITH b AS (
+         |  SELECT l_partkey % 1024 AS x, l_suppkey % 1024 AS y FROM lineitem
+         |), z AS (
+         |  SELECT x, y, ${graft.operators.Layout.zvalueSql("x", "y", 10)} AS zv FROM b
+         |)
+         |SELECT CAST(zv >> 14 AS BIGINT) AS zbucket, COUNT(*) AS n,
+         |  MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
+         |FROM z GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // ANALYZE-style per-column table statistics (the CBO stats-collection
     // pass every warehouse runs): rows / nulls / exact NDV / min / max
@@ -1313,7 +1901,7 @@ object AnalyticsQueries {
     // selectivity needs those, and they cost one comparison per row).
     // Mins/maxes cast to double (exact for BIGINT keys and parquet
     // doubles — no float seam).
-    "q_table_stats" -> ((s, d) => {
+    Query("q_table_stats", (s, d) => {
       val ndvCols = Seq("l_linenumber", "l_partkey", "l_suppkey",
         "l_quantity", "l_discount", "l_tax")
       val cols = ndvCols :+ "l_extendedprice"
@@ -1334,7 +1922,22 @@ object AnalyticsQueries {
           col("st.n_null").as("n_null"), col("st.n_distinct").as("n_distinct"),
           col("st.min_v").as("min_v"), col("st.max_v").as("max_v"))
         .orderBy(col("col_name"))
-    }),
+    }, Sql(
+      // generated per-column UNION ALL — the oracle may scan 7×; the
+      // engine side must not (see the query comment). NULL NDV for the
+      // near-unique price column mirrors the engine's bounded-NDV policy.
+      (Seq("l_linenumber", "l_partkey", "l_suppkey",
+        "l_quantity", "l_discount", "l_tax", "l_extendedprice")
+      .map { c =>
+        val nd = if (c == "l_extendedprice") "CAST(NULL AS BIGINT)"
+                 else s"COUNT(DISTINCT $c)"
+        s"""SELECT '$c' AS col_name, COUNT(*) AS n_rows,
+           |  COUNT(*) - COUNT($c) AS n_null,
+           |  $nd AS n_distinct,
+           |  CAST(MIN($c) AS DOUBLE) AS min_v,
+           |  CAST(MAX($c) AS DOUBLE) AS max_v
+           |FROM lineitem""".stripMargin }
+      .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")))),
 
     // Equi-width column histogram — the other half of the ANALYZE stats
     // pass (q_table_stats): 16 bins over [min, max] of l_extendedprice,
@@ -1344,7 +1947,7 @@ object AnalyticsQueries {
     // shuffled once (16-row aggregate). Bin math is pure IEEE double
     // arithmetic (sub / divide-by-16 / floor), bitwise identical on
     // both engines, and the top bin absorbs x = max via LEAST.
-    "q_col_histogram" -> ((s, d) => {
+    Query("q_col_histogram", (s, d) => {
       val bins = 16
       val li = t(s, d, "lineitem").select(col("l_extendedprice").as("x"))
       val bounds = li.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
@@ -1363,7 +1966,19 @@ object AnalyticsQueries {
           round(min(col("x")), 6).as("bin_min"),
           round(max(col("x")), 6).as("bin_max"))
         .orderBy(col("bin"))
-    }),
+    }, Sql(
+      """WITH b AS (
+        |  SELECT MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
+        |  FROM lineitem
+        |)
+        |SELECT CASE WHEN hi = lo THEN CAST(0 AS BIGINT)
+        |       ELSE CAST(LEAST(FLOOR((l_extendedprice - lo) / ((hi - lo) / 16.0)),
+        |         15) AS BIGINT) END AS bin,
+        |  COUNT(*) AS n,
+        |  ROUND(MIN(l_extendedprice), 6) AS bin_min,
+        |  ROUND(MAX(l_extendedprice), 6) AS bin_max
+        |FROM lineitem, b
+        |GROUP BY 1 ORDER BY bin""".stripMargin)),
 
     // Equi-DEPTH (equi-height) histogram — the histogram real ANALYZE
     // implementations keep (per-bucket row count is bounded BY
@@ -1377,7 +1992,7 @@ object AnalyticsQueries {
     // 16-row output. Ties broken by the (orderkey, linenumber) unique
     // key so the rank relation — and therefore every bucket boundary —
     // is deterministic cross-engine; money as integer cents.
-    "q_histogram_eqdepth" -> ((s, d) => {
+    Query("q_histogram_eqdepth", (s, d) => {
       val rows = t(s, d, "lineitem").select(
         cents(col("l_extendedprice")).as("price_c"),
         col("l_orderkey"), col("l_linenumber"))
@@ -1387,7 +2002,18 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n"), min(col("price_c")).as("lo_c"),
           max(col("price_c")).as("hi_c"))
         .orderBy(col("bucket"))
-    }),
+    }, Sql(
+      // same NTILE definition (first rem tiles get base+1 rows); the
+      // unique tie-break key makes the rank — and every boundary — exact
+      """WITH r AS (
+        |  SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price_c,
+        |    NTILE(16) OVER (ORDER BY CAST(ROUND(l_extendedprice * 100) AS BIGINT),
+        |                    l_orderkey, l_linenumber) AS bucket
+        |  FROM lineitem
+        |)
+        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n,
+        |  MIN(price_c) AS lo_c, MAX(price_c) AS hi_c
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // RFM customer segmentation (the classic marketing cube): per
     // customer recency (latest order date), frequency (order count),
@@ -1399,7 +2025,7 @@ object AnalyticsQueries {
     // curriculum lesson) — with a total order (metric desc, custkey)
     // so tile boundaries are deterministic cross-engine; the oracle's
     // NTILE over the same ORDER BY computes the identical tiling.
-    "q_rfm_segments" -> ((s, d) => {
+    Query("q_rfm_segments", (s, d) => {
       val per = t(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate").cast("date")).as("last_order"),
@@ -1415,7 +2041,28 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_customers"),
           sum(col("monetary_c")).as("monetary_c"))
         .orderBy(col("r_tile"), col("f_tile"), col("m_tile"))
-    }),
+    }, Sql(
+      """WITH per AS (
+        |  SELECT o_custkey, MAX(CAST(o_orderdate AS DATE)) AS last_order,
+        |    COUNT(*) AS frequency,
+        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |      AS monetary_c
+        |  FROM orders GROUP BY 1
+        |),
+        |tiles AS (
+        |  SELECT monetary_c,
+        |    CAST(NTILE(5) OVER (ORDER BY last_order DESC, o_custkey) AS BIGINT)
+        |      AS r_tile,
+        |    CAST(NTILE(5) OVER (ORDER BY frequency DESC, o_custkey) AS BIGINT)
+        |      AS f_tile,
+        |    CAST(NTILE(5) OVER (ORDER BY monetary_c DESC, o_custkey) AS BIGINT)
+        |      AS m_tile
+        |  FROM per
+        |)
+        |SELECT r_tile, f_tile, m_tile, COUNT(*) AS n_customers,
+        |  CAST(SUM(monetary_c) AS BIGINT) AS monetary_c
+        |FROM tiles GROUP BY 1, 2, 3
+        |ORDER BY r_tile, f_tile, m_tile""".stripMargin)),
 
     // Deterministic random-walk corpus (the DeepWalk/node2vec sampler
     // over the co-purchase graph): 2 walks × 4 steps from the 20
@@ -1425,10 +2072,11 @@ object AnalyticsQueries {
     // HUGEINT twin (the q_minhash_sigs discipline applied to graph
     // sampling). Graph.randomWalks owns the scale shape: adjacency
     // built once + checkpointed, walk-sized relations per fixed step.
-    "q_random_walks" -> ((s, d) =>
+    Query("q_random_walks", (s, d) =>
       graft.operators.Graph.randomWalks(coPurchaseEdges(s, d),
         nStarts = 20, nWalks = 2, walkLen = 4, seed = 42)
-        .orderBy(col("start"), col("w"), col("step"), col("node"))),
+        .orderBy(col("start"), col("w"), col("step"), col("node")),
+      Sql(walkOracle)),
 
     // Deterministic label propagation (3 synchronous mode-update rounds
     // over the co-purchase graph; ties → min label, which is what makes
@@ -1436,10 +2084,11 @@ object AnalyticsQueries {
     // integers; Graph.lpaSteps owns the scale shape (per round one
     // label join + one (node,label) count + one degree-bounded window,
     // labels checkpointed; Guarded fast path under the edge guard).
-    "q_lpa_communities" -> ((s, d) =>
+    Query("q_lpa_communities", (s, d) =>
       graft.operators.Graph.lpaSteps(coPurchaseEdges(s, d), rounds = 3)
         .groupBy(col("label")).agg(count(lit(1)).as("n_members"))
-        .orderBy(col("label"))),
+        .orderBy(col("label")),
+      Sql(lpaOracle)),
 
     // Skip-gram co-occurrence + PMI over the deterministic walks — the
     // second half of the DeepWalk pipeline (the (center, context)
@@ -1449,7 +2098,7 @@ object AnalyticsQueries {
     // PMI = ln(n·total / (n_center·n_context)) is the single float
     // seam (one division + one ln, mirrored op-for-op; the q_lm_score
     // cross-engine log convention). Walk-sized relations throughout.
-    "q_walk_skipgrams" -> ((s, d) => {
+    Query("q_walk_skipgrams", (s, d) => {
       val visits = graft.operators.Graph.randomWalks(coPurchaseEdges(s, d),
         nStarts = 20, nWalks = 2, walkLen = 4, seed = 42)
         .localCheckpoint(true) // self-joined: both sides read it
@@ -1471,7 +2120,23 @@ object AnalyticsQueries {
           round(log((col("n") * col("tot")).cast("double") /
             (col("n_c") * col("n_x")).cast("double")), 6).as("pmi_r"))
         .orderBy(col("center"), col("context"))
-    }),
+    }, Sql(
+      // the replayed walks feed the same windowed pair count + marginals
+      s"""WITH $walkCte,
+         |pr AS (
+         |  SELECT a.node AS center, b.node AS context, COUNT(*) AS n
+         |  FROM visits a JOIN visits b
+         |    ON a.start = b.start AND a.w = b.w
+         |   AND a.step <> b.step AND abs(a.step - b.step) <= 2
+         |  GROUP BY 1, 2),
+         |tot AS (SELECT SUM(n) AS tot FROM pr),
+         |cm AS (SELECT center, SUM(n) AS n_c FROM pr GROUP BY center),
+         |xm AS (SELECT context, SUM(n) AS n_x FROM pr GROUP BY context)
+         |SELECT p.center, p.context, p.n,
+         |  ROUND(ln(CAST(p.n * t.tot AS DOUBLE) /
+         |    CAST(c.n_c * x.n_x AS DOUBLE)), 6) AS pmi_r
+         |FROM pr p JOIN cm c USING (center) JOIN xm x USING (context), tot t
+         |ORDER BY center, context""".stripMargin)),
 
     // Pairwise Pearson correlation matrix from EXACT integer moments
     // (the other ANALYZE artifact next to q_table_stats — the CBO/
@@ -1485,7 +2150,7 @@ object AnalyticsQueries {
     // aggregate (partition-merge order wobbles the low bits, so a
     // CPUS=3 vs 8 sweep can flip a 6dp round), exact moments make the
     // result a deterministic pure function of the data.
-    "q_corr_matrix" -> ((s, d) => {
+    Query("q_corr_matrix", (s, d) => {
       val names = Seq("qty", "price", "disc", "tax")
       val li = t(s, d, "lineitem").select(
         col("l_quantity").cast("long").as("qty"),
@@ -1514,7 +2179,7 @@ object AnalyticsQueries {
         .select(col("p.col_a").as("col_a"), col("p.col_b").as("col_b"),
           col("p.corr_r").as("corr_r"))
         .orderBy(col("col_a"), col("col_b"))
-    }),
+    }, Sql(corrMatrixOracle)),
 
     // Skyline / Pareto frontier (the multi-objective "best tradeoffs"
     // query — cheapest part for each size class you can't beat on both
@@ -1526,12 +2191,27 @@ object AnalyticsQueries {
     // oracle computes the same strictly-increasing-y envelope with
     // DuckDB's running max (its single-node window IS the textbook
     // form — fine for an oracle, wrong for the engine).
-    "q_skyline" -> ((s, d) => {
+    Query("q_skyline", (s, d) => {
       val pts = t(s, d, "part").select(
         cents(col("p_retailprice")).as("price_c"),
         col("p_size").cast("long").as("size"))
       graft.operators.Pareto.skyline2d(pts, "price_c", "size")
-    }),
+    }, Sql(
+      // after the x-tie collapse the skyline is exactly the rows whose y
+      // strictly beats the running max over ascending x — the oracle may
+      // use the single-node window the engine must not
+      """WITH pts AS (
+        |  SELECT CAST(ROUND(p_retailprice * 100) AS BIGINT) AS price_c,
+        |    CAST(MAX(p_size) AS BIGINT) AS size
+        |  FROM part GROUP BY 1
+        |), w AS (
+        |  SELECT price_c, size, MAX(size) OVER (ORDER BY price_c
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx
+        |  FROM pts
+        |)
+        |SELECT price_c, size FROM w
+        |WHERE mx IS NULL OR size > mx
+        |ORDER BY price_c""".stripMargin)),
 
     // OPTIMIZE/compaction report (the warehouse-maintenance planning
     // query next to q_mv_refresh/q_scd2/q_table_stats; pairs with
@@ -1551,7 +2231,7 @@ object AnalyticsQueries {
     // source over ~|files/source| rows — never a single-partition
     // stage; everything downstream of the first groupBy is file-count
     // sized. All integer arithmetic — no float seam.
-    "q_compaction_plan" -> ((s, d) => {
+    Query("q_compaction_plan", (s, d) => {
       val target = 4000L // output-file byte quota; T/2 = small-file line
       val manifest = t(s, d, "documents")
         .groupBy(col("source"), pmod(col("doc_id"), lit(20L)).as("file_id"))
@@ -1578,7 +2258,35 @@ object AnalyticsQueries {
             max(col("bin_bytes")).as("max_output_bytes")),
           Seq("source"))
         .orderBy(col("source"))
-    }),
+    }, Sql(
+      """WITH manifest AS (
+        |  SELECT source, doc_id % 20 AS file_id,
+        |    CAST(SUM(n_chars) AS BIGINT) AS bytes
+        |  FROM documents GROUP BY source, doc_id % 20
+        |), planned AS (
+        |  SELECT source, file_id, bytes,
+        |    SUM(bytes) OVER (PARTITION BY source ORDER BY file_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM manifest
+        |), binned AS (
+        |  SELECT *, CAST(FLOOR((GREATEST(cum, 1) - 1) / 4000.0) AS BIGINT) AS bin
+        |  FROM planned
+        |), bins AS (
+        |  SELECT source, bin, CAST(SUM(bytes) AS BIGINT) AS bin_bytes
+        |  FROM binned GROUP BY source, bin
+        |), per_source AS (
+        |  SELECT source, COUNT(*) AS n_files,
+        |    CAST(SUM(CASE WHEN bytes < 2000 THEN 1 ELSE 0 END) AS BIGINT) AS n_small,
+        |    CAST(SUM(bytes) AS BIGINT) AS total_bytes
+        |  FROM binned GROUP BY source
+        |)
+        |SELECT p.source, p.n_files, p.n_small, p.total_bytes,
+        |  b.n_output_files, b.max_output_bytes
+        |FROM per_source p JOIN (
+        |  SELECT source, COUNT(*) AS n_output_files,
+        |    CAST(MAX(bin_bytes) AS BIGINT) AS max_output_bytes
+        |  FROM bins GROUP BY source) b USING (source)
+        |ORDER BY p.source""".stripMargin)),
 
     // Constraint-drift diff across two epochs (the data-quality twin of
     // q_source_drift, pointed at WAREHOUSE invariants instead of corpus
@@ -1590,7 +2298,7 @@ object AnalyticsQueries {
     // sized. Means/shares are ExactRatio.ratio6 (exact integer 6-dp
     // rounding — no ROUND(DOUBLE) anywhere); drift computed FROM those
     // bit-identical values with det6, so no library-round seam remains.
-    "q_dq_drift" -> ((s, d) => {
+    Query("q_dq_drift", (s, d) => {
       val cutoff = to_date(lit("1996-01-01"))
       val byEpoch = t(s, d, "orders")
         .withColumn("epoch",
@@ -1635,7 +2343,50 @@ object AnalyticsQueries {
         .select(col("m.metric").as("metric"), col("m.epoch_a").as("epoch_a"),
           col("m.epoch_b").as("epoch_b"), col("m.rel_drift").as("rel_drift"))
         .orderBy(col("metric"))
-    }),
+    }, Sql(
+      s"""WITH e AS (
+        |  SELECT CASE WHEN CAST(o_orderdate AS DATE) < DATE '1996-01-01'
+        |           THEN 'a' ELSE 'b' END AS epoch,
+        |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c,
+        |    o_custkey, o_orderstatus
+        |  FROM orders
+        |), g AS (
+        |  SELECT epoch, COUNT(*) AS n_rows,
+        |    CAST(SUM(price_c) AS BIGINT) AS sum_c,
+        |    MIN(price_c) AS min_c, MAX(price_c) AS max_c,
+        |    COUNT(DISTINCT o_custkey) AS ndv_cust,
+        |    CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f
+        |  FROM e GROUP BY epoch
+        |), w AS (
+        |  SELECT
+        |    MAX(CASE WHEN epoch='a' THEN n_rows END) AS rows_a,
+        |    MAX(CASE WHEN epoch='b' THEN n_rows END) AS rows_b,
+        |    ${ratio6Sql("MAX(CASE WHEN epoch='a' THEN sum_c END)",
+                         "MAX(CASE WHEN epoch='a' THEN n_rows END)")} AS mean_a,
+        |    ${ratio6Sql("MAX(CASE WHEN epoch='b' THEN sum_c END)",
+                         "MAX(CASE WHEN epoch='b' THEN n_rows END)")} AS mean_b,
+        |    MAX(CASE WHEN epoch='a' THEN min_c END) AS min_a,
+        |    MAX(CASE WHEN epoch='b' THEN min_c END) AS min_b,
+        |    MAX(CASE WHEN epoch='a' THEN max_c END) AS max_a,
+        |    MAX(CASE WHEN epoch='b' THEN max_c END) AS max_b,
+        |    MAX(CASE WHEN epoch='a' THEN ndv_cust END) AS ndv_a,
+        |    MAX(CASE WHEN epoch='b' THEN ndv_cust END) AS ndv_b,
+        |    ${ratio6Sql("MAX(CASE WHEN epoch='a' THEN n_f END)",
+                         "MAX(CASE WHEN epoch='a' THEN n_rows END)")} AS f_a,
+        |    ${ratio6Sql("MAX(CASE WHEN epoch='b' THEN n_f END)",
+                         "MAX(CASE WHEN epoch='b' THEN n_rows END)")} AS f_b
+        |  FROM g
+        |), m AS (
+        |  SELECT 'n_rows' AS metric, CAST(rows_a AS DOUBLE) AS epoch_a, CAST(rows_b AS DOUBLE) AS epoch_b FROM w
+        |  UNION ALL SELECT 'price_mean_c', mean_a, mean_b FROM w
+        |  UNION ALL SELECT 'price_min_c', CAST(min_a AS DOUBLE), CAST(min_b AS DOUBLE) FROM w
+        |  UNION ALL SELECT 'price_max_c', CAST(max_a AS DOUBLE), CAST(max_b AS DOUBLE) FROM w
+        |  UNION ALL SELECT 'ndv_custkey', CAST(ndv_a AS DOUBLE), CAST(ndv_b AS DOUBLE) FROM w
+        |  UNION ALL SELECT 'f_status_share', f_a, f_b FROM w
+        |)
+        |SELECT metric, epoch_a, epoch_b,
+        |  ${det6Sql("ABS(epoch_b - epoch_a) / GREATEST(ABS(epoch_a), 1e-9)")} AS rel_drift
+        |FROM m ORDER BY metric""".stripMargin)),
 
     // Sorted-neighborhood fuzzy matching (Hernández/Stolfo SNM): the
     // third candidate-generation discipline of the entity-resolution
@@ -1656,7 +2407,7 @@ object AnalyticsQueries {
     // sorting a corpus-share that grows linearly (the r11 verdict
     // finding). Scores via the codegen'd Jaro-Winkler, 6dp-rounded on
     // both engines before the threshold compare.
-    "q_fuzzy_snm" -> ((s, d) => {
+    Query("q_fuzzy_snm", (s, d) => {
       val names = t(s, d, "part").select(col("p_name")).distinct()
         .withColumn("block", element_at(split(col("p_name"), " "), -1))
       val pairs = graft.operators.SortedNeighborhood.pairs(
@@ -1666,7 +2417,27 @@ object AnalyticsQueries {
         .filter(col("jw_r") >= 0.9)
         .select(col("block"), col("a"), col("b"), col("jw_r"))
         .orderBy(col("a"), col("b"))
-    }),
+    }, Sql(
+      """WITH n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part
+        |), r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n
+        |), cand AS (
+        |  SELECT a.block, a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b
+        |    ON a.block = b.block AND b.rn - a.rn BETWEEN 1 AND 4
+        |), scored AS (
+        |  SELECT block, a, b,
+        |    ROUND(jaro_winkler_similarity(a, b), 6) AS jw_r
+        |  FROM cand
+        |)
+        |SELECT block, a, b, jw_r FROM scored
+        |WHERE jw_r >= 0.9
+        |ORDER BY a, b""".stripMargin)),
 
     // HITS hubs & authorities on the DIRECTED customer→supplier trade
     // graph (q_pagerank's relation without the symmetrizing union):
@@ -1679,7 +2450,8 @@ object AnalyticsQueries {
     // oracle is a GENERATED unrolled CTE mirroring the exact arithmetic,
     // so the iteration math is witnessed end-to-end; scores rounded 6dp
     // (double-sum addition-order seam, SCALING.md contract).
-    "q_hits" -> ((s, d) => hitsFull(s, d, localThreshold = 2000000L)),
+    Query("q_hits", (s, d) => hitsFull(s, d, localThreshold = 2000000L),
+      Sql(hitsOracle)),
 
     // k-hop BFS frontiers from a seed segment (the graph
     // feature-engineering primitive: "what does this cohort reach in k
@@ -1692,7 +2464,7 @@ object AnalyticsQueries {
     // graph sides alternate, so the subtraction only ever compares
     // same-typed frontiers. Output: per-hop distinct node counts (the
     // reach curve) — 3 rows.
-    "q_khop" -> ((s, d) => {
+    Query("q_khop", (s, d) => {
       val o = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
       val l = t(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       // Eager localCheckpoints on every multiply-consumed relation (the
@@ -1715,18 +2487,14 @@ object AnalyticsQueries {
       // the edge build and the seed set are independent eager pins —
       // overlap them from two driver threads (guide §2.6, the
       // q_lsh_recall pattern); the hop chain itself is sequential
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val csF = Future(o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s")).distinct()
-        .localCheckpoint(true))
-      val seedsF = Future(bcast(t(s, d, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey").as("c")).distinct()
-        .localCheckpoint(true)))
-      val cs = Await.result(csF, Duration.Inf)
-      val seeds = Await.result(seedsF, Duration.Inf)
+      val Seq(cs, seeds) = graft.operators.Guarded.pinAll(s)(Seq(
+        () => o.join(l, col("o_orderkey") === col("l_orderkey"))
+          .select(col("o_custkey").as("c"), col("l_suppkey").as("s")).distinct()
+          .localCheckpoint(true),
+        () => bcast(t(s, d, "customer")
+          .filter(col("c_mktsegment") === "BUILDING")
+          .select(col("c_custkey").as("c")).distinct()
+          .localCheckpoint(true))))
       val hop1 = bcast(cs.join(seeds, Seq("c")).select(col("s")).distinct()
         .localCheckpoint(true))
       val hop2 = bcast(cs.join(hop1, Seq("s")).select(col("c")).distinct()
@@ -1739,7 +2507,28 @@ object AnalyticsQueries {
           .select(col("hop"), col("n_nodes"))
       agg(hop1, 1).unionAll(agg(hop2, 2)).unionAll(agg(hop3, 3))
         .orderBy(col("hop"))
-    }),
+    }, Sql(
+      """WITH cs AS (
+        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |), seeds AS (
+        |  SELECT DISTINCT c_custkey AS c FROM customer
+        |  WHERE c_mktsegment = 'BUILDING'
+        |), hop1 AS (
+        |  SELECT DISTINCT s FROM cs JOIN seeds USING (c)
+        |), hop2 AS (
+        |  SELECT DISTINCT c FROM cs JOIN hop1 USING (s)
+        |  WHERE c NOT IN (SELECT c FROM seeds)
+        |), hop3 AS (
+        |  SELECT DISTINCT s FROM cs JOIN hop2 USING (c)
+        |  WHERE s NOT IN (SELECT s FROM hop1)
+        |)
+        |SELECT CAST(1 AS BIGINT) AS hop, COUNT(*) AS n_nodes FROM hop1
+        |UNION ALL
+        |SELECT 2, COUNT(*) FROM hop2
+        |UNION ALL
+        |SELECT 3, COUNT(*) FROM hop3
+        |ORDER BY hop""".stripMargin)),
 
     // Weighted shortest paths (4 Bellman-Ford relaxation rounds) from
     // the BUILDING-segment customers over the symmetric trade graph,
@@ -1757,7 +2546,8 @@ object AnalyticsQueries {
     // (edges checkpointed + pre-partitioned once, frontier-sized
     // relations per round, guarded broadcast, driver fast path under
     // the measured-edge guard).
-    "q_sssp" -> ((s, d) => ssspFull(s, d, localThreshold = 2000000L)),
+    Query("q_sssp", (s, d) => ssspFull(s, d, localThreshold = 2000000L),
+      Sql(ssspOracle)),
 
     // End-to-end entity resolution (the MDM master-data flow): block →
     // score (codegen'd Jaro-Winkler) → match (threshold) → CLUSTER
@@ -1770,14 +2560,49 @@ object AnalyticsQueries {
     // descending-edge trick only works on chain-shaped pair relations —
     // min-over-descending-paths is NOT the component min on general
     // graphs).
-    "q_er_clusters" -> ((s, d) => {
+    Query("q_er_clusters", (s, d) => {
       val matched = jwMatches(s, d)
         .select(col("a").as("id_a"), col("b").as("id_b"))
       graft.operators.Dedup.connectedComponents(matched)
         .groupBy(col("comp").as("golden_name"))
         .agg(count(lit(1)).as("n_members"), max(col("id")).as("last_member"))
         .orderBy(col("golden_name"))
-    }),
+    }, Sql(
+      // same blocked-JW match relation as q_fuzzy_jw, closed with a
+      // cycle-safe recursive UNION (the undirected match graph may have
+      // cycles; UNION's dedup terminates the fixpoint)
+      """WITH RECURSIVE n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part
+        |), r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n
+        |), cand AS (
+        |  SELECT a.block, a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+        |  WHERE a.rn <= 1000 AND b.rn <= 1000
+        |  UNION ALL
+        |  SELECT o.block, m.p_name AS a, o.p_name AS b
+        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+        |  WHERE o.rn > 1000
+        |), m AS (
+        |  SELECT a, b FROM cand
+        |  WHERE ROUND(jaro_winkler_similarity(a, b), 6) >= 0.9
+        |), e AS (
+        |  SELECT a AS src, b AS dst FROM m
+        |  UNION ALL SELECT b AS src, a AS dst FROM m
+        |), reach(id, cur) AS (
+        |  SELECT src, src FROM e
+        |  UNION
+        |  SELECT re.id, e.dst FROM reach re JOIN e ON re.cur = e.src
+        |), lab AS (
+        |  SELECT id, MIN(cur) AS comp FROM reach GROUP BY id
+        |)
+        |SELECT comp AS golden_name, COUNT(*) AS n_members,
+        |  MAX(id) AS last_member
+        |FROM lab GROUP BY comp ORDER BY golden_name""".stripMargin)),
 
     // Winsorized robust scaling (the outlier-tolerant feature-prep pass:
     // clip to [p01, p99], report the clipped mean + the IQR dispersion):
@@ -1793,7 +2618,7 @@ object AnalyticsQueries {
     // (p75−p25), not stddev: a Welford-merge stddev over price-scale
     // values diverges cross-engine below 6dp, while IQR rides the same
     // percentile parity as the bounds.
-    "q_winsorize" -> ((s, d) => {
+    Query("q_winsorize", (s, d) => {
       // widen + pin: both passes below are per-row CPU (percentile
       // buffer insert, clip+agg) and consume this relation once each —
       // on the single-file fixture the percentile map side ran on the
@@ -1833,7 +2658,34 @@ object AnalyticsQueries {
           ratio6(sum(col("wv")), count(lit(1))).as("mean_w"),
           round(min(col("iqr")), 6).as("iqr_r"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      // bounds round to integer cents, so everything after the percentile
+      // interpolation is exact integer math on both engines (see the query)
+      s"""WITH li AS (
+        |  SELECT l_returnflag,
+        |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS pc
+        |  FROM lineitem
+        |), b AS (
+        |  SELECT l_returnflag,
+        |    CAST(ROUND(CAST(quantile_cont(pc, 0.01) AS DOUBLE), 0) AS BIGINT) AS lo_c,
+        |    CAST(ROUND(CAST(quantile_cont(pc, 0.99) AS DOUBLE), 0) AS BIGINT) AS hi_c,
+        |    CAST(quantile_cont(pc, 0.75) AS DOUBLE)
+        |      - CAST(quantile_cont(pc, 0.25) AS DOUBLE) AS iqr
+        |  FROM li GROUP BY 1
+        |), w AS (
+        |  SELECT li.l_returnflag,
+        |    LEAST(GREATEST(pc, lo_c), hi_c) AS wv,
+        |    CASE WHEN pc < lo_c THEN 1 ELSE 0 END AS cl,
+        |    CASE WHEN pc > hi_c THEN 1 ELSE 0 END AS ch,
+        |    lo_c, hi_c, iqr
+        |  FROM li JOIN b ON li.l_returnflag = b.l_returnflag
+        |)
+        |SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(cl) AS BIGINT) AS n_lo, CAST(SUM(ch) AS BIGINT) AS n_hi,
+        |  MIN(lo_c) AS lo_c, MIN(hi_c) AS hi_c,
+        |  ${ratio6Sql("SUM(wv)", "COUNT(*)")} AS mean_w,
+        |  ROUND(MIN(iqr), 6) AS iqr_r
+        |FROM w GROUP BY 1 ORDER BY l_returnflag""".stripMargin)),
 
     // Link prediction over the co-purchase graph (the "complete the
     // graph" primitive behind co-buy recommendations and knowledge-graph
@@ -1847,16 +2699,21 @@ object AnalyticsQueries {
     // engine folds it in sorted order (sort_array + aggregate HOF) —
     // partition-count-independent bit-identical output; the oracle's
     // single-node SUM differs only below the 6dp contract.
-    "q_link_predict" -> ((s, d) =>
+    Query("q_link_predict", (s, d) =>
       linkScores(s, d)
-        .orderBy(col("cn").desc, col("u"), col("w")).limit(50)),
+        .orderBy(col("cn").desc, col("u"), col("w")).limit(50),
+      Sql(
+      // full link-scored relation, top-50 by common-neighbor count
+      s"""WITH $linkCte
+         |SELECT u, w, cn, aa_r, jacc_r FROM lnk
+         |ORDER BY cn DESC, u, w LIMIT 50""".stripMargin)),
 
     // per-node top-3 link recommendations from the same scored relation
     // (ONE definition shared with q_link_predict): both directions,
     // window partitioned by node — parallelism grows with |nodes|, and
     // ties broken on the ROUNDED score + partner id so the rank is
     // cross-engine deterministic.
-    "q_link_recs" -> ((s, d) => {
+    Query("q_link_recs", (s, d) => {
       // both directions via ONE explode, not a self-union — a union
       // would compute the whole wedge-join plan twice (no exchange
       // reuse across the differing projections; measured 4.8 s vs
@@ -1872,14 +2729,27 @@ object AnalyticsQueries {
       both.withColumn("rnk", row_number().over(wtop).cast("long"))
         .filter(col("rnk") <= 3)
         .orderBy(col("node"), col("rnk"))
-    }),
+    }, Sql(
+      // per-node top-3 by (rounded AA, partner) over the same relation
+      s"""WITH $linkCte,
+         |both_dirs AS (
+         |  SELECT u AS node, w AS partner, aa_r FROM lnk
+         |  UNION ALL
+         |  SELECT w AS node, u AS partner, aa_r FROM lnk),
+         |rk AS (
+         |  SELECT node, partner, aa_r,
+         |    ROW_NUMBER() OVER (PARTITION BY node
+         |      ORDER BY aa_r DESC, partner) AS rnk
+         |  FROM both_dirs)
+         |SELECT node, partner, aa_r, rnk FROM rk WHERE rnk <= 3
+         |ORDER BY node, rnk""".stripMargin)),
 
     // Exact-moments OLS per group (y = extendedprice cents on
     // x = quantity): slope/intercept/R² from DECIMAL(38,0) integer
     // moments — the q_corr_matrix discipline — so the sums are
     // partitioning-independent and the only float ops are the final
     // divisions, written in the SAME order on both engines.
-    "q_ols_fit" -> ((s, d) => {
+    Query("q_ols_fit", (s, d) => {
       val li = t(s, d, "lineitem").select(col("l_returnflag"),
         col("l_quantity").cast("long").as("x"),
         cents(col("l_extendedprice")).as("y"))
@@ -1906,14 +2776,44 @@ object AnalyticsQueries {
           det6(sxyc.cast("double") * sxyc.cast("double") /
             (sxxc.cast("double") * syyc.cast("double"))).as("r2_r"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      // exact decimal moments, float only at the final divisions — the
+      // centered moments EXACT in HUGEINT (mirrors the engine's exact
+      // DECIMAL(38,0) — DuckDB would silently fall back to DOUBLE on a
+      // >38-width decimal product); slope/intercept via sratio6 (exact
+      // integer 6-dp rounding), r² via det6 on the identical double chain
+      s"""WITH li AS (
+        |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS x,
+        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y
+        |  FROM lineitem),
+        |m AS (
+        |  SELECT l_returnflag,
+        |    CAST(COUNT(*) AS HUGEINT) AS n,
+        |    CAST(SUM(CAST(x AS DECIMAL(38,0))) AS HUGEINT) AS sx,
+        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) AS HUGEINT) AS sy,
+        |    CAST(SUM(CAST(x*x AS DECIMAL(38,0))) AS HUGEINT) AS sxx,
+        |    CAST(SUM(CAST(x*y AS DECIMAL(38,0))) AS HUGEINT) AS sxy,
+        |    CAST(SUM(CAST(y*y AS DECIMAL(38,0))) AS HUGEINT) AS syy
+        |  FROM li GROUP BY 1),
+        |c AS (
+        |  SELECT l_returnflag, n, sx, sy,
+        |    (n*sxx - sx*sx) AS sxxc,
+        |    (n*sxy - sx*sy) AS sxyc,
+        |    (n*syy - sy*sy) AS syyc
+        |  FROM m)
+        |SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
+        |  ${sratio6Sql("sxyc", "sxxc")} AS slope_r,
+        |  ${sratio6Sql("sy*sxxc - sxyc*sx", "n*sxxc")} AS intercept_r,
+        |  ${det6Sql("CAST(sxyc AS DOUBLE) * CAST(sxyc AS DOUBLE) / " +
+                     "(CAST(sxxc AS DOUBLE) * CAST(syyc AS DOUBLE))")} AS r2_r
+        |FROM c ORDER BY l_returnflag""".stripMargin)),
 
     // Two-regressor OLS (y = price cents ~ quantity + discount cents)
     // via the closed-form 2×2 normal-equation solve over the same exact
     // decimal moments: centered cross-moments stay EXACT integers until
     // one determinant division. R² = (b1·S1y + b2·S2y)/Syy — the
     // explained-variance identity, float only at the end.
-    "q_ols_multi" -> ((s, d) => {
+    Query("q_ols_multi", (s, d) => {
       val li = t(s, d, "lineitem").select(
         col("l_quantity").cast("long").as("x1"),
         cents(col("l_discount")).as("x2"),
@@ -1948,7 +2848,45 @@ object AnalyticsQueries {
           b2 * col("s2").cast("double")) / col("n").cast("double"))
           .as("intercept_r"),
         det6((b1 * c1y + b2 * c2y) / cyy).as("r2_r"))
-    }),
+    }, Sql(
+      s"""WITH li AS (
+        |  SELECT CAST(l_quantity AS BIGINT) AS x1,
+        |    CAST(ROUND(l_discount*100) AS BIGINT) AS x2,
+        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y
+        |  FROM lineitem),
+        |m AS (
+        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+        |    CAST(SUM(CAST(x1 AS DECIMAL(38,0))) AS HUGEINT) AS s1,
+        |    CAST(SUM(CAST(x2 AS DECIMAL(38,0))) AS HUGEINT) AS s2,
+        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) AS HUGEINT) AS sy,
+        |    CAST(SUM(CAST(x1*x1 AS DECIMAL(38,0))) AS HUGEINT) AS s11,
+        |    CAST(SUM(CAST(x1*x2 AS DECIMAL(38,0))) AS HUGEINT) AS s12,
+        |    CAST(SUM(CAST(x2*x2 AS DECIMAL(38,0))) AS HUGEINT) AS s22,
+        |    CAST(SUM(CAST(x1*y AS DECIMAL(38,0))) AS HUGEINT) AS s1y,
+        |    CAST(SUM(CAST(x2*y AS DECIMAL(38,0))) AS HUGEINT) AS s2y,
+        |    CAST(SUM(CAST(y*y AS DECIMAL(38,0))) AS HUGEINT) AS syy
+        |  FROM li),
+        |c AS (
+        |  SELECT n, s1, s2, sy,
+        |    CAST(n*s11 - s1*s1 AS DOUBLE) AS c11,
+        |    CAST(n*s12 - s1*s2 AS DOUBLE) AS c12,
+        |    CAST(n*s22 - s2*s2 AS DOUBLE) AS c22,
+        |    CAST(n*s1y - s1*sy AS DOUBLE) AS c1y,
+        |    CAST(n*s2y - s2*sy AS DOUBLE) AS c2y,
+        |    CAST(n*syy - sy*sy AS DOUBLE) AS cyy
+        |  FROM m),
+        |b AS (
+        |  SELECT n, s1, s2, sy, c1y, c2y, cyy,
+        |    (c22 * c1y - c12 * c2y) / (c11 * c22 - c12 * c12) AS b1,
+        |    (c11 * c2y - c12 * c1y) / (c11 * c22 - c12 * c12) AS b2
+        |  FROM c)
+        |SELECT CAST(n AS BIGINT) AS n_rows,
+        |  ${det6Sql("b1")} AS b1_r, ${det6Sql("b2")} AS b2_r,
+        |  ${det6Sql("(CAST(sy AS DOUBLE) - b1 * CAST(s1 AS DOUBLE) " +
+                     "- b2 * CAST(s2 AS DOUBLE)) / CAST(n AS DOUBLE)")}
+        |    AS intercept_r,
+        |  ${det6Sql("(b1 * c1y + b2 * c2y) / cyy")} AS r2_r
+        |FROM b""".stripMargin)),
 
     // Pearson chi-square independence test (source × lang over the
     // documents table — "is the language mix the same across sources?").
@@ -1958,21 +2896,74 @@ object AnalyticsQueries {
     // at the per-cell division, and the final sum folds the ≤domain
     // cells in SORTED order (aggregate HOF) so the statistic is
     // partition-count-independent bit-identical.
-    "q_chi2_independence" -> ((s, d) =>
+    Query("q_chi2_independence", (s, d) =>
       chi2Agg(s, d).select(det6(col("chi2")).as("chi2_r"),
-        ((col("nr") - 1) * (col("nc") - 1)).as("dof"), col("n_total"))),
+        ((col("nr") - 1) * (col("nc") - 1)).as("dof"), col("n_total")),
+      Sql(
+      // per-cell exact DECIMAL numerator, float per-cell division; the
+      // oracle's single-node SUM vs the engine's sorted fold differ only
+      // below the 6dp contract
+      s"""WITH cells AS (
+        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
+        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
+        |      FROM cells GROUP BY 1),
+        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
+        |       FROM cells GROUP BY 1),
+        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
+        |nums AS (
+        |  SELECT c.o, c.source, c.lang,
+        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
+        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
+        |      AS DOUBLE) AS numd,
+        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
+        |    CAST(t.n_total AS DOUBLE) AS ntd
+        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
+        |terms AS (
+        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
+        |  FROM nums)
+        |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
+        |  (COUNT(DISTINCT source) - 1) * (COUNT(DISTINCT lang) - 1) AS dof,
+        |  CAST(SUM(o) AS BIGINT) AS n_total
+        |FROM terms""".stripMargin)),
 
     // Cramér's V effect size from the SAME chi² chain ([[chi2Agg]] —
     // one definition, the statistic and its normalization can't drift):
     // V = √(χ² / (n·(min(r,c) − 1))), the one extra double chain over
     // exact integers, det6.
-    "q_cramers_v" -> ((s, d) =>
+    Query("q_cramers_v", (s, d) =>
       chi2Agg(s, d).select(
         det6(col("chi2")).as("chi2_r"), col("n_total"),
         col("nr"), col("nc"),
         det6(sqrt(col("chi2") /
           (col("n_total") * (least(col("nr"), col("nc")) - 1))
-            .cast("double"))).as("v_r"))),
+            .cast("double"))).as("v_r")),
+      Sql(
+      // the chi2 chain + the extra normalization, same op order
+      s"""WITH cells AS (
+        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
+        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
+        |      FROM cells GROUP BY 1),
+        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
+        |       FROM cells GROUP BY 1),
+        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
+        |nums AS (
+        |  SELECT c.o, c.source, c.lang,
+        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
+        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
+        |      AS DOUBLE) AS numd,
+        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
+        |    CAST(t.n_total AS DOUBLE) AS ntd
+        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
+        |terms AS (
+        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
+        |  FROM nums)
+        |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
+        |  CAST(SUM(o) AS BIGINT) AS n_total,
+        |  COUNT(DISTINCT source) AS nr, COUNT(DISTINCT lang) AS nc,
+        |  ${det6Sql("sqrt(SUM(term) / CAST(SUM(o) * " +
+             "(LEAST(COUNT(DISTINCT source), COUNT(DISTINCT lang)) - 1) " +
+             "AS DOUBLE))")} AS v_r
+        |FROM terms""".stripMargin)),
 
     // Per-cell Pearson residuals for the source×lang contingency (the
     // drill-down q_chi2_independence points at: WHICH cells drive the
@@ -1980,7 +2971,7 @@ object AnalyticsQueries {
     // marginals, residual (O−E)/√E computed as (O·n − r·c)/√(r·c·n) —
     // exact DECIMAL numerator, det6 on the mirrored float tail. Same
     // domain-bounded one-shuffle shape as the test itself.
-    "q_chi2_residuals" -> ((s, d) => {
+    Query("q_chi2_residuals", (s, d) => {
       val cells = Tables.documents(s, d)
         .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
       val rows = cells.groupBy(col("source")).agg(sum(col("o")).as("rtot"))
@@ -1998,20 +2989,43 @@ object AnalyticsQueries {
             sqrt((dec(col("rtot")) * dec(col("ctot"))).cast("double") *
               col("n_total").cast("double"))).as("resid_r"))
         .orderBy(col("source"), col("lang"))
-    }),
+    }, Sql(
+      // exact HUGEINT/DECIMAL numerators; det6 on the mirrored float tail
+      s"""WITH cells AS (
+        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
+        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
+        |      FROM cells GROUP BY 1),
+        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
+        |       FROM cells GROUP BY 1),
+        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells)
+        |SELECT c.source, c.lang, c.o,
+        |  ${ratio6Sql("CAST(r.rtot AS HUGEINT) * cl.ctot", "t.n_total")}
+        |    AS expected_r,
+        |  ${det6Sql(
+             "CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0)) " +
+               "- CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) / " +
+               "sqrt(CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) " +
+               "* CAST(t.n_total AS DOUBLE))")} AS resid_r
+        |FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t
+        |ORDER BY c.source, c.lang""".stripMargin)),
 
     // Degree distribution of the co-purchase graph (the first thing a
     // graph audit plots): per-degree node counts off the shared edge
     // set. Exact integers; one degree aggregate + one domain-bounded
     // histogram shuffle.
-    "q_degree_dist" -> ((s, d) => {
+    Query("q_degree_dist", (s, d) => {
       val e = coPurchaseEdges(s, d)
       val sym = e.select(col("u").as("a"))
         .unionAll(e.select(col("v").as("a")))
       sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
         .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("deg"))
-    }),
+    }, Sql(
+      s"""WITH $coPurchaseCte,
+         |sym AS (SELECT u AS a FROM edges UNION ALL SELECT v FROM edges),
+         |deg AS (SELECT a, COUNT(*) AS deg FROM sym GROUP BY a)
+         |SELECT deg, COUNT(*) AS n_nodes
+         |FROM deg GROUP BY deg ORDER BY deg""".stripMargin)),
 
     // Per-node local clustering coefficient, top-20 (the community-
     // tightness ranking next to q_triangles' global census): triangles
@@ -2020,7 +3034,7 @@ object AnalyticsQueries {
     // the denominator; fixture degrees sit far below the cap so the
     // coefficient is exact there). lcc = 2T/(d(d−1)) — one division on
     // an exact integer pair; cutoff ordered on the ROUNDED value + node.
-    "q_lcc_topk" -> ((s, d) => {
+    Query("q_lcc_topk", (s, d) => {
       val e = coPurchaseEdges(s, d)
       val sym = e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
@@ -2043,7 +3057,32 @@ object AnalyticsQueries {
         .withColumn("lcc_r",
           ratio6(col("t_v") * 2, col("deg") * (col("deg") - 1)))
         .orderBy(col("lcc_r").desc, col("node")).limit(20)
-    }),
+    }, Sql(
+      // the same capped wedge expansion; triangles via EXISTS against the
+      // canonical edge set; 2T/(d(d−1)) on exact integers
+      s"""WITH $coPurchaseCte,
+         |sym AS (SELECT u AS a, v AS b FROM edges
+         |        UNION ALL SELECT v AS a, u AS b FROM edges),
+         |deg AS (SELECT a, COUNT(*) AS deg FROM sym GROUP BY a),
+         |capped_sym AS MATERIALIZED (
+         |  SELECT a, b FROM (
+         |    SELECT a, b, ROW_NUMBER() OVER (PARTITION BY a ORDER BY b) AS rn
+         |    FROM sym) WHERE rn <= 64),
+         |wedges AS (
+         |  SELECT x.a AS mid, x.b AS u, y.b AS w
+         |  FROM capped_sym x JOIN capped_sym y
+         |    ON x.a = y.a AND x.b < y.b),
+         |tri AS (
+         |  SELECT mid, COUNT(*) AS t_v FROM wedges wg
+         |  WHERE EXISTS (SELECT 1 FROM edges e
+         |                WHERE e.u = wg.u AND e.v = wg.w)
+         |  GROUP BY mid)
+         |SELECT d.a AS node, d.deg, COALESCE(t.t_v, 0) AS t_v,
+         |  ${ratio6Sql("COALESCE(t.t_v, 0) * 2", "d.deg * (d.deg - 1)")}
+         |    AS lcc_r
+         |FROM deg d LEFT JOIN tri t ON t.mid = d.a
+         |WHERE d.deg >= 3
+         |ORDER BY lcc_r DESC, node LIMIT 20""".stripMargin)),
 
     // Gini coefficient of revenue concentration (the Lorenz-curve
     // scalar next to q_abc_classes' banding): G = (2·Σ r·x − (n+1)·Σx)
@@ -2051,7 +3090,7 @@ object AnalyticsQueries {
     // from Rank.withGlobalRank (range-partitioned, never a
     // single-partition window), every sum EXACT in DECIMAL(38,0), ONE
     // float at the final division.
-    "q_gini_revenue" -> ((s, d) => {
+    Query("q_gini_revenue", (s, d) => {
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val rev = t(s, d, "lineitem")
         .groupBy(col("l_partkey"))
@@ -2065,7 +3104,27 @@ object AnalyticsQueries {
         .select(col("n").cast("long").as("n_keys"),
           sratio6(lit(2) * col("srx") - (col("n") + 1) * col("sx"),
             col("n") * col("sx")).as("gini_r"))
-    }),
+    }, Sql(
+      // ranks via ROW_NUMBER over the same ascending total order; exact
+      // decimal sums; one division
+      s"""WITH rev AS (
+        |  SELECT l_partkey,
+        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
+        |      AS rev_c
+        |  FROM lineitem GROUP BY 1),
+        |rk AS (
+        |  SELECT rev_c,
+        |    ROW_NUMBER() OVER (ORDER BY rev_c, l_partkey) AS r
+        |  FROM rev),
+        |m AS (
+        |  SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
+        |    SUM(CAST(rev_c AS DECIMAL(38,0))) AS sx,
+        |    SUM(CAST(r AS DECIMAL(38,0)) * CAST(rev_c AS DECIMAL(38,0))) AS srx
+        |  FROM rk)
+        |SELECT CAST(n AS BIGINT) AS n_keys,
+        |  ${sratio6Sql("CAST(2*srx - (n+1)*sx AS HUGEINT)",
+                        "CAST(n*sx AS HUGEINT)")} AS gini_r
+        |FROM m""".stripMargin)),
 
     // Exact weighted median price per return flag (weight = quantity):
     // the per-group weighted order statistic WITHOUT a per-group window
@@ -2075,7 +3134,7 @@ object AnalyticsQueries {
     // group), then the first row where 2·cum_in_group ≥ group_total.
     // Every comparison is integer — the median can't flip on a float
     // boundary.
-    "q_weighted_median" -> ((s, d) => {
+    Query("q_weighted_median", (s, d) => {
       val li = t(s, d, "lineitem").select(col("l_returnflag"),
         cents(col("l_extendedprice")).as("price_c"),
         col("l_quantity").cast("long").as("w"),
@@ -2096,7 +3155,25 @@ object AnalyticsQueries {
           .as("w_total"))
         .select(col("l_returnflag"), col("w_total"), col("wmedian_c"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, Sql(
+      // per-flag cumulative weights (single-node window is fine for the
+      // oracle); integer 2·cum ≥ total threshold
+      """WITH li AS (
+        |  SELECT l_returnflag,
+        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c,
+        |    CAST(l_quantity AS BIGINT) AS w, l_orderkey, l_linenumber
+        |  FROM lineitem),
+        |run AS (
+        |  SELECT l_returnflag, price_c, w,
+        |    SUM(w) OVER (PARTITION BY l_returnflag
+        |      ORDER BY price_c, l_orderkey, l_linenumber
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumg,
+        |    SUM(w) OVER (PARTITION BY l_returnflag) AS tot
+        |  FROM li)
+        |SELECT l_returnflag, CAST(MIN(tot) AS BIGINT) AS w_total,
+        |  MIN(price_c) AS wmedian_c
+        |FROM run WHERE 2 * cumg >= tot
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // ABC / Pareto contribution classes (the 80/20 inventory census:
     // which parts carry 80% / 95% of revenue?): per-key revenue, an
@@ -2107,7 +3184,7 @@ object AnalyticsQueries {
     // and INTEGER threshold comparisons (100·cum ≤ 80·total), so class
     // membership can never flip on a float boundary. One float: the
     // per-class share.
-    "q_abc_classes" -> ((s, d) => {
+    Query("q_abc_classes", (s, d) => {
       val rev = t(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
@@ -2122,7 +3199,31 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_parts"), sum(col("rev_c")).as("rev_c"),
           ratio6(sum(col("rev_c")), lit(total)).as("share_r"))
         .orderBy(col("abc_class"))
-    }),
+    }, Sql(
+      // the textbook running-sum window IS fine for a single-node oracle;
+      // integer thresholds mirror exactly (window SUM is HUGEINT — the
+      // comparisons stay integral)
+      s"""WITH rev AS (
+        |  SELECT l_partkey,
+        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
+        |      AS rev_c
+        |  FROM lineitem GROUP BY 1),
+        |run AS (
+        |  SELECT l_partkey, rev_c,
+        |    SUM(rev_c) OVER (ORDER BY rev_c DESC, l_partkey
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_c,
+        |    SUM(rev_c) OVER () AS tot
+        |  FROM rev),
+        |cls AS (
+        |  SELECT CASE WHEN 100 * cum_c <= 80 * tot THEN 'A'
+        |              WHEN 100 * cum_c <= 95 * tot THEN 'B'
+        |              ELSE 'C' END AS abc_class,
+        |    rev_c, tot
+        |  FROM run)
+        |SELECT abc_class, COUNT(*) AS n_parts,
+        |  CAST(SUM(rev_c) AS BIGINT) AS rev_c,
+        |  ${ratio6Sql("SUM(rev_c)", "MIN(tot)")} AS share_r
+        |FROM cls GROUP BY 1 ORDER BY abc_class""".stripMargin)),
 
     // Truncated closeness/harmonic centrality (multi-seed BFS, radius
     // 3, over the co-purchase graph): per seed the reach set with hop
@@ -2134,7 +3235,7 @@ object AnalyticsQueries {
     // the visited sets; the symmetric edge list is checkpointed once
     // (read by all three hops). Seeds are the 5 smallest node ids —
     // deterministic, no RNG.
-    "q_closeness" -> ((s, d) => {
+    Query("q_closeness", (s, d) => {
       val e = coPurchaseEdges(s, d)
       val sym = e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
@@ -2169,7 +3270,43 @@ object AnalyticsQueries {
           ratio6(col("harm12"), (col("n_nodes") - 1) * 12)
             .as("closeness_r"))
         .orderBy(col("seed"))
-    }),
+    }, Sql(
+      // unrolled 3-hop BFS (the khop/kcore MATERIALIZED discipline);
+      // harmonic sum exact as Σ 12//d
+      s"""WITH $coPurchaseCte,
+         |sym AS (SELECT u AS a, v AS b FROM edges
+         |        UNION ALL SELECT v AS a, u AS b FROM edges),
+         |nodes AS (SELECT DISTINCT a AS node FROM sym),
+         |ng AS (SELECT COUNT(*) AS n_nodes FROM nodes),
+         |seeds AS (SELECT node AS seed FROM nodes ORDER BY node LIMIT 5),
+         |f1 AS MATERIALIZED (
+         |  SELECT s.seed, e.b AS node FROM seeds s JOIN sym e ON e.a = s.seed
+         |  WHERE e.b <> s.seed GROUP BY 1, 2),
+         |f2 AS MATERIALIZED (
+         |  SELECT f.seed, e.b AS node FROM f1 f JOIN sym e ON e.a = f.node
+         |  WHERE e.b <> f.seed
+         |    AND NOT EXISTS (SELECT 1 FROM f1 p
+         |                    WHERE p.seed = f.seed AND p.node = e.b)
+         |  GROUP BY 1, 2),
+         |f3 AS MATERIALIZED (
+         |  SELECT f.seed, e.b AS node FROM f2 f JOIN sym e ON e.a = f.node
+         |  WHERE e.b <> f.seed
+         |    AND NOT EXISTS (SELECT 1 FROM f1 p
+         |                    WHERE p.seed = f.seed AND p.node = e.b)
+         |    AND NOT EXISTS (SELECT 1 FROM f2 p
+         |                    WHERE p.seed = f.seed AND p.node = e.b)
+         |  GROUP BY 1, 2),
+         |allv AS (
+         |  SELECT seed, node, CAST(1 AS BIGINT) AS dist FROM f1
+         |  UNION ALL SELECT seed, node, 2 FROM f2
+         |  UNION ALL SELECT seed, node, 3 FROM f3)
+         |SELECT a.seed, COUNT(*) AS n_reached,
+         |  CAST(SUM(dist) AS BIGINT) AS sum_dist,
+         |  CAST(SUM(12 // dist) AS BIGINT) AS harm12,
+         |  ${ratio6Sql("SUM(12 // dist)", "(g.n_nodes - 1) * 12")}
+         |    AS closeness_r
+         |FROM allv a, ng g GROUP BY a.seed, g.n_nodes
+         |ORDER BY a.seed""".stripMargin)),
 
     // One-way ANOVA F (does mean document length differ across
     // sources?): the variance decomposition SSB/SSW from the SAME exact
@@ -2177,7 +3314,7 @@ object AnalyticsQueries {
     // global Σx², all DECIMAL(38,0). The only floats are the per-group
     // S_g²/n_g terms (folded in SORTED group order — the q_chi2
     // discipline: partition-count-independent) and the final F ratio.
-    "q_anova_f" -> ((s, d) => {
+    Query("q_anova_f", (s, d) => {
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val x = Tables.documents(s, d)
         .select(col("source"), col("n_chars").as("x"))
@@ -2206,14 +3343,40 @@ object AnalyticsQueries {
             ((col("sxx").cast("double") - col("sum_t")) /
               (col("n").cast("double") - col("k_groups").cast("double"))))
             .as("f_r"))
-    }),
+    }, Sql(
+      // exact decimal moments; floats only in the per-group terms and the
+      // final F ratio, op order mirrored
+      s"""WITH x AS (SELECT source, n_chars AS x FROM documents),
+        |g AS (
+        |  SELECT source, CAST(COUNT(*) AS DECIMAL(38,0)) AS n_g,
+        |    SUM(CAST(x AS DECIMAL(38,0))) AS s_g
+        |  FROM x GROUP BY 1),
+        |tt AS (
+        |  SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
+        |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
+        |    SUM(CAST(x*x AS DECIMAL(38,0))) AS sxx
+        |  FROM x),
+        |f AS (
+        |  SELECT COUNT(*) AS k_groups,
+        |    SUM(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE)
+        |      / CAST(n_g AS DOUBLE)) AS sum_t
+        |  FROM g)
+        |SELECT k_groups, CAST(n AS BIGINT) AS n_total,
+        |  ${det6Sql("sum_t - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) " +
+                     "/ CAST(n AS DOUBLE)")} AS ssb_r,
+        |  ${det6Sql("CAST(sxx AS DOUBLE) - sum_t")} AS ssw_r,
+        |  ${det6Sql("((sum_t - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) " +
+                     "/ CAST(n AS DOUBLE)) / CAST(k_groups - 1 AS DOUBLE)) / " +
+                     "((CAST(sxx AS DOUBLE) - sum_t) / " +
+                     "(CAST(n AS DOUBLE) - CAST(k_groups AS DOUBLE)))")} AS f_r
+        |FROM f, tt""".stripMargin)),
 
     // Categorical diversity report (Shannon entropy + Gini impurity +
     // distinct count for the four categorical columns a mixing/audit
     // job profiles): each column is ONE domain-bounded count shuffle;
     // probabilities and the −Σp·ln(p) / Σp² sums fold the ≤domain
     // cells in sorted order. One ln per cell.
-    "q_entropy_report" -> ((s, d) => {
+    Query("q_entropy_report", (s, d) => {
       def ent(df: DataFrame, c: String, label: String): DataFrame = {
         val counts = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("n"))
         val tot = counts.agg(sum(col("n")).as("nt"))
@@ -2239,7 +3402,7 @@ object AnalyticsQueries {
         .unionAll(ent(t(s, d, "orders"), "o_orderpriority",
           "orders.o_orderpriority"))
         .orderBy(col("column_name"))
-    }),
+    }, Sql(entropyOracle)),
 
     // Benford first-digit audit (the fraud/synthetic-data smell test
     // over order totals): leading digit of the cents value vs the
@@ -2247,7 +3410,7 @@ object AnalyticsQueries {
     // (first char of the long's decimal text — identical cross-engine;
     // no float log10 of the value itself), counts are exact, and the
     // two rounded reporting floats are one division and one ln ratio.
-    "q_benford" -> ((s, d) => {
+    Query("q_benford", (s, d) => {
       val digits = t(s, d, "orders")
         .select(substring(cents(col("o_totalprice")).cast("string"), 1, 1)
           .cast("long").as("digit"))
@@ -2259,7 +3422,18 @@ object AnalyticsQueries {
           det6(log(lit(1.0) + lit(1.0) / col("digit").cast("double")) /
             log(lit(10.0))).as("exp_r"))
         .orderBy(col("digit"))
-    }),
+    }, Sql(
+      // string-based digit extraction; exact counts; ln-ratio expectation
+      s"""WITH dg AS (
+        |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice*100) AS BIGINT)
+        |    AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+        |    COUNT(*) AS n_obs
+        |  FROM orders GROUP BY 1),
+        |tt AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS nt FROM dg)
+        |SELECT digit, n_obs,
+        |  ${ratio6Sql("n_obs", "nt")} AS freq_r,
+        |  ${det6Sql("ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0)")} AS exp_r
+        |FROM dg, tt ORDER BY digit""".stripMargin)),
 
     // Two-sample Kolmogorov-Smirnov D (src0 vs src1 n_chars
     // distributions): EXACT end-to-end — per distinct value the cumulative
@@ -2271,7 +3445,7 @@ object AnalyticsQueries {
     // input is first aggregated to the value DOMAIN (distinct n_chars),
     // the q_col_histogram/q_concurrency bounded-domain discipline, so
     // the single task sorts |domain| rows, not |rows|.
-    "q_ks_two_sample" -> ((s, d) => {
+    Query("q_ks_two_sample", (s, d) => {
       val dd = Tables.documents(s, d)
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"), col("n_chars"))
@@ -2304,7 +3478,37 @@ object AnalyticsQueries {
           ratio6(col("d_num"),
             col("n1").cast("decimal(38,0)") * col("n2").cast("decimal(38,0)"))
             .as("d_r"))
-    }),
+    }, Sql(
+      // exact integer D numerator over the value domain; exact ratio6 tail
+      s"""WITH dd AS (
+        |  SELECT source, n_chars FROM documents
+        |  WHERE source IN ('src0', 'src1')),
+        |cells AS (
+        |  SELECT n_chars,
+        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS c2
+        |  FROM dd GROUP BY 1),
+        |cum AS (
+        |  SELECT n_chars,
+        |    SUM(c1) OVER (ORDER BY n_chars
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f1,
+        |    SUM(c2) OVER (ORDER BY n_chars
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f2
+        |  FROM cells),
+        |tot AS (
+        |  SELECT
+        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM dd),
+        |agg AS (
+        |  SELECT n1, n2,
+        |    MAX(CAST(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
+        |      - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
+        |      AS DECIMAL(38,0))) AS d_num
+        |  FROM cum, tot GROUP BY n1, n2)
+        |SELECT n1, n2, CAST(d_num AS BIGINT) AS d_num,
+        |  ${ratio6Sql("d_num", "CAST(n1 AS HUGEINT) * CAST(n2 AS HUGEINT)")} AS d_r
+        |FROM agg""".stripMargin)),
 
     // Mann–Whitney rank-sum test (the nonparametric twin of q_ks: does
     // l_quantity differ between returnflags A and R?) with EXACT
@@ -2314,7 +3518,7 @@ object AnalyticsQueries {
     // in exact DECIMAL — 2U₁ and the tie term Σ(m³−m) are exact
     // integers at any scale. The normal approximation (tie-corrected
     // variance) is the one double chain, mirrored op for op, det6.
-    "q_mann_whitney" -> ((s, d) => {
+    Query("q_mann_whitney", (s, d) => {
       val li = t(s, d, "lineitem")
         .filter(col("l_returnflag").isin("A", "R"))
         .select(col("l_returnflag").as("g"),
@@ -2354,7 +3558,51 @@ object AnalyticsQueries {
         guardedLong(col("u1_x2"), "q_mann_whitney u1_x2").as("u1_x2"),
         guardedLong(col("t_ties"), "q_mann_whitney t_ties").as("t_ties"),
         det6((du1 - mu) / sqrt(vr)).as("z_r"))
-    }),
+    }, Sql(
+      // the same tied-rank identity in HUGEINT; the z chain is the
+      // engine's exact op order (left-assoc products, /2.0 and /12.0
+      // literal divisions)
+      {
+      val du1 = "(CAST(u1_x2 AS DOUBLE) / 2.0)"
+      val n1d = "CAST(n1 AS DOUBLE)"
+      val n2d = "CAST(n2 AS DOUBLE)"
+      val nd = "CAST(n1 + n2 AS DOUBLE)"
+      val mu = s"(($n1d * $n2d) / 2.0)"
+      val vr = s"((($n1d * $n2d) / 12.0) * (($nd + 1.0) - " +
+        s"(CAST(t_ties AS DOUBLE) / ($nd * ($nd - 1.0)))))"
+      s"""WITH li AS (
+        |  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS x
+        |  FROM lineitem WHERE l_returnflag IN ('A', 'R')),
+        |cells AS (
+        |  SELECT x,
+        |    CAST(SUM(CASE WHEN g = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS m1,
+        |    CAST(COUNT(*) AS BIGINT) AS m
+        |  FROM li GROUP BY 1),
+        |ranked AS (
+        |  SELECT x, m1, m,
+        |    CAST(COALESCE(SUM(m) OVER (ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS cb
+        |  FROM cells),
+        |agg AS (
+        |  SELECT
+        |    CAST(SUM(CAST(m1 AS HUGEINT)) AS DECIMAL(38,0)) AS n1,
+        |    CAST(SUM(CAST(m - m1 AS HUGEINT)) AS DECIMAL(38,0)) AS n2,
+        |    CAST(SUM(CAST(m1 AS HUGEINT) *
+        |      CAST(cb * 2 + m + 1 AS HUGEINT)) AS DECIMAL(38,0)) AS r1_x2,
+        |    CAST(SUM(CAST(m AS HUGEINT) * CAST(m AS HUGEINT) *
+        |      CAST(m AS HUGEINT) - CAST(m AS HUGEINT))
+        |      AS DECIMAL(38,0)) AS t_ties
+        |  FROM ranked),
+        |base AS (
+        |  SELECT n1, n2,
+        |    CAST(r1_x2 - n1 * (n1 + 1) AS DECIMAL(38,0)) AS u1_x2, t_ties
+        |  FROM agg)
+        |SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
+        |  CAST(u1_x2 AS BIGINT) AS u1_x2, CAST(t_ties AS BIGINT) AS t_ties,
+        |  ${det6Sql(s"(($du1 - $mu) / sqrt($vr))")} AS z_r
+        |FROM base""".stripMargin
+    })),
 
     // Edit-distance (Levenshtein ≤ 3) fuzzy self-join over distinct part
     // names — the classic-DP twin of the q_fuzzy_jw family, routed
@@ -2366,21 +3614,46 @@ object AnalyticsQueries {
     // applied as a post-filter on the capped candidates. Distances are
     // exact integers on both engines (both implement the textbook DP),
     // so the pair relation hash-matches with no rounding contract.
-    "q_fuzzy_edit" -> ((s, d) => {
+    Query("q_fuzzy_edit", (s, d) => {
       blockedPartPairs(s, d)
         .filter(abs(length(col("a")) - length(col("b"))) <= 3)
         .withColumn("dist", levenshtein(col("a"), col("b")).cast("long"))
         .filter(col("dist") <= 3)
         .select(col("a").as("name_a"), col("b").as("name_b"), col("dist"))
         .orderBy(col("name_a"), col("name_b"))
-    }),
+    }, Sql(
+      // the same capped blocked-candidate CTE as q_fuzzy_parts/q_fuzzy_jw
+      // (rn<=1000 + overflow star-attach), length band as post-filter;
+      // both engines' levenshtein is the textbook DP — exact integers
+      """WITH n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part
+        |), r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n
+        |), cand AS (
+        |  SELECT a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+        |  WHERE a.rn <= 1000 AND b.rn <= 1000
+        |  UNION ALL
+        |  SELECT m.p_name AS a, o.p_name AS b
+        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+        |  WHERE o.rn > 1000
+        |)
+        |SELECT a AS name_a, b AS name_b,
+        |  CAST(levenshtein(a, b) AS BIGINT) AS dist
+        |FROM cand
+        |WHERE abs(len(a) - len(b)) <= 3 AND levenshtein(a, b) <= 3
+        |ORDER BY name_a, name_b""".stripMargin)),
 
     // Deterministic per-group mode (most frequent value, ties broken to
     // the SMALLEST value — the cross-engine-stable convention Spark's
     // own mode() and DuckDB's mode() both leave unspecified): modal
     // nation per market segment from ONE domain-bounded count aggregate
     // + a per-group row_number. The imputation/denoising primitive.
-    "q_group_mode" -> ((s, d) => {
+    Query("q_group_mode", (s, d) => {
       val c = t(s, d, "customer")
         .groupBy(col("c_mktsegment"), col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
@@ -2396,7 +3669,25 @@ object AnalyticsQueries {
           col("n").as("n_mode"), col("n_total"),
           ratio6(col("n"), col("n_total")).as("share_r"))
         .orderBy(col("c_mktsegment"))
-    }),
+    }, Sql(
+      // the same (count desc, value asc) deterministic tie-break
+      s"""WITH c AS (
+        |  SELECT c_mktsegment, c_nationkey, CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM customer GROUP BY 1, 2),
+        |tot AS (
+        |  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_total
+        |  FROM customer GROUP BY 1),
+        |r AS (
+        |  SELECT c_mktsegment, c_nationkey, n,
+        |    ROW_NUMBER() OVER (PARTITION BY c_mktsegment
+        |      ORDER BY n DESC, c_nationkey) AS rn
+        |  FROM c)
+        |SELECT r.c_mktsegment,
+        |  CAST(r.c_nationkey AS BIGINT) AS mode_nation,
+        |  r.n AS n_mode, tot.n_total,
+        |  ${ratio6Sql("r.n", "tot.n_total")} AS share_r
+        |FROM r JOIN tot USING (c_mktsegment)
+        |WHERE rn = 1 ORDER BY r.c_mktsegment""".stripMargin)),
 
     // Week-over-week rank movers (the "movers & shakers" leaderboard
     // delta): brand revenue ranked within each of the LAST TWO full
@@ -2404,7 +3695,7 @@ object AnalyticsQueries {
     // row_number over the bounded |brands| domain per week (25 brands —
     // a per-week window over a pre-aggregated relation, not the fact
     // scan); revenue in exact cents; everything integer.
-    "q_rank_movers" -> ((s, d) => {
+    Query("q_rank_movers", (s, d) => {
       val li = t(s, d, "lineitem")
         .select(col("l_partkey"),
           floor(unix_timestamp(col("l_shipdate")) / 604800).cast("long")
@@ -2434,7 +3725,31 @@ object AnalyticsQueries {
           col("rank_prev"),
           (col("rank_prev") - col("rank_cur")).as("delta"))
         .orderBy(abs(col("delta")).desc, col("p_brand"))
-    }),
+    }, Sql(
+      // the same two-week rank join over the bounded brand domain
+      """WITH li AS (
+        |  SELECT p_brand,
+        |    (epoch_us(l_shipdate) // 1000000) // 604800 AS week,
+        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c
+        |  FROM lineitem JOIN part ON p_partkey = l_partkey),
+        |mw AS (SELECT MAX(week) AS wmax FROM li),
+        |weekly AS (
+        |  SELECT week, p_brand, CAST(SUM(price_c) AS BIGINT) AS rev_c
+        |  FROM li, mw WHERE week = wmax - 1 OR week = wmax - 2
+        |  GROUP BY 1, 2),
+        |ranked AS (
+        |  SELECT week, p_brand, rev_c,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY week
+        |      ORDER BY rev_c DESC, p_brand) AS BIGINT) AS rnk
+        |  FROM weekly),
+        |cur AS (SELECT p_brand, rev_c AS rev_cur_c, rnk AS rank_cur
+        |  FROM ranked, mw WHERE week = wmax - 1),
+        |prev AS (SELECT p_brand, rnk AS rank_prev
+        |  FROM ranked, mw WHERE week = wmax - 2)
+        |SELECT p_brand, rev_cur_c, rank_cur, rank_prev,
+        |  rank_prev - rank_cur AS delta
+        |FROM cur JOIN prev USING (p_brand)
+        |ORDER BY abs(rank_prev - rank_cur) DESC, p_brand""".stripMargin)),
 
     // Local-peak detection on the daily revenue series (the
     // change-point family's spike lens next to q_cusum_shift's level
@@ -2442,7 +3757,7 @@ object AnalyticsQueries {
     // zero-filled day spine AND at least 5/4 of the trailing 7-day
     // mean — the comparison cleared to exact integers
     // (4·7·x > 5·sum7_trailing). Bounded day domain; zero float ops.
-    "q_peaks" -> ((s, d) => {
+    Query("q_peaks", (s, d) => {
       val daily = t(s, d, "orders")
         .groupBy(floor(unix_timestamp(col("o_orderdate")) / 86400)
           .cast("long").as("day"))
@@ -2466,7 +3781,32 @@ object AnalyticsQueries {
           col("x") * 28 > col("s7") * 5)
         .select(col("day"), col("x"), col("prv"), col("nxt"), col("s7"))
         .orderBy(col("day"))
-    }),
+    }, Sql(
+      // the same spine + exact-integer peak predicate
+      """WITH daily AS (
+        |  SELECT (epoch_us(o_orderdate) // 1000000) // 86400 AS day,
+        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |      AS x
+        |  FROM orders GROUP BY 1),
+        |b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
+        |spine AS (
+        |  SELECT gs.day, COALESCE(d.x, 0) AS x
+        |  FROM (SELECT UNNEST(range(lo, hi + 1)) AS day FROM b) gs
+        |  LEFT JOIN daily d USING (day)),
+        |win AS (
+        |  SELECT day, x,
+        |    LAG(x) OVER (ORDER BY day) AS prv,
+        |    LEAD(x) OVER (ORDER BY day) AS nxt,
+        |    CAST(SUM(x) OVER (ORDER BY day
+        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS BIGINT) AS s7,
+        |    COUNT(*) OVER (ORDER BY day
+        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS n7
+        |  FROM spine)
+        |SELECT day, x, prv, nxt, s7
+        |FROM win
+        |WHERE prv IS NOT NULL AND nxt IS NOT NULL AND n7 = 7
+        |  AND x > prv AND x > nxt AND x * 28 > s7 * 5
+        |ORDER BY day""".stripMargin)),
 
     // Share-of-parent hierarchy rollup (the BI drill-down companion to
     // q_rollup's subtotals): revenue per nation with its share WITHIN
@@ -2474,7 +3814,7 @@ object AnalyticsQueries {
     // share an exact ratio6 of integer cents; the nation→region
     // dimension spine broadcasts, the two parent levels come from ONE
     // reaggregation chain (never a rescan of the fact side).
-    "q_share_of_parent" -> ((s, d) => {
+    Query("q_share_of_parent", (s, d) => {
       val rev = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))),
@@ -2497,7 +3837,28 @@ object AnalyticsQueries {
           ratio6(col("rev_c"), col("region_c")).as("share_of_region_r"),
           ratio6(col("region_c"), col("total_c")).as("region_share_r"))
         .orderBy(col("r_name"), col("n_name"))
-    }),
+    }, Sql(
+      // the same two-level reaggregation; exact cent ratios
+      s"""WITH rev AS (
+        |  SELECT c_nationkey,
+        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |      AS rev_c
+        |  FROM orders JOIN customer ON c_custkey = o_custkey
+        |  GROUP BY 1),
+        |dim AS (
+        |  SELECT n_nationkey, n_name, r_name
+        |  FROM nation JOIN region ON r_regionkey = n_regionkey),
+        |nat AS (
+        |  SELECT r_name, n_name, rev_c
+        |  FROM rev JOIN dim ON n_nationkey = c_nationkey),
+        |reg AS (SELECT r_name, CAST(SUM(rev_c) AS BIGINT) AS region_c
+        |  FROM nat GROUP BY 1),
+        |tot AS (SELECT CAST(SUM(region_c) AS BIGINT) AS total_c FROM reg)
+        |SELECT n.r_name, n.n_name, n.rev_c,
+        |  ${ratio6Sql("n.rev_c", "r.region_c")} AS share_of_region_r,
+        |  ${ratio6Sql("r.region_c", "t.total_c")} AS region_share_r
+        |FROM nat n JOIN reg r USING (r_name), tot t
+        |ORDER BY n.r_name, n.n_name""".stripMargin)),
 
     // Jensen–Shannon divergence between two sources' length
     // distributions (the bounded symmetric drift metric next to
@@ -2507,7 +3868,7 @@ object AnalyticsQueries {
     // folded in sorted bucket order on the engine (the chi² term
     // discipline — the oracle's single-node SUM differs only below the
     // 6dp contract). det6.
-    "q_js_divergence" -> ((s, d) => {
+    Query("q_js_divergence", (s, d) => {
       val dd = Tables.documents(s, d)
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"), expr("n_chars DIV 100").as("bucket"))
@@ -2529,7 +3890,38 @@ object AnalyticsQueries {
           det6(aggregate(
             sort_array(collect_list(struct(col("bucket"), col("term")))),
             lit(0.0), (acc, x) => acc + x.getField("term"))).as("js_r"))
-    }),
+    }, Sql(
+      // the same cells + per-term CASE; single-node SUM vs the engine's
+      // sorted fold — sub-6dp association difference only
+      {
+      val p = "(CAST(c0 AS DOUBLE) / n0)"
+      val q0 = "(CAST(c1 AS DOUBLE) / n1)"
+      val m = s"(($p + $q0) / 2.0)"
+      val term =
+        s"(CASE WHEN c0 > 0 THEN 0.5 * ($p * ln($p / $m)) ELSE 0.0 END" +
+          s" + CASE WHEN c1 > 0 THEN 0.5 * ($q0 * ln($q0 / $m))" +
+          s" ELSE 0.0 END)"
+      s"""WITH dd AS (
+        |  SELECT source, n_chars // 100 AS bucket FROM documents
+        |  WHERE source IN ('src0', 'src1')),
+        |cells AS (
+        |  SELECT bucket,
+        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c0,
+        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c1
+        |  FROM dd GROUP BY 1),
+        |tot AS (
+        |  SELECT
+        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n0,
+        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n1
+        |  FROM dd)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
+        |  ${det6Sql(s"SUM($term)")} AS js_r
+        |FROM cells, tot""".stripMargin
+    })),
 
     // Newman modularity of the LPA partition (the "are these
     // communities real?" score the q_lpa_communities census lacks):
@@ -2538,7 +3930,7 @@ object AnalyticsQueries {
     // zero float ops. Labels come from the SAME Graph.lpaSteps(3)
     // relation the census reports; Σe_c needs only the total
     // equal-label edge count, Σd_c² one per-label degree rollup.
-    "q_modularity" -> ((s, d) => {
+    Query("q_modularity", (s, d) => {
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val e = coPurchaseEdges(s, d).localCheckpoint(true)
       val labels = graft.operators.Graph.lpaSteps(e, rounds = 3)
@@ -2565,7 +3957,27 @@ object AnalyticsQueries {
             dec(lit(4)) * dec(col("m")) * dec(col("e_intra")) -
               col("sum_dsq"),
             dec(lit(4)) * dec(col("m")) * dec(col("m"))).as("q_r"))
-    }),
+    }, Sql(
+      // the same LPA labels (shared lpaCtes) + the cleared-fraction
+      // integer modularity
+      s"""WITH $lpaCtes,
+        |dg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
+        |  FROM sym GROUP BY 1),
+        |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
+        |ei AS (SELECT CAST(COUNT(*) AS BIGINT) AS e_intra
+        |  FROM edges e JOIN l3 a ON a.node = e.u
+        |  JOIN l3 b ON b.node = e.v
+        |  WHERE a.label = b.label),
+        |dc AS (SELECT l.label, CAST(SUM(deg) AS HUGEINT) AS d_c
+        |  FROM l3 l JOIN dg USING (node) GROUP BY 1),
+        |dsq AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
+        |    CAST(SUM(d_c * d_c) AS HUGEINT) AS sum_dsq
+        |  FROM dc)
+        |SELECT n_communities, m AS m_edges, e_intra,
+        |  ${sratio6Sql("4 * CAST(m AS HUGEINT) * e_intra - sum_dsq",
+             "4 * CAST(m AS HUGEINT) * m")} AS q_r
+        |FROM dsq, mm, ei""".stripMargin)),
 
     // Blocking-quality audit for the JW entity-resolution family (the
     // record-linkage literature's two headline metrics): reduction
@@ -2578,7 +3990,7 @@ object AnalyticsQueries {
     // blockedPartPairs / jwMatches relations q_fuzzy_jw reports, so
     // the audit can't drift from the operator it audits. All counts
     // exact; both metrics ratio6.
-    "q_blocking_quality" -> ((s, d) => {
+    Query("q_blocking_quality", (s, d) => {
       val names = t(s, d, "part").select(col("p_name")).distinct()
       val jw = round(graft.functions.TextHashFunctions.jaro_winkler(
         col("a"), col("b")), 6)
@@ -2599,7 +4011,44 @@ object AnalyticsQueries {
           col("n_true"), col("n_found"),
           when(col("n_true") > 0, ratio6(col("n_found"), col("n_true")))
             .otherwise(lit(1.0)).as("pc_r"))
-    }),
+    }, Sql(
+      // candidate CTE = the q_fuzzy_jw oracle's block relation; truth =
+      // brute force over all distinct-name pairs with the same built-in
+      // JW (proven equal to the engine's codegen'd JW by q_fuzzy_jw)
+      s"""WITH n AS (
+        |  SELECT DISTINCT p_name,
+        |    list_extract(string_split(p_name, ' '), -1) AS block
+        |  FROM part),
+        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_names FROM n),
+        |r AS (
+        |  SELECT p_name, block,
+        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+        |  FROM n),
+        |cand AS (
+        |  SELECT a.p_name AS a, b.p_name AS b
+        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+        |  WHERE a.rn <= 1000 AND b.rn <= 1000
+        |  UNION ALL
+        |  SELECT m.p_name AS a, o.p_name AS b
+        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+        |  WHERE o.rn > 1000),
+        |nc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
+        |tp AS (
+        |  SELECT a.p_name AS a, b.p_name AS b
+        |  FROM n a JOIN n b ON a.p_name < b.p_name
+        |  WHERE ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6)
+        |    >= 0.9),
+        |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM tp),
+        |nf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM cand
+        |  WHERE ROUND(jaro_winkler_similarity(a, b), 6) >= 0.9)
+        |SELECT n_names, n_names * (n_names - 1) // 2 AS n_all_pairs,
+        |  n_candidates,
+        |  ${ratio6Sql("n_names * (n_names - 1) // 2 - n_candidates",
+             "n_names * (n_names - 1) // 2")} AS rr_r,
+        |  n_true, n_found,
+        |  CASE WHEN n_true > 0 THEN ${ratio6Sql("n_found", "n_true")}
+        |       ELSE CAST(1.0 AS DOUBLE) END AS pc_r
+        |FROM nn, nc, nt, nf""".stripMargin)),
 
     // First principal component of the standardized lineitem measures
     // via 10 power iterations on the 4×4 correlation matrix — the
@@ -2614,7 +4063,7 @@ object AnalyticsQueries {
     // unrolls the identical chain as 10 CTE pairs. Outputs det6.
     // The heavy work is ONE moment aggregate over the fact scan — the
     // iteration is O(1) on a one-row relation at any scale.
-    "q_pca_power" -> ((s, d) => {
+    Query("q_pca_power", (s, d) => {
       val names = Seq("qty", "price", "disc", "tax")
       val li = t(s, d, "lineitem").select(
         col("l_quantity").cast("long").as("qty"),
@@ -2658,7 +4107,7 @@ object AnalyticsQueries {
         .select((col("n").cast("long").as("n_rows") +:
           names.map(nm => det6(col(s"__f.v_$nm")).as(s"load_$nm"))) :+
           det6(col("__f.lam")).as("lambda_r"): _*)
-    }),
+    }, Sql(pcaPowerOracle)),
 
     // Lorenz-curve knee (the "how many customers before returns
     // diminish" cut the ABC classes hard-code at 80/95): the point of
@@ -2667,7 +4116,7 @@ object AnalyticsQueries {
     // geometry at all. Rank and prefix sum come from ONE range-sorted
     // pass (Rank.withRankAndRunningTotal — never a single-partition
     // window); the argmax is one max_by over a total (m, −k) order.
-    "q_lorenz_knee" -> ((s, d) => {
+    Query("q_lorenz_knee", (s, d) => {
       val rev = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
       val (run, nCust, totC) = graft.operators.Rank.withRankAndRunningTotal(
@@ -2682,7 +4131,33 @@ object AnalyticsQueries {
           col("best.k").as("knee_k"), col("best.cum_c").as("knee_cum_c"),
           ratio6(col("best.cum_c"), lit(totC)).as("knee_share_r"),
           ratio6(col("best.k"), lit(nCust)).as("knee_frac_r"))
-    }),
+    }, Sql(
+      // the same integer cross-product argmax (ORDER BY m DESC, k LIMIT 1
+      // = max_by over the total (m, −k) order)
+      s"""WITH rev AS (
+        |  SELECT o_custkey,
+        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |      AS rev_c
+        |  FROM orders GROUP BY 1),
+        |run AS (
+        |  SELECT rev_c,
+        |    CAST(ROW_NUMBER() OVER (ORDER BY rev_c DESC, o_custkey)
+        |      AS BIGINT) AS k,
+        |    CAST(SUM(rev_c) OVER (ORDER BY rev_c DESC, o_custkey
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum_c
+        |  FROM rev),
+        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_custs,
+        |  CAST(SUM(rev_c) AS BIGINT) AS total_c FROM rev),
+        |best AS (
+        |  SELECT k, cum_c FROM run, tot
+        |  ORDER BY CAST(cum_c AS HUGEINT) * n_custs
+        |    - CAST(k AS HUGEINT) * total_c DESC, k
+        |  LIMIT 1)
+        |SELECT n_custs, total_c, k AS knee_k, cum_c AS knee_cum_c,
+        |  ${ratio6Sql("cum_c", "total_c")} AS knee_share_r,
+        |  ${ratio6Sql("k", "n_custs")} AS knee_frac_r
+        |FROM best, tot""".stripMargin)),
 
     // Degree assortativity of the co-purchase graph (do hubs link to
     // hubs?): Pearson correlation of endpoint degrees over the DIRECTED
@@ -2690,7 +4165,7 @@ object AnalyticsQueries {
     // deg_v) pairs; the only float ops are the final divide + sqrt,
     // mirrored. Degrees attach by two broadcast-size joins on the
     // already-reduced edge relation.
-    "q_degree_assortativity" -> ((s, d) => {
+    Query("q_degree_assortativity", (s, d) => {
       val e = coPurchaseEdges(s, d)
       val sym = e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
@@ -2709,7 +4184,28 @@ object AnalyticsQueries {
           sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
             (col("n") * col("syy") - col("sy") * col("sy")).cast("double")))
           .as("assort_r"))
-    }),
+    }, Sql(
+      // the same exact-moment Pearson chain over endpoint degrees
+      s"""WITH $coPurchaseCte,
+        |sym AS (SELECT u AS a, v AS b FROM edges
+        |  UNION ALL SELECT v AS a, u AS b FROM edges),
+        |deg AS (SELECT a, CAST(COUNT(*) AS BIGINT) AS deg
+        |  FROM sym GROUP BY 1),
+        |xy AS (
+        |  SELECT dx.deg AS x, dy.deg AS y
+        |  FROM sym JOIN deg dx ON dx.a = sym.a
+        |  JOIN deg dy ON dy.a = sym.b),
+        |m AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+        |  SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
+        |  SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
+        |  SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
+        |  SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy
+        |FROM xy)
+        |SELECT CAST(n AS BIGINT) AS n_edges_dir,
+        |  ${det6Sql("CAST(n * sxy - sx * sy AS DOUBLE) / " +
+                     "sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * " +
+                     "CAST(n * syy - sy * sy AS DOUBLE))")} AS assort_r
+        |FROM m""".stripMargin)),
 
     // Order-to-ship latency profile per priority (the fulfilment-SLA
     // readout; a fact-to-fact join the TPC-H suite lacks): integer day
@@ -2719,7 +4215,7 @@ object AnalyticsQueries {
     // via per-(priority, gap) cells + one domain-bounded cumulative
     // window; all-integer (the non-dyadic 0.9 would be an interpolation
     // seam through percentile()/quantile_cont).
-    "q_ship_latency" -> ((s, d) => {
+    Query("q_ship_latency", (s, d) => {
       val o = t(s, d, "orders").select(col("o_orderkey"),
         col("o_orderpriority"),
         floor(unix_timestamp(col("o_orderdate")) / 86400).cast("long")
@@ -2746,1103 +4242,8 @@ object AnalyticsQueries {
             .as("p90_gap"),
           max(col("gap")).as("max_gap"))
         .orderBy(col("o_orderpriority"))
-    }),
-
-    // Grouped regression across a dimension join (price-vs-quantity
-    // slope per BRAND — the per-segment elasticity readout): the
-    // q_ols_fit exact-moment discipline with the grouping key fetched
-    // by a broadcast dimension join; slope and intercept are EXACT
-    // integer ratios (sratio6) — zero float ops anywhere.
-    "q_ols_grouped" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("x"),
-          cents(col("l_extendedprice")).as("y"))
-        .join(broadcast(t(s, d, "part")
-          .select(col("p_partkey").as("l_partkey"), col("p_brand"))),
-          Seq("l_partkey"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
-      val m = li.groupBy(col("p_brand")).agg(
-        count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-        sum(dec(col("x") * col("x"))).as("sxx"),
-        sum(dec(col("x") * col("y"))).as("sxy"))
-      val sxxc = col("n") * col("sxx") - col("sx") * col("sx")
-      val sxyc = col("n") * col("sxy") - col("sx") * col("sy")
-      m.select(col("p_brand"), col("n").cast("long").as("n_rows"),
-          sratio6(sxyc, sxxc).as("slope_r"),
-          sratio6(col("sy") * sxxc - sxyc * col("sx"), col("n") * sxxc)
-            .as("intercept_r"))
-        .orderBy(col("p_brand"))
-    }),
-
-    // Herfindahl–Hirschman revenue concentration per nation (the
-    // market-structure audit next to q_gini_revenue's Lorenz scalar):
-    // HHI = Σ shareᵢ² = Σ revᵢ² / (Σ revᵢ)² — ONE exact integer ratio
-    // (ratio6), zero float ops; per-customer revenue is one rollup and
-    // the nation key rides a broadcast dimension join.
-    "q_hhi" -> ((s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
-      val rev = t(s, d, "orders").groupBy(col("o_custkey"))
-        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
-        .join(broadcast(t(s, d, "customer")
-          .select(col("c_custkey").as("o_custkey"),
-            col("c_nationkey").cast("long").as("nation"))),
-          Seq("o_custkey"))
-      rev.groupBy(col("nation"))
-        .agg(count(lit(1)).as("n_custs"),
-          sum(col("rev_c")).as("total_c"),
-          sum(dec(col("rev_c")) * dec(col("rev_c"))).as("sq"))
-        .select(col("nation"), col("n_custs"), col("total_c"),
-          ratio6(col("sq"),
-            dec(col("total_c")) * dec(col("total_c"))).as("hhi_r"))
-        .orderBy(col("nation"))
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_join_outer" ->
-      """WITH c AS (SELECT c_nationkey, COUNT(*) AS n_cust FROM customer GROUP BY 1),
-        |s AS (SELECT s_nationkey, COUNT(*) AS n_supp FROM supplier GROUP BY 1)
-        |SELECT CAST(COALESCE(c_nationkey, s_nationkey) AS BIGINT) AS nationkey,
-        |  COALESCE(n_cust, 0) AS n_cust, COALESCE(n_supp, 0) AS n_supp
-        |FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_join_left" ->
-      """WITH li AS (
-        |  SELECT l_orderkey,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS ret_rev_c
-        |  FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1)
-        |SELECT o_orderkey, o_custkey, COALESCE(ret_rev_c, 0) AS ret_rev_c
-        |FROM orders LEFT JOIN li ON o_orderkey = l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_window_analytics" ->
-      s"""SELECT o_custkey, o_orderkey,
-        |  LEAD(o_orderkey, 1) OVER w AS next_order,
-        |  FIRST_VALUE(price_c) OVER wf AS first_price_c,
-        |  LAST_VALUE(price_c) OVER wf AS last_price_c,
-        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-        |  CASE WHEN COUNT(*) OVER wp = 1 THEN 0.0
-        |       ELSE ${ratio6Sql("RANK() OVER w - 1", "COUNT(*) OVER wp - 1")}
-        |  END AS pr,
-        |  ${ratio6Sql("COUNT(*) OVER w", "COUNT(*) OVER wp")} AS cd
-        |FROM (SELECT o_custkey, o_orderkey, o_orderdate,
-        |        CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c FROM orders)
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        |  wp AS (PARTITION BY o_custkey),
-        |  wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_stats_agg" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  ROUND(stddev_samp(l_quantity), 6) AS sd_qty,
-        |  ROUND(stddev_pop(l_quantity), 6) AS sdp_qty,
-        |  ROUND(var_samp(l_quantity), 6) AS var_qty,
-        |  ROUND(var_pop(l_quantity), 6) AS varp_qty,
-        |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
-        |  ROUND(covar_samp(l_quantity, l_discount), 6) AS cov_qd,
-        |  ROUND(covar_pop(l_quantity, l_discount), 6) AS covp_qd,
-        |  ROUND(skewness(l_quantity) * (COUNT(*)-2)
-        |        / sqrt(COUNT(*)*(COUNT(*)-1.0)), 6) AS skew_qty,
-        |  ROUND(kurtosis_pop(l_quantity), 6) AS kurt_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-        |  ROUND(CAST(quantile_cont(l_quantity, 0.25) AS DOUBLE), 6) AS p25,
-        |  ROUND(CAST(quantile_cont(l_quantity, 0.5) AS DOUBLE), 6) AS p50,
-        |  ROUND(CAST(quantile_cont(l_quantity, 0.75) AS DOUBLE), 6) AS p75,
-        |  ROUND(CAST(median(l_quantity) AS DOUBLE), 6) AS med
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_minmax_by" ->
-      """WITH priced AS (
-        |  SELECT l_linestatus,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c,
-        |    l_orderkey, CAST(l_linenumber AS BIGINT) AS lineno, l_returnflag
-        |  FROM lineitem),
-        |rfc AS (
-        |  SELECT l_linestatus, l_returnflag, COUNT(*) AS c
-        |  FROM priced GROUP BY 1, 2),
-        |modes AS (
-        |  SELECT l_linestatus, l_returnflag AS mode_rf
-        |  FROM rfc
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY l_linestatus
-        |    ORDER BY c DESC, l_returnflag) = 1),
-        |g AS (
-        |  SELECT l_linestatus,
-        |    max({'price_c': price_c, 'l_orderkey': l_orderkey, 'lineno': lineno}) AS mx,
-        |    min({'price_c': price_c, 'l_orderkey': l_orderkey, 'lineno': lineno}) AS mn,
-        |    arg_max(l_orderkey, price_c*100000000 + l_orderkey*10 + lineno) AS argmax_okey,
-        |    arg_min(l_orderkey, price_c*100000000 + l_orderkey*10 + lineno) AS argmin_okey
-        |  FROM priced GROUP BY l_linestatus)
-        |SELECT g.l_linestatus,
-        |  mx.price_c AS max_price_c, mx.l_orderkey AS max_okey, mx.lineno AS max_lineno,
-        |  mn.price_c AS min_price_c, argmax_okey, argmin_okey, mode_rf
-        |FROM g JOIN modes ON g.l_linestatus = modes.l_linestatus
-        |ORDER BY g.l_linestatus""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS u,
-        |  CAST(length(p_name) AS BIGINT) AS len,
-        |  substring(p_name, 1, 5) AS sub,
-        |  lpad(p_brand, 12, '*') AS lp,
-        |  rpad(p_type, 10, '.') AS rp,
-        |  reverse(p_type) AS rev,
-        |  translate(p_name, 'aeiou', 'AEIOU') AS tr,
-        |  CAST(levenshtein(p_brand, 'Brand#11') AS BIGINT) AS lev,
-        |  regexp_extract(p_name, '^(\w+)', 1) AS first_word,
-        |  string_split(p_name, ' ')[-1] AS last_word,
-        |  CAST(strpos(p_name, 'e') AS BIGINT) AS pos_e,
-        |  repeat(p_brand, 2) AS rep,
-        |  concat_ws('|', p_brand, p_type) AS cw
-        |FROM part WHERE p_partkey < 100 ORDER BY p_partkey""".stripMargin,
-
-    "q_date_funcs" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS BIGINT) AS y,
-        |  CAST(month(o_orderdate) AS BIGINT) AS m,
-        |  CAST(quarter(o_orderdate) AS BIGINT) AS q,
-        |  CAST(dayofmonth(o_orderdate) AS BIGINT) AS dom,
-        |  CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
-        |  CAST(weekofyear(o_orderdate) AS BIGINT) AS woy,
-        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-        |  CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
-        |    AS days_since_epoch_start,
-        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3m,
-        |  last_day(CAST(o_orderdate AS DATE)) AS eom
-        |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""".stripMargin,
-
-    "q_array_funcs" ->
-      """SELECT p_partkey,
-        |  array_to_string(list_sort(string_split(p_name, ' ')), ',') AS sorted_words,
-        |  list_contains(string_split(p_name, ' '), 'red') AS has_red,
-        |  CAST(list_position(string_split(p_name, ' '),
-        |    string_split(p_name, ' ')[-1]) AS BIGINT) AS last_pos,
-        |  CAST(p_size % 5 + 1 AS BIGINT) AS seq_n,
-        |  CAST(list_reduce(range(1, p_size % 5 + 2), (a, b) -> a + b) AS BIGINT) AS seq_sum,
-        |  array_to_string(list_transform(range(1, p_size % 5 + 2), x -> x * 2), ',') AS doubled,
-        |  concat_ws(',', p_brand, p_type) AS flat
-        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin,
-
-    "q_map_funcs" ->
-      """SELECT p_partkey,
-        |  map_extract(map(['brand','type'], [p_brand, p_type]), 'brand')[1] AS brand_v,
-        |  map_extract(map(['brand','type'], [p_brand, p_type]), 'type')[1] AS type_v,
-        |  CAST(cardinality(map(['brand','type'], [p_brand, p_type])) AS BIGINT) AS m_n,
-        |  array_to_string(list_sort(map_keys(map(['brand','type'], [p_brand, p_type]))), ',')
-        |    AS m_keys
-        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin,
-
-    "q_tpch_q1" ->
-      s"""SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_c,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS sum_disc_c,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*(1.0+l_tax)*100) AS BIGINT)) AS BIGINT) AS sum_charge_c,
-        |  ${ratio6Sql("SUM(CAST(ROUND(l_quantity*100) AS BIGINT))",
-                       "COUNT(*) * 100")} AS avg_qty,
-        |  ${ratio6Sql("SUM(CAST(ROUND(l_discount*100) AS BIGINT))",
-                       "COUNT(*) * 100")} AS avg_disc,
-        |  COUNT(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_tpch_q3" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate, o_orderpriority,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue_c DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c,
-        |  ROUND(MIN(c_acctbal), 6) AS acctbal
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue_c DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name ORDER BY revenue_c DESC, n_name""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*l_discount*100) AS BIGINT)) AS BIGINT) AS revenue_c,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.03 AND 0.05
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q14" ->
-      s"""SELECT ${ratio6Sql(
-             "SUM(CASE WHEN p_type LIKE 'PROMO%' " +
-               "THEN CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT) " +
-               "ELSE 0 END) * 100",
-             "SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT))")}
-        |  AS promo_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_tpch_q17" ->
-      """SELECT
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_c,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#1'
-        |  AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
-        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_c
-        |FROM supplier, lineitem, orders, customer, nation n1, nation n2
-        |WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-        |  AND c_custkey = o_custkey
-        |  AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-        |  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_tpch_q13" ->
-      """SELECT c_count, COUNT(*) AS custdist FROM (
-        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey
-        |)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_tpch_q8" ->
-      s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  ${ratio6Sql(
-             "SUM(CASE WHEN n1.n_name = 'NATION_3' " +
-               "THEN CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT) " +
-               "ELSE 0 END)",
-             "SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT))")}
-        |    AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |JOIN region ON n2.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tpch_q12" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
-        |      AS total_revenue_c
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey
-        |)
-        |SELECT s_suppkey, s_name, total_revenue_c
-        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        |WHERE total_revenue_c = (SELECT MAX(total_revenue_c) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT
-        |  CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
-        |    AS revenue_c,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 40
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q_tpch_q21" ->
-      """SELECT s_name, COUNT(*) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-
-    "q_bitmap_distinct" ->
-      """SELECT l_returnflag,
-        |  CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_regexp_funcs" ->
-      """SELECT p_partkey,
-        |  CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS BIGINT) AS n_vowels,
-        |  regexp_extract(p_name, '[a-z]{5,}') AS first_long_word,
-        |  CAST(len(regexp_extract_all(p_type, 'ED')) AS BIGINT) AS n_ed
-        |FROM part WHERE p_partkey < 200
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_cc_recursive" ->
-      """WITH RECURSIVE ch AS (
-        |  SELECT o_custkey, o_orderkey,
-        |    LAG(o_orderkey) OVER (PARTITION BY o_custkey
-        |                          ORDER BY o_orderkey) AS prev
-        |  FROM orders WHERE o_orderkey < 5000
-        |), pairs AS (
-        |  SELECT prev AS id_a, o_orderkey AS id_b FROM ch
-        |  WHERE prev IS NOT NULL
-        |), reach(id, cur) AS (
-        |  SELECT id_b, id_a FROM pairs
-        |  UNION ALL
-        |  SELECT r.id, p.id_a FROM reach r JOIN pairs p ON r.cur = p.id_b
-        |)
-        |SELECT id, MIN(cur) AS comp FROM (
-        |  SELECT id_a AS id, id_a AS cur FROM pairs
-        |  UNION ALL SELECT id_b, id_b FROM pairs
-        |  UNION ALL SELECT id, cur FROM reach
-        |) GROUP BY id ORDER BY id""".stripMargin,
-
-    "q_dq_report" ->
-      """WITH a AS (
-        |  SELECT COUNT(*) AS n_rows,
-        |    CAST(SUM(CASE WHEN l_discount >= 0.0 AND l_discount <= 0.1 THEN 0 ELSE 1 END) AS BIGINT) AS discount_range,
-        |    CAST(SUM(CASE WHEN l_extendedprice > 0.0 THEN 0 ELSE 1 END) AS BIGINT) AS price_positive,
-        |    CAST(SUM(CASE WHEN l_quantity >= 1.0 AND l_quantity <= 60.0 THEN 0 ELSE 1 END) AS BIGINT) AS quantity_range,
-        |    CAST(SUM(CASE WHEN l_shipdate IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT) AS shipdate_not_null,
-        |    CAST(SUM(CASE WHEN l_tax >= 0.0 AND l_tax <= 0.1 THEN 0 ELSE 1 END) AS BIGINT) AS tax_range
-        |  FROM lineitem
-        |), fk AS (
-        |  SELECT CAST(SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-        |         COUNT(*) AS n_rows
-        |  FROM orders o
-        |  LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-        |    ON o.o_custkey = c.c_custkey
-        |)
-        |SELECT * FROM (
-        |  SELECT 'discount_range' AS "check", discount_range AS n_bad, n_rows FROM a
-        |  UNION ALL SELECT 'price_positive', price_positive, n_rows FROM a
-        |  UNION ALL SELECT 'quantity_range', quantity_range, n_rows FROM a
-        |  UNION ALL SELECT 'shipdate_not_null', shipdate_not_null, n_rows FROM a
-        |  UNION ALL SELECT 'tax_range', tax_range, n_rows FROM a
-        |  UNION ALL SELECT 'orders_custkey_fk', n_bad, n_rows FROM fk
-        |) ORDER BY "check"""".stripMargin,
-
-    "q_compaction_plan" ->
-      """WITH manifest AS (
-        |  SELECT source, doc_id % 20 AS file_id,
-        |    CAST(SUM(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY source, doc_id % 20
-        |), planned AS (
-        |  SELECT source, file_id, bytes,
-        |    SUM(bytes) OVER (PARTITION BY source ORDER BY file_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM manifest
-        |), binned AS (
-        |  SELECT *, CAST(FLOOR((GREATEST(cum, 1) - 1) / 4000.0) AS BIGINT) AS bin
-        |  FROM planned
-        |), bins AS (
-        |  SELECT source, bin, CAST(SUM(bytes) AS BIGINT) AS bin_bytes
-        |  FROM binned GROUP BY source, bin
-        |), per_source AS (
-        |  SELECT source, COUNT(*) AS n_files,
-        |    CAST(SUM(CASE WHEN bytes < 2000 THEN 1 ELSE 0 END) AS BIGINT) AS n_small,
-        |    CAST(SUM(bytes) AS BIGINT) AS total_bytes
-        |  FROM binned GROUP BY source
-        |)
-        |SELECT p.source, p.n_files, p.n_small, p.total_bytes,
-        |  b.n_output_files, b.max_output_bytes
-        |FROM per_source p JOIN (
-        |  SELECT source, COUNT(*) AS n_output_files,
-        |    CAST(MAX(bin_bytes) AS BIGINT) AS max_output_bytes
-        |  FROM bins GROUP BY source) b USING (source)
-        |ORDER BY p.source""".stripMargin,
-
-    "q_dq_drift" ->
-      s"""WITH e AS (
-        |  SELECT CASE WHEN CAST(o_orderdate AS DATE) < DATE '1996-01-01'
-        |           THEN 'a' ELSE 'b' END AS epoch,
-        |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c,
-        |    o_custkey, o_orderstatus
-        |  FROM orders
-        |), g AS (
-        |  SELECT epoch, COUNT(*) AS n_rows,
-        |    CAST(SUM(price_c) AS BIGINT) AS sum_c,
-        |    MIN(price_c) AS min_c, MAX(price_c) AS max_c,
-        |    COUNT(DISTINCT o_custkey) AS ndv_cust,
-        |    CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f
-        |  FROM e GROUP BY epoch
-        |), w AS (
-        |  SELECT
-        |    MAX(CASE WHEN epoch='a' THEN n_rows END) AS rows_a,
-        |    MAX(CASE WHEN epoch='b' THEN n_rows END) AS rows_b,
-        |    ${ratio6Sql("MAX(CASE WHEN epoch='a' THEN sum_c END)",
-                         "MAX(CASE WHEN epoch='a' THEN n_rows END)")} AS mean_a,
-        |    ${ratio6Sql("MAX(CASE WHEN epoch='b' THEN sum_c END)",
-                         "MAX(CASE WHEN epoch='b' THEN n_rows END)")} AS mean_b,
-        |    MAX(CASE WHEN epoch='a' THEN min_c END) AS min_a,
-        |    MAX(CASE WHEN epoch='b' THEN min_c END) AS min_b,
-        |    MAX(CASE WHEN epoch='a' THEN max_c END) AS max_a,
-        |    MAX(CASE WHEN epoch='b' THEN max_c END) AS max_b,
-        |    MAX(CASE WHEN epoch='a' THEN ndv_cust END) AS ndv_a,
-        |    MAX(CASE WHEN epoch='b' THEN ndv_cust END) AS ndv_b,
-        |    ${ratio6Sql("MAX(CASE WHEN epoch='a' THEN n_f END)",
-                         "MAX(CASE WHEN epoch='a' THEN n_rows END)")} AS f_a,
-        |    ${ratio6Sql("MAX(CASE WHEN epoch='b' THEN n_f END)",
-                         "MAX(CASE WHEN epoch='b' THEN n_rows END)")} AS f_b
-        |  FROM g
-        |), m AS (
-        |  SELECT 'n_rows' AS metric, CAST(rows_a AS DOUBLE) AS epoch_a, CAST(rows_b AS DOUBLE) AS epoch_b FROM w
-        |  UNION ALL SELECT 'price_mean_c', mean_a, mean_b FROM w
-        |  UNION ALL SELECT 'price_min_c', CAST(min_a AS DOUBLE), CAST(min_b AS DOUBLE) FROM w
-        |  UNION ALL SELECT 'price_max_c', CAST(max_a AS DOUBLE), CAST(max_b AS DOUBLE) FROM w
-        |  UNION ALL SELECT 'ndv_custkey', CAST(ndv_a AS DOUBLE), CAST(ndv_b AS DOUBLE) FROM w
-        |  UNION ALL SELECT 'f_status_share', f_a, f_b FROM w
-        |)
-        |SELECT metric, epoch_a, epoch_b,
-        |  ${det6Sql("ABS(epoch_b - epoch_a) / GREATEST(ABS(epoch_a), 1e-9)")} AS rel_drift
-        |FROM m ORDER BY metric""".stripMargin,
-
-    "q_lateral_topk" ->
-      """SELECT c.c_custkey, o.o_orderkey, o.price_c
-        |FROM customer c,
-        |LATERAL (SELECT o_orderkey,
-        |                CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c
-        |         FROM orders
-        |         WHERE o_custkey = c.c_custkey
-        |         ORDER BY price_c DESC, o_orderkey LIMIT 2) o
-        |WHERE c.c_custkey < 200
-        |ORDER BY c_custkey, price_c DESC, o_orderkey""".stripMargin,
-
-    "q_tpch_q22" ->
-      """SELECT c_nationkey,
-        |  COUNT(*) AS numcust,
-        |  CAST(SUM(CAST(ROUND(c_acctbal*100) AS BIGINT)) AS BIGINT) AS totacctbal_c
-        |FROM customer
-        |WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
-        |                   WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-
-    "q_tpch_q18" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-        |  CAST(o_orderdate AS DATE) AS odate,
-        |  CAST(ROUND(o_totalprice*100) AS BIGINT) AS totalprice_c,
-        |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
-        |                     GROUP BY l_orderkey HAVING SUM(l_quantity) > 250)
-        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-        |ORDER BY totalprice_c DESC, o_orderkey
-        |LIMIT 100""".stripMargin,
-
-    "q_window_range_frame" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) OVER (
-        |    PARTITION BY o_custkey ORDER BY CAST(FLOOR(date_part('epoch', o_orderdate)) AS BIGINT)
-        |    RANGE BETWEEN 604800 PRECEDING AND 0 FOLLOWING) AS BIGINT) AS trailing7d_c
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_window_rank_family" ->
-      s"""WITH o AS (
-        |  SELECT o_custkey, o_orderkey,
-        |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS price_c
-        |  FROM orders WHERE o_custkey < 50
-        |)
-        |SELECT o_custkey, o_orderkey, price_c,
-        |  CAST(RANK() OVER w AS BIGINT) AS rnk,
-        |  CAST(DENSE_RANK() OVER w AS BIGINT) AS drnk,
-        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-        |  CASE WHEN COUNT(*) OVER wp = 1 THEN 0.0
-        |       ELSE ${ratio6Sql("RANK() OVER w - 1", "COUNT(*) OVER wp - 1")}
-        |  END AS pct_rank,
-        |  ${ratio6Sql("COUNT(*) OVER w", "COUNT(*) OVER wp")} AS cume,
-        |  LAG(price_c, 1) OVER w AS prev_price_c,
-        |  LEAD(price_c, 1) OVER w AS next_price_c,
-        |  FIRST_VALUE(price_c) OVER w AS min_price_c
-        |FROM o
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY price_c, o_orderkey),
-        |  wp AS (PARTITION BY o_custkey)
-        |ORDER BY o_custkey, rnk, o_orderkey""".stripMargin,
-
-    "q_vocab_coverage" ->
-      s"""WITH tok AS (
-        |  SELECT unnest($duckDocToks) AS term FROM documents
-        |), tf AS (SELECT term, COUNT(*) AS c FROM tok GROUP BY term),
-        |tot AS (SELECT SUM(c) AS n FROM tf),
-        |top AS (
-        |  SELECT term, c,
-        |    CAST(ROW_NUMBER() OVER (ORDER BY c DESC, term) AS BIGINT) AS rank
-        |  FROM tf QUALIFY rank <= 20
-        |)
-        |SELECT rank, term, c,
-        |  ${ratio6Sql(
-             "SUM(c) OVER (ORDER BY rank ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
-             "n")} AS cum_share
-        |FROM top, tot ORDER BY rank""".stripMargin,
-
-    "q_approx_top_k" ->
-      s"""WITH tok AS (
-        |  SELECT unnest($duckDocToks) AS term FROM documents
-        |), tf AS (SELECT term, COUNT(*) AS cnt FROM tok GROUP BY term),
-        |top AS (
-        |  SELECT term, cnt,
-        |    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, term) AS BIGINT) AS rank
-        |  FROM tf QUALIFY rank <= 10
-        |)
-        |SELECT rank, term, cnt FROM top ORDER BY rank""".stripMargin,
-
-    "q_theta_sets" ->
-      """WITH a AS (SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'A'),
-        |r AS (SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'R')
-        |SELECT
-        |  (SELECT COUNT(*) FROM a) AS n_a,
-        |  (SELECT COUNT(*) FROM r) AS n_r,
-        |  (SELECT COUNT(*) FROM (SELECT * FROM a UNION SELECT * FROM r)) AS n_union,
-        |  (SELECT COUNT(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM r)) AS n_inter,
-        |  (SELECT COUNT(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM r)) AS n_diff""".stripMargin,
-
-    "q_range_join" ->
-      s"""WITH bands(band_id, lo, hi) AS (
-        |  VALUES (1, 900.0, 925.0), (2, 925.0, 950.0),
-        |         (3, 950.0, 975.0), (4, 975.0, 1000.0))
-        |SELECT CAST(band_id AS BIGINT) AS band_id, COUNT(*) AS n_parts,
-        |  ${ratio6Sql("SUM(p_size)", "COUNT(*)")} AS avg_size
-        |FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
-        |GROUP BY band_id ORDER BY band_id""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH wide AS (
-        |  SELECT l_returnflag,
-        |    CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS qty_c,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS price_c
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, metric, v
-        |FROM wide UNPIVOT (v FOR metric IN (qty_c, price_c))
-        |ORDER BY l_returnflag, metric""".stripMargin,
-
-    // the pivot's relational rewrite, written by hand
-    "q_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'F'
-        |    THEN CAST(ROUND(l_extendedprice*100) AS BIGINT) END), 0)
-        |    AS BIGINT) AS f_price_c,
-        |  CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'O'
-        |    THEN CAST(ROUND(l_extendedprice*100) AS BIGINT) END), 0)
-        |    AS BIGINT) AS o_price_c
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // generate_series spine over the bounded day domain; zeros filled
-    "q_gap_fill" ->
-      """WITH daily AS (
-        |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-        |spine AS (SELECT UNNEST(generate_series(lo, hi)) AS day FROM b)
-        |SELECT s.day, COALESCE(d.n, 0) AS n, d.n IS NULL AS is_gap
-        |FROM spine s LEFT JOIN daily d USING (day)
-        |ORDER BY s.day""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-        |       COALESCE(l_linestatus, 'ALL') AS ls,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS qty_c
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY rf, ls""".stripMargin,
-
-    "q_null_safety" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN o_orderstatus = 'O' THEN 'OPEN'
-        |              ELSE o_orderstatus END AS st_n,
-        |         CASE WHEN o_orderstatus = 'F' THEN 'was_f'
-        |              ELSE 'not_f' END AS tag
-        |  FROM orders)
-        |SELECT st_n, tag, COUNT(*) AS n,
-        |  CAST(0 AS BIGINT) AS n_ratio_nonnull,
-        |  CAST(-1.0 AS DOUBLE) AS filled_min
-        |FROM t GROUP BY st_n, tag ORDER BY st_n, tag""".stripMargin,
-
-    "q_array_hof" ->
-      """SELECT p_partkey,
-        |  len(list_filter(string_split(p_name, ' '), x -> len(x) > 4)) > 0 AS has_long_word,
-        |  len(list_filter(string_split(p_name, ' '), x -> len(x) > 2))
-        |    = len(string_split(p_name, ' ')) AS all_gt2,
-        |  CAST(len(list_filter([p_brand, NULL, p_type], x -> x IS NOT NULL)) AS BIGINT)
-        |    AS n_compact,
-        |  array_to_string(list_append(string_split(p_name, ' '), 'END'), ',') AS appended,
-        |  array_to_string(list_prepend('BEGIN', string_split(p_name, ' ')), ',') AS prepended,
-        |  p_brand || ',' || p_brand AS repeated
-        |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin,
-
-    "q_crosstab" ->
-      """SELECT o_orderstatus AS status,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS n_high,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS n_medium,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS n_notspec,
-        |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS n_low
-        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-
-    "q_salted_agg" ->
-      s"""WITH ${Tables.ratingsSql}
-         |SELECT movieId, ROUND(SUM(rating), 6) AS sum_rating_r,
-         |  COUNT(*) AS n
-         |FROM ratings GROUP BY movieId ORDER BY movieId""".stripMargin,
-
-    "q_typed_agg" ->
-      s"""WITH ${Tables.ratingsSql}
-         |SELECT userId, COUNT(*) AS n,
-         |  ${ratio6Sql("CAST(SUM(rating)*2 AS HUGEINT)", "COUNT(*)*2")} AS avg_rating
-         |FROM ratings GROUP BY userId ORDER BY userId""".stripMargin,
-
-    "q_pagerank" -> pagerankOracle,
-
-    "q_ppr_suppliers" -> pprOracle,
-
-    // Value-identical unoriented 3-way join over the same canonical
-    // (u < v) edge set — with a < b < c each triangle matches the join
-    // pattern (a,b)(b,c)(a,c) exactly once. The engine's orientation
-    // changes the plan's fan-out, never the census (the salted-join
-    // convention: the oracle witnesses the relation, not the layout).
-    "q_triangles" ->
-      s"""WITH $coPurchaseCte,
-        |deg AS (
-        |  SELECT node, COUNT(*) AS dg FROM (
-        |    SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges)
-        |  GROUP BY 1),
-        |base AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
-        |         CAST(COALESCE(SUM(dg * (dg - 1) // 2), 0) AS BIGINT) AS n_wedges
-        |  FROM deg),
-        |en AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM edges),
-        |tri AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |  FROM edges e1 JOIN edges e2 ON e1.v = e2.u
-        |       JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v)
-        |SELECT n_nodes, n_edges, n_wedges, n_triangles,
-        |  ROUND(CASE WHEN n_wedges > 0
-        |             THEN 3.0 * n_triangles / n_wedges ELSE 0 END, 6) AS gcc_r
-        |FROM base, en, tri""".stripMargin,
-
-    // mirrors Dedup.blockedPairs' CAP: rn ≤ 1000 members pair fully,
-    // overflow members pair once against the block min (rn = 1)
-    "q_fuzzy_parts" ->
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |)
-        |SELECT block, a, b, CAST(levenshtein(a, b) AS BIGINT) AS dist
-        |FROM cand
-        |WHERE levenshtein(a, b) <= 2
-        |ORDER BY a, b""".stripMargin,
-
-    // same capped blocked-candidate CTE; DuckDB's
-    // jaro_winkler_similarity is the same standard variant as the
-    // engine's codegen'd expression, so the 6dp-rounded SCORE is the
-    // compared value (threshold on the rounded score on both sides)
-    "q_fuzzy_jw" ->
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |), scored AS (
-        |  SELECT block, a, b,
-        |    ROUND(jaro_winkler_similarity(a, b), 6) AS jw_r
-        |  FROM cand
-        |)
-        |SELECT block, a, b, jw_r FROM scored
-        |WHERE jw_r >= 0.9
-        |ORDER BY a, b""".stripMargin,
-
-    // generated per-column UNION ALL — the oracle may scan 7×; the
-    // engine side must not (see the query comment). NULL NDV for the
-    // near-unique price column mirrors the engine's bounded-NDV policy.
-    "q_table_stats" -> (Seq("l_linenumber", "l_partkey", "l_suppkey",
-        "l_quantity", "l_discount", "l_tax", "l_extendedprice")
-      .map { c =>
-        val nd = if (c == "l_extendedprice") "CAST(NULL AS BIGINT)"
-                 else s"COUNT(DISTINCT $c)"
-        s"""SELECT '$c' AS col_name, COUNT(*) AS n_rows,
-           |  COUNT(*) - COUNT($c) AS n_null,
-           |  $nd AS n_distinct,
-           |  CAST(MIN($c) AS DOUBLE) AS min_v,
-           |  CAST(MAX($c) AS DOUBLE) AS max_v
-           |FROM lineitem""".stripMargin }
-      .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")),
-
-    "q_rfm_segments" ->
-      """WITH per AS (
-        |  SELECT o_custkey, MAX(CAST(o_orderdate AS DATE)) AS last_order,
-        |    COUNT(*) AS frequency,
-        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |      AS monetary_c
-        |  FROM orders GROUP BY 1
-        |),
-        |tiles AS (
-        |  SELECT monetary_c,
-        |    CAST(NTILE(5) OVER (ORDER BY last_order DESC, o_custkey) AS BIGINT)
-        |      AS r_tile,
-        |    CAST(NTILE(5) OVER (ORDER BY frequency DESC, o_custkey) AS BIGINT)
-        |      AS f_tile,
-        |    CAST(NTILE(5) OVER (ORDER BY monetary_c DESC, o_custkey) AS BIGINT)
-        |      AS m_tile
-        |  FROM per
-        |)
-        |SELECT r_tile, f_tile, m_tile, COUNT(*) AS n_customers,
-        |  CAST(SUM(monetary_c) AS BIGINT) AS monetary_c
-        |FROM tiles GROUP BY 1, 2, 3
-        |ORDER BY r_tile, f_tile, m_tile""".stripMargin,
-
-    "q_col_histogram" ->
-      """WITH b AS (
-        |  SELECT MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
-        |  FROM lineitem
-        |)
-        |SELECT CASE WHEN hi = lo THEN CAST(0 AS BIGINT)
-        |       ELSE CAST(LEAST(FLOOR((l_extendedprice - lo) / ((hi - lo) / 16.0)),
-        |         15) AS BIGINT) END AS bin,
-        |  COUNT(*) AS n,
-        |  ROUND(MIN(l_extendedprice), 6) AS bin_min,
-        |  ROUND(MAX(l_extendedprice), 6) AS bin_max
-        |FROM lineitem, b
-        |GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    // same NTILE definition (first rem tiles get base+1 rows); the
-    // unique tie-break key makes the rank — and every boundary — exact
-    "q_histogram_eqdepth" ->
-      """WITH r AS (
-        |  SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price_c,
-        |    NTILE(16) OVER (ORDER BY CAST(ROUND(l_extendedprice * 100) AS BIGINT),
-        |                    l_orderkey, l_linenumber) AS bucket
-        |  FROM lineitem
-        |)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n,
-        |  MIN(price_c) AS lo_c, MAX(price_c) AS hi_c
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_zorder_cluster" ->
-      s"""WITH b AS (
-         |  SELECT l_partkey % 1024 AS x, l_suppkey % 1024 AS y FROM lineitem
-         |), z AS (
-         |  SELECT x, y, ${graft.operators.Layout.zvalueSql("x", "y", 10)} AS zv FROM b
-         |)
-         |SELECT CAST(zv >> 14 AS BIGINT) AS zbucket, COUNT(*) AS n,
-         |  MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-         |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // after the x-tie collapse the skyline is exactly the rows whose y
-    // strictly beats the running max over ascending x — the oracle may
-    // use the single-node window the engine must not
-    "q_skyline" ->
-      """WITH pts AS (
-        |  SELECT CAST(ROUND(p_retailprice * 100) AS BIGINT) AS price_c,
-        |    CAST(MAX(p_size) AS BIGINT) AS size
-        |  FROM part GROUP BY 1
-        |), w AS (
-        |  SELECT price_c, size, MAX(size) OVER (ORDER BY price_c
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mx
-        |  FROM pts
-        |)
-        |SELECT price_c, size FROM w
-        |WHERE mx IS NULL OR size > mx
-        |ORDER BY price_c""".stripMargin,
-
-    "q_fuzzy_snm" ->
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b
-        |    ON a.block = b.block AND b.rn - a.rn BETWEEN 1 AND 4
-        |), scored AS (
-        |  SELECT block, a, b,
-        |    ROUND(jaro_winkler_similarity(a, b), 6) AS jw_r
-        |  FROM cand
-        |)
-        |SELECT block, a, b, jw_r FROM scored
-        |WHERE jw_r >= 0.9
-        |ORDER BY a, b""".stripMargin,
-
-    "q_hits" -> hitsOracle,
-
-    "q_sssp" -> ssspOracle,
-
-    "q_kcore" -> kcoreOracle,
-
-    "q_corr_matrix" -> corrMatrixOracle,
-
-    "q_pca_power" -> pcaPowerOracle,
-
-    // the same integer cross-product argmax (ORDER BY m DESC, k LIMIT 1
-    // = max_by over the total (m, −k) order)
-    "q_lorenz_knee" ->
-      s"""WITH rev AS (
-        |  SELECT o_custkey,
-        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |      AS rev_c
-        |  FROM orders GROUP BY 1),
-        |run AS (
-        |  SELECT rev_c,
-        |    CAST(ROW_NUMBER() OVER (ORDER BY rev_c DESC, o_custkey)
-        |      AS BIGINT) AS k,
-        |    CAST(SUM(rev_c) OVER (ORDER BY rev_c DESC, o_custkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_c
-        |  FROM rev),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_custs,
-        |  CAST(SUM(rev_c) AS BIGINT) AS total_c FROM rev),
-        |best AS (
-        |  SELECT k, cum_c FROM run, tot
-        |  ORDER BY CAST(cum_c AS HUGEINT) * n_custs
-        |    - CAST(k AS HUGEINT) * total_c DESC, k
-        |  LIMIT 1)
-        |SELECT n_custs, total_c, k AS knee_k, cum_c AS knee_cum_c,
-        |  ${ratio6Sql("cum_c", "total_c")} AS knee_share_r,
-        |  ${ratio6Sql("k", "n_custs")} AS knee_frac_r
-        |FROM best, tot""".stripMargin,
-
-    // the same exact-moment Pearson chain over endpoint degrees
-    "q_degree_assortativity" ->
-      s"""WITH $coPurchaseCte,
-        |sym AS (SELECT u AS a, v AS b FROM edges
-        |  UNION ALL SELECT v AS a, u AS b FROM edges),
-        |deg AS (SELECT a, CAST(COUNT(*) AS BIGINT) AS deg
-        |  FROM sym GROUP BY 1),
-        |xy AS (
-        |  SELECT dx.deg AS x, dy.deg AS y
-        |  FROM sym JOIN deg dx ON dx.a = sym.a
-        |  JOIN deg dy ON dy.a = sym.b),
-        |m AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-        |  SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-        |  SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |  SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |  SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy
-        |FROM xy)
-        |SELECT CAST(n AS BIGINT) AS n_edges_dir,
-        |  ${det6Sql("CAST(n * sxy - sx * sy AS DOUBLE) / " +
-                     "sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * " +
-                     "CAST(n * syy - sy * sy AS DOUBLE))")} AS assort_r
-        |FROM m""".stripMargin,
-
-    // candidate CTE = the q_fuzzy_jw oracle's block relation; truth =
-    // brute force over all distinct-name pairs with the same built-in
-    // JW (proven equal to the engine's codegen'd JW by q_fuzzy_jw)
-    "q_blocking_quality" ->
-      s"""WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part),
-        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_names FROM n),
-        |r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n),
-        |cand AS (
-        |  SELECT a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000),
-        |nc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
-        |tp AS (
-        |  SELECT a.p_name AS a, b.p_name AS b
-        |  FROM n a JOIN n b ON a.p_name < b.p_name
-        |  WHERE ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6)
-        |    >= 0.9),
-        |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM tp),
-        |nf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM cand
-        |  WHERE ROUND(jaro_winkler_similarity(a, b), 6) >= 0.9)
-        |SELECT n_names, n_names * (n_names - 1) // 2 AS n_all_pairs,
-        |  n_candidates,
-        |  ${ratio6Sql("n_names * (n_names - 1) // 2 - n_candidates",
-             "n_names * (n_names - 1) // 2")} AS rr_r,
-        |  n_true, n_found,
-        |  CASE WHEN n_true > 0 THEN ${ratio6Sql("n_found", "n_true")}
-        |       ELSE CAST(1.0 AS DOUBLE) END AS pc_r
-        |FROM nn, nc, nt, nf""".stripMargin,
-
-    // the chi2 chain + the extra normalization, same op order
-    "q_cramers_v" ->
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
-        |nums AS (
-        |  SELECT c.o, c.source, c.lang,
-        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
-        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
-        |      AS DOUBLE) AS numd,
-        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
-        |    CAST(t.n_total AS DOUBLE) AS ntd
-        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
-        |terms AS (
-        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
-        |  FROM nums)
-        |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
-        |  CAST(SUM(o) AS BIGINT) AS n_total,
-        |  COUNT(DISTINCT source) AS nr, COUNT(DISTINCT lang) AS nc,
-        |  ${det6Sql("sqrt(SUM(term) / CAST(SUM(o) * " +
-             "(LEAST(COUNT(DISTINCT source), COUNT(DISTINCT lang)) - 1) " +
-             "AS DOUBLE))")} AS v_r
-        |FROM terms""".stripMargin,
-
-    // the q_ols_fit exact-ratio machinery, grouped by the joined brand
-    "q_ols_grouped" ->
-      s"""WITH li AS (
-        |  SELECT p_brand, CAST(l_quantity AS BIGINT) AS x,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey),
-        |m AS (
-        |  SELECT p_brand,
-        |    CAST(COUNT(*) AS HUGEINT) AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(38,0))) AS HUGEINT) AS sx,
-        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) AS HUGEINT) AS sy,
-        |    CAST(SUM(CAST(x*x AS DECIMAL(38,0))) AS HUGEINT) AS sxx,
-        |    CAST(SUM(CAST(x*y AS DECIMAL(38,0))) AS HUGEINT) AS sxy
-        |  FROM li GROUP BY 1),
-        |c AS (
-        |  SELECT p_brand, n, sx, sy,
-        |    (n*sxx - sx*sx) AS sxxc,
-        |    (n*sxy - sx*sy) AS sxyc
-        |  FROM m)
-        |SELECT p_brand, CAST(n AS BIGINT) AS n_rows,
-        |  ${sratio6Sql("sxyc", "sxxc")} AS slope_r,
-        |  ${sratio6Sql("sy*sxxc - sxyc*sx", "n*sxxc")} AS intercept_r
-        |FROM c ORDER BY p_brand""".stripMargin,
-
-    // the same single exact ratio Σrev² / (Σrev)²
-    "q_hhi" ->
-      s"""WITH rev AS (
-        |  SELECT o_custkey,
-        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |      AS rev_c
-        |  FROM orders GROUP BY 1),
-        |j AS (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS nation, rev_c
-        |  FROM rev JOIN customer ON c_custkey = o_custkey),
-        |agg AS (
-        |  SELECT nation, CAST(COUNT(*) AS BIGINT) AS n_custs,
-        |    CAST(SUM(rev_c) AS BIGINT) AS total_c,
-        |    CAST(SUM(CAST(rev_c AS HUGEINT) * CAST(rev_c AS HUGEINT))
-        |      AS HUGEINT) AS sq
-        |  FROM j GROUP BY 1)
-        |SELECT nation, n_custs, total_c,
-        |  ${ratio6Sql("sq",
-             "CAST(total_c AS HUGEINT) * CAST(total_c AS HUGEINT)")} AS hhi_r
-        |FROM agg ORDER BY nation""".stripMargin,
-
-    // the same all-integer order statistics on the bounded gap grid
-    "q_ship_latency" ->
+    }, Sql(
+      // the same all-integer order statistics on the bounded gap grid
       s"""WITH o AS (
         |  SELECT o_orderkey, o_orderpriority,
         |    (epoch_us(o_orderdate) // 1000000) // 86400 AS od
@@ -3869,695 +4270,98 @@ object AnalyticsQueries {
         |  MIN(CASE WHEN cum * 2 >= ntot THEN gap END) AS p50_gap,
         |  MIN(CASE WHEN cum * 10 >= ntot * 9 THEN gap END) AS p90_gap,
         |  MAX(gap) AS max_gap
-        |FROM cum GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        |FROM cum GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
 
-    "q_random_walks" -> walkOracle,
-
-    "q_lpa_communities" -> lpaOracle,
-
-    // the same two-week rank join over the bounded brand domain
-    "q_rank_movers" ->
-      """WITH li AS (
-        |  SELECT p_brand,
-        |    (epoch_us(l_shipdate) // 1000000) // 604800 AS week,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey),
-        |mw AS (SELECT MAX(week) AS wmax FROM li),
-        |weekly AS (
-        |  SELECT week, p_brand, CAST(SUM(price_c) AS BIGINT) AS rev_c
-        |  FROM li, mw WHERE week = wmax - 1 OR week = wmax - 2
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT week, p_brand, rev_c,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY week
-        |      ORDER BY rev_c DESC, p_brand) AS BIGINT) AS rnk
-        |  FROM weekly),
-        |cur AS (SELECT p_brand, rev_c AS rev_cur_c, rnk AS rank_cur
-        |  FROM ranked, mw WHERE week = wmax - 1),
-        |prev AS (SELECT p_brand, rnk AS rank_prev
-        |  FROM ranked, mw WHERE week = wmax - 2)
-        |SELECT p_brand, rev_cur_c, rank_cur, rank_prev,
-        |  rank_prev - rank_cur AS delta
-        |FROM cur JOIN prev USING (p_brand)
-        |ORDER BY abs(rank_prev - rank_cur) DESC, p_brand""".stripMargin,
-
-    // the same spine + exact-integer peak predicate
-    "q_peaks" ->
-      """WITH daily AS (
-        |  SELECT (epoch_us(o_orderdate) // 1000000) // 86400 AS day,
-        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |      AS x
-        |  FROM orders GROUP BY 1),
-        |b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-        |spine AS (
-        |  SELECT gs.day, COALESCE(d.x, 0) AS x
-        |  FROM (SELECT UNNEST(range(lo, hi + 1)) AS day FROM b) gs
-        |  LEFT JOIN daily d USING (day)),
-        |win AS (
-        |  SELECT day, x,
-        |    LAG(x) OVER (ORDER BY day) AS prv,
-        |    LEAD(x) OVER (ORDER BY day) AS nxt,
-        |    CAST(SUM(x) OVER (ORDER BY day
-        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS BIGINT) AS s7,
-        |    COUNT(*) OVER (ORDER BY day
-        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS n7
-        |  FROM spine)
-        |SELECT day, x, prv, nxt, s7
-        |FROM win
-        |WHERE prv IS NOT NULL AND nxt IS NOT NULL AND n7 = 7
-        |  AND x > prv AND x > nxt AND x * 28 > s7 * 5
-        |ORDER BY day""".stripMargin,
-
-    // the same two-level reaggregation; exact cent ratios
-    "q_share_of_parent" ->
-      s"""WITH rev AS (
-        |  SELECT c_nationkey,
-        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |      AS rev_c
-        |  FROM orders JOIN customer ON c_custkey = o_custkey
-        |  GROUP BY 1),
-        |dim AS (
-        |  SELECT n_nationkey, n_name, r_name
-        |  FROM nation JOIN region ON r_regionkey = n_regionkey),
-        |nat AS (
-        |  SELECT r_name, n_name, rev_c
-        |  FROM rev JOIN dim ON n_nationkey = c_nationkey),
-        |reg AS (SELECT r_name, CAST(SUM(rev_c) AS BIGINT) AS region_c
-        |  FROM nat GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(region_c) AS BIGINT) AS total_c FROM reg)
-        |SELECT n.r_name, n.n_name, n.rev_c,
-        |  ${ratio6Sql("n.rev_c", "r.region_c")} AS share_of_region_r,
-        |  ${ratio6Sql("r.region_c", "t.total_c")} AS region_share_r
-        |FROM nat n JOIN reg r USING (r_name), tot t
-        |ORDER BY n.r_name, n.n_name""".stripMargin,
-
-    // the same cells + per-term CASE; single-node SUM vs the engine's
-    // sorted fold — sub-6dp association difference only
-    "q_js_divergence" -> {
-      val p = "(CAST(c0 AS DOUBLE) / n0)"
-      val q0 = "(CAST(c1 AS DOUBLE) / n1)"
-      val m = s"(($p + $q0) / 2.0)"
-      val term =
-        s"(CASE WHEN c0 > 0 THEN 0.5 * ($p * ln($p / $m)) ELSE 0.0 END" +
-          s" + CASE WHEN c1 > 0 THEN 0.5 * ($q0 * ln($q0 / $m))" +
-          s" ELSE 0.0 END)"
-      s"""WITH dd AS (
-        |  SELECT source, n_chars // 100 AS bucket FROM documents
-        |  WHERE source IN ('src0', 'src1')),
-        |cells AS (
-        |  SELECT bucket,
-        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c0,
-        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c1
-        |  FROM dd GROUP BY 1),
-        |tot AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n0,
-        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n1
-        |  FROM dd)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |  ${det6Sql(s"SUM($term)")} AS js_r
-        |FROM cells, tot""".stripMargin
-    },
-
-    // the same LPA labels (shared lpaCtes) + the cleared-fraction
-    // integer modularity
-    "q_modularity" ->
-      s"""WITH $lpaCtes,
-        |dg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
-        |  FROM sym GROUP BY 1),
-        |mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
-        |ei AS (SELECT CAST(COUNT(*) AS BIGINT) AS e_intra
-        |  FROM edges e JOIN l3 a ON a.node = e.u
-        |  JOIN l3 b ON b.node = e.v
-        |  WHERE a.label = b.label),
-        |dc AS (SELECT l.label, CAST(SUM(deg) AS HUGEINT) AS d_c
-        |  FROM l3 l JOIN dg USING (node) GROUP BY 1),
-        |dsq AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
-        |    CAST(SUM(d_c * d_c) AS HUGEINT) AS sum_dsq
-        |  FROM dc)
-        |SELECT n_communities, m AS m_edges, e_intra,
-        |  ${sratio6Sql("4 * CAST(m AS HUGEINT) * e_intra - sum_dsq",
-             "4 * CAST(m AS HUGEINT) * m")} AS q_r
-        |FROM dsq, mm, ei""".stripMargin,
-
-    // the replayed walks feed the same windowed pair count + marginals
-    "q_walk_skipgrams" ->
-      s"""WITH $walkCte,
-         |pr AS (
-         |  SELECT a.node AS center, b.node AS context, COUNT(*) AS n
-         |  FROM visits a JOIN visits b
-         |    ON a.start = b.start AND a.w = b.w
-         |   AND a.step <> b.step AND abs(a.step - b.step) <= 2
-         |  GROUP BY 1, 2),
-         |tot AS (SELECT SUM(n) AS tot FROM pr),
-         |cm AS (SELECT center, SUM(n) AS n_c FROM pr GROUP BY center),
-         |xm AS (SELECT context, SUM(n) AS n_x FROM pr GROUP BY context)
-         |SELECT p.center, p.context, p.n,
-         |  ROUND(ln(CAST(p.n * t.tot AS DOUBLE) /
-         |    CAST(c.n_c * x.n_x AS DOUBLE)), 6) AS pmi_r
-         |FROM pr p JOIN cm c USING (center) JOIN xm x USING (context), tot t
-         |ORDER BY center, context""".stripMargin,
-
-    "q_khop" ->
-      """WITH cs AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), seeds AS (
-        |  SELECT DISTINCT c_custkey AS c FROM customer
-        |  WHERE c_mktsegment = 'BUILDING'
-        |), hop1 AS (
-        |  SELECT DISTINCT s FROM cs JOIN seeds USING (c)
-        |), hop2 AS (
-        |  SELECT DISTINCT c FROM cs JOIN hop1 USING (s)
-        |  WHERE c NOT IN (SELECT c FROM seeds)
-        |), hop3 AS (
-        |  SELECT DISTINCT s FROM cs JOIN hop2 USING (c)
-        |  WHERE s NOT IN (SELECT s FROM hop1)
-        |)
-        |SELECT CAST(1 AS BIGINT) AS hop, COUNT(*) AS n_nodes FROM hop1
-        |UNION ALL
-        |SELECT 2, COUNT(*) FROM hop2
-        |UNION ALL
-        |SELECT 3, COUNT(*) FROM hop3
-        |ORDER BY hop""".stripMargin,
-
-    // same blocked-JW match relation as q_fuzzy_jw, closed with a
-    // cycle-safe recursive UNION (the undirected match graph may have
-    // cycles; UNION's dedup terminates the fixpoint)
-    "q_er_clusters" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |), m AS (
-        |  SELECT a, b FROM cand
-        |  WHERE ROUND(jaro_winkler_similarity(a, b), 6) >= 0.9
-        |), e AS (
-        |  SELECT a AS src, b AS dst FROM m
-        |  UNION ALL SELECT b AS src, a AS dst FROM m
-        |), reach(id, cur) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT re.id, e.dst FROM reach re JOIN e ON re.cur = e.src
-        |), lab AS (
-        |  SELECT id, MIN(cur) AS comp FROM reach GROUP BY id
-        |)
-        |SELECT comp AS golden_name, COUNT(*) AS n_members,
-        |  MAX(id) AS last_member
-        |FROM lab GROUP BY comp ORDER BY golden_name""".stripMargin,
-
-    // bounds round to integer cents, so everything after the percentile
-    // interpolation is exact integer math on both engines (see the query)
-    "q_winsorize" ->
+    // Grouped regression across a dimension join (price-vs-quantity
+    // slope per BRAND — the per-segment elasticity readout): the
+    // q_ols_fit exact-moment discipline with the grouping key fetched
+    // by a broadcast dimension join; slope and intercept are EXACT
+    // integer ratios (sratio6) — zero float ops anywhere.
+    Query("q_ols_grouped", (s, d) => {
+      val li = t(s, d, "lineitem")
+        .select(col("l_partkey"), col("l_quantity").cast("long").as("x"),
+          cents(col("l_extendedprice")).as("y"))
+        .join(broadcast(t(s, d, "part")
+          .select(col("p_partkey").as("l_partkey"), col("p_brand"))),
+          Seq("l_partkey"))
+      val dec = (c: Column) => c.cast("decimal(38,0)")
+      val m = li.groupBy(col("p_brand")).agg(
+        count(lit(1)).cast("decimal(38,0)").as("n"),
+        sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+        sum(dec(col("x") * col("x"))).as("sxx"),
+        sum(dec(col("x") * col("y"))).as("sxy"))
+      val sxxc = col("n") * col("sxx") - col("sx") * col("sx")
+      val sxyc = col("n") * col("sxy") - col("sx") * col("sy")
+      m.select(col("p_brand"), col("n").cast("long").as("n_rows"),
+          sratio6(sxyc, sxxc).as("slope_r"),
+          sratio6(col("sy") * sxxc - sxyc * col("sx"), col("n") * sxxc)
+            .as("intercept_r"))
+        .orderBy(col("p_brand"))
+    }, Sql(
+      // the q_ols_fit exact-ratio machinery, grouped by the joined brand
       s"""WITH li AS (
-        |  SELECT l_returnflag,
-        |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS pc
-        |  FROM lineitem
-        |), b AS (
-        |  SELECT l_returnflag,
-        |    CAST(ROUND(CAST(quantile_cont(pc, 0.01) AS DOUBLE), 0) AS BIGINT) AS lo_c,
-        |    CAST(ROUND(CAST(quantile_cont(pc, 0.99) AS DOUBLE), 0) AS BIGINT) AS hi_c,
-        |    CAST(quantile_cont(pc, 0.75) AS DOUBLE)
-        |      - CAST(quantile_cont(pc, 0.25) AS DOUBLE) AS iqr
-        |  FROM li GROUP BY 1
-        |), w AS (
-        |  SELECT li.l_returnflag,
-        |    LEAST(GREATEST(pc, lo_c), hi_c) AS wv,
-        |    CASE WHEN pc < lo_c THEN 1 ELSE 0 END AS cl,
-        |    CASE WHEN pc > hi_c THEN 1 ELSE 0 END AS ch,
-        |    lo_c, hi_c, iqr
-        |  FROM li JOIN b ON li.l_returnflag = b.l_returnflag
-        |)
-        |SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(cl) AS BIGINT) AS n_lo, CAST(SUM(ch) AS BIGINT) AS n_hi,
-        |  MIN(lo_c) AS lo_c, MIN(hi_c) AS hi_c,
-        |  ${ratio6Sql("SUM(wv)", "COUNT(*)")} AS mean_w,
-        |  ROUND(MIN(iqr), 6) AS iqr_r
-        |FROM w GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    // full link-scored relation, top-50 by common-neighbor count
-    "q_link_predict" ->
-      s"""WITH $linkCte
-         |SELECT u, w, cn, aa_r, jacc_r FROM lnk
-         |ORDER BY cn DESC, u, w LIMIT 50""".stripMargin,
-
-    // per-node top-3 by (rounded AA, partner) over the same relation
-    "q_link_recs" ->
-      s"""WITH $linkCte,
-         |both_dirs AS (
-         |  SELECT u AS node, w AS partner, aa_r FROM lnk
-         |  UNION ALL
-         |  SELECT w AS node, u AS partner, aa_r FROM lnk),
-         |rk AS (
-         |  SELECT node, partner, aa_r,
-         |    ROW_NUMBER() OVER (PARTITION BY node
-         |      ORDER BY aa_r DESC, partner) AS rnk
-         |  FROM both_dirs)
-         |SELECT node, partner, aa_r, rnk FROM rk WHERE rnk <= 3
-         |ORDER BY node, rnk""".stripMargin,
-
-    // exact decimal moments, float only at the final divisions — the
-    // centered moments EXACT in HUGEINT (mirrors the engine's exact
-    // DECIMAL(38,0) — DuckDB would silently fall back to DOUBLE on a
-    // >38-width decimal product); slope/intercept via sratio6 (exact
-    // integer 6-dp rounding), r² via det6 on the identical double chain
-    "q_ols_fit" ->
-      s"""WITH li AS (
-        |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS x,
+        |  SELECT p_brand, CAST(l_quantity AS BIGINT) AS x,
         |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y
-        |  FROM lineitem),
+        |  FROM lineitem JOIN part ON p_partkey = l_partkey),
         |m AS (
-        |  SELECT l_returnflag,
+        |  SELECT p_brand,
         |    CAST(COUNT(*) AS HUGEINT) AS n,
         |    CAST(SUM(CAST(x AS DECIMAL(38,0))) AS HUGEINT) AS sx,
         |    CAST(SUM(CAST(y AS DECIMAL(38,0))) AS HUGEINT) AS sy,
         |    CAST(SUM(CAST(x*x AS DECIMAL(38,0))) AS HUGEINT) AS sxx,
-        |    CAST(SUM(CAST(x*y AS DECIMAL(38,0))) AS HUGEINT) AS sxy,
-        |    CAST(SUM(CAST(y*y AS DECIMAL(38,0))) AS HUGEINT) AS syy
+        |    CAST(SUM(CAST(x*y AS DECIMAL(38,0))) AS HUGEINT) AS sxy
         |  FROM li GROUP BY 1),
         |c AS (
-        |  SELECT l_returnflag, n, sx, sy,
+        |  SELECT p_brand, n, sx, sy,
         |    (n*sxx - sx*sx) AS sxxc,
-        |    (n*sxy - sx*sy) AS sxyc,
-        |    (n*syy - sy*sy) AS syyc
+        |    (n*sxy - sx*sy) AS sxyc
         |  FROM m)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
+        |SELECT p_brand, CAST(n AS BIGINT) AS n_rows,
         |  ${sratio6Sql("sxyc", "sxxc")} AS slope_r,
-        |  ${sratio6Sql("sy*sxxc - sxyc*sx", "n*sxxc")} AS intercept_r,
-        |  ${det6Sql("CAST(sxyc AS DOUBLE) * CAST(sxyc AS DOUBLE) / " +
-                     "(CAST(sxxc AS DOUBLE) * CAST(syyc AS DOUBLE))")} AS r2_r
-        |FROM c ORDER BY l_returnflag""".stripMargin,
+        |  ${sratio6Sql("sy*sxxc - sxyc*sx", "n*sxxc")} AS intercept_r
+        |FROM c ORDER BY p_brand""".stripMargin)),
 
-    "q_ols_multi" ->
-      s"""WITH li AS (
-        |  SELECT CAST(l_quantity AS BIGINT) AS x1,
-        |    CAST(ROUND(l_discount*100) AS BIGINT) AS x2,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-        |    CAST(SUM(CAST(x1 AS DECIMAL(38,0))) AS HUGEINT) AS s1,
-        |    CAST(SUM(CAST(x2 AS DECIMAL(38,0))) AS HUGEINT) AS s2,
-        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) AS HUGEINT) AS sy,
-        |    CAST(SUM(CAST(x1*x1 AS DECIMAL(38,0))) AS HUGEINT) AS s11,
-        |    CAST(SUM(CAST(x1*x2 AS DECIMAL(38,0))) AS HUGEINT) AS s12,
-        |    CAST(SUM(CAST(x2*x2 AS DECIMAL(38,0))) AS HUGEINT) AS s22,
-        |    CAST(SUM(CAST(x1*y AS DECIMAL(38,0))) AS HUGEINT) AS s1y,
-        |    CAST(SUM(CAST(x2*y AS DECIMAL(38,0))) AS HUGEINT) AS s2y,
-        |    CAST(SUM(CAST(y*y AS DECIMAL(38,0))) AS HUGEINT) AS syy
-        |  FROM li),
-        |c AS (
-        |  SELECT n, s1, s2, sy,
-        |    CAST(n*s11 - s1*s1 AS DOUBLE) AS c11,
-        |    CAST(n*s12 - s1*s2 AS DOUBLE) AS c12,
-        |    CAST(n*s22 - s2*s2 AS DOUBLE) AS c22,
-        |    CAST(n*s1y - s1*sy AS DOUBLE) AS c1y,
-        |    CAST(n*s2y - s2*sy AS DOUBLE) AS c2y,
-        |    CAST(n*syy - sy*sy AS DOUBLE) AS cyy
-        |  FROM m),
-        |b AS (
-        |  SELECT n, s1, s2, sy, c1y, c2y, cyy,
-        |    (c22 * c1y - c12 * c2y) / (c11 * c22 - c12 * c12) AS b1,
-        |    (c11 * c2y - c12 * c1y) / (c11 * c22 - c12 * c12) AS b2
-        |  FROM c)
-        |SELECT CAST(n AS BIGINT) AS n_rows,
-        |  ${det6Sql("b1")} AS b1_r, ${det6Sql("b2")} AS b2_r,
-        |  ${det6Sql("(CAST(sy AS DOUBLE) - b1 * CAST(s1 AS DOUBLE) " +
-                     "- b2 * CAST(s2 AS DOUBLE)) / CAST(n AS DOUBLE)")}
-        |    AS intercept_r,
-        |  ${det6Sql("(b1 * c1y + b2 * c2y) / cyy")} AS r2_r
-        |FROM b""".stripMargin,
-
-    // per-cell exact DECIMAL numerator, float per-cell division; the
-    // oracle's single-node SUM vs the engine's sorted fold differ only
-    // below the 6dp contract
-    "q_chi2_independence" ->
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
-        |nums AS (
-        |  SELECT c.o, c.source, c.lang,
-        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
-        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
-        |      AS DOUBLE) AS numd,
-        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
-        |    CAST(t.n_total AS DOUBLE) AS ntd
-        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
-        |terms AS (
-        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
-        |  FROM nums)
-        |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
-        |  (COUNT(DISTINCT source) - 1) * (COUNT(DISTINCT lang) - 1) AS dof,
-        |  CAST(SUM(o) AS BIGINT) AS n_total
-        |FROM terms""".stripMargin,
-
-    // exact HUGEINT/DECIMAL numerators; det6 on the mirrored float tail
-    "q_chi2_residuals" ->
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells)
-        |SELECT c.source, c.lang, c.o,
-        |  ${ratio6Sql("CAST(r.rtot AS HUGEINT) * cl.ctot", "t.n_total")}
-        |    AS expected_r,
-        |  ${det6Sql(
-             "CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0)) " +
-               "- CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) / " +
-               "sqrt(CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) " +
-               "* CAST(t.n_total AS DOUBLE))")} AS resid_r
-        |FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t
-        |ORDER BY c.source, c.lang""".stripMargin,
-
-    "q_degree_dist" ->
-      s"""WITH $coPurchaseCte,
-         |sym AS (SELECT u AS a FROM edges UNION ALL SELECT v FROM edges),
-         |deg AS (SELECT a, COUNT(*) AS deg FROM sym GROUP BY a)
-         |SELECT deg, COUNT(*) AS n_nodes
-         |FROM deg GROUP BY deg ORDER BY deg""".stripMargin,
-
-    // the same capped wedge expansion; triangles via EXISTS against the
-    // canonical edge set; 2T/(d(d−1)) on exact integers
-    "q_lcc_topk" ->
-      s"""WITH $coPurchaseCte,
-         |sym AS (SELECT u AS a, v AS b FROM edges
-         |        UNION ALL SELECT v AS a, u AS b FROM edges),
-         |deg AS (SELECT a, COUNT(*) AS deg FROM sym GROUP BY a),
-         |capped_sym AS MATERIALIZED (
-         |  SELECT a, b FROM (
-         |    SELECT a, b, ROW_NUMBER() OVER (PARTITION BY a ORDER BY b) AS rn
-         |    FROM sym) WHERE rn <= 64),
-         |wedges AS (
-         |  SELECT x.a AS mid, x.b AS u, y.b AS w
-         |  FROM capped_sym x JOIN capped_sym y
-         |    ON x.a = y.a AND x.b < y.b),
-         |tri AS (
-         |  SELECT mid, COUNT(*) AS t_v FROM wedges wg
-         |  WHERE EXISTS (SELECT 1 FROM edges e
-         |                WHERE e.u = wg.u AND e.v = wg.w)
-         |  GROUP BY mid)
-         |SELECT d.a AS node, d.deg, COALESCE(t.t_v, 0) AS t_v,
-         |  ${ratio6Sql("COALESCE(t.t_v, 0) * 2", "d.deg * (d.deg - 1)")}
-         |    AS lcc_r
-         |FROM deg d LEFT JOIN tri t ON t.mid = d.a
-         |WHERE d.deg >= 3
-         |ORDER BY lcc_r DESC, node LIMIT 20""".stripMargin,
-
-    // ranks via ROW_NUMBER over the same ascending total order; exact
-    // decimal sums; one division
-    "q_gini_revenue" ->
+    // Herfindahl–Hirschman revenue concentration per nation (the
+    // market-structure audit next to q_gini_revenue's Lorenz scalar):
+    // HHI = Σ shareᵢ² = Σ revᵢ² / (Σ revᵢ)² — ONE exact integer ratio
+    // (ratio6), zero float ops; per-customer revenue is one rollup and
+    // the nation key rides a broadcast dimension join.
+    Query("q_hhi", (s, d) => {
+      val dec = (c: Column) => c.cast("decimal(38,0)")
+      val rev = t(s, d, "orders").groupBy(col("o_custkey"))
+        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
+        .join(broadcast(t(s, d, "customer")
+          .select(col("c_custkey").as("o_custkey"),
+            col("c_nationkey").cast("long").as("nation"))),
+          Seq("o_custkey"))
+      rev.groupBy(col("nation"))
+        .agg(count(lit(1)).as("n_custs"),
+          sum(col("rev_c")).as("total_c"),
+          sum(dec(col("rev_c")) * dec(col("rev_c"))).as("sq"))
+        .select(col("nation"), col("n_custs"), col("total_c"),
+          ratio6(col("sq"),
+            dec(col("total_c")) * dec(col("total_c"))).as("hhi_r"))
+        .orderBy(col("nation"))
+    }, Sql(
+      // the same single exact ratio Σrev² / (Σrev)²
       s"""WITH rev AS (
-        |  SELECT l_partkey,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
+        |  SELECT o_custkey,
+        |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
         |      AS rev_c
-        |  FROM lineitem GROUP BY 1),
-        |rk AS (
-        |  SELECT rev_c,
-        |    ROW_NUMBER() OVER (ORDER BY rev_c, l_partkey) AS r
-        |  FROM rev),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-        |    SUM(CAST(rev_c AS DECIMAL(38,0))) AS sx,
-        |    SUM(CAST(r AS DECIMAL(38,0)) * CAST(rev_c AS DECIMAL(38,0))) AS srx
-        |  FROM rk)
-        |SELECT CAST(n AS BIGINT) AS n_keys,
-        |  ${sratio6Sql("CAST(2*srx - (n+1)*sx AS HUGEINT)",
-                        "CAST(n*sx AS HUGEINT)")} AS gini_r
-        |FROM m""".stripMargin,
-
-    // per-flag cumulative weights (single-node window is fine for the
-    // oracle); integer 2·cum ≥ total threshold
-    "q_weighted_median" ->
-      """WITH li AS (
-        |  SELECT l_returnflag,
-        |    CAST(ROUND(l_extendedprice*100) AS BIGINT) AS price_c,
-        |    CAST(l_quantity AS BIGINT) AS w, l_orderkey, l_linenumber
-        |  FROM lineitem),
-        |run AS (
-        |  SELECT l_returnflag, price_c, w,
-        |    SUM(w) OVER (PARTITION BY l_returnflag
-        |      ORDER BY price_c, l_orderkey, l_linenumber
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumg,
-        |    SUM(w) OVER (PARTITION BY l_returnflag) AS tot
-        |  FROM li)
-        |SELECT l_returnflag, CAST(MIN(tot) AS BIGINT) AS w_total,
-        |  MIN(price_c) AS wmedian_c
-        |FROM run WHERE 2 * cumg >= tot
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // the textbook running-sum window IS fine for a single-node oracle;
-    // integer thresholds mirror exactly (window SUM is HUGEINT — the
-    // comparisons stay integral)
-    "q_abc_classes" ->
-      s"""WITH rev AS (
-        |  SELECT l_partkey,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
-        |      AS rev_c
-        |  FROM lineitem GROUP BY 1),
-        |run AS (
-        |  SELECT l_partkey, rev_c,
-        |    SUM(rev_c) OVER (ORDER BY rev_c DESC, l_partkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_c,
-        |    SUM(rev_c) OVER () AS tot
-        |  FROM rev),
-        |cls AS (
-        |  SELECT CASE WHEN 100 * cum_c <= 80 * tot THEN 'A'
-        |              WHEN 100 * cum_c <= 95 * tot THEN 'B'
-        |              ELSE 'C' END AS abc_class,
-        |    rev_c, tot
-        |  FROM run)
-        |SELECT abc_class, COUNT(*) AS n_parts,
-        |  CAST(SUM(rev_c) AS BIGINT) AS rev_c,
-        |  ${ratio6Sql("SUM(rev_c)", "MIN(tot)")} AS share_r
-        |FROM cls GROUP BY 1 ORDER BY abc_class""".stripMargin,
-
-    // unrolled 3-hop BFS (the khop/kcore MATERIALIZED discipline);
-    // harmonic sum exact as Σ 12//d
-    "q_closeness" ->
-      s"""WITH $coPurchaseCte,
-         |sym AS (SELECT u AS a, v AS b FROM edges
-         |        UNION ALL SELECT v AS a, u AS b FROM edges),
-         |nodes AS (SELECT DISTINCT a AS node FROM sym),
-         |ng AS (SELECT COUNT(*) AS n_nodes FROM nodes),
-         |seeds AS (SELECT node AS seed FROM nodes ORDER BY node LIMIT 5),
-         |f1 AS MATERIALIZED (
-         |  SELECT s.seed, e.b AS node FROM seeds s JOIN sym e ON e.a = s.seed
-         |  WHERE e.b <> s.seed GROUP BY 1, 2),
-         |f2 AS MATERIALIZED (
-         |  SELECT f.seed, e.b AS node FROM f1 f JOIN sym e ON e.a = f.node
-         |  WHERE e.b <> f.seed
-         |    AND NOT EXISTS (SELECT 1 FROM f1 p
-         |                    WHERE p.seed = f.seed AND p.node = e.b)
-         |  GROUP BY 1, 2),
-         |f3 AS MATERIALIZED (
-         |  SELECT f.seed, e.b AS node FROM f2 f JOIN sym e ON e.a = f.node
-         |  WHERE e.b <> f.seed
-         |    AND NOT EXISTS (SELECT 1 FROM f1 p
-         |                    WHERE p.seed = f.seed AND p.node = e.b)
-         |    AND NOT EXISTS (SELECT 1 FROM f2 p
-         |                    WHERE p.seed = f.seed AND p.node = e.b)
-         |  GROUP BY 1, 2),
-         |allv AS (
-         |  SELECT seed, node, CAST(1 AS BIGINT) AS dist FROM f1
-         |  UNION ALL SELECT seed, node, 2 FROM f2
-         |  UNION ALL SELECT seed, node, 3 FROM f3)
-         |SELECT a.seed, COUNT(*) AS n_reached,
-         |  CAST(SUM(dist) AS BIGINT) AS sum_dist,
-         |  CAST(SUM(12 // dist) AS BIGINT) AS harm12,
-         |  ${ratio6Sql("SUM(12 // dist)", "(g.n_nodes - 1) * 12")}
-         |    AS closeness_r
-         |FROM allv a, ng g GROUP BY a.seed, g.n_nodes
-         |ORDER BY a.seed""".stripMargin,
-
-    // exact decimal moments; floats only in the per-group terms and the
-    // final F ratio, op order mirrored
-    "q_anova_f" ->
-      s"""WITH x AS (SELECT source, n_chars AS x FROM documents),
-        |g AS (
-        |  SELECT source, CAST(COUNT(*) AS DECIMAL(38,0)) AS n_g,
-        |    SUM(CAST(x AS DECIMAL(38,0))) AS s_g
-        |  FROM x GROUP BY 1),
-        |tt AS (
-        |  SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-        |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-        |    SUM(CAST(x*x AS DECIMAL(38,0))) AS sxx
-        |  FROM x),
-        |f AS (
-        |  SELECT COUNT(*) AS k_groups,
-        |    SUM(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE)
-        |      / CAST(n_g AS DOUBLE)) AS sum_t
-        |  FROM g)
-        |SELECT k_groups, CAST(n AS BIGINT) AS n_total,
-        |  ${det6Sql("sum_t - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) " +
-                     "/ CAST(n AS DOUBLE)")} AS ssb_r,
-        |  ${det6Sql("CAST(sxx AS DOUBLE) - sum_t")} AS ssw_r,
-        |  ${det6Sql("((sum_t - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) " +
-                     "/ CAST(n AS DOUBLE)) / CAST(k_groups - 1 AS DOUBLE)) / " +
-                     "((CAST(sxx AS DOUBLE) - sum_t) / " +
-                     "(CAST(n AS DOUBLE) - CAST(k_groups AS DOUBLE)))")} AS f_r
-        |FROM f, tt""".stripMargin,
-
-    "q_entropy_report" -> entropyOracle,
-
-    // string-based digit extraction; exact counts; ln-ratio expectation
-    "q_benford" ->
-      s"""WITH dg AS (
-        |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice*100) AS BIGINT)
-        |    AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-        |    COUNT(*) AS n_obs
         |  FROM orders GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS nt FROM dg)
-        |SELECT digit, n_obs,
-        |  ${ratio6Sql("n_obs", "nt")} AS freq_r,
-        |  ${det6Sql("ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0)")} AS exp_r
-        |FROM dg, tt ORDER BY digit""".stripMargin,
-
-    // exact integer D numerator over the value domain; exact ratio6 tail
-    "q_ks_two_sample" ->
-      s"""WITH dd AS (
-        |  SELECT source, n_chars FROM documents
-        |  WHERE source IN ('src0', 'src1')),
-        |cells AS (
-        |  SELECT n_chars,
-        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM dd GROUP BY 1),
-        |cum AS (
-        |  SELECT n_chars,
-        |    SUM(c1) OVER (ORDER BY n_chars
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f1,
-        |    SUM(c2) OVER (ORDER BY n_chars
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f2
-        |  FROM cells),
-        |tot AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM dd),
+        |j AS (
+        |  SELECT CAST(c_nationkey AS BIGINT) AS nation, rev_c
+        |  FROM rev JOIN customer ON c_custkey = o_custkey),
         |agg AS (
-        |  SELECT n1, n2,
-        |    MAX(CAST(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-        |      - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
-        |      AS DECIMAL(38,0))) AS d_num
-        |  FROM cum, tot GROUP BY n1, n2)
-        |SELECT n1, n2, CAST(d_num AS BIGINT) AS d_num,
-        |  ${ratio6Sql("d_num", "CAST(n1 AS HUGEINT) * CAST(n2 AS HUGEINT)")} AS d_r
-        |FROM agg""".stripMargin,
-
-    // the same tied-rank identity in HUGEINT; the z chain is the
-    // engine's exact op order (left-assoc products, /2.0 and /12.0
-    // literal divisions)
-    "q_mann_whitney" -> {
-      val du1 = "(CAST(u1_x2 AS DOUBLE) / 2.0)"
-      val n1d = "CAST(n1 AS DOUBLE)"
-      val n2d = "CAST(n2 AS DOUBLE)"
-      val nd = "CAST(n1 + n2 AS DOUBLE)"
-      val mu = s"(($n1d * $n2d) / 2.0)"
-      val vr = s"((($n1d * $n2d) / 12.0) * (($nd + 1.0) - " +
-        s"(CAST(t_ties AS DOUBLE) / ($nd * ($nd - 1.0)))))"
-      s"""WITH li AS (
-        |  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS x
-        |  FROM lineitem WHERE l_returnflag IN ('A', 'R')),
-        |cells AS (
-        |  SELECT x,
-        |    CAST(SUM(CASE WHEN g = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS m1,
-        |    CAST(COUNT(*) AS BIGINT) AS m
-        |  FROM li GROUP BY 1),
-        |ranked AS (
-        |  SELECT x, m1, m,
-        |    CAST(COALESCE(SUM(m) OVER (ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM cells),
-        |agg AS (
-        |  SELECT
-        |    CAST(SUM(CAST(m1 AS HUGEINT)) AS DECIMAL(38,0)) AS n1,
-        |    CAST(SUM(CAST(m - m1 AS HUGEINT)) AS DECIMAL(38,0)) AS n2,
-        |    CAST(SUM(CAST(m1 AS HUGEINT) *
-        |      CAST(cb * 2 + m + 1 AS HUGEINT)) AS DECIMAL(38,0)) AS r1_x2,
-        |    CAST(SUM(CAST(m AS HUGEINT) * CAST(m AS HUGEINT) *
-        |      CAST(m AS HUGEINT) - CAST(m AS HUGEINT))
-        |      AS DECIMAL(38,0)) AS t_ties
-        |  FROM ranked),
-        |base AS (
-        |  SELECT n1, n2,
-        |    CAST(r1_x2 - n1 * (n1 + 1) AS DECIMAL(38,0)) AS u1_x2, t_ties
-        |  FROM agg)
-        |SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-        |  CAST(u1_x2 AS BIGINT) AS u1_x2, CAST(t_ties AS BIGINT) AS t_ties,
-        |  ${det6Sql(s"(($du1 - $mu) / sqrt($vr))")} AS z_r
-        |FROM base""".stripMargin
-    },
-
-    // the same capped blocked-candidate CTE as q_fuzzy_parts/q_fuzzy_jw
-    // (rn<=1000 + overflow star-attach), length band as post-filter;
-    // both engines' levenshtein is the textbook DP — exact integers
-    "q_fuzzy_edit" ->
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |)
-        |SELECT a AS name_a, b AS name_b,
-        |  CAST(levenshtein(a, b) AS BIGINT) AS dist
-        |FROM cand
-        |WHERE abs(len(a) - len(b)) <= 3 AND levenshtein(a, b) <= 3
-        |ORDER BY name_a, name_b""".stripMargin,
-
-    // the same (count desc, value asc) deterministic tie-break
-    "q_group_mode" ->
-      s"""WITH c AS (
-        |  SELECT c_mktsegment, c_nationkey, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM customer GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_total
-        |  FROM customer GROUP BY 1),
-        |r AS (
-        |  SELECT c_mktsegment, c_nationkey, n,
-        |    ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-        |      ORDER BY n DESC, c_nationkey) AS rn
-        |  FROM c)
-        |SELECT r.c_mktsegment,
-        |  CAST(r.c_nationkey AS BIGINT) AS mode_nation,
-        |  r.n AS n_mode, tot.n_total,
-        |  ${ratio6Sql("r.n", "tot.n_total")} AS share_r
-        |FROM r JOIN tot USING (c_mktsegment)
-        |WHERE rn = 1 ORDER BY r.c_mktsegment""".stripMargin
+        |  SELECT nation, CAST(COUNT(*) AS BIGINT) AS n_custs,
+        |    CAST(SUM(rev_c) AS BIGINT) AS total_c,
+        |    CAST(SUM(CAST(rev_c AS HUGEINT) * CAST(rev_c AS HUGEINT))
+        |      AS HUGEINT) AS sq
+        |  FROM j GROUP BY 1)
+        |SELECT nation, n_custs, total_c,
+        |  ${ratio6Sql("sq",
+             "CAST(total_c AS HUGEINT) * CAST(total_c AS HUGEINT)")} AS hhi_r
+        |FROM agg ORDER BY nation""".stripMargin))
   )
 
   /** The [[graft.operators.Graph.pageRank]] recurrence unrolled into

@@ -25,10 +25,10 @@ object CoreQueries {
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100, 0).cast("long")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val declarations: Seq[Query] = Seq(
     // A1/A2-style pricing summary (TPC-H Q1 shape): group-agg with
     // map-side partial combine; single shuffle on the 6-value group key.
-    "q1_agg" -> ((s, d) => {
+    Query("q1_agg", (s, d) => {
       t(s, d, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -42,67 +42,7 @@ object CoreQueries {
           ratio6(sum(cents(col("l_discount"))), count(lit(1)) * 100)
             .as("avg_disc"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // Projection + predicate — both pushed into the parquet scan
-    // (PushedFilters / ReadSchema visible in explain; SURVEY §2.2 P2/P4).
-    "q_scan_project" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_quantity"))
-        .filter(col("l_quantity") >= 45.0)
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // Derived MovieLens-shape ratings view (FIXTURES.md §2) — the join that
-    // feeds the whole recommendation path.
-    "q_ratings" -> ((s, d) => {
-      Tables.ratings(s, d)
-        .select(col("userId"), col("movieId"), col("rating"),
-          unix_timestamp(col("ts")).as("ts_epoch"))
-        .orderBy(col("userId"), col("movieId"), col("rating"), col("ts_epoch"))
-    }),
-
-    // Flagship: full popularity pipeline (reference popularity_model.py:48-59).
-    "q_pop_top100" -> ((s, d) => {
-      Popularity.topMovies(Tables.ratings(s, d), 0.9, 100)
-        .select(col("movieId"), col("avg_rating"), col("user_count"),
-          round(col("score"), 6).as("score_r"))
-        .orderBy(col("score_r").desc, col("movieId"))
-    }),
-
-    // The two scalar statistics of the popularity model as a 1-row query
-    // (reference collected them to the driver, popularity_model.py:49-50).
-    "q_pop_stats" -> ((s, d) => {
-      Popularity.aggRatings(Tables.ratings(s, d))
-        .agg(
-          round(avg(col("avg_rating")), 6).as("m"),
-          round(expr("percentile(user_count, 0.9)"), 6).as("q"))
-    }),
-
-    // Time-decayed popularity: every rating votes rating/(1 + age/30d)
-    // of its value (hyperbolic decay — PURE arithmetic, deliberately not
-    // exp(): libm exp is not bit-identical across engines, division is).
-    // The freshness-weighted ranking every feed/trending surface runs;
-    // the anchor date is the corpus max (deterministic from data, one
-    // 1-row broadcast). Top-100 by (rounded score, movieId) —
-    // TakeOrdered, no global sort.
-    "q_pop_decayed" -> ((s, d) => {
-      val r = Tables.ratings(s, d)
-      val mx = r.agg(max(col("ts").cast("date")).as("mx"))
-      r.crossJoin(broadcast(mx))
-        .withColumn("age", datediff(col("mx"), col("ts").cast("date")))
-        .groupBy(col("movieId"))
-        .agg(
-          round(sum(col("rating") / (lit(1.0) + col("age") / lit(30.0))), 6)
-            .as("decayed_r"),
-          count(lit(1)).as("n"))
-        .orderBy(col("decayed_r").desc, col("movieId"))
-        .limit(100)
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
+    }, Sql(
       s"""SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(ROUND(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
         |  CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_c,
@@ -111,21 +51,41 @@ object CoreQueries {
         |  ${ratio6Sql("SUM(CAST(ROUND(l_discount*100) AS BIGINT))",
                        "COUNT(*) * 100")} AS avg_disc
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "q_scan_project" ->
+    // Projection + predicate — both pushed into the parquet scan
+    // (PushedFilters / ReadSchema visible in explain; SURVEY §2.2 P2/P4).
+    Query("q_scan_project", (s, d) => {
+      t(s, d, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_quantity"))
+        .filter(col("l_quantity") >= 45.0)
+        .orderBy(col("l_orderkey"), col("l_linenumber"))
+    }, Sql(
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
         |FROM lineitem WHERE l_quantity >= 45.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
 
-    "q_ratings" ->
+    // Derived MovieLens-shape ratings view (FIXTURES.md §2) — the join that
+    // feeds the whole recommendation path.
+    Query("q_ratings", (s, d) => {
+      Tables.ratings(s, d)
+        .select(col("userId"), col("movieId"), col("rating"),
+          unix_timestamp(col("ts")).as("ts_epoch"))
+        .orderBy(col("userId"), col("movieId"), col("rating"), col("ts_epoch"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql}
          |SELECT userId, movieId, rating,
          |       CAST(date_part('epoch', ts) AS BIGINT) AS ts_epoch
          |FROM ratings
-         |ORDER BY userId, movieId, rating, ts_epoch""".stripMargin,
+         |ORDER BY userId, movieId, rating, ts_epoch""".stripMargin)),
 
-    "q_pop_top100" ->
+    // Flagship: full popularity pipeline (reference popularity_model.py:48-59).
+    Query("q_pop_top100", (s, d) => {
+      Popularity.topMovies(Tables.ratings(s, d), 0.9, 100)
+        .select(col("movieId"), col("avg_rating"), col("user_count"),
+          round(col("score"), 6).as("score_r"))
+        .orderBy(col("score_r").desc, col("movieId"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql},
          |agg AS (
          |  SELECT movieId, AVG(rating) AS avg_rating, COUNT(userId) AS user_count
@@ -139,9 +99,16 @@ object CoreQueries {
          |FROM agg, stats
          |WHERE user_count >= q
          |ORDER BY score_r DESC, movieId
-         |LIMIT 100""".stripMargin,
+         |LIMIT 100""".stripMargin)),
 
-    "q_pop_stats" ->
+    // The two scalar statistics of the popularity model as a 1-row query
+    // (reference collected them to the driver, popularity_model.py:49-50).
+    Query("q_pop_stats", (s, d) => {
+      Popularity.aggRatings(Tables.ratings(s, d))
+        .agg(
+          round(avg(col("avg_rating")), 6).as("m"),
+          round(expr("percentile(user_count, 0.9)"), 6).as("q"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql},
          |agg AS (
          |  SELECT movieId, AVG(rating) AS avg_rating, COUNT(userId) AS user_count
@@ -149,11 +116,30 @@ object CoreQueries {
          |)
          |SELECT ROUND(AVG(avg_rating), 6) AS m,
          |       ROUND(quantile_cont(user_count, 0.9), 6) AS q
-         |FROM agg""".stripMargin,
+         |FROM agg""".stripMargin), headline = false),
 
-    // literal arithmetic mirrors the Spark side exactly: CAST AS DOUBLE
-    // divisors (a bare 30.0 would be DECIMAL math in DuckDB)
-    "q_pop_decayed" ->
+    // Time-decayed popularity: every rating votes rating/(1 + age/30d)
+    // of its value (hyperbolic decay — PURE arithmetic, deliberately not
+    // exp(): libm exp is not bit-identical across engines, division is).
+    // The freshness-weighted ranking every feed/trending surface runs;
+    // the anchor date is the corpus max (deterministic from data, one
+    // 1-row broadcast). Top-100 by (rounded score, movieId) —
+    // TakeOrdered, no global sort.
+    Query("q_pop_decayed", (s, d) => {
+      val r = Tables.ratings(s, d)
+      val mx = r.agg(max(col("ts").cast("date")).as("mx"))
+      r.crossJoin(broadcast(mx))
+        .withColumn("age", datediff(col("mx"), col("ts").cast("date")))
+        .groupBy(col("movieId"))
+        .agg(
+          round(sum(col("rating") / (lit(1.0) + col("age") / lit(30.0))), 6)
+            .as("decayed_r"),
+          count(lit(1)).as("n"))
+        .orderBy(col("decayed_r").desc, col("movieId"))
+        .limit(100)
+    }, Sql(
+      // literal arithmetic mirrors the Spark side exactly: CAST AS DOUBLE
+      // divisors (a bare 30.0 would be DECIMAL math in DuckDB)
       s"""WITH ${Tables.ratingsSql},
          |mx AS (SELECT MAX(CAST(ts AS DATE)) AS mx FROM ratings)
          |SELECT movieId,
@@ -162,6 +148,6 @@ object CoreQueries {
          |      / CAST(30 AS DOUBLE))), 6) AS decayed_r,
          |  COUNT(*) AS n
          |FROM ratings GROUP BY movieId
-         |ORDER BY decayed_r DESC, movieId LIMIT 100""".stripMargin
+         |ORDER BY decayed_r DESC, movieId LIMIT 100""".stripMargin))
   )
 }

@@ -287,1711 +287,6 @@ object EventQueries {
     (s"($ew) / ${wts.sum}", s"($ma) * 1.0 / $ewmaK.0")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // tumbling 1h windows via window() — the batch twin of
-    // EventStreams.tumblingCounts
-    "q_events_hourly" -> ((s, d) => {
-      ev(s, d)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
-        .select(col("window.start").cast("string").as("window_start"),
-          col("event_type"), col("n"), col("value_c"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // HOPPING (sliding) 1h windows every 15 min — the third window kind
-    // next to tumbling (q_events_hourly) and session
-    // (q_events_session_window): each event lands in exactly 4
-    // overlapping windows (Spark aligns hop starts to epoch 0, so the
-    // oracle reproduces membership as slot−k for k∈0..3). Same epoch-
-    // second output convention; same streaming operator class as
-    // tumblingCounts (window() with a slide).
-    "q_events_hopping" -> ((s, d) => {
-      ev(s, d)
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
-        .select(unix_timestamp(col("window.start")).as("start_sec"),
-          col("event_type"), col("n"), col("value_c"))
-        .orderBy(col("start_sec"), col("event_type"))
-    }),
-
-    // gap-based sessionization (30 min), batch gaps-and-islands form of
-    // EventStreams.sessionize
-    "q_events_sessions" -> ((s, d) => {
-      val base = ev(s, d).select(col("user_id"), col("event_id"),
-        unix_timestamp(col("ts")).as("sec"), col("value"))
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-      val flagged = base
-        .withColumn("prev_sec", lag(col("sec"), 1).over(wOrd))
-        .withColumn("new_session",
-          when(col("prev_sec").isNull || col("sec") - col("prev_sec") > 1800, 1L).otherwise(0L))
-      val sessions = flagged
-        .withColumn("session_id",
-          sum(col("new_session")).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-      sessions.groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("sec")).as("session_start_sec"),
-          max(col("sec")).as("session_end_sec"),
-          count(lit(1)).as("n_events"),
-          sum(cents(col("value"))).as("value_c"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    // the BUILT-IN session_window in batch mode (same operator the
-    // streaming path uses) — cross-checked against the gaps-and-islands
-    // formulation in q_events_sessions via the DuckDB oracle: a session's
-    // end is its last event + gap.
-    "q_events_session_window" -> ((s, d) => {
-      ev(s, d)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("value_c"))
-        .select(col("user_id"),
-          unix_timestamp(col("session_window.start")).as("start_sec"),
-          unix_timestamp(col("session_window.end")).as("end_sec"),
-          col("n_events"), col("value_c"))
-        .orderBy(col("user_id"), col("start_sec"))
-    }),
-
-    // pivot: per-user event-type counts as columns (explicit value list →
-    // deterministic output schema)
-    "q_events_pivot" -> ((s, d) => {
-      ev(s, d)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .count()
-        .select(col("user_id"),
-          coalesce(col("click"), lit(0L)).as("n_click"),
-          coalesce(col("view"), lit(0L)).as("n_view"),
-          coalesce(col("purchase"), lit(0L)).as("n_purchase"),
-          coalesce(col("signup"), lit(0L)).as("n_signup"),
-          coalesce(col("error"), lit(0L)).as("n_error"))
-        .orderBy(col("user_id"))
-    }),
-
-    // JSON-ish prop extraction (regexp — identical semantics both engines)
-    "q_events_props" -> ((s, d) => {
-      ev(s, d)
-        .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long"))
-        .groupBy(pmod(col("k"), lit(10)).as("k_mod"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
-        .orderBy(col("k_mod"))
-    }),
-
-    // event-type funnel ordering per user: first signup → first purchase
-    // lag analysis (windowed min over conditional)
-    "q_events_funnel" -> ((s, d) => {
-      ev(s, d)
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "signup", unix_timestamp(col("ts")))).as("first_signup_sec"),
-          min(when(col("event_type") === "purchase", unix_timestamp(col("ts")))).as("first_purchase_sec"),
-          count(lit(1)).as("n_events"))
-        .withColumn("signup_to_purchase_sec",
-          when(col("first_signup_sec").isNotNull && col("first_purchase_sec").isNotNull
-            && (col("first_purchase_sec") >= col("first_signup_sec")),
-            col("first_purchase_sec") - col("first_signup_sec")))
-        .orderBy(col("user_id"))
-    }),
-
-    // as-of backward join (union+window form, AsofJoin scaladoc): each
-    // Robust trend over the daily event series (the drift-monitor pair
-    // every volume dashboard needs): Mann-Kendall S (Σ sign of all
-    // forward pairs — EXACT INTEGER, the nonparametric "is it trending"
-    // statistic) + the Theil-Sen slope (exact median of pairwise
-    // slopes — a 30% outlier-day contamination can't move it, unlike
-    // OLS) + the OLS slope from exact integer moments for contrast.
-    // Scale shape: the all-pairs expansion is over the AGGREGATED daily
-    // series — bounded by |calendar days|², which grows with TIME, not
-    // data volume (a decade is ~6.6M pairs); the median rank rides
-    // Rank.withGlobalRank (range-partitioned sort + offsets — never a
-    // single-partition window), and each pairwise slope is one exact
-    // integer division. Median convention: avg of ranks (m+1)/2 and
-    // (m+2)/2 (equal for odd m) — a 2-value IEEE avg is commutative,
-    // so the seam is engine-safe.
-    "q_trend_robust" -> ((s, d) => {
-      val daily = ev(s, d)
-        .select((unix_micros(col("ts")) / lit(86400000000L))
-          .cast("long").as("day"))
-        .groupBy(col("day")).agg(count(lit(1)).as("y"))
-        .localCheckpoint(true) // self-joined + the moments branch
-      val pairs = daily.select(col("day").as("di"), col("y").as("yi"))
-        .join(daily.select(col("day").as("dj"), col("y").as("yj")),
-          col("di") < col("dj"))
-        .select(col("di"), col("dj"),
-          when(col("yj") > col("yi"), 1L)
-            .when(col("yj") < col("yi"), -1L).otherwise(0L).as("sgn"),
-          ((col("yj") - col("yi")).cast("double") /
-            (col("dj") - col("di"))).as("slope"))
-        .localCheckpoint(true) // MK aggregate + the ranked-median pass
-      val mk = pairs.agg(sum(col("sgn")).as("mk_s"),
-        count(lit(1)).as("n_pairs"))
-      val (ranked, m) = graft.operators.Rank.withGlobalRank(
-        pairs, "rk", col("slope"), col("di"), col("dj"))
-      val (lo, hi) = ((m + 1) / 2, (m + 2) / 2)
-      val med = ranked.filter(col("rk") === lo || col("rk") === hi)
-        .agg(det6(avg(col("slope"))).as("ts_slope_r"))
-      val ols = daily.agg(
-        count(lit(1)).as("n_days"),
-        sum(col("day").cast("decimal(38,0)")).as("sx"),
-        sum(col("y").cast("decimal(38,0)")).as("sy"),
-        sum((col("day") * col("y")).cast("decimal(38,0)")).as("sxy"),
-        sum((col("day") * col("day")).cast("decimal(38,0)")).as("sxx"))
-        .select(col("n_days"),
-          sratio6(col("n_days").cast("decimal(38,0)") * col("sxy") -
-            col("sx") * col("sy"),
-            col("n_days").cast("decimal(38,0)") * col("sxx") -
-              col("sx") * col("sx")).as("ols_slope_r"))
-      ols.crossJoin(broadcast(mk)).crossJoin(broadcast(med))
-        .select(col("n_days"), col("n_pairs"), col("mk_s"),
-          col("ts_slope_r"), col("ols_slope_r"))
-    }),
-
-    // purchase event gets the user's most recent click at-or-before it.
-    // Microsecond epochs: distinct across events, so ties can't make the
-    // DuckDB ASOF oracle ambiguous.
-    "q_events_asof" -> ((s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
-      AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
-        attach = Map("click_id" -> "last_click_id"), rightTiebreak = "click_id")
-        .select(col("user_id"), col("event_id"), col("us"), col("last_click_id"))
-        .orderBy(col("user_id"), col("us"))
-    }),
-
-    // as-of FORWARD join: each purchase gets the user's NEXT click
-    // at-or-after it (same union+window operator, reversed sweep).
-    "q_events_asof_fwd" -> ((s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
-      AsofJoin.asofForward(purchases, clicks, "user_id", "us", "us",
-        attach = Map("click_id" -> "next_click_id"), rightTiebreak = "click_id")
-        .select(col("user_id"), col("event_id"), col("us"), col("next_click_id"))
-        .orderBy(col("user_id"), col("us"))
-    }),
-
-    // as-of NEAREST join (pandas merge_asof direction='nearest'): each
-    // purchase gets the user's click with the SMALLEST |Δt|, either
-    // side. Composition, not a new operator: the nearest match is by
-    // definition either the backward-nearest or the forward-nearest, so
-    // two single-shuffle sweeps + a least-distance pick on the unique
-    // event key answer it — never the |purchases|×|clicks| per-user
-    // candidate explosion the oracle's join form uses. Tie contract
-    // (mirrored EXACTLY in the oracle's rank ordering): equal distance
-    // prefers the EARLIER (backward) click; equal-time backward clicks
-    // resolve to the largest click_id, forward ones to the smallest
-    // (the two sweeps' own tiebreaks — the oracle's side-dependent
-    // CASE sign reproduces both).
-    "q_events_asof_nearest" -> ((s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
-      val b = AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
-        attach = Map("click_id" -> "b_id", "us" -> "b_us"),
-        rightTiebreak = "click_id")
-      val f = AsofJoin.asofForward(purchases, clicks, "user_id", "us", "us",
-        attach = Map("click_id" -> "f_id", "us" -> "f_us"),
-        rightTiebreak = "click_id")
-      b.join(f, Seq("user_id", "event_id", "us"))
-        .withColumn("db", col("us") - col("b_us"))
-        .withColumn("df", col("f_us") - col("us"))
-        .withColumn("nearest_click_id",
-          when(col("b_us").isNull, col("f_id"))
-            .when(col("f_us").isNull, col("b_id"))
-            .when(col("db") <= col("df"), col("b_id"))
-            .otherwise(col("f_id")))
-        .withColumn("d_us",
-          when(col("b_us").isNull, col("df"))
-            .when(col("f_us").isNull, col("db"))
-            .otherwise(least(col("db"), col("df"))))
-        .filter(col("nearest_click_id").isNotNull)
-        .select(col("user_id"), col("event_id"), col("us"),
-          col("nearest_click_id"), col("d_us"))
-        .orderBy(col("user_id"), col("us"))
-    }),
-
-    // interval join (batch twin of EventStreams.intervalJoin, which is the
-    // watermarked stream-stream form): every click by the same user within
-    // 10 minutes AFTER a view. µs epochs at the output edge.
-    "q_events_interval" -> ((s, d) => {
-      val e = ev(s, d)
-      val views = e.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      graft.streaming.EventStreams.intervalJoin(views, clicks, "10 minutes")
-        .select(col("user_id"),
-          col("a_id").as("view_id"), col("b_id").as("click_id"),
-          unix_micros(col("a_ts")).as("view_us"),
-          unix_micros(col("b_ts")).as("click_us"))
-        .orderBy(col("user_id"), col("view_us"), col("click_us"))
-    }),
-
-    // time-series RESAMPLE + gap fill: a dense hourly grid per event type
-    // (sequence over the global [min, max] hour span, exploded and
-    // broadcast-joined against the per-type dim), hours with no events
-    // zero-filled — the standard densification step before window models.
-    "q_events_gapfill" -> ((s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(col("event_type"),
-          (floor(unix_timestamp(col("ts")) / 3600) * 3600).as("hour_sec"))
-        .agg(count(lit(1)).as("n"))
-      val span = ev(s, d).agg(
-        (floor(min(unix_timestamp(col("ts"))) / 3600) * 3600).as("lo"),
-        (floor(max(unix_timestamp(col("ts"))) / 3600) * 3600).as("hi"))
-      val grid = span
-        .select(explode(sequence(col("lo"), col("hi"), lit(3600))).as("hour_sec"))
-        .crossJoin(ev(s, d).select(col("event_type")).distinct())
-      grid.join(hourly, Seq("event_type", "hour_sec"), "left")
-        .select(col("event_type"), col("hour_sec"),
-          coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy(col("event_type"), col("hour_sec"))
-    }),
-
-    // Spark 4 VARIANT type: parse_json once → typed variant_get path
-    // extraction — the semi-structured scale path (binary-encoded, no
-    // per-query regexp, shredding-ready), next to the from_json typed
-    // struct and the regexp fallback.
-    "q_events_variant" -> ((s, d) => {
-      Tables.events(s, d)
-        .withColumn("k", variant_get(parse_json(col("props")), "$.k", "long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // JSON prop parsing with an explicit schema (from_json — the typed
-    // path next to the regexp fallback in q_events_props)
-    "q_events_json" -> ((s, d) => {
-      ev(s, d)
-        .withColumn("j", from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))))
-        .select(col("event_id"), col("j.k").as("k"))
-        .filter(col("k").isNotNull)
-        .orderBy(col("event_id"))
-    }),
-
-    // multimodal: synthetic media table → metadata-real resize stage
-    "q_media_resize" -> ((s, d) => {
-      Multimodal.resize(Multimodal.syntheticMediaTable(Tables.documents(s, d)), 512)
-        .select(col("media_id"), col("kind"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("resized_width").cast("long").as("resized_width"),
-          col("resized_height").cast("long").as("resized_height"))
-        .orderBy(col("media_id"))
-    }),
-
-    // multimodal: video frame sampling over CONTAINER-PARSED metadata —
-    // frame counts and durations come from walking the real AVI bytes
-    // (VideoCodec.parseMeta reads the avih header), not a metadata
-    // column, then the explode pattern fans each clip into sampled
-    // frame indices with no byte fan-out (bytes dropped pre-explode).
-    // Still fully ORACLED: the generator derives clip shape from
-    // media_id, so DuckDB predicts what a correct parse must yield —
-    // the same generator-parity convention as q_media_resize.
-    "q_media_frames" -> ((s, d) => {
-      Multimodal.sampleFrames(
-        Multimodal.videoMeta(s.read.parquet(videoDir(s, d))).toDF()
-          .withColumn("kind", lit("video")), 3)
-        .select(col("media_id"), col("n_frames").cast("long").as("n_frames"),
-          col("duration_ms"), col("frame_idx").cast("long").as("frame_idx"))
-        .transform(graft.operators.Layout.boundedSort(
-          _, col("media_id"), col("frame_idx")))
-    }),
-
-    // multimodal: REAL video decode (MJPEG-in-AVI) — the RIFF container
-    // walked byte-for-byte (frame count cross-checked container header
-    // vs counted 00dc chunks) and every JPEG frame decoded through
-    // javax.imageio, per-clip Rec.601 luma from actual pixels.
-    // Rows-only (a JPEG decoder is not SQL-expressible); generator
-    // parity + determinism asserted in RecommendSpec.
-    "q_video_decode" -> ((s, d) => {
-      Multimodal.videoFeatures(s.read.parquet(videoDir(s, d)))
-        .toDF()
-        .select(col("media_id"),
-          col("vid_width").cast("long").as("vid_width"),
-          col("vid_height").cast("long").as("vid_height"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("n_frames_decoded").cast("long").as("n_frames_decoded"),
-          col("duration_ms"),
-          round(col("mean_luma"), 4).as("mean_luma_r"))
-        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
-    }),
-
-    // multimodal: batched feature extraction through the stub codec —
-    // DE-EXEMPTED r17 (VERDICT Next #2, the q_media_decode pattern):
-    // the stand-in model now emits EXACT INTEGER bucket sums from the
-    // splitmix stream of the content hash (StubCodec.featureSums), so
-    // the DuckDB oracle replays the whole pipeline (FNV-1a of the text
-    // → per-position splitmix → bucket-0 sum) with no codec; the float
-    // feature is derived via ExactRatio. The mapPartitions batch shape
-    // (the real-model contract) is unchanged.
-    "q_media_features" -> ((s, d) => {
-      val feats = Multimodal.extractFeatures(
-        Multimodal.syntheticMediaTable(Tables.documents(s, d)), dim = 16)
-      feats.toDF()
-        .select(col("media_id"), col("kind"), col("n_bytes"), col("content_hash"),
-          element_at(col("f_sums"), 1).as("f0_sum"),
-          sratio6(element_at(col("f_sums"), 1), lit(65536)).as("f0"))
-        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
-    }),
-
-    // multimodal: REAL image decode (javax.imageio) — genuine PNG bytes
-    // decoded at the mapPartitions codec boundary, stats from actual
-    // pixels. The PNG table is MATERIALIZED once per dir (binary-column
-    // parquet, the binaryFile-scan stand-in) so this line measures the
-    // DECODE, not the synthetic generator — the same build/serve split
-    // as the ANN index. PNG is lossless → fully deterministic;
-    // rows-only (a native decoder is not SQL-expressible). Width/height
-    // parity with the generator is asserted in RecommendSpec.
-    // multimodal DEDUP (r15, VERDICT Next #7a): perceptual aHash over
-    // REAL decoded pixels of the content-seeded PNG table — decode with
-    // javax.imageio at the codec boundary, NN-sample an 8×8 integer-luma
-    // grid, threshold against the grid mean (cross-multiplied — no
-    // division), pack into four 16-bit bands. PNG is lossless and the
-    // raster is a pure splitmix64 function of the text's FNV-1a hash, so
-    // the DuckDB oracle replays the ENTIRE pipeline (hash → dims →
-    // pixels → luma → bits) from `documents.text` without a decoder —
-    // the engine proves the real decode path, the oracle independently
-    // recomputes the expected pixels. Bytes never shuffle; only 4 small
-    // ints leave the codec.
-    "q_image_phash" -> ((s, d) => {
-      imagePhash(s, d)
-        .select(col("media_id"), col("img_width"), col("img_height"),
-          col("b0"), col("b1"), col("b2"), col("b3"))
-        .orderBy(col("media_id"))
-    }),
-
-    // image near-dup pairs over the aHash bands: the SimHash/LSH banding
-    // discipline applied to the multimodal column — 4 exact-match 16-bit
-    // band buckets (lossless for hamming ≤ 3 by pigeonhole), capped
-    // quadratic expansion + overflow star-attach (Dedup.bucketPairs, cap
-    // 256 mirrored in the oracle), then the exact hamming verify on the
-    // ≤ C(cap,2)-bounded candidates. Content-duplicate documents get
-    // bit-identical rasters by construction, so the verified pair set is
-    // the image twin of q_dedup_exact's cluster structure.
-    "q_image_phash_dups" -> ((s, d) => {
-      graft.operators.Dedup.bandedHashDups(imagePhash(s, d))
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // audio perceptual-hash over REAL decoded PCM (r16, VERDICT Next #4
-    // — the multimodal near-dup story completed: image landed r15):
-    // javax.sound.sampled parses the WAV container at the codec
-    // boundary, the samples fold into 64 frame-energy cells (Σ|v| +
-    // sample count, frame k = ⌊i·64/n⌋ — all-integer), and the DELTA
-    // hash compares adjacent frames' per-sample energies
-    // (cross-multiplied exact, Haitsma–Kalker style — see
-    // Multimodal.audioAHash for why a global mean threshold
-    // concentrates); bits pack into four 16-bit bands. PCM is lossless
-    // and the waveform is pure integer arithmetic of the content seed,
-    // so the DuckDB oracle replays the ENTIRE pipeline (FNV hash →
-    // samples → energies → bits) from `documents.text` with no
-    // decoder. Bytes never shuffle; the hash relation is checkpointed
-    // once per (context, dir) and shared with the dups query.
-    "q_audio_phash" -> ((s, d) => {
-      audioPhash(s, d)
-        .select(col("media_id"), col("n_samples"),
-          col("b0"), col("b1"), col("b2"), col("b3"))
-        .orderBy(col("media_id"))
-    }),
-
-    // audio near-dup pairs over the energy-signature bands — the same
-    // banded-hamming discipline as q_image_phash_dups via the SHARED
-    // Dedup.bandedHashDups pipeline (capped band buckets + overflow
-    // star-attach + exact hamming ≤ 3 verify). Content-duplicate
-    // documents get bit-identical WAVs by construction, so the verified
-    // pair set is the audio twin of q_dedup_exact's cluster structure.
-    "q_audio_phash_dups" -> ((s, d) => {
-      graft.operators.Dedup.bandedHashDups(audioPhash(s, d))
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // banded perceptual-hash bucket health (the q_minhash_bucket_health
-    // pattern for the multimodal families): bucketStats over BOTH
-    // modalities' real band relations, one row each. This is the
-    // observability hook the cap discipline leans on — n_truncated > 0
-    // is the "retune the banding" alarm, and max_bucket is the measured
-    // blast-radius bound (the audio hash redesign in r16 was driven by
-    // exactly this census read by hand; now it's a driver-verified row
-    // every round). One count aggregate per modality over checkpointed
-    // hashes — trivially cheap.
-    "q_phash_bucket_health" -> ((s, d) => {
-      def side(tag: String, ph: DataFrame) =
-        graft.operators.Dedup.bucketStats(
-          graft.operators.Dedup.bandHashBuckets(ph))
-          .select(lit(tag).as("modality"), col("n_buckets"),
-            col("max_bucket"), col("n_truncated"), col("ids_dropped"))
-      side("audio", audioPhash(s, d))
-        .unionByName(side("image", imagePhash(s, d)))
-        .orderBy(col("modality"))
-    }),
-
-    // incremental IMAGE near-dup maintenance (r16, VERDICT Next #5):
-    // media_id%10==3 plays the incoming batch, the rest the indexed
-    // corpus — the batch's aHash band rows probe the PERSISTED
-    // ids-only band index (Dedup.bandHashIndex, the minhashIndex
-    // pattern), exact hamming verify fetches hashes by matched id.
-    // Multimodal dedup becomes probe-and-append maintainable instead
-    // of rebuild-only. Fully oracled via the shared phash replay CTEs.
-    "q_image_dedup_incremental" -> ((s, d) => {
-      val ph = imagePhash(s, d)
-      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
-      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
-      graft.operators.Dedup.incrementalBandedDedup(
-        batch, graft.operators.Dedup.bandHashIndex(corpus))
-        .orderBy(col("new_id"), col("corpus_id"))
-    }),
-
-    // incremental AUDIO near-dup maintenance (r17, VERDICT Next #5 —
-    // the audioAHash twin of q_image_dedup_incremental, completing
-    // incremental index coverage for text + image + audio): the
-    // media_id%10==3 batch probes the persisted ids-only band index of
-    // the rest of the corpus through the SAME
-    // bandHashIndex/incrementalBandedDedup pipeline; exact hamming
-    // verify fetches hashes by matched id. Fully oracled via the shared
-    // audio-phash replay CTEs.
-    "q_audio_dedup_incremental" -> ((s, d) => {
-      val ph = audioPhash(s, d)
-      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
-      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
-      graft.operators.Dedup.incrementalBandedDedup(
-        batch, graft.operators.Dedup.bandHashIndex(corpus))
-        .orderBy(col("new_id"), col("corpus_id"))
-    }),
-
-    // video perceptual-hash (r17, VERDICT Next #4 — the multimodal
-    // near-dup triad completed): temporal-average aHash over REAL
-    // MJPEG-in-AVI decodes — every JPEG frame decoded through
-    // javax.imageio, the 8×8 integer luma grid summed across frames,
-    // thresholded against its own mean (Multimodal.videoAHash).
-    // Rows-only like q_video_decode: JPEG is LOSSY, so the decoded
-    // pixels are not replayable arithmetic — planted-dup +
-    // discrimination census in RecommendSpec instead.
-    "q_video_phash" -> ((s, d) => {
-      videoPhash(s, d)
-        .select(col("media_id"), col("n_frames"),
-          col("b0"), col("b1"), col("b2"), col("b3"))
-        .orderBy(col("media_id"))
-    }),
-
-    // video near-dup pairs over the temporal-aHash bands — the same
-    // SHARED Dedup.bandedHashDups pipeline as the image/audio twins
-    // (capped band buckets + overflow star-attach + exact hamming ≤ 3
-    // verify), in PLANTED-WITNESS form: a rows-only query must not be
-    // vacuously empty, and the sf0.001/sf0.01 fixtures contain no
-    // content-duplicate documents (the oracled image/audio twins may
-    // legitimately emit 0 rows there — the oracle proves the empty set;
-    // a rows-only empty proves nothing). The 10 smallest doc_ids are
-    // re-keyed (+1e9) and hashed fresh through the REAL codec path,
-    // the corpus side comes from the checkpointed memo, and the
-    // verified pair set must contain each planted copy paired with its
-    // original (exact-match asserted in RecommendSpec) plus any true
-    // content dups the fixture carries.
-    "q_video_phash_dups" -> ((s, d) => {
-      val plantedDocs = Tables.documents(s, d)
-        .orderBy(col("doc_id")).limit(10)
-        .withColumn("doc_id", col("doc_id") + lit(1000000000L))
-      val phPlanted = Multimodal.videoAHash(
-        Multimodal.contentVideoTable(plantedDocs)).toDF()
-      graft.operators.Dedup.bandedHashDups(
-        videoPhash(s, d).unionByName(phPlanted))
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // aHash stability census (r15): flip the low red bit of EVERY
-    // sampled pixel of every REAL decoded raster (deterministic
-    // ±1-LSB-noise stand-in), re-hash, histogram the per-image hamming
-    // distances. Mostly-0-with-a-small-tail is the property that makes
-    // perceptual near-dup work — and the tail exercises the
-    // cross-engine hamming arithmetic at values OTHER than 0 (the dup
-    // pairs are all exact). The oracle replays both rasters from the
-    // splitmix arithmetic, perturbation included.
-    "q_image_phash_stability" -> ((s, d) => {
-      Multimodal.imageAHashStability(s.read.parquet(contentImageDir(s, d)))
-        .groupBy(col("hamming")).agg(count(lit(1)).as("n_images"))
-        .orderBy(col("hamming"))
-    }),
-
-    // DE-EXEMPTED r16 (VERDICT Next #3): the real javax.imageio decode
-    // path, DRIVER-HASH-VERIFIED — the engine decodes genuine PNG bytes
-    // and emits EXACT integer channel sums; PNG is lossless, so the
-    // DuckDB oracle replays the generator arithmetic over the FULL
-    // raster (id-seeded dims → splitmix pixels → channel sums) and
-    // meets the decoder at the same pixels. Means via ExactRatio, so
-    // no ROUND(DOUBLE) seam anywhere in the output.
-    "q_media_decode" -> ((s, d) => {
-      Multimodal.imageFeatures(s.read.parquet(imageDir(s, d)))
-        .toDF()
-        .select(col("media_id"),
-          col("img_width").cast("long").as("img_width"),
-          col("img_height").cast("long").as("img_height"),
-          col("n_channels").cast("long").as("n_channels"),
-          col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"),
-          ratio6(col("sum_r"), col("n_pixels")).as("mean_r"),
-          ratio6(col("sum_g"), col("n_pixels")).as("mean_g"),
-          ratio6(col("sum_b"), col("n_pixels")).as("mean_b"))
-        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
-    }),
-
-    // DE-EXEMPTED r16 (VERDICT Next #1): the real javax.sound.sampled
-    // decode path, DRIVER-HASH-VERIFIED — genuine 16-bit PCM WAV bytes
-    // (materialized once per dir), container-parsed format + EXACT
-    // integer sample moments (Σv², Σ|v|, zero crossings) from the
-    // actual samples. PCM is lossless and the triangle waveform is
-    // pure integer arithmetic of the seed, so the oracle replays every
-    // sample with `%`/`//`/`abs`. RMS = sqrt(sum_sq/n)/32768 — IEEE
-    // correctly-rounded ops in mirrored order, pinned via det6.
-    "q_audio_decode" -> ((s, d) => {
-      Multimodal.audioFeatures(s.read.parquet(audioDir(s, d)))
-        .toDF()
-        .select(col("media_id"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("n_samples"), col("sum_sq"), col("sum_abs"),
-          col("zero_crossings"),
-          det6(sqrt(col("sum_sq").cast("double") /
-            col("n_samples").cast("double")) / lit(32768.0)).as("rms_r"))
-        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
-    }),
-
-    // cohort retention: users grouped by first-seen day, distinct actives
-    // per (cohort, day-offset) — the classic product-analytics triangle,
-    // and the event-analytics twin of the corpus freshness questions a
-    // training-data pipeline asks ("how much of day-N's data is from
-    // returning producers"). Day keys are FLOOR(epoch)/86400 per the
-    // repo timestamp rule (ns parquet → µs truncation on both engines).
-    // Scale shape: one shuffle to per-user min-day (partial agg
-    // map-side), cohort relation is |users| rows — joined back on
-    // user_id (AQE broadcasts when small); the distinct-count aggregates
-    // on (cohort, offset) with bounded cardinality (days²/2).
-    // event-volume anomaly detection: hourly counts scored against a
-    // trailing 24-hour window (mean + sample stddev) — the intake-
-    // monitoring alarm ("did a feed die / double overnight"). The
-    // hourly series is GAP-FILLED with zero-count hours first (a dead
-    // feed produces NO rows — without the fill, the exact failure the
-    // alarm exists for is invisible, and the row-frame 'trailing 24'
-    // would silently span an outage). The global-order window runs over
-    // that series (720 rows per month regardless of event volume —
-    // bounded by TIME, not data), so the single-partition WindowExec is
-    // safe at any scale; the corpus itself sees one groupBy. Flag
-    // derives from the ROUNDED z; warmup hours (fewer than 2 trailing
-    // points or zero variance) are excluded identically on both engines.
-    "q_events_anomaly" -> ((s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
-      val filled = spine.join(hourly, Seq("hr"), "left")
-        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
-      val w = Window.orderBy(col("hr")).rowsBetween(-24, -1)
-      filled
-        .withColumn("mu", avg(col("n")).over(w))
-        .withColumn("sd", stddev_samp(col("n")).over(w))
-        .filter(col("sd").isNotNull && col("sd") > 0)
-        .select(col("hr"), col("n"),
-          round((col("n") - col("mu")) / col("sd"), 6).as("z"))
-        .withColumn("is_anomaly", abs(col("z")) > 3.0)
-        .orderBy(col("hr"))
-    }),
-
-    "q_events_retention" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"),
-        floor(unix_timestamp(col("ts")) / 86400).as("day"))
-      val cohorts = e.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-      e.join(cohorts, Seq("user_id"))
-        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-
-    // EWMA smoothing of the hourly event series — the alerting
-    // baseline next to q_events_anomaly's z-score. The recursion
-    // s_t = α·x_t + (1-α)·s_{t-1} is not window-expressible, but with
-    // α = 1/2 the unrolled K-term weights are DYADIC (1/2^k — exactly
-    // representable doubles, exact decimal text), so the truncated
-    // EWMA is a plain weighted sum of K lags with BIT-EXACT arithmetic
-    // on both engines: no libm pow, no float seam (the repo's
-    // hyperbolic-decay/no-exp discipline). Both sides are GENERATED
-    // from the same weight spec (ewmaWeights) — the zvalueSql /
-    // pagerank pattern, so the weights cannot drift. The global-order
-    // window rides the gap-filled hourly spine, bounded by TIME (720
-    // rows/month), not data — the q_events_anomaly precedent; only
-    // rows with a full K-hour history emit (partial windows would
-    // renormalize differently).
-    "q_events_ewma" -> ((s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
-      val filled = spine.join(hourly, Seq("hr"), "left")
-        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
-      val w = Window.orderBy(col("hr"))
-      val wts = ewmaWeights(ewmaK)
-      val ewma = wts.zipWithIndex
-        .map { case (wt, k) => lag(col("n"), k).over(w) * lit(wt) }
-        .reduce(_ + _) / lit(wts.sum)
-      val ma = wts.indices
-        .map(k => lag(col("n"), k).over(w))
-        .reduce(_ + _).cast("double") / lit(ewmaK.toDouble)
-      filled
-        .withColumn("rn", row_number().over(w))
-        .withColumn("ewma_r", round(ewma, 6))
-        .withColumn("ma_r", round(ma, 6))
-        .filter(col("rn") >= ewmaK)
-        .select(col("hr"), col("n"), col("ewma_r"), col("ma_r"))
-        .orderBy(col("hr"))
-    }),
-
-    // First-order Markov transition matrix over each user's event
-    // sequence: one lag window on the high-cardinality user key, one
-    // bounded |types|² aggregate, transition probability normalized by
-    // a broadcast per-source total (≤|types| rows — never a second
-    // corpus shuffle). The journey-analysis staple next to the funnel.
-    "q_event_transitions" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("sec"), col("event_id"))
-      val pairs = e.withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
-      val totals = pairs.groupBy(col("prev_type"))
-        .agg(sum(col("n")).as("n_from"))
-      pairs.join(broadcast(totals), Seq("prev_type"))
-        .select(col("prev_type"), col("next_type"), col("n"),
-          ratio6(col("n"), col("n_from")).as("p"))
-        .orderBy(col("prev_type"), col("next_type"))
-    }),
-
-    // Last-touch marketing attribution: each purchase is attributed to
-    // the user's latest click at-or-before it (the AsofJoin.asofBackward
-    // operator — one union + one per-user window sweep, never a range
-    // self-join), gated by a 7-day attribution window; purchases whose
-    // last click is older (or who never clicked) land in the
-    // unattributed bucket (attr_day = -1). Revenue rolls up per
-    // attributed-click DAY in integer cents; n_clicks counts distinct
-    // credited clicks. µs epochs are the cross-engine event-time key
-    // (the q_events_asof convention); day = µs DIV 86400e6 — integer
-    // division, no float seam.
-    "q_attribution" -> ((s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"),
-          cents(col("value")).as("rev_c"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
-      AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
-          attach = Map("click_id" -> "attr_click_id", "us" -> "click_us"),
-          rightTiebreak = "click_id")
-        .withColumn("attr_day",
-          when(col("click_us").isNotNull &&
-              col("us") - col("click_us") <= lit(7L * 86400L * 1000000L),
-            expr("click_us DIV 86400000000")).otherwise(lit(-1L)))
-        .groupBy(col("attr_day"))
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(col("rev_c")).as("rev_c"),
-          countDistinct(when(col("attr_day") >= 0, col("attr_click_id")))
-            .as("n_clicks"))
-        .orderBy(col("attr_day"))
-    }),
-
-    // Multi-touch LINEAR attribution (the all-touch companion of the
-    // last-touch asof above): every click of the purchase's user in the
-    // 7-day lookback shares the revenue EQUALLY — in exact integer
-    // MICRO-CENTS via Hamilton splitting (each of the n touches gets
-    // ⌊rev_c·10⁶/n⌋; the first rev_c·10⁶ mod n touches in (click_us,
-    // click_id) order get +1), so per-day credit sums are exact longs
-    // and credit conservation (Σcredit = rev_c·10⁶ per purchase) is an
-    // identity, not a float approximation. Shape: one user-keyed range
-    // join (clicks per user per week bounded), two purchase-keyed
-    // windows, one day rollup.
-    "q_attribution_multi" -> ((s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("pid"),
-          col("us").as("pus"), cents(col("value")).as("rev_c"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("us").as("cus"))
-      val touches = purchases.join(clicks, Seq("user_id"))
-        .filter(col("cus") <= col("pus") &&
-          col("pus") - col("cus") <= lit(7L * 86400L * 1000000L))
-      val wP = Window.partitionBy(col("pid"))
-      val wR = wP.orderBy(col("cus"), col("click_id"))
-      touches
-        .withColumn("n_t", count(lit(1)).over(wP))
-        .withColumn("rk", row_number().over(wR).cast("long"))
-        .withColumn("micro", col("rev_c") * lit(1000000L))
-        .withColumn("credit", expr("micro div n_t") +
-          when(col("rk") <= pmod(col("micro"), col("n_t")), 1L)
-            .otherwise(0L))
-        .groupBy(expr("cus DIV 86400000000").as("day"))
-        .agg(count(lit(1)).as("n_touches"),
-          countDistinct(col("pid")).as("n_purchases"),
-          sum(col("credit")).as("credit_micro_c"))
-        .orderBy(col("day"))
-    }),
-
-    // Ordered conversion funnel (view → click → purchase): per user the
-    // FIRST view, then the first click STRICTLY after it, then the
-    // first purchase strictly after that click — the stage times are
-    // min-aggregates over filtered co-partitioned joins (each min
-    // map-side combinable) + one single-row rollup; no per-user event
-    // list is ever collected (the naive sort-events-per-user form
-    // buffers unbounded history). Each stage's event scan is SLICED by
-    // a pushed event_type predicate, so the three stages together read
-    // ≈one corpus pass split by type; the t1 aggregate subtree appears
-    // twice (t2's input and the final rollup) and AQE reuses its
-    // exchange at runtime (ReusedExchange — probed; a persist here
-    // would leak a session-lifetime cache entry from a registered
-    // closure instead). Strictly-after is the
-    // stated semantic (a click in the same second as the view does not
-    // convert) — second-resolution ties are resolved identically on
-    // both engines because the comparison is on the VALUE, not row
-    // order. Latencies average exactly (integer seconds sum exactly;
-    // one double division each side).
-    "q_funnel_steps" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"))
-      val t1 = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t1"))
-      val t2 = e.filter(col("event_type") === "click")
-        .join(t1, Seq("user_id"))
-        .filter(col("sec") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t2"))
-      val t3 = e.filter(col("event_type") === "purchase")
-        .join(t2, Seq("user_id"))
-        .filter(col("sec") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t3"))
-      t1.join(t2, Seq("user_id"), "left").join(t3, Seq("user_id"), "left")
-        .agg(count(lit(1)).as("n_view"),
-          count(col("t2")).as("n_view_click"),
-          count(col("t3")).as("n_funnel"),
-          ratio6(count(col("t2")), count(lit(1))).as("conv_click"),
-          ratio6(count(col("t3")), count(lit(1))).as("conv_full"),
-          ratio6(sum(col("t2") - col("t1")), count(col("t2")))
-            .as("avg_sec_to_click"),
-          ratio6(sum(col("t3") - col("t2")), count(col("t3")))
-            .as("avg_sec_to_purchase"))
-    }),
-
-    // Sharded Misra-Gries heavy hitters — the BATCH twin of the online
-    // heavyHittersIntake loop, value-oracled on two MG theorems: (a) any
-    // item with true frequency > n/(k+1) is GUARANTEED present in its
-    // shard's summary for ANY arrival order (its shard frequency equals
-    // its global frequency under item-hash sharding, and n_shard ≤ n),
-    // so filtering the merged summary to exactly those items is
-    // order-independent; (b) a shard holding ≤ k distinct items never
-    // decrements, so its counters are EXACT — with the fixture's 5 event
-    // types and k=16 every merged `est` therefore equals the true count,
-    // which the oracle computes directly. If the MG fold dropped or
-    // undercounted a guaranteed item, the inner join / est column would
-    // go red. The eviction regime (items ≫ k) is covered by
-    // StreamingSpec's planted-skew invariants, where exact value
-    // oracling is impossible by design. Scale shape: one shuffle on the
-    // 8-way shard key, O(k) state per task, |summary| ≤ shards×k rows
-    // into the merge.
-    "q_heavy_hitters" -> ((s, d) => {
-      val e = ev(s, d)
-      val k = 16
-      val merged = graft.streaming.EventStreams
-        .mergeHeavyHitters(
-          graft.streaming.EventStreams.heavyHittersBatch(e, k, 8).toDF(), k)
-      val exact = e.filter(col("event_type").isNotNull)
-        .groupBy(col("event_type").as("item")).agg(count(lit(1)).as("cnt"))
-      // n_total derives from the ≤|types|-row exact aggregate — a
-      // separate corpus-count relation would be a second full scan
-      val total = exact.agg(sum(col("cnt")).as("n_total"))
-      merged.join(exact, Seq("item"))
-        .crossJoin(broadcast(total)) // 1-row scalar attach
-        .filter(col("cnt") * lit((k + 1).toLong) > col("n_total"))
-        .select(col("item"), col("cnt"), col("est"))
-        .orderBy(col("item"))
-    }),
-
-    // Rolling 7-day distinct users (the DAU/WAU dashboard pair) + the
-    // 7-day event volume, per active day. Spark has no COUNT(DISTINCT)
-    // window, and the naive forms melt at scale — a 7-way range
-    // self-join re-shuffles the event set per day of width, and a
-    // global sorted window single-partitions. The scale-safe shape is
-    // BUCKET-EXPLODE: reduce once to distinct (day, user) pairs, then
-    // each pair votes into the ≤7 window buckets it serves
-    // (a bounded ×7 map-side expansion of the already-reduced
-    // relation) and one countDistinct per bucket finishes it. DAU
-    // rides the same pass as the offset-0 slice (countDistinct over a
-    // CASE), so the whole report is two shuffles: the pair dedup and
-    // the bucket aggregate. Partial leading windows are part of the
-    // contract (day d counts only days ≥ d−6 that exist); trailing
-    // buckets past the last active day are cut by the inner join to
-    // the active-day set, mirrored in the oracle's range join.
-    "q_rolling_dau" -> ((s, d) => {
-      val e = ev(s, d).select(
-        floor(unix_timestamp(col("ts")) / 86400).as("day"), col("user_id"))
-      val du = e.distinct()
-      // active days from the ALREADY-reduced pair relation — deriving
-      // them from `e` would aggregate the full event scan a second time
-      // (distinct(day,user) and distinct(day) are different shuffles,
-      // so exchange reuse would not apply)
-      val days = du.select(col("day")).distinct()
-      val votes = du.select(col("day"), col("user_id"),
-          explode(sequence(lit(0), lit(6))).as("o"))
-        .select((col("day") + col("o")).as("day"), col("user_id"),
-          (col("o") === 0).as("is_today"))
-        .join(days, Seq("day")) // active days only — no trailing stubs
-      val rolling = votes.groupBy(col("day"))
-        .agg(countDistinct(when(col("is_today"), col("user_id"))).as("dau"),
-          countDistinct(col("user_id")).as("wau"))
-      val daily = e.groupBy(col("day")).agg(count(lit(1)).as("n"))
-      val n7 = daily.select(col("day"), col("n"),
-          explode(sequence(lit(0), lit(6))).as("o"))
-        .select((col("day") + col("o")).as("day"), col("n"))
-        .join(days, Seq("day"))
-        .groupBy(col("day")).agg(sum(col("n")).as("n_events_7d"))
-      rolling.join(n7, Seq("day"))
-        .select(col("day").cast("long").as("day"), col("dau"), col("wau"),
-          col("n_events_7d"))
-        .orderBy(col("day"))
-    }),
-
-    // Peak concurrency per day (max simultaneously-active users): each
-    // user's per-day activity interval [min ts, max ts] becomes a
-    // +1/−1 boundary pair and a running sum over the day's ordered
-    // boundaries peaks at the answer — the interval-sweep discipline
-    // that replaces the quadratic interval-overlap self-join. The one
-    // window is partitioned by DAY (boundaries per partition bounded
-    // by 2·|users active that day|, never the event count — the
-    // intervals relation is an aggregate), with an explicit ROWS
-    // frame and delta-descending tie order (starts before ends at the
-    // same instant, so a touch counts as overlap; equal-delta peers
-    // commute in a prefix sum, making the per-day MAX deterministic on
-    // both engines). Exact integer micros + integer deltas: no seam.
-    "q_concurrency" -> ((s, d) => {
-      val iv = ev(s, d).select(
-          floor(unix_timestamp(col("ts")) / 86400).as("day"),
-          col("user_id"), unix_micros(col("ts")).as("us"))
-        .groupBy(col("day"), col("user_id"))
-        .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
-      val bounds = iv.select(col("day"), col("s_us").as("us"),
-          lit(1L).as("delta"))
-        .unionAll(iv.select(col("day"), col("e_us").as("us"),
-          lit(-1L).as("delta")))
-      val w = Window.partitionBy(col("day"))
-        .orderBy(col("us"), col("delta").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      bounds.withColumn("running", sum(col("delta")).over(w))
-        .groupBy(col("day"))
-        .agg(max(col("running")).as("peak_concurrent"),
-          (count(lit(1)) / 2).cast("long").as("n_intervals"))
-        .select(col("day").cast("long").as("day"), col("peak_concurrent"),
-          col("n_intervals"))
-        .orderBy(col("day"))
-    }),
-
-    // Gaps-and-islands: longest consecutive-day activity streak per
-    // user (the engagement metric behind "N-day streak" badges), via
-    // the day − ROW_NUMBER island key (the q_contamination_span trick)
-    // over the distinct (user, day) relation — windows partitioned by
-    // USER, so parallelism grows with users and per-task state is one
-    // user's active days. Exact integers end to end; top-20 ordered on
-    // (streak, n_islands, user) so the cutoff is deterministic.
-    "q_streaks" -> ((s, d) => {
-      val ud = ev(s, d).select(col("user_id"),
-        floor(unix_timestamp(col("ts")) / 86400).as("day")).distinct()
-      val wu = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      ud.withColumn("grp", col("day") - row_number().over(wu))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("run"))
-        .groupBy(col("user_id"))
-        .agg(max(col("run")).as("longest_streak"),
-          count(lit(1)).as("n_islands"),
-          sum(col("run")).as("n_active_days"))
-        .orderBy(col("longest_streak").desc, col("n_islands"),
-          col("user_id"))
-        .limit(20)
-    }),
-
-    // Day-of-week seasonality profile (the load-shape census the ACF
-    // hints at): per weekday the day count, event total, per-day
-    // average and the index vs the overall daily mean. Weekday =
-    // epoch-day mod 7 — the integer convention that sidesteps the
-    // Spark-1=Sunday / DuckDB-0=Sunday dayofweek trap entirely. Exact
-    // integers + two mirrored divisions.
-    "q_seasonality" -> ((s, d) => {
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val tot = daily.agg(sum(col("n")).as("te"),
-        count(lit(1)).as("td"))
-      daily.groupBy(pmod(col("day"), lit(7)).cast("long").as("dow"))
-        .agg(count(lit(1)).as("n_days"), sum(col("n")).as("n_events"))
-        .crossJoin(broadcast(tot))
-        .select(col("dow"), col("n_days"), col("n_events"),
-          ratio6(col("n_events"), col("n_days")).as("avg_r"),
-          // index vs overall daily mean as ONE exact integer ratio:
-          // (ne/nd)/(te/td) = ne·td / (nd·te)
-          ratio6(col("n_events") * col("td"), col("n_days") * col("te"))
-            .as("idx_r"))
-        .orderBy(col("dow"))
-    }),
-
-    // Week-over-week revenue growth (the KPI-trend staple): weekly
-    // cents off one orders aggregate (week = epoch-day // 7 — integer
-    // both engines), lag over the WEEK DOMAIN (bounded — the
-    // q_ks_two_sample partitionless-window discipline); the ratio IS
-    // guarded by prev_c > 0 (not just non-null) on both engines and
-    // computed with sratio6 — exact, no ROUND(DOUBLE) seam.
-    "q_growth_rates" -> ((s, d) => {
-      val weekly = Tables.load(s, d, "orders")
-        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 604800)
-          .cast("long").as("week"))
-        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
-      val w = Window.orderBy(col("week"))
-      weekly.withColumn("prev_c", lag(col("rev_c"), 1).over(w))
-        .filter(col("prev_c").isNotNull && col("prev_c") > 0)
-        .select(col("week"), col("rev_c"), col("prev_c"),
-          sratio6(col("rev_c") - col("prev_c"), col("prev_c"))
-            .as("growth_r"))
-        .orderBy(col("week"))
-    }),
-
-    // Time-weighted average value per day (the TWAP/metrics-rollup op:
-    // a value that holds until the next observation should be averaged
-    // by TIME HELD, not by observation count): piecewise-constant
-    // segments from a lead() window per (user, day) — parallelism grows
-    // with users, bounded per task by one user's day (never the
-    // per-day-only partitioning the SNM lesson warns about) — then the
-    // day's TWAP as Σ value·dt / Σ dt with the value·µs products kept
-    // EXACT in DECIMAL(38,0) (cents × µs overflows long). One float:
-    // the final division.
-    "q_twap" -> ((s, d) => {
-      val e = ev(s, d).select(
-        floor(unix_timestamp(col("ts")) / 86400).as("day"),
-        col("user_id"), unix_micros(col("ts")).as("us"),
-        cents(col("value")).as("v"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"), col("day"))
-        .orderBy(col("us"), col("event_id"))
-      val seg = e.withColumn("nxt", lead(col("us"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .select(col("day"),
-          (col("v").cast("decimal(38,0)") * (col("nxt") - col("us")))
-            .as("wv"),
-          (col("nxt") - col("us")).as("dt"))
-      seg.groupBy(col("day"))
-        .agg(count(lit(1)).as("n_segments"),
-          sum(col("dt")).as("dt_us"),
-          sum(col("wv")).as("swv"))
-        .select(col("day").cast("long").as("day"), col("n_segments"),
-          col("dt_us"),
-          sratio6(col("swv"), col("dt_us")).as("twap_r"))
-        .orderBy(col("day"))
-    }),
-
-    // Autocorrelation function of the daily event-count series (lags
-    // 1..7 — the seasonality probe next to q_events_ewma's smoother):
-    // Pearson r per lag from EXACT decimal moments over the
-    // pairwise-present day pairs (a gap simply contributes no pair —
-    // documented semantics that avoid a cross-engine gap-fill spine).
-    // The daily series is one domain-bounded aggregate; the 7-way lag
-    // expansion explodes the ALREADY-aggregated relation (≤7·|days|
-    // rows), never the event scan.
-    "q_acf" -> ((s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val lagged = daily.select(col("day"), col("n").as("x"),
-          explode(sequence(lit(1L), lit(7L))).as("lag"))
-        .select((col("day") + col("lag")).as("day"), col("lag"), col("x"))
-      val pairs = lagged.join(daily.select(col("day"), col("n").as("y")),
-        Seq("day"))
-      pairs.groupBy(col("lag")).agg(
-          count(lit(1)).cast("decimal(38,0)").as("np"),
-          sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-          sum(dec(col("x") * col("x"))).as("sxx"),
-          sum(dec(col("x") * col("y"))).as("sxy"),
-          sum(dec(col("y") * col("y"))).as("syy"))
-        .select(col("lag"), col("np").cast("long").as("n_pairs"),
-          det6((col("np") * col("sxy") - col("sx") * col("sy"))
-            .cast("double") /
-            sqrt((col("np") * col("sxx") - col("sx") * col("sx"))
-              .cast("double") *
-              (col("np") * col("syy") - col("sy") * col("sy"))
-                .cast("double"))).as("acf_r"))
-        .orderBy(col("lag"))
-    }),
-
-    // Holt's linear-trend smoothing over the daily count series (the
-    // level+trend forecaster next to the EWMA level smoother):
-    // α = β = 1/2, so every weight multiply is an exact dyadic halving
-    // and the sequential recursion is bit-identical cross-engine when
-    // folded in the SAME day order — the engine folds
-    // sort_array(collect_list(...)) (partition-count-independent); the
-    // oracle replays the identical recursion as a struct-state
-    // list_reduce (the xxhashOracle machinery). Series indexed by
-    // ACTIVE days (the q_acf pairwise-present convention). The fold is
-    // a single bounded-domain task by design: the input is the
-    // already-aggregated daily relation.
-    "q_holt_linear" -> ((s, d) => {
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val st = daily.agg(count(lit(1)).as("n_days"),
-        aggregate(
-          sort_array(collect_list(struct(col("day"), col("n")))),
-          struct(lit(0.0).as("l"), lit(0.0).as("b"), lit(0L).as("i")),
-          (s0, x) => {
-            val y = x.getField("n").cast("double")
-            val first = s0.getField("i") === 0L
-            val lnew = when(first, y).otherwise(
-              lit(0.5) * y + lit(0.5) * (s0.getField("l") + s0.getField("b")))
-            struct(lnew.as("l"),
-              when(first, lit(0.0)).otherwise(
-                lit(0.5) * (lnew - s0.getField("l")) +
-                  lit(0.5) * s0.getField("b")).as("b"),
-              (s0.getField("i") + 1L).as("i"))
-          }).as("st"))
-      // n_days > 0 guard: on an EMPTY series the fold's initial state
-      // would emit one (0, 0.0, 0.0, 0.0) row while the oracle's
-      // recursive CTE emits none — mirror the oracle's zero-row shape
-      // (ADVICE r13; fixtures are never empty, so this is contract
-      // hygiene, not a behavior change).
-      st.filter(col("n_days") > 0)
-        .select(col("n_days"),
-          det6(col("st.l")).as("level_r"),
-          det6(col("st.b")).as("trend_r"),
-          det6(col("st.l") + lit(7.0) * col("st.b")).as("fc7_r"))
-    }),
-
-    // Cohort retention matrix (the product-analytics staple): cohort =
-    // a user's FIRST active week; for offsets 0..7 the share of the
-    // cohort active in week cohort+off. Shape: ONE (user, week)
-    // distinct shuffle, a per-user min (same key — no extra exchange
-    // class), cohort sizes broadcast back (≤|weeks| rows), output
-    // |weeks|·8. All counts exact; retention via ratio6.
-    "q_cohort_retention" -> ((s, d) => {
-      val uw = ev(s, d).select(col("user_id"),
-          floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
-        .distinct()
-      val first = uw.groupBy(col("user_id"))
-        .agg(min(col("week")).as("cohort_w"))
-      val sizes = first.groupBy(col("cohort_w"))
-        .agg(count(lit(1)).as("n_cohort"))
-      uw.join(first, Seq("user_id"))
-        .select(col("cohort_w"), (col("week") - col("cohort_w")).as("off"))
-        .filter(col("off") <= 7)
-        .groupBy(col("cohort_w"), col("off"))
-        // uw is (user, week)-distinct, so the count IS distinct users
-        .agg(count(lit(1)).as("n_active"))
-        .join(broadcast(sizes), Seq("cohort_w"))
-        .select(col("cohort_w"), col("off"), col("n_active"),
-          col("n_cohort"),
-          ratio6(col("n_active"), col("n_cohort")).as("retention_r"))
-        .orderBy(col("cohort_w"), col("off"))
-    }),
-
-    // Sessionization census (gaps-and-islands with a 30-minute idle
-    // timeout — the q_streaks discipline at second resolution): session
-    // starts flagged by lag(), session ids by running count of starts
-    // (both inside ONE per-user window — parallelism grows with users),
-    // per-session rollup, then a constant-size global census. Every
-    // reported mean is a ratio6 of exact integers.
-    "q_sessionize" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("sec"), col("event_id"))
-      val sess = e.withColumn("prev", lag(col("sec"), 1).over(w))
-        .withColumn("new_s", when(col("prev").isNull ||
-          col("sec") - col("prev") > 1800, 1L).otherwise(0L))
-        .withColumn("sid", sum(col("new_s")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(count(lit(1)).as("n_events"),
-          (max(col("sec")) - min(col("sec"))).as("dur_sec"))
-      sess.agg(count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        ratio6(sum(col("n_events")), count(lit(1)))
-          .as("events_per_session_r"),
-        ratio6(sum(col("dur_sec")), count(lit(1))).as("mean_dur_sec_r"),
-        max(col("dur_sec")).as("max_dur_sec"),
-        sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_bounce"))
-    }),
-
-    // Top click-path trigrams (journey mining next to the pairwise
-    // q_event_transitions): per-user time-ordered event-type 3-grams
-    // via two lead()s in ONE window, counted over the bounded
-    // |types|³ path domain, top-20 with full tiebreak (TakeOrdered).
-    "q_session_paths" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("sec"), col("event_id"))
-      e.withColumn("e2", lead(col("event_type"), 1).over(w))
-        .withColumn("e3", lead(col("event_type"), 2).over(w))
-        .filter(col("e3").isNotNull)
-        .select(concat_ws(">", col("event_type"), col("e2"), col("e3"))
-          .as("path"))
-        .groupBy(col("path")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("path")).limit(20)
-    }),
-
-    // Growth accounting (the new/retained/resurrected/churned weekly
-    // user ledger — the companion of q_cohort_retention that product
-    // teams actually chart): per active (user, week), the user is NEW
-    // (first week), RETAINED (active in week−1) or RESURRECTED (active
-    // before, not in week−1); CHURNED(w) = active(w−1) − retained(w),
-    // attached via a lag over the bounded week domain. Identity
-    // active = new + retained + resurrected holds by construction.
-    // Shape: one (user, week) distinct, a per-user min, one ids-only
-    // self-join on the shifted week, one domain-bounded rollup.
-    "q_growth_accounting" -> ((s, d) => {
-      val uw = ev(s, d).select(col("user_id"),
-          floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
-        .distinct()
-        .localCheckpoint(true) // read three times (flags, prev-set, rollup)
-      val first = uw.groupBy(col("user_id"))
-        .agg(min(col("week")).as("first_w"))
-      val prevSet = uw.select(col("user_id"),
-        (col("week") + 1).as("week"), lit(1L).as("was_prev"))
-      val flags = uw.join(first, Seq("user_id"))
-        .join(prevSet, Seq("user_id", "week"), "left")
-        .select(col("week"),
-          when(col("week") === col("first_w"), 1L).otherwise(0L).as("is_new"),
-          when(col("week") =!= col("first_w") && col("was_prev").isNotNull,
-            1L).otherwise(0L).as("is_ret"),
-          when(col("week") =!= col("first_w") && col("was_prev").isNull,
-            1L).otherwise(0L).as("is_res"))
-      val weekly = flags.groupBy(col("week"))
-        .agg(count(lit(1)).as("n_active"), sum(col("is_new")).as("n_new"),
-          sum(col("is_ret")).as("n_retained"),
-          sum(col("is_res")).as("n_resurrected"))
-      val w = Window.orderBy(col("week"))
-      weekly
-        .withColumn("prev_active", lag(col("n_active"), 1).over(w))
-        .select(col("week"), col("n_active"), col("n_new"),
-          col("n_retained"), col("n_resurrected"),
-          coalesce(col("prev_active") - col("n_retained"), lit(0L))
-            .as("n_churned"),
-          when(col("prev_active").isNull || col("prev_active") === 0,
-            lit(0.0)).otherwise(
-            ratio6(col("n_retained"), col("prev_active")))
-            .as("retention_r"))
-        .orderBy(col("week"))
-    }),
-
-    // Inter-arrival gap statistics per event type (the arrival-process
-    // profile a capacity model starts from): consecutive same-type
-    // gaps per user via ONE (user, type)-keyed lag window, then a
-    // domain-bounded per-type rollup — exact integer seconds, ratio6
-    // mean, exact percentile on the integer grid.
-    "q_interarrival" -> ((s, d) => {
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("sec"), col("event_id"))
-      e.withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
-        .filter(col("gap").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_gaps"),
-          ratio6(sum(col("gap")), count(lit(1))).as("mean_gap_r"),
-          round(expr("percentile(gap, 0.5)"), 6).as("p50_gap"),
-          max(col("gap")).as("max_gap"))
-        .orderBy(col("event_type"))
-    }),
-
-    // CUSUM level-shift detector over the daily count series (the
-    // change-point alarm the drift suite lacked): residuals scaled by
-    // the day count so EVERYTHING is exact integers — s_i = td·x_i − te
-    // (td days, te total events), C_i = max(0, C_{i-1} + s_i) in 1/td
-    // units — the Page CUSUM recursion with zero float ops; the one
-    // reported ratio is ratio6. Folded in sorted day order over the
-    // bounded day domain (the q_holt_linear fold discipline); the
-    // oracle replays the recursion as a RECURSIVE CTE.
-    "q_cusum_shift" -> ((s, d) => {
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
-          .as("day"))
-        .agg(count(lit(1)).as("n"))
-      val tot = daily.agg(sum(col("n")).as("te"), count(lit(1)).as("td"))
-      val st = daily.crossJoin(broadcast(tot))
-        .select(col("day"), col("td"),
-          (col("td") * col("n") - col("te")).as("sres"))
-      st.agg(min(col("td")).as("td"),
-          aggregate(
-            sort_array(collect_list(struct(col("day"), col("sres")))),
-            struct(lit(0L).as("cur"), lit(0L).as("mx"),
-              lit(-1L).as("mx_day")),
-            (s0, x) => {
-              val cur2 = greatest(lit(0L),
-                s0.getField("cur") + x.getField("sres"))
-              struct(cur2.as("cur"),
-                greatest(s0.getField("mx"), cur2).as("mx"),
-                when(cur2 > s0.getField("mx"), x.getField("day"))
-                  .otherwise(s0.getField("mx_day")).as("mx_day"))
-            }).as("st"))
-        .select(col("st.mx_day").as("shift_day"),
-          col("st.mx").as("cusum_scaled"),
-          ratio6(col("st.mx"), col("td")).as("cusum_r"))
-    }),
-
-    // Two-proportion A/B z-test (the experimentation readout): users
-    // deterministically split by user_id parity (the q_split_hash
-    // modulo discipline — mirrors exactly cross-engine), conversion =
-    // any purchase with value ≥ 100. Counts are exact integers from ONE
-    // per-user aggregate + ONE conditional grand aggregate (no shuffle
-    // beyond the user rollup at any scale); the rates are ratio6; the z
-    // statistic is the one double chain, written in the SAME op order
-    // on both engines (+,−,×,÷,√ are all correctly-rounded IEEE ops)
-    // and reported det6. Zero-variance pools (p̂ ∈ {0,1}) report z = 0
-    // identically on both sides.
-    "q_ab_test" -> ((s, d) => {
-      val u = ev(s, d).groupBy(col("user_id"))
-        .agg(max(when(col("event_type") === "purchase" &&
-          col("value") >= 100.0, 1L).otherwise(0L)).as("conv"))
-      val onerow = u.agg(
-        sum(when(pmod(col("user_id"), lit(2)) === 0, 1L).otherwise(0L))
-          .as("n_a"),
-        sum(when(pmod(col("user_id"), lit(2)) === 0, col("conv"))
-          .otherwise(0L)).as("c_a"),
-        sum(when(pmod(col("user_id"), lit(2)) === 1, 1L).otherwise(0L))
-          .as("n_b"),
-        sum(when(pmod(col("user_id"), lit(2)) === 1, col("conv"))
-          .otherwise(0L)).as("c_b"))
-      val p1 = col("c_a").cast("double") / col("n_a")
-      val p2 = col("c_b").cast("double") / col("n_b")
-      val p = (col("c_a") + col("c_b")).cast("double") /
-        (col("n_a") + col("n_b"))
-      val se = sqrt(p * (lit(1.0) - p) *
-        (lit(1.0) / col("n_a") + lit(1.0) / col("n_b")))
-      onerow.select(col("n_a"), col("c_a"), col("n_b"), col("c_b"),
-        ratio6(col("c_a"), col("n_a")).as("rate_a_r"),
-        ratio6(col("c_b"), col("n_b")).as("rate_b_r"),
-        when(se === 0.0, lit(0.0)).otherwise(det6((p1 - p2) / se))
-          .as("z_r"))
-    }),
-
-    // Kaplan–Meier reorder-survival curve (time-to-second-order per
-    // customer; administrative censoring at 365 days with staggered
-    // entry: follow-up = min(365, last-fixture-day − first-order day)).
-    // Risk-set arithmetic is exact integers (one per-customer rollup,
-    // one duration aggregate, one domain-bounded cumulative window —
-    // the duration domain is capped at 366 values by the cutoff, so the
-    // partitionless window and the fold are constant-size at any
-    // fixture scale). The survival product is the ONE double chain
-    // s ← s·(1 − d/n), folded in sorted duration order on both engines
-    // (prefix slice-fold here, RECURSIVE CTE there; multiplying the
-    // 1.0 seed is bit-exact by IEEE identity) and reported det6.
-    "q_kaplan_meier" -> ((s, d) => {
-      val o = Tables.load(s, d, "orders").select(col("o_custkey"),
-        floor(unix_timestamp(col("o_orderdate")) / 86400).cast("long")
-          .as("day"))
-      val f = o.groupBy(col("o_custkey")).agg(min(col("day")).as("d1"))
-      val gap = o.join(f, Seq("o_custkey"))
-        .filter(col("day") > col("d1"))
-        .groupBy(col("o_custkey"))
-        .agg(min(col("day") - col("d1")).as("gap"))
-      val g = o.agg(max(col("day")).as("gmax"))
-      val pu = f.join(gap, Seq("o_custkey"), "left")
-        .crossJoin(broadcast(g))
-        .select(col("gap"),
-          least(lit(365L), col("gmax") - col("d1")).as("fu"))
-        .select(
-          when(col("gap").isNotNull && col("gap") <= col("fu"),
-            col("gap")).otherwise(col("fu")).as("t"),
-          when(col("gap").isNotNull && col("gap") <= col("fu"), 1L)
-            .otherwise(0L).as("obs"))
-      val byd = pu.groupBy(col("t"))
-        .agg(sum(col("obs")).as("d_events"), count(lit(1)).as("m"))
-      val tot = byd.agg(sum(col("m")).as("n_total"))
-      val wRisk = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val risk = byd.crossJoin(broadcast(tot))
-        .withColumn("n_risk",
-          col("n_total") - coalesce(sum(col("m")).over(wRisk), lit(0L)))
-        .filter(col("d_events") > 0)
-        .select(col("t"), col("d_events"), col("n_risk"))
-      val arr = risk.agg(sort_array(collect_list(struct(col("t"),
-        col("d_events"), col("n_risk")))).as("steps"))
-      arr.select(col("steps"), posexplode(col("steps")))
-        .select(col("col.t").as("t"), col("col.n_risk").as("n_risk"),
-          col("col.d_events").as("d_events"),
-          det6(aggregate(
-            slice(col("steps"), lit(1), col("pos") + 1), lit(1.0),
-            (acc, x) => acc * (lit(1.0) -
-              x.getField("d_events").cast("double") /
-                x.getField("n_risk")))).as("surv_r"))
-        .orderBy(col("t"))
-    }),
-
-    // Fano-factor burstiness per event type (variance/mean of the daily
-    // count series — the overdispersion diagnostic separating bursty
-    // traffic from Poisson-like): with td observed days, Σx and Σx²
-    // exact integers, F = (td·Σx² − (Σx)²) / ((td−1)·Σx) is a ratio of
-    // exact integers — ratio6, ZERO float ops before the last. Days the
-    // type was never observed contribute no cell (the q_acf gap
-    // convention), mirrored in the oracle.
-    "q_fano_burstiness" -> ((s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
-      val daily = ev(s, d)
-        .groupBy(col("event_type"),
-          floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
-        .agg(count(lit(1)).as("x"))
-      daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("td"),
-          sum(col("x")).as("sx"),
-          sum(dec(col("x")) * dec(col("x"))).as("sxx"))
-        .filter(col("td") > 1)
-        .select(col("event_type"), col("td"), col("sx"),
-          ratio6(col("sx"), col("td")).as("mean_r"),
-          ratio6(dec(col("td")) * col("sxx") - dec(col("sx")) * dec(col("sx")),
-            dec(col("td") - 1) * dec(col("sx"))).as("fano_r"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Week-over-week audience overlap (the retention lens as a set
-    // metric): Jaccard between consecutive weeks' active-user sets from
-    // ONE (user, week) distinct — intersection via the shifted-week
-    // self-join, union by inclusion-exclusion, ratio6. Bounded week
-    // domain; parallelism comes from the distinct, never a per-week
-    // re-scan.
-    "q_audience_overlap" -> ((s, d) => {
-      val uw = ev(s, d).select(col("user_id"),
-        floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
-        .distinct()
-      val sizes = uw.groupBy(col("week")).agg(count(lit(1)).as("n"))
-      val inter = uw.join(
-          uw.select(col("user_id"), (col("week") - 1).as("week")),
-          Seq("user_id", "week"))
-        .groupBy(col("week")).agg(count(lit(1)).as("inter"))
-      sizes.select(col("week"), col("n").as("n_w"))
-        .join(sizes.select((col("week") - 1).as("week"),
-          col("n").as("n_next")), Seq("week"))
-        .join(inter, Seq("week"), "left")
-        .select(col("week"), col("n_w"), col("n_next"),
-          coalesce(col("inter"), lit(0L)).as("inter"))
-        .withColumn("jacc_r", ratio6(col("inter"),
-          col("n_w") + col("n_next") - col("inter")))
-        .orderBy(col("week"))
-    }),
-
-    // Additive seasonal decomposition, kept EXACT (the STL-lite
-    // diagnostic behind q_seasonality's raw DOW means): daily counts on
-    // the zero-filled day spine (the q_gap_fill convention), trend =
-    // centered 7-day moving average carried as the INTEGER sum T7 (1/7
-    // units), detrended D7 = 7·x − T7 (still integer), and the seasonal
-    // component per day-of-week = mean(D7)/7 — one exact signed ratio
-    // (sratio6) per DOW. Boundary days without a full window are
-    // excluded identically on both engines. Bounded day domain
-    // throughout.
-    "q_seasonal_decompose" -> ((s, d) => {
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
-          .as("day"))
-        .agg(count(lit(1)).as("x"))
-      val bounds = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      val spine = bounds.select(explode(sequence(col("lo"), col("hi")))
-        .as("day"))
-        .join(daily, Seq("day"), "left")
-        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"))
-      val w = Window.orderBy(col("day")).rowsBetween(-3, 3)
-      val dec7 = spine
-        .withColumn("t7", sum(col("x")).over(w))
-        .withColumn("nw", count(lit(1)).over(w))
-        .filter(col("nw") === 7)
-        .select(pmod(col("day"), lit(7)).as("dow"),
-          (col("x") * 7 - col("t7")).as("d7"))
-      dec7.groupBy(col("dow"))
-        .agg(count(lit(1)).as("n_days"),
-          sratio6(sum(col("d7")), count(lit(1)) * 7).as("seasonal_r"))
-        .orderBy(col("dow"))
-    }),
-
-    // Discrete churn-hazard curve by customer tenure (the Kaplan–Meier
-    // sibling viewed as per-interval risk): tenure = 30-day periods
-    // between a customer's first and last order; at tenure t the risk
-    // set is everyone whose tenure reached t, hazard h_t = churned_t /
-    // at_risk_t — exact integers end to end (one per-customer rollup,
-    // one bounded-tenure-domain cumulative window, ratio6). NOTE the
-    // last observed period is "churn" by construction here (a lifetime
-    // census, no censoring — q_kaplan_meier is the censored treatment,
-    // and the events table's uniform users make IT the wrong fixture
-    // for a hazard curve: every user spans the whole month).
-    "q_churn_hazard" -> ((s, d) => {
-      val day = floor(unix_timestamp(col("o_orderdate")) / 86400)
-      val uw = Tables.load(s, d, "orders").groupBy(col("o_custkey"))
-        .agg(floor((max(day) - min(day)) / 30).cast("long").as("ten"))
-      val byT = uw.groupBy(col("ten")).agg(count(lit(1)).as("churned"))
-      val tot = byT.agg(sum(col("churned")).as("n_users"))
-      val wcum = Window.orderBy(col("ten"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      byT.crossJoin(broadcast(tot))
-        .withColumn("at_risk",
-          col("n_users") - coalesce(sum(col("churned")).over(wcum), lit(0L)))
-        .select(col("ten"), col("at_risk"), col("churned"),
-          ratio6(col("churned"), col("at_risk")).as("hazard_r"))
-        .orderBy(col("ten"))
-    }),
-
-    // Stationary distribution of the event-type Markov chain (where
-    // does a user's session settle?): the q_event_transitions count
-    // matrix over the CLOSED 5-type domain, row-stochastic P from
-    // exact integer counts (one double division per entry, mirrored),
-    // then π ← πP for 15 fixed iterations as an aggregate-HOF fold
-    // (lambda-variable state — the q_pca_power machinery). A row with
-    // no outgoing transitions becomes an absorbing self-loop (CASE
-    // mirrored in the oracle); dot products in fixed left-assoc type
-    // order; outputs det6.
-    "q_markov_steady" -> ((s, d) => {
-      val types = eventTypes
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("sec"), col("event_id"))
-      val pairs = e
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-      val aggs = (count(lit(1)).as("n_transitions") +:
-        types.map(a => sum(when(col("prev_type") === a, 1L).otherwise(0L))
-          .as(s"r_$a"))) ++
-        (for { a <- types; b <- types } yield
-          sum(when(col("prev_type") === a && col("event_type") === b, 1L)
-            .otherwise(0L)).as(s"c_${a}_$b"))
-      val one = pairs.agg(aggs.head, aggs.tail: _*)
-      def p(a: String, b: String): Column =
-        when(col(s"r_$a") > 0,
-          col(s"c_${a}_$b").cast("double") / col(s"r_$a"))
-          .otherwise(lit(if (a == b) 1.0 else 0.0))
-      val fold = aggregate(sequence(lit(1), lit(15)),
-        struct(types.map(tp => lit(0.2).as(s"pi_$tp")): _*),
-        (acc, _) => struct(types.map { b =>
-          types.map(a => acc.getField(s"pi_$a") * p(a, b))
-            .reduceLeft(_ + _).as(s"pi_$b")
-        }: _*))
-      // hoist the fold into ONE column before the field selects (the
-      // q_pca_power/q_markov_attribution planning-cost lesson: five
-      // getField references would inline five copies of the
-      // 15-iteration tree into the projection)
-      one.withColumn("__f", fold)
-        .select(col("n_transitions") +:
-          types.map(tp => det6(col(s"__f.pi_$tp")).as(s"pi_$tp")): _*)
-    }),
-
-    // Markov removal-effect attribution (the data-driven alternative to
-    // last-touch/linear credit — Anderl et al.'s absorbing-chain
-    // framework): journeys are per-user ordered events; 'purchase' is
-    // the absorbing conversion state and journey ends absorb to NULL
-    // (P(i→j) = c_ij/den_i with den_i = ALL i occurrences, so the
-    // missing mass IS the null absorption — no renormalization).
-    // Absorption probabilities solve a = (c_i,purchase + Σ c_ij·a_j)/
-    // den_i by 30 fixed iterations from 0 (monotone convergent), once
-    // for the base chain and once per removed channel (transitions into
-    // the removed state become lost mass). Every count is an exact
-    // integer from ONE pass; the iterations are aggregate-HOF folds
-    // (lambda-variable state) mirrored by generated unrolled CTEs;
-    // conversion mixes over the exact first-event distribution. det6.
-    "q_markov_attribution" -> ((s, d) => {
-      val types = eventTypes
-      val na = types.filterNot(_ == "purchase")
-      val e = ev(s, d).select(col("user_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("sec"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("sec"), col("event_id"))
-      val withNext = e
-        .withColumn("next_type",
-          coalesce(lead(col("event_type"), 1).over(w), lit("END")))
-        .withColumn("rn", row_number().over(w))
-      val aggs = (countDistinct(col("user_id")).as("n_users") +:
-        types.map(t0 => sum(when(col("rn") === 1 &&
-          col("event_type") === t0, 1L).otherwise(0L)).as(s"s_$t0"))) ++
-        na.map(i => sum(when(col("event_type") === i, 1L).otherwise(0L))
-          .as(s"den_$i")) ++
-        (for { i <- na; j <- types } yield
-          sum(when(col("event_type") === i && col("next_type") === j, 1L)
-            .otherwise(0L)).as(s"c_${i}_$j"))
-      val one = withNext.agg(aggs.head, aggs.tail: _*)
-      // Removed-scenario semantics (Anderl et al.): the removed node is
-      // FULLY replaced by the null state — a_removed ≡ 0, so its
-      // first-touch mass, its direct-to-purchase transitions, AND
-      // transitions into it all earn zero credit (r14 ADVICE: the
-      // earlier form only dropped transitions INTO the removed channel,
-      // understating removal for journey-starting channels).
-      def absorbFold(removed: Option[String]) =
-        aggregate(sequence(lit(1), lit(30)),
-          struct(na.map(i => lit(0.0).as(s"a_$i")): _*),
-          (acc, _) => struct(na.map { i =>
-            if (removed.contains(i)) lit(0.0).as(s"a_$i")
-            else {
-              val num = na.filterNot(removed.contains)
-                .foldLeft(col(s"c_${i}_purchase").cast("double")) {
-                  (sum0, j) =>
-                    sum0 + col(s"c_${i}_$j").cast("double") *
-                      acc.getField(s"a_$j")
-                }
-              when(col(s"den_$i") > 0, num / col(s"den_$i"))
-                .otherwise(lit(0.0)).as(s"a_$i")
-            }
-          }: _*))
-      // hoist every fold into a COLUMN before the per-row conversions:
-      // inlining the same Column trees put ~6 copies of the
-      // 30-iteration fold (4 more inside each conv's field accesses) in
-      // one projection, and the driver spent ~0.9 s of the 1.3 s line
-      // planning/compiling it (measured r18: jobs totalled 0.36 s wall;
-      // the gap sat between the scan job and the window exchange). One
-      // attribute reference per use keeps the arithmetic bit-identical
-      // (same fold, evaluated once per row of a 1-row relation) and
-      // shrinks the expression tree ~6×.
-      def convOf(f: String): Column =
-        types.map { t0 =>
-          val a = if (t0 == "purchase") lit(1.0)
-            else col(s"$f.a_$t0")
-          col(s"s_$t0").cast("double") / col("n_users") * a
-        }.reduceLeft(_ + _)
-      val withFolds = na.foldLeft(
-        one.withColumn("__f_base", absorbFold(None))) { (df, k) =>
-        df.withColumn(s"__f_$k", absorbFold(Some(k)))
-      }.withColumn("c_base", convOf("__f_base"))
-      val cBase = col("c_base")
-      val rows = na.map { k =>
-        val cK = convOf(s"__f_$k")
-        struct(lit(k).as("channel"), det6(cBase).as("conv_base_r"),
-          det6(cK).as("conv_removed_r"),
-          when(cBase > 0.0, det6((cBase - cK) / cBase))
-            .otherwise(lit(0.0)).as("removal_r"))
-      }
-      withFolds.select(explode(array(rows: _*)).as("r"))
-        .select(col("r.channel").as("channel"),
-          col("r.conv_base_r").as("conv_base_r"),
-          col("r.conv_removed_r").as("conv_removed_r"),
-          col("r.removal_r").as("removal_r"))
-        .orderBy(col("channel"))
-    }),
-
-    // Additive Holt–Winters (triple exponential smoothing, weekly
-    // season m=7) over the daily count series — the seasonal upgrade of
-    // q_holt_linear: state (level, trend, 7-slot seasonal ring), the
-    // UNIFORM recursion from the zero state for every step (no
-    // first-step special case to mirror), dyadic smoothing constants
-    // (α=β=0.5, γ=0.25 — exactly representable), l′ inlined textually
-    // into b′ and s′ exactly as the oracle's RECURSIVE CTE writes it.
-    // Gap days are absent from the index (the q_holt_linear series
-    // convention). Outputs det6; fc1 = l + b + next seasonal.
-    "q_holt_winters" -> ((s, d) => {
-      val daily = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
-          .as("day"))
-        .agg(count(lit(1)).cast("double").as("y"))
-      val ring = (1 to 7).map(i => s"s$i")
-      val zero = struct((Seq(lit(0.0).as("l"), lit(0.0).as("b")) ++
-        ring.map(r => lit(0.0).as(r))): _*)
-      val folded = daily.agg(count(lit(1)).as("n_days"),
-        aggregate(
-          sort_array(collect_list(struct(col("day"), col("y")))),
-          zero,
-          (st, e) => {
-            val y = e.getField("y")
-            val l = st.getField("l"); val b = st.getField("b")
-            val s1 = st.getField("s1")
-            val lNew = lit(0.5) * (y - s1) + lit(0.5) * (l + b)
-            val bNew = lit(0.5) * (lNew - l) + lit(0.5) * b
-            val sNew = lit(0.25) * (y - lNew) + lit(0.75) * s1
-            struct((Seq(lNew.as("l"), bNew.as("b")) ++
-              (2 to 7).map(i => st.getField(s"s$i").as(s"s${i - 1}")) :+
-              sNew.as("s7")): _*)
-          }).as("st"))
-      folded.select(col("n_days"),
-        det6(col("st.l")).as("level_r"), det6(col("st.b")).as("trend_r"),
-        det6(col("st.l") + col("st.b") + col("st.s1")).as("fc1_r"))
-    }),
-
-    // Rolling control band (the SLO-envelope op next to
-    // q_rolling_median's point smoother): per day, P10/P90 of the
-    // TRAILING 28 days of revenue — exact lower order statistics
-    // (index ⌈p·n⌉ via all-integer arithmetic) from the sorted window
-    // array, today excluded so breaches test fresh data against
-    // history; breach flags are integer comparisons. Only days with
-    // the full 28-day history report (identical filter both engines).
-    "q_rolling_band" -> ((s, d) => {
-      val daily = Tables.load(s, d, "orders")
-        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 86400)
-          .cast("long").as("day"))
-        .agg(sum(cents(col("o_totalprice"))).as("x"))
-      val w = Window.orderBy(col("day")).rowsBetween(-28, -1)
-      val n = size(col("arr"))
-      def ordIdx(num: Int, den: Int) =
-        ((n * num + lit(den - 1)) / den).cast("int")
-      daily
-        .withColumn("arr", sort_array(collect_list(col("x")).over(w)))
-        .filter(size(col("arr")) === 28)
-        .select(col("day"), col("x"),
-          element_at(col("arr"), ordIdx(1, 10)).as("p10_c"),
-          element_at(col("arr"), ordIdx(9, 10)).as("p90_c"))
-        .withColumn("breach_low",
-          when(col("x") < col("p10_c"), 1L).otherwise(0L))
-        .withColumn("breach_high",
-          when(col("x") > col("p90_c"), 1L).otherwise(0L))
-        .orderBy(col("day"))
-    }),
-
-    // Three-way audience overlap (the inclusion–exclusion Venn census
-    // behind segment planning): per-user flags for click / purchase /
-    // signup from ONE rollup, then every region cardinality and the
-    // union as exact conditional sums — a single pass, no joins at all.
-    "q_venn3" -> ((s, d) => {
-      val u = ev(s, d).groupBy(col("user_id")).agg(
-        max(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("b"),
-        max(when(col("event_type") === "signup", 1L).otherwise(0L)).as("c"))
-      u.agg(
-        sum(col("a")).as("n_a"), sum(col("b")).as("n_b"),
-        sum(col("c")).as("n_c"),
-        sum(col("a") * col("b")).as("n_ab"),
-        sum(col("a") * col("c")).as("n_ac"),
-        sum(col("b") * col("c")).as("n_bc"),
-        sum(col("a") * col("b") * col("c")).as("n_abc"),
-        sum(when(col("a") + col("b") + col("c") > 0, 1L).otherwise(0L))
-          .as("n_union"))
-    }),
-
-    // Exact 7-day rolling median of daily revenue (the robust KPI
-    // smoother next to q_events_ewma's mean): daily integer cents, a
-    // RANGE frame over the bounded day domain (missing days shrink the
-    // window identically on both engines), the median picked from the
-    // sorted window array — odd windows are exact integers, even
-    // windows are (a+b)/2 with both operands far below 2^53, exactly
-    // representable — so the output needs NO rounding contract at all.
-    "q_rolling_median" -> ((s, d) => {
-      val daily = Tables.load(s, d, "orders")
-        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 86400)
-          .cast("long").as("day"))
-        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
-      val w = Window.orderBy(col("day")).rangeBetween(-6, 0)
-      daily
-        .withColumn("arr", sort_array(collect_list(col("rev_c")).over(w)))
-        .select(col("day"), col("rev_c"),
-          size(col("arr")).cast("long").as("n_win"),
-          when(pmod(size(col("arr")), lit(2)) === 1,
-            element_at(col("arr"),
-              ((size(col("arr")) + 1) / 2).cast("int")).cast("double"))
-            .otherwise(
-              (element_at(col("arr"), (size(col("arr")) / 2).cast("int")) +
-                element_at(col("arr"),
-                  (size(col("arr")) / 2).cast("int") + 1))
-                .cast("double") / 2.0)
-            .as("med_7d"))
-        .orderBy(col("day"))
-    })
-  )
-
   /** Shared CTE prefix of the q_image_phash / q_image_phash_dups
     * oracles: replay the content-image raster WITHOUT a PNG decoder —
     * FNV-1a 64 of the text (unsigned HUGEINT residues, TextQueries.mm64
@@ -2244,223 +539,260 @@ object EventQueries {
        |  GROUP BY l.doc_id, k // 16)""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "q_image_phash" ->
-      s"""WITH $imagePhashCtes
-         |SELECT media_id,
-         |  CAST(MIN(w) AS INTEGER) AS img_width,
-         |  CAST(MIN(h) AS INTEGER) AS img_height,
-         |  CAST(MAX(CASE WHEN band = 0 THEN bval END) AS BIGINT) AS b0,
-         |  CAST(MAX(CASE WHEN band = 1 THEN bval END) AS BIGINT) AS b1,
-         |  CAST(MAX(CASE WHEN band = 2 THEN bval END) AS BIGINT) AS b2,
-         |  CAST(MAX(CASE WHEN band = 3 THEN bval END) AS BIGINT) AS b3
-         |FROM iph GROUP BY media_id ORDER BY media_id""".stripMargin,
+  val declarations: Seq[Query] = Seq(
+    // tumbling 1h windows via window() — the batch twin of
+    // EventStreams.tumblingCounts
+    Query("q_events_hourly", (s, d) => {
+      ev(s, d)
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
+        .select(col("window.start").cast("string").as("window_start"),
+          col("event_type"), col("n"), col("value_c"))
+        .orderBy(col("window_start"), col("event_type"))
+    }, Sql(
+      """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS window_start,
+        |  event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)),
 
-    // per-image hamming(original, perturbed) histogram — the oracle
-    // replays BOTH rasters (perturbation = red-low-bit flip on every
-    // sampled pixel, the engine's rule)
-    "q_image_phash_stability" ->
-      s"""WITH $imagePhashCtes,
-         |iph_ham AS (
-         |  SELECT media_id,
-         |    CAST(SUM(bit_count(xor(bval, bval_p))) AS BIGINT) AS hamming
-         |  FROM iph GROUP BY media_id)
-         |SELECT hamming, COUNT(*) AS n_images
-         |FROM iph_ham GROUP BY hamming ORDER BY hamming""".stripMargin,
+    // HOPPING (sliding) 1h windows every 15 min — the third window kind
+    // next to tumbling (q_events_hourly) and session
+    // (q_events_session_window): each event lands in exactly 4
+    // overlapping windows (Spark aligns hop starts to epoch 0, so the
+    // oracle reproduces membership as slot−k for k∈0..3). Same epoch-
+    // second output convention; same streaming operator class as
+    // tumblingCounts (window() with a slide).
+    Query("q_events_hopping", (s, d) => {
+      ev(s, d)
+        .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
+        .select(unix_timestamp(col("window.start")).as("start_sec"),
+          col("event_type"), col("n"), col("value_c"))
+        .orderBy(col("start_sec"), col("event_type"))
+    }, Sql(
+      // hop membership: an event at epoch-second slot s=floor(epoch/900)
+      // belongs to windows starting at (s-k)*900, k=0..3 (1h window /
+      // 15min slide, epoch-aligned like Spark's window())
+      """WITH k AS (SELECT * FROM (VALUES (0), (1), (2), (3)) k(k)),
+        |e AS (
+        |  SELECT (CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) // 900) AS slot,
+        |    event_type, value
+        |  FROM events
+        |)
+        |SELECT (slot - k.k) * 900 AS start_sec, event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
+        |FROM e CROSS JOIN k
+        |GROUP BY 1, 2 ORDER BY start_sec, event_type""".stripMargin)),
 
-    // the same capped band-bucket candidate algebra as Dedup.bucketPairs
-    // (rn <= 256 per (band,bval) in id order + overflow star to the
-    // bucket minimum), DISTINCT across bands, exact hamming verify
-    "q_image_phash_dups" ->
-      s"""WITH $imagePhashCtes,
-         |iph_r AS (
-         |  SELECT media_id, band, bval,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bval
-         |      ORDER BY media_id) AS rn,
-         |    MIN(media_id) OVER (PARTITION BY band, bval) AS mn
-         |  FROM iph),
-         |iph_cand AS (
-         |  SELECT x.media_id AS a, y.media_id AS b
-         |  FROM iph_r x JOIN iph_r y
-         |    ON x.band = y.band AND x.bval = y.bval
-         |    AND x.media_id < y.media_id
-         |  WHERE x.rn <= 256 AND y.rn <= 256
-         |  UNION ALL
-         |  SELECT mn AS a, media_id AS b FROM iph_r WHERE rn > 256),
-         |iph_cd AS (SELECT DISTINCT a, b FROM iph_cand),
-         |iph_hx AS (
-         |  SELECT cd.a, cd.b,
-         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
-         |      AS hamming
-         |  FROM iph_cd cd
-         |  JOIN iph pa ON cd.a = pa.media_id
-         |  JOIN iph pb ON cd.b = pb.media_id AND pa.band = pb.band
-         |  GROUP BY cd.a, cd.b)
-         |SELECT a, b, hamming FROM iph_hx
-         |WHERE hamming <= 3 ORDER BY a, b""".stripMargin,
+    // gap-based sessionization (30 min), batch gaps-and-islands form of
+    // EventStreams.sessionize
+    Query("q_events_sessions", (s, d) => {
+      val base = ev(s, d).select(col("user_id"), col("event_id"),
+        unix_timestamp(col("ts")).as("sec"), col("value"))
+      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
+      val flagged = base
+        .withColumn("prev_sec", lag(col("sec"), 1).over(wOrd))
+        .withColumn("new_session",
+          when(col("prev_sec").isNull || col("sec") - col("prev_sec") > 1800, 1L).otherwise(0L))
+      val sessions = flagged
+        .withColumn("session_id",
+          sum(col("new_session")).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
+      sessions.groupBy(col("user_id"), col("session_id"))
+        .agg(min(col("sec")).as("session_start_sec"),
+          max(col("sec")).as("session_end_sec"),
+          count(lit(1)).as("n_events"),
+          sum(cents(col("value"))).as("value_c"))
+        .orderBy(col("user_id"), col("session_id"))
+    }, Sql(
+      """WITH base AS (
+        |  SELECT user_id, event_id,
+        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec, value
+        |  FROM events
+        |),
+        |flagged AS (
+        |  SELECT *, CASE WHEN lag(sec) OVER w IS NULL
+        |                   OR sec - lag(sec) OVER w > 1800
+        |                 THEN 1 ELSE 0 END AS new_session
+        |  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
+        |),
+        |sessions AS (
+        |  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id
+        |    ORDER BY sec, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+        |  FROM flagged
+        |)
+        |SELECT user_id, session_id,
+        |  MIN(sec) AS session_start_sec, MAX(sec) AS session_end_sec,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
+        |FROM sessions GROUP BY user_id, session_id
+        |ORDER BY user_id, session_id""".stripMargin)),
 
-    // DE-EXEMPTED r17: full arithmetic replay of the stub-model feature
-    // extraction (exact integer bucket sums from the content-hash
-    // splitmix stream; the float via the shared ExactRatio spec)
-    "q_media_features" ->
-      s"""WITH $mediaFeatureCtes
-         |SELECT m.doc_id AS media_id,
-         |  CASE m.doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-         |    ELSE 'video' END AS kind,
-         |  m.n AS n_bytes,
-         |  CAST(CASE WHEN m.u >= 9223372036854775808
-         |    THEN m.u - 18446744073709551616 ELSE m.u END AS BIGINT)
-         |    AS content_hash,
-         |  COALESCE(f.f0_sum, 0) AS f0_sum,
-         |  ${sratio6Sql("COALESCE(f.f0_sum, 0)", "65536")} AS f0
-         |FROM mf_meta m LEFT JOIN mf f ON m.doc_id = f.doc_id
-         |ORDER BY media_id""".stripMargin,
+    // the BUILT-IN session_window in batch mode (same operator the
+    // streaming path uses) — cross-checked against the gaps-and-islands
+    // formulation in q_events_sessions via the DuckDB oracle: a session's
+    // end is its last event + gap.
+    Query("q_events_session_window", (s, d) => {
+      ev(s, d)
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("value_c"))
+        .select(col("user_id"),
+          unix_timestamp(col("session_window.start")).as("start_sec"),
+          unix_timestamp(col("session_window.end")).as("end_sec"),
+          col("n_events"), col("value_c"))
+        .orderBy(col("user_id"), col("start_sec"))
+    }, Sql(
+      // µs-precision gaps (session_window merges on the full timestamp:
+      // same session iff gap < 30min strictly); end = last event + gap,
+      // floored to seconds only at output
+      """WITH base AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events
+        |),
+        |flagged AS (
+        |  SELECT *, CASE WHEN lag(us) OVER w IS NULL
+        |                   OR us - lag(us) OVER w >= 1800000000
+        |                 THEN 1 ELSE 0 END AS new_session
+        |  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+        |),
+        |sessions AS (
+        |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM flagged
+        |)
+        |SELECT user_id,
+        |  CAST(FLOOR(MIN(us)/1000000) AS BIGINT) AS start_sec,
+        |  CAST(FLOOR(MAX(us)/1000000) AS BIGINT) + 1800 AS end_sec,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
+        |FROM sessions GROUP BY user_id, session_id
+        |ORDER BY user_id, start_sec""".stripMargin)),
 
-    // DE-EXEMPTED r16: full-raster arithmetic replay of the real PNG
-    // decode (exact integer channel sums; means via the shared
-    // ExactRatio spec — no ROUND(DOUBLE) seam)
-    "q_media_decode" ->
-      s"""WITH $imageDecodeCtes
-         |SELECT media_id, w AS img_width, h AS img_height,
-         |  CAST(3 AS BIGINT) AS n_channels, w * h AS n_pixels,
-         |  sum_r, sum_g, sum_b,
-         |  ${ratio6Sql("sum_r", "w * h")} AS mean_r,
-         |  ${ratio6Sql("sum_g", "w * h")} AS mean_g,
-         |  ${ratio6Sql("sum_b", "w * h")} AS mean_b
-         |FROM img ORDER BY media_id""".stripMargin,
+    // pivot: per-user event-type counts as columns (explicit value list →
+    // deterministic output schema)
+    Query("q_events_pivot", (s, d) => {
+      ev(s, d)
+        .groupBy(col("user_id"))
+        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
+        .count()
+        .select(col("user_id"),
+          coalesce(col("click"), lit(0L)).as("n_click"),
+          coalesce(col("view"), lit(0L)).as("n_view"),
+          coalesce(col("purchase"), lit(0L)).as("n_purchase"),
+          coalesce(col("signup"), lit(0L)).as("n_signup"),
+          coalesce(col("error"), lit(0L)).as("n_error"))
+        .orderBy(col("user_id"))
+    }, Sql(
+      """SELECT user_id,
+        |  COUNT(*) FILTER (WHERE event_type = 'click') AS n_click,
+        |  COUNT(*) FILTER (WHERE event_type = 'view') AS n_view,
+        |  COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
+        |  COUNT(*) FILTER (WHERE event_type = 'signup') AS n_signup,
+        |  COUNT(*) FILTER (WHERE event_type = 'error') AS n_error
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin), headline = false),
 
-    // DE-EXEMPTED r16: per-sample arithmetic replay of the real WAV
-    // decode (exact integer moments; RMS via the det6-pinned
-    // IEEE-correctly-rounded chain in mirrored op order)
-    "q_audio_decode" ->
-      s"""WITH $audioDecodeCtes
-         |SELECT media_id, CAST(16000 AS BIGINT) AS sample_rate,
-         |  n_samples, sum_sq, sum_abs, zero_crossings,
-         |  ${det6Sql("sqrt(CAST(sum_sq AS DOUBLE) / " +
-             "CAST(n_samples AS DOUBLE)) / 32768.0")} AS rms_r
-         |FROM aud ORDER BY media_id""".stripMargin,
+    // JSON-ish prop extraction (regexp — identical semantics both engines)
+    Query("q_events_props", (s, d) => {
+      ev(s, d)
+        .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long"))
+        .groupBy(pmod(col("k"), lit(10)).as("k_mod"))
+        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
+        .orderBy(col("k_mod"))
+    }, Sql(
+      """SELECT CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) % 10 AS k_mod,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
+        |FROM events GROUP BY 1 ORDER BY k_mod""".stripMargin), headline = false),
 
-    "q_audio_phash" ->
-      s"""WITH $audioPhashCtes
-         |SELECT media_id, MIN(n) AS n_samples,
-         |  CAST(MAX(CASE WHEN band = 0 THEN bval END) AS BIGINT) AS b0,
-         |  CAST(MAX(CASE WHEN band = 1 THEN bval END) AS BIGINT) AS b1,
-         |  CAST(MAX(CASE WHEN band = 2 THEN bval END) AS BIGINT) AS b2,
-         |  CAST(MAX(CASE WHEN band = 3 THEN bval END) AS BIGINT) AS b3
-         |FROM aph GROUP BY media_id ORDER BY media_id""".stripMargin,
+    // event-type funnel ordering per user: first signup → first purchase
+    // lag analysis (windowed min over conditional)
+    Query("q_events_funnel", (s, d) => {
+      ev(s, d)
+        .groupBy(col("user_id"))
+        .agg(
+          min(when(col("event_type") === "signup", unix_timestamp(col("ts")))).as("first_signup_sec"),
+          min(when(col("event_type") === "purchase", unix_timestamp(col("ts")))).as("first_purchase_sec"),
+          count(lit(1)).as("n_events"))
+        .withColumn("signup_to_purchase_sec",
+          when(col("first_signup_sec").isNotNull && col("first_purchase_sec").isNotNull
+            && (col("first_purchase_sec") >= col("first_signup_sec")),
+            col("first_purchase_sec") - col("first_signup_sec")))
+        .orderBy(col("user_id"))
+    }, Sql(
+      """SELECT user_id,
+        |  MIN(CASE WHEN event_type = 'signup'
+        |      THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) AS first_signup_sec,
+        |  MIN(CASE WHEN event_type = 'purchase'
+        |      THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) AS first_purchase_sec,
+        |  COUNT(*) AS n_events,
+        |  CASE WHEN MIN(CASE WHEN event_type = 'signup'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) IS NOT NULL
+        |        AND MIN(CASE WHEN event_type = 'purchase'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) IS NOT NULL
+        |        AND MIN(CASE WHEN event_type = 'purchase'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) >=
+        |            MIN(CASE WHEN event_type = 'signup'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END)
+        |       THEN MIN(CASE WHEN event_type = 'purchase'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) -
+        |            MIN(CASE WHEN event_type = 'signup'
+        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END)
+        |  END AS signup_to_purchase_sec
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin), headline = false),
 
-    // same capped band-bucket candidate algebra as the image twin
-    // (Dedup.bucketPairs: rn <= 256 per (band,bval) in id order +
-    // overflow star), DISTINCT across bands, exact hamming verify
-    "q_audio_phash_dups" ->
-      s"""WITH $audioPhashCtes,
-         |auh_r AS (
-         |  SELECT media_id, band, bval,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bval
-         |      ORDER BY media_id) AS rn,
-         |    MIN(media_id) OVER (PARTITION BY band, bval) AS mn
-         |  FROM aph),
-         |auh_cand AS (
-         |  SELECT x.media_id AS a, y.media_id AS b
-         |  FROM auh_r x JOIN auh_r y
-         |    ON x.band = y.band AND x.bval = y.bval
-         |    AND x.media_id < y.media_id
-         |  WHERE x.rn <= 256 AND y.rn <= 256
-         |  UNION ALL
-         |  SELECT mn AS a, media_id AS b FROM auh_r WHERE rn > 256),
-         |auh_cd AS (SELECT DISTINCT a, b FROM auh_cand),
-         |auh_hx AS (
-         |  SELECT cd.a, cd.b,
-         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
-         |      AS hamming
-         |  FROM auh_cd cd
-         |  JOIN aph pa ON cd.a = pa.media_id
-         |  JOIN aph pb ON cd.b = pb.media_id AND pa.band = pb.band
-         |  GROUP BY cd.a, cd.b)
-         |SELECT a, b, hamming FROM auh_hx
-         |WHERE hamming <= 3 ORDER BY a, b""".stripMargin,
-
-    // bucket health of both modalities' band relations (cap 256, the
-    // bucketPairs/bandHashIndex bound)
-    "q_phash_bucket_health" ->
-      s"""WITH $imagePhashCtes, $audioPhashCtes,
-         |pbh_i AS (SELECT band, bval, COUNT(*) AS n
-         |  FROM iph GROUP BY band, bval),
-         |pbh_a AS (SELECT band, bval, COUNT(*) AS n
-         |  FROM aph GROUP BY band, bval),
-         |pbh AS (
-         |  SELECT 'audio' AS modality, CAST(COUNT(*) AS BIGINT) AS n_buckets,
-         |    CAST(MAX(n) AS BIGINT) AS max_bucket,
-         |    CAST(SUM(CASE WHEN n > 256 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_truncated,
-         |    CAST(SUM(CASE WHEN n > 256 THEN n - 256 ELSE 0 END) AS BIGINT)
-         |      AS ids_dropped
-         |  FROM pbh_a
-         |  UNION ALL
-         |  SELECT 'image', CAST(COUNT(*) AS BIGINT),
-         |    CAST(MAX(n) AS BIGINT),
-         |    CAST(SUM(CASE WHEN n > 256 THEN 1 ELSE 0 END) AS BIGINT),
-         |    CAST(SUM(CASE WHEN n > 256 THEN n - 256 ELSE 0 END) AS BIGINT)
-         |  FROM pbh_i)
-         |SELECT * FROM pbh ORDER BY modality""".stripMargin,
-
-    // incremental image dedup: the index side (media_id%10<>3) capped
-    // at 256 per (band,bval) in id order — the bandHashIndex cap — the
-    // batch side (media_id%10==3) uncapped; exact hamming verify on the
-    // DISTINCT candidates
-    "q_image_dedup_incremental" ->
-      s"""WITH $imagePhashCtes,
-         |inc_r AS (
-         |  SELECT media_id, band, bval,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bval
-         |      ORDER BY media_id) AS rn
-         |  FROM iph WHERE media_id % 10 <> 3),
-         |inc_cand AS (
-         |  SELECT DISTINCT b.media_id AS new_id, c.media_id AS corpus_id
-         |  FROM iph b JOIN inc_r c ON b.band = c.band AND b.bval = c.bval
-         |  WHERE b.media_id % 10 = 3 AND c.rn <= 256),
-         |inc_hx AS (
-         |  SELECT cd.new_id, cd.corpus_id,
-         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
-         |      AS hamming
-         |  FROM inc_cand cd
-         |  JOIN iph pa ON cd.new_id = pa.media_id
-         |  JOIN iph pb ON cd.corpus_id = pb.media_id
-         |    AND pa.band = pb.band
-         |  GROUP BY cd.new_id, cd.corpus_id)
-         |SELECT new_id, corpus_id, hamming FROM inc_hx
-         |WHERE hamming <= 3 ORDER BY new_id, corpus_id""".stripMargin,
-
-    // incremental audio dedup: same algebra over the audio-phash bands
-    // (index side capped at 256 per (band,bval) in id order, batch side
-    // uncapped, exact hamming verify on the DISTINCT candidates)
-    "q_audio_dedup_incremental" ->
-      s"""WITH $audioPhashCtes,
-         |ainc_r AS (
-         |  SELECT media_id, band, bval,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bval
-         |      ORDER BY media_id) AS rn
-         |  FROM aph WHERE media_id % 10 <> 3),
-         |ainc_cand AS (
-         |  SELECT DISTINCT b.media_id AS new_id, c.media_id AS corpus_id
-         |  FROM aph b JOIN ainc_r c ON b.band = c.band AND b.bval = c.bval
-         |  WHERE b.media_id % 10 = 3 AND c.rn <= 256),
-         |ainc_hx AS (
-         |  SELECT cd.new_id, cd.corpus_id,
-         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
-         |      AS hamming
-         |  FROM ainc_cand cd
-         |  JOIN aph pa ON cd.new_id = pa.media_id
-         |  JOIN aph pb ON cd.corpus_id = pb.media_id
-         |    AND pa.band = pb.band
-         |  GROUP BY cd.new_id, cd.corpus_id)
-         |SELECT new_id, corpus_id, hamming FROM ainc_hx
-         |WHERE hamming <= 3 ORDER BY new_id, corpus_id""".stripMargin,
-
-    // MK S is exact integer; each pairwise slope is one exact division;
-    // the median rank convention ((m+1)/2, (m+2)/2 with a 2-value avg)
-    // and the OLS exact-moment op order mirror the engine exactly
-    "q_trend_robust" ->
+    // as-of backward join (union+window form, AsofJoin scaladoc): each
+    // Robust trend over the daily event series (the drift-monitor pair
+    // every volume dashboard needs): Mann-Kendall S (Σ sign of all
+    // forward pairs — EXACT INTEGER, the nonparametric "is it trending"
+    // statistic) + the Theil-Sen slope (exact median of pairwise
+    // slopes — a 30% outlier-day contamination can't move it, unlike
+    // OLS) + the OLS slope from exact integer moments for contrast.
+    // Scale shape: the all-pairs expansion is over the AGGREGATED daily
+    // series — bounded by |calendar days|², which grows with TIME, not
+    // data volume (a decade is ~6.6M pairs); the median rank rides
+    // Rank.withGlobalRank (range-partitioned sort + offsets — never a
+    // single-partition window), and each pairwise slope is one exact
+    // integer division. Median convention: avg of ranks (m+1)/2 and
+    // (m+2)/2 (equal for odd m) — a 2-value IEEE avg is commutative,
+    // so the seam is engine-safe.
+    Query("q_trend_robust", (s, d) => {
+      val daily = ev(s, d)
+        .select((unix_micros(col("ts")) / lit(86400000000L))
+          .cast("long").as("day"))
+        .groupBy(col("day")).agg(count(lit(1)).as("y"))
+        .localCheckpoint(true) // self-joined + the moments branch
+      val pairs = daily.select(col("day").as("di"), col("y").as("yi"))
+        .join(daily.select(col("day").as("dj"), col("y").as("yj")),
+          col("di") < col("dj"))
+        .select(col("di"), col("dj"),
+          when(col("yj") > col("yi"), 1L)
+            .when(col("yj") < col("yi"), -1L).otherwise(0L).as("sgn"),
+          ((col("yj") - col("yi")).cast("double") /
+            (col("dj") - col("di"))).as("slope"))
+        .localCheckpoint(true) // MK aggregate + the ranked-median pass
+      val mk = pairs.agg(sum(col("sgn")).as("mk_s"),
+        count(lit(1)).as("n_pairs"))
+      val (ranked, m) = graft.operators.Rank.withGlobalRank(
+        pairs, "rk", col("slope"), col("di"), col("dj"))
+      val (lo, hi) = ((m + 1) / 2, (m + 2) / 2)
+      val med = ranked.filter(col("rk") === lo || col("rk") === hi)
+        .agg(det6(avg(col("slope"))).as("ts_slope_r"))
+      val ols = daily.agg(
+        count(lit(1)).as("n_days"),
+        sum(col("day").cast("decimal(38,0)")).as("sx"),
+        sum(col("y").cast("decimal(38,0)")).as("sy"),
+        sum((col("day") * col("y")).cast("decimal(38,0)")).as("sxy"),
+        sum((col("day") * col("day")).cast("decimal(38,0)")).as("sxx"))
+        .select(col("n_days"),
+          sratio6(col("n_days").cast("decimal(38,0)") * col("sxy") -
+            col("sx") * col("sy"),
+            col("n_days").cast("decimal(38,0)") * col("sxx") -
+              col("sx") * col("sx")).as("ols_slope_r"))
+      ols.crossJoin(broadcast(mk)).crossJoin(broadcast(med))
+        .select(col("n_days"), col("n_pairs"), col("mk_s"),
+          col("ts_slope_r"), col("ols_slope_r"))
+    }, Sql(
+      // MK S is exact integer; each pairwise slope is one exact division;
+      // the median rank convention ((m+1)/2, (m+2)/2 with a 2-value avg)
+      // and the OLS exact-moment op order mirror the engine exactly
       s"""WITH daily AS (
         |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
         |    CAST(COUNT(*) AS BIGINT) AS y
@@ -2492,9 +824,843 @@ object EventQueries {
         |SELECT m.n_days, mk.n_pairs, mk.mk_s, med.ts_slope_r,
         |  ${sratio6Sql("m.n * m.sxy - m.sx * m.sy",
                         "m.n * m.sxx - m.sx * m.sx")} AS ols_slope_r
-        |FROM m, mk, med""".stripMargin,
+        |FROM m, mk, med""".stripMargin)),
 
-    "q_events_ewma" -> {
+    // purchase event gets the user's most recent click at-or-before it.
+    // Microsecond epochs: distinct across events, so ties can't make the
+    // DuckDB ASOF oracle ambiguous.
+    Query("q_events_asof", (s, d) => {
+      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("us"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
+        attach = Map("click_id" -> "last_click_id"), rightTiebreak = "click_id")
+        .select(col("user_id"), col("event_id"), col("us"), col("last_click_id"))
+        .orderBy(col("user_id"), col("us"))
+    }, Sql(
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type,
+        |    epoch_us(ts) AS us
+        |  FROM events
+        |),
+        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
+        |SELECT p.user_id, p.event_id, p.us, c.click_id AS last_click_id
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us >= c.us
+        |ORDER BY p.user_id, p.us""".stripMargin)),
+
+    // as-of FORWARD join: each purchase gets the user's NEXT click
+    // at-or-after it (same union+window operator, reversed sweep).
+    Query("q_events_asof_fwd", (s, d) => {
+      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("us"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      AsofJoin.asofForward(purchases, clicks, "user_id", "us", "us",
+        attach = Map("click_id" -> "next_click_id"), rightTiebreak = "click_id")
+        .select(col("user_id"), col("event_id"), col("us"), col("next_click_id"))
+        .orderBy(col("user_id"), col("us"))
+    }, Sql(
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type,
+        |    epoch_us(ts) AS us
+        |  FROM events
+        |),
+        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
+        |SELECT p.user_id, p.event_id, p.us, c.click_id AS next_click_id
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us <= c.us
+        |ORDER BY p.user_id, p.us""".stripMargin), headline = false),
+
+    // as-of NEAREST join (pandas merge_asof direction='nearest'): each
+    // purchase gets the user's click with the SMALLEST |Δt|, either
+    // side. Composition, not a new operator: the nearest match is by
+    // definition either the backward-nearest or the forward-nearest, so
+    // two single-shuffle sweeps + a least-distance pick on the unique
+    // event key answer it — never the |purchases|×|clicks| per-user
+    // candidate explosion the oracle's join form uses. Tie contract
+    // (mirrored EXACTLY in the oracle's rank ordering): equal distance
+    // prefers the EARLIER (backward) click; equal-time backward clicks
+    // resolve to the largest click_id, forward ones to the smallest
+    // (the two sweeps' own tiebreaks — the oracle's side-dependent
+    // CASE sign reproduces both).
+    Query("q_events_asof_nearest", (s, d) => {
+      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("us"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      val b = AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
+        attach = Map("click_id" -> "b_id", "us" -> "b_us"),
+        rightTiebreak = "click_id")
+      val f = AsofJoin.asofForward(purchases, clicks, "user_id", "us", "us",
+        attach = Map("click_id" -> "f_id", "us" -> "f_us"),
+        rightTiebreak = "click_id")
+      b.join(f, Seq("user_id", "event_id", "us"))
+        .withColumn("db", col("us") - col("b_us"))
+        .withColumn("df", col("f_us") - col("us"))
+        .withColumn("nearest_click_id",
+          when(col("b_us").isNull, col("f_id"))
+            .when(col("f_us").isNull, col("b_id"))
+            .when(col("db") <= col("df"), col("b_id"))
+            .otherwise(col("f_id")))
+        .withColumn("d_us",
+          when(col("b_us").isNull, col("df"))
+            .when(col("f_us").isNull, col("db"))
+            .otherwise(least(col("db"), col("df"))))
+        .filter(col("nearest_click_id").isNotNull)
+        .select(col("user_id"), col("event_id"), col("us"),
+          col("nearest_click_id"), col("d_us"))
+        .orderBy(col("user_id"), col("us"))
+    }, Sql(
+      // the rank ordering reproduces the engine's tie contract exactly:
+      // distance first; then earlier (backward) side; then the sweeps'
+      // own id tiebreaks via the side-dependent sign (backward largest,
+      // forward smallest)
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
+        |  FROM events
+        |),
+        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id, event_id AS click_id, us AS vus FROM e WHERE event_type = 'click'),
+        |cand AS (
+        |  SELECT p.user_id, p.event_id, p.us, c.click_id, c.vus,
+        |    ABS(p.us - c.vus) AS d
+        |  FROM p JOIN c ON p.user_id = c.user_id
+        |),
+        |pick AS (
+        |  SELECT user_id, event_id, us, click_id AS nearest_click_id,
+        |    d AS d_us,
+        |    ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY d, vus,
+        |      CASE WHEN vus <= us THEN -click_id ELSE click_id END) AS rn
+        |  FROM cand
+        |)
+        |SELECT user_id, event_id, us, nearest_click_id, d_us
+        |FROM pick WHERE rn = 1
+        |ORDER BY user_id, us""".stripMargin)),
+
+    // interval join (batch twin of EventStreams.intervalJoin, which is the
+    // watermarked stream-stream form): every click by the same user within
+    // 10 minutes AFTER a view. µs epochs at the output edge.
+    Query("q_events_interval", (s, d) => {
+      val e = ev(s, d)
+      val views = e.filter(col("event_type") === "view")
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id"), col("ts"))
+      graft.streaming.EventStreams.intervalJoin(views, clicks, "10 minutes")
+        .select(col("user_id"),
+          col("a_id").as("view_id"), col("b_id").as("click_id"),
+          unix_micros(col("a_ts")).as("view_us"),
+          unix_micros(col("b_ts")).as("click_us"))
+        .orderBy(col("user_id"), col("view_us"), col("click_us"))
+    }, Sql(
+      """WITH e AS (
+        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
+        |),
+        |v AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'view'),
+        |c AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'click')
+        |SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
+        |  v.us AS view_us, c.us AS click_us
+        |FROM v JOIN c ON v.user_id = c.user_id
+        |  AND c.us >= v.us AND c.us <= v.us + 600000000
+        |ORDER BY v.user_id, view_us, click_us""".stripMargin)),
+
+    // time-series RESAMPLE + gap fill: a dense hourly grid per event type
+    // (sequence over the global [min, max] hour span, exploded and
+    // broadcast-joined against the per-type dim), hours with no events
+    // zero-filled — the standard densification step before window models.
+    Query("q_events_gapfill", (s, d) => {
+      val hourly = ev(s, d)
+        .groupBy(col("event_type"),
+          (floor(unix_timestamp(col("ts")) / 3600) * 3600).as("hour_sec"))
+        .agg(count(lit(1)).as("n"))
+      val span = ev(s, d).agg(
+        (floor(min(unix_timestamp(col("ts"))) / 3600) * 3600).as("lo"),
+        (floor(max(unix_timestamp(col("ts"))) / 3600) * 3600).as("hi"))
+      val grid = span
+        .select(explode(sequence(col("lo"), col("hi"), lit(3600))).as("hour_sec"))
+        .crossJoin(ev(s, d).select(col("event_type")).distinct())
+      grid.join(hourly, Seq("event_type", "hour_sec"), "left")
+        .select(col("event_type"), col("hour_sec"),
+          coalesce(col("n"), lit(0L)).as("n"))
+        .orderBy(col("event_type"), col("hour_sec"))
+    }, Sql(
+      """WITH h AS (
+        |  SELECT event_type,
+        |    CAST(FLOOR(FLOOR(date_part('epoch', ts)) / 3600) * 3600 AS BIGINT) AS hour_sec,
+        |    COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2
+        |),
+        |span AS (
+        |  SELECT CAST(FLOOR(FLOOR(date_part('epoch', MIN(ts))) / 3600) * 3600 AS BIGINT) AS lo,
+        |         CAST(FLOOR(FLOOR(date_part('epoch', MAX(ts))) / 3600) * 3600 AS BIGINT) AS hi
+        |  FROM events
+        |),
+        |grid AS (
+        |  SELECT t.event_type, g.hour_sec
+        |  FROM (SELECT DISTINCT event_type FROM events) t,
+        |       (SELECT UNNEST(generate_series(lo, hi, 3600)) AS hour_sec FROM span) g
+        |)
+        |SELECT grid.event_type, grid.hour_sec, COALESCE(h.n, 0) AS n
+        |FROM grid LEFT JOIN h USING (event_type, hour_sec)
+        |ORDER BY event_type, hour_sec""".stripMargin), headline = false),
+
+    // Spark 4 VARIANT type: parse_json once → typed variant_get path
+    // extraction — the semi-structured scale path (binary-encoded, no
+    // per-query regexp, shredding-ready), next to the from_json typed
+    // struct and the regexp fallback.
+    Query("q_events_variant", (s, d) => {
+      Tables.events(s, d)
+        .withColumn("k", variant_get(parse_json(col("props")), "$.k", "long"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
+        .orderBy(col("event_type"))
+    }, Sql(
+      """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(props::JSON->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k
+        |FROM events
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+
+    // JSON prop parsing with an explicit schema (from_json — the typed
+    // path next to the regexp fallback in q_events_props)
+    Query("q_events_json", (s, d) => {
+      ev(s, d)
+        .withColumn("j", from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))))
+        .select(col("event_id"), col("j.k").as("k"))
+        .filter(col("k").isNotNull)
+        .orderBy(col("event_id"))
+    }, Sql(
+      """SELECT event_id, CAST(props::JSON->>'$.k' AS BIGINT) AS k
+        |FROM events
+        |WHERE props::JSON->>'$.k' IS NOT NULL
+        |ORDER BY event_id""".stripMargin), headline = false),
+
+    // multimodal: synthetic media table → metadata-real resize stage
+    Query("q_media_resize", (s, d) => {
+      Multimodal.resize(Multimodal.syntheticMediaTable(Tables.documents(s, d)), 512)
+        .select(col("media_id"), col("kind"),
+          col("width").cast("long").as("width"),
+          col("height").cast("long").as("height"),
+          col("resized_width").cast("long").as("resized_width"),
+          col("resized_height").cast("long").as("resized_height"))
+        .orderBy(col("media_id"))
+    }, Sql(
+      """WITH m AS (
+        |  SELECT doc_id AS media_id,
+        |    ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
+        |    CAST((doc_id * 37) % 1920 + 1 AS BIGINT) AS width,
+        |    CAST((doc_id * 53) % 1080 + 1 AS BIGINT) AS height
+        |  FROM documents
+        |)
+        |SELECT media_id, kind, width, height,
+        |  CAST(GREATEST(FLOOR(width * LEAST(512.0 / GREATEST(width, height), 1.0)), 1) AS BIGINT) AS resized_width,
+        |  CAST(GREATEST(FLOOR(height * LEAST(512.0 / GREATEST(width, height), 1.0)), 1) AS BIGINT) AS resized_height
+        |FROM m ORDER BY media_id""".stripMargin), headline = false),
+
+    // multimodal: video frame sampling over CONTAINER-PARSED metadata —
+    // frame counts and durations come from walking the real AVI bytes
+    // (VideoCodec.parseMeta reads the avih header), not a metadata
+    // column, then the explode pattern fans each clip into sampled
+    // frame indices with no byte fan-out (bytes dropped pre-explode).
+    // Still fully ORACLED: the generator derives clip shape from
+    // media_id, so DuckDB predicts what a correct parse must yield —
+    // the same generator-parity convention as q_media_resize.
+    Query("q_media_frames", (s, d) => {
+      Multimodal.sampleFrames(
+        Multimodal.videoMeta(s.read.parquet(videoDir(s, d))).toDF()
+          .withColumn("kind", lit("video")), 3)
+        .select(col("media_id"), col("n_frames").cast("long").as("n_frames"),
+          col("duration_ms"), col("frame_idx").cast("long").as("frame_idx"))
+        .transform(graft.operators.Layout.boundedSort(
+          _, col("media_id"), col("frame_idx")))
+    }, Sql(
+      // generator parity: the AVI generator derives clip shape from
+      // media_id (nf = id%12+2, fps = (id%4+1)*5, µs/frame = 1000000//fps
+      // in integer division), so the oracle predicts what a correct
+      // container parse must read back out of the avih header
+      """WITH m AS (
+        |  SELECT doc_id AS media_id,
+        |    CAST(doc_id % 12 + 2 AS BIGINT) AS n_frames,
+        |    (doc_id % 4 + 1) * 5 AS fps
+        |  FROM documents
+        |), v AS (
+        |  SELECT media_id, n_frames,
+        |    CAST(n_frames * (1000000 // fps) // 1000 AS BIGINT) AS duration_ms
+        |  FROM m
+        |)
+        |SELECT media_id, n_frames, duration_ms,
+        |  UNNEST(generate_series(0, GREATEST(n_frames - 1, 0), 3)) AS frame_idx
+        |FROM v ORDER BY media_id, frame_idx""".stripMargin), headline = false),
+
+    // multimodal: REAL video decode (MJPEG-in-AVI) — the RIFF container
+    // walked byte-for-byte (frame count cross-checked container header
+    // vs counted 00dc chunks) and every JPEG frame decoded through
+    // javax.imageio, per-clip Rec.601 luma from actual pixels.
+    // Rows-only (a JPEG decoder is not SQL-expressible); generator
+    // parity + determinism asserted in RecommendSpec.
+    Query("q_video_decode", (s, d) => {
+      Multimodal.videoFeatures(s.read.parquet(videoDir(s, d)))
+        .toDF()
+        .select(col("media_id"),
+          col("vid_width").cast("long").as("vid_width"),
+          col("vid_height").cast("long").as("vid_height"),
+          col("n_frames").cast("long").as("n_frames"),
+          col("n_frames_decoded").cast("long").as("n_frames_decoded"),
+          col("duration_ms"),
+          round(col("mean_luma"), 4).as("mean_luma_r"))
+        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
+    }, Exempt(
+      "PERMANENTLY exempt: MJPEG frames are LOSSY JPEG — decoded pixels are a codec implementation detail, not replayable arithmetic (unlike the lossless PNG/WAV paths, de-exempted r16); generator-parity + determinism tests in RecommendSpec")),
+
+    // multimodal: batched feature extraction through the stub codec —
+    // DE-EXEMPTED r17 (VERDICT Next #2, the q_media_decode pattern):
+    // the stand-in model now emits EXACT INTEGER bucket sums from the
+    // splitmix stream of the content hash (StubCodec.featureSums), so
+    // the DuckDB oracle replays the whole pipeline (FNV-1a of the text
+    // → per-position splitmix → bucket-0 sum) with no codec; the float
+    // feature is derived via ExactRatio. The mapPartitions batch shape
+    // (the real-model contract) is unchanged.
+    Query("q_media_features", (s, d) => {
+      val feats = Multimodal.extractFeatures(
+        Multimodal.syntheticMediaTable(Tables.documents(s, d)), dim = 16)
+      feats.toDF()
+        .select(col("media_id"), col("kind"), col("n_bytes"), col("content_hash"),
+          element_at(col("f_sums"), 1).as("f0_sum"),
+          sratio6(element_at(col("f_sums"), 1), lit(65536)).as("f0"))
+        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
+    }, Sql(
+      // DE-EXEMPTED r17: full arithmetic replay of the stub-model feature
+      // extraction (exact integer bucket sums from the content-hash
+      // splitmix stream; the float via the shared ExactRatio spec)
+      s"""WITH $mediaFeatureCtes
+         |SELECT m.doc_id AS media_id,
+         |  CASE m.doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+         |    ELSE 'video' END AS kind,
+         |  m.n AS n_bytes,
+         |  CAST(CASE WHEN m.u >= 9223372036854775808
+         |    THEN m.u - 18446744073709551616 ELSE m.u END AS BIGINT)
+         |    AS content_hash,
+         |  COALESCE(f.f0_sum, 0) AS f0_sum,
+         |  ${sratio6Sql("COALESCE(f.f0_sum, 0)", "65536")} AS f0
+         |FROM mf_meta m LEFT JOIN mf f ON m.doc_id = f.doc_id
+         |ORDER BY media_id""".stripMargin)),
+
+    // multimodal: REAL image decode (javax.imageio) — genuine PNG bytes
+    // decoded at the mapPartitions codec boundary, stats from actual
+    // pixels. The PNG table is MATERIALIZED once per dir (binary-column
+    // parquet, the binaryFile-scan stand-in) so this line measures the
+    // DECODE, not the synthetic generator — the same build/serve split
+    // as the ANN index. PNG is lossless → fully deterministic;
+    // rows-only (a native decoder is not SQL-expressible). Width/height
+    // parity with the generator is asserted in RecommendSpec.
+    // multimodal DEDUP (r15, VERDICT Next #7a): perceptual aHash over
+    // REAL decoded pixels of the content-seeded PNG table — decode with
+    // javax.imageio at the codec boundary, NN-sample an 8×8 integer-luma
+    // grid, threshold against the grid mean (cross-multiplied — no
+    // division), pack into four 16-bit bands. PNG is lossless and the
+    // raster is a pure splitmix64 function of the text's FNV-1a hash, so
+    // the DuckDB oracle replays the ENTIRE pipeline (hash → dims →
+    // pixels → luma → bits) from `documents.text` without a decoder —
+    // the engine proves the real decode path, the oracle independently
+    // recomputes the expected pixels. Bytes never shuffle; only 4 small
+    // ints leave the codec.
+    Query("q_image_phash", (s, d) => {
+      imagePhash(s, d)
+        .select(col("media_id"), col("img_width"), col("img_height"),
+          col("b0"), col("b1"), col("b2"), col("b3"))
+        .orderBy(col("media_id"))
+    }, Sql(
+      s"""WITH $imagePhashCtes
+         |SELECT media_id,
+         |  CAST(MIN(w) AS INTEGER) AS img_width,
+         |  CAST(MIN(h) AS INTEGER) AS img_height,
+         |  CAST(MAX(CASE WHEN band = 0 THEN bval END) AS BIGINT) AS b0,
+         |  CAST(MAX(CASE WHEN band = 1 THEN bval END) AS BIGINT) AS b1,
+         |  CAST(MAX(CASE WHEN band = 2 THEN bval END) AS BIGINT) AS b2,
+         |  CAST(MAX(CASE WHEN band = 3 THEN bval END) AS BIGINT) AS b3
+         |FROM iph GROUP BY media_id ORDER BY media_id""".stripMargin)),
+
+    // image near-dup pairs over the aHash bands: the SimHash/LSH banding
+    // discipline applied to the multimodal column — 4 exact-match 16-bit
+    // band buckets (lossless for hamming ≤ 3 by pigeonhole), capped
+    // quadratic expansion + overflow star-attach (Dedup.bucketPairs, cap
+    // 256 mirrored in the oracle), then the exact hamming verify on the
+    // ≤ C(cap,2)-bounded candidates. Content-duplicate documents get
+    // bit-identical rasters by construction, so the verified pair set is
+    // the image twin of q_dedup_exact's cluster structure.
+    Query("q_image_phash_dups", (s, d) => {
+      graft.operators.Dedup.bandedHashDups(imagePhash(s, d))
+        .orderBy(col("a"), col("b"))
+    }, Sql(
+      // the same capped band-bucket candidate algebra as Dedup.bucketPairs
+      // (rn <= 256 per (band,bval) in id order + overflow star to the
+      // bucket minimum), DISTINCT across bands, exact hamming verify
+      s"""WITH $imagePhashCtes,
+         |iph_r AS (
+         |  SELECT media_id, band, bval,
+         |    ROW_NUMBER() OVER (PARTITION BY band, bval
+         |      ORDER BY media_id) AS rn,
+         |    MIN(media_id) OVER (PARTITION BY band, bval) AS mn
+         |  FROM iph),
+         |iph_cand AS (
+         |  SELECT x.media_id AS a, y.media_id AS b
+         |  FROM iph_r x JOIN iph_r y
+         |    ON x.band = y.band AND x.bval = y.bval
+         |    AND x.media_id < y.media_id
+         |  WHERE x.rn <= 256 AND y.rn <= 256
+         |  UNION ALL
+         |  SELECT mn AS a, media_id AS b FROM iph_r WHERE rn > 256),
+         |iph_cd AS (SELECT DISTINCT a, b FROM iph_cand),
+         |iph_hx AS (
+         |  SELECT cd.a, cd.b,
+         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
+         |      AS hamming
+         |  FROM iph_cd cd
+         |  JOIN iph pa ON cd.a = pa.media_id
+         |  JOIN iph pb ON cd.b = pb.media_id AND pa.band = pb.band
+         |  GROUP BY cd.a, cd.b)
+         |SELECT a, b, hamming FROM iph_hx
+         |WHERE hamming <= 3 ORDER BY a, b""".stripMargin)),
+
+    // audio perceptual-hash over REAL decoded PCM (r16, VERDICT Next #4
+    // — the multimodal near-dup story completed: image landed r15):
+    // javax.sound.sampled parses the WAV container at the codec
+    // boundary, the samples fold into 64 frame-energy cells (Σ|v| +
+    // sample count, frame k = ⌊i·64/n⌋ — all-integer), and the DELTA
+    // hash compares adjacent frames' per-sample energies
+    // (cross-multiplied exact, Haitsma–Kalker style — see
+    // Multimodal.audioAHash for why a global mean threshold
+    // concentrates); bits pack into four 16-bit bands. PCM is lossless
+    // and the waveform is pure integer arithmetic of the content seed,
+    // so the DuckDB oracle replays the ENTIRE pipeline (FNV hash →
+    // samples → energies → bits) from `documents.text` with no
+    // decoder. Bytes never shuffle; the hash relation is checkpointed
+    // once per (context, dir) and shared with the dups query.
+    Query("q_audio_phash", (s, d) => {
+      audioPhash(s, d)
+        .select(col("media_id"), col("n_samples"),
+          col("b0"), col("b1"), col("b2"), col("b3"))
+        .orderBy(col("media_id"))
+    }, Sql(
+      s"""WITH $audioPhashCtes
+         |SELECT media_id, MIN(n) AS n_samples,
+         |  CAST(MAX(CASE WHEN band = 0 THEN bval END) AS BIGINT) AS b0,
+         |  CAST(MAX(CASE WHEN band = 1 THEN bval END) AS BIGINT) AS b1,
+         |  CAST(MAX(CASE WHEN band = 2 THEN bval END) AS BIGINT) AS b2,
+         |  CAST(MAX(CASE WHEN band = 3 THEN bval END) AS BIGINT) AS b3
+         |FROM aph GROUP BY media_id ORDER BY media_id""".stripMargin)),
+
+    // audio near-dup pairs over the energy-signature bands — the same
+    // banded-hamming discipline as q_image_phash_dups via the SHARED
+    // Dedup.bandedHashDups pipeline (capped band buckets + overflow
+    // star-attach + exact hamming ≤ 3 verify). Content-duplicate
+    // documents get bit-identical WAVs by construction, so the verified
+    // pair set is the audio twin of q_dedup_exact's cluster structure.
+    Query("q_audio_phash_dups", (s, d) => {
+      graft.operators.Dedup.bandedHashDups(audioPhash(s, d))
+        .orderBy(col("a"), col("b"))
+    }, Sql(
+      // same capped band-bucket candidate algebra as the image twin
+      // (Dedup.bucketPairs: rn <= 256 per (band,bval) in id order +
+      // overflow star), DISTINCT across bands, exact hamming verify
+      s"""WITH $audioPhashCtes,
+         |auh_r AS (
+         |  SELECT media_id, band, bval,
+         |    ROW_NUMBER() OVER (PARTITION BY band, bval
+         |      ORDER BY media_id) AS rn,
+         |    MIN(media_id) OVER (PARTITION BY band, bval) AS mn
+         |  FROM aph),
+         |auh_cand AS (
+         |  SELECT x.media_id AS a, y.media_id AS b
+         |  FROM auh_r x JOIN auh_r y
+         |    ON x.band = y.band AND x.bval = y.bval
+         |    AND x.media_id < y.media_id
+         |  WHERE x.rn <= 256 AND y.rn <= 256
+         |  UNION ALL
+         |  SELECT mn AS a, media_id AS b FROM auh_r WHERE rn > 256),
+         |auh_cd AS (SELECT DISTINCT a, b FROM auh_cand),
+         |auh_hx AS (
+         |  SELECT cd.a, cd.b,
+         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
+         |      AS hamming
+         |  FROM auh_cd cd
+         |  JOIN aph pa ON cd.a = pa.media_id
+         |  JOIN aph pb ON cd.b = pb.media_id AND pa.band = pb.band
+         |  GROUP BY cd.a, cd.b)
+         |SELECT a, b, hamming FROM auh_hx
+         |WHERE hamming <= 3 ORDER BY a, b""".stripMargin)),
+
+    // banded perceptual-hash bucket health (the q_minhash_bucket_health
+    // pattern for the multimodal families): bucketStats over BOTH
+    // modalities' real band relations, one row each. This is the
+    // observability hook the cap discipline leans on — n_truncated > 0
+    // is the "retune the banding" alarm, and max_bucket is the measured
+    // blast-radius bound (the audio hash redesign in r16 was driven by
+    // exactly this census read by hand; now it's a driver-verified row
+    // every round). One count aggregate per modality over checkpointed
+    // hashes — trivially cheap.
+    Query("q_phash_bucket_health", (s, d) => {
+      def side(tag: String, ph: DataFrame) =
+        graft.operators.Dedup.bucketStats(
+          graft.operators.Dedup.bandHashBuckets(ph))
+          .select(lit(tag).as("modality"), col("n_buckets"),
+            col("max_bucket"), col("n_truncated"), col("ids_dropped"))
+      side("audio", audioPhash(s, d))
+        .unionByName(side("image", imagePhash(s, d)))
+        .orderBy(col("modality"))
+    }, Sql(
+      // bucket health of both modalities' band relations (cap 256, the
+      // bucketPairs/bandHashIndex bound)
+      s"""WITH $imagePhashCtes, $audioPhashCtes,
+         |pbh_i AS (SELECT band, bval, COUNT(*) AS n
+         |  FROM iph GROUP BY band, bval),
+         |pbh_a AS (SELECT band, bval, COUNT(*) AS n
+         |  FROM aph GROUP BY band, bval),
+         |pbh AS (
+         |  SELECT 'audio' AS modality, CAST(COUNT(*) AS BIGINT) AS n_buckets,
+         |    CAST(MAX(n) AS BIGINT) AS max_bucket,
+         |    CAST(SUM(CASE WHEN n > 256 THEN 1 ELSE 0 END) AS BIGINT)
+         |      AS n_truncated,
+         |    CAST(SUM(CASE WHEN n > 256 THEN n - 256 ELSE 0 END) AS BIGINT)
+         |      AS ids_dropped
+         |  FROM pbh_a
+         |  UNION ALL
+         |  SELECT 'image', CAST(COUNT(*) AS BIGINT),
+         |    CAST(MAX(n) AS BIGINT),
+         |    CAST(SUM(CASE WHEN n > 256 THEN 1 ELSE 0 END) AS BIGINT),
+         |    CAST(SUM(CASE WHEN n > 256 THEN n - 256 ELSE 0 END) AS BIGINT)
+         |  FROM pbh_i)
+         |SELECT * FROM pbh ORDER BY modality""".stripMargin)),
+
+    // incremental IMAGE near-dup maintenance (r16, VERDICT Next #5):
+    // media_id%10==3 plays the incoming batch, the rest the indexed
+    // corpus — the batch's aHash band rows probe the PERSISTED
+    // ids-only band index (Dedup.bandHashIndex, the minhashIndex
+    // pattern), exact hamming verify fetches hashes by matched id.
+    // Multimodal dedup becomes probe-and-append maintainable instead
+    // of rebuild-only. Fully oracled via the shared phash replay CTEs.
+    Query("q_image_dedup_incremental", (s, d) => {
+      val ph = imagePhash(s, d)
+      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
+      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
+      graft.operators.Dedup.incrementalBandedDedup(
+        batch, graft.operators.Dedup.bandHashIndex(corpus))
+        .orderBy(col("new_id"), col("corpus_id"))
+    }, Sql(
+      // incremental image dedup: the index side (media_id%10<>3) capped
+      // at 256 per (band,bval) in id order — the bandHashIndex cap — the
+      // batch side (media_id%10==3) uncapped; exact hamming verify on the
+      // DISTINCT candidates
+      s"""WITH $imagePhashCtes,
+         |inc_r AS (
+         |  SELECT media_id, band, bval,
+         |    ROW_NUMBER() OVER (PARTITION BY band, bval
+         |      ORDER BY media_id) AS rn
+         |  FROM iph WHERE media_id % 10 <> 3),
+         |inc_cand AS (
+         |  SELECT DISTINCT b.media_id AS new_id, c.media_id AS corpus_id
+         |  FROM iph b JOIN inc_r c ON b.band = c.band AND b.bval = c.bval
+         |  WHERE b.media_id % 10 = 3 AND c.rn <= 256),
+         |inc_hx AS (
+         |  SELECT cd.new_id, cd.corpus_id,
+         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
+         |      AS hamming
+         |  FROM inc_cand cd
+         |  JOIN iph pa ON cd.new_id = pa.media_id
+         |  JOIN iph pb ON cd.corpus_id = pb.media_id
+         |    AND pa.band = pb.band
+         |  GROUP BY cd.new_id, cd.corpus_id)
+         |SELECT new_id, corpus_id, hamming FROM inc_hx
+         |WHERE hamming <= 3 ORDER BY new_id, corpus_id""".stripMargin)),
+
+    // incremental AUDIO near-dup maintenance (r17, VERDICT Next #5 —
+    // the audioAHash twin of q_image_dedup_incremental, completing
+    // incremental index coverage for text + image + audio): the
+    // media_id%10==3 batch probes the persisted ids-only band index of
+    // the rest of the corpus through the SAME
+    // bandHashIndex/incrementalBandedDedup pipeline; exact hamming
+    // verify fetches hashes by matched id. Fully oracled via the shared
+    // audio-phash replay CTEs.
+    Query("q_audio_dedup_incremental", (s, d) => {
+      val ph = audioPhash(s, d)
+      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
+      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
+      graft.operators.Dedup.incrementalBandedDedup(
+        batch, graft.operators.Dedup.bandHashIndex(corpus))
+        .orderBy(col("new_id"), col("corpus_id"))
+    }, Sql(
+      // incremental audio dedup: same algebra over the audio-phash bands
+      // (index side capped at 256 per (band,bval) in id order, batch side
+      // uncapped, exact hamming verify on the DISTINCT candidates)
+      s"""WITH $audioPhashCtes,
+         |ainc_r AS (
+         |  SELECT media_id, band, bval,
+         |    ROW_NUMBER() OVER (PARTITION BY band, bval
+         |      ORDER BY media_id) AS rn
+         |  FROM aph WHERE media_id % 10 <> 3),
+         |ainc_cand AS (
+         |  SELECT DISTINCT b.media_id AS new_id, c.media_id AS corpus_id
+         |  FROM aph b JOIN ainc_r c ON b.band = c.band AND b.bval = c.bval
+         |  WHERE b.media_id % 10 = 3 AND c.rn <= 256),
+         |ainc_hx AS (
+         |  SELECT cd.new_id, cd.corpus_id,
+         |    CAST(SUM(bit_count(xor(pa.bval, pb.bval))) AS BIGINT)
+         |      AS hamming
+         |  FROM ainc_cand cd
+         |  JOIN aph pa ON cd.new_id = pa.media_id
+         |  JOIN aph pb ON cd.corpus_id = pb.media_id
+         |    AND pa.band = pb.band
+         |  GROUP BY cd.new_id, cd.corpus_id)
+         |SELECT new_id, corpus_id, hamming FROM ainc_hx
+         |WHERE hamming <= 3 ORDER BY new_id, corpus_id""".stripMargin)),
+
+    // video perceptual-hash (r17, VERDICT Next #4 — the multimodal
+    // near-dup triad completed): temporal-average aHash over REAL
+    // MJPEG-in-AVI decodes — every JPEG frame decoded through
+    // javax.imageio, the 8×8 integer luma grid summed across frames,
+    // thresholded against its own mean (Multimodal.videoAHash).
+    // Rows-only like q_video_decode: JPEG is LOSSY, so the decoded
+    // pixels are not replayable arithmetic — planted-dup +
+    // discrimination census in RecommendSpec instead.
+    Query("q_video_phash", (s, d) => {
+      videoPhash(s, d)
+        .select(col("media_id"), col("n_frames"),
+          col("b0"), col("b1"), col("b2"), col("b3"))
+        .orderBy(col("media_id"))
+    }, Exempt(
+      "PERMANENTLY exempt (the q_video_decode class): the temporal-average aHash reads LOSSY JPEG pixels; determinism + discrimination census in RecommendSpec")),
+
+    // video near-dup pairs over the temporal-aHash bands — the same
+    // SHARED Dedup.bandedHashDups pipeline as the image/audio twins
+    // (capped band buckets + overflow star-attach + exact hamming ≤ 3
+    // verify), in PLANTED-WITNESS form: a rows-only query must not be
+    // vacuously empty, and the sf0.001/sf0.01 fixtures contain no
+    // content-duplicate documents (the oracled image/audio twins may
+    // legitimately emit 0 rows there — the oracle proves the empty set;
+    // a rows-only empty proves nothing). The 10 smallest doc_ids are
+    // re-keyed (+1e9) and hashed fresh through the REAL codec path,
+    // the corpus side comes from the checkpointed memo, and the
+    // verified pair set must contain each planted copy paired with its
+    // original (exact-match asserted in RecommendSpec) plus any true
+    // content dups the fixture carries.
+    Query("q_video_phash_dups", (s, d) => {
+      val plantedDocs = Tables.documents(s, d)
+        .orderBy(col("doc_id")).limit(10)
+        .withColumn("doc_id", col("doc_id") + lit(1000000000L))
+      val phPlanted = Multimodal.videoAHash(
+        Multimodal.contentVideoTable(plantedDocs)).toDF()
+      graft.operators.Dedup.bandedHashDups(
+        videoPhash(s, d).unionByName(phPlanted))
+        .orderBy(col("a"), col("b"))
+    }, Exempt(
+      "PERMANENTLY exempt (lossy JPEG pixels); planted-witness form — re-keyed copies ride the query so the row set is never vacuously empty; exact pair-set + noise-rejection test in RecommendSpec")),
+
+    // aHash stability census (r15): flip the low red bit of EVERY
+    // sampled pixel of every REAL decoded raster (deterministic
+    // ±1-LSB-noise stand-in), re-hash, histogram the per-image hamming
+    // distances. Mostly-0-with-a-small-tail is the property that makes
+    // perceptual near-dup work — and the tail exercises the
+    // cross-engine hamming arithmetic at values OTHER than 0 (the dup
+    // pairs are all exact). The oracle replays both rasters from the
+    // splitmix arithmetic, perturbation included.
+    Query("q_image_phash_stability", (s, d) => {
+      Multimodal.imageAHashStability(s.read.parquet(contentImageDir(s, d)))
+        .groupBy(col("hamming")).agg(count(lit(1)).as("n_images"))
+        .orderBy(col("hamming"))
+    }, Sql(
+      // per-image hamming(original, perturbed) histogram — the oracle
+      // replays BOTH rasters (perturbation = red-low-bit flip on every
+      // sampled pixel, the engine's rule)
+      s"""WITH $imagePhashCtes,
+         |iph_ham AS (
+         |  SELECT media_id,
+         |    CAST(SUM(bit_count(xor(bval, bval_p))) AS BIGINT) AS hamming
+         |  FROM iph GROUP BY media_id)
+         |SELECT hamming, COUNT(*) AS n_images
+         |FROM iph_ham GROUP BY hamming ORDER BY hamming""".stripMargin)),
+
+    // DE-EXEMPTED r16 (VERDICT Next #3): the real javax.imageio decode
+    // path, DRIVER-HASH-VERIFIED — the engine decodes genuine PNG bytes
+    // and emits EXACT integer channel sums; PNG is lossless, so the
+    // DuckDB oracle replays the generator arithmetic over the FULL
+    // raster (id-seeded dims → splitmix pixels → channel sums) and
+    // meets the decoder at the same pixels. Means via ExactRatio, so
+    // no ROUND(DOUBLE) seam anywhere in the output.
+    Query("q_media_decode", (s, d) => {
+      Multimodal.imageFeatures(s.read.parquet(imageDir(s, d)))
+        .toDF()
+        .select(col("media_id"),
+          col("img_width").cast("long").as("img_width"),
+          col("img_height").cast("long").as("img_height"),
+          col("n_channels").cast("long").as("n_channels"),
+          col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"),
+          ratio6(col("sum_r"), col("n_pixels")).as("mean_r"),
+          ratio6(col("sum_g"), col("n_pixels")).as("mean_g"),
+          ratio6(col("sum_b"), col("n_pixels")).as("mean_b"))
+        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
+    }, Sql(
+      // DE-EXEMPTED r16: full-raster arithmetic replay of the real PNG
+      // decode (exact integer channel sums; means via the shared
+      // ExactRatio spec — no ROUND(DOUBLE) seam)
+      s"""WITH $imageDecodeCtes
+         |SELECT media_id, w AS img_width, h AS img_height,
+         |  CAST(3 AS BIGINT) AS n_channels, w * h AS n_pixels,
+         |  sum_r, sum_g, sum_b,
+         |  ${ratio6Sql("sum_r", "w * h")} AS mean_r,
+         |  ${ratio6Sql("sum_g", "w * h")} AS mean_g,
+         |  ${ratio6Sql("sum_b", "w * h")} AS mean_b
+         |FROM img ORDER BY media_id""".stripMargin)),
+
+    // DE-EXEMPTED r16 (VERDICT Next #1): the real javax.sound.sampled
+    // decode path, DRIVER-HASH-VERIFIED — genuine 16-bit PCM WAV bytes
+    // (materialized once per dir), container-parsed format + EXACT
+    // integer sample moments (Σv², Σ|v|, zero crossings) from the
+    // actual samples. PCM is lossless and the triangle waveform is
+    // pure integer arithmetic of the seed, so the oracle replays every
+    // sample with `%`/`//`/`abs`. RMS = sqrt(sum_sq/n)/32768 — IEEE
+    // correctly-rounded ops in mirrored order, pinned via det6.
+    Query("q_audio_decode", (s, d) => {
+      Multimodal.audioFeatures(s.read.parquet(audioDir(s, d)))
+        .toDF()
+        .select(col("media_id"),
+          col("sample_rate").cast("long").as("sample_rate"),
+          col("n_samples"), col("sum_sq"), col("sum_abs"),
+          col("zero_crossings"),
+          det6(sqrt(col("sum_sq").cast("double") /
+            col("n_samples").cast("double")) / lit(32768.0)).as("rms_r"))
+        .transform(graft.operators.Layout.boundedSort(_, col("media_id")))
+    }, Sql(
+      // DE-EXEMPTED r16: per-sample arithmetic replay of the real WAV
+      // decode (exact integer moments; RMS via the det6-pinned
+      // IEEE-correctly-rounded chain in mirrored op order)
+      s"""WITH $audioDecodeCtes
+         |SELECT media_id, CAST(16000 AS BIGINT) AS sample_rate,
+         |  n_samples, sum_sq, sum_abs, zero_crossings,
+         |  ${det6Sql("sqrt(CAST(sum_sq AS DOUBLE) / " +
+             "CAST(n_samples AS DOUBLE)) / 32768.0")} AS rms_r
+         |FROM aud ORDER BY media_id""".stripMargin)),
+
+    // cohort retention: users grouped by first-seen day, distinct actives
+    // per (cohort, day-offset) — the classic product-analytics triangle,
+    // and the event-analytics twin of the corpus freshness questions a
+    // training-data pipeline asks ("how much of day-N's data is from
+    // returning producers"). Day keys are FLOOR(epoch)/86400 per the
+    // repo timestamp rule (ns parquet → µs truncation on both engines).
+    // Scale shape: one shuffle to per-user min-day (partial agg
+    // map-side), cohort relation is |users| rows — joined back on
+    // user_id (AQE broadcasts when small); the distinct-count aggregates
+    // on (cohort, offset) with bounded cardinality (days²/2).
+    // event-volume anomaly detection: hourly counts scored against a
+    // trailing 24-hour window (mean + sample stddev) — the intake-
+    // monitoring alarm ("did a feed die / double overnight"). The
+    // hourly series is GAP-FILLED with zero-count hours first (a dead
+    // feed produces NO rows — without the fill, the exact failure the
+    // alarm exists for is invisible, and the row-frame 'trailing 24'
+    // would silently span an outage). The global-order window runs over
+    // that series (720 rows per month regardless of event volume —
+    // bounded by TIME, not data), so the single-partition WindowExec is
+    // safe at any scale; the corpus itself sees one groupBy. Flag
+    // derives from the ROUNDED z; warmup hours (fewer than 2 trailing
+    // points or zero variance) are excluded identically on both engines.
+    Query("q_events_anomaly", (s, d) => {
+      val hourly = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
+        .agg(count(lit(1)).as("n"))
+      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
+        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
+      val filled = spine.join(hourly, Seq("hr"), "left")
+        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
+      val w = Window.orderBy(col("hr")).rowsBetween(-24, -1)
+      filled
+        .withColumn("mu", avg(col("n")).over(w))
+        .withColumn("sd", stddev_samp(col("n")).over(w))
+        .filter(col("sd").isNotNull && col("sd") > 0)
+        .select(col("hr"), col("n"),
+          round((col("n") - col("mu")) / col("sd"), 6).as("z"))
+        .withColumn("is_anomaly", abs(col("z")) > 3.0)
+        .orderBy(col("hr"))
+    }, Sql(
+      """WITH hourly AS (
+        |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
+        |  FROM events GROUP BY 1
+        |), spine AS (
+        |  SELECT unnest(range(MIN(hr), MAX(hr) + 1)) AS hr FROM hourly
+        |), filled AS (
+        |  SELECT s.hr, COALESCE(h.n, 0) AS n
+        |  FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
+        |), win AS (
+        |  SELECT hr, n,
+        |    AVG(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS mu,
+        |    STDDEV_SAMP(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS sd
+        |  FROM filled
+        |), z AS (
+        |  SELECT hr, n, ROUND((n - mu) / sd, 6) AS z
+        |  FROM win WHERE sd IS NOT NULL AND sd > 0
+        |)
+        |SELECT hr, CAST(n AS BIGINT) AS n, z, abs(z) > 3.0 AS is_anomaly
+        |FROM z ORDER BY hr""".stripMargin)),
+
+    Query("q_events_retention", (s, d) => {
+      val e = ev(s, d).select(col("user_id"),
+        floor(unix_timestamp(col("ts")) / 86400).as("day"))
+      val cohorts = e.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
+      e.join(cohorts, Seq("user_id"))
+        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
+        .agg(countDistinct(col("user_id")).as("n_users"))
+        .orderBy(col("cohort_day"), col("day_offset"))
+    }, Sql(
+      """WITH e AS (
+        |  SELECT user_id, (epoch_us(ts) // 1000000) // 86400 AS day FROM events
+        |), c AS (
+        |  SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id
+        |)
+        |SELECT c.cohort_day, e.day - c.cohort_day AS day_offset,
+        |  COUNT(DISTINCT e.user_id) AS n_users
+        |FROM e JOIN c USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+
+    // EWMA smoothing of the hourly event series — the alerting
+    // baseline next to q_events_anomaly's z-score. The recursion
+    // s_t = α·x_t + (1-α)·s_{t-1} is not window-expressible, but with
+    // α = 1/2 the unrolled K-term weights are DYADIC (1/2^k — exactly
+    // representable doubles, exact decimal text), so the truncated
+    // EWMA is a plain weighted sum of K lags with BIT-EXACT arithmetic
+    // on both engines: no libm pow, no float seam (the repo's
+    // hyperbolic-decay/no-exp discipline). Both sides are GENERATED
+    // from the same weight spec (ewmaWeights) — the zvalueSql /
+    // pagerank pattern, so the weights cannot drift. The global-order
+    // window rides the gap-filled hourly spine, bounded by TIME (720
+    // rows/month), not data — the q_events_anomaly precedent; only
+    // rows with a full K-hour history emit (partial windows would
+    // renormalize differently).
+    Query("q_events_ewma", (s, d) => {
+      val hourly = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
+        .agg(count(lit(1)).as("n"))
+      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
+        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
+      val filled = spine.join(hourly, Seq("hr"), "left")
+        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
+      val w = Window.orderBy(col("hr"))
+      val wts = ewmaWeights(ewmaK)
+      val ewma = wts.zipWithIndex
+        .map { case (wt, k) => lag(col("n"), k).over(w) * lit(wt) }
+        .reduce(_ + _) / lit(wts.sum)
+      val ma = wts.indices
+        .map(k => lag(col("n"), k).over(w))
+        .reduce(_ + _).cast("double") / lit(ewmaK.toDouble)
+      filled
+        .withColumn("rn", row_number().over(w))
+        .withColumn("ewma_r", round(ewma, 6))
+        .withColumn("ma_r", round(ma, 6))
+        .filter(col("rn") >= ewmaK)
+        .select(col("hr"), col("n"), col("ewma_r"), col("ma_r"))
+        .orderBy(col("hr"))
+    }, Sql({
       val (ew, ma) = ewmaOracleTerms
       s"""WITH hourly AS (
          |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
@@ -2513,9 +1679,29 @@ object EventQueries {
          |SELECT hr, CAST(n AS BIGINT) AS n,
          |  ROUND(ewma, 6) AS ewma_r, ROUND(ma, 6) AS ma_r
          |FROM win WHERE rn >= $ewmaK ORDER BY hr""".stripMargin
-    },
+    })),
 
-    "q_event_transitions" ->
+    // First-order Markov transition matrix over each user's event
+    // sequence: one lag window on the high-cardinality user key, one
+    // bounded |types|² aggregate, transition probability normalized by
+    // a broadcast per-source total (≤|types| rows — never a second
+    // corpus shuffle). The journey-analysis staple next to the funnel.
+    Query("q_event_transitions", (s, d) => {
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("sec"), col("event_id"))
+      val pairs = e.withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .filter(col("prev_type").isNotNull)
+        .groupBy(col("prev_type"), col("event_type").as("next_type"))
+        .agg(count(lit(1)).as("n"))
+      val totals = pairs.groupBy(col("prev_type"))
+        .agg(sum(col("n")).as("n_from"))
+      pairs.join(broadcast(totals), Seq("prev_type"))
+        .select(col("prev_type"), col("next_type"), col("n"),
+          ratio6(col("n"), col("n_from")).as("p"))
+        .orderBy(col("prev_type"), col("next_type"))
+    }, Sql(
       s"""WITH e AS (
         |  SELECT user_id, event_type, event_id,
         |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
@@ -2533,9 +1719,39 @@ object EventQueries {
         |)
         |SELECT prev_type, next_type, n,
         |  ${ratio6Sql("n", "SUM(n) OVER (PARTITION BY prev_type)")} AS p
-        |FROM pairs ORDER BY prev_type, next_type""".stripMargin,
+        |FROM pairs ORDER BY prev_type, next_type""".stripMargin)),
 
-    "q_attribution" ->
+    // Last-touch marketing attribution: each purchase is attributed to
+    // the user's latest click at-or-before it (the AsofJoin.asofBackward
+    // operator — one union + one per-user window sweep, never a range
+    // self-join), gated by a 7-day attribution window; purchases whose
+    // last click is older (or who never clicked) land in the
+    // unattributed bucket (attr_day = -1). Revenue rolls up per
+    // attributed-click DAY in integer cents; n_clicks counts distinct
+    // credited clicks. µs epochs are the cross-engine event-time key
+    // (the q_events_asof convention); day = µs DIV 86400e6 — integer
+    // division, no float seam.
+    Query("q_attribution", (s, d) => {
+      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("us"),
+          cents(col("value")).as("rev_c"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
+          attach = Map("click_id" -> "attr_click_id", "us" -> "click_us"),
+          rightTiebreak = "click_id")
+        .withColumn("attr_day",
+          when(col("click_us").isNotNull &&
+              col("us") - col("click_us") <= lit(7L * 86400L * 1000000L),
+            expr("click_us DIV 86400000000")).otherwise(lit(-1L)))
+        .groupBy(col("attr_day"))
+        .agg(count(lit(1)).as("n_purchases"),
+          sum(col("rev_c")).as("rev_c"),
+          countDistinct(when(col("attr_day") >= 0, col("attr_click_id")))
+            .as("n_clicks"))
+        .orderBy(col("attr_day"))
+    }, Sql(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us
         |  FROM events
@@ -2561,10 +1777,45 @@ object EventQueries {
         |  CAST(SUM(rev_c) AS BIGINT) AS rev_c,
         |  COUNT(DISTINCT CASE WHEN attr_day >= 0 THEN attr_click_id END)
         |    AS n_clicks
-        |FROM b GROUP BY 1 ORDER BY attr_day""".stripMargin,
+        |FROM b GROUP BY 1 ORDER BY attr_day""".stripMargin)),
 
-    // the same Hamilton micro-cent split; integer // and % throughout
-    "q_attribution_multi" ->
+    // Multi-touch LINEAR attribution (the all-touch companion of the
+    // last-touch asof above): every click of the purchase's user in the
+    // 7-day lookback shares the revenue EQUALLY — in exact integer
+    // MICRO-CENTS via Hamilton splitting (each of the n touches gets
+    // ⌊rev_c·10⁶/n⌋; the first rev_c·10⁶ mod n touches in (click_us,
+    // click_id) order get +1), so per-day credit sums are exact longs
+    // and credit conservation (Σcredit = rev_c·10⁶ per purchase) is an
+    // identity, not a float approximation. Shape: one user-keyed range
+    // join (clicks per user per week bounded), two purchase-keyed
+    // windows, one day rollup.
+    Query("q_attribution_multi", (s, d) => {
+      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("pid"),
+          col("us").as("pus"), cents(col("value")).as("rev_c"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"),
+          col("us").as("cus"))
+      val touches = purchases.join(clicks, Seq("user_id"))
+        .filter(col("cus") <= col("pus") &&
+          col("pus") - col("cus") <= lit(7L * 86400L * 1000000L))
+      val wP = Window.partitionBy(col("pid"))
+      val wR = wP.orderBy(col("cus"), col("click_id"))
+      touches
+        .withColumn("n_t", count(lit(1)).over(wP))
+        .withColumn("rk", row_number().over(wR).cast("long"))
+        .withColumn("micro", col("rev_c") * lit(1000000L))
+        .withColumn("credit", expr("micro div n_t") +
+          when(col("rk") <= pmod(col("micro"), col("n_t")), 1L)
+            .otherwise(0L))
+        .groupBy(expr("cus DIV 86400000000").as("day"))
+        .agg(count(lit(1)).as("n_touches"),
+          countDistinct(col("pid")).as("n_purchases"),
+          sum(col("credit")).as("credit_micro_c"))
+        .orderBy(col("day"))
+    }, Sql(
+      // the same Hamilton micro-cent split; integer // and % throughout
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
         |    CAST(ROUND(value*100) AS BIGINT) AS rev_c
@@ -2592,9 +1843,50 @@ object EventQueries {
         |SELECT day, COUNT(*) AS n_touches,
         |  COUNT(DISTINCT pid) AS n_purchases,
         |  CAST(SUM(credit) AS BIGINT) AS credit_micro_c
-        |FROM cr GROUP BY day ORDER BY day""".stripMargin,
+        |FROM cr GROUP BY day ORDER BY day""".stripMargin)),
 
-    "q_funnel_steps" ->
+    // Ordered conversion funnel (view → click → purchase): per user the
+    // FIRST view, then the first click STRICTLY after it, then the
+    // first purchase strictly after that click — the stage times are
+    // min-aggregates over filtered co-partitioned joins (each min
+    // map-side combinable) + one single-row rollup; no per-user event
+    // list is ever collected (the naive sort-events-per-user form
+    // buffers unbounded history). Each stage's event scan is SLICED by
+    // a pushed event_type predicate, so the three stages together read
+    // ≈one corpus pass split by type; the t1 aggregate subtree appears
+    // twice (t2's input and the final rollup) and AQE reuses its
+    // exchange at runtime (ReusedExchange — probed; a persist here
+    // would leak a session-lifetime cache entry from a registered
+    // closure instead). Strictly-after is the
+    // stated semantic (a click in the same second as the view does not
+    // convert) — second-resolution ties are resolved identically on
+    // both engines because the comparison is on the VALUE, not row
+    // order. Latencies average exactly (integer seconds sum exactly;
+    // one double division each side).
+    Query("q_funnel_steps", (s, d) => {
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"))
+      val t1 = e.filter(col("event_type") === "view")
+        .groupBy(col("user_id")).agg(min(col("sec")).as("t1"))
+      val t2 = e.filter(col("event_type") === "click")
+        .join(t1, Seq("user_id"))
+        .filter(col("sec") > col("t1"))
+        .groupBy(col("user_id")).agg(min(col("sec")).as("t2"))
+      val t3 = e.filter(col("event_type") === "purchase")
+        .join(t2, Seq("user_id"))
+        .filter(col("sec") > col("t2"))
+        .groupBy(col("user_id")).agg(min(col("sec")).as("t3"))
+      t1.join(t2, Seq("user_id"), "left").join(t3, Seq("user_id"), "left")
+        .agg(count(lit(1)).as("n_view"),
+          count(col("t2")).as("n_view_click"),
+          count(col("t3")).as("n_funnel"),
+          ratio6(count(col("t2")), count(lit(1))).as("conv_click"),
+          ratio6(count(col("t3")), count(lit(1))).as("conv_full"),
+          ratio6(sum(col("t2") - col("t1")), count(col("t2")))
+            .as("avg_sec_to_click"),
+          ratio6(sum(col("t3") - col("t2")), count(col("t3")))
+            .as("avg_sec_to_purchase"))
+    }, Sql(
       s"""WITH e AS (
         |  SELECT user_id, event_type,
         |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
@@ -2615,290 +1907,96 @@ object EventQueries {
         |  ${ratio6Sql("COUNT(t3)", "COUNT(*)")} AS conv_full,
         |  ${ratio6Sql("SUM(t2 - t1)", "COUNT(t2)")} AS avg_sec_to_click,
         |  ${ratio6Sql("SUM(t3 - t2)", "COUNT(t3)")} AS avg_sec_to_purchase
-        |FROM t1 LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)""".stripMargin,
+        |FROM t1 LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)""".stripMargin)),
 
-    // see the query comment: membership of >n/17 items is MG-guaranteed
-    // and their counters are exact when no shard exceeds 16 distinct
-    // items, so the summary-side columns equal the exact counts
-    "q_heavy_hitters" ->
+    // Sharded Misra-Gries heavy hitters — the BATCH twin of the online
+    // heavyHittersIntake loop, value-oracled on two MG theorems: (a) any
+    // item with true frequency > n/(k+1) is GUARANTEED present in its
+    // shard's summary for ANY arrival order (its shard frequency equals
+    // its global frequency under item-hash sharding, and n_shard ≤ n),
+    // so filtering the merged summary to exactly those items is
+    // order-independent; (b) a shard holding ≤ k distinct items never
+    // decrements, so its counters are EXACT — with the fixture's 5 event
+    // types and k=16 every merged `est` therefore equals the true count,
+    // which the oracle computes directly. If the MG fold dropped or
+    // undercounted a guaranteed item, the inner join / est column would
+    // go red. The eviction regime (items ≫ k) is covered by
+    // StreamingSpec's planted-skew invariants, where exact value
+    // oracling is impossible by design. Scale shape: one shuffle on the
+    // 8-way shard key, O(k) state per task, |summary| ≤ shards×k rows
+    // into the merge.
+    Query("q_heavy_hitters", (s, d) => {
+      val e = ev(s, d)
+      val k = 16
+      val merged = graft.streaming.EventStreams
+        .mergeHeavyHitters(
+          graft.streaming.EventStreams.heavyHittersBatch(e, k, 8).toDF(), k)
+      val exact = e.filter(col("event_type").isNotNull)
+        .groupBy(col("event_type").as("item")).agg(count(lit(1)).as("cnt"))
+      // n_total derives from the ≤|types|-row exact aggregate — a
+      // separate corpus-count relation would be a second full scan
+      val total = exact.agg(sum(col("cnt")).as("n_total"))
+      merged.join(exact, Seq("item"))
+        .crossJoin(broadcast(total)) // 1-row scalar attach
+        .filter(col("cnt") * lit((k + 1).toLong) > col("n_total"))
+        .select(col("item"), col("cnt"), col("est"))
+        .orderBy(col("item"))
+    }, Sql(
+      // see the query comment: membership of >n/17 items is MG-guaranteed
+      // and their counters are exact when no shard exceeds 16 distinct
+      // items, so the summary-side columns equal the exact counts
       """WITH e AS (SELECT event_type AS item FROM events
         |           WHERE event_type IS NOT NULL),
         |c AS (SELECT item, COUNT(*) AS cnt FROM e GROUP BY 1)
         |SELECT item, cnt, cnt AS est FROM c
         |WHERE cnt * 17 > (SELECT COUNT(*) FROM e)
-        |ORDER BY item""".stripMargin,
+        |ORDER BY item""".stripMargin)),
 
-    "q_events_hourly" ->
-      """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS window_start,
-        |  event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    // hop membership: an event at epoch-second slot s=floor(epoch/900)
-    // belongs to windows starting at (s-k)*900, k=0..3 (1h window /
-    // 15min slide, epoch-aligned like Spark's window())
-    "q_events_hopping" ->
-      """WITH k AS (SELECT * FROM (VALUES (0), (1), (2), (3)) k(k)),
-        |e AS (
-        |  SELECT (CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) // 900) AS slot,
-        |    event_type, value
-        |  FROM events
-        |)
-        |SELECT (slot - k.k) * 900 AS start_sec, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM e CROSS JOIN k
-        |GROUP BY 1, 2 ORDER BY start_sec, event_type""".stripMargin,
-
-    "q_events_sessions" ->
-      """WITH base AS (
-        |  SELECT user_id, event_id,
-        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec, value
-        |  FROM events
-        |),
-        |flagged AS (
-        |  SELECT *, CASE WHEN lag(sec) OVER w IS NULL
-        |                   OR sec - lag(sec) OVER w > 1800
-        |                 THEN 1 ELSE 0 END AS new_session
-        |  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
-        |),
-        |sessions AS (
-        |  SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id
-        |    ORDER BY sec, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM flagged
-        |)
-        |SELECT user_id, session_id,
-        |  MIN(sec) AS session_start_sec, MAX(sec) AS session_end_sec,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-
-    // µs-precision gaps (session_window merges on the full timestamp:
-    // same session iff gap < 30min strictly); end = last event + gap,
-    // floored to seconds only at output
-    "q_events_session_window" ->
-      """WITH base AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events
-        |),
-        |flagged AS (
-        |  SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |                   OR us - lag(us) OVER w >= 1800000000
-        |                 THEN 1 ELSE 0 END AS new_session
-        |  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        |),
-        |sessions AS (
-        |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM flagged
-        |)
-        |SELECT user_id,
-        |  CAST(FLOOR(MIN(us)/1000000) AS BIGINT) AS start_sec,
-        |  CAST(FLOOR(MAX(us)/1000000) AS BIGINT) + 1800 AS end_sec,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, start_sec""".stripMargin,
-
-    "q_events_pivot" ->
-      """SELECT user_id,
-        |  COUNT(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |  COUNT(*) FILTER (WHERE event_type = 'view') AS n_view,
-        |  COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |  COUNT(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |  COUNT(*) FILTER (WHERE event_type = 'error') AS n_error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_events_props" ->
-      """SELECT CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) % 10 AS k_mod,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS value_c
-        |FROM events GROUP BY 1 ORDER BY k_mod""".stripMargin,
-
-    "q_events_funnel" ->
-      """SELECT user_id,
-        |  MIN(CASE WHEN event_type = 'signup'
-        |      THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) AS first_signup_sec,
-        |  MIN(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) AS first_purchase_sec,
-        |  COUNT(*) AS n_events,
-        |  CASE WHEN MIN(CASE WHEN event_type = 'signup'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) IS NOT NULL
-        |        AND MIN(CASE WHEN event_type = 'purchase'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) IS NOT NULL
-        |        AND MIN(CASE WHEN event_type = 'purchase'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) >=
-        |            MIN(CASE WHEN event_type = 'signup'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END)
-        |       THEN MIN(CASE WHEN event_type = 'purchase'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END) -
-        |            MIN(CASE WHEN event_type = 'signup'
-        |              THEN CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) END)
-        |  END AS signup_to_purchase_sec
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_events_asof" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us
-        |  FROM events
-        |),
-        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
-        |SELECT p.user_id, p.event_id, p.us, c.click_id AS last_click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us >= c.us
-        |ORDER BY p.user_id, p.us""".stripMargin,
-
-    "q_events_asof_fwd" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us
-        |  FROM events
-        |),
-        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
-        |SELECT p.user_id, p.event_id, p.us, c.click_id AS next_click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us <= c.us
-        |ORDER BY p.user_id, p.us""".stripMargin,
-
-    // the rank ordering reproduces the engine's tie contract exactly:
-    // distance first; then earlier (backward) side; then the sweeps'
-    // own id tiebreaks via the side-dependent sign (backward largest,
-    // forward smallest)
-    "q_events_asof_nearest" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-        |  FROM events
-        |),
-        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS click_id, us AS vus FROM e WHERE event_type = 'click'),
-        |cand AS (
-        |  SELECT p.user_id, p.event_id, p.us, c.click_id, c.vus,
-        |    ABS(p.us - c.vus) AS d
-        |  FROM p JOIN c ON p.user_id = c.user_id
-        |),
-        |pick AS (
-        |  SELECT user_id, event_id, us, click_id AS nearest_click_id,
-        |    d AS d_us,
-        |    ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY d, vus,
-        |      CASE WHEN vus <= us THEN -click_id ELSE click_id END) AS rn
-        |  FROM cand
-        |)
-        |SELECT user_id, event_id, us, nearest_click_id, d_us
-        |FROM pick WHERE rn = 1
-        |ORDER BY user_id, us""".stripMargin,
-
-    "q_events_interval" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |v AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'view'),
-        |c AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'click')
-        |SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-        |  v.us AS view_us, c.us AS click_us
-        |FROM v JOIN c ON v.user_id = c.user_id
-        |  AND c.us >= v.us AND c.us <= v.us + 600000000
-        |ORDER BY v.user_id, view_us, click_us""".stripMargin,
-
-    "q_events_gapfill" ->
-      """WITH h AS (
-        |  SELECT event_type,
-        |    CAST(FLOOR(FLOOR(date_part('epoch', ts)) / 3600) * 3600 AS BIGINT) AS hour_sec,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |),
-        |span AS (
-        |  SELECT CAST(FLOOR(FLOOR(date_part('epoch', MIN(ts))) / 3600) * 3600 AS BIGINT) AS lo,
-        |         CAST(FLOOR(FLOOR(date_part('epoch', MAX(ts))) / 3600) * 3600 AS BIGINT) AS hi
-        |  FROM events
-        |),
-        |grid AS (
-        |  SELECT t.event_type, g.hour_sec
-        |  FROM (SELECT DISTINCT event_type FROM events) t,
-        |       (SELECT UNNEST(generate_series(lo, hi, 3600)) AS hour_sec FROM span) g
-        |)
-        |SELECT grid.event_type, grid.hour_sec, COALESCE(h.n, 0) AS n
-        |FROM grid LEFT JOIN h USING (event_type, hour_sec)
-        |ORDER BY event_type, hour_sec""".stripMargin,
-
-    "q_events_json" ->
-      """SELECT event_id, CAST(props::JSON->>'$.k' AS BIGINT) AS k
-        |FROM events
-        |WHERE props::JSON->>'$.k' IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-
-    "q_events_variant" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(props::JSON->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_media_resize" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |    ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
-        |    CAST((doc_id * 37) % 1920 + 1 AS BIGINT) AS width,
-        |    CAST((doc_id * 53) % 1080 + 1 AS BIGINT) AS height
-        |  FROM documents
-        |)
-        |SELECT media_id, kind, width, height,
-        |  CAST(GREATEST(FLOOR(width * LEAST(512.0 / GREATEST(width, height), 1.0)), 1) AS BIGINT) AS resized_width,
-        |  CAST(GREATEST(FLOOR(height * LEAST(512.0 / GREATEST(width, height), 1.0)), 1) AS BIGINT) AS resized_height
-        |FROM m ORDER BY media_id""".stripMargin,
-
-    // generator parity: the AVI generator derives clip shape from
-    // media_id (nf = id%12+2, fps = (id%4+1)*5, µs/frame = 1000000//fps
-    // in integer division), so the oracle predicts what a correct
-    // container parse must read back out of the avih header
-    "q_media_frames" ->
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(doc_id % 12 + 2 AS BIGINT) AS n_frames,
-        |    (doc_id % 4 + 1) * 5 AS fps
-        |  FROM documents
-        |), v AS (
-        |  SELECT media_id, n_frames,
-        |    CAST(n_frames * (1000000 // fps) // 1000 AS BIGINT) AS duration_ms
-        |  FROM m
-        |)
-        |SELECT media_id, n_frames, duration_ms,
-        |  UNNEST(generate_series(0, GREATEST(n_frames - 1, 0), 3)) AS frame_idx
-        |FROM v ORDER BY media_id, frame_idx""".stripMargin,
-
-    "q_events_anomaly" ->
-      """WITH hourly AS (
-        |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
-        |  FROM events GROUP BY 1
-        |), spine AS (
-        |  SELECT unnest(range(MIN(hr), MAX(hr) + 1)) AS hr FROM hourly
-        |), filled AS (
-        |  SELECT s.hr, COALESCE(h.n, 0) AS n
-        |  FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
-        |), win AS (
-        |  SELECT hr, n,
-        |    AVG(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS mu,
-        |    STDDEV_SAMP(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS sd
-        |  FROM filled
-        |), z AS (
-        |  SELECT hr, n, ROUND((n - mu) / sd, 6) AS z
-        |  FROM win WHERE sd IS NOT NULL AND sd > 0
-        |)
-        |SELECT hr, CAST(n AS BIGINT) AS n, z, abs(z) > 3.0 AS is_anomaly
-        |FROM z ORDER BY hr""".stripMargin,
-
-    "q_events_retention" ->
-      """WITH e AS (
-        |  SELECT user_id, (epoch_us(ts) // 1000000) // 86400 AS day FROM events
-        |), c AS (
-        |  SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id
-        |)
-        |SELECT c.cohort_day, e.day - c.cohort_day AS day_offset,
-        |  COUNT(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the range join is the oracle-side witness of the bucket-explode:
-    // a (day, user) pair joins every window day it serves
-    "q_rolling_dau" ->
+    // Rolling 7-day distinct users (the DAU/WAU dashboard pair) + the
+    // 7-day event volume, per active day. Spark has no COUNT(DISTINCT)
+    // window, and the naive forms melt at scale — a 7-way range
+    // self-join re-shuffles the event set per day of width, and a
+    // global sorted window single-partitions. The scale-safe shape is
+    // BUCKET-EXPLODE: reduce once to distinct (day, user) pairs, then
+    // each pair votes into the ≤7 window buckets it serves
+    // (a bounded ×7 map-side expansion of the already-reduced
+    // relation) and one countDistinct per bucket finishes it. DAU
+    // rides the same pass as the offset-0 slice (countDistinct over a
+    // CASE), so the whole report is two shuffles: the pair dedup and
+    // the bucket aggregate. Partial leading windows are part of the
+    // contract (day d counts only days ≥ d−6 that exist); trailing
+    // buckets past the last active day are cut by the inner join to
+    // the active-day set, mirrored in the oracle's range join.
+    Query("q_rolling_dau", (s, d) => {
+      val e = ev(s, d).select(
+        floor(unix_timestamp(col("ts")) / 86400).as("day"), col("user_id"))
+      val du = e.distinct()
+      // active days from the ALREADY-reduced pair relation — deriving
+      // them from `e` would aggregate the full event scan a second time
+      // (distinct(day,user) and distinct(day) are different shuffles,
+      // so exchange reuse would not apply)
+      val days = du.select(col("day")).distinct()
+      val votes = du.select(col("day"), col("user_id"),
+          explode(sequence(lit(0), lit(6))).as("o"))
+        .select((col("day") + col("o")).as("day"), col("user_id"),
+          (col("o") === 0).as("is_today"))
+        .join(days, Seq("day")) // active days only — no trailing stubs
+      val rolling = votes.groupBy(col("day"))
+        .agg(countDistinct(when(col("is_today"), col("user_id"))).as("dau"),
+          countDistinct(col("user_id")).as("wau"))
+      val daily = e.groupBy(col("day")).agg(count(lit(1)).as("n"))
+      val n7 = daily.select(col("day"), col("n"),
+          explode(sequence(lit(0), lit(6))).as("o"))
+        .select((col("day") + col("o")).as("day"), col("n"))
+        .join(days, Seq("day"))
+        .groupBy(col("day")).agg(sum(col("n")).as("n_events_7d"))
+      rolling.join(n7, Seq("day"))
+        .select(col("day").cast("long").as("day"), col("dau"), col("wau"),
+          col("n_events_7d"))
+        .orderBy(col("day"))
+    }, Sql(
+      // the range join is the oracle-side witness of the bucket-explode:
+      // a (day, user) pair joins every window day it serves
       """WITH e AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, user_id
         |  FROM events
@@ -2917,12 +2015,44 @@ object EventQueries {
         |  GROUP BY d.day
         |)
         |SELECT r.day, r.dau, r.wau, n7.n_events_7d
-        |FROM ru r JOIN n7 USING (day) ORDER BY day""".stripMargin,
+        |FROM ru r JOIN n7 USING (day) ORDER BY day""".stripMargin)),
 
-    // starts sort before ends at the same instant (delta DESC): a
-    // touch counts as overlap; equal-delta peers commute in the
-    // prefix sum so MAX is order-independent
-    "q_concurrency" ->
+    // Peak concurrency per day (max simultaneously-active users): each
+    // user's per-day activity interval [min ts, max ts] becomes a
+    // +1/−1 boundary pair and a running sum over the day's ordered
+    // boundaries peaks at the answer — the interval-sweep discipline
+    // that replaces the quadratic interval-overlap self-join. The one
+    // window is partitioned by DAY (boundaries per partition bounded
+    // by 2·|users active that day|, never the event count — the
+    // intervals relation is an aggregate), with an explicit ROWS
+    // frame and delta-descending tie order (starts before ends at the
+    // same instant, so a touch counts as overlap; equal-delta peers
+    // commute in a prefix sum, making the per-day MAX deterministic on
+    // both engines). Exact integer micros + integer deltas: no seam.
+    Query("q_concurrency", (s, d) => {
+      val iv = ev(s, d).select(
+          floor(unix_timestamp(col("ts")) / 86400).as("day"),
+          col("user_id"), unix_micros(col("ts")).as("us"))
+        .groupBy(col("day"), col("user_id"))
+        .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
+      val bounds = iv.select(col("day"), col("s_us").as("us"),
+          lit(1L).as("delta"))
+        .unionAll(iv.select(col("day"), col("e_us").as("us"),
+          lit(-1L).as("delta")))
+      val w = Window.partitionBy(col("day"))
+        .orderBy(col("us"), col("delta").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      bounds.withColumn("running", sum(col("delta")).over(w))
+        .groupBy(col("day"))
+        .agg(max(col("running")).as("peak_concurrent"),
+          (count(lit(1)) / 2).cast("long").as("n_intervals"))
+        .select(col("day").cast("long").as("day"), col("peak_concurrent"),
+          col("n_intervals"))
+        .orderBy(col("day"))
+    }, Sql(
+      // starts sort before ends at the same instant (delta DESC): a
+      // touch counts as overlap; equal-delta peers commute in the
+      // prefix sum so MAX is order-independent
       """WITH iv AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, user_id,
         |    MIN(epoch_us(ts)) AS s_us, MAX(epoch_us(ts)) AS e_us
@@ -2938,10 +2068,31 @@ object EventQueries {
         |)
         |SELECT day, CAST(MAX(running) AS BIGINT) AS peak_concurrent,
         |  CAST(COUNT(*) // 2 AS BIGINT) AS n_intervals
-        |FROM r GROUP BY day ORDER BY day""".stripMargin,
+        |FROM r GROUP BY day ORDER BY day""".stripMargin)),
 
-    // day − ROW_NUMBER islands over distinct (user, day); exact integers
-    "q_streaks" ->
+    // Gaps-and-islands: longest consecutive-day activity streak per
+    // user (the engagement metric behind "N-day streak" badges), via
+    // the day − ROW_NUMBER island key (the q_contamination_span trick)
+    // over the distinct (user, day) relation — windows partitioned by
+    // USER, so parallelism grows with users and per-task state is one
+    // user's active days. Exact integers end to end; top-20 ordered on
+    // (streak, n_islands, user) so the cutoff is deterministic.
+    Query("q_streaks", (s, d) => {
+      val ud = ev(s, d).select(col("user_id"),
+        floor(unix_timestamp(col("ts")) / 86400).as("day")).distinct()
+      val wu = Window.partitionBy(col("user_id")).orderBy(col("day"))
+      ud.withColumn("grp", col("day") - row_number().over(wu))
+        .groupBy(col("user_id"), col("grp"))
+        .agg(count(lit(1)).as("run"))
+        .groupBy(col("user_id"))
+        .agg(max(col("run")).as("longest_streak"),
+          count(lit(1)).as("n_islands"),
+          sum(col("run")).as("n_active_days"))
+        .orderBy(col("longest_streak").desc, col("n_islands"),
+          col("user_id"))
+        .limit(20)
+    }, Sql(
+      // day − ROW_NUMBER islands over distinct (user, day); exact integers
       """WITH ud AS (
         |  SELECT DISTINCT user_id,
         |    (epoch_us(ts) // 1000000) // 86400 AS day
@@ -2958,12 +2109,34 @@ object EventQueries {
         |  COUNT(*) AS n_islands, CAST(SUM(run) AS BIGINT) AS n_active_days
         |FROM runs GROUP BY user_id
         |ORDER BY longest_streak DESC, n_islands, user_id
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    // epoch-day mod 7 weekday; exact integers; mirrored divisions
-    // ((day % 7) + 7) % 7 mirrors Spark's pmod for negative epoch-days
-    // (pre-1970 timestamps) — ADVICE r13; post-1970 fixtures never hit it
-    "q_seasonality" ->
+    // Day-of-week seasonality profile (the load-shape census the ACF
+    // hints at): per weekday the day count, event total, per-day
+    // average and the index vs the overall daily mean. Weekday =
+    // epoch-day mod 7 — the integer convention that sidesteps the
+    // Spark-1=Sunday / DuckDB-0=Sunday dayofweek trap entirely. Exact
+    // integers + two mirrored divisions.
+    Query("q_seasonality", (s, d) => {
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
+        .agg(count(lit(1)).as("n"))
+      val tot = daily.agg(sum(col("n")).as("te"),
+        count(lit(1)).as("td"))
+      daily.groupBy(pmod(col("day"), lit(7)).cast("long").as("dow"))
+        .agg(count(lit(1)).as("n_days"), sum(col("n")).as("n_events"))
+        .crossJoin(broadcast(tot))
+        .select(col("dow"), col("n_days"), col("n_events"),
+          ratio6(col("n_events"), col("n_days")).as("avg_r"),
+          // index vs overall daily mean as ONE exact integer ratio:
+          // (ne/nd)/(te/td) = ne·td / (nd·te)
+          ratio6(col("n_events") * col("td"), col("n_days") * col("te"))
+            .as("idx_r"))
+        .orderBy(col("dow"))
+    }, Sql(
+      // epoch-day mod 7 weekday; exact integers; mirrored divisions
+      // ((day % 7) + 7) % 7 mirrors Spark's pmod for negative epoch-days
+      // (pre-1970 timestamps) — ADVICE r13; post-1970 fixtures never hit it
       s"""WITH daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1),
@@ -2978,10 +2151,28 @@ object EventQueries {
         |SELECT dow, n_days, n_events,
         |  ${ratio6Sql("n_events", "n_days")} AS avg_r,
         |  ${ratio6Sql("n_events * td", "n_days * te")} AS idx_r
-        |FROM dw, tot ORDER BY dow""".stripMargin,
+        |FROM dw, tot ORDER BY dow""".stripMargin)),
 
-    // weekly cents; lag over the bounded week domain; prev > 0 guard
-    "q_growth_rates" ->
+    // Week-over-week revenue growth (the KPI-trend staple): weekly
+    // cents off one orders aggregate (week = epoch-day // 7 — integer
+    // both engines), lag over the WEEK DOMAIN (bounded — the
+    // q_ks_two_sample partitionless-window discipline); the ratio IS
+    // guarded by prev_c > 0 (not just non-null) on both engines and
+    // computed with sratio6 — exact, no ROUND(DOUBLE) seam.
+    Query("q_growth_rates", (s, d) => {
+      val weekly = Tables.load(s, d, "orders")
+        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 604800)
+          .cast("long").as("week"))
+        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
+      val w = Window.orderBy(col("week"))
+      weekly.withColumn("prev_c", lag(col("rev_c"), 1).over(w))
+        .filter(col("prev_c").isNotNull && col("prev_c") > 0)
+        .select(col("week"), col("rev_c"), col("prev_c"),
+          sratio6(col("rev_c") - col("prev_c"), col("prev_c"))
+            .as("growth_r"))
+        .orderBy(col("week"))
+    }, Sql(
+      // weekly cents; lag over the bounded week domain; prev > 0 guard
       s"""WITH weekly AS (
         |  SELECT (epoch_us(o_orderdate) // 1000000) // 604800 AS week,
         |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
@@ -2994,11 +2185,41 @@ object EventQueries {
         |SELECT week, rev_c, prev_c,
         |  ${sratio6Sql("rev_c - prev_c", "prev_c")} AS growth_r
         |FROM lagged WHERE prev_c IS NOT NULL AND prev_c > 0
-        |ORDER BY week""".stripMargin,
+        |ORDER BY week""".stripMargin)),
 
-    // piecewise-constant segments per (user, day); value·µs exact in
-    // DECIMAL; one final division
-    "q_twap" ->
+    // Time-weighted average value per day (the TWAP/metrics-rollup op:
+    // a value that holds until the next observation should be averaged
+    // by TIME HELD, not by observation count): piecewise-constant
+    // segments from a lead() window per (user, day) — parallelism grows
+    // with users, bounded per task by one user's day (never the
+    // per-day-only partitioning the SNM lesson warns about) — then the
+    // day's TWAP as Σ value·dt / Σ dt with the value·µs products kept
+    // EXACT in DECIMAL(38,0) (cents × µs overflows long). One float:
+    // the final division.
+    Query("q_twap", (s, d) => {
+      val e = ev(s, d).select(
+        floor(unix_timestamp(col("ts")) / 86400).as("day"),
+        col("user_id"), unix_micros(col("ts")).as("us"),
+        cents(col("value")).as("v"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"), col("day"))
+        .orderBy(col("us"), col("event_id"))
+      val seg = e.withColumn("nxt", lead(col("us"), 1).over(w))
+        .filter(col("nxt").isNotNull)
+        .select(col("day"),
+          (col("v").cast("decimal(38,0)") * (col("nxt") - col("us")))
+            .as("wv"),
+          (col("nxt") - col("us")).as("dt"))
+      seg.groupBy(col("day"))
+        .agg(count(lit(1)).as("n_segments"),
+          sum(col("dt")).as("dt_us"),
+          sum(col("wv")).as("swv"))
+        .select(col("day").cast("long").as("day"), col("n_segments"),
+          col("dt_us"),
+          sratio6(col("swv"), col("dt_us")).as("twap_r"))
+        .orderBy(col("day"))
+    }, Sql(
+      // piecewise-constant segments per (user, day); value·µs exact in
+      // DECIMAL; one final division
       s"""WITH e AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, user_id,
         |    epoch_us(ts) AS us,
@@ -3016,11 +2237,43 @@ object EventQueries {
         |SELECT day, COUNT(*) AS n_segments,
         |  CAST(SUM(dt) AS BIGINT) AS dt_us,
         |  ${sratio6Sql("SUM(wv)", "SUM(dt)")} AS twap_r
-        |FROM seg GROUP BY day ORDER BY day""".stripMargin,
+        |FROM seg GROUP BY day ORDER BY day""".stripMargin)),
 
-    // exact decimal moments per lag over pairwise-present day pairs;
-    // one sqrt + one division (both correctly rounded IEEE)
-    "q_acf" ->
+    // Autocorrelation function of the daily event-count series (lags
+    // 1..7 — the seasonality probe next to q_events_ewma's smoother):
+    // Pearson r per lag from EXACT decimal moments over the
+    // pairwise-present day pairs (a gap simply contributes no pair —
+    // documented semantics that avoid a cross-engine gap-fill spine).
+    // The daily series is one domain-bounded aggregate; the 7-way lag
+    // expansion explodes the ALREADY-aggregated relation (≤7·|days|
+    // rows), never the event scan.
+    Query("q_acf", (s, d) => {
+      val dec = (c: Column) => c.cast("decimal(38,0)")
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
+        .agg(count(lit(1)).as("n"))
+      val lagged = daily.select(col("day"), col("n").as("x"),
+          explode(sequence(lit(1L), lit(7L))).as("lag"))
+        .select((col("day") + col("lag")).as("day"), col("lag"), col("x"))
+      val pairs = lagged.join(daily.select(col("day"), col("n").as("y")),
+        Seq("day"))
+      pairs.groupBy(col("lag")).agg(
+          count(lit(1)).cast("decimal(38,0)").as("np"),
+          sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+          sum(dec(col("x") * col("x"))).as("sxx"),
+          sum(dec(col("x") * col("y"))).as("sxy"),
+          sum(dec(col("y") * col("y"))).as("syy"))
+        .select(col("lag"), col("np").cast("long").as("n_pairs"),
+          det6((col("np") * col("sxy") - col("sx") * col("sy"))
+            .cast("double") /
+            sqrt((col("np") * col("sxx") - col("sx") * col("sx"))
+              .cast("double") *
+              (col("np") * col("syy") - col("sy") * col("sy"))
+                .cast("double"))).as("acf_r"))
+        .orderBy(col("lag"))
+    }, Sql(
+      // exact decimal moments per lag over pairwise-present day pairs;
+      // one sqrt + one division (both correctly rounded IEEE)
       s"""WITH daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1),
@@ -3042,15 +2295,55 @@ object EventQueries {
         |  ${det6Sql("CAST(np*sxy - sx*sy AS DOUBLE) / " +
                      "sqrt(CAST(np*sxx - sx*sx AS DOUBLE) * " +
                      "CAST(np*syy - sy*sy AS DOUBLE))")} AS acf_r
-        |FROM m ORDER BY lag""".stripMargin,
+        |FROM m ORDER BY lag""".stripMargin)),
 
-    // the identical dyadic recursion replayed as a RECURSIVE CTE in day
-    // order (NOT a struct-state list_reduce: DuckDB's reduce does not
-    // keep the accumulator stable across struct fields when one field
-    // reads another — field b saw the already-updated l; the XXH64
-    // oracle's 4-lane struct reduce survives only because its lanes
-    // never cross-read)
-    "q_holt_linear" ->
+    // Holt's linear-trend smoothing over the daily count series (the
+    // level+trend forecaster next to the EWMA level smoother):
+    // α = β = 1/2, so every weight multiply is an exact dyadic halving
+    // and the sequential recursion is bit-identical cross-engine when
+    // folded in the SAME day order — the engine folds
+    // sort_array(collect_list(...)) (partition-count-independent); the
+    // oracle replays the identical recursion as a struct-state
+    // list_reduce (the xxhashOracle machinery). Series indexed by
+    // ACTIVE days (the q_acf pairwise-present convention). The fold is
+    // a single bounded-domain task by design: the input is the
+    // already-aggregated daily relation.
+    Query("q_holt_linear", (s, d) => {
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("day"))
+        .agg(count(lit(1)).as("n"))
+      val st = daily.agg(count(lit(1)).as("n_days"),
+        aggregate(
+          sort_array(collect_list(struct(col("day"), col("n")))),
+          struct(lit(0.0).as("l"), lit(0.0).as("b"), lit(0L).as("i")),
+          (s0, x) => {
+            val y = x.getField("n").cast("double")
+            val first = s0.getField("i") === 0L
+            val lnew = when(first, y).otherwise(
+              lit(0.5) * y + lit(0.5) * (s0.getField("l") + s0.getField("b")))
+            struct(lnew.as("l"),
+              when(first, lit(0.0)).otherwise(
+                lit(0.5) * (lnew - s0.getField("l")) +
+                  lit(0.5) * s0.getField("b")).as("b"),
+              (s0.getField("i") + 1L).as("i"))
+          }).as("st"))
+      // n_days > 0 guard: on an EMPTY series the fold's initial state
+      // would emit one (0, 0.0, 0.0, 0.0) row while the oracle's
+      // recursive CTE emits none — mirror the oracle's zero-row shape
+      // (ADVICE r13; fixtures are never empty, so this is contract
+      // hygiene, not a behavior change).
+      st.filter(col("n_days") > 0)
+        .select(col("n_days"),
+          det6(col("st.l")).as("level_r"),
+          det6(col("st.b")).as("trend_r"),
+          det6(col("st.l") + lit(7.0) * col("st.b")).as("fc7_r"))
+    }, Sql(
+      // the identical dyadic recursion replayed as a RECURSIVE CTE in day
+      // order (NOT a struct-state list_reduce: DuckDB's reduce does not
+      // keep the accumulator stable across struct fields when one field
+      // reads another — field b saw the already-updated l; the XXH64
+      // oracle's 4-lane struct reduce survives only because its lanes
+      // never cross-read)
       s"""WITH RECURSIVE daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1),
@@ -3068,10 +2361,183 @@ object EventQueries {
         |  FROM rec s JOIN ser ON ser.i = s.i + 1)
         |SELECT n_days, ${det6Sql("l")} AS level_r, ${det6Sql("b")} AS trend_r,
         |  ${det6Sql("l + 7.0 * b")} AS fc7_r
-        |FROM rec, nd WHERE i = n_days""".stripMargin,
+        |FROM rec, nd WHERE i = n_days""".stripMargin)),
 
-    // the same flag algebra; churn via lag over the bounded week domain
-    "q_growth_accounting" ->
+    // Cohort retention matrix (the product-analytics staple): cohort =
+    // a user's FIRST active week; for offsets 0..7 the share of the
+    // cohort active in week cohort+off. Shape: ONE (user, week)
+    // distinct shuffle, a per-user min (same key — no extra exchange
+    // class), cohort sizes broadcast back (≤|weeks| rows), output
+    // |weeks|·8. All counts exact; retention via ratio6.
+    Query("q_cohort_retention", (s, d) => {
+      val uw = ev(s, d).select(col("user_id"),
+          floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
+        .distinct()
+      val first = uw.groupBy(col("user_id"))
+        .agg(min(col("week")).as("cohort_w"))
+      val sizes = first.groupBy(col("cohort_w"))
+        .agg(count(lit(1)).as("n_cohort"))
+      uw.join(first, Seq("user_id"))
+        .select(col("cohort_w"), (col("week") - col("cohort_w")).as("off"))
+        .filter(col("off") <= 7)
+        .groupBy(col("cohort_w"), col("off"))
+        // uw is (user, week)-distinct, so the count IS distinct users
+        .agg(count(lit(1)).as("n_active"))
+        .join(broadcast(sizes), Seq("cohort_w"))
+        .select(col("cohort_w"), col("off"), col("n_active"),
+          col("n_cohort"),
+          ratio6(col("n_active"), col("n_cohort")).as("retention_r"))
+        .orderBy(col("cohort_w"), col("off"))
+    }, Sql(
+      // (user, week)-distinct activity; first week per user; exact counts
+      s"""WITH uw AS (
+        |  SELECT DISTINCT user_id,
+        |    (epoch_us(ts) // 1000000) // 604800 AS week
+        |  FROM events),
+        |f AS (SELECT user_id, MIN(week) AS cohort_w FROM uw GROUP BY 1),
+        |sz AS (SELECT cohort_w, COUNT(*) AS n_cohort FROM f GROUP BY 1),
+        |act AS (
+        |  SELECT f.cohort_w, uw.week - f.cohort_w AS off,
+        |    COUNT(*) AS n_active
+        |  FROM uw JOIN f USING (user_id)
+        |  WHERE uw.week - f.cohort_w <= 7
+        |  GROUP BY 1, 2)
+        |SELECT a.cohort_w, a.off, a.n_active, s.n_cohort,
+        |  ${ratio6Sql("a.n_active", "s.n_cohort")} AS retention_r
+        |FROM act a JOIN sz s USING (cohort_w)
+        |ORDER BY cohort_w, off""".stripMargin)),
+
+    // Sessionization census (gaps-and-islands with a 30-minute idle
+    // timeout — the q_streaks discipline at second resolution): session
+    // starts flagged by lag(), session ids by running count of starts
+    // (both inside ONE per-user window — parallelism grows with users),
+    // per-session rollup, then a constant-size global census. Every
+    // reported mean is a ratio6 of exact integers.
+    Query("q_sessionize", (s, d) => {
+      val e = ev(s, d).select(col("user_id"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("sec"), col("event_id"))
+      val sess = e.withColumn("prev", lag(col("sec"), 1).over(w))
+        .withColumn("new_s", when(col("prev").isNull ||
+          col("sec") - col("prev") > 1800, 1L).otherwise(0L))
+        .withColumn("sid", sum(col("new_s")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("sid"))
+        .agg(count(lit(1)).as("n_events"),
+          (max(col("sec")) - min(col("sec"))).as("dur_sec"))
+      sess.agg(count(lit(1)).as("n_sessions"),
+        sum(col("n_events")).as("n_events"),
+        ratio6(sum(col("n_events")), count(lit(1)))
+          .as("events_per_session_r"),
+        ratio6(sum(col("dur_sec")), count(lit(1))).as("mean_dur_sec_r"),
+        max(col("dur_sec")).as("max_dur_sec"),
+        sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_bounce"))
+    }, Sql(
+      // identical gaps-and-islands session ids; single-node windows are
+      // fine for the oracle
+      s"""WITH e AS (
+        |  SELECT user_id, event_id,
+        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
+        |  FROM events),
+        |fl AS (
+        |  SELECT user_id, sec, event_id,
+        |    CASE WHEN LAG(sec) OVER w IS NULL
+        |           OR sec - LAG(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
+        |sid AS (
+        |  SELECT user_id, sec,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM fl),
+        |sess AS (
+        |  SELECT user_id, sid, COUNT(*) AS n_events,
+        |    MAX(sec) - MIN(sec) AS dur_sec
+        |  FROM sid GROUP BY 1, 2)
+        |SELECT COUNT(*) AS n_sessions,
+        |  CAST(SUM(n_events) AS BIGINT) AS n_events,
+        |  ${ratio6Sql("SUM(n_events)", "COUNT(*)")} AS events_per_session_r,
+        |  ${ratio6Sql("SUM(dur_sec)", "COUNT(*)")} AS mean_dur_sec_r,
+        |  MAX(dur_sec) AS max_dur_sec,
+        |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_bounce
+        |FROM sess""".stripMargin)),
+
+    // Top click-path trigrams (journey mining next to the pairwise
+    // q_event_transitions): per-user time-ordered event-type 3-grams
+    // via two lead()s in ONE window, counted over the bounded
+    // |types|³ path domain, top-20 with full tiebreak (TakeOrdered).
+    Query("q_session_paths", (s, d) => {
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("sec"), col("event_id"))
+      e.withColumn("e2", lead(col("event_type"), 1).over(w))
+        .withColumn("e3", lead(col("event_type"), 2).over(w))
+        .filter(col("e3").isNotNull)
+        .select(concat_ws(">", col("event_type"), col("e2"), col("e3"))
+          .as("path"))
+        .groupBy(col("path")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("path")).limit(20)
+    }, Sql(
+      // the same two-LEAD trigram expansion over the bounded path domain
+      """WITH e AS (
+        |  SELECT user_id, event_type, event_id,
+        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
+        |  FROM events),
+        |tri AS (
+        |  SELECT event_type AS e1,
+        |    LEAD(event_type, 1) OVER w AS e2,
+        |    LEAD(event_type, 2) OVER w AS e3
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id))
+        |SELECT e1 || '>' || e2 || '>' || e3 AS path, COUNT(*) AS n
+        |FROM tri WHERE e3 IS NOT NULL
+        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin)),
+
+    // Growth accounting (the new/retained/resurrected/churned weekly
+    // user ledger — the companion of q_cohort_retention that product
+    // teams actually chart): per active (user, week), the user is NEW
+    // (first week), RETAINED (active in week−1) or RESURRECTED (active
+    // before, not in week−1); CHURNED(w) = active(w−1) − retained(w),
+    // attached via a lag over the bounded week domain. Identity
+    // active = new + retained + resurrected holds by construction.
+    // Shape: one (user, week) distinct, a per-user min, one ids-only
+    // self-join on the shifted week, one domain-bounded rollup.
+    Query("q_growth_accounting", (s, d) => {
+      val uw = ev(s, d).select(col("user_id"),
+          floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
+        .distinct()
+        .localCheckpoint(true) // read three times (flags, prev-set, rollup)
+      val first = uw.groupBy(col("user_id"))
+        .agg(min(col("week")).as("first_w"))
+      val prevSet = uw.select(col("user_id"),
+        (col("week") + 1).as("week"), lit(1L).as("was_prev"))
+      val flags = uw.join(first, Seq("user_id"))
+        .join(prevSet, Seq("user_id", "week"), "left")
+        .select(col("week"),
+          when(col("week") === col("first_w"), 1L).otherwise(0L).as("is_new"),
+          when(col("week") =!= col("first_w") && col("was_prev").isNotNull,
+            1L).otherwise(0L).as("is_ret"),
+          when(col("week") =!= col("first_w") && col("was_prev").isNull,
+            1L).otherwise(0L).as("is_res"))
+      val weekly = flags.groupBy(col("week"))
+        .agg(count(lit(1)).as("n_active"), sum(col("is_new")).as("n_new"),
+          sum(col("is_ret")).as("n_retained"),
+          sum(col("is_res")).as("n_resurrected"))
+      val w = Window.orderBy(col("week"))
+      weekly
+        .withColumn("prev_active", lag(col("n_active"), 1).over(w))
+        .select(col("week"), col("n_active"), col("n_new"),
+          col("n_retained"), col("n_resurrected"),
+          coalesce(col("prev_active") - col("n_retained"), lit(0L))
+            .as("n_churned"),
+          when(col("prev_active").isNull || col("prev_active") === 0,
+            lit(0.0)).otherwise(
+            ratio6(col("n_retained"), col("prev_active")))
+            .as("retention_r"))
+        .orderBy(col("week"))
+    }, Sql(
+      // the same flag algebra; churn via lag over the bounded week domain
       s"""WITH uw AS (
         |  SELECT DISTINCT user_id,
         |    (epoch_us(ts) // 1000000) // 604800 AS week
@@ -3100,11 +2566,29 @@ object EventQueries {
         |       ELSE ${ratio6Sql("n_retained",
                        "LAG(n_active) OVER (ORDER BY week)")}
         |  END AS retention_r
-        |FROM wk ORDER BY week""".stripMargin,
+        |FROM wk ORDER BY week""".stripMargin)),
 
-    // per-(user,type) lag gaps; exact integer seconds; quantile_cont is
-    // the proven percentile twin on the integer grid
-    "q_interarrival" ->
+    // Inter-arrival gap statistics per event type (the arrival-process
+    // profile a capacity model starts from): consecutive same-type
+    // gaps per user via ONE (user, type)-keyed lag window, then a
+    // domain-bounded per-type rollup — exact integer seconds, ratio6
+    // mean, exact percentile on the integer grid.
+    Query("q_interarrival", (s, d) => {
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"), col("event_type"))
+        .orderBy(col("sec"), col("event_id"))
+      e.withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
+        .filter(col("gap").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_gaps"),
+          ratio6(sum(col("gap")), count(lit(1))).as("mean_gap_r"),
+          round(expr("percentile(gap, 0.5)"), 6).as("p50_gap"),
+          max(col("gap")).as("max_gap"))
+        .orderBy(col("event_type"))
+    }, Sql(
+      // per-(user,type) lag gaps; exact integer seconds; quantile_cont is
+      // the proven percentile twin on the integer grid
       s"""WITH e AS (
         |  SELECT user_id, event_type, event_id,
         |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
@@ -3119,75 +2603,44 @@ object EventQueries {
         |  ROUND(CAST(quantile_cont(gap, 0.5) AS DOUBLE), 6) AS p50_gap,
         |  MAX(gap) AS max_gap
         |FROM g WHERE gap IS NOT NULL GROUP BY 1
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    // (user, week)-distinct activity; first week per user; exact counts
-    "q_cohort_retention" ->
-      s"""WITH uw AS (
-        |  SELECT DISTINCT user_id,
-        |    (epoch_us(ts) // 1000000) // 604800 AS week
-        |  FROM events),
-        |f AS (SELECT user_id, MIN(week) AS cohort_w FROM uw GROUP BY 1),
-        |sz AS (SELECT cohort_w, COUNT(*) AS n_cohort FROM f GROUP BY 1),
-        |act AS (
-        |  SELECT f.cohort_w, uw.week - f.cohort_w AS off,
-        |    COUNT(*) AS n_active
-        |  FROM uw JOIN f USING (user_id)
-        |  WHERE uw.week - f.cohort_w <= 7
-        |  GROUP BY 1, 2)
-        |SELECT a.cohort_w, a.off, a.n_active, s.n_cohort,
-        |  ${ratio6Sql("a.n_active", "s.n_cohort")} AS retention_r
-        |FROM act a JOIN sz s USING (cohort_w)
-        |ORDER BY cohort_w, off""".stripMargin,
-
-    // identical gaps-and-islands session ids; single-node windows are
-    // fine for the oracle
-    "q_sessionize" ->
-      s"""WITH e AS (
-        |  SELECT user_id, event_id,
-        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |fl AS (
-        |  SELECT user_id, sec, event_id,
-        |    CASE WHEN LAG(sec) OVER w IS NULL
-        |           OR sec - LAG(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
-        |sid AS (
-        |  SELECT user_id, sec,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM fl),
-        |sess AS (
-        |  SELECT user_id, sid, COUNT(*) AS n_events,
-        |    MAX(sec) - MIN(sec) AS dur_sec
-        |  FROM sid GROUP BY 1, 2)
-        |SELECT COUNT(*) AS n_sessions,
-        |  CAST(SUM(n_events) AS BIGINT) AS n_events,
-        |  ${ratio6Sql("SUM(n_events)", "COUNT(*)")} AS events_per_session_r,
-        |  ${ratio6Sql("SUM(dur_sec)", "COUNT(*)")} AS mean_dur_sec_r,
-        |  MAX(dur_sec) AS max_dur_sec,
-        |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_bounce
-        |FROM sess""".stripMargin,
-
-    // the same two-LEAD trigram expansion over the bounded path domain
-    "q_session_paths" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, event_id,
-        |    CAST(FLOOR(date_part('epoch', ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |tri AS (
-        |  SELECT event_type AS e1,
-        |    LEAD(event_type, 1) OVER w AS e2,
-        |    LEAD(event_type, 2) OVER w AS e3
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id))
-        |SELECT e1 || '>' || e2 || '>' || e3 AS path, COUNT(*) AS n
-        |FROM tri WHERE e3 IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin,
-
-    // the exact-integer Page recursion replayed as a RECURSIVE CTE (the
-    // q_holt_linear machinery, but with zero float state)
-    "q_cusum_shift" ->
+    // CUSUM level-shift detector over the daily count series (the
+    // change-point alarm the drift suite lacked): residuals scaled by
+    // the day count so EVERYTHING is exact integers — s_i = td·x_i − te
+    // (td days, te total events), C_i = max(0, C_{i-1} + s_i) in 1/td
+    // units — the Page CUSUM recursion with zero float ops; the one
+    // reported ratio is ratio6. Folded in sorted day order over the
+    // bounded day domain (the q_holt_linear fold discipline); the
+    // oracle replays the recursion as a RECURSIVE CTE.
+    Query("q_cusum_shift", (s, d) => {
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
+          .as("day"))
+        .agg(count(lit(1)).as("n"))
+      val tot = daily.agg(sum(col("n")).as("te"), count(lit(1)).as("td"))
+      val st = daily.crossJoin(broadcast(tot))
+        .select(col("day"), col("td"),
+          (col("td") * col("n") - col("te")).as("sres"))
+      st.agg(min(col("td")).as("td"),
+          aggregate(
+            sort_array(collect_list(struct(col("day"), col("sres")))),
+            struct(lit(0L).as("cur"), lit(0L).as("mx"),
+              lit(-1L).as("mx_day")),
+            (s0, x) => {
+              val cur2 = greatest(lit(0L),
+                s0.getField("cur") + x.getField("sres"))
+              struct(cur2.as("cur"),
+                greatest(s0.getField("mx"), cur2).as("mx"),
+                when(cur2 > s0.getField("mx"), x.getField("day"))
+                  .otherwise(s0.getField("mx_day")).as("mx_day"))
+            }).as("st"))
+        .select(col("st.mx_day").as("shift_day"),
+          col("st.mx").as("cusum_scaled"),
+          ratio6(col("st.mx"), col("td")).as("cusum_r"))
+    }, Sql(
+      // the exact-integer Page recursion replayed as a RECURSIVE CTE (the
+      // q_holt_linear machinery, but with zero float state)
       s"""WITH RECURSIVE daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1),
@@ -3212,11 +2665,46 @@ object EventQueries {
         |  FROM rec r JOIN ser s ON s.i = r.i + 1)
         |SELECT mx_day AS shift_day, CAST(mx AS BIGINT) AS cusum_scaled,
         |  ${ratio6Sql("mx", "td")} AS cusum_r
-        |FROM rec, tot WHERE i = td""".stripMargin,
+        |FROM rec, tot WHERE i = td""".stripMargin)),
 
-    // the same parity split + conversion flag; the z chain is written
-    // in the engine's exact op order (left-assoc products, 1.0/n sums)
-    "q_ab_test" -> {
+    // Two-proportion A/B z-test (the experimentation readout): users
+    // deterministically split by user_id parity (the q_split_hash
+    // modulo discipline — mirrors exactly cross-engine), conversion =
+    // any purchase with value ≥ 100. Counts are exact integers from ONE
+    // per-user aggregate + ONE conditional grand aggregate (no shuffle
+    // beyond the user rollup at any scale); the rates are ratio6; the z
+    // statistic is the one double chain, written in the SAME op order
+    // on both engines (+,−,×,÷,√ are all correctly-rounded IEEE ops)
+    // and reported det6. Zero-variance pools (p̂ ∈ {0,1}) report z = 0
+    // identically on both sides.
+    Query("q_ab_test", (s, d) => {
+      val u = ev(s, d).groupBy(col("user_id"))
+        .agg(max(when(col("event_type") === "purchase" &&
+          col("value") >= 100.0, 1L).otherwise(0L)).as("conv"))
+      val onerow = u.agg(
+        sum(when(pmod(col("user_id"), lit(2)) === 0, 1L).otherwise(0L))
+          .as("n_a"),
+        sum(when(pmod(col("user_id"), lit(2)) === 0, col("conv"))
+          .otherwise(0L)).as("c_a"),
+        sum(when(pmod(col("user_id"), lit(2)) === 1, 1L).otherwise(0L))
+          .as("n_b"),
+        sum(when(pmod(col("user_id"), lit(2)) === 1, col("conv"))
+          .otherwise(0L)).as("c_b"))
+      val p1 = col("c_a").cast("double") / col("n_a")
+      val p2 = col("c_b").cast("double") / col("n_b")
+      val p = (col("c_a") + col("c_b")).cast("double") /
+        (col("n_a") + col("n_b"))
+      val se = sqrt(p * (lit(1.0) - p) *
+        (lit(1.0) / col("n_a") + lit(1.0) / col("n_b")))
+      onerow.select(col("n_a"), col("c_a"), col("n_b"), col("c_b"),
+        ratio6(col("c_a"), col("n_a")).as("rate_a_r"),
+        ratio6(col("c_b"), col("n_b")).as("rate_b_r"),
+        when(se === 0.0, lit(0.0)).otherwise(det6((p1 - p2) / se))
+          .as("z_r"))
+    }, Sql(
+      // the same parity split + conversion flag; the z chain is written
+      // in the engine's exact op order (left-assoc products, 1.0/n sums)
+      {
       val p1 = "(CAST(c_a AS DOUBLE) / n_a)"
       val p2 = "(CAST(c_b AS DOUBLE) / n_b)"
       val p = "(CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))"
@@ -3243,12 +2731,63 @@ object EventQueries {
         |  CASE WHEN $se = 0.0 THEN 0.0
         |       ELSE ${det6Sql(s"($p1 - $p2) / $se")} END AS z_r
         |FROM c""".stripMargin
-    },
+    })),
 
-    // the same risk-set algebra (window over ALL durations, THEN the
-    // d>0 filter) and the same survival recursion, seeded at
-    // (1.0 − d/n) = 1.0·(1.0 − d/n) by IEEE identity
-    "q_kaplan_meier" ->
+    // Kaplan–Meier reorder-survival curve (time-to-second-order per
+    // customer; administrative censoring at 365 days with staggered
+    // entry: follow-up = min(365, last-fixture-day − first-order day)).
+    // Risk-set arithmetic is exact integers (one per-customer rollup,
+    // one duration aggregate, one domain-bounded cumulative window —
+    // the duration domain is capped at 366 values by the cutoff, so the
+    // partitionless window and the fold are constant-size at any
+    // fixture scale). The survival product is the ONE double chain
+    // s ← s·(1 − d/n), folded in sorted duration order on both engines
+    // (prefix slice-fold here, RECURSIVE CTE there; multiplying the
+    // 1.0 seed is bit-exact by IEEE identity) and reported det6.
+    Query("q_kaplan_meier", (s, d) => {
+      val o = Tables.load(s, d, "orders").select(col("o_custkey"),
+        floor(unix_timestamp(col("o_orderdate")) / 86400).cast("long")
+          .as("day"))
+      val f = o.groupBy(col("o_custkey")).agg(min(col("day")).as("d1"))
+      val gap = o.join(f, Seq("o_custkey"))
+        .filter(col("day") > col("d1"))
+        .groupBy(col("o_custkey"))
+        .agg(min(col("day") - col("d1")).as("gap"))
+      val g = o.agg(max(col("day")).as("gmax"))
+      val pu = f.join(gap, Seq("o_custkey"), "left")
+        .crossJoin(broadcast(g))
+        .select(col("gap"),
+          least(lit(365L), col("gmax") - col("d1")).as("fu"))
+        .select(
+          when(col("gap").isNotNull && col("gap") <= col("fu"),
+            col("gap")).otherwise(col("fu")).as("t"),
+          when(col("gap").isNotNull && col("gap") <= col("fu"), 1L)
+            .otherwise(0L).as("obs"))
+      val byd = pu.groupBy(col("t"))
+        .agg(sum(col("obs")).as("d_events"), count(lit(1)).as("m"))
+      val tot = byd.agg(sum(col("m")).as("n_total"))
+      val wRisk = Window.orderBy(col("t"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val risk = byd.crossJoin(broadcast(tot))
+        .withColumn("n_risk",
+          col("n_total") - coalesce(sum(col("m")).over(wRisk), lit(0L)))
+        .filter(col("d_events") > 0)
+        .select(col("t"), col("d_events"), col("n_risk"))
+      val arr = risk.agg(sort_array(collect_list(struct(col("t"),
+        col("d_events"), col("n_risk")))).as("steps"))
+      arr.select(col("steps"), posexplode(col("steps")))
+        .select(col("col.t").as("t"), col("col.n_risk").as("n_risk"),
+          col("col.d_events").as("d_events"),
+          det6(aggregate(
+            slice(col("steps"), lit(1), col("pos") + 1), lit(1.0),
+            (acc, x) => acc * (lit(1.0) -
+              x.getField("d_events").cast("double") /
+                x.getField("n_risk")))).as("surv_r"))
+        .orderBy(col("t"))
+    }, Sql(
+      // the same risk-set algebra (window over ALL durations, THEN the
+      // d>0 filter) and the same survival recursion, seeded at
+      // (1.0 − d/n) = 1.0·(1.0 − d/n) by IEEE identity
       s"""WITH RECURSIVE o AS (
         |  SELECT o_custkey,
         |    (epoch_us(o_orderdate) // 1000000) // 86400 AS day
@@ -3285,12 +2824,130 @@ object EventQueries {
         |    r.s * (1.0 - CAST(s2.d_events AS DOUBLE) / s2.n_risk)
         |  FROM rec r JOIN st s2 ON s2.i = r.i + 1)
         |SELECT t, n_risk, d_events, ${det6Sql("s")} AS surv_r
-        |FROM rec ORDER BY t""".stripMargin,
+        |FROM rec ORDER BY t""".stripMargin)),
 
-    // the same zero-filled spine + integer 1/7-unit decomposition; the
-    // oracle's %7 is wrapped non-negative to mirror pmod (the
-    // q_seasonality convention)
-    "q_seasonal_decompose" ->
+    // Fano-factor burstiness per event type (variance/mean of the daily
+    // count series — the overdispersion diagnostic separating bursty
+    // traffic from Poisson-like): with td observed days, Σx and Σx²
+    // exact integers, F = (td·Σx² − (Σx)²) / ((td−1)·Σx) is a ratio of
+    // exact integers — ratio6, ZERO float ops before the last. Days the
+    // type was never observed contribute no cell (the q_acf gap
+    // convention), mirrored in the oracle.
+    Query("q_fano_burstiness", (s, d) => {
+      val dec = (c: Column) => c.cast("decimal(38,0)")
+      val daily = ev(s, d)
+        .groupBy(col("event_type"),
+          floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
+        .agg(count(lit(1)).as("x"))
+      daily.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("td"),
+          sum(col("x")).as("sx"),
+          sum(dec(col("x")) * dec(col("x"))).as("sxx"))
+        .filter(col("td") > 1)
+        .select(col("event_type"), col("td"), col("sx"),
+          ratio6(col("sx"), col("td")).as("mean_r"),
+          ratio6(dec(col("td")) * col("sxx") - dec(col("sx")) * dec(col("sx")),
+            dec(col("td") - 1) * dec(col("sx"))).as("fano_r"))
+        .orderBy(col("event_type"))
+    }, Sql(
+      // the same observed-day cells and exact-integer Fano ratio
+      s"""WITH daily AS (
+        |  SELECT event_type, (epoch_us(ts) // 1000000) // 86400 AS day,
+        |    CAST(COUNT(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1, 2),
+        |agg AS (
+        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS td,
+        |    CAST(SUM(x) AS BIGINT) AS sx,
+        |    CAST(SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT))
+        |      AS DECIMAL(38,0)) AS sxx
+        |  FROM daily GROUP BY 1)
+        |SELECT event_type, td, sx,
+        |  ${ratio6Sql("sx", "td")} AS mean_r,
+        |  ${ratio6Sql(
+             "CAST(td AS HUGEINT) * CAST(sxx AS HUGEINT) - " +
+               "CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT)",
+             "CAST(td - 1 AS HUGEINT) * CAST(sx AS HUGEINT)")} AS fano_r
+        |FROM agg WHERE td > 1 ORDER BY event_type""".stripMargin)),
+
+    // Week-over-week audience overlap (the retention lens as a set
+    // metric): Jaccard between consecutive weeks' active-user sets from
+    // ONE (user, week) distinct — intersection via the shifted-week
+    // self-join, union by inclusion-exclusion, ratio6. Bounded week
+    // domain; parallelism comes from the distinct, never a per-week
+    // re-scan.
+    Query("q_audience_overlap", (s, d) => {
+      val uw = ev(s, d).select(col("user_id"),
+        floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"))
+        .distinct()
+      val sizes = uw.groupBy(col("week")).agg(count(lit(1)).as("n"))
+      val inter = uw.join(
+          uw.select(col("user_id"), (col("week") - 1).as("week")),
+          Seq("user_id", "week"))
+        .groupBy(col("week")).agg(count(lit(1)).as("inter"))
+      sizes.select(col("week"), col("n").as("n_w"))
+        .join(sizes.select((col("week") - 1).as("week"),
+          col("n").as("n_next")), Seq("week"))
+        .join(inter, Seq("week"), "left")
+        .select(col("week"), col("n_w"), col("n_next"),
+          coalesce(col("inter"), lit(0L)).as("inter"))
+        .withColumn("jacc_r", ratio6(col("inter"),
+          col("n_w") + col("n_next") - col("inter")))
+        .orderBy(col("week"))
+    }, Sql(
+      // the same shifted-week intersection + inclusion-exclusion union
+      s"""WITH uw AS (
+        |  SELECT DISTINCT user_id,
+        |    (epoch_us(ts) // 1000000) // 604800 AS week
+        |  FROM events),
+        |sizes AS (SELECT week, CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM uw GROUP BY 1),
+        |inter AS (
+        |  SELECT a.week, CAST(COUNT(*) AS BIGINT) AS inter
+        |  FROM uw a JOIN uw b
+        |    ON a.user_id = b.user_id AND b.week = a.week + 1
+        |  GROUP BY 1)
+        |SELECT s.week, s.n AS n_w, s2.n AS n_next,
+        |  COALESCE(i.inter, 0) AS inter,
+        |  ${ratio6Sql("COALESCE(i.inter, 0)",
+             "s.n + s2.n - COALESCE(i.inter, 0)")} AS jacc_r
+        |FROM sizes s JOIN sizes s2 ON s2.week = s.week + 1
+        |LEFT JOIN inter i ON i.week = s.week
+        |ORDER BY s.week""".stripMargin)),
+
+    // Additive seasonal decomposition, kept EXACT (the STL-lite
+    // diagnostic behind q_seasonality's raw DOW means): daily counts on
+    // the zero-filled day spine (the q_gap_fill convention), trend =
+    // centered 7-day moving average carried as the INTEGER sum T7 (1/7
+    // units), detrended D7 = 7·x − T7 (still integer), and the seasonal
+    // component per day-of-week = mean(D7)/7 — one exact signed ratio
+    // (sratio6) per DOW. Boundary days without a full window are
+    // excluded identically on both engines. Bounded day domain
+    // throughout.
+    Query("q_seasonal_decompose", (s, d) => {
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
+          .as("day"))
+        .agg(count(lit(1)).as("x"))
+      val bounds = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
+      val spine = bounds.select(explode(sequence(col("lo"), col("hi")))
+        .as("day"))
+        .join(daily, Seq("day"), "left")
+        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"))
+      val w = Window.orderBy(col("day")).rowsBetween(-3, 3)
+      val dec7 = spine
+        .withColumn("t7", sum(col("x")).over(w))
+        .withColumn("nw", count(lit(1)).over(w))
+        .filter(col("nw") === 7)
+        .select(pmod(col("day"), lit(7)).as("dow"),
+          (col("x") * 7 - col("t7")).as("d7"))
+      dec7.groupBy(col("dow"))
+        .agg(count(lit(1)).as("n_days"),
+          sratio6(sum(col("d7")), count(lit(1)) * 7).as("seasonal_r"))
+        .orderBy(col("dow"))
+    }, Sql(
+      // the same zero-filled spine + integer 1/7-unit decomposition; the
+      // oracle's %7 is wrapped non-negative to mirror pmod (the
+      // q_seasonality convention)
       s"""WITH daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day,
         |    CAST(COUNT(*) AS BIGINT) AS x
@@ -3312,11 +2969,35 @@ object EventQueries {
         |  FROM win WHERE nw = 7)
         |SELECT dow, CAST(COUNT(*) AS BIGINT) AS n_days,
         |  ${sratio6Sql("SUM(d7)", "COUNT(*) * 7")} AS seasonal_r
-        |FROM d7 GROUP BY 1 ORDER BY dow""".stripMargin,
+        |FROM d7 GROUP BY 1 ORDER BY dow""".stripMargin)),
 
-    // the same lifetime census + risk-set window (filter AFTER the
-    // window, the q_kaplan_meier discipline)
-    "q_churn_hazard" ->
+    // Discrete churn-hazard curve by customer tenure (the Kaplan–Meier
+    // sibling viewed as per-interval risk): tenure = 30-day periods
+    // between a customer's first and last order; at tenure t the risk
+    // set is everyone whose tenure reached t, hazard h_t = churned_t /
+    // at_risk_t — exact integers end to end (one per-customer rollup,
+    // one bounded-tenure-domain cumulative window, ratio6). NOTE the
+    // last observed period is "churn" by construction here (a lifetime
+    // census, no censoring — q_kaplan_meier is the censored treatment,
+    // and the events table's uniform users make IT the wrong fixture
+    // for a hazard curve: every user spans the whole month).
+    Query("q_churn_hazard", (s, d) => {
+      val day = floor(unix_timestamp(col("o_orderdate")) / 86400)
+      val uw = Tables.load(s, d, "orders").groupBy(col("o_custkey"))
+        .agg(floor((max(day) - min(day)) / 30).cast("long").as("ten"))
+      val byT = uw.groupBy(col("ten")).agg(count(lit(1)).as("churned"))
+      val tot = byT.agg(sum(col("churned")).as("n_users"))
+      val wcum = Window.orderBy(col("ten"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      byT.crossJoin(broadcast(tot))
+        .withColumn("at_risk",
+          col("n_users") - coalesce(sum(col("churned")).over(wcum), lit(0L)))
+        .select(col("ten"), col("at_risk"), col("churned"),
+          ratio6(col("churned"), col("at_risk")).as("hazard_r"))
+        .orderBy(col("ten"))
+    }, Sql(
+      // the same lifetime census + risk-set window (filter AFTER the
+      // window, the q_kaplan_meier discipline)
       s"""WITH uw AS (
         |  SELECT o_custkey,
         |    CAST((MAX((epoch_us(o_orderdate) // 1000000) // 86400)
@@ -3336,13 +3017,54 @@ object EventQueries {
              "n_users - COALESCE(SUM(churned) OVER (ORDER BY ten " +
                "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)")}
         |    AS hazard_r
-        |FROM byt, tot ORDER BY ten""".stripMargin,
+        |FROM byt, tot ORDER BY ten""".stripMargin)),
 
-    "q_markov_attribution" -> markovAttributionOracle,
-
-    // the same count matrix + 15 unrolled π←πP CTEs generated from the
-    // shared eventTypes list (the q_pca_power oracle machinery)
-    "q_markov_steady" -> {
+    // Stationary distribution of the event-type Markov chain (where
+    // does a user's session settle?): the q_event_transitions count
+    // matrix over the CLOSED 5-type domain, row-stochastic P from
+    // exact integer counts (one double division per entry, mirrored),
+    // then π ← πP for 15 fixed iterations as an aggregate-HOF fold
+    // (lambda-variable state — the q_pca_power machinery). A row with
+    // no outgoing transitions becomes an absorbing self-loop (CASE
+    // mirrored in the oracle); dot products in fixed left-assoc type
+    // order; outputs det6.
+    Query("q_markov_steady", (s, d) => {
+      val types = eventTypes
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("sec"), col("event_id"))
+      val pairs = e
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .filter(col("prev_type").isNotNull)
+      val aggs = (count(lit(1)).as("n_transitions") +:
+        types.map(a => sum(when(col("prev_type") === a, 1L).otherwise(0L))
+          .as(s"r_$a"))) ++
+        (for { a <- types; b <- types } yield
+          sum(when(col("prev_type") === a && col("event_type") === b, 1L)
+            .otherwise(0L)).as(s"c_${a}_$b"))
+      val one = pairs.agg(aggs.head, aggs.tail: _*)
+      def p(a: String, b: String): Column =
+        when(col(s"r_$a") > 0,
+          col(s"c_${a}_$b").cast("double") / col(s"r_$a"))
+          .otherwise(lit(if (a == b) 1.0 else 0.0))
+      val fold = aggregate(sequence(lit(1), lit(15)),
+        struct(types.map(tp => lit(0.2).as(s"pi_$tp")): _*),
+        (acc, _) => struct(types.map { b =>
+          types.map(a => acc.getField(s"pi_$a") * p(a, b))
+            .reduceLeft(_ + _).as(s"pi_$b")
+        }: _*))
+      // hoist the fold into ONE column before the field selects (the
+      // q_pca_power/q_markov_attribution planning-cost lesson: five
+      // getField references would inline five copies of the
+      // 15-iteration tree into the projection)
+      one.withColumn("__f", fold)
+        .select(col("n_transitions") +:
+          types.map(tp => det6(col(s"__f.pi_$tp")).as(s"pi_$tp")): _*)
+    }, Sql(
+      // the same count matrix + 15 unrolled π←πP CTEs generated from the
+      // shared eventTypes list (the q_pca_power oracle machinery)
+      {
       val types = eventTypes
       val sums = (Seq("CAST(COUNT(*) AS BIGINT) AS n_transitions") ++
         types.map(a =>
@@ -3389,10 +3111,135 @@ object EventQueries {
         |SELECT n_transitions,
         |  ${types.map(tp => det6Sql(s"pi_$tp") + s" AS pi_$tp").mkString(",\n  ")}
         |FROM it15""".stripMargin
-    },
+    })),
 
-    // the same uniform zero-state recursion, l′ inlined into b′ and s′
-    "q_holt_winters" ->
+    // Markov removal-effect attribution (the data-driven alternative to
+    // last-touch/linear credit — Anderl et al.'s absorbing-chain
+    // framework): journeys are per-user ordered events; 'purchase' is
+    // the absorbing conversion state and journey ends absorb to NULL
+    // (P(i→j) = c_ij/den_i with den_i = ALL i occurrences, so the
+    // missing mass IS the null absorption — no renormalization).
+    // Absorption probabilities solve a = (c_i,purchase + Σ c_ij·a_j)/
+    // den_i by 30 fixed iterations from 0 (monotone convergent), once
+    // for the base chain and once per removed channel (transitions into
+    // the removed state become lost mass). Every count is an exact
+    // integer from ONE pass; the iterations are aggregate-HOF folds
+    // (lambda-variable state) mirrored by generated unrolled CTEs;
+    // conversion mixes over the exact first-event distribution. det6.
+    Query("q_markov_attribution", (s, d) => {
+      val types = eventTypes
+      val na = types.filterNot(_ == "purchase")
+      val e = ev(s, d).select(col("user_id"), col("event_type"),
+        unix_timestamp(col("ts")).as("sec"), col("event_id"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("sec"), col("event_id"))
+      val withNext = e
+        .withColumn("next_type",
+          coalesce(lead(col("event_type"), 1).over(w), lit("END")))
+        .withColumn("rn", row_number().over(w))
+      val aggs = (countDistinct(col("user_id")).as("n_users") +:
+        types.map(t0 => sum(when(col("rn") === 1 &&
+          col("event_type") === t0, 1L).otherwise(0L)).as(s"s_$t0"))) ++
+        na.map(i => sum(when(col("event_type") === i, 1L).otherwise(0L))
+          .as(s"den_$i")) ++
+        (for { i <- na; j <- types } yield
+          sum(when(col("event_type") === i && col("next_type") === j, 1L)
+            .otherwise(0L)).as(s"c_${i}_$j"))
+      val one = withNext.agg(aggs.head, aggs.tail: _*)
+      // Removed-scenario semantics (Anderl et al.): the removed node is
+      // FULLY replaced by the null state — a_removed ≡ 0, so its
+      // first-touch mass, its direct-to-purchase transitions, AND
+      // transitions into it all earn zero credit (r14 ADVICE: the
+      // earlier form only dropped transitions INTO the removed channel,
+      // understating removal for journey-starting channels).
+      def absorbFold(removed: Option[String]) =
+        aggregate(sequence(lit(1), lit(30)),
+          struct(na.map(i => lit(0.0).as(s"a_$i")): _*),
+          (acc, _) => struct(na.map { i =>
+            if (removed.contains(i)) lit(0.0).as(s"a_$i")
+            else {
+              val num = na.filterNot(removed.contains)
+                .foldLeft(col(s"c_${i}_purchase").cast("double")) {
+                  (sum0, j) =>
+                    sum0 + col(s"c_${i}_$j").cast("double") *
+                      acc.getField(s"a_$j")
+                }
+              when(col(s"den_$i") > 0, num / col(s"den_$i"))
+                .otherwise(lit(0.0)).as(s"a_$i")
+            }
+          }: _*))
+      // hoist every fold into a COLUMN before the per-row conversions:
+      // inlining the same Column trees put ~6 copies of the
+      // 30-iteration fold (4 more inside each conv's field accesses) in
+      // one projection, and the driver spent ~0.9 s of the 1.3 s line
+      // planning/compiling it (measured r18: jobs totalled 0.36 s wall;
+      // the gap sat between the scan job and the window exchange). One
+      // attribute reference per use keeps the arithmetic bit-identical
+      // (same fold, evaluated once per row of a 1-row relation) and
+      // shrinks the expression tree ~6×.
+      def convOf(f: String): Column =
+        types.map { t0 =>
+          val a = if (t0 == "purchase") lit(1.0)
+            else col(s"$f.a_$t0")
+          col(s"s_$t0").cast("double") / col("n_users") * a
+        }.reduceLeft(_ + _)
+      val withFolds = na.foldLeft(
+        one.withColumn("__f_base", absorbFold(None))) { (df, k) =>
+        df.withColumn(s"__f_$k", absorbFold(Some(k)))
+      }.withColumn("c_base", convOf("__f_base"))
+      val cBase = col("c_base")
+      val rows = na.map { k =>
+        val cK = convOf(s"__f_$k")
+        struct(lit(k).as("channel"), det6(cBase).as("conv_base_r"),
+          det6(cK).as("conv_removed_r"),
+          when(cBase > 0.0, det6((cBase - cK) / cBase))
+            .otherwise(lit(0.0)).as("removal_r"))
+      }
+      withFolds.select(explode(array(rows: _*)).as("r"))
+        .select(col("r.channel").as("channel"),
+          col("r.conv_base_r").as("conv_base_r"),
+          col("r.conv_removed_r").as("conv_removed_r"),
+          col("r.removal_r").as("removal_r"))
+        .orderBy(col("channel"))
+    }, Sql(markovAttributionOracle)),
+
+    // Additive Holt–Winters (triple exponential smoothing, weekly
+    // season m=7) over the daily count series — the seasonal upgrade of
+    // q_holt_linear: state (level, trend, 7-slot seasonal ring), the
+    // UNIFORM recursion from the zero state for every step (no
+    // first-step special case to mirror), dyadic smoothing constants
+    // (α=β=0.5, γ=0.25 — exactly representable), l′ inlined textually
+    // into b′ and s′ exactly as the oracle's RECURSIVE CTE writes it.
+    // Gap days are absent from the index (the q_holt_linear series
+    // convention). Outputs det6; fc1 = l + b + next seasonal.
+    Query("q_holt_winters", (s, d) => {
+      val daily = ev(s, d)
+        .groupBy(floor(unix_timestamp(col("ts")) / 86400).cast("long")
+          .as("day"))
+        .agg(count(lit(1)).cast("double").as("y"))
+      val ring = (1 to 7).map(i => s"s$i")
+      val zero = struct((Seq(lit(0.0).as("l"), lit(0.0).as("b")) ++
+        ring.map(r => lit(0.0).as(r))): _*)
+      val folded = daily.agg(count(lit(1)).as("n_days"),
+        aggregate(
+          sort_array(collect_list(struct(col("day"), col("y")))),
+          zero,
+          (st, e) => {
+            val y = e.getField("y")
+            val l = st.getField("l"); val b = st.getField("b")
+            val s1 = st.getField("s1")
+            val lNew = lit(0.5) * (y - s1) + lit(0.5) * (l + b)
+            val bNew = lit(0.5) * (lNew - l) + lit(0.5) * b
+            val sNew = lit(0.25) * (y - lNew) + lit(0.75) * s1
+            struct((Seq(lNew.as("l"), bNew.as("b")) ++
+              (2 to 7).map(i => st.getField(s"s$i").as(s"s${i - 1}")) :+
+              sNew.as("s7")): _*)
+          }).as("st"))
+      folded.select(col("n_days"),
+        det6(col("st.l")).as("level_r"), det6(col("st.b")).as("trend_r"),
+        det6(col("st.l") + col("st.b") + col("st.s1")).as("fc1_r"))
+    }, Sql(
+      // the same uniform zero-state recursion, l′ inlined into b′ and s′
       s"""WITH RECURSIVE daily AS (
         |  SELECT (epoch_us(ts) // 1000000) // 86400 AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1),
@@ -3415,51 +3262,37 @@ object EventQueries {
         |  FROM rec r JOIN ser ON ser.i = r.i + 1)
         |SELECT n_days, ${det6Sql("l")} AS level_r, ${det6Sql("b")} AS trend_r,
         |  ${det6Sql("l + b + s1")} AS fc1_r
-        |FROM rec, nd WHERE i = n_days""".stripMargin,
+        |FROM rec, nd WHERE i = n_days""".stripMargin)),
 
-    // the same observed-day cells and exact-integer Fano ratio
-    "q_fano_burstiness" ->
-      s"""WITH daily AS (
-        |  SELECT event_type, (epoch_us(ts) // 1000000) // 86400 AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS td,
-        |    CAST(SUM(x) AS BIGINT) AS sx,
-        |    CAST(SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT))
-        |      AS DECIMAL(38,0)) AS sxx
-        |  FROM daily GROUP BY 1)
-        |SELECT event_type, td, sx,
-        |  ${ratio6Sql("sx", "td")} AS mean_r,
-        |  ${ratio6Sql(
-             "CAST(td AS HUGEINT) * CAST(sxx AS HUGEINT) - " +
-               "CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT)",
-             "CAST(td - 1 AS HUGEINT) * CAST(sx AS HUGEINT)")} AS fano_r
-        |FROM agg WHERE td > 1 ORDER BY event_type""".stripMargin,
-
-    // the same shifted-week intersection + inclusion-exclusion union
-    "q_audience_overlap" ->
-      s"""WITH uw AS (
-        |  SELECT DISTINCT user_id,
-        |    (epoch_us(ts) // 1000000) // 604800 AS week
-        |  FROM events),
-        |sizes AS (SELECT week, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM uw GROUP BY 1),
-        |inter AS (
-        |  SELECT a.week, CAST(COUNT(*) AS BIGINT) AS inter
-        |  FROM uw a JOIN uw b
-        |    ON a.user_id = b.user_id AND b.week = a.week + 1
-        |  GROUP BY 1)
-        |SELECT s.week, s.n AS n_w, s2.n AS n_next,
-        |  COALESCE(i.inter, 0) AS inter,
-        |  ${ratio6Sql("COALESCE(i.inter, 0)",
-             "s.n + s2.n - COALESCE(i.inter, 0)")} AS jacc_r
-        |FROM sizes s JOIN sizes s2 ON s2.week = s.week + 1
-        |LEFT JOIN inter i ON i.week = s.week
-        |ORDER BY s.week""".stripMargin,
-
-    // the same trailing list + all-integer order-statistic indices
-    "q_rolling_band" ->
+    // Rolling control band (the SLO-envelope op next to
+    // q_rolling_median's point smoother): per day, P10/P90 of the
+    // TRAILING 28 days of revenue — exact lower order statistics
+    // (index ⌈p·n⌉ via all-integer arithmetic) from the sorted window
+    // array, today excluded so breaches test fresh data against
+    // history; breach flags are integer comparisons. Only days with
+    // the full 28-day history report (identical filter both engines).
+    Query("q_rolling_band", (s, d) => {
+      val daily = Tables.load(s, d, "orders")
+        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 86400)
+          .cast("long").as("day"))
+        .agg(sum(cents(col("o_totalprice"))).as("x"))
+      val w = Window.orderBy(col("day")).rowsBetween(-28, -1)
+      val n = size(col("arr"))
+      def ordIdx(num: Int, den: Int) =
+        ((n * num + lit(den - 1)) / den).cast("int")
+      daily
+        .withColumn("arr", sort_array(collect_list(col("x")).over(w)))
+        .filter(size(col("arr")) === 28)
+        .select(col("day"), col("x"),
+          element_at(col("arr"), ordIdx(1, 10)).as("p10_c"),
+          element_at(col("arr"), ordIdx(9, 10)).as("p90_c"))
+        .withColumn("breach_low",
+          when(col("x") < col("p10_c"), 1L).otherwise(0L))
+        .withColumn("breach_high",
+          when(col("x") > col("p90_c"), 1L).otherwise(0L))
+        .orderBy(col("day"))
+    }, Sql(
+      // the same trailing list + all-integer order-statistic indices
       """WITH daily AS (
         |  SELECT (epoch_us(o_orderdate) // 1000000) // 86400 AS day,
         |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
@@ -3478,10 +3311,29 @@ object EventQueries {
         |       THEN 1 ELSE 0 END AS BIGINT) AS breach_low,
         |  CAST(CASE WHEN x > arr[(len(arr) * 9 + 9) // 10]
         |       THEN 1 ELSE 0 END AS BIGINT) AS breach_high
-        |FROM full28 ORDER BY day""".stripMargin,
+        |FROM full28 ORDER BY day""".stripMargin)),
 
-    // the same one-pass flags + conditional sums
-    "q_venn3" ->
+    // Three-way audience overlap (the inclusion–exclusion Venn census
+    // behind segment planning): per-user flags for click / purchase /
+    // signup from ONE rollup, then every region cardinality and the
+    // union as exact conditional sums — a single pass, no joins at all.
+    Query("q_venn3", (s, d) => {
+      val u = ev(s, d).groupBy(col("user_id")).agg(
+        max(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
+        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          .as("b"),
+        max(when(col("event_type") === "signup", 1L).otherwise(0L)).as("c"))
+      u.agg(
+        sum(col("a")).as("n_a"), sum(col("b")).as("n_b"),
+        sum(col("c")).as("n_c"),
+        sum(col("a") * col("b")).as("n_ab"),
+        sum(col("a") * col("c")).as("n_ac"),
+        sum(col("b") * col("c")).as("n_bc"),
+        sum(col("a") * col("b") * col("c")).as("n_abc"),
+        sum(when(col("a") + col("b") + col("c") > 0, 1L).otherwise(0L))
+          .as("n_union"))
+    }, Sql(
+      // the same one-pass flags + conditional sums
       """WITH u AS (
         |  SELECT user_id,
         |    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
@@ -3497,12 +3349,39 @@ object EventQueries {
         |  CAST(SUM(a * b * c) AS BIGINT) AS n_abc,
         |  CAST(SUM(CASE WHEN a + b + c > 0 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_union
-        |FROM u""".stripMargin,
+        |FROM u""".stripMargin)),
 
-    // the window list is sorted and indexed exactly like the engine's
-    // sort_array + element_at (both 1-based); even windows are the same
-    // exact (a+b)/2.0
-    "q_rolling_median" ->
+    // Exact 7-day rolling median of daily revenue (the robust KPI
+    // smoother next to q_events_ewma's mean): daily integer cents, a
+    // RANGE frame over the bounded day domain (missing days shrink the
+    // window identically on both engines), the median picked from the
+    // sorted window array — odd windows are exact integers, even
+    // windows are (a+b)/2 with both operands far below 2^53, exactly
+    // representable — so the output needs NO rounding contract at all.
+    Query("q_rolling_median", (s, d) => {
+      val daily = Tables.load(s, d, "orders")
+        .groupBy(floor(unix_timestamp(col("o_orderdate")) / 86400)
+          .cast("long").as("day"))
+        .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
+      val w = Window.orderBy(col("day")).rangeBetween(-6, 0)
+      daily
+        .withColumn("arr", sort_array(collect_list(col("rev_c")).over(w)))
+        .select(col("day"), col("rev_c"),
+          size(col("arr")).cast("long").as("n_win"),
+          when(pmod(size(col("arr")), lit(2)) === 1,
+            element_at(col("arr"),
+              ((size(col("arr")) + 1) / 2).cast("int")).cast("double"))
+            .otherwise(
+              (element_at(col("arr"), (size(col("arr")) / 2).cast("int")) +
+                element_at(col("arr"),
+                  (size(col("arr")) / 2).cast("int") + 1))
+                .cast("double") / 2.0)
+            .as("med_7d"))
+        .orderBy(col("day"))
+    }, Sql(
+      // the window list is sorted and indexed exactly like the engine's
+      // sort_array + element_at (both 1-based); even windows are the same
+      // exact (a+b)/2.0
       """WITH daily AS (
         |  SELECT (epoch_us(o_orderdate) // 1000000) // 86400 AS day,
         |    CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
@@ -3518,6 +3397,6 @@ object EventQueries {
         |       THEN CAST(arr[(len(arr) + 1) // 2] AS DOUBLE)
         |       ELSE CAST(arr[len(arr) // 2] + arr[len(arr) // 2 + 1]
         |              AS DOUBLE) / 2.0 END AS med_7d
-        |FROM win ORDER BY day""".stripMargin
+        |FROM win ORDER BY day""".stripMargin))
   )
 }

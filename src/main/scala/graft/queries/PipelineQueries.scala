@@ -111,430 +111,6 @@ object PipelineQueries {
        |train AS (SELECT * FROM ratings WHERE movieId % 10 < 6),
        |val AS (SELECT * FROM ratings WHERE movieId % 10 IN (6,7))""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Deterministic hash-split label counts (scale-safe replacement for the
-    // reference's driver-built IN-lists, split_script.py:27-40).
-    "q_split_hash" -> ((s, d) => {
-      Split.labelByHash(Tables.ratings(s, d), "movieId")
-        .groupBy(col("train_val_test"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("movieId")).as("n_movies"))
-        .orderBy(col("train_val_test"))
-    }),
-
-    // Reference v2 split (seeded per-user 25%/25%, new_split_script.py) —
-    // distributed; verified by its invariants (1 row, overlaps must be 0;
-    // no value oracle possible for seeded sampling).
-    "q_split_v2_report" -> ((s, d) => {
-      val r = Tables.ratings(s, d)
-        .groupBy(col("userId"), col("movieId")).agg(avg(col("rating")).as("rating"))
-      val (train, validation, test) = Split.splitV2(r, 0.25, 1234L)
-      Split.disjointnessReport(train, validation, test, Seq("userId", "movieId"))
-    }),
-
-    // T1: stratified sampleBy + T2 exceptAll (split_script.py v1 shape),
-    // seeded — invariant report: holdout + sample partition the labeled set.
-    // Built directly on the lineitem scan (no shuffle upstream of sampleBy)
-    // so the seeded sample is stable under lazy re-evaluation.
-    "q_split_v1_report" -> ((s, d) => {
-      val labeled = Split.labelByHash(
-        Tables.lineitem(s, d).select(col("l_partkey").as("movieId"),
-          col("l_orderkey"), col("l_linenumber")), "movieId")
-      val sampled = Split.sampleByLabel(labeled, "train_val_test",
-        Map("train" -> 1.0, "validation" -> 0.3, "test" -> 0.3), 1234L)
-      val holdout = labeled.exceptAll(sampled)
-      val spark = s
-      import spark.implicits._
-      sampled.agg(count(lit(1)).as("n_sampled"))
-        .crossJoin(holdout.agg(count(lit(1)).as("n_holdout")))
-        .crossJoin(labeled.agg(count(lit(1)).as("n_total")))
-        .select(col("n_sampled"), col("n_holdout"), col("n_total"),
-          (col("n_sampled") + col("n_holdout") - col("n_total")).as("partition_violation"))
-    }),
-
-    // Deterministic arithmetic-hash sampling (Split.hashSample): ~10% of
-    // ratings by (userId, movieId) content — reproducible in ANSI SQL, so
-    // the SAMPLED pipeline itself is oracle-checked (impossible with
-    // rand/sample, SURVEY §7.4 risk 1).
-    "q_hash_sample" -> ((s, d) => {
-      Split.hashSample(Tables.ratings(s, d),
-        Seq(col("userId"), col("movieId")), 0.1)
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("userId")).as("n_users"),
-          round(sum(col("rating")), 6).as("sum_rating"))
-    }),
-
-    // Typed COGROUP: per-user merge of two differently-shaped relations
-    // (ratings ⊞ events) in one custom function — the Scala analogue of
-    // applyInPandas over cogrouped frames. Both sides shuffle once on the
-    // key; the merge closure sees each user's rows from both inputs.
-    // Deterministic outputs (counts + sums) → DuckDB-oracled.
-    "q_cogroup" -> ((s, d) => {
-      val spark = s
-      import spark.implicits._
-      val r = Tables.ratings(s, d).select(col("userId"), col("rating"))
-        .as[(Long, Double)].groupByKey(_._1)
-      val e = Tables.events(s, d)
-        .select(col("user_id"), col("value")).as[(Long, Double)]
-        .groupByKey(_._1)
-      r.cogroup(e) { (uid, ratings, events) =>
-        var nr = 0L; var sr = 0.0
-        ratings.foreach { t => nr += 1; sr += t._2 }
-        var ne = 0L; var se = 0.0
-        events.foreach { t => ne += 1; se += t._2 }
-        Iterator((uid, nr, sr, ne, se))
-      }.toDF("userId", "n_ratings", "sum_rating_raw", "n_events", "sum_value_raw")
-        .select(col("userId"), col("n_ratings"),
-          round(col("sum_rating_raw"), 6).as("sum_rating"),
-          col("n_events"), round(col("sum_value_raw"), 6).as("sum_value"))
-        .orderBy(col("userId"))
-    }),
-
-    // U3 global hit-ratio of popularity recs (popularity_model.py:67,76).
-    "q_eval_hit_ratio" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      Eval.hitRatioGlobal(v, rankedTop100(train))
-    }),
-
-    // U2 global reference-mAP (popularity_model.py:68,77 — quirky formula
-    // replicated exactly).
-    "q_eval_map_ref" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      Eval.referenceMapGlobal(v, rankedTop100(train), K)
-    }),
-
-    // U2 per-user reference-mAP (the ALS eval path als.py:115-133).
-    "q_eval_map_user" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      Eval.referenceMapPerUser(v, rankedTop100(train), K)
-    }),
-
-    // Standard MAP@10 (M7 cross-check): per-user recs = user's own top-10
-    // train items — deterministic, exercises window top-k + hit ranking.
-    "q_eval_map_std" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
-      Eval.standardMapAtK(v, recs, 10)
-    }),
-
-    // precision@k (extension.py:167,174,181 — the one reference-published
-    // metric family previously without an engine twin): per-user form at
-    // k=10 over the deterministic per-user top-10 recs, global form at
-    // k=100 over the popularity top-100 vs the validation slice. One row,
-    // both columns, fully DuckDB-oracled.
-    "q_eval_precision_k" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
-      Eval.precisionAtKPerUser(v, recs, 10)
-        .crossJoin(Eval.precisionAtKGlobal(v, rankedTop100(train), K))
-    }),
-
-    // Mean reciprocal rank @10 (the eval-family member MAP/hit/precision
-    // lacked) — EXACT: 1/rank for rank ∈ 1..10 carried as the integer
-    // 2520/rank (2520 = lcm(1..10), so every reciprocal is a whole
-    // number of 1/2520 units); MRR = Σ units / (2520·n_users) is ONE
-    // exact integer ratio (ratio6) — zero float ops. Users with labels
-    // but no hit contribute 0 (the standard convention).
-    "q_eval_mrr" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
-      val labels = v.select(col("userId"), col("movieId")).distinct()
-      val firstHit = recs.join(labels, Seq("userId", "movieId"))
-        .groupBy(col("userId")).agg(min(col("rank")).as("fr"))
-      labels.select(col("userId")).distinct()
-        .join(firstHit, Seq("userId"), "left")
-        .agg(count(lit(1)).as("n_users"),
-          sum(when(col("fr").isNotNull, 1L).otherwise(0L)).as("n_hit"),
-          sum(when(col("fr").isNotNull, expr("2520 DIV fr"))
-            .otherwise(0L)).as("units"))
-        .select(col("n_users"), col("n_hit"),
-          ratio6(col("units"), lit(2520L) * col("n_users")).as("mrr_r"))
-    }),
-
-    // U4 quirk replica: reference's swapped-argument mAP (als.py:128-131
-    // passes ground truth as top_k) — deterministic sorted-label order.
-    "q_eval_map_swapped" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      Eval.referenceMapPerUserSwapped(v, rankedTop100(train), K)
-    }),
-
-    // M7: standard MAP@10 via mllib RankingMetrics (the API the reference
-    // imported then abandoned, als.py:3) — cross-checks q_eval_map_std.
-    // RDD-based → rows-only; equality with the column form asserted in
-    // scalatest.
-    "q_eval_map_mllib" -> ((s, d) => {
-      val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
-      Eval.rankingMetricsMapAtK(v, recs, 10)
-    }),
-
-    // M1-M4: ALS train→predict→RMSE (als.py:87-107). The split here is at
-    // the INTERACTION level (hash of user+item), not by movieId — an
-    // item-disjoint split makes every test item cold-start and
-    // coldStartStrategy=drop would drop all predictions (RMSE of nothing).
-    // Not SQL-expressible → rows-only check + scalatest metric bands.
-    "q_als_rmse" -> ((s, d) => {
-      val (_, test) = interactionSplit(Tables.ratings(s, d))
-      val model = alsModel(s, d,
-        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
-      Eval.rmse(Recommend.predict(model, test))
-    }),
-
-    // The COMPLETE reference lifecycle in one query (als.py:87-133):
-    // fit → recommendForAllUsers → distributed MAP@k of the recs against
-    // the held-out interactions. Rows-only (ALS factors are not
-    // SQL-expressible); the eval math itself is the oracle-verified
-    // standardMapAtK.
-    "q_als_map" -> ((s, d) => {
-      val (_, test) = interactionSplit(Tables.ratings(s, d))
-      val model = alsModel(s, d,
-        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
-      val recs = Recommend.recommendTopK(model, 10)
-        .select(col("userId"), col("movieId"), col("rank"))
-      Eval.standardMapAtK(test, recs, 10)
-    }),
-
-    // M1-M3 at the reference's EXACT flagship hyperparameters (als.py:36-46:
-    // rank=100, maxIter=3, regParam=0.15, nonnegative, coldStart=drop) —
-    // the rank=32 variants above exist for bench speed; this query closes
-    // the loop on the published config. Output carries the config columns
-    // so the claim is self-describing. Published MovieLens RMSE was
-    // 0.87–0.90 (Checkpoint_results.md:13, final_report_numbers.md:6);
-    // the synthetic ratings here have different variance, so the value
-    // band is asserted in scalatest, not against the MovieLens number.
-    "q_als_ref_rmse" -> ((s, d) => {
-      val (_, test) = interactionSplit(Tables.ratings(s, d))
-      val model = alsModel(s, d, Recommend.AlsConfig()) // reference defaults
-      Eval.rmse(Recommend.predict(model, test))
-        .select(lit(100).as("rank"), lit(3).as("max_iter"),
-          lit(0.15).as("reg_param"), round(col("rmse"), 6).as("rmse"))
-    }),
-
-    // M4: per-user top-5 recommendations, flat rows (als.py:96,120).
-    "q_als_recs" -> ((s, d) => {
-      val model = alsModel(s, d,
-        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
-      Recommend.recommendTopK(model, 5)
-        .filter(col("userId") < 100)
-        .select(col("userId"), col("movieId"), col("rank"))
-        .orderBy(col("userId"), col("rank"))
-    }),
-
-    // Item-item co-occurrence neighbors (Recommend.itemNeighbors) — the
-    // memory-based related-items baseline next to ALS, with the
-    // interaction-cut (deterministic 30-item user cap) and min-support 2
-    // bounding the quadratic expansion. Served from the per-dir
-    // materialized index (the fit/serve split: the pair-count build is
-    // priced in Bench's fit section as q_item_fit).
-    "q_item_neighbors" -> ((s, d) => {
-      itemIndex(s, d)._1.orderBy(col("item"), col("rn"))
-    }),
-
-    // Item-based CF recommendations served FROM the materialized index:
-    // each user's capped items vote for their index neighbors (summed
-    // rounded cosine — identical addends cross-engine, sum re-rounded),
-    // owned items anti-joined away, top-3 per user. Scale shape: the
-    // index is items×5 rows (AQE broadcasts it at this scale; at 100 TB
-    // it shuffles on item — both sides key-partitioned, no fan-out
-    // beyond cap×5 candidates per user); the per-user top-k window
-    // partitions on the high-cardinality userId.
-    "q_item_recs" -> ((s, d) => {
-      // the SAME interaction snapshot the index was built from — voting
-      // and exclusion must not race a fresher ratings scan (the two are
-      // one published artifact version)
-      val (idx, capped) = itemIndex(s, d)
-      // the (user, candidate) vote aggregation has mostly-unique keys
-      // (≤ cap×topK candidates per user, few repeat voters) — pin the
-      // exchange width like the fit's pair count, or AQE's byte-based
-      // coalescing folds the row-count-bound work onto a few fat tasks
-      val shuffleN = s.sessionState.conf.numShufflePartitions
-      val votes = capped.join(idx, capped("movieId") === idx("item"))
-        .repartition(shuffleN, col("userId"), col("nbr"))
-        .groupBy(col("userId"), col("nbr"))
-        .agg(round(sum(col("cosine")), 6).as("score"),
-          count(lit(1)).as("n_voters"))
-        .withColumnRenamed("nbr", "movieId")
-      val wr = Window.partitionBy(col("userId"))
-        .orderBy(col("score").desc, col("movieId"))
-      votes.join(capped, Seq("userId", "movieId"), "left_anti")
-        // re-select: using-columns anti-join reorders the schema (r7 trap)
-        .select(col("userId"), col("movieId"), col("score"), col("n_voters"))
-        .withColumn("rn", row_number().over(wr).cast("long"))
-        .filter(col("rn") <= 3)
-        .orderBy(col("userId"), col("rn"))
-    }),
-
-    // Association rules over the served neighbor lists (a stated
-    // semantic: rules for pairs the index retained — top-5 by cosine,
-    // min-support 2): directed confidence c12/c(antecedent) and lift
-    // c12·U/(c1·c2), global top-100 by (rounded lift, antecedent,
-    // consequent) — TakeOrdered over the items×5 index, no corpus
-    // rescan beyond the artifact's own counts; U is one scalar
-    // aggregate (the pagerank-count precedent).
-    "q_item_rules" -> ((s, d) => {
-      val (idx, capped) = itemIndex(s, d)
-      val cnt = capped.groupBy(col("movieId")).agg(count(lit(1)).as("c"))
-      val nUsers = capped.select(col("userId")).distinct().count()
-      idx.select(col("item"), col("nbr"), col("c12"))
-        .join(cnt.select(col("movieId").as("item"), col("c").as("c1")),
-          Seq("item"))
-        .join(cnt.select(col("movieId").as("nbr"), col("c").as("c2")),
-          Seq("nbr"))
-        .select(col("item").as("antecedent"), col("nbr").as("consequent"),
-          col("c12"),
-          ratio6(col("c12"), col("c1")).as("confidence"),
-          ratio6(col("c12") * lit(nUsers), col("c1") * col("c2"))
-            .as("lift"))
-        .orderBy(col("lift").desc, col("antecedent"), col("consequent"))
-        .limit(100)
-    }),
-
-    // Deterministic negative sampling (the implicit-feedback training-set
-    // builder every ranker/retrieval fit needs): per user, k=3 items the
-    // user did NOT interact with, drawn from a BOUNDED candidate pool —
-    // the top-50 most-popular items (TakeOrdered, broadcast). The pool
-    // bound is the scale posture: naive "catalog minus seen" is a
-    // users×items cross product (quadratic — the industry failure mode);
-    // here the cross join is O(users·50) with the pool broadcast, the
-    // anti-join against observed pairs is the one real shuffle, and the
-    // per-user pick is a user-PARTITIONED window. The pick is a pure
-    // Lehmer-style hash of (user, item) — exact int64 arithmetic on both
-    // engines (no engine-specific hash, no RNG), so the sample is
-    // reproducible and the oracle computes the identical set.
-    "q_negative_sample" -> ((s, d) => {
-      // pin the observed-pairs relation: THREE consumers read it (the
-      // popularity pool, the user dimension, the anti-join probe), and
-      // unpinned each re-runs the orders⋈lineitem join + distinct with
-      // its own column pruning (6 parquet scans in the plan); one
-      // materialized (userId, movieId) relation is strictly narrower
-      val obs = Tables.ratings(s, d)
-        .select(col("userId"), col("movieId")).distinct()
-        .localCheckpoint(true)
-      val pool = obs.groupBy(col("movieId")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("movieId")).limit(50)
-        .select(col("movieId").as("item"))
-      // repartition pin (the Dedup.prefixOf discipline): the user
-      // dimension's distinct exchange is byte-tiny, so AQE coalesced it
-      // to ONE partition and the ×50 pool expansion + anti-probe hash
-      // ran single-task (measured r17: a 287 ms 1-task job)
-      val shuffleN = s.sessionState.conf.numShufflePartitions
-      val cand = obs.select(col("userId")).distinct()
-        .repartition(shuffleN, col("userId"))
-        .crossJoin(broadcast(pool))
-      val neg = cand.join(obs
-          .select(col("userId"), col("movieId").as("item")),
-        Seq("userId", "item"), "left_anti")
-      val h = (col("userId") * lit(1000003L) + col("item")) % lit(2147483647L) *
-        lit(16807L) % lit(2147483647L)
-      val w = Window.partitionBy(col("userId")).orderBy(h, col("item"))
-      neg.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("userId"), col("item"), col("rnk"))
-        .orderBy(col("userId"), col("rnk"))
-    }),
-
-    // Temporal train/test split with a leakage report (the time-based
-    // split an offline-eval pipeline must use instead of a random one —
-    // random splits leak future interactions into training): interactions
-    // before the cutoff train, the rest test, plus the COLD-START counts
-    // (users/items whose first interaction is after the cutoff — the
-    // rows a model fit on train can only serve by fallback). Cold
-    // entities come from a per-entity MIN(ts) aggregate — no anti-join
-    // needed, two distributed aggregations and two 1-row scalar attaches.
-    "q_split_temporal" -> ((s, d) => {
-      val cutoff = lit("1999-01-01").cast("timestamp")
-      val r = Tables.ratings(s, d)
-      val lab = r.withColumn("split",
-        when(col("ts") < cutoff, "train").otherwise("test"))
-      val stats = lab.groupBy(col("split")).agg(
-        count(lit(1)).as("n_ratings"),
-        countDistinct(col("userId")).as("n_users"),
-        countDistinct(col("movieId")).as("n_items"))
-      val coldU = r.groupBy(col("userId")).agg(min(col("ts")).as("f"))
-        .agg(sum(when(col("f") >= cutoff, 1L).otherwise(0L))
-          .cast("long").as("n_cold_users"))
-      val coldI = r.groupBy(col("movieId")).agg(min(col("ts")).as("f"))
-        .agg(sum(when(col("f") >= cutoff, 1L).otherwise(0L))
-          .cast("long").as("n_cold_items"))
-      val cold = coldU.crossJoin(coldI).withColumn("split", lit("test"))
-      stats.join(cold, Seq("split"), "left")
-        .na.fill(0L, Seq("n_cold_users", "n_cold_items"))
-        .select(col("split"), col("n_ratings"), col("n_users"),
-          col("n_items"), col("n_cold_users"), col("n_cold_items"))
-        .orderBy(col("split"))
-    }),
-
-    // Quantile normalization (the cross-source feature-alignment pass:
-    // map each source's n_chars distribution onto the POOLED
-    // distribution, so a length threshold means the same thing for
-    // every source). Exact by construction: rank within source r →
-    // pooled order statistic at position ceil(r·N/n_s), all integer
-    // arithmetic with a full (value, doc_id) tiebreak. Scale shape:
-    // NO per-source window anywhere (the q_fuzzy_snm 92-task lesson) —
-    // ranks come from Rank.withGlobalRank's range-partitioned global
-    // sort on (source, n_chars, doc_id); the per-source offsets are a
-    // bounded ≤|sources| broadcast; the pooled lookup is a second
-    // range-sorted rank joined on position. The r·N product is LONG —
-    // exact to ~3e9 rows·rows; past that the decimal(38,0) twin of this
-    // arithmetic is the drop-in (documented, not speculative code).
-    "q_quantile_norm" -> ((s, d) =>
-      graft.operators.Rank.quantileNormalize(
-        Tables.documents(s, d), "source", "n_chars", "doc_id", "norm_chars")
-        .orderBy(col("doc_id"))),
-
-    // Systematic sampling (every 25th row of the (n_chars, doc_id)
-    // total order — the equal-spaced design that guarantees coverage of
-    // the whole length distribution, unlike a Bernoulli draw): global
-    // rank via Rank.withGlobalRank (range-partitioned, never a
-    // single-partition window), keep rank ≡ 1 (mod 25). Deterministic —
-    // no RNG — so it value-matches cross-engine, unlike the seeded
-    // samples (SURVEY §7.4 risk 1).
-    "q_sample_systematic" -> ((s, d) => {
-      val (ranked, _) = graft.operators.Rank.withGlobalRank(
-        Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-        "grank", col("n_chars"), col("doc_id"))
-      ranked.filter(pmod(col("grank"), lit(25)) === 1)
-        .select(col("doc_id"), col("n_chars"), col("grank"))
-        .orderBy(col("grank"))
-    }),
-
-    // Deterministic fixed-k-per-group reservoir (the ML-pipeline
-    // sampler the fraction-based q_hash_sample isn't: exactly 10 docs
-    // per source however large the group): rank each doc by its mix64
-    // key (the SQL-replayable house hash — bootstrap/walk machinery)
-    // inside a per-source window, keep rank ≤ 10. Equivalent to
-    // single-pass weighted-reservoir with uniform keys; deterministic,
-    // so it VALUE-matches cross-engine, unlike seeded sampleBy.
-    "q_sample_reservoir" -> ((s, d) => {
-      val z = graft.functions.TextHashFunctions.mix64(
-        col("doc_id"), lit(0L), lit(0L), seed = 99)
-      val docs = Tables.documents(s, d)
-        .select(col("source"), col("doc_id"), z.as("zs"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("zs"), col("doc_id"))
-      docs.withColumn("rnk",
-          org.apache.spark.sql.functions.row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 10)
-        .select(col("source"), col("rnk"), col("doc_id"), col("zs"))
-        .orderBy(col("source"), col("rnk"))
-    })
-  )
-
   /** At-rest item-neighbor index per scale dir — published through the
     * crash-safe versioned artifact store (Artifacts.saveItemIndex:
     * `_LATEST`-resolved, index + its source interaction snapshot as ONE
@@ -584,24 +160,97 @@ object PipelineQueries {
        |SELECT ROUND(AVG(COALESCE(s, 0.0)/LEAST(n, 10)), 6) AS $alias
        |FROM nlab LEFT JOIN sp USING (userId)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q_split_hash" ->
+  val declarations: Seq[Query] = Seq(
+    // Deterministic hash-split label counts (scale-safe replacement for the
+    // reference's driver-built IN-lists, split_script.py:27-40).
+    Query("q_split_hash", (s, d) => {
+      Split.labelByHash(Tables.ratings(s, d), "movieId")
+        .groupBy(col("train_val_test"))
+        .agg(count(lit(1)).as("n"), countDistinct(col("movieId")).as("n_movies"))
+        .orderBy(col("train_val_test"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql}
          |SELECT CASE WHEN movieId % 10 < 6 THEN 'train'
          |            WHEN movieId % 10 < 8 THEN 'validation'
          |            ELSE 'test' END AS train_val_test,
          |  COUNT(*) AS n, COUNT(DISTINCT movieId) AS n_movies
-         |FROM ratings GROUP BY 1 ORDER BY train_val_test""".stripMargin,
+         |FROM ratings GROUP BY 1 ORDER BY train_val_test""".stripMargin)),
 
-    "q_hash_sample" ->
+    // Reference v2 split (seeded per-user 25%/25%, new_split_script.py) —
+    // distributed; verified by its invariants (1 row, overlaps must be 0;
+    // no value oracle possible for seeded sampling).
+    Query("q_split_v2_report", (s, d) => {
+      val r = Tables.ratings(s, d)
+        .groupBy(col("userId"), col("movieId")).agg(avg(col("rating")).as("rating"))
+      val (train, validation, test) = Split.splitV2(r, 0.25, 1234L)
+      Split.disjointnessReport(train, validation, test, Seq("userId", "movieId"))
+    }, Exempt("seeded per-user sample; disjointness invariants (1 row, zeros)"), headline = false),
+
+    // T1: stratified sampleBy + T2 exceptAll (split_script.py v1 shape),
+    // seeded — invariant report: holdout + sample partition the labeled set.
+    // Built directly on the lineitem scan (no shuffle upstream of sampleBy)
+    // so the seeded sample is stable under lazy re-evaluation.
+    Query("q_split_v1_report", (s, d) => {
+      val labeled = Split.labelByHash(
+        Tables.lineitem(s, d).select(col("l_partkey").as("movieId"),
+          col("l_orderkey"), col("l_linenumber")), "movieId")
+      val sampled = Split.sampleByLabel(labeled, "train_val_test",
+        Map("train" -> 1.0, "validation" -> 0.3, "test" -> 0.3), 1234L)
+      val holdout = labeled.exceptAll(sampled)
+      val spark = s
+      import spark.implicits._
+      sampled.agg(count(lit(1)).as("n_sampled"))
+        .crossJoin(holdout.agg(count(lit(1)).as("n_holdout")))
+        .crossJoin(labeled.agg(count(lit(1)).as("n_total")))
+        .select(col("n_sampled"), col("n_holdout"), col("n_total"),
+          (col("n_sampled") + col("n_holdout") - col("n_total")).as("partition_violation"))
+    }, Exempt(
+      "seeded sampleBy never value-matches cross-engine; partition invariant"), headline = false),
+
+    // Deterministic arithmetic-hash sampling (Split.hashSample): ~10% of
+    // ratings by (userId, movieId) content — reproducible in ANSI SQL, so
+    // the SAMPLED pipeline itself is oracle-checked (impossible with
+    // rand/sample, SURVEY §7.4 risk 1).
+    Query("q_hash_sample", (s, d) => {
+      Split.hashSample(Tables.ratings(s, d),
+        Seq(col("userId"), col("movieId")), 0.1)
+        .agg(count(lit(1)).as("n"),
+          countDistinct(col("userId")).as("n_users"),
+          round(sum(col("rating")), 6).as("sum_rating"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql}
          |SELECT COUNT(*) AS n,
          |  COUNT(DISTINCT userId) AS n_users,
          |  ROUND(SUM(rating), 6) AS sum_rating
          |FROM ratings
-         |WHERE (userId * 2654435761 + movieId * 40503) % 10000 < 1000""".stripMargin,
+         |WHERE (userId * 2654435761 + movieId * 40503) % 10000 < 1000""".stripMargin),
+      headline = false),
 
-    "q_cogroup" ->
+    // Typed COGROUP: per-user merge of two differently-shaped relations
+    // (ratings ⊞ events) in one custom function — the Scala analogue of
+    // applyInPandas over cogrouped frames. Both sides shuffle once on the
+    // key; the merge closure sees each user's rows from both inputs.
+    // Deterministic outputs (counts + sums) → DuckDB-oracled.
+    Query("q_cogroup", (s, d) => {
+      val spark = s
+      import spark.implicits._
+      val r = Tables.ratings(s, d).select(col("userId"), col("rating"))
+        .as[(Long, Double)].groupByKey(_._1)
+      val e = Tables.events(s, d)
+        .select(col("user_id"), col("value")).as[(Long, Double)]
+        .groupByKey(_._1)
+      r.cogroup(e) { (uid, ratings, events) =>
+        var nr = 0L; var sr = 0.0
+        ratings.foreach { t => nr += 1; sr += t._2 }
+        var ne = 0L; var se = 0.0
+        events.foreach { t => ne += 1; se += t._2 }
+        Iterator((uid, nr, sr, ne, se))
+      }.toDF("userId", "n_ratings", "sum_rating_raw", "n_events", "sum_value_raw")
+        .select(col("userId"), col("n_ratings"),
+          round(col("sum_rating_raw"), 6).as("sum_rating"),
+          col("n_events"), round(col("sum_value_raw"), 6).as("sum_value"))
+        .orderBy(col("userId"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql},
          |r AS (SELECT userId, COUNT(*) AS n_ratings,
          |        ROUND(SUM(rating), 6) AS sum_rating
@@ -615,22 +264,35 @@ object PipelineQueries {
          |  COALESCE(n_events, 0) AS n_events,
          |  COALESCE(sum_value, CAST(0.0 AS DOUBLE)) AS sum_value
          |FROM r FULL OUTER JOIN e ON r.userId = e.userId
-         |ORDER BY userId""".stripMargin,
+         |ORDER BY userId""".stripMargin), headline = false),
 
-    "q_eval_hit_ratio" ->
+    // U3 global hit-ratio of popularity recs (popularity_model.py:67,76).
+    Query("q_eval_hit_ratio", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      Eval.hitRatioGlobal(v, rankedTop100(train))
+    }, Sql(
       s"""WITH $splitSql,
          |$rankedTop100Sql
          |SELECT ROUND(AVG(CASE WHEN movieId IN (SELECT movieId FROM top100)
          |                      THEN 1.0 ELSE 0.0 END), 6) AS hit_ratio
-         |FROM val""".stripMargin,
+         |FROM val""".stripMargin)),
 
-    "q_eval_map_ref" ->
+    // U2 global reference-mAP (popularity_model.py:68,77 — quirky formula
+    // replicated exactly).
+    Query("q_eval_map_ref", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      Eval.referenceMapGlobal(v, rankedTop100(train), K)
+    }, Sql(
       s"""WITH $splitSql,
          |$rankedTop100Sql
          |SELECT ROUND(AVG(COALESCE((1.0 + 1.0/t.rank)/$K.0, 0.0)), 6) AS map_ref
-         |FROM val v LEFT JOIN top100 t ON v.movieId = t.movieId""".stripMargin,
+         |FROM val v LEFT JOIN top100 t ON v.movieId = t.movieId""".stripMargin), headline = false),
 
-    "q_eval_map_user" ->
+    // U2 per-user reference-mAP (the ALS eval path als.py:115-133).
+    Query("q_eval_map_user", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      Eval.referenceMapPerUser(v, rankedTop100(train), K)
+    }, Sql(
       s"""WITH $splitSql,
          |$rankedTop100Sql,
          |per_user AS (
@@ -638,9 +300,35 @@ object PipelineQueries {
          |  FROM val v LEFT JOIN top100 t ON v.movieId = t.movieId
          |  GROUP BY v.userId
          |)
-         |SELECT ROUND(AVG(ap), 6) AS map_ref_user FROM per_user""".stripMargin,
+         |SELECT ROUND(AVG(ap), 6) AS map_ref_user FROM per_user""".stripMargin)),
 
-    "q_eval_precision_k" ->
+    // Standard MAP@10 (M7 cross-check): per-user recs = user's own top-10
+    // train items — deterministic, exercises window top-k + hit ranking.
+    Query("q_eval_map_std", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      val dedup = train.groupBy(col("userId"), col("movieId"))
+        .agg(avg(col("rating")).as("r"))
+      val recs = Recommend.topKPerKey(dedup, "userId",
+        Seq(col("r").desc, col("movieId")), 10)
+        .select(col("userId"), col("movieId"), col("rank"))
+      Eval.standardMapAtK(v, recs, 10)
+    }, Sql(mapAtKOracle("map_at_k"))),
+
+    // precision@k (extension.py:167,174,181 — the one reference-published
+    // metric family previously without an engine twin): per-user form at
+    // k=10 over the deterministic per-user top-10 recs, global form at
+    // k=100 over the popularity top-100 vs the validation slice. One row,
+    // both columns, fully DuckDB-oracled.
+    Query("q_eval_precision_k", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      val dedup = train.groupBy(col("userId"), col("movieId"))
+        .agg(avg(col("rating")).as("r"))
+      val recs = Recommend.topKPerKey(dedup, "userId",
+        Seq(col("r").desc, col("movieId")), 10)
+        .select(col("userId"), col("movieId"), col("rank"))
+      Eval.precisionAtKPerUser(v, recs, 10)
+        .crossJoin(Eval.precisionAtKGlobal(v, rankedTop100(train), K))
+    }, Sql(
       s"""WITH $splitSql,
          |$rankedTop100Sql,
          |dedup AS (
@@ -668,57 +356,34 @@ object PipelineQueries {
          |  SELECT ROUND(COUNT(DISTINCT v.movieId) / $K.0, 6) AS precision_global
          |  FROM val v JOIN top100 t ON v.movieId = t.movieId
          |)
-         |SELECT precision_user, precision_global FROM pu, pg""".stripMargin,
+         |SELECT precision_user, precision_global FROM pu, pg""".stripMargin)),
 
-    "q_eval_map_swapped" ->
-      s"""WITH $splitSql,
-         |$rankedTop100Sql,
-         |label_ranked AS (
-         |  SELECT userId, movieId,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY userId ORDER BY movieId) AS BIGINT) AS lrank
-         |  FROM (SELECT DISTINCT userId, movieId FROM val)
-         |),
-         |nlab AS (SELECT userId, COUNT(*) AS n_labels FROM label_ranked GROUP BY userId),
-         |hits AS (
-         |  SELECT l.userId, SUM(1.0 + 1.0/l.lrank) AS sum_raw
-         |  FROM top100 t JOIN label_ranked l ON t.movieId = l.movieId
-         |  GROUP BY l.userId
-         |)
-         |SELECT ROUND(AVG(COALESCE(h.sum_raw, 0.0) / n.n_labels / $K.0), 6) AS map_ref_swapped
-         |FROM nlab n LEFT JOIN hits h ON n.userId = h.userId""".stripMargin,
-
-    "q_eval_map_std" -> mapAtKOracle("map_at_k"),
-
-    // the mix64 HUGEINT replay (bootstrap/walk machinery) + the same
-    // per-source rank
-    "q_sample_reservoir" -> {
-      val mM = "18446744073709551616"
-      val seedT = java.lang.Long.toUnsignedString(99L * 0x9e3779b97f4a7c15L)
-      def mm64(a: String, b: String) = TextQueries.mm64(a, b)
-      s"""WITH b1 AS (
-         |  SELECT source, doc_id,
-         |    ($seedT + ${mm64("CAST(doc_id AS HUGEINT)",
-                "14029467366897019727")} + 0 + 0) % $mM AS z0
-         |  FROM documents),
-         |b2 AS (SELECT *, ${mm64("xor(z0, z0 // 1073741824)",
-              "13787848793156543929")} AS z1 FROM b1),
-         |b3 AS (SELECT *, ${mm64("xor(z1, z1 // 134217728)",
-              "10723151780598845931")} AS z2 FROM b2),
-         |b4 AS (SELECT *, xor(z2, z2 // 2147483648) AS zz FROM b3),
-         |b5 AS (SELECT source, doc_id,
-         |    CAST(CASE WHEN zz >= 9223372036854775808
-         |      THEN zz - $mM ELSE zz END AS BIGINT) AS zs
-         |  FROM b4),
-         |r AS (SELECT source, doc_id, zs,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY source
-         |      ORDER BY zs, doc_id) AS BIGINT) AS rnk
-         |  FROM b5)
-         |SELECT source, rnk, doc_id, zs FROM r WHERE rnk <= 10
-         |ORDER BY source, rnk""".stripMargin
-    },
-
-    // the same recs/labels relations; 2520//fr integer reciprocals
-    "q_eval_mrr" ->
+    // Mean reciprocal rank @10 (the eval-family member MAP/hit/precision
+    // lacked) — EXACT: 1/rank for rank ∈ 1..10 carried as the integer
+    // 2520/rank (2520 = lcm(1..10), so every reciprocal is a whole
+    // number of 1/2520 units); MRR = Σ units / (2520·n_users) is ONE
+    // exact integer ratio (ratio6) — zero float ops. Users with labels
+    // but no hit contribute 0 (the standard convention).
+    Query("q_eval_mrr", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      val dedup = train.groupBy(col("userId"), col("movieId"))
+        .agg(avg(col("rating")).as("r"))
+      val recs = Recommend.topKPerKey(dedup, "userId",
+        Seq(col("r").desc, col("movieId")), 10)
+        .select(col("userId"), col("movieId"), col("rank"))
+      val labels = v.select(col("userId"), col("movieId")).distinct()
+      val firstHit = recs.join(labels, Seq("userId", "movieId"))
+        .groupBy(col("userId")).agg(min(col("rank")).as("fr"))
+      labels.select(col("userId")).distinct()
+        .join(firstHit, Seq("userId"), "left")
+        .agg(count(lit(1)).as("n_users"),
+          sum(when(col("fr").isNotNull, 1L).otherwise(0L)).as("n_hit"),
+          sum(when(col("fr").isNotNull, expr("2520 DIV fr"))
+            .otherwise(0L)).as("units"))
+        .select(col("n_users"), col("n_hit"),
+          ratio6(col("units"), lit(2520L) * col("n_users")).as("mrr_r"))
+    }, Sql(
+      // the same recs/labels relations; 2520//fr integer reciprocals
       s"""WITH $splitSql,
          |dedup AS (
          |  SELECT userId, movieId, AVG(rating) AS r
@@ -743,27 +408,160 @@ object PipelineQueries {
          |  ${ratio6Sql(
              "SUM(CASE WHEN fr IS NOT NULL THEN 2520 // fr ELSE 0 END)",
              "2520 * COUNT(*)")} AS mrr_r
-         |FROM u LEFT JOIN fh USING (userId)""".stripMargin,
+         |FROM u LEFT JOIN fh USING (userId)""".stripMargin)),
 
-    // DE-EXEMPTED r12: the RDD RankingMetrics form is asserted EQUAL to
-    // the DataFrame standardMapAtK in EvalSpec, so it takes the SAME
-    // oracle (the q_decontaminate_bloom same-oracle pattern) modulo the
-    // output alias — the gate now checks the equality cross-engine too
-    "q_eval_map_mllib" -> mapAtKOracle("map_at_k_mllib"),
+    // U4 quirk replica: reference's swapped-argument mAP (als.py:128-131
+    // passes ground truth as top_k) — deterministic sorted-label order.
+    Query("q_eval_map_swapped", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      Eval.referenceMapPerUserSwapped(v, rankedTop100(train), K)
+    }, Sql(
+      s"""WITH $splitSql,
+         |$rankedTop100Sql,
+         |label_ranked AS (
+         |  SELECT userId, movieId,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY userId ORDER BY movieId) AS BIGINT) AS lrank
+         |  FROM (SELECT DISTINCT userId, movieId FROM val)
+         |),
+         |nlab AS (SELECT userId, COUNT(*) AS n_labels FROM label_ranked GROUP BY userId),
+         |hits AS (
+         |  SELECT l.userId, SUM(1.0 + 1.0/l.lrank) AS sum_raw
+         |  FROM top100 t JOIN label_ranked l ON t.movieId = l.movieId
+         |  GROUP BY l.userId
+         |)
+         |SELECT ROUND(AVG(COALESCE(h.sum_raw, 0.0) / n.n_labels / $K.0), 6) AS map_ref_swapped
+         |FROM nlab n LEFT JOIN hits h ON n.userId = h.userId""".stripMargin), headline = false),
 
-    // the cap (30 smallest movieIds per user) and min-support (>= 2
-    // co-occurrences) are stated semantics both engines implement
-    // identically — counts are post-cap on both sides
-    "q_item_neighbors" ->
+    // M7: standard MAP@10 via mllib RankingMetrics (the API the reference
+    // imported then abandoned, als.py:3) — cross-checks q_eval_map_std.
+    // RDD-based → rows-only; equality with the column form asserted in
+    // scalatest.
+    Query("q_eval_map_mllib", (s, d) => {
+      val (train, v, _) = hashSplit(Tables.ratings(s, d))
+      val dedup = train.groupBy(col("userId"), col("movieId"))
+        .agg(avg(col("rating")).as("r"))
+      val recs = Recommend.topKPerKey(dedup, "userId",
+        Seq(col("r").desc, col("movieId")), 10)
+        .select(col("userId"), col("movieId"), col("rank"))
+      Eval.rankingMetricsMapAtK(v, recs, 10)
+    }, Sql(
+      // DE-EXEMPTED r12: the RDD RankingMetrics form is asserted EQUAL to
+      // the DataFrame standardMapAtK in EvalSpec, so it takes the SAME
+      // oracle (the q_decontaminate_bloom same-oracle pattern) modulo the
+      // output alias — the gate now checks the equality cross-engine too
+      mapAtKOracle("map_at_k_mllib")), headline = false),
+
+    // M1-M4: ALS train→predict→RMSE (als.py:87-107). The split here is at
+    // the INTERACTION level (hash of user+item), not by movieId — an
+    // item-disjoint split makes every test item cold-start and
+    // coldStartStrategy=drop would drop all predictions (RMSE of nothing).
+    // Not SQL-expressible → rows-only check + scalatest metric bands.
+    Query("q_als_rmse", (s, d) => {
+      val (_, test) = interactionSplit(Tables.ratings(s, d))
+      val model = alsModel(s, d,
+        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
+      Eval.rmse(Recommend.predict(model, test))
+    }, Exempt(
+      "ALS factors not SQL-expressible; RMSE band in RecommendSpec/IngestSpec"), headline = false),
+
+    // The COMPLETE reference lifecycle in one query (als.py:87-133):
+    // fit → recommendForAllUsers → distributed MAP@k of the recs against
+    // the held-out interactions. Rows-only (ALS factors are not
+    // SQL-expressible); the eval math itself is the oracle-verified
+    // standardMapAtK.
+    Query("q_als_map", (s, d) => {
+      val (_, test) = interactionSplit(Tables.ratings(s, d))
+      val model = alsModel(s, d,
+        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
+      val recs = Recommend.recommendTopK(model, 10)
+        .select(col("userId"), col("movieId"), col("rank"))
+      Eval.standardMapAtK(test, recs, 10)
+    }, Exempt(
+      "ALS lifecycle; MAP math itself oracled via q_eval_map_std, band in IngestSpec"),
+      headline = false),
+
+    // M1-M3 at the reference's EXACT flagship hyperparameters (als.py:36-46:
+    // rank=100, maxIter=3, regParam=0.15, nonnegative, coldStart=drop) —
+    // the rank=32 variants above exist for bench speed; this query closes
+    // the loop on the published config. Output carries the config columns
+    // so the claim is self-describing. Published MovieLens RMSE was
+    // 0.87–0.90 (Checkpoint_results.md:13, final_report_numbers.md:6);
+    // the synthetic ratings here have different variance, so the value
+    // band is asserted in scalatest, not against the MovieLens number.
+    Query("q_als_ref_rmse", (s, d) => {
+      val (_, test) = interactionSplit(Tables.ratings(s, d))
+      val model = alsModel(s, d, Recommend.AlsConfig()) // reference defaults
+      Eval.rmse(Recommend.predict(model, test))
+        .select(lit(100).as("rank"), lit(3).as("max_iter"),
+          lit(0.15).as("reg_param"), round(col("rmse"), 6).as("rmse"))
+    }, Exempt(
+      "ALS at flagship config; config columns exact + RMSE band in IngestSpec"), headline = false),
+
+    // M4: per-user top-5 recommendations, flat rows (als.py:96,120).
+    Query("q_als_recs", (s, d) => {
+      val model = alsModel(s, d,
+        Recommend.AlsConfig(rank = 32, maxIter = 3, regParam = 0.15))
+      Recommend.recommendTopK(model, 5)
+        .filter(col("userId") < 100)
+        .select(col("userId"), col("movieId"), col("rank"))
+        .orderBy(col("userId"), col("rank"))
+    }, Exempt(
+      "ALS factors not SQL-expressible; block-structure recall in RecommendSpec"),
+      headline = false),
+
+    // Item-item co-occurrence neighbors (Recommend.itemNeighbors) — the
+    // memory-based related-items baseline next to ALS, with the
+    // interaction-cut (deterministic 30-item user cap) and min-support 2
+    // bounding the quadratic expansion. Served from the per-dir
+    // materialized index (the fit/serve split: the pair-count build is
+    // priced in Bench's fit section as q_item_fit).
+    Query("q_item_neighbors", (s, d) => {
+      itemIndex(s, d)._1.orderBy(col("item"), col("rn"))
+    }, Sql(
+      // the cap (30 smallest movieIds per user) and min-support (>= 2
+      // co-occurrences) are stated semantics both engines implement
+      // identically — counts are post-cap on both sides
       s"""WITH ${Tables.ratingsSql},
          |$itemIndexCtes
          |SELECT item, nbr, c12, cosine, jaccard, rn
-         |FROM idx ORDER BY item, rn""".stripMargin,
+         |FROM idx ORDER BY item, rn""".stripMargin)),
 
-    // item-based CF serving: each user's capped items vote for their
-    // index neighbors (summed rounded cosine — identical addends on
-    // both engines), owned items excluded, top-3 per user
-    "q_item_recs" ->
+    // Item-based CF recommendations served FROM the materialized index:
+    // each user's capped items vote for their index neighbors (summed
+    // rounded cosine — identical addends cross-engine, sum re-rounded),
+    // owned items anti-joined away, top-3 per user. Scale shape: the
+    // index is items×5 rows (AQE broadcasts it at this scale; at 100 TB
+    // it shuffles on item — both sides key-partitioned, no fan-out
+    // beyond cap×5 candidates per user); the per-user top-k window
+    // partitions on the high-cardinality userId.
+    Query("q_item_recs", (s, d) => {
+      // the SAME interaction snapshot the index was built from — voting
+      // and exclusion must not race a fresher ratings scan (the two are
+      // one published artifact version)
+      val (idx, capped) = itemIndex(s, d)
+      // the (user, candidate) vote aggregation has mostly-unique keys
+      // (≤ cap×topK candidates per user, few repeat voters) — pin the
+      // exchange width like the fit's pair count, or AQE's byte-based
+      // coalescing folds the row-count-bound work onto a few fat tasks
+      val shuffleN = s.sessionState.conf.numShufflePartitions
+      val votes = capped.join(idx, capped("movieId") === idx("item"))
+        .repartition(shuffleN, col("userId"), col("nbr"))
+        .groupBy(col("userId"), col("nbr"))
+        .agg(round(sum(col("cosine")), 6).as("score"),
+          count(lit(1)).as("n_voters"))
+        .withColumnRenamed("nbr", "movieId")
+      val wr = Window.partitionBy(col("userId"))
+        .orderBy(col("score").desc, col("movieId"))
+      votes.join(capped, Seq("userId", "movieId"), "left_anti")
+        // re-select: using-columns anti-join reorders the schema (r7 trap)
+        .select(col("userId"), col("movieId"), col("score"), col("n_voters"))
+        .withColumn("rn", row_number().over(wr).cast("long"))
+        .filter(col("rn") <= 3)
+        .orderBy(col("userId"), col("rn"))
+    }, Sql(
+      // item-based CF serving: each user's capped items vote for their
+      // index neighbors (summed rounded cosine — identical addends on
+      // both engines), owned items excluded, top-3 per user
       s"""WITH ${Tables.ratingsSql},
          |$itemIndexCtes,
          |votes AS (
@@ -781,9 +579,32 @@ object PipelineQueries {
          |FROM (SELECT *, ROW_NUMBER() OVER (
          |        PARTITION BY userId ORDER BY score DESC, movieId) AS rn
          |      FROM unseen)
-         |WHERE rn <= 3 ORDER BY userId, rn""".stripMargin,
+         |WHERE rn <= 3 ORDER BY userId, rn""".stripMargin)),
 
-    "q_item_rules" ->
+    // Association rules over the served neighbor lists (a stated
+    // semantic: rules for pairs the index retained — top-5 by cosine,
+    // min-support 2): directed confidence c12/c(antecedent) and lift
+    // c12·U/(c1·c2), global top-100 by (rounded lift, antecedent,
+    // consequent) — TakeOrdered over the items×5 index, no corpus
+    // rescan beyond the artifact's own counts; U is one scalar
+    // aggregate (the pagerank-count precedent).
+    Query("q_item_rules", (s, d) => {
+      val (idx, capped) = itemIndex(s, d)
+      val cnt = capped.groupBy(col("movieId")).agg(count(lit(1)).as("c"))
+      val nUsers = capped.select(col("userId")).distinct().count()
+      idx.select(col("item"), col("nbr"), col("c12"))
+        .join(cnt.select(col("movieId").as("item"), col("c").as("c1")),
+          Seq("item"))
+        .join(cnt.select(col("movieId").as("nbr"), col("c").as("c2")),
+          Seq("nbr"))
+        .select(col("item").as("antecedent"), col("nbr").as("consequent"),
+          col("c12"),
+          ratio6(col("c12"), col("c1")).as("confidence"),
+          ratio6(col("c12") * lit(nUsers), col("c1") * col("c2"))
+            .as("lift"))
+        .orderBy(col("lift").desc, col("antecedent"), col("consequent"))
+        .limit(100)
+    }, Sql(
       s"""WITH ${Tables.ratingsSql},
          |$itemIndexCtes,
          |u AS (SELECT CAST(COUNT(DISTINCT userId) AS BIGINT) AS nu FROM capped)
@@ -792,11 +613,53 @@ object PipelineQueries {
          |  ${ratio6Sql("c12 * (SELECT nu FROM u)", "ca.c * cb.c")} AS lift
          |FROM idx JOIN cnt ca ON idx.item = ca.movieId
          |         JOIN cnt cb ON idx.nbr = cb.movieId
-         |ORDER BY lift DESC, antecedent, consequent LIMIT 100""".stripMargin,
+         |ORDER BY lift DESC, antecedent, consequent LIMIT 100""".stripMargin)),
 
-    // pure-arithmetic hash (no engine-specific function) → the exact
-    // same per-user negative pick on both engines
-    "q_negative_sample" ->
+    // Deterministic negative sampling (the implicit-feedback training-set
+    // builder every ranker/retrieval fit needs): per user, k=3 items the
+    // user did NOT interact with, drawn from a BOUNDED candidate pool —
+    // the top-50 most-popular items (TakeOrdered, broadcast). The pool
+    // bound is the scale posture: naive "catalog minus seen" is a
+    // users×items cross product (quadratic — the industry failure mode);
+    // here the cross join is O(users·50) with the pool broadcast, the
+    // anti-join against observed pairs is the one real shuffle, and the
+    // per-user pick is a user-PARTITIONED window. The pick is a pure
+    // Lehmer-style hash of (user, item) — exact int64 arithmetic on both
+    // engines (no engine-specific hash, no RNG), so the sample is
+    // reproducible and the oracle computes the identical set.
+    Query("q_negative_sample", (s, d) => {
+      // pin the observed-pairs relation: THREE consumers read it (the
+      // popularity pool, the user dimension, the anti-join probe), and
+      // unpinned each re-runs the orders⋈lineitem join + distinct with
+      // its own column pruning (6 parquet scans in the plan); one
+      // materialized (userId, movieId) relation is strictly narrower
+      val obs = Tables.ratings(s, d)
+        .select(col("userId"), col("movieId")).distinct()
+        .localCheckpoint(true)
+      val pool = obs.groupBy(col("movieId")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("movieId")).limit(50)
+        .select(col("movieId").as("item"))
+      // repartition pin (the Dedup.prefixOf discipline): the user
+      // dimension's distinct exchange is byte-tiny, so AQE coalesced it
+      // to ONE partition and the ×50 pool expansion + anti-probe hash
+      // ran single-task (measured r17: a 287 ms 1-task job)
+      val shuffleN = s.sessionState.conf.numShufflePartitions
+      val cand = obs.select(col("userId")).distinct()
+        .repartition(shuffleN, col("userId"))
+        .crossJoin(broadcast(pool))
+      val neg = cand.join(obs
+          .select(col("userId"), col("movieId").as("item")),
+        Seq("userId", "item"), "left_anti")
+      val h = (col("userId") * lit(1000003L) + col("item")) % lit(2147483647L) *
+        lit(16807L) % lit(2147483647L)
+      val w = Window.partitionBy(col("userId")).orderBy(h, col("item"))
+      neg.withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 3)
+        .select(col("userId"), col("item"), col("rnk"))
+        .orderBy(col("userId"), col("rnk"))
+    }, Sql(
+      // pure-arithmetic hash (no engine-specific function) → the exact
+      // same per-user negative pick on both engines
       s"""WITH ${Tables.ratingsSql},
          |obs AS (SELECT DISTINCT userId, movieId FROM ratings),
          |pool AS (
@@ -818,9 +681,38 @@ object PipelineQueries {
          |  FROM neg
          |)
          |SELECT userId, item, CAST(rnk AS BIGINT) AS rnk FROM rn
-         |WHERE rnk <= 3 ORDER BY userId, rnk""".stripMargin,
+         |WHERE rnk <= 3 ORDER BY userId, rnk""".stripMargin)),
 
-    "q_split_temporal" ->
+    // Temporal train/test split with a leakage report (the time-based
+    // split an offline-eval pipeline must use instead of a random one —
+    // random splits leak future interactions into training): interactions
+    // before the cutoff train, the rest test, plus the COLD-START counts
+    // (users/items whose first interaction is after the cutoff — the
+    // rows a model fit on train can only serve by fallback). Cold
+    // entities come from a per-entity MIN(ts) aggregate — no anti-join
+    // needed, two distributed aggregations and two 1-row scalar attaches.
+    Query("q_split_temporal", (s, d) => {
+      val cutoff = lit("1999-01-01").cast("timestamp")
+      val r = Tables.ratings(s, d)
+      val lab = r.withColumn("split",
+        when(col("ts") < cutoff, "train").otherwise("test"))
+      val stats = lab.groupBy(col("split")).agg(
+        count(lit(1)).as("n_ratings"),
+        countDistinct(col("userId")).as("n_users"),
+        countDistinct(col("movieId")).as("n_items"))
+      val coldU = r.groupBy(col("userId")).agg(min(col("ts")).as("f"))
+        .agg(sum(when(col("f") >= cutoff, 1L).otherwise(0L))
+          .cast("long").as("n_cold_users"))
+      val coldI = r.groupBy(col("movieId")).agg(min(col("ts")).as("f"))
+        .agg(sum(when(col("f") >= cutoff, 1L).otherwise(0L))
+          .cast("long").as("n_cold_items"))
+      val cold = coldU.crossJoin(coldI).withColumn("split", lit("test"))
+      stats.join(cold, Seq("split"), "left")
+        .na.fill(0L, Seq("n_cold_users", "n_cold_items"))
+        .select(col("split"), col("n_ratings"), col("n_users"),
+          col("n_items"), col("n_cold_users"), col("n_cold_items"))
+        .orderBy(col("split"))
+    }, Sql(
       s"""WITH ${Tables.ratingsSql},
          |lab AS (
          |  SELECT userId, movieId,
@@ -846,21 +738,29 @@ object PipelineQueries {
          |       ELSE 0 END AS n_cold_users,
          |  CASE WHEN split = 'test' THEN (SELECT n FROM ci)
          |       ELSE 0 END AS n_cold_items
-         |FROM s ORDER BY split""".stripMargin,
+         |FROM s ORDER BY split""".stripMargin)),
 
-    // every 25th row of the same total order
-    "q_sample_systematic" ->
-      """WITH rk AS (
-        |  SELECT doc_id, n_chars,
-        |    ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS grank
-        |  FROM documents)
-        |SELECT doc_id, n_chars, grank
-        |FROM rk WHERE grank % 25 = 1 ORDER BY grank""".stripMargin,
-
-    // per-source rank → pooled order statistic at ceil(r·N/n_s);
-    // // is DuckDB's floor division — positives, so it equals Spark's
-    // truncating `div`
-    "q_quantile_norm" ->
+    // Quantile normalization (the cross-source feature-alignment pass:
+    // map each source's n_chars distribution onto the POOLED
+    // distribution, so a length threshold means the same thing for
+    // every source). Exact by construction: rank within source r →
+    // pooled order statistic at position ceil(r·N/n_s), all integer
+    // arithmetic with a full (value, doc_id) tiebreak. Scale shape:
+    // NO per-source window anywhere (the q_fuzzy_snm 92-task lesson) —
+    // ranks come from Rank.withGlobalRank's range-partitioned global
+    // sort on (source, n_chars, doc_id); the per-source offsets are a
+    // bounded ≤|sources| broadcast; the pooled lookup is a second
+    // range-sorted rank joined on position. The r·N product is LONG —
+    // exact to ~3e9 rows·rows; past that the decimal(38,0) twin of this
+    // arithmetic is the drop-in (documented, not speculative code).
+    Query("q_quantile_norm", (s, d) =>
+      graft.operators.Rank.quantileNormalize(
+        Tables.documents(s, d), "source", "n_chars", "doc_id", "norm_chars")
+        .orderBy(col("doc_id")),
+      Sql(
+      // per-source rank → pooled order statistic at ceil(r·N/n_s);
+      // // is DuckDB's floor division — positives, so it equals Spark's
+      // truncating `div`
       """WITH src AS (
         |  SELECT doc_id, source, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY source
@@ -875,13 +775,84 @@ object PipelineQueries {
         |SELECT s.doc_id, s.source, s.n_chars, p.pv AS norm_chars
         |FROM src s CROSS JOIN tot t
         |JOIN pooled p ON p.pr = (s.r * t.n + s.ns - 1) // s.ns
-        |ORDER BY s.doc_id""".stripMargin
+        |ORDER BY s.doc_id""".stripMargin)),
+
+    // Systematic sampling (every 25th row of the (n_chars, doc_id)
+    // total order — the equal-spaced design that guarantees coverage of
+    // the whole length distribution, unlike a Bernoulli draw): global
+    // rank via Rank.withGlobalRank (range-partitioned, never a
+    // single-partition window), keep rank ≡ 1 (mod 25). Deterministic —
+    // no RNG — so it value-matches cross-engine, unlike the seeded
+    // samples (SURVEY §7.4 risk 1).
+    Query("q_sample_systematic", (s, d) => {
+      val (ranked, _) = graft.operators.Rank.withGlobalRank(
+        Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
+        "grank", col("n_chars"), col("doc_id"))
+      ranked.filter(pmod(col("grank"), lit(25)) === 1)
+        .select(col("doc_id"), col("n_chars"), col("grank"))
+        .orderBy(col("grank"))
+    }, Sql(
+      // every 25th row of the same total order
+      """WITH rk AS (
+        |  SELECT doc_id, n_chars,
+        |    ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS grank
+        |  FROM documents)
+        |SELECT doc_id, n_chars, grank
+        |FROM rk WHERE grank % 25 = 1 ORDER BY grank""".stripMargin)),
+
+    // Deterministic fixed-k-per-group reservoir (the ML-pipeline
+    // sampler the fraction-based q_hash_sample isn't: exactly 10 docs
+    // per source however large the group): rank each doc by its mix64
+    // key (the SQL-replayable house hash — bootstrap/walk machinery)
+    // inside a per-source window, keep rank ≤ 10. Equivalent to
+    // single-pass weighted-reservoir with uniform keys; deterministic,
+    // so it VALUE-matches cross-engine, unlike seeded sampleBy.
+    Query("q_sample_reservoir", (s, d) => {
+      val z = graft.functions.TextHashFunctions.mix64(
+        col("doc_id"), lit(0L), lit(0L), seed = 99)
+      val docs = Tables.documents(s, d)
+        .select(col("source"), col("doc_id"), z.as("zs"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("zs"), col("doc_id"))
+      docs.withColumn("rnk",
+          org.apache.spark.sql.functions.row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 10)
+        .select(col("source"), col("rnk"), col("doc_id"), col("zs"))
+        .orderBy(col("source"), col("rnk"))
+    }, Sql(
+      // the mix64 HUGEINT replay (bootstrap/walk machinery) + the same
+      // per-source rank
+      {
+      val mM = "18446744073709551616"
+      val seedT = java.lang.Long.toUnsignedString(99L * 0x9e3779b97f4a7c15L)
+      def mm64(a: String, b: String) = TextQueries.mm64(a, b)
+      s"""WITH b1 AS (
+         |  SELECT source, doc_id,
+         |    ($seedT + ${mm64("CAST(doc_id AS HUGEINT)",
+                "14029467366897019727")} + 0 + 0) % $mM AS z0
+         |  FROM documents),
+         |b2 AS (SELECT *, ${mm64("xor(z0, z0 // 1073741824)",
+              "13787848793156543929")} AS z1 FROM b1),
+         |b3 AS (SELECT *, ${mm64("xor(z1, z1 // 134217728)",
+              "10723151780598845931")} AS z2 FROM b2),
+         |b4 AS (SELECT *, xor(z2, z2 // 2147483648) AS zz FROM b3),
+         |b5 AS (SELECT source, doc_id,
+         |    CAST(CASE WHEN zz >= 9223372036854775808
+         |      THEN zz - $mM ELSE zz END AS BIGINT) AS zs
+         |  FROM b4),
+         |r AS (SELECT source, doc_id, zs,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY source
+         |      ORDER BY zs, doc_id) AS BIGINT) AS rnk
+         |  FROM b5)
+         |SELECT source, rnk, doc_id, zs FROM r WHERE rnk <= 10
+         |ORDER BY source, rnk""".stripMargin
+    }))
   )
 
   /** The DuckDB twin of the [[Recommend.itemNeighbors]] build (cap 30,
     * min-support 2, top-5 by rounded cosine), shared by the index query
     * and the recs query so the two oracles can never drift. Expects the
-    * `ratings` CTE in scope. A `def`, not a `val`: `oracleSql` above
+    * `ratings` CTE in scope. A `def`, not a `val`: `declarations` above
     * interpolates it during object init, and a val declared below it
     * would still be null at that point (the TextStats clinit lesson).
     */

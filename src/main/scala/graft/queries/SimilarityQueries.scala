@@ -85,431 +85,6 @@ object SimilarityQueries {
       |  FROM e GROUP BY label, pos
       |)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // exact cosine top-5 neighbors for the first 10 vectors (custom
-    // codegen'd CosineSimilarity expression in the inner loop)
-    "q_cosine_topk" -> ((s, d) => {
-      val e = emb(s, d)
-      val q = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-      val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-        .crossJoin(q)
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("cos_r", round(cosine_similarity(col("qv"), col("cv")), 6))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_r").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // per-vector norms + global norm stats by label (L2Norm expression)
-    "q_embed_norms" -> ((s, d) => {
-      emb(s, d)
-        .select(col("label").cast("long").as("label"),
-          l2_norm(col("embedding")).as("nrm"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("nrm")), 6).as("avg_norm"),
-          round(min(col("nrm")), 6).as("min_norm"),
-          round(max(col("nrm")), 6).as("max_norm"))
-        .orderBy(col("label"))
-    }),
-
-    // LSH-bucketed ANN (scale path) — VALUE-ORACLED since r12 via the
-    // rp-signature twin (literal sign table + sequential-fold cosine:
-    // bit-identical doubles, so ranks match exactly); recall vs brute
-    // force additionally asserted in scalatest
-    "q_cosine_ann" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 5,
-        bands = 16, bandBits = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Exact KNN-Shapley data valuation (Jia et al., VLDB 2019 — the
-    // closed-form Shapley value of each TRAINING point for a K-NN
-    // classifier; public algorithm): the per-example "how much does
-    // this row help" score a curation pipeline ranks hard negatives /
-    // mislabeled candidates by. Test points = vec_id < 10 (the query-
-    // batch convention), train = the rest, K = 5, utility = label
-    // match. Per test point the train set is ranked by the EXACT
-    // unrounded cosine (the duckCosParts bit-identical twin), then the
-    // paper's recursion s_i = s_{i+1} + (1[y_i=y] − 1[y_{i+1}=y])·
-    // min(K,i)/(K·i) collapses into ONE suffix sum of per-row
-    // contributions (contrib_M = m_M/M at the far end) — computed as a
-    // RUNNING sum in rank-descending order: each contrib is a single
-    // exact-integer-over-integer division, and the running frame is the
-    // only float accumulation (engines may reassociate it — segment
-    // tree vs sequential — but the reassociation error is ~1e-13
-    // against a 5e-7 rounding half-step, so the 6dp contract holds).
-    // Scale shape: the (test × train) relation parallelizes across test
-    // points (per-test window partitions — never a global sort); the
-    // all-ranks requirement is intrinsic to EXACT KNN-Shapley — at
-    // 100 TB the production form runs this on an ANN-restricted
-    // candidate set per test point and telescopes the tail, exactly as
-    // the paper's approximate variant does.
-    "q_knn_shapley" -> ((s, d) => {
-      val k = 5
-      val e = emb(s, d)
-      val q = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("qlabel")))
-      val scored = e.filter(col("vec_id") >= 10)
-        .select(col("vec_id"), col("embedding").as("cv"), col("label"))
-        .crossJoin(q)
-        .withColumn("cos", cosine_similarity(col("qv"), col("cv")))
-        .withColumn("m",
-          when(col("label") === col("qlabel"), 1L).otherwise(0L))
-      val wRank = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val wLead = wRank // same partition+order: one window exchange+sort
-      val ranked = scored
-        .withColumn("rank", row_number().over(wRank).cast("long"))
-        .withColumn("m_next", lead(col("m"), 1).over(wLead))
-        .withColumn("n_train",
-          count(lit(1)).over(Window.partitionBy(col("query_id"))))
-      val contrib = ranked.withColumn("contrib",
-        when(col("m_next").isNull,
-          col("m").cast("double") / col("n_train"))
-          .otherwise(((col("m") - col("m_next")) *
-            least(lit(k.toLong), col("rank"))).cast("double") /
-            (lit(k.toLong) * col("rank"))))
-      val wSuffix = Window.partitionBy(col("query_id"))
-        .orderBy(col("rank").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      contrib
-        // + 0.0 normalizes IEEE negative zero: a suffix sum that cancels
-        // to -0.0 on one engine and +0.0 on the other is value-equal but
-        // repr/hash-DIFFERENT ("-0.0" vs "0.0") — surfaced at sf0.1
-        .withColumn("shap_r",
-          round(sum(col("contrib")).over(wSuffix), 6) + lit(0.0))
-        .select(col("query_id"), col("vec_id"), col("rank"), col("shap_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // product-quantization ANN (8 subspaces x 32 centroids, ADC + exact
-    // rerank): the memory-bound scale path — corpus rides the scoring
-    // join as 8 codes + a norm instead of 64 floats. Rows-only (KMeans
-    // codebooks); recall floor asserted in DedupSimilaritySpec.
-    "q_cosine_pq" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.pqTopK(e, e.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF × PQ composed ANN (the 100 TB path): coarse cells prune the
-    // ADC scan to the query's nProbe cells — equi-join on centroid_id,
-    // no corpus-wide crossJoin (plan-asserted in ScalePostureSpec);
-    // recall floor vs brute force in DedupSimilaritySpec. Rows-only
-    // (KMeans cells + codebooks).
-    "q_cosine_ivfpq" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.ivfPqApply(e, e.filter(col("vec_id") < 10), k = 5,
-        ivfpqModel(s, d), nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF-PQ served from the AT-REST inverted-file layout: parquet
-    // partitioned by centroid_id, scanned with a static probe-cell
-    // partition filter (selectedPartitions < nCells — plan-asserted in
-    // DedupSimilaritySpec) — the 100 TB serving shape where the encode
-    // happened once at index-build time and a query batch reads only
-    // its nProbe cells. Values identical to q_cosine_ivfpq (same
-    // serving join, same model). Rows-only (KMeans artifacts).
-    "q_cosine_ivfpq_disk" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.ivfPqApplyFromDisk(ivfIndexDir(s, d), e,
-        e.filter(col("vec_id") < 10), k = 5, ivfpqModel(s, d), nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // AT-REST ≡ IN-MEMORY serving equality as a DRIVER-VISIBLE row: the
-    // symmetric-difference count of the two IVF-PQ serving paths over
-    // the full (query_id, neighbor_id, rank, cos) result relation. Both
-    // paths funnel through the same ivfPqServe join and the same model,
-    // so the count is the CONSTANT 0 — trivially SQL-expressible, which
-    // promotes the scalatest-only operator equality into a green ORACLED
-    // row in every round's CORRECTNESS file (the at-rest path's
-    // correctness is witnessed by the driver, not just the test suite).
-    "q_cosine_ivfpq_paths_agree" -> ((s, d) => {
-      val e = emb(s, d)
-      def served(df: DataFrame) = df
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-      // pin both bounded (≤ queries×k rows) serving results: each is
-      // consumed TWICE by the symmetric difference, and the column-
-      // pruning fork re-ran BOTH full serving pipelines per side — the
-      // formatted plan carried four copies of the PQ-encode trees
-      // (355 KB; the q_lsh_recall r17 pin lesson). r18: the two pins
-      // are INDEPENDENT eager jobs, so they run overlapped from two
-      // driver threads (guide §2.6, the q_lsh_recall pattern); the
-      // model/index memos are resolved BEFORE the threads fork so the
-      // futures only capture immutable values.
-      val model = ivfpqModel(s, d)
-      val idx = ivfIndexDir(s, d)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val memF = Future(served(Similarity.ivfPqApply(e,
-        e.filter(col("vec_id") < 10), k = 5, model, nProbe = 4))
-        .localCheckpoint(true))
-      val diskF = Future(served(Similarity.ivfPqApplyFromDisk(idx, e,
-        e.filter(col("vec_id") < 10), k = 5, model, nProbe = 4))
-        .localCheckpoint(true))
-      val mem = Await.result(memF, Duration.Inf)
-      val disk = Await.result(diskF, Duration.Inf)
-      mem.exceptAll(disk).unionAll(disk.exceptAll(mem))
-        .agg(count(lit(1)).as("n_diff"))
-    }),
-
-    // measured ANN recall as a FIRST-CLASS QUERY (r16, VERDICT Next #6
-    // — the q_lsh_recall trick applied to vectors): recall@50 of the
-    // IVF-PQ serving path vs the exact brute-force truth, over the
-    // first 50 query vectors, as ONE exact-integer-ratio row. Rows-only
-    // (the cells/codebooks are KMeans fit artifacts, so values can't be
-    // SQL-replayed), but the CLAIM — serving recall — becomes a
-    // committed driver-measured number each round instead of a test
-    // floor; the floor itself is asserted in DedupSimilaritySpec.
-    // rerank=64 ≥ k so the exact-rerank window never truncates recall;
-    // nProbe=12 (vs the k=5 queries' 4): the fixture's embeddings are
-    // near-isotropic (mean pairwise cos ≈ 0.0004, top-50 mean ≈ 0.22),
-    // so coarse cells barely cluster true neighbors and recall@50
-    // tracks cell COVERAGE ≈ nProbe/nCells — measured r17 at
-    // sf0.001/0.01/0.1: 4 probes → 0.45/0.47/0.49, 8 → 0.72/0.73/0.75,
-    // 10 → 0.81/0.82/0.85, 12 → 0.90/0.89/0.92, 16 → 1.0 (the rerank
-    // window never truncates). 12 of 16 probes is the production
-    // recall ≥ 0.8 target WITH margin at a measured latency within
-    // family norms; on a genuinely clustered corpus the same config
-    // over-delivers (coverage concentrates in few cells). This is the
-    // knob a deployment turns per (k, recall) target.
-    "q_ann_recall" -> ((s, d) => {
-      val e = emb(s, d)
-      val q = e.filter(col("vec_id") < 50)
-      val truth = Similarity.bruteForceTopK(e, q, k = 50)
-        .select(col("query_id"), col("neighbor_id"))
-      val ann = Similarity.ivfPqApply(e, q, k = 50, ivfpqModel(s, d),
-        nProbe = 12, rerank = 64)
-        .select(col("query_id"), col("neighbor_id"))
-      truth.agg(count(lit(1)).as("n_expected"))
-        .crossJoin(
-          truth.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
-            .agg(count(lit(1)).as("n_hits")))
-        .select(lit(50L).as("n_queries"), lit(50L).as("k"),
-          col("n_hits"), col("n_expected"),
-          graft.functions.ExactRatio.ratio6(col("n_hits"),
-            col("n_expected")).as("recall_r"))
-    }),
-
-    // IVF cell-balance health (the coarse-quantizer twin of
-    // q_minhash_bucket_health): one deterministic row over the same
-    // map-only assignment projection the serving path uses. Rows-only
-    // (KMeans cells); planted-skew behavior asserted in scalatest.
-    "q_ivf_cell_health" -> ((s, d) =>
-      Similarity.cellStats(emb(s, d), ivfpqModel(s, d).cents)),
-
-    // At-rest index LAYOUT health (Artifacts.ivfLayoutStats) — the
-    // file-skew metric the maintenance trigger (maintainIvfPqIndex)
-    // fires on, as a driver-visible row: per-cell parquet file counts
-    // from ONE metadata listing of the live version. Distinct from
-    // q_ivf_cell_health's ROW skew (a quantizer signal only a refit
-    // changes). On a freshly built index every cell holds one file set
-    // (hash-clustered write), so skew pins at 1.0. Rows-only:
-    // FS-metadata derived, not expressible over the parquet tables.
-    "q_ivf_layout_health" -> ((s, d) => {
-      import s.implicits._
-      val st = graft.operators.Artifacts.ivfLayoutStats(s, ivfIndexDir(s, d))
-      def r6(x: Double) = math.rint(x * 1e6) / 1e6
-      Seq((st.nCells, st.nFiles, st.maxFilesPerCell,
-        r6(st.avgFilesPerCell), r6(st.p99FilesPerCell), r6(st.skew)))
-        .toDF("n_cells", "n_files", "max_files_per_cell",
-          "avg_files_per_cell", "p99_files_per_cell", "skew")
-    }),
-
-    // SEMANTIC-BALANCED sampling: exactly 5 vectors per IVF cell — the
-    // cluster-proportional eval/anchor-set cut a curation pipeline uses
-    // to avoid over-representing dense regions of embedding space.
-    // Composition of the map-only cell routing (assignCell — zero
-    // joins) with the stratified exact-N cut (exactNPerGroup —
-    // WindowGroupLimit heaps, one shuffle on the cell id). Rows-only
-    // (KMeans cells); per-cell-count + determinism spec in
-    // DedupSimilaritySpec; the CPUS=3 vs 8 sweep pins the values.
-    "q_sample_balanced_cells" -> ((s, d) => {
-      val cells = emb(s, d).select(col("vec_id"),
-        Similarity.assignCell(ivfpqModel(s, d).cents, col("embedding"))
-          .as("centroid_id"))
-      graft.operators.Split.exactNPerGroup(cells, 5,
-        col("centroid_id"), Seq(col("vec_id")))
-        .orderBy(col("vec_id"))
-    }),
-
-    // IVF-style coarse-quantized ANN — VALUE-ORACLED since r12: the
-    // hash centroids are xxhash64(vec_id) picks (XXH64's closed 8-byte
-    // form, replayed in HUGEINT — see ivfOracle) and every cosine is
-    // the bit-identical duckCosParts twin, so cells, probes and the
-    // reranked top-5 all hash-match DuckDB
-    "q_cosine_ivf" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), k = 5,
-        nCentroids = 16, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF with KMeans centroids (the quality path) — rows-only
-    "q_cosine_ivf_km" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.ivfKmeansTopK(e, e.filter(col("vec_id") < 10), k = 5,
-        nCentroids = 16, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("cos"), 6).as("cos_r"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // INT8 quantization (training-data transport format): scale +
-    // truncated int vector, DuckDB-verified bit-for-bit (trunc semantics
-    // are engine-independent; see QuantizeInt8 scaladoc)
-    "q_embed_quantize" -> ((s, d) => {
-      emb(s, d).filter(col("vec_id") < 50)
-        .select(col("vec_id"), quantize_int8(col("embedding")).as("qz"))
-        .select(col("vec_id"),
-          round(col("qz.scale"), 6).as("scale_r"),
-          array_join(col("qz.q").cast("array<string>"), ",").as("q_str"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // SEMANTIC corpus curation end-to-end — the embedding-space twin of
-    // the minhash-based q_corpus_clean: cosine near-dup pairs (LSH
-    // candidates, threshold tuned to this corpus's cosine range) →
-    // transitive closure → per-component min-id keep set → surviving
-    // documents' per-source stats (vec_id aligns 1:1 with doc_id in the
-    // fixture). VALUE-ORACLED since r12: the rp-banding twin + capped
-    // pairs + exact cosine + a recursive-UNION closure mirror the whole
-    // composition in DuckDB; the planted paraphrase-chain closure is
-    // additionally asserted in DedupSimilaritySpec.
-    "q_corpus_clean_semantic" -> ((s, d) => {
-      val e = emb(s, d)
-      // 8×6-bit banding: 64 buckets per band keeps the candidate volume
-      // ~5× below the 16-bucket default at this corpus shape (capped
-      // O(cap²+n) per bucket either way — bucket COUNT, not doc count,
-      // sets the constant). Candidate recall at this low threshold is
-      // banding-limited and documented; the planted-chain test drives
-      // the closure semantics independently of these parameters.
-      val pairs = Dedup.cosineNearDups(e, threshold = 0.45,
-        bands = 8, bandBits = 6)
-        .select(col("id_a"), col("id_b"))
-      val keep = Dedup.dedupKeepSetClosure(e, pairs, idCol = "vec_id")
-      Tables.documents(s, d)
-        .join(keep.select(col("vec_id").as("doc_id")), Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars_total"))
-        .orderBy(col("source"))
-    }),
-
-    // embedding-cosine near-dup candidate pairs (LSH) — top-50 by
-    // cosine. VALUE-ORACLED since r12: the rp-signature twin + the
-    // ROW_NUMBER mirror of the bucket cap + the sequential-fold cosine
-    // reproduce the pair set AND the unrounded-cosine cut line exactly
-    "q_dedup_cosine" -> ((s, d) => {
-      // top-50 via orderBy+limit (TakeOrdered — per-partition heaps), not a
-      // global ranking window: no single-partition WindowExec in the plan
-      Dedup.cosineNearDups(emb(s, d), threshold = -1.0,
-        bands = 16, bandBits = 4)
-        .orderBy(col("cos").desc, col("id_a"), col("id_b"))
-        .limit(50)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_r"))
-    }),
-
-    // per-label mean embedding (class centroids) — the building block
-    // for semantic-cluster observability (drift vs a labelled anchor
-    // set, per-domain embedding means). Declarative all-pairs-free
-    // shape: posexplode to (label, dim) cells, ONE partial+final
-    // aggregate (n·d rows shuffle as (label,dim) — no vector-sized
-    // state in any aggregation buffer, unlike a naive array-sum UDAF),
-    // then bounded per-label reassembly via sorted collect (d elements
-    // per group, order pinned by the struct sort, not collect order).
-    // Fully DuckDB-oracled: elementwise avg in double, rounded 6dp.
-    // Output contract: the centroid is SERIALIZED to a comma-joined
-    // string (the q_collect_list / q_embed_quantize convention) — the
-    // driver's pandas compare cannot sort/hash a raw array column.
-    // The element format is pinned to DECIMAL(20,6) on BOTH engines —
-    // raw double→string casts diverge at scientific-notation
-    // boundaries (Spark "1.0E-5" vs DuckDB "1e-05"); decimal gives
-    // "0.000010" on both.
-    "q_embed_centroids" -> ((s, d) => {
-      centroidsDf(s, d)
-        .select(col("label"), col("n_vecs"),
-          array_join(
-            transform(col("centroid"), c => c.cast("decimal(20,6)"))
-              .cast("array<string>"), ",").as("centroid_str"))
-        .orderBy(col("label"))
-    }),
-
-    // cluster cohesion: per-label mean/min cosine of members to their
-    // class centroid — the "are these labels semantically tight" check
-    // that tunes the semantic-dedup threshold and flags mislabeled
-    // slices. Cross-engine contract: the centroid IS [[centroidsDf]]'s
-    // (structurally, not by copy), so the cosine arithmetic starts from
-    // bit-equal 6dp-rounded inputs; the member side casts to double
-    // before any math. Centroids broadcast (one row per label); members
-    // stream through one map pass + one agg.
-    "q_embed_dispersion" -> ((s, d) => {
-      val cents = centroidsDf(s, d).select(col("label"), col("centroid").as("c"))
-      val m = emb(s, d).select(col("label").cast("long").as("label"),
-        col("embedding").cast("array<double>").as("v"))
-        .join(broadcast(cents), Seq("label"))
-      val dot = aggregate(zip_with(col("v"), col("c"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x)
-      val nv = aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x)
-      val nc = aggregate(col("c"), lit(0.0), (acc, x) => acc + x * x)
-      m.select(col("label"),
-          when(nv === 0.0 || nc === 0.0, 0.0)
-            .otherwise(dot / sqrt(nv * nc)).as("cos"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          round(avg(col("cos")), 6).as("mean_cos"),
-          round(min(col("cos")), 6).as("min_cos"))
-        .orderBy(col("label"))
-    }),
-
-    // Fixed-round deterministic Lloyd clustering (k=4, 3 assign+update
-    // rounds, init = the 4 lowest-id vectors) — the ORACLED iteration
-    // witness for the KMeans family: every MLlib fit is oracle-exempt
-    // because kmeans|| init is engine-private, so this is the one
-    // place the assign/update math itself is checked end-to-end
-    // against an independent engine (the pagerank role, for
-    // clustering). Cross-engine seam contract: centroids re-round to
-    // 6dp every round (both engines restart each round from bit-equal
-    // values — one round's reordered-sum wobble never compounds), the
-    // per-row distance is an in-order fold ROUNDED to 6dp before the
-    // argmin (so the oracle's unordered parallel SUM lands on the same
-    // assignment), ties break to the min
-    // centroid id on both sides, and presentation pins inertia at 3dp
-    // and centroid cells at DECIMAL(20,6) (the q_embed_centroids
-    // serialization). Similarity.lloydSteps owns the scale shape
-    // (broadcast-k assignment map pass + one cell aggregate per round;
-    // driver state k·d doubles).
-    "q_kmeans_steps" -> ((s, d) => {
-      graft.operators.Similarity.lloydSteps(emb(s, d), k = 4, rounds = 3)
-        .select(col("cid"), col("n_members"),
-          round(col("inertia"), 3).as("inertia_r"),
-          array_join(
-            transform(col("cv"), c => round(c, 6).cast("decimal(20,6)"))
-              .cast("array<string>"), ",").as("centroid_str"))
-        .orderBy(col("cid"))
-    })
-  )
-
   /** Driver-side twin of RandomProjectionSignature's splitmix mix —
     * used only to GENERATE the oracle's literal sign table (the signs
     * depend on (seed, j, i) alone, so they are constants, not data).
@@ -714,57 +289,81 @@ object SimilarityQueries {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "q_cosine_ivf" -> ivfOracle,
-    // the two serving paths share one join implementation and one model,
-    // so their symmetric difference is the constant 0 — the oracle pins
-    // exactly that
-    "q_cosine_ivfpq_paths_agree" -> "SELECT CAST(0 AS BIGINT) AS n_diff",
+  val declarations: Seq[Query] = Seq(
+    // exact cosine top-5 neighbors for the first 10 vectors (custom
+    // codegen'd CosineSimilarity expression in the inner loop)
+    Query("q_cosine_topk", (s, d) => {
+      val e = emb(s, d)
+      val q = broadcast(e.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
+      val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
+        .crossJoin(q)
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .withColumn("cos_r", round(cosine_similarity(col("qv"), col("cv")), 6))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("cos_r").desc, col("neighbor_id"))
+      scored.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 5)
+        .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Sql(
+      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+        |           FROM embeddings WHERE vec_id < 10),
+        |scored AS (
+        |  SELECT q.query_id, e.vec_id AS neighbor_id,
+        |    ROUND(list_cosine_similarity(
+        |      list_transform(q.qv, x -> CAST(x AS DOUBLE)),
+        |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_r
+        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id
+        |),
+        |ranked AS (
+        |  SELECT query_id, neighbor_id, cos_r,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+        |      ORDER BY cos_r DESC, neighbor_id) AS BIGINT) AS rank
+        |  FROM scored
+        |)
+        |SELECT query_id, neighbor_id, rank, cos_r FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    // embedding-cosine LSH near-dup pairs (DE-EXEMPTED r12): the
-    // rp-signature twin generates the exact banding, cappedKeyedPairs
-    // mirrored with ROW_NUMBER (cap 256 + overflow star-attach), and
-    // the top-50 cut orders by the BIT-IDENTICAL unrounded cosine
-    // before the 6dp output round — so even the cut line matches.
-    "q_dedup_cosine" ->
-      s"""WITH ${rpCte(16, 4)},
-         |$rpScoredCte
-         |SELECT id_a, id_b, ROUND(cos, 6) AS cos_r
-         |FROM scored
-         |ORDER BY cos DESC, id_a, id_b LIMIT 50""".stripMargin,
+    // per-vector norms + global norm stats by label (L2Norm expression)
+    Query("q_embed_norms", (s, d) => {
+      emb(s, d)
+        .select(col("label").cast("long").as("label"),
+          l2_norm(col("embedding")).as("nrm"))
+        .groupBy(col("label"))
+        .agg(count(lit(1)).as("n"),
+          round(avg(col("nrm")), 6).as("avg_norm"),
+          round(min(col("nrm")), 6).as("min_norm"),
+          round(max(col("nrm")), 6).as("max_norm"))
+        .orderBy(col("label"))
+    }, Sql(
+      """WITH n AS (
+        |  SELECT CAST(label AS BIGINT) AS label,
+        |    sqrt(list_aggregate(list_transform(embedding,
+        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+        |  FROM embeddings
+        |)
+        |SELECT label, COUNT(*) AS n,
+        |  ROUND(AVG(nrm), 6) AS avg_norm,
+        |  ROUND(MIN(nrm), 6) AS min_norm,
+        |  ROUND(MAX(nrm), 6) AS max_norm
+        |FROM n GROUP BY label ORDER BY label""".stripMargin)),
 
-    // the composed semantic-dedup pipeline (DE-EXEMPTED r12): the
-    // 8×6-bit banding twin + capped pairs + exact cosine >= 0.45, then
-    // the min-id transitive closure as a recursive UNION (the
-    // q_er_clusters cycle-safe pattern), demoted = nodes whose
-    // component min is another id, survivors join documents (vec_id
-    // aligns 1:1 with doc_id in the fixture) for per-source stats.
-    "q_corpus_clean_semantic" ->
-      s"""WITH RECURSIVE ${rpCte(8, 6)},
-         |$rpScoredCte,
-         |m AS (SELECT id_a, id_b FROM scored WHERE cos >= 0.45),
-         |ed AS (
-         |  SELECT id_a AS src, id_b AS dst FROM m
-         |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m
-         |),
-         |reach(id, cur) AS (
-         |  SELECT src, src FROM ed
-         |  UNION
-         |  SELECT re.id, ed.dst FROM reach re JOIN ed ON re.cur = ed.src
-         |),
-         |lab AS (SELECT id, MIN(cur) AS comp FROM reach GROUP BY id),
-         |demoted AS (SELECT id FROM lab WHERE comp <> id)
-         |SELECT d.source, COUNT(*) AS n_docs,
-         |  CAST(SUM(d.n_chars) AS BIGINT) AS n_chars_total
-         |FROM documents d
-         |WHERE d.doc_id NOT IN (SELECT id FROM demoted)
-         |  AND d.doc_id IN (SELECT vec_id FROM embeddings)
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    // LSH-bucketed ANN (DE-EXEMPTED r12): query buckets (vec_id < 10)
-    // join corpus buckets, distinct candidates, exact cosine rerank,
-    // per-query rank over the bit-identical unrounded cosine
-    "q_cosine_ann" ->
+    // LSH-bucketed ANN (scale path) — VALUE-ORACLED since r12 via the
+    // rp-signature twin (literal sign table + sequential-fold cosine:
+    // bit-identical doubles, so ranks match exactly); recall vs brute
+    // force additionally asserted in scalatest
+    Query("q_cosine_ann", (s, d) => {
+      val e = emb(s, d)
+      Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 5,
+        bands = 16, bandBits = 4)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Sql(
+      // LSH-bucketed ANN (DE-EXEMPTED r12): query buckets (vec_id < 10)
+      // join corpus buckets, distinct candidates, exact cosine rerank,
+      // per-query rank over the bit-identical unrounded cosine
       s"""WITH ${rpCte(16, 4)},
          |cand AS (
          |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
@@ -794,11 +393,70 @@ object SimilarityQueries {
          |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
          |  ROUND(cos, 6) AS cos_r
          |FROM ranked WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin)),
 
-    // the paper recursion as the same suffix-sum: exact-cosine rank,
-    // integer indicators, one division per contrib, running frame
-    "q_knn_shapley" ->
+    // Exact KNN-Shapley data valuation (Jia et al., VLDB 2019 — the
+    // closed-form Shapley value of each TRAINING point for a K-NN
+    // classifier; public algorithm): the per-example "how much does
+    // this row help" score a curation pipeline ranks hard negatives /
+    // mislabeled candidates by. Test points = vec_id < 10 (the query-
+    // batch convention), train = the rest, K = 5, utility = label
+    // match. Per test point the train set is ranked by the EXACT
+    // unrounded cosine (the duckCosParts bit-identical twin), then the
+    // paper's recursion s_i = s_{i+1} + (1[y_i=y] − 1[y_{i+1}=y])·
+    // min(K,i)/(K·i) collapses into ONE suffix sum of per-row
+    // contributions (contrib_M = m_M/M at the far end) — computed as a
+    // RUNNING sum in rank-descending order: each contrib is a single
+    // exact-integer-over-integer division, and the running frame is the
+    // only float accumulation (engines may reassociate it — segment
+    // tree vs sequential — but the reassociation error is ~1e-13
+    // against a 5e-7 rounding half-step, so the 6dp contract holds).
+    // Scale shape: the (test × train) relation parallelizes across test
+    // points (per-test window partitions — never a global sort); the
+    // all-ranks requirement is intrinsic to EXACT KNN-Shapley — at
+    // 100 TB the production form runs this on an ANN-restricted
+    // candidate set per test point and telescopes the tail, exactly as
+    // the paper's approximate variant does.
+    Query("q_knn_shapley", (s, d) => {
+      val k = 5
+      val e = emb(s, d)
+      val q = broadcast(e.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+          col("label").as("qlabel")))
+      val scored = e.filter(col("vec_id") >= 10)
+        .select(col("vec_id"), col("embedding").as("cv"), col("label"))
+        .crossJoin(q)
+        .withColumn("cos", cosine_similarity(col("qv"), col("cv")))
+        .withColumn("m",
+          when(col("label") === col("qlabel"), 1L).otherwise(0L))
+      val wRank = Window.partitionBy(col("query_id"))
+        .orderBy(col("cos").desc, col("vec_id"))
+      val wLead = wRank // same partition+order: one window exchange+sort
+      val ranked = scored
+        .withColumn("rank", row_number().over(wRank).cast("long"))
+        .withColumn("m_next", lead(col("m"), 1).over(wLead))
+        .withColumn("n_train",
+          count(lit(1)).over(Window.partitionBy(col("query_id"))))
+      val contrib = ranked.withColumn("contrib",
+        when(col("m_next").isNull,
+          col("m").cast("double") / col("n_train"))
+          .otherwise(((col("m") - col("m_next")) *
+            least(lit(k.toLong), col("rank"))).cast("double") /
+            (lit(k.toLong) * col("rank"))))
+      val wSuffix = Window.partitionBy(col("query_id"))
+        .orderBy(col("rank").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      contrib
+        // + 0.0 normalizes IEEE negative zero: a suffix sum that cancels
+        // to -0.0 on one engine and +0.0 on the other is value-equal but
+        // repr/hash-DIFFERENT ("-0.0" vs "0.0") — surfaced at sf0.1
+        .withColumn("shap_r",
+          round(sum(col("contrib")).over(wSuffix), 6) + lit(0.0))
+        .select(col("query_id"), col("vec_id"), col("rank"), col("shap_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Sql(
+      // the paper recursion as the same suffix-sum: exact-cosine rank,
+      // integer indicators, one division per contrib, running frame
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
          |            label AS qlabel
          |           FROM embeddings WHERE vec_id < 10),
@@ -833,28 +491,213 @@ object SimilarityQueries {
          |    ORDER BY rank DESC
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) + 0.0
          |    AS shap_r
-         |FROM cb ORDER BY query_id, rank""".stripMargin,
+         |FROM cb ORDER BY query_id, rank""".stripMargin)),
 
-    "q_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |    ROUND(list_cosine_similarity(
-        |      list_transform(q.qv, x -> CAST(x AS DOUBLE)),
-        |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_r
-        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id
-        |),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, cos_r,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY cos_r DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, neighbor_id, rank, cos_r FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+    // product-quantization ANN (8 subspaces x 32 centroids, ADC + exact
+    // rerank): the memory-bound scale path — corpus rides the scoring
+    // join as 8 codes + a norm instead of 64 floats. Rows-only (KMeans
+    // codebooks); recall floor asserted in DedupSimilaritySpec.
+    Query("q_cosine_pq", (s, d) => {
+      val e = emb(s, d)
+      Similarity.pqTopK(e, e.filter(col("vec_id") < 10), k = 5)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Exempt(
+      "KMeans codebooks are fit artifacts; recall floor in DedupSimilaritySpec"), headline = false),
 
-    "q_embed_quantize" ->
+    // IVF × PQ composed ANN (the 100 TB path): coarse cells prune the
+    // ADC scan to the query's nProbe cells — equi-join on centroid_id,
+    // no corpus-wide crossJoin (plan-asserted in ScalePostureSpec);
+    // recall floor vs brute force in DedupSimilaritySpec. Rows-only
+    // (KMeans cells + codebooks).
+    Query("q_cosine_ivfpq", (s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfPqApply(e, e.filter(col("vec_id") < 10), k = 5,
+        ivfpqModel(s, d), nProbe = 4)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Exempt("KMeans cells+codebooks; recall floor + cell-pruned plan assertion")),
+
+    // IVF-PQ served from the AT-REST inverted-file layout: parquet
+    // partitioned by centroid_id, scanned with a static probe-cell
+    // partition filter (selectedPartitions < nCells — plan-asserted in
+    // DedupSimilaritySpec) — the 100 TB serving shape where the encode
+    // happened once at index-build time and a query batch reads only
+    // its nProbe cells. Values identical to q_cosine_ivfpq (same
+    // serving join, same model). Rows-only (KMeans artifacts).
+    Query("q_cosine_ivfpq_disk", (s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfPqApplyFromDisk(ivfIndexDir(s, d), e,
+        e.filter(col("vec_id") < 10), k = 5, ivfpqModel(s, d), nProbe = 4)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Exempt(
+      "at-rest IVF layout; equals in-memory apply + partition-pruned plan assertion in DedupSimilaritySpec")),
+
+    // AT-REST ≡ IN-MEMORY serving equality as a DRIVER-VISIBLE row: the
+    // symmetric-difference count of the two IVF-PQ serving paths over
+    // the full (query_id, neighbor_id, rank, cos) result relation. Both
+    // paths funnel through the same ivfPqServe join and the same model,
+    // so the count is the CONSTANT 0 — trivially SQL-expressible, which
+    // promotes the scalatest-only operator equality into a green ORACLED
+    // row in every round's CORRECTNESS file (the at-rest path's
+    // correctness is witnessed by the driver, not just the test suite).
+    Query("q_cosine_ivfpq_paths_agree", (s, d) => {
+      val e = emb(s, d)
+      def served(df: DataFrame) = df
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+      // pin both bounded (≤ queries×k rows) serving results: each is
+      // consumed TWICE by the symmetric difference, and the column-
+      // pruning fork re-ran BOTH full serving pipelines per side — the
+      // formatted plan carried four copies of the PQ-encode trees
+      // (355 KB; the q_lsh_recall r17 pin lesson). r18: the two pins
+      // are INDEPENDENT eager jobs, so they run overlapped from two
+      // driver threads (guide §2.6, the q_lsh_recall pattern); the
+      // model/index memos are resolved BEFORE the threads fork so the
+      // pins only capture immutable values.
+      val model = ivfpqModel(s, d)
+      val idx = ivfIndexDir(s, d)
+      val Seq(mem, disk) = graft.operators.Guarded.pinAll(s)(Seq(
+        () => served(Similarity.ivfPqApply(e,
+          e.filter(col("vec_id") < 10), k = 5, model, nProbe = 4))
+          .localCheckpoint(true),
+        () => served(Similarity.ivfPqApplyFromDisk(idx, e,
+          e.filter(col("vec_id") < 10), k = 5, model, nProbe = 4))
+          .localCheckpoint(true)))
+      mem.exceptAll(disk).unionAll(disk.exceptAll(mem))
+        .agg(count(lit(1)).as("n_diff"))
+    }, Sql(
+      // the two serving paths share one join implementation and one model,
+      // so their symmetric difference is the constant 0 — the oracle pins
+      // exactly that
+      "SELECT CAST(0 AS BIGINT) AS n_diff")),
+
+    // measured ANN recall as a FIRST-CLASS QUERY (r16, VERDICT Next #6
+    // — the q_lsh_recall trick applied to vectors): recall@50 of the
+    // IVF-PQ serving path vs the exact brute-force truth, over the
+    // first 50 query vectors, as ONE exact-integer-ratio row. Rows-only
+    // (the cells/codebooks are KMeans fit artifacts, so values can't be
+    // SQL-replayed), but the CLAIM — serving recall — becomes a
+    // committed driver-measured number each round instead of a test
+    // floor; the floor itself is asserted in DedupSimilaritySpec.
+    // rerank=64 ≥ k so the exact-rerank window never truncates recall;
+    // nProbe=12 (vs the k=5 queries' 4): the fixture's embeddings are
+    // near-isotropic (mean pairwise cos ≈ 0.0004, top-50 mean ≈ 0.22),
+    // so coarse cells barely cluster true neighbors and recall@50
+    // tracks cell COVERAGE ≈ nProbe/nCells — measured r17 at
+    // sf0.001/0.01/0.1: 4 probes → 0.45/0.47/0.49, 8 → 0.72/0.73/0.75,
+    // 10 → 0.81/0.82/0.85, 12 → 0.90/0.89/0.92, 16 → 1.0 (the rerank
+    // window never truncates). 12 of 16 probes is the production
+    // recall ≥ 0.8 target WITH margin at a measured latency within
+    // family norms; on a genuinely clustered corpus the same config
+    // over-delivers (coverage concentrates in few cells). This is the
+    // knob a deployment turns per (k, recall) target.
+    Query("q_ann_recall", (s, d) => {
+      val e = emb(s, d)
+      val q = e.filter(col("vec_id") < 50)
+      val truth = Similarity.bruteForceTopK(e, q, k = 50)
+        .select(col("query_id"), col("neighbor_id"))
+      val ann = Similarity.ivfPqApply(e, q, k = 50, ivfpqModel(s, d),
+        nProbe = 12, rerank = 64)
+        .select(col("query_id"), col("neighbor_id"))
+      truth.agg(count(lit(1)).as("n_expected"))
+        .crossJoin(
+          truth.join(ann, Seq("query_id", "neighbor_id"), "left_semi")
+            .agg(count(lit(1)).as("n_hits")))
+        .select(lit(50L).as("n_queries"), lit(50L).as("k"),
+          col("n_hits"), col("n_expected"),
+          graft.functions.ExactRatio.ratio6(col("n_hits"),
+            col("n_expected")).as("recall_r"))
+    }, Exempt(
+      "IVF-PQ cells/codebooks are KMeans fit artifacts; the row IS the measured recall@50 vs the in-query brute-force truth (driver-committed each round); production 0.8 floor asserted in DedupSimilaritySpec")),
+
+    // IVF cell-balance health (the coarse-quantizer twin of
+    // q_minhash_bucket_health): one deterministic row over the same
+    // map-only assignment projection the serving path uses. Rows-only
+    // (KMeans cells); planted-skew behavior asserted in scalatest.
+    Query("q_ivf_cell_health", (s, d) =>
+      Similarity.cellStats(emb(s, d), ivfpqModel(s, d).cents),
+      Exempt(
+      "cells are KMeans fit artifacts; planted-skew + shape tests in DedupSimilaritySpec")),
+
+    // At-rest index LAYOUT health (Artifacts.ivfLayoutStats) — the
+    // file-skew metric the maintenance trigger (maintainIvfPqIndex)
+    // fires on, as a driver-visible row: per-cell parquet file counts
+    // from ONE metadata listing of the live version. Distinct from
+    // q_ivf_cell_health's ROW skew (a quantizer signal only a refit
+    // changes). On a freshly built index every cell holds one file set
+    // (hash-clustered write), so skew pins at 1.0. Rows-only:
+    // FS-metadata derived, not expressible over the parquet tables.
+    Query("q_ivf_layout_health", (s, d) => {
+      import s.implicits._
+      val st = graft.operators.Artifacts.ivfLayoutStats(s, ivfIndexDir(s, d))
+      def r6(x: Double) = math.rint(x * 1e6) / 1e6
+      Seq((st.nCells, st.nFiles, st.maxFilesPerCell,
+        r6(st.avgFilesPerCell), r6(st.p99FilesPerCell), r6(st.skew)))
+        .toDF("n_cells", "n_files", "max_files_per_cell",
+          "avg_files_per_cell", "p99_files_per_cell", "skew")
+    }, Exempt(
+      "FS-metadata file counts of the at-rest index, not expressible over the parquet tables; fresh-build shape + planted-skew trigger tests in DedupSimilaritySpec"),
+      headline = false),
+
+    // SEMANTIC-BALANCED sampling: exactly 5 vectors per IVF cell — the
+    // cluster-proportional eval/anchor-set cut a curation pipeline uses
+    // to avoid over-representing dense regions of embedding space.
+    // Composition of the map-only cell routing (assignCell — zero
+    // joins) with the stratified exact-N cut (exactNPerGroup —
+    // WindowGroupLimit heaps, one shuffle on the cell id). Rows-only
+    // (KMeans cells); per-cell-count + determinism spec in
+    // DedupSimilaritySpec; the CPUS=3 vs 8 sweep pins the values.
+    Query("q_sample_balanced_cells", (s, d) => {
+      val cells = emb(s, d).select(col("vec_id"),
+        Similarity.assignCell(ivfpqModel(s, d).cents, col("embedding"))
+          .as("centroid_id"))
+      graft.operators.Split.exactNPerGroup(cells, 5,
+        col("centroid_id"), Seq(col("vec_id")))
+        .orderBy(col("vec_id"))
+    }, Exempt(
+      "KMeans cell assignment not SQL-expressible; per-cell-count + determinism spec in DedupSimilaritySpec")),
+
+    // IVF-style coarse-quantized ANN — VALUE-ORACLED since r12: the
+    // hash centroids are xxhash64(vec_id) picks (XXH64's closed 8-byte
+    // form, replayed in HUGEINT — see ivfOracle) and every cosine is
+    // the bit-identical duckCosParts twin, so cells, probes and the
+    // reranked top-5 all hash-match DuckDB
+    Query("q_cosine_ivf", (s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), k = 5,
+        nCentroids = 16, nProbe = 4)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Sql(ivfOracle), headline = false),
+
+    // IVF with KMeans centroids (the quality path) — rows-only
+    Query("q_cosine_ivf_km", (s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfKmeansTopK(e, e.filter(col("vec_id") < 10), k = 5,
+        nCentroids = 16, nProbe = 4)
+        .select(col("query_id"), col("neighbor_id"), col("rank"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("query_id"), col("rank"))
+    }, Exempt(
+      "KMeans cells are fit artifacts; recall vs hash-IVF + brute force"), headline = false),
+
+    // INT8 quantization (training-data transport format): scale +
+    // truncated int vector, DuckDB-verified bit-for-bit (trunc semantics
+    // are engine-independent; see QuantizeInt8 scaladoc)
+    Query("q_embed_quantize", (s, d) => {
+      emb(s, d).filter(col("vec_id") < 50)
+        .select(col("vec_id"), quantize_int8(col("embedding")).as("qz"))
+        .select(col("vec_id"),
+          round(col("qz.scale"), 6).as("scale_r"),
+          array_join(col("qz.q").cast("array<string>"), ",").as("q_str"))
+        .orderBy(col("vec_id"))
+    }, Sql(
       """WITH b AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |  FROM embeddings WHERE vec_id < 50
@@ -866,29 +709,142 @@ object SimilarityQueries {
         |SELECT vec_id, ROUND(scale, 6) AS scale_r,
         |  array_to_string(list_transform(e,
         |    x -> CAST(trunc(x * scale) AS BIGINT)), ',') AS q_str
-        |FROM q ORDER BY vec_id""".stripMargin,
+        |FROM q ORDER BY vec_id""".stripMargin), headline = false),
 
-    "q_embed_norms" ->
-      """WITH n AS (
-        |  SELECT CAST(label AS BIGINT) AS label,
-        |    sqrt(list_aggregate(list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
-        |  FROM embeddings
-        |)
-        |SELECT label, COUNT(*) AS n,
-        |  ROUND(AVG(nrm), 6) AS avg_norm,
-        |  ROUND(MIN(nrm), 6) AS min_norm,
-        |  ROUND(MAX(nrm), 6) AS max_norm
-        |FROM n GROUP BY label ORDER BY label""".stripMargin,
+    // SEMANTIC corpus curation end-to-end — the embedding-space twin of
+    // the minhash-based q_corpus_clean: cosine near-dup pairs (LSH
+    // candidates, threshold tuned to this corpus's cosine range) →
+    // transitive closure → per-component min-id keep set → surviving
+    // documents' per-source stats (vec_id aligns 1:1 with doc_id in the
+    // fixture). VALUE-ORACLED since r12: the rp-banding twin + capped
+    // pairs + exact cosine + a recursive-UNION closure mirror the whole
+    // composition in DuckDB; the planted paraphrase-chain closure is
+    // additionally asserted in DedupSimilaritySpec.
+    Query("q_corpus_clean_semantic", (s, d) => {
+      val e = emb(s, d)
+      // 8×6-bit banding: 64 buckets per band keeps the candidate volume
+      // ~5× below the 16-bucket default at this corpus shape (capped
+      // O(cap²+n) per bucket either way — bucket COUNT, not doc count,
+      // sets the constant). Candidate recall at this low threshold is
+      // banding-limited and documented; the planted-chain test drives
+      // the closure semantics independently of these parameters.
+      val pairs = Dedup.cosineNearDups(e, threshold = 0.45,
+        bands = 8, bandBits = 6)
+        .select(col("id_a"), col("id_b"))
+      val keep = Dedup.dedupKeepSetClosure(e, pairs, idCol = "vec_id")
+      Tables.documents(s, d)
+        .join(keep.select(col("vec_id").as("doc_id")), Seq("doc_id"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars_total"))
+        .orderBy(col("source"))
+    }, Sql(
+      // the composed semantic-dedup pipeline (DE-EXEMPTED r12): the
+      // 8×6-bit banding twin + capped pairs + exact cosine >= 0.45, then
+      // the min-id transitive closure as a recursive UNION (the
+      // q_er_clusters cycle-safe pattern), demoted = nodes whose
+      // component min is another id, survivors join documents (vec_id
+      // aligns 1:1 with doc_id in the fixture) for per-source stats.
+      s"""WITH RECURSIVE ${rpCte(8, 6)},
+         |$rpScoredCte,
+         |m AS (SELECT id_a, id_b FROM scored WHERE cos >= 0.45),
+         |ed AS (
+         |  SELECT id_a AS src, id_b AS dst FROM m
+         |  UNION ALL SELECT id_b AS src, id_a AS dst FROM m
+         |),
+         |reach(id, cur) AS (
+         |  SELECT src, src FROM ed
+         |  UNION
+         |  SELECT re.id, ed.dst FROM reach re JOIN ed ON re.cur = ed.src
+         |),
+         |lab AS (SELECT id, MIN(cur) AS comp FROM reach GROUP BY id),
+         |demoted AS (SELECT id FROM lab WHERE comp <> id)
+         |SELECT d.source, COUNT(*) AS n_docs,
+         |  CAST(SUM(d.n_chars) AS BIGINT) AS n_chars_total
+         |FROM documents d
+         |WHERE d.doc_id NOT IN (SELECT id FROM demoted)
+         |  AND d.doc_id IN (SELECT vec_id FROM embeddings)
+         |GROUP BY d.source ORDER BY d.source""".stripMargin)),
 
-    "q_embed_centroids" ->
+    // embedding-cosine near-dup candidate pairs (LSH) — top-50 by
+    // cosine. VALUE-ORACLED since r12: the rp-signature twin + the
+    // ROW_NUMBER mirror of the bucket cap + the sequential-fold cosine
+    // reproduce the pair set AND the unrounded-cosine cut line exactly
+    Query("q_dedup_cosine", (s, d) => {
+      // top-50 via orderBy+limit (TakeOrdered — per-partition heaps), not a
+      // global ranking window: no single-partition WindowExec in the plan
+      Dedup.cosineNearDups(emb(s, d), threshold = -1.0,
+        bands = 16, bandBits = 4)
+        .orderBy(col("cos").desc, col("id_a"), col("id_b"))
+        .limit(50)
+        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_r"))
+    }, Sql(
+      // embedding-cosine LSH near-dup pairs (DE-EXEMPTED r12): the
+      // rp-signature twin generates the exact banding, cappedKeyedPairs
+      // mirrored with ROW_NUMBER (cap 256 + overflow star-attach), and
+      // the top-50 cut orders by the BIT-IDENTICAL unrounded cosine
+      // before the 6dp output round — so even the cut line matches.
+      s"""WITH ${rpCte(16, 4)},
+         |$rpScoredCte
+         |SELECT id_a, id_b, ROUND(cos, 6) AS cos_r
+         |FROM scored
+         |ORDER BY cos DESC, id_a, id_b LIMIT 50""".stripMargin), headline = false),
+
+    // per-label mean embedding (class centroids) — the building block
+    // for semantic-cluster observability (drift vs a labelled anchor
+    // set, per-domain embedding means). Declarative all-pairs-free
+    // shape: posexplode to (label, dim) cells, ONE partial+final
+    // aggregate (n·d rows shuffle as (label,dim) — no vector-sized
+    // state in any aggregation buffer, unlike a naive array-sum UDAF),
+    // then bounded per-label reassembly via sorted collect (d elements
+    // per group, order pinned by the struct sort, not collect order).
+    // Fully DuckDB-oracled: elementwise avg in double, rounded 6dp.
+    // Output contract: the centroid is SERIALIZED to a comma-joined
+    // string (the q_collect_list / q_embed_quantize convention) — the
+    // driver's pandas compare cannot sort/hash a raw array column.
+    // The element format is pinned to DECIMAL(20,6) on BOTH engines —
+    // raw double→string casts diverge at scientific-notation
+    // boundaries (Spark "1.0E-5" vs DuckDB "1e-05"); decimal gives
+    // "0.000010" on both.
+    Query("q_embed_centroids", (s, d) => {
+      centroidsDf(s, d)
+        .select(col("label"), col("n_vecs"),
+          array_join(
+            transform(col("centroid"), c => c.cast("decimal(20,6)"))
+              .cast("array<string>"), ",").as("centroid_str"))
+        .orderBy(col("label"))
+    }, Sql(
       s"""$embCellCtes
          |SELECT label, MAX(n) AS n_vecs,
          |  array_to_string(list(CAST(CAST(cv AS DECIMAL(20,6)) AS VARCHAR)
          |    ORDER BY pos), ',') AS centroid_str
-         |FROM c GROUP BY label ORDER BY label""".stripMargin,
+         |FROM c GROUP BY label ORDER BY label""".stripMargin)),
 
-    "q_embed_dispersion" ->
+    // cluster cohesion: per-label mean/min cosine of members to their
+    // class centroid — the "are these labels semantically tight" check
+    // that tunes the semantic-dedup threshold and flags mislabeled
+    // slices. Cross-engine contract: the centroid IS [[centroidsDf]]'s
+    // (structurally, not by copy), so the cosine arithmetic starts from
+    // bit-equal 6dp-rounded inputs; the member side casts to double
+    // before any math. Centroids broadcast (one row per label); members
+    // stream through one map pass + one agg.
+    Query("q_embed_dispersion", (s, d) => {
+      val cents = centroidsDf(s, d).select(col("label"), col("centroid").as("c"))
+      val m = emb(s, d).select(col("label").cast("long").as("label"),
+        col("embedding").cast("array<double>").as("v"))
+        .join(broadcast(cents), Seq("label"))
+      val dot = aggregate(zip_with(col("v"), col("c"), (x, y) => x * y),
+        lit(0.0), (acc, x) => acc + x)
+      val nv = aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x)
+      val nc = aggregate(col("c"), lit(0.0), (acc, x) => acc + x * x)
+      m.select(col("label"),
+          when(nv === 0.0 || nc === 0.0, 0.0)
+            .otherwise(dot / sqrt(nv * nc)).as("cos"))
+        .groupBy(col("label"))
+        .agg(count(lit(1)).as("n_vecs"),
+          round(avg(col("cos")), 6).as("mean_cos"),
+          round(min(col("cos")), 6).as("min_cos"))
+        .orderBy(col("label"))
+    }, Sql(
       s"""$embCellCtes, cents AS (
         |  SELECT label, list(cv ORDER BY pos) AS c
         |  FROM c GROUP BY label
@@ -906,9 +862,34 @@ object SimilarityQueries {
         |)
         |SELECT label, COUNT(*) AS n_vecs,
         |  ROUND(AVG(cos), 6) AS mean_cos, ROUND(MIN(cos), 6) AS min_cos
-        |FROM scored GROUP BY label ORDER BY label""".stripMargin,
+        |FROM scored GROUP BY label ORDER BY label""".stripMargin)),
 
-    "q_kmeans_steps" -> lloydOracle(k = 4, rounds = 3)
+    // Fixed-round deterministic Lloyd clustering (k=4, 3 assign+update
+    // rounds, init = the 4 lowest-id vectors) — the ORACLED iteration
+    // witness for the KMeans family: every MLlib fit is oracle-exempt
+    // because kmeans|| init is engine-private, so this is the one
+    // place the assign/update math itself is checked end-to-end
+    // against an independent engine (the pagerank role, for
+    // clustering). Cross-engine seam contract: centroids re-round to
+    // 6dp every round (both engines restart each round from bit-equal
+    // values — one round's reordered-sum wobble never compounds), the
+    // per-row distance is an in-order fold ROUNDED to 6dp before the
+    // argmin (so the oracle's unordered parallel SUM lands on the same
+    // assignment), ties break to the min
+    // centroid id on both sides, and presentation pins inertia at 3dp
+    // and centroid cells at DECIMAL(20,6) (the q_embed_centroids
+    // serialization). Similarity.lloydSteps owns the scale shape
+    // (broadcast-k assignment map pass + one cell aggregate per round;
+    // driver state k·d doubles).
+    Query("q_kmeans_steps", (s, d) => {
+      graft.operators.Similarity.lloydSteps(emb(s, d), k = 4, rounds = 3)
+        .select(col("cid"), col("n_members"),
+          round(col("inertia"), 3).as("inertia_r"),
+          array_join(
+            transform(col("cv"), c => round(c, 6).cast("decimal(20,6)"))
+              .cast("array<string>"), ",").as("centroid_str"))
+        .orderBy(col("cid"))
+    }, Sql(lloydOracle(k = 4, rounds = 3)))
   )
 
   /** Generated unrolled-CTE twin of [[graft.operators.Similarity

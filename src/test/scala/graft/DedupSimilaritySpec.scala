@@ -665,7 +665,7 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("q_corpus_clean_semantic: deterministic, demotes near-dups, keeps per-source stats") {
-    val q = graft.queries.SimilarityQueries.queries("q_corpus_clean_semantic")
+    val q = SparkEntry.queries("q_corpus_clean_semantic")
     val a = q(spark, sf).collect()
     val b = q(spark, sf).collect()
     assert(a.nonEmpty && a.sameElements(b))
@@ -1220,8 +1220,8 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("q_ivf_cell_health: deterministic single-row report over the serving assignment") {
-    val h1 = graft.queries.SimilarityQueries.queries("q_ivf_cell_health")(spark, sf).collect()
-    val h2 = graft.queries.SimilarityQueries.queries("q_ivf_cell_health")(spark, sf).collect()
+    val h1 = SparkEntry.queries("q_ivf_cell_health")(spark, sf).collect()
+    val h2 = SparkEntry.queries("q_ivf_cell_health")(spark, sf).collect()
     assert(h1.length == 1 && h1.sameElements(h2))
     val row = h1.head
     // every corpus vector lands in exactly one cell

@@ -1,70 +1,39 @@
 package graft
 
-import graft.operators.{AsofJoin, Dedup}
+import graft.operators.{AsofJoin, Dedup, Guarded}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
 /** Registry integrity + operator edge cases.
   *
-  * The query registry is built by merging module maps with `++`, which
-  * silently OVERWRITES duplicate keys — a name collision would silently
-  * drop a query from the verified surface. Asserted impossible here.
+  * The query registry is a Map derived from the modules' `Query`
+  * declarations, which silently keeps only one of two equal names — a
+  * name collision would silently drop a query from the verified surface.
+  * Asserted impossible here.
   */
 class RegistrySpec extends SparkTestBase {
 
   import spark.implicits._
 
   private val modules = Seq(
-    "CoreQueries" -> (graft.queries.CoreQueries.queries.keySet,
-      graft.queries.CoreQueries.oracleSql.keySet),
-    "RelationalQueries" -> (graft.queries.RelationalQueries.queries.keySet,
-      graft.queries.RelationalQueries.oracleSql.keySet),
-    "PipelineQueries" -> (graft.queries.PipelineQueries.queries.keySet,
-      graft.queries.PipelineQueries.oracleSql.keySet),
-    "TextQueries" -> (graft.queries.TextQueries.queries.keySet,
-      graft.queries.TextQueries.oracleSql.keySet),
-    "EventQueries" -> (graft.queries.EventQueries.queries.keySet,
-      graft.queries.EventQueries.oracleSql.keySet),
-    "SimilarityQueries" -> (graft.queries.SimilarityQueries.queries.keySet,
-      graft.queries.SimilarityQueries.oracleSql.keySet),
-    "AnalyticsQueries" -> (graft.queries.AnalyticsQueries.queries.keySet,
-      graft.queries.AnalyticsQueries.oracleSql.keySet))
+    "CoreQueries" -> graft.queries.CoreQueries.declarations,
+    "RelationalQueries" -> graft.queries.RelationalQueries.declarations,
+    "PipelineQueries" -> graft.queries.PipelineQueries.declarations,
+    "TextQueries" -> graft.queries.TextQueries.declarations,
+    "EventQueries" -> graft.queries.EventQueries.declarations,
+    "SimilarityQueries" -> graft.queries.SimilarityQueries.declarations,
+    "AnalyticsQueries" -> graft.queries.AnalyticsQueries.declarations)
 
   test("no query-name collisions across modules (++ merge would drop one)") {
-    val all = modules.flatMap(_._2._1.toSeq)
-    val dupes = all.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+    // counted over the declarations themselves, not the derived Map,
+    // which would keep one of two equal names — a duplicate inside one
+    // module is caught the same way as one across modules
+    val all = modules.flatMap { case (m, qs) => qs.map(q => q.name -> m) }
+    val dupes = all.groupBy(_._1).collect {
+      case (k, v) if v.size > 1 => s"$k (${v.map(_._2).mkString(", ")})"
+    }
     assert(dupes.isEmpty, s"duplicate query names: $dupes")
     assert(SparkEntry.queries.size == all.size)
-  }
-
-  test("no duplicate keys WITHIN a module's Map literal (source scan — the literal dedups silently)") {
-    // a duplicate key inside one Map(...) never reaches the runtime set
-    // (Scala keeps the last entry), so the cross-module check above
-    // can't see it — the earlier query silently vanishes from the
-    // verified surface. Caught here by scanning the source: a key may
-    // appear at most twice per module file (once in `queries`, once in
-    // `oracleSql`), and at most once as a query closure.
-    val srcDir = new java.io.File("src/main/scala/graft/queries")
-    assume(srcDir.isDirectory, s"source dir not visible from test cwd")
-    for (f <- srcDir.listFiles.toSeq.sortBy(_.getName)
-         if f.getName.endsWith(".scala")) {
-      val text = {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString finally src.close()
-      }
-      val closureKeys = "\"(q_\\w+)\" -> \\(\\(".r
-        .findAllMatchIn(text).map(_.group(1)).toSeq
-      val dupClosures = closureKeys.groupBy(identity)
-        .collect { case (k, v) if v.size > 1 => k }
-      assert(dupClosures.isEmpty,
-        s"${f.getName}: duplicate query closures for $dupClosures")
-      val entryKeys = "\"(q_\\w+)\" ->".r
-        .findAllMatchIn(text).map(_.group(1)).toSeq
-      val dupEntries = entryKeys.groupBy(identity)
-        .collect { case (k, v) if v.size > 2 => k }
-      assert(dupEntries.isEmpty,
-        s"${f.getName}: key appears more than query+oracle times: $dupEntries")
-    }
   }
 
   test("every def in src/main has a non-comment reference besides its declaration (source scan)") {
@@ -185,12 +154,6 @@ class RegistrySpec extends SparkTestBase {
       s"README says ${g.group(5)} tests, source registers $nTests")
   }
 
-  test("every oracle key has a query; every oracle lives with its query's module") {
-    assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
-    for ((name, (qs, os)) <- modules)
-      assert((os -- qs).isEmpty, s"$name has orphan oracle keys: ${os -- qs}")
-  }
-
   test("no-oracle queries are EXACTLY the declared exemptions, each with a reason") {
     // "no_oracle" in CORRECTNESS must stay a design decision, not an
     // omission: a query ships with an oracle (static OR model-literal
@@ -267,6 +230,60 @@ class RegistrySpec extends SparkTestBase {
     val b = Seq((1L, 2L, java.sql.Timestamp.valueOf("2024-01-01 05:00:00")))
       .toDF("user_id", "event_id", "ts")
     assert(EventStreams.intervalJoin(a, b, "10 minutes").count() == 0)
+  }
+
+  test("pinAll: a failing pin cancels its siblings' jobs; pins' jobs carry the caller's description") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // (1) the sibling's job would run 120 s; its tasks end early only
+    // when killed, so pinAll returning well before that, with no job
+    // left active, means the job was cancelled and waited for
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      Guarded.pinAll(spark)(Seq(
+        () => sc.parallelize(0 until 4, 4).map { i =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 120L * 1000000000L
+          while (!ctx.isInterrupted() && System.nanoTime() < end) Thread.sleep(20)
+          i
+        }.count(),
+        () => {
+          val end = System.nanoTime() + 60L * 1000000000L
+          while (sc.statusTracker.getActiveJobIds.isEmpty && System.nanoTime() < end)
+            Thread.sleep(20)
+          throw new IllegalStateException("pin failed")
+        }))
+    }
+    assert(err.getMessage == "pin failed")
+    assert((System.nanoTime() - t0) / 1e9 < 60, "pinAll outlived the sibling's job")
+    // the status store trails the scheduler by one listener-bus event
+    eventually(timeout(5.seconds), interval(20.millis)) {
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    }
+    // (2) a description the caller sets is on every job the pins run
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.job.tags", ""),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobDescription("pinAll probe")
+    try {
+      val counts = Guarded.pinAll(spark)(Seq(2, 3).map(n =>
+        () => sc.parallelize(0 until n, n).count()))
+      assert(counts == Seq(2L, 3L))
+      def pinJobs = seen.asScala.filter(_._1.contains("graft-pinall-"))
+      eventually(timeout(5.seconds), interval(20.millis)) {
+        assert(pinJobs.size == 2)
+      }
+      assert(pinJobs.forall(_._2 == "pinAll probe"), pinJobs)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("an identical-doc cluster of 5 yields exactly C(5,2) minhash pairs") {

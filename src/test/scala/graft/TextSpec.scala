@@ -213,7 +213,7 @@ class TextSpec extends SparkTestBase {
     assert(m("rep") < 0.2, s"repetitive text must compress hard: ${m("rep")}")
     assert(m("empty") == 1.0, "empty text is neutral, not a crash")
     // deterministic across partitionings (fixed deflate level + impl)
-    val q = graft.queries.TextQueries.queries("q_compress_ratio")
+    val q = SparkEntry.queries("q_compress_ratio")
     assert(q(spark, sf).collect().sameElements(q(spark, sf).collect()))
   }
 
@@ -262,7 +262,7 @@ class TextSpec extends SparkTestBase {
   test("q_bpe_tokenize equals the independent driver-side encoder on sf0.001") {
     val merges = graft.queries.TextQueries.bpeModel(spark, sf)
     assert(merges.length == 10)
-    val got = graft.queries.TextQueries.queries("q_bpe_tokenize")(spark, sf)
+    val got = SparkEntry.queries("q_bpe_tokenize")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.operators.Dedup.tokens(col("text")).as("toks"))
@@ -301,7 +301,7 @@ class TextSpec extends SparkTestBase {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
     val vocab = vocabDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = refBpe(vocab, rounds = 10)
-    val got = graft.queries.TextQueries.queries("q_bpe_vocab")(spark, sf)
+    val got = SparkEntry.queries("q_bpe_vocab")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
@@ -317,7 +317,7 @@ class TextSpec extends SparkTestBase {
   }
 
   test("q_bm25_topk: BM25 ranking properties on the real fixture") {
-    val rows = graft.queries.TextQueries.queries("q_bm25_topk")(spark, sf).collect()
+    val rows = SparkEntry.queries("q_bm25_topk")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 100)
     // scores strictly positive (idf of ln(1+x), x>0) and sorted
     // (score desc, doc_id asc tiebreak) — the TakeOrdered contract
@@ -339,9 +339,9 @@ class TextSpec extends SparkTestBase {
   }
 
   test("bm25Score serving ≡ q_bm25_topk batch pipeline on the real fixture") {
-    val serve = graft.queries.TextQueries.queries("q_bm25_serve")(spark, sf)
+    val serve = SparkEntry.queries("q_bm25_serve")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val topk = graft.queries.TextQueries.queries("q_bm25_topk")(spark, sf)
+    val topk = SparkEntry.queries("q_bm25_topk")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
     assert(topk.nonEmpty)
     topk.foreach { case (id, s) =>
@@ -356,7 +356,7 @@ class TextSpec extends SparkTestBase {
   }
 
   test("q_bm25_multi: per-query ranked lists, each doc matches its query's terms") {
-    val rows = graft.queries.TextQueries.queries("q_bm25_multi")(spark, sf)
+    val rows = SparkEntry.queries("q_bm25_multi")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val byQuery = rows.groupBy(_._1)
     assert(byQuery.keySet == Set(1L, 2L, 3L), s"queries: ${byQuery.keySet}")
@@ -384,7 +384,7 @@ class TextSpec extends SparkTestBase {
   }
 
   test("q_rank_fusion: rrf arithmetic consistent with the emitted ranks, top-20 sorted") {
-    val rows = graft.queries.TextQueries.queries("q_rank_fusion")(spark, sf)
+    val rows = SparkEntry.queries("q_rank_fusion")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.length == 20)
     rows.foreach { case (id, r1, r2, rrf) =>
@@ -410,7 +410,7 @@ class TextSpec extends SparkTestBase {
     // run the same pipeline via a temp dir parquet (queries take a dir)
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
     frame.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.TextQueries.queries("q_bm25_topk")(spark, dir)
+    val out = SparkEntry.queries("q_bm25_topk")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(!out.contains(4L), "doc without query terms must not score")
     assert(out(1L) > out(3L), "longer doc with same tf must score lower (length norm)")
@@ -435,7 +435,7 @@ class TextSpec extends SparkTestBase {
     // the query's banding column vs a direct driver-side eval of the
     // same expression — guards the query wiring (shingle n, bands,
     // rowsPerBand, seed) independently of the DuckDB oracle
-    val rows = graft.queries.TextQueries.queries("q_minhash_sigs")(spark, sf)
+    val rows = SparkEntry.queries("q_minhash_sigs")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(25)
@@ -453,7 +453,7 @@ class TextSpec extends SparkTestBase {
   }
 
   test("q_zipf_fit matches a driver-side log-log OLS on the same top-200") {
-    val row = graft.queries.TextQueries.queries("q_zipf_fit")(spark, sf)
+    val row = SparkEntry.queries("q_zipf_fit")(spark, sf)
       .collect().head
     // term counts via the engine tokenizer, fold + OLS re-done in Scala
     val tf = Tables.documents(spark, sf)
