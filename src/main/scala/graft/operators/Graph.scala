@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType,
+  StructField, StructType}
 
 /** Iterative graph analytics over edge relations (the power-iteration
   * family, complementing [[Dedup.connectedComponents]]' pointer-jumping).
@@ -129,14 +132,10 @@ object Graph {
         nodes.join(sg, Seq("node"), "left")
           .select(col("node"), (coalesce(col("w"), lit(0.0)) / lit(sumW)).as("p"))
     }).localCheckpoint(true)
-    val useBroadcast = n <= maxBroadcastNodes
-    logger.info(s"pageRank: $m edges, $n nodes -> distributed, " +
-      (if (useBroadcast) "broadcast rank join"
-       else s"shuffle-hash rank join (over maxBroadcastNodes=$maxBroadcastNodes)"))
+    val side = scoreSide("pageRank", "rank", m, n, maxBroadcastNodes)
     var ranks = tele.select(col("node"), col("p").as("rank"))
     for (_ <- 1 to iterations) {
-      val rankSide = if (useBroadcast) broadcast(ranks)
-                     else ranks.hint("shuffle_hash")
+      val rankSide = side(ranks)
       val contribs = eDeg
         .join(rankSide, eDeg("src") === rankSide("node"))
         .select(col("dst").as("node"),
@@ -149,6 +148,21 @@ object Graph {
             lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
     }
     ranks
+  }
+
+  /** The count-guarded score side shared by the distributed loops of
+    * [[pageRank]], [[hits]] and [[sssp]]: at or under `maxBroadcastNodes`
+    * measured nodes the per-round score relation broadcasts, above it the
+    * join runs shuffle-hash — the 100 TB path never builds an unbounded
+    * broadcast. Logs the choice with the operator's edge and node counts.
+    */
+  private def scoreSide(op: String, join: String, m: Long, n: Long,
+                        maxBroadcastNodes: Long): DataFrame => DataFrame = {
+    val useBroadcast = n <= maxBroadcastNodes
+    logger.info(s"$op: $m edges, $n nodes -> distributed, " +
+      (if (useBroadcast) s"broadcast $join join"
+       else s"shuffle-hash $join join (over maxBroadcastNodes=$maxBroadcastNodes)"))
+    df => if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
   }
 
   /** HITS (Kleinberg's hubs & authorities) over a DIRECTED edge relation
@@ -191,11 +205,11 @@ object Graph {
         hitsLocal(e, iterations)
     } { (e, m) =>
       require(m > 0, "hits over an empty edge set")
-      hitsDistributed(e, iterations, maxBroadcastNodes)
+      hitsDistributed(e, m, iterations, maxBroadcastNodes)
     }
   }
 
-  private def hitsDistributed(e0: DataFrame, iterations: Int,
+  private def hitsDistributed(e0: DataFrame, m: Long, iterations: Int,
                               maxBroadcastNodes: Long): DataFrame = {
     val e = e0.repartition(col("src")).localCheckpoint(true)
     val hubNodes = e.select(col("src").as("node")).distinct()
@@ -206,9 +220,8 @@ object Graph {
     // few-sources/many-destinations graph would pass a hub-only guard
     // and then broadcast the huge authority relation every round
     val na = e.select(col("dst")).distinct().count()
-    val useBroadcast = math.max(nh, na) <= maxBroadcastNodes
-    def scoreSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    val side = scoreSide("hits", "score", m, math.max(nh, na),
+      maxBroadcastNodes)
     // L1 normalizer: the sum attach references `raw` twice, so `raw` is
     // CHECKPOINTED first — against a materialized leaf the double
     // reference costs one cached-block re-read, while against the live
@@ -226,11 +239,11 @@ object Graph {
     var hub = hubNodes.withColumn("h", lit(1.0 / nh))
     var auth: DataFrame = null
     for (_ <- 1 to iterations) {
-      val hs = scoreSide(hub)
+      val hs = side(hub)
       auth = l1(e.join(hs, e("src") === hs("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a"))
         .select(col("dst").as("node"), col("a")), "a")
-      val as = scoreSide(auth)
+      val as = side(auth)
       hub = l1(e.join(as, e("dst") === as("node"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
         .select(col("src").as("node"), col("h")), "h")
@@ -241,71 +254,19 @@ object Graph {
   }
 
   /** The identical recurrence as a driver loop — the [[localRun]] twin
-    * for HITS. Hub/authority indices assigned in first-seen edge order;
-    * pure function of the collected edge list.
+    * for HITS. Hubs (srcs) and authorities (dsts) take indices in two
+    * separate [[NodeIndex]]es, each in first-seen edge order; pure
+    * function of the collected edge list.
     */
   private def hitsLocal(e: DataFrame, iterations: Int): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema.fields(0).dataType
-    // ALL-LONG fast path (localRunLong doc): primitive collect + LongMap
-    // indexes — same first-seen order, same float accumulation
-    if (dt == org.apache.spark.sql.types.LongType) {
-      val cols = Guarded.collectLongCols(e, 2)
-      val (srcs, dsts) = (cols(0), cols(1))
-      val m = srcs.length
-      val hIdx = new scala.collection.mutable.LongMap[Int](math.max(16, m / 2))
-      val aIdx = new scala.collection.mutable.LongMap[Int](math.max(16, m / 2))
-      val hOrder = new scala.collection.mutable.ArrayBuilder.ofLong
-      val aOrder = new scala.collection.mutable.ArrayBuilder.ofLong
-      val srcIx = new Array[Int](m)
-      val dstIx = new Array[Int](m)
-      var i = 0
-      while (i < m) {
-        val s = srcs(i)
-        srcIx(i) = hIdx.getOrElse(s, {
-          val k = hIdx.size; hIdx.update(s, k); hOrder += s; k })
-        val d = dsts(i)
-        dstIx(i) = aIdx.getOrElse(d, {
-          val k = aIdx.size; aIdx.update(d, k); aOrder += d; k })
-        i += 1
-      }
-      return hitsIterate(spark, e, iterations, srcIx, dstIx,
-        hIdx.size, aIdx.size,
-        hOrder.result().map(x => x: Any), aOrder.result().map(x => x: Any))
-    }
-    // bounded by the caller's localThreshold guard; internal-format
-    // collect — same row order, so index order and float sums unchanged
-    val rows = Guarded.collectInternal(e)
-    val hIdx = new java.util.HashMap[Any, Integer]()
-    val aIdx = new java.util.HashMap[Any, Integer]()
-    val hOrder = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val aOrder = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val m = rows.length
+    val edges = new LocalEdges(e, 2)
+    val (hubs, auths) = (new NodeIndex(edges), new NodeIndex(edges))
+    val m = edges.m
     val srcIx = new Array[Int](m)
     val dstIx = new Array[Int](m)
     var i = 0
-    while (i < m) {
-      val s = rows(i).get(0, dt)
-      var si = hIdx.get(s)
-      if (si == null) { si = hIdx.size(); hIdx.put(s, si); hOrder += s }
-      srcIx(i) = si.intValue()
-      val d = rows(i).get(1, dt)
-      var di = aIdx.get(d)
-      if (di == null) { di = aIdx.size(); aIdx.put(d, di); aOrder += d }
-      dstIx(i) = di.intValue()
-      i += 1
-    }
-    hitsIterate(spark, e, iterations, srcIx, dstIx,
-      hIdx.size(), aIdx.size(), hOrder.toSeq, aOrder.toSeq)
-  }
-
-  /** The HITS recurrence + output assembly shared by both local index
-    * builds (boxed and all-long) — identical arithmetic/order.
-    */
-  private def hitsIterate(spark: org.apache.spark.sql.SparkSession,
-      e: DataFrame, iterations: Int, srcIx: Array[Int], dstIx: Array[Int],
-      nh: Int, na: Int, hOrder: Seq[Any], aOrder: Seq[Any]): DataFrame = {
-    val m = srcIx.length
+    while (i < m) { srcIx(i) = hubs.add(0, i); dstIx(i) = auths.add(1, i); i += 1 }
+    val (nh, na) = (hubs.size, auths.size)
     var hub = Array.fill(nh)(1.0 / nh)
     var auth = new Array[Double](na)
     def normalize(v: Array[Double]): Array[Double] = {
@@ -323,16 +284,12 @@ object Graph {
       while (j < m) { h(srcIx(j)) += auth(dstIx(j)); j += 1 }
       hub = normalize(h)
     }
-    val out = aOrder.zipWithIndex.map { case (n, k) =>
-      Row(Guarded.extValue(n), "auth", auth(k)) } ++
-      hOrder.zipWithIndex.map { case (n, k) =>
-        Row(Guarded.extValue(n), "hub", hub(k)) }
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      StructField("kind", org.apache.spark.sql.types.StringType,
-        nullable = false),
-      StructField("score", DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1), schema)
+    localFrame(e.sparkSession, StructType(Seq(
+        e.schema.fields(0).copy(name = "node"),
+        StructField("kind", StringType, nullable = false),
+        StructField("score", DoubleType, nullable = false))),
+      Seq.tabulate(na)(k => Row(auths.node(k), "auth", auth(k))) ++
+        Seq.tabulate(nh)(k => Row(hubs.node(k), "hub", hub(k))))
   }
 
   /** Exact triangle census of an undirected simple graph given as
@@ -464,16 +421,12 @@ object Graph {
       val ePart = e.repartition(col("src")).localCheckpoint(true)
       val nodes = ePart.select(col("src").as("node")).distinct()
         .localCheckpoint(true)
-      val n = nodes.count()
-      val useBroadcast = n <= maxBroadcastNodes
-      logger.info(s"sssp: $m edges, $n nodes -> distributed, " +
-        (if (useBroadcast) "broadcast frontier join"
-         else s"shuffle-hash frontier join (over maxBroadcastNodes=$maxBroadcastNodes)"))
+      val side = scoreSide("sssp", "frontier", m, nodes.count(),
+        maxBroadcastNodes)
       var dist = seedNodes.join(nodes, Seq("node"))
         .select(col("node"), lit(0L).as("dist")).localCheckpoint(true)
       for (_ <- 1 to rounds) {
-        val distSide = if (useBroadcast) broadcast(dist)
-                       else dist.hint("shuffle_hash")
+        val distSide = side(dist)
         val relaxed = ePart
           .join(distSide, ePart("src") === distSide("node"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
@@ -486,7 +439,8 @@ object Graph {
   }
 
   /** The identical relaxation as a driver array loop — the [[localRun]]
-    * twin for [[sssp]]. Exact integer math; pure function of the
+    * twin for [[sssp]]. Nodes take indices src then dst, interleaved
+    * per row. Exact integer math; pure function of the
     * collected edge list + seed set. The guard bounds only EDGES, so
     * the seed relation is semi-joined to the edge srcs before its
     * collect — a huge seeds input with a tiny graph collects at most
@@ -494,31 +448,19 @@ object Graph {
     */
   private def ssspLocal(e: DataFrame, seedNodes: DataFrame,
                         rounds: Int): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema.fields(0).dataType
-    if (dt == org.apache.spark.sql.types.LongType)
-      return ssspLocalLong(e, seedNodes, rounds)
-    // bounded by the caller's localThreshold guard; internal-format
-    // collect — same row order, so index order is unchanged
-    val rows = Guarded.collectInternal(e)
-    val idx = new java.util.HashMap[Any, Integer]()
-    val order = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def ix(a: Any): Int = {
-      var i = idx.get(a)
-      if (i == null) { i = idx.size(); idx.put(a, i); order += a }
-      i.intValue()
-    }
-    val m = rows.length
+    val edges = new LocalEdges(e, 3)
+    val ix = new NodeIndex(edges)
+    val m = edges.m
     val srcIx = new Array[Int](m); val dstIx = new Array[Int](m)
     val w = new Array[Long](m)
-    val srcSeen = new java.util.HashSet[Any]()
+    val srcSeen = new java.util.BitSet()
     var i = 0
     while (i < m) {
-      srcIx(i) = ix(rows(i).get(0, dt)); srcSeen.add(rows(i).get(0, dt))
-      dstIx(i) = ix(rows(i).get(1, dt)); w(i) = rows(i).getLong(2)
+      srcIx(i) = ix.add(0, i); srcSeen.set(srcIx(i))
+      dstIx(i) = ix.add(1, i); w(i) = edges.long(2, i)
       i += 1
     }
-    val n = idx.size()
+    val n = ix.size
     val INF = Long.MaxValue
     val dist = Array.fill(n)(INF)
     // seeds∩universe only: universe = distinct src (the distributed
@@ -528,60 +470,7 @@ object Graph {
     // never materializes more seed rows than the graph has nodes.
     val srcNodes = e.select(col(e.columns(0)).as("node")).distinct()
     Guarded.collectInternal(seedNodes.join(srcNodes, Seq("node"))).foreach { r =>
-      val a = r.get(0, dt)
-      if (srcSeen.contains(a)) dist(ix(a)) = 0L
-    }
-    for (_ <- 1 to rounds) {
-      val prev = dist.clone()
-      var j = 0
-      while (j < m) {
-        if (prev(srcIx(j)) != INF) {
-          val cand = prev(srcIx(j)) + w(j)
-          if (cand < dist(dstIx(j))) dist(dstIx(j)) = cand
-        }
-        j += 1
-      }
-    }
-    val out = order.zipWithIndex.collect {
-      case (node, k) if dist(k) != INF => Row(Guarded.extValue(node), dist(k))
-    }
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      StructField("dist", org.apache.spark.sql.types.LongType,
-        nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1), schema)
-  }
-
-  /** [[ssspLocal]] over ALL-LONG node ids — primitive collect + LongMap
-    * index (the localRunLong discipline); identical index order and
-    * exact-integer relaxation.
-    */
-  private def ssspLocalLong(e: DataFrame, seedNodes: DataFrame,
-                            rounds: Int): DataFrame = {
-    val spark = e.sparkSession
-    val cols = Guarded.collectLongCols(e, 3)
-    val (srcs, dsts, w) = (cols(0), cols(1), cols(2))
-    val m = srcs.length
-    val idx = new scala.collection.mutable.LongMap[Int](math.max(16, m / 2))
-    val order = new scala.collection.mutable.ArrayBuilder.ofLong
-    def ix(a: Long): Int = idx.getOrElse(a, {
-      val k = idx.size; idx.update(a, k); order += a; k })
-    val srcIx = new Array[Int](m); val dstIx = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      srcIx(i) = ix(srcs(i))
-      dstIx(i) = ix(dsts(i))
-      i += 1
-    }
-    val n = idx.size
-    val srcSeen = new java.util.BitSet(n)
-    i = 0
-    while (i < m) { srcSeen.set(srcIx(i)); i += 1 }
-    val INF = Long.MaxValue
-    val dist = Array.fill(n)(INF)
-    val srcNodes = e.select(col(e.columns(0)).as("node")).distinct()
-    Guarded.collectInternal(seedNodes.join(srcNodes, Seq("node"))).foreach { r =>
-      val k = idx.getOrElse(r.getLong(0), -1)
+      val k = ix.find(r)
       if (k >= 0 && srcSeen.get(k)) dist(k) = 0L
     }
     for (_ <- 1 to rounds) {
@@ -595,14 +484,10 @@ object Graph {
         j += 1
       }
     }
-    val nodes = order.result()
-    val out = nodes.iterator.zipWithIndex.collect {
-      case (node, k) if dist(k) != INF => Row(node, dist(k)) }.toSeq
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      StructField("dist", org.apache.spark.sql.types.LongType,
-        nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    localFrame(e.sparkSession, StructType(Seq(
+        e.schema.fields(0).copy(name = "node"),
+        StructField("dist", LongType, nullable = false))),
+      (0 until n).filter(dist(_) != INF).map(k => Row(ix.node(k), dist(k))))
   }
 
   /** k-core peel curve: `rounds` synchronous peeling rounds over an
@@ -664,14 +549,13 @@ object Graph {
         }
         r += 1
       }
-      val schema = StructType(Seq(
-        StructField("round", org.apache.spark.sql.types.LongType, false),
-        StructField("n_nodes", org.apache.spark.sql.types.LongType, false),
-        StructField("n_edges", org.apache.spark.sql.types.LongType, false)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(curve.toSeq, 1), schema)
+      localFrame(spark, peelSchema, curve.toSeq)
     }
   }
+
+  /** `(round, n_nodes, n_edges)` — both [[kcorePeel]] paths' curve. */
+  private val peelSchema = StructType(
+    Seq("round", "n_nodes", "n_edges").map(StructField(_, LongType, false)))
 
   /** Synchronous label propagation (Raghavan et al. 2007, the
     * community-detection baseline; public algorithm), made fully
@@ -726,31 +610,27 @@ object Graph {
 
   /** The identical synchronous mode update as a driver loop — the
     * [[localRun]] twin for [[lpaSteps]]. Mode ties break on the LABEL
-    * VALUE in the distributed path, so ids are sorted once (numeric for
-    * Long ids, lexicographic otherwise — matching Spark's column
-    * ordering for the types the engine and its tests use) and labels
-    * ride sorted positions internally.
+    * VALUE in the distributed path, so nodes are sorted once in Spark's
+    * order for the id type ([[NodeIndex.compare]]) and labels ride
+    * sorted positions internally.
     */
   private def lpaLocal(e: DataFrame, rounds: Int): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema.fields(0).dataType
-    // bounded by the caller's localThreshold guard; internal-format
-    // collect — UTF8String ids normalize through toString below exactly
-    // like external Strings did
-    val rows = Guarded.collectInternal(e)
-    val ids = rows.flatMap(r => Seq(r.get(0, dt), r.get(1, dt))).distinct
-    val sorted: Array[Any] =
-      if (ids.forall(_.isInstanceOf[Long]))
-        ids.map(_.asInstanceOf[Long]).sorted.map(_.asInstanceOf[Any]).toArray
-      else ids.map(_.toString).sorted.map(_.asInstanceOf[Any]).toArray
-    val idx = sorted.zipWithIndex.toMap
-    def ofRow(a: Any): Int =
-      idx(if (a.isInstanceOf[Long]) a else a.toString)
-    val n = sorted.length
+    val edges = new LocalEdges(e, 2)
+    val ix = new NodeIndex(edges)
+    val m = edges.m
+    val ua = new Array[Int](m); val va = new Array[Int](m)
+    var i = 0
+    while (i < m) { ua(i) = ix.add(0, i); va(i) = ix.add(1, i); i += 1 }
+    val n = ix.size
+    val sorted = Array.range(0, n).sortWith(ix.compare(_, _) < 0)
+    val pos = new Array[Int](n)
+    for (p <- 0 until n) pos(sorted(p)) = p
     val adj = Array.fill(n)(scala.collection.mutable.SortedSet.empty[Int])
-    rows.foreach { r =>
-      val a = ofRow(r.get(0, dt)); val b = ofRow(r.get(1, dt))
+    i = 0
+    while (i < m) {
+      val a = pos(ua(i)); val b = pos(va(i))
       if (a != b) { adj(a) += b; adj(b) += a }
+      i += 1
     }
     var lab = Array.tabulate(n)(identity) // label = own sorted position
     for (_ <- 1 to rounds) {
@@ -766,11 +646,10 @@ object Graph {
       }
       lab = next
     }
-    val out = (0 until n).map(i => Row(sorted(i), sorted(lab(i))))
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      e.schema.fields(0).copy(name = "label")))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    localFrame(e.sparkSession, StructType(Seq(
+        e.schema.fields(0).copy(name = "node"),
+        e.schema.fields(0).copy(name = "label"))),
+      (0 until n).map(p => Row(ix.node(sorted(p)), ix.node(sorted(lab(p))))))
   }
 
   /** Deterministic random walks (the node2vec/DeepWalk corpus builder —
@@ -864,28 +743,18 @@ object Graph {
   }
 
   /** The identical synchronous peel as a driver array loop — the
-    * [[localRun]] twin for [[kcorePeel]]. Node ids stay opaque hash
-    * keys; counts are a pure function of the collected edge list.
+    * [[localRun]] twin for [[kcorePeel]]. Nodes take indices u then v,
+    * interleaved per row; counts are a pure function of the collected
+    * edge list.
     */
   private def kcoreLocal(e: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema.fields(0).dataType
-    // bounded by the caller's localThreshold guard; internal-format
-    // collect (Guarded.collectInternal doc)
-    val rows = Guarded.collectInternal(e)
-    val idx = new java.util.HashMap[Any, Integer]()
-    def ix(a: Any): Int = {
-      var i = idx.get(a)
-      if (i == null) { i = idx.size(); idx.put(a, i) }
-      i.intValue()
-    }
-    val m = rows.length
+    val edges = new LocalEdges(e, 2)
+    val ix = new NodeIndex(edges)
+    val m = edges.m
     val ua = new Array[Int](m); val va = new Array[Int](m)
     var i = 0
-    while (i < m) {
-      ua(i) = ix(rows(i).get(0, dt)); va(i) = ix(rows(i).get(1, dt)); i += 1
-    }
-    val n = idx.size()
+    while (i < m) { ua(i) = ix.add(0, i); va(i) = ix.add(1, i); i += 1 }
+    val n = ix.size
     var eAlive = Array.fill(m)(true)
     def census: (Long, Long) = {
       val seen = new Array[Boolean](n)
@@ -918,49 +787,27 @@ object Graph {
       val c = census; curve += Row(r.toLong, c._1, c._2)
       r += 1
     }
-    val schema = StructType(Seq(
-      StructField("round", org.apache.spark.sql.types.LongType, false),
-      StructField("n_nodes", org.apache.spark.sql.types.LongType, false),
-      StructField("n_edges", org.apache.spark.sql.types.LongType, false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(curve.toSeq, 1), schema)
+    localFrame(e.sparkSession, peelSchema, curve.toSeq)
   }
 
   /** The identical recurrence as a driver array loop — see the fast-path
-    * note on [[pageRank]]. Node ids stay whatever type the caller used
-    * (keys in a hash index); first-seen order assigns indices, so the
+    * note on [[pageRank]]. Srcs take indices in first-seen row order; a
+    * dst that is never a src finds −1 and its contribution drops. The
     * result is a pure function of the collected edge list.
     */
   private def localRun(e: DataFrame, seeds: Option[DataFrame],
                        iterations: Int, damping: Double): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema.fields(0).dataType
-    if (dt == org.apache.spark.sql.types.LongType)
-      return localRunLong(e, seeds, iterations, damping)
-    // bounded by the caller's localThreshold guard; internal-format
-    // collect (Guarded.collectInternal doc) — same row order as
-    // collect(), so index assignment and float sums are unchanged
-    val rows = Guarded.collectInternal(e)
-    val idx = new java.util.HashMap[Any, Integer]()
-    val order = scala.collection.mutable.ArrayBuffer.empty[Any]
-    rows.foreach { r =>
-      val s = r.get(0, dt)
-      if (!idx.containsKey(s)) { idx.put(s, idx.size()); order += s }
-    }
-    val n = idx.size()
-    val m = rows.length
+    val edges = new LocalEdges(e, 2)
+    val ix = new NodeIndex(edges)
+    val m = edges.m
     val srcIx = new Array[Int](m)
+    var i = 0
+    while (i < m) { srcIx(i) = ix.add(0, i); i += 1 }
+    val n = ix.size
     val dstIx = new Array[Int](m) // -1: dst never a src → contribution drops
     val outDeg = new Array[Long](n)
-    var i = 0
-    while (i < m) {
-      val s = idx.get(rows(i).get(0, dt))
-      srcIx(i) = s
-      outDeg(s) += 1
-      val d = idx.get(rows(i).get(1, dt))
-      dstIx(i) = if (d == null) -1 else d.intValue()
-      i += 1
-    }
+    i = 0
+    while (i < m) { outDeg(srcIx(i)) += 1; dstIx(i) = ix.find(1, i); i += 1 }
     // teleport vector: uniform, or normalized over seeds∩nodes — the
     // seed collect is bounded by the same guard (seeds ⊆ nodes < edges)
     val p = seeds match {
@@ -969,73 +816,7 @@ object Graph {
         val arr = new Array[Double](n)
         var sumW = 0.0
         Guarded.collectInternal(s).foreach { r =>
-          val k = idx.get(r.get(0, dt))
-          if (k != null) { arr(k) += r.getDouble(1); sumW += r.getDouble(1) }
-        }
-        require(sumW > 0, "personalized teleport needs in-graph seeds")
-        arr.map(_ / sumW)
-    }
-    var rank = p.clone()
-    for (_ <- 1 to iterations) {
-      val acc = new Array[Double](n)
-      var j = 0
-      while (j < m) {
-        val t = dstIx(j)
-        if (t >= 0) acc(t) += rank(srcIx(j)) / outDeg(srcIx(j))
-        j += 1
-      }
-      rank = Array.tabulate(n)(k => (1.0 - damping) * p(k) + damping * acc(k))
-    }
-    val out = order.zipWithIndex.map { case (node, k) =>
-      Row(Guarded.extValue(node), rank(k)) }
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      StructField("rank", DoubleType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, 1), schema)
-  }
-
-  /** [[localRun]] over ALL-LONG node ids (the trade/co-purchase graphs
-    * after the r18 narrow-type migration): primitive-array collect
-    * (Guarded.collectLongCols) + a LongMap index instead of boxed-key
-    * HashMap passes — same first-seen index assignment, same edge
-    * order, bit-identical float accumulation (measured r18: the boxed
-    * index build was a ~280 ms driver gap per pagerank-family query on
-    * a 1.16M-edge graph).
-    */
-  private def localRunLong(e: DataFrame, seeds: Option[DataFrame],
-                           iterations: Int, damping: Double): DataFrame = {
-    val spark = e.sparkSession
-    val cols = Guarded.collectLongCols(e, 2)
-    val (srcs, dsts) = (cols(0), cols(1))
-    val m = srcs.length
-    val idx = new scala.collection.mutable.LongMap[Int](math.max(16, m / 2))
-    val order = new scala.collection.mutable.ArrayBuilder.ofLong
-    var i = 0
-    while (i < m) {
-      val s = srcs(i)
-      if (!idx.contains(s)) { idx.update(s, idx.size); order += s }
-      i += 1
-    }
-    val n = idx.size
-    val srcIx = new Array[Int](m)
-    val dstIx = new Array[Int](m) // -1: dst never a src → contribution drops
-    val outDeg = new Array[Long](n)
-    i = 0
-    while (i < m) {
-      val s = idx(srcs(i))
-      srcIx(i) = s
-      outDeg(s) += 1
-      dstIx(i) = idx.getOrElse(dsts(i), -1)
-      i += 1
-    }
-    val p = seeds match {
-      case None => Array.fill(n)(1.0 / n)
-      case Some(sdf) =>
-        val arr = new Array[Double](n)
-        var sumW = 0.0
-        Guarded.collectInternal(sdf).foreach { r =>
-          val k = idx.getOrElse(r.getLong(0), -1)
+          val k = ix.find(r)
           if (k >= 0) { arr(k) += r.getDouble(1); sumW += r.getDouble(1) }
         }
         require(sumW > 0, "personalized teleport needs in-graph seeds")
@@ -1052,12 +833,133 @@ object Graph {
       }
       rank = Array.tabulate(n)(k => (1.0 - damping) * p(k) + damping * acc(k))
     }
-    val nodes = order.result()
-    val out = nodes.iterator.zipWithIndex
-      .map { case (node, k) => Row(node, rank(k)) }.toSeq
-    val schema = StructType(Seq(
-      e.schema.fields(0).copy(name = "node"),
-      StructField("rank", DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    localFrame(e.sparkSession, StructType(Seq(
+        e.schema.fields(0).copy(name = "node"),
+        StructField("rank", DoubleType, nullable = false))),
+      Seq.tabulate(n)(k => Row(ix.node(k), rank(k))))
+  }
+
+  /** The one output step of the driver twins: `rows` as a one-partition
+    * frame.
+    */
+  private def localFrame(spark: SparkSession, schema: StructType,
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** A bounded edge relation collected once for a driver twin, read by
+    * one or more [[NodeIndex]]es. The id type is read once from column 0
+    * of the projection [[Guarded.iterate]] checkpointed:
+    *   - `LongType` ids (every graph relation the engine builds) arrive
+    *     as primitive long columns — k·8 bytes/row instead of copied
+    *     UnsafeRows (measured r18: the pagerank edge collect was 377 ms
+    *     wall for 148 ms of task time, the rest the 1.16M-row copy +
+    *     object array ship). Every column must be a non-nullable long.
+    *   - any other id type arrives as copied internal rows
+    *     ([[Guarded.collectInternal]]).
+    * Row order is IDENTICAL to `collect()` either way (same RDD,
+    * partition-ordered concat), so first-seen index assignment and float
+    * accumulation order do not depend on the id type.
+    */
+  private final class LocalEdges(df: DataFrame, nCols: Int) {
+    val idType: DataType = df.schema.fields(0).dataType
+    val longIds: Boolean = idType == LongType
+    val longCols: Array[Array[Long]] =
+      if (longIds) collectLongCols(df, nCols) else null
+    val rows: Array[InternalRow] =
+      if (longIds) null else Guarded.collectInternal(df)
+    val m: Int = if (longIds) longCols(0).length else rows.length
+
+    /** A non-id long column (SSSP's weight) at row `i`. */
+    def long(c: Int, i: Int): Long =
+      if (longIds) longCols(c)(i) else rows(i).getLong(c)
+  }
+
+  private def collectLongCols(df: DataFrame, nCols: Int): Array[Array[Long]] = {
+    val parts = org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(df)
+      .mapPartitions { it =>
+        val bs = Array.fill(nCols)(new scala.collection.mutable.ArrayBuilder.ofLong)
+        it.foreach { r =>
+          var c = 0
+          while (c < nCols) { bs(c) += r.getLong(c); c += 1 }
+        }
+        Iterator.single(bs.map(_.result()))
+      }.collect()
+    Array.tabulate(nCols) { c =>
+      val out = new Array[Long](parts.iterator.map(_(c).length).sum)
+      var off = 0
+      parts.foreach { p =>
+        System.arraycopy(p(c), 0, out, off, p(c).length); off += p(c).length
+      }
+      out
+    }
+  }
+
+  /** The one dense node index of the graph driver twins: ids of the
+    * [[LocalEdges]] id columns map to 0, 1, 2, … in the order the twin
+    * [[add]]s them. `LongType` ids index primitives in a `LongMap` (the
+    * r18 fast path: the boxed-key index build was a ~280 ms driver gap
+    * per pagerank-family query on a 1.16M-edge graph); any other type
+    * hashes the internal value (`UTF8String` by bytes, boxed ints, …).
+    */
+  private final class NodeIndex(edges: LocalEdges) {
+    private val dt = edges.idType
+    private val longIds = edges.longIds
+    private val longIdx =
+      if (longIds) new scala.collection.mutable.LongMap[Int](math.max(16, edges.m / 2))
+      else null
+    private var longKeys = if (longIds) new Array[Long](16) else null
+    private val anyIdx = if (longIds) null else new java.util.HashMap[Any, Integer]()
+    private val anyKeys =
+      if (longIds) null else scala.collection.mutable.ArrayBuffer.empty[Any]
+    private var n = 0
+
+    def size: Int = n
+
+    /** The index of column `c`'s id at row `i`, assigning the next index
+      * on first sight.
+      */
+    def add(c: Int, i: Int): Int =
+      if (longIds) {
+        val a = edges.longCols(c)(i)
+        val k = longIdx.getOrElse(a, -1)
+        if (k >= 0) k
+        else {
+          if (n == longKeys.length) longKeys = java.util.Arrays.copyOf(longKeys, 2 * n)
+          longIdx.update(a, n); longKeys(n) = a; n += 1; n - 1
+        }
+      } else {
+        val a = edges.rows(i).get(c, dt)
+        val k = anyIdx.get(a)
+        if (k != null) k.intValue
+        else { anyIdx.put(a, n); anyKeys += a; n += 1; n - 1 }
+      }
+
+    /** The index of column `c`'s id at row `i`; −1 when absent. */
+    def find(c: Int, i: Int): Int =
+      if (longIds) longIdx.getOrElse(edges.longCols(c)(i), -1)
+      else indexOf(edges.rows(i).get(c, dt))
+
+    /** The index of a seed row's id (field 0); −1 when absent. */
+    def find(seed: InternalRow): Int =
+      if (longIds) longIdx.getOrElse(seed.getLong(0), -1)
+      else indexOf(seed.get(0, dt))
+
+    private def indexOf(a: Any): Int = {
+      val k = anyIdx.get(a)
+      if (k == null) -1 else k.intValue
+    }
+
+    /** Node `k`'s id as an external value, for output rows. */
+    def node(k: Int): Any = if (longIds) longKeys(k) else toExternal(anyKeys(k))
+
+    /** Spark's ordering of nodes `a` and `b` for the id type (`String`s
+      * by UTF-8 bytes, not Java's UTF-16 `compareTo`).
+      */
+    def compare(a: Int, b: Int): Int =
+      if (longIds) java.lang.Long.compare(longKeys(a), longKeys(b))
+      else ordering.compare(anyKeys(a), anyKeys(b))
+
+    private lazy val toExternal = CatalystTypeConverters.createToScalaConverter(dt)
+    private lazy val ordering = TypeUtils.getInterpretedOrdering(dt)
   }
 }

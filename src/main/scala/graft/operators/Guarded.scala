@@ -54,45 +54,12 @@ object Guarded {
     * same partition order), so first-seen index assignment and float
     * accumulation order in the twins are unchanged. Callers read fields
     * with `get(i, dataType)` / typed getters; string columns surface as
-    * `UTF8String` (equal/hash by bytes — valid hash-map keys), and
-    * [[extValue]] maps them back for externally-typed output rows.
+    * `UTF8String` (equal/hash by bytes — valid hash-map keys).
     */
   def collectInternal(df: DataFrame)
       : Array[org.apache.spark.sql.catalyst.InternalRow] =
     org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(df)
       .map(_.copy()).collect()
-
-  /** Bounded collect of an ALL-LONG relation as primitive column
-    * arrays — the graph local twins' fast path. vs [[collectInternal]]
-    * this ships k·8 bytes/row of primitives instead of copied
-    * UnsafeRows (measured r18: the pagerank edge collect was 377 ms
-    * wall for 148 ms of task time — the rest was the 1.16M-row copy +
-    * object array ship), and the twins then index primitives instead
-    * of boxed keys. Row order is IDENTICAL to `collect()` (same RDD,
-    * partition-ordered concat), so first-seen index assignment and
-    * float accumulation order are unchanged. Columns must be
-    * non-nullable longs (every graph edge relation here is).
-    */
-  def collectLongCols(df: DataFrame, nCols: Int): Array[Array[Long]] = {
-    val parts = org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(df)
-      .mapPartitions { it =>
-        val bs = Array.fill(nCols)(new scala.collection.mutable.ArrayBuilder.ofLong)
-        it.foreach { r =>
-          var c = 0
-          while (c < nCols) { bs(c) += r.getLong(c); c += 1 }
-        }
-        Iterator.single(bs.map(_.result()))
-      }.collect()
-    Array.tabulate(nCols) { c =>
-      val total = parts.iterator.map(_(c).length).sum
-      val out = new Array[Long](total)
-      var off = 0
-      parts.foreach { p =>
-        System.arraycopy(p(c), 0, out, off, p(c).length); off += p(c).length
-      }
-      out
-    }
-  }
 
   /** Run independent eager pins concurrently and return their results
     * in `pins` order. Overlapping pins only overlaps their job-submission
@@ -132,13 +99,4 @@ object Guarded {
   }
 
   private val pinAllCalls = new AtomicLong
-
-  /** Internal→external value for output-row assembly (UTF8String →
-    * String; everything else is already the external representation for
-    * the types the twins carry: boxed longs/ints/doubles).
-    */
-  def extValue(a: Any): Any = a match {
-    case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-    case x => x
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Graph, Layout}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-10 operator families: power-iteration PageRank, Z-order layout
@@ -40,15 +41,30 @@ class GraphLayoutSpec extends SparkTestBase {
 
   test("pageRank: driver fast path ≡ forced distributed loop") {
     val rnd = new scala.util.Random(7)
-    val es = Seq.fill(500)((s"n${rnd.nextInt(50)}", s"n${rnd.nextInt(50)}"))
-    val sym = (es ++ es.map(_.swap)).toDF("src", "dst")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val fast = toMap(Graph.pageRank(sym, iterations = 5))
-    val dist = toMap(Graph.pageRank(sym, iterations = 5, localThreshold = 0L))
-    assert(fast.keySet == dist.keySet)
-    fast.foreach { case (k, v) =>
-      assert(math.abs(v - dist(k)) < 1e-12, s"$k: $v vs ${dist(k)}")
+    val ids = Seq.fill(500)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+    val longSym = (ids ++ ids.map(_.swap)).toDF("src", "dst")
+    val strSym = (ids ++ ids.map(_.swap))
+      .map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
+    def ranks(sym: DataFrame, localThreshold: Long): Map[Any, Double] =
+      Graph.pageRank(sym, iterations = 5, localThreshold = localThreshold)
+        .collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    for (sym <- Seq(strSym, longSym)) {
+      val fast = ranks(sym, 2000000L)
+      val dist = ranks(sym, 0L)
+      assert(fast.keySet == dist.keySet)
+      fast.foreach { case (k, v) =>
+        assert(math.abs(v - dist(k)) < 1e-12, s"$k: $v vs ${dist(k)}")
+      }
+    }
+    // the id type picks the index (primitive Long vs hashed internal
+    // value), never the arithmetic: same edge rows ⇒ same first-seen
+    // indices ⇒ bit-identical ranks per node
+    val byLong = ranks(longSym, 2000000L)
+    val byStr = ranks(strSym, 2000000L)
+    assert(byLong.size == byStr.size)
+    byLong.foreach { case (k, v) =>
+      assert(java.lang.Double.doubleToLongBits(v) ==
+        java.lang.Double.doubleToLongBits(byStr(s"n$k")), s"$k: $v vs ${byStr(s"n$k")}")
     }
   }
 
@@ -67,6 +83,20 @@ class GraphLayoutSpec extends SparkTestBase {
     val dist = ranks(Seq(("a", 1.0)), forceDist = true)
     fast.foreach { case (k, v) =>
       assert(math.abs(v - dist(k)) < 1e-12, s"$k: $v vs ${dist(k)}") }
+    // the same graph and seeds on Long ids ('a' → 97, …; junk 'z' → 122)
+    val longSym = (es ++ es.map(_.swap))
+      .map { case (a, b) => (a.head.toLong, b.head.toLong) }.toDF("src", "dst")
+    val longSeeds = Seq(('a'.toLong, 1.0), ('z'.toLong, 9.0)).toDF("node", "w")
+    def longRanks(forceDist: Boolean) =
+      Graph.personalizedPageRank(longSym, longSeeds, iterations = 20,
+          localThreshold = if (forceDist) 0L else 2000000L)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (longFast, longDist) = (longRanks(false), longRanks(true))
+    assert(longFast.keySet == fast.keySet.map(_.head.toLong))
+    longFast.foreach { case (k, v) =>
+      assert(math.abs(v - longDist(k)) < 1e-12, s"long $k: $v vs ${longDist(k)}")
+      assert(math.abs(v - fast(k.toChar.toString)) < 1e-12, s"long $k vs string")
+    }
     // a seed outside the graph is dropped BEFORE normalization
     val withJunk = ranks(Seq(("a", 1.0), ("zz", 9.0)))
     fast.foreach { case (k, v) => assert(math.abs(v - withJunk(k)) < 1e-12) }
@@ -103,10 +133,15 @@ class GraphLayoutSpec extends SparkTestBase {
   private def distsOf(edges: Seq[(String, String, Long)], seeds: Seq[String],
       rounds: Int = 4, forceDist: Boolean = false): Map[String, Long] = {
     val sym = edges ++ edges.map { case (a, b, w) => (b, a, w) }
-    Graph.sssp(sym.toDF("src", "dst", "w"), seeds.toDF("node"),
-        rounds = rounds, localThreshold = if (forceDist) 0L else 2000000L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    distsOfDf(sym.toDF("src", "dst", "w"), seeds.toDF("node"), rounds, forceDist)
+      .map { case (k, v) => k.toString -> v }
   }
+
+  private def distsOfDf(edges: DataFrame, seeds: DataFrame, rounds: Int,
+      forceDist: Boolean): Map[Any, Long] =
+    Graph.sssp(edges, seeds,
+        rounds = rounds, localThreshold = if (forceDist) 0L else 2000000L)
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap
 
   test("sssp: later rounds improve an early expensive path (the Bellman-Ford min, not BFS)") {
     // a→z direct costs 9; a→b→c→z costs 1+1+1=3. A BFS keeps the hop-1
@@ -144,13 +179,26 @@ class GraphLayoutSpec extends SparkTestBase {
     val dist = distsOf(es, seeds, forceDist = true)
     assert(fast == dist, s"fast=$fast dist=$dist")
     assert(fast.values.exists(_ > 0) && fast(seeds.head) == 0L)
+    // the same graph on Long ids ("n<i>" → i)
+    def id(n: String) = n.stripPrefix("n").toLong
+    val longEs = es.flatMap { case (a, b, w) => Seq((id(a), id(b), w), (id(b), id(a), w)) }
+    for (force <- Seq(false, true)) {
+      val longDists = distsOfDf(longEs.toDF("src", "dst", "w"),
+        seeds.map(id).toDF("node"), rounds = 4, forceDist = force)
+      assert(longDists == fast.map { case (k, v) => id(k) -> v },
+        s"long ids force=$force: $longDists")
+    }
   }
 
   // ---- k-core (fixed-round synchronous peel) ----
 
   private def peelOf(edges: Seq[(String, String)], k: Int, rounds: Int,
       forceDist: Boolean = false): Seq[(Long, Long, Long)] =
-    Graph.kcorePeel(edges.toDF("u", "v"), k, rounds,
+    peelOfDf(edges.toDF("u", "v"), k, rounds, forceDist)
+
+  private def peelOfDf(edges: DataFrame, k: Int, rounds: Int,
+      forceDist: Boolean): Seq[(Long, Long, Long)] =
+    Graph.kcorePeel(edges, k, rounds,
         localThreshold = if (forceDist) 0L else 2000000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
@@ -180,6 +228,13 @@ class GraphLayoutSpec extends SparkTestBase {
     assert(fast == dist, s"fast=$fast dist=$dist")
     assert(fast.head._3 > 0 && fast.map(_._3).sliding(2)
       .forall(w => w.last <= w.head), "edge curve must be non-increasing")
+    // the same graph on Long ids ("n<i>" → i): the curve counts nodes
+    // and edges, so it must not depend on the id type
+    val longEs = es.map { case (a, b) =>
+      (a.stripPrefix("n").toLong, b.stripPrefix("n").toLong) }.toDF("u", "v")
+    for (force <- Seq(false, true))
+      assert(peelOfDf(longEs, k = 3, rounds = 5, forceDist = force) == fast,
+        s"long ids force=$force")
   }
 
   // ---- label propagation (synchronous, min-label ties) ----
@@ -198,6 +253,25 @@ class GraphLayoutSpec extends SparkTestBase {
     assert(lpaOf(es, 3) == want)
     assert(lpaOf(es, 3, forceDist = true) == want,
       "driver fast path must equal the forced distributed loop")
+  }
+
+  test("lpaSteps: Int and non-ASCII String ids — driver fast path ≡ forced distributed loop") {
+    def labels(df: DataFrame, forceDist: Boolean): Map[Any, Any] =
+      Graph.lpaSteps(df, rounds = 1,
+          localThreshold = if (forceDist) 0L else 2000000L)
+        .collect().map(r => r.get(0) -> r.get(1)).toMap
+    // Int ids stay Ints in the output rows
+    val ints = Seq((5, 9), (5, 10)).toDF("u", "v")
+    assert(labels(ints, forceDist = true) == Map(5 -> 9, 9 -> 5, 10 -> 5))
+    assert(labels(ints, forceDist = false) == labels(ints, forceDist = true))
+    // m ties between labels U+FF21 and U+1F600: Spark orders Strings by
+    // UTF-8 bytes (EF BC A1 < F0 9F 98 80), so U+FF21 is the min label —
+    // Java's UTF-16 compareTo would pick the surrogate pair instead
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    val strs = Seq(("m", fw), ("m", emoji)).toDF("u", "v")
+    val dist = labels(strs, forceDist = true)
+    assert(dist("m") == fw, dist)
+    assert(labels(strs, forceDist = false) == dist)
   }
 
   test("q_lpa_communities: members partition the node set") {
@@ -456,10 +530,15 @@ class GraphLayoutSpec extends SparkTestBase {
 
   private def hitsOf(edges: Seq[(String, String)],
       forceDist: Boolean = false): Map[(String, String), Double] =
-    Graph.hits(edges.toDF("src", "dst"), iterations = 5,
+    hitsOfDf(edges.toDF("src", "dst"), forceDist)
+      .map { case ((kind, n), v) => (kind, n.toString) -> v }
+
+  private def hitsOfDf(edges: DataFrame,
+      forceDist: Boolean): Map[(String, Any), Double] =
+    Graph.hits(edges, iterations = 5,
         localThreshold = if (forceDist) 0L else 2000000L)
       .collect()
-      .map(r => (r.getString(1), r.getString(0)) -> r.getDouble(2)).toMap
+      .map(r => (r.getString(1), r.get(0)) -> r.getDouble(2)).toMap
 
   test("hits: star authority dominates; L1 mass conserved per side; fast ≡ distributed") {
     // three hubs all endorse s1; s2 gets one endorsement
@@ -477,6 +556,17 @@ class GraphLayoutSpec extends SparkTestBase {
     assert(fast.keySet == dist.keySet)
     fast.foreach { case (k, v) =>
       assert(math.abs(v - dist(k)) < 1e-12, s"$k: $v vs ${dist(k)}")
+    }
+    // the same graph on Long ids (customers even, suppliers odd — the
+    // trade-graph convention), fast and forced-distributed
+    def id(n: String) = n.drop(1).toLong * 2 + (if (n.head == 's') 1 else 0)
+    val longEs = es.map { case (a, b) => (id(a), id(b)) }.toDF("src", "dst")
+    val want = fast.map { case ((kind, n), v) => (kind, id(n): Any) -> v }
+    for (force <- Seq(false, true)) {
+      val got = hitsOfDf(longEs, force)
+      assert(got.keySet == want.keySet, s"long ids force=$force")
+      got.foreach { case (k, v) =>
+        assert(math.abs(v - want(k)) < 1e-12, s"long ids force=$force $k") }
     }
   }
 
