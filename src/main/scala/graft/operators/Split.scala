@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * removes. Every operator here is a distributed DataFrame op:
   *
   *  - per-group fractional sampling = one shuffle on the group key
-  *    (window `row_number` over `rand(seed)`), O(1) state per row;
-  *  - anti-joins replace pandas merge-indicator;
+  *    (window `row_number` over a seeded content hash), O(1) state per row;
+  *  - anti-joins replace pandas merge-indicator ([[antiJoin]]); the v2
+  *    split needs none — it labels each row once per user;
   *  - no `collect`/`toPandas` anywhere — the 400-element driver-built
   *    IN-lists of v1 (`split_script.py:27-40`) become hash/sample labels
   *    computed on the executors.
@@ -200,15 +201,23 @@ object Split {
     * sample that downstream anti-joins must agree with.
     */
   def perGroupSample(df: DataFrame, key: String, frac: Double, seed: Long,
-      saltCols: Seq[String] = Nil): DataFrame = {
-    val salt = (if (saltCols.nonEmpty) saltCols else df.columns.toSeq).map(col)
-    val h = xxhash64(lit(seed) +: salt: _*)
-    val w = Window.partitionBy(col(key)).orderBy(h +: salt: _*)
-    val cnt = Window.partitionBy(col(key))
-    df.withColumn("__n", count(lit(1)).over(cnt))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= ceil(col("__n") * frac))
-      .drop("__n", "__rn")
+      saltCols: Seq[String] = Nil): DataFrame =
+    df.withColumn("__pick", seededPick(Seq(col(key)), frac, seed,
+        if (saltCols.nonEmpty) saltCols else df.columns.toSeq))
+      .filter(col("__pick"))
+      .drop("__pick")
+
+  /** True iff the row is among the first `ceil(n·frac)` of the `n` rows of
+    * its `part` partition, ranked by `xxhash64(seed, salt)` with ties broken
+    * by the salt columns. The count runs over the whole frame of the same
+    * ordered window, so both functions share one sort.
+    */
+  private def seededPick(part: Seq[Column], frac: Double, seed: Long,
+      salt: Seq[String]): Column = {
+    val order = salt.map(col)
+    val w = Window.partitionBy(part: _*).orderBy(xxhash64(lit(seed) +: order: _*) +: order: _*)
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    row_number().over(w) <= ceil(count(lit(1)).over(all) * frac)
   }
 
   /** J2/T4: left-anti complement (reference pandas merge-indicator,
@@ -221,25 +230,37 @@ object Split {
     * validation; 25% of each user's remaining rows → test; rest → train
     * (`new_split_script.py:6-14`).
     *
-    * Safe under EXACT duplicate rows: the anti-joins use value keys, so a
-    * naive construction that samples one copy of a duplicate into
-    * validation would remove ALL copies from the remainder (rows silently
-    * vanishing from every split). Each copy is disambiguated with a
-    * per-duplicate ordinal (`row_number` over the full row) that joins the
-    * value keys — duplicates split independently, and
+    * One hash exchange on `userId`, and every row is labeled once. Per
+    * user, the first `ceil(n·frac)` rows by the [[perGroupSample]] order
+    * (`xxhash64(seed, <input cols>, __dup)`) are validation; of the `m`
+    * rows left, the first `ceil(m·frac)` by `xxhash64(seed + 1, …)` are
+    * test, salted and tie-broken on `userId, movieId, rating, __dup`
+    * followed by the other input columns — the sample the reference's
+    * sample-then-anti-join composition draws. The rest is train. The
+    * three outputs are filters of that one labeled plan, each in the
+    * input's column order; no join, no broadcast.
+    *
+    * `__dup` numbers EXACT duplicate rows (`row_number` over the full
+    * row), so copies rank apart and split independently. Labels are per
+    * row, not per value key, so rows that share (userId, movieId, rating)
+    * but differ elsewhere (a MovieLens `timestamp`) are never dropped:
     * train ⊎ validation ⊎ test == input holds as a multiset.
     */
   def splitV2(ratings: DataFrame, frac: Double = 0.25, seed: Long = 1234L)
       : (DataFrame, DataFrame, DataFrame) = {
     val allCols = ratings.columns.toSeq
-    val dupW = Window.partitionBy(allCols.map(col): _*).orderBy(lit(1))
-    val base = ratings.withColumn("__dup", row_number().over(dupW))
     val keys = Seq("userId", "movieId", "rating", "__dup")
-    val validation = perGroupSample(base, "userId", frac, seed)
-    val remainder = antiJoin(base, validation, keys)
-    val test = perGroupSample(remainder, "userId", frac, seed + 1)
-    val train = antiJoin(remainder, test, keys)
-    (train.drop("__dup"), validation.drop("__dup"), test.drop("__dup"))
+    val dupW = Window.partitionBy(allCols.map(col): _*).orderBy(lit(1))
+    // every window below partitions by a superset of userId, so this one
+    // exchange serves them all
+    val base = ratings.repartition(col("userId"))
+      .withColumn("__dup", row_number().over(dupW))
+    val labeled = base
+      .withColumn("__val", seededPick(Seq(col("userId")), frac, seed, allCols :+ "__dup"))
+      .withColumn("__test", !col("__val") && seededPick(Seq(col("userId"), col("__val")),
+        frac, seed + 1, keys ++ allCols.filterNot(keys.contains)))
+    def out(c: Column) = labeled.filter(c).select(allCols.map(col): _*)
+    (out(!col("__val") && !col("__test")), out(col("__val")), out(col("__test")))
   }
 
   /** Distributed disjointness / completeness report (the invariant the

@@ -225,8 +225,13 @@ class PropertySpec extends SparkTestBase {
   test("splitV2 multiset-partitions arbitrary inputs (incl. duplicates)") {
     val rowGen = Gen.listOfN(60,
       Gen.zip(Gen.chooseNum(1, 5), Gen.chooseNum(1, 10), Gen.oneOf(1.0, 2.0)))
-    for (rows <- cases(rowGen, 3)) {
-      val r = rows.toDF("userId", "movieId", "rating")
+    // a small-range timestamp makes rows that share (userId, movieId,
+    // rating) but differ in another column: each must still land once
+    val stamped = Gen.listOfN(60, Gen.zip(Gen.chooseNum(1, 5), Gen.chooseNum(1, 10),
+      Gen.oneOf(1.0, 2.0), Gen.chooseNum(0L, 2L)))
+    val inputs = cases(rowGen, 3).map(_.toDF("userId", "movieId", "rating")) ++
+      cases(stamped, 3).map(_.toDF("userId", "movieId", "rating", "timestamp"))
+    for (r <- inputs) {
       val (train, v, t) = Split.splitV2(r, 0.25, 99L)
       val together = train.unionAll(v).unionAll(t)
       assert(together.count() == r.count())

@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.{Rank, Split}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 /** Split invariants (mirrors the reference's only asserts,
   * extension.py:150-152: train/val/test pairwise disjoint) plus the
@@ -28,6 +32,93 @@ class SplitSpec extends SparkTestBase {
     val (_, v2, _) = Split.splitV2(ratings, 0.25, 1234L)
     assert(v1.exceptAll(v2).count() == 0)
     assert(v2.exceptAll(v1).count() == 0)
+  }
+
+  /** The sample-then-anti-join composition of the reference v2 split (two
+    * [[Split.perGroupSample]] + two [[Split.antiJoin]] on the value keys
+    * plus the exact-duplicate ordinal), outputs in the input's column
+    * order. It drops rows that share (userId, movieId, rating) with a
+    * sampled row, so it is a reference only on inputs without such pairs.
+    */
+  private def splitV2ByAntiJoins(r: DataFrame, frac: Double, seed: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val allCols = r.columns.toSeq.map(col)
+    val base = r.withColumn("__dup",
+      row_number().over(Window.partitionBy(allCols: _*).orderBy(lit(1))))
+    val keys = Seq("userId", "movieId", "rating", "__dup")
+    val validation = Split.perGroupSample(base, "userId", frac, seed)
+    val remainder = Split.antiJoin(base, validation, keys)
+    val test = Split.perGroupSample(remainder, "userId", frac, seed + 1)
+    val train = Split.antiJoin(remainder, test, keys)
+    (train.select(allCols: _*), validation.select(allCols: _*), test.select(allCols: _*))
+  }
+
+  test("splitV2 ≡ the two-sample/two-anti-join composition, output by output") {
+    import spark.implicits._
+    val generated = (0 until 3).map { i =>
+      Gen.listOfN(60, Gen.zip(Gen.chooseNum(1, 5), Gen.chooseNum(1, 10), Gen.oneOf(1.0, 2.0)))
+        .pureApply(Gen.Parameters.default, Seed(42L + i))
+        .toDF("userId", "movieId", "rating")
+    }
+    for (r <- ratings +: generated; (frac, seed) <- Seq((0.25, 1234L), (0.4, 7L), (0.1, 99L))) {
+      val got = Split.splitV2(r, frac, seed)
+      val want = splitV2ByAntiJoins(r, frac, seed)
+      for ((name, g, w) <- Seq(("train", got._1, want._1), ("validation", got._2, want._2),
+          ("test", got._3, want._3)))
+        assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty,
+          s"$name differs at frac=$frac seed=$seed: ${g.count()} vs ${w.count()} rows")
+    }
+  }
+
+  test("splitV2 keeps rows that share (userId, movieId, rating) but differ in timestamp") {
+    import spark.implicits._
+    val r = Seq((1, 10, 4.0, 100L), (1, 10, 4.0, 200L), (1, 11, 3.0, 300L), (1, 12, 5.0, 400L),
+      (2, 10, 2.0, 100L), (2, 13, 3.5, 200L), (2, 14, 4.0, 300L), (2, 15, 1.0, 400L))
+      .toDF("userId", "movieId", "rating", "timestamp")
+    for (seed <- 1L to 20L) {
+      val (train, v, t) = Split.splitV2(r, 0.25, seed)
+      val together = train.unionAll(v).unionAll(t)
+      assert(together.exceptAll(r).isEmpty && r.exceptAll(together).isEmpty,
+        s"seed $seed: ${together.count()} of 8 rows come back")
+      // per user of 4 rows: ceil(4·0.25) = 1 validation, ceil(3·0.25) = 1 test
+      assert(v.groupBy("userId").count().collect().forall(_.getLong(1) == 1L), s"seed $seed")
+      assert(t.groupBy("userId").count().collect().forall(_.getLong(1) == 1L), s"seed $seed")
+    }
+  }
+
+  test("splitV2 keeps the input's column order in all three outputs") {
+    import spark.implicits._
+    val r = Seq((100L, 1, 10, 4.0), (200L, 1, 11, 3.0), (300L, 1, 12, 5.0), (400L, 1, 13, 2.0),
+      (100L, 2, 10, 2.0), (200L, 2, 13, 3.5), (300L, 2, 14, 4.0), (400L, 2, 15, 1.0))
+      .toDF("timestamp", "userId", "movieId", "rating")
+    for (seed <- 1L to 5L) {
+      val (train, v, t) = Split.splitV2(r, 0.25, seed)
+      for (out <- Seq(train, v, t))
+        assert(out.columns.toSeq == r.columns.toSeq, s"seed $seed: ${out.columns.toSeq}")
+      // positional union: only equal to the input if every output is in its order
+      val together = train.unionAll(v).unionAll(t)
+      assert(together.exceptAll(r).isEmpty && r.exceptAll(together).isEmpty, s"seed $seed")
+    }
+  }
+
+  test("splitV2 plan: one userId hash exchange per output, no join, no broadcast") {
+    // the same rows as a local relation: the cached `ratings` would print
+    // its own aggregation exchange inside the plan
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(ratings.collect(): _*), ratings.schema)
+    val (train, v, t) = Split.splitV2(local, 0.25, 1234L)
+    for ((name, out) <- Seq(("train", train), ("validation", v), ("test", t))) {
+      // AQE finalizes the plan only on execution
+      out.collect()
+      val plan = out.queryExecution.executedPlan.toString.split("Initial Plan")(0)
+      // "Exchange " not preceded by a letter: Broadcast/ReusedExchange excluded
+      val exchanges = "(?<![A-Za-z])Exchange ".r.findAllIn(plan).length
+      assert(exchanges == 1, s"$name: $exchanges exchanges:\n$plan")
+      assert("Exchange hashpartitioning\\(userId#\\d+L?, ".r.findFirstIn(plan).isDefined,
+        s"$name: the exchange must hash userId:\n$plan")
+      assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
+        s"$name: no join, no broadcast:\n$plan")
+    }
   }
 
   test("perGroupSample takes ceil(frac*n) rows per group") {
