@@ -113,15 +113,29 @@ object Mix {
     * (event time — what an online gate that sees rows arrive can
     * actually enforce). Same plan shape: one shuffle on the group key,
     * in-group sort, broadcast join of the |groups|-row targets.
+    * The filter over [[labelByBudget]], which holds the one definition
+    * of the rule.
     */
   def admitByBudget(df: DataFrame, targets: DataFrame, groupCol: Column,
+      orderCols: Seq[Column]): DataFrame =
+    labelByBudget(df, targets, groupCol, orderCols)
+      .filter(col("__admit")).drop("__admit")
+
+  /** [[admitByBudget]]'s rule as a label: keeps every row of `df` and
+    * adds the boolean `__admit`, true iff the row is among the first
+    * `target` rows of its group in `orderCols` order. Groups absent from
+    * `targets` (and null groups) label false. For callers that need the
+    * rejected rows as well, e.g. to count them in the same pass
+    * ([[graft.streaming.EventStreams.curationIntake]]'s funnel).
+    */
+  def labelByBudget(df: DataFrame, targets: DataFrame, groupCol: Column,
       orderCols: Seq[Column]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCol).orderBy(orderCols: _*)
     df.withColumn("__rn", row_number().over(w))
       .join(broadcast(targets.select(groupCol.as("__g"), col("target").as("__t"))),
-        groupCol === col("__g"))
-      .filter(col("__rn") <= col("__t"))
+        groupCol === col("__g"), "left_outer")
+      .withColumn("__admit", coalesce(col("__rn") <= col("__t"), lit(false)))
       .drop("__rn", "__g", "__t")
   }
 

@@ -289,8 +289,9 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
         b.write.mode("append").parquet(sinkDir)
-        b.select(col("content_hash")).distinct()
-          .write.mode("append").parquet(liveDir)
+        // hashes are unique per batch: incrementalIntake ends in
+        // dropDuplicatesWithinWatermark("content_hash")
+        b.select(col("content_hash")).write.mode("append").parquet(liveDir)
         b.unpersist()
         ()
       }
@@ -753,29 +754,38 @@ object EventStreams {
     *     pure filter, so the state store holds hashes of docs that
     *     passed quality+relevance, never junk: the [[curateDocs]]
     *     state-size argument, compounded);
-    *  then per micro-batch (`foreachBatch`, serialized):
-    *  6a. index-dedup VERIFY on the bloom-flagged rows only: a batch
-    *     with NO flagged rows touches the index ZERO times; ≤64
-    *     distinct flagged hashes probe as pushed literal predicates
-    *     (one bounded collect, a filter-only index scan — no shuffle,
-    *     no broadcast build of the index); above that the flagged
-    *     hash set broadcasts and semi-joins the index (the
-    *     contaminated-feed degrade — still scan + tiny broadcast,
-    *     never an index shuffle). Per-batch index cost therefore
-    *     scales with the batch's CANDIDATE-DUP count (≈ true dups +
-    *     fpp·batch), not the corpus;
+    *  then per micro-batch (`foreachBatch`, serialized), as ONE funnel
+    *  pass over the persisted batch:
+    *  6a. index-dedup VERIFY on the bloom-flagged rows only. The
+    *     batch's first action is one aggregate, (rows, flagged rows);
+    *     hashes are unique within a batch after gate 5, so the flagged
+    *     count is the distinct flagged-hash count. A batch with NO
+    *     flagged rows touches the index ZERO times; 1–64 flagged
+    *     hashes are collected (≤64 rows) and probe as pushed literal
+    *     predicates (a filter-only index scan — no shuffle, no
+    *     broadcast build of the index); above that the flagged hashes
+    *     broadcast and semi-join the index (the contaminated-feed
+    *     degrade — still scan + tiny broadcast, never an index
+    *     shuffle). Per-batch index cost therefore scales with the
+    *     batch's CANDIDATE-DUP count (≈ true dups + fpp·batch), not
+    *     the corpus;
     *  6. decontamination VERIFY join on the bloom-flagged candidates
     *     only (exact — bloom has no false negatives, so unflagged docs
     *     are PROVEN clean; cost scales with contamination rate + fpp);
     *  7. per-source budget admission in deterministic (ts, doc_id)
-    *     order ([[graft.operators.Mix.admitByBudget]] per batch with
-    *     the REMAINING room as targets; sources absent from `targets`
-    *     admit nothing). The running per-source ledger is |sources|
+    *     order, as a LABEL: [[graft.operators.Mix.labelByBudget]] per
+    *     batch with the REMAINING room as targets marks each clean row
+    *     admitted or not (sources absent from `targets` admit
+    *     nothing), next to its length bucket; the labeled relation is
+    *     persisted once. The running per-source ledger is |sources|
     *     driver longs REDERIVED FROM THE DURABLE SINK at wiring time —
     *     a restarted intake resumes the budget where the output
     *     actually stands, not where process memory claims;
-    *  8. closed-loop maintenance: survivors append to `sinkDir`, their
-    *     content hashes append back to the live index version (pinned
+    *  8. one grouped collect over (length bucket, admitted, source) —
+    *     ≤ 21·|sources|·2 rows — gives n_clean, the drift histogram,
+    *     n_admitted and the per-source ledger update; then closed-loop
+    *     maintenance: admitted rows append to `sinkDir`, their content
+    *     hashes append back to the live index version (pinned
     *     `_LATEST` — the [[maintainedIntake]] contract), and one
     *     observability row appends to `ledgerDir`: the per-gate funnel
     *     (n_batch → n_clean → n_admitted) plus the drift alarm.
@@ -804,7 +814,9 @@ object EventStreams {
     * index-dedup) so per-batch cost tracks the batch — the index is
     * touched only when a batch carries candidate dups, and then by a
     * filter-only scan, never a shuffle — |sources|-bounded driver
-    * state, one bounded ≤65-row collect per batch, batch-sized appends.
+    * state, three bounded collects per batch (the 2-number aggregate,
+    * ≤64 flagged hashes when the batch has any, the ≤ 21·|sources|·2-row
+    * funnel), batch-sized appends.
     */
   def curationIntake(
       docs: DataFrame,
@@ -873,31 +885,32 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         import spark.implicits._
         val b = batch.persist()
-        val nBatch = b.count()
+        // first action: batch size and bloom-flagged count in one
+        // aggregate. Hashes are unique within a micro-batch (gate 5), so
+        // the flagged count is the distinct flagged-hash count.
+        val sizes = b.agg(count(lit(1)), count_if(col("__maybe_dup"))).head()
+        val nBatch = sizes.getLong(0)
+        val nFlagged = sizes.getLong(1)
         // empty micro-batches (watermark-advance ticks) produce no
         // writes and no ledger row
         if (nBatch > 0) {
-          // gate 6a: index-dedup VERIFY on bloom-flagged rows only. The
-          // collect is bounded at 65 rows (distinct flagged hashes,
-          // capped); ≤64 probe the index as PUSHED literal predicates —
-          // a filter-only scan, skipped entirely when nothing is
-          // flagged — and >64 (a dup-heavy feed, or the no-bloom
-          // degrade) broadcast the flagged hash set into a semi-join
-          // against the index scan. Either way the index never
-          // shuffles and a clean batch never touches it.
-          val flaggedHashes = b.filter(col("__maybe_dup"))
-            .select(col("content_hash")).distinct()
-          val someFlagged = flaggedHashes.limit(65).collect()
-            .map(_.getString(0)).toSeq
+          // gate 6a: index-dedup VERIFY on bloom-flagged rows only. No
+          // flagged row: the index is never touched. 1–64: the flagged
+          // hashes (a ≤64-row collect) probe the index as PUSHED
+          // literal predicates, a filter-only scan. Above 64 (a
+          // dup-heavy feed, or the no-bloom degrade) the flagged hashes
+          // broadcast into a semi-join against the index scan. Either
+          // way the index never shuffles.
+          val flaggedHashes = b.filter(col("__maybe_dup")).select(col("content_hash"))
           val b1 =
-            if (someFlagged.isEmpty) b
+            if (nFlagged == 0) b
             else {
               val confirmed =
-                if (someFlagged.length <= 64)
-                  knownHashes
-                    .filter(col("content_hash").isin(someFlagged: _*))
+                if (nFlagged <= 64) {
+                  val someFlagged = flaggedHashes.as[String].collect()
+                  knownHashes.filter(col("content_hash").isin(someFlagged: _*))
                     .select(col("content_hash")).distinct()
-                else knownHashes
+                } else knownHashes
                   .join(broadcast(flaggedHashes), Seq("content_hash"), "left_semi")
                   .select(col("content_hash")).distinct()
               // canonical order: a using-columns anti-join moves the
@@ -909,36 +922,45 @@ object EventStreams {
           val contaminated = grams.hitIds(b1.filter(col("__maybe_contam")))
           val clean = b1.join(contaminated, Seq("doc_id"), "left_anti")
             .select((srcCols.map(col) :+ col("content_hash")): _*)
-            .persist()
-          val nClean = clean.count()
-          // drift alarm on the corpus-candidate profile (one bounded agg)
-          val jsd = TextAnalysis.jsdVsRef(TextAnalysis.lenBucketCounts(clean), ref)
-          // gate 7: per-source budget on the REMAINING room
-          val admitted = targets match {
-            case None => clean
+          // gate 7: per-source budget on the REMAINING room, as a label
+          // so the rejected rows still count in the funnel below
+          val labeled = (targets match {
+            case None => clean.withColumn("__admit", lit(true))
             case Some(t) =>
               val room = t.toSeq.map { case (s0, tgt) =>
                 (s0, math.max(0L, tgt - admittedSoFar.getOrElse(s0, 0L)))
               }.toDF("source", "target")
-              Mix.admitByBudget(clean, room, col("source"),
+              Mix.labelByBudget(clean, room, col("source"),
                 Seq(col("ts"), col("doc_id")))
-          }
-          val a = admitted.persist()
-          val nAdmitted = a.count()
+          }).withColumn("__bucket", TextAnalysis.lenBucket(col("text")))
+            .persist()
+          // gate 8: the whole funnel in one grouped collect,
+          // ≤ 21·|sources|·2 rows: n_clean, the drift histogram on the
+          // corpus-candidate profile, n_admitted and the per-source
+          // budget ledger
+          val source = if (targets.isDefined) col("source") else lit(null).cast("string")
+          val funnel = labeled.groupBy(col("__bucket"), col("__admit"), source)
+            .count().collect()
+            .map(r => (r.getLong(0).toInt, r.getBoolean(1), r.getString(2), r.getLong(3)))
+          val nClean = funnel.map(_._4).sum
+          val admittedRows = funnel.filter(_._2)
+          val nAdmitted = admittedRows.map(_._4).sum
+          val jsd = TextAnalysis.jsdVsRef(
+            funnel.groupMapReduce(_._1)(_._4)(_ + _), ref)
           if (targets.isDefined)
-            a.groupBy(col("source")).count().collect().foreach(r =>
-              admittedSoFar(r.getString(0)) =
-                admittedSoFar.getOrElse(r.getString(0), 0L) + r.getLong(1))
-          // gate 8: sink + index append-back + funnel/alarm ledger
+            admittedRows.foreach { case (_, _, s0, c) =>
+              admittedSoFar(s0) = admittedSoFar.getOrElse(s0, 0L) + c }
+          // then sink + index append-back + funnel/alarm ledger
+          val a = labeled.filter(col("__admit"))
+            .select((srcCols.map(col) :+ col("content_hash")): _*)
           a.write.mode("append").parquet(sinkDir)
-          a.select(col("content_hash")).distinct()
-            .write.mode("append").parquet(liveIndex)
+          a.select(col("content_hash")).write.mode("append").parquet(liveIndex)
           Seq((batchId, nBatch, nClean, nAdmitted,
             math.rint(jsd * 1e6) / 1e6, jsd > tauDrift))
             .toDF("batch_id", "n_batch", "n_clean", "n_admitted",
               "jsd_r", "alarm")
             .write.mode("append").parquet(ledgerDir)
-          a.unpersist(); clean.unpersist()
+          labeled.unpersist()
         }
         b.unpersist()
         ()

@@ -593,8 +593,9 @@ class StreamingSpec extends SparkTestBase {
     val afterC2 = spark.read.parquet(sinkDir).select(col("doc_id"))
       .as[Long].collect().toSet
     assert(afterC2 == Set(2L, 4L), s"cycle 2 state $afterC2")
-    // and the index now carries all three content hashes
+    // and the index now carries all three content hashes, none twice
     assert(spark.read.parquet(indexDir).distinct().count() == 3L)
+    assert(spark.read.parquet(indexDir).count() == 3L)
   }
 
   test("maintainedNearIntake: near-dup of a cycle-1 survivor is dropped in cycle 2") {
@@ -1305,10 +1306,12 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("curationIntake: ONE composed loop — full gate funnel, closed index " +
-      "loop, budget resumption across a restart, batch ≡ stream") {
-    implicit val sc = spark.sqlContext
-    import graft.operators.{Mix, TextAnalysis}
+  /** The composed curationIntake fixture under a fresh temp dir: gate
+    * models with known decisions, one bench doc, a one-hash index, and a
+    * budget of 2 docs from s1 and 1 from s2.
+    */
+  private class CurationFixture {
+    import graft.operators.TextAnalysis
     val tmp = java.nio.file.Files.createTempDirectory("graft_curation").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val ledgerDir = s"$tmp/ledger"
@@ -1339,7 +1342,7 @@ class StreamingSpec extends SparkTestBase {
     def wire(mem: MemoryStream[EventStreams.SourcedDoc]) =
       EventStreams.curationIntake(mem.toDF(), quality, tauQ, bm25, 0.01,
         bench, ref, 0.6, targets, indexDir, sinkDir, ledgerDir)
-    // ---- cycle 1: one micro-batch exercising every gate ----
+    // cycle 1 of the composed test: one micro-batch exercising every gate
     val c1 = Seq(
       EventStreams.SourcedDoc(1, ts(0), "s1", soup),         // quality gate
       EventStreams.SourcedDoc(2, ts(1), "s1", offTopic),     // relevance gate
@@ -1350,6 +1353,15 @@ class StreamingSpec extends SparkTestBase {
       EventStreams.SourcedDoc(7, ts(6), "s1", novelB),       // admitted
       EventStreams.SourcedDoc(8, ts(7), "s1", novelC),       // s1 budget full
       EventStreams.SourcedDoc(9, ts(8), "s2", novelD))       // admitted (s2)
+  }
+
+  test("curationIntake: ONE composed loop — full gate funnel, closed index " +
+      "loop, budget resumption across a restart, batch ≡ stream") {
+    implicit val sc = spark.sqlContext
+    import graft.operators.{Mix, TextAnalysis}
+    val f = new CurationFixture
+    import f._
+    // ---- cycle 1: one micro-batch exercising every gate ----
     val mem1 = MemoryStream[EventStreams.SourcedDoc]
     val q1 = wire(mem1).start()
     try { mem1.addData(c1: _*); q1.processAllAvailable() } finally q1.stop()
@@ -1404,8 +1416,87 @@ class StreamingSpec extends SparkTestBase {
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(led2 == Seq((2L, 1L, 0L), (6L, 4L, 3L)), s"ledgers $led2")
-    // closed loop: index = seeded hash + the three admitted hashes
+    // closed loop: index = seeded hash + the three admitted hashes, each
+    // appended once (the append-back writes the batch's unique hashes)
     assert(spark.read.parquet(indexDir).distinct().count() == 4L)
+    assert(spark.read.parquet(indexDir).count() == 4L)
+  }
+
+  test("curationIntake per-micro-batch job budget; a batch with no flagged " +
+      "row reads no index file") {
+    implicit val sc = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val f = new CurationFixture
+    // (query id, batch id, SQL execution id) per job, and the SQL
+    // executions whose plan scans a file under the index dir
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val indexScans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val indexPath = new java.io.File(f.indexDir).toURI.toString.stripSuffix("/")
+    def scansIndex(p: SparkPlanInfo): Boolean =
+      p.metadata.get("Location").exists(_.contains(indexPath)) ||
+        p.children.exists(scansIndex)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        jobs.add((p.getProperty("sql.streaming.queryId", ""),
+          p.getProperty("streaming.sql.batchId", ""),
+          p.getProperty("spark.sql.execution.id", "")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if scansIndex(s.sparkPlanInfo) =>
+          indexScans.add(s.executionId.toString)
+        case _ =>
+      }
+    }
+    // every event posted before the marker job's start has been delivered
+    // once the listener sees that start
+    def drainBus(): Unit = {
+      val marker = java.util.UUID.randomUUID().toString
+      spark.sparkContext.setLocalProperty("streaming.sql.batchId", marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("streaming.sql.batchId", null)
+      eventually(timeout(10.seconds), interval(20.millis)) {
+        assert(jobs.asScala.exists(_._2 == marker))
+      }
+    }
+    // a fifth clean doc: its hash is not in the one-hash index and misses
+    // the wiring-time bloom, so no row of its batch is flagged; s2's
+    // budget is spent by cycle 1, so the funnel rejects it at gate 7
+    val unflagged = Seq(EventStreams.SourcedDoc(30, ts(30), "s2",
+      "data document five with clean english words for the intake test"))
+    spark.sparkContext.addSparkListener(listener)
+    val mem = MemoryStream[EventStreams.SourcedDoc]
+    val q = f.wire(mem).start()
+    val (flaggedBatch, cleanBatch) = try {
+      def dataBatch(docs: Seq[EventStreams.SourcedDoc]): String = {
+        mem.addData(docs: _*); q.processAllAvailable()
+        q.recentProgress.filter(_.numInputRows > 0).last.batchId.toString
+      }
+      (dataBatch(f.c1), dataBatch(unflagged))
+    } finally { q.stop(); drainBus(); spark.sparkContext.removeSparkListener(listener) }
+    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).toSeq.groupBy(_._2)
+    val flaggedJobs = byBatch(flaggedBatch)
+    val cleanJobs = byBatch(cleanBatch)
+    // the detector sees the flagged batch's index probe ...
+    assert(flaggedJobs.exists(j => indexScans.contains(j._3)),
+      "the flagged batch must verify against the index")
+    // ... and the unflagged batch plans no index scan at all (gate 6a)
+    val touched = cleanJobs.count(j => indexScans.contains(j._3))
+    assert(touched == 0, s"unflagged batch read the index in $touched jobs")
+    // the budget: the batch-size-and-flag aggregate, one ≤64-hash collect
+    // (flagged batch only), the labeled funnel with its grouped collect,
+    // and the sink, index and ledger writes
+    assert(flaggedJobs.size <= 9, s"flagged batch ran ${flaggedJobs.size} jobs")
+    assert(cleanJobs.size <= 7, s"unflagged batch ran ${cleanJobs.size} jobs")
+    val ledger = spark.read.parquet(f.ledgerDir).orderBy(col("batch_id"))
+      .select(col("n_batch"), col("n_clean"), col("n_admitted"))
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(ledger == Seq((6L, 4L, 3L), (1L, 1L, 0L)), s"ledger $ledger")
   }
 
   test("curationIntake fallbacks (shuffle verify, no index bloom, >64 flagged " +
