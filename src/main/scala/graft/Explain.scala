@@ -1,13 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Formatted physical plans of the named queries at SPARK_GRAFT_SF_DIR
+  * (default sf0.01). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_DIR", "/root/testdata/sf0.01")
+    val spark = Harness.session()
+    val d = Harness.sfDir("/root/testdata/sf0.01")
     // SPARK_GRAFT_EXPLAIN_EXEC=1: execute first and print the FINAL
     // adaptive plan (exchange reuse / runtime BHJ conversions are only
     // visible post-execution — the ScalePostureSpec discipline)

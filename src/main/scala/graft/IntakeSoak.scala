@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -30,8 +29,7 @@ import org.apache.spark.sql.functions._
 object IntakeSoak {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
     // default 50 batches: the r10 curve (10 batches, 0→34k hashes) was
     // short for a "flat while state grows" claim — 50 covers an order of
     // magnitude of index growth (→ ~170k hashes) in one run
@@ -46,14 +44,7 @@ object IntakeSoak {
     // curves share shape and level, the creep tracks BATCH COUNT
     // (state-store/file/GC overhead), not index size.
     val pregrown = sys.env.getOrElse("SPARK_GRAFT_INTAKE_PREGROWN", "0").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.operators.TextAnalysis

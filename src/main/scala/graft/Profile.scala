@@ -1,39 +1,29 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
 /** Per-query empirical profiler (optimization-guide §1: measure first).
   *
   * For each query name on the command line: run the noop-sink action
-  * `SPARK_GRAFT_PROFILE_RUNS` times (default 3) and, on the LAST run,
-  * print a per-job / per-stage breakdown from a SparkListener — job
-  * wall-clock, stage task counts, task-time sums, shuffle read/write
-  * bytes — so "where does this query's second go" is answered from
-  * measurements instead of plan guesses. Jobs are counted for ALL runs
-  * (`jobs/run`), because a query that launches 15 jobs at sf0.1 is
-  * paying the scheduling floor 15 times regardless of data size.
+  * `SPARK_GRAFT_RUNS` times (default 3), print every run's time, job
+  * count and plan gap, then the LAST run's per-job / per-stage breakdown
+  * from a SparkListener — job wall-clock, stage task counts, task-time
+  * sums, shuffle read/write bytes — so "where does this query's second
+  * go" is answered from measurements instead of plan guesses. Jobs are
+  * counted per run (`jobs/run`), because a query that launches 15 jobs
+  * at sf0.1 is paying the scheduling floor 15 times regardless of data
+  * size.
   *
   * Diagnostic tool only: never run by the driver, not part of Bench's
-  * contract. Env mirrors Bench (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS)
-  * so numbers are comparable with headline lines.
+  * contract. Its session and warm-up are Bench's ([[Harness]],
+  * [[Bench.touchTables]]) so numbers are comparable with headline lines.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
+    val spark = Harness.session()
 
     case class StageRec(name: String, tasks: Int, taskTimeMs: Long,
         shufReadB: Long, shufWriteB: Long, inputB: Long)
@@ -41,56 +31,43 @@ object Profile {
         stages: mutable.Buffer[Int])
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stages = mutable.LinkedHashMap[Int, StageRec]()
-    @volatile var record = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         val d = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
         jobs(e.jobId) = JobRec(d, e.time, -1, e.stageIds.toBuffer)
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.get(e.jobId).foreach(_.completed = e.time)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        val m = si.taskMetrics
+        stages(si.stageId) = StageRec(si.name.takeWhile(_ != '\n'),
+          si.numTasks,
+          if (m == null) 0L else m.executorRunTime,
+          if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead,
+          if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten,
+          if (m == null) 0L else m.inputMetrics.bytesRead)
       }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (record) {
-          val si = e.stageInfo
-          val m = si.taskMetrics
-          stages(si.stageId) = StageRec(si.name.takeWhile(_ != '\n'),
-            si.numTasks,
-            if (m == null) 0L else m.executorRunTime,
-            if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead,
-            if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten,
-            if (m == null) 0L else m.inputMetrics.bytesRead)
-        }
     }
     spark.sparkContext.addSparkListener(listener)
-
-    // table-touch warmup, same as Bench
-    Tables.names.foreach { n =>
-      try Tables.load(spark, sfDir, n).limit(1).write.mode("overwrite")
-        .format("noop").save()
-      catch { case _: Throwable => () }
-    }
+    Bench.touchTables(spark, sfDir)
 
     for (name <- args) {
       val fn = SparkEntry.queries(name)
       println(s"===== $name =====")
       var jobsPerRun = List.empty[Int]
       var gapPerRun = List.empty[Long] // ms from action start to 1st job
-      val times = (1 to runs).map { i =>
+      val times = Harness.timings(s"  $name", Harness.runs) {
         jobs.clear(); stages.clear()
-        record = i == runs || runs == 1 || true // count jobs each run
-        val t0 = System.nanoTime()
         val wall0 = System.currentTimeMillis()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          println(s"  FAILED: ${e.getMessage.linesIterator.next()}") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        jobsPerRun = jobs.size :: jobsPerRun
-        gapPerRun = jobs.values.headOption
-          .map(_.submitted - wall0).getOrElse(-1L) :: gapPerRun
-        dt
+        try Harness.noop(fn(spark, sfDir))
+        finally {
+          jobsPerRun = jobs.size :: jobsPerRun
+          gapPerRun = jobs.values.headOption
+            .map(_.submitted - wall0).getOrElse(-1L) :: gapPerRun
+        }
       }
       println(f"  runs: ${times.map(t => f"$t%.2f").mkString(" ")} s;" +
         s" jobs/run: ${jobsPerRun.reverse.mkString(" ")};" +

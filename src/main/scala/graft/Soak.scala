@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale soak: measure the HEAVY operator families on synthetic N×
@@ -33,18 +33,10 @@ import org.apache.spark.sql.functions._
 object Soak {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SOAK_SCALES", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     import graft.operators.{Dedup, Similarity, TextAnalysis}
 
@@ -73,8 +65,7 @@ object Soak {
       (spark.read.parquet(s"$d/docs"), spark.read.parquet(s"$d/emb"))
     }
 
-    def noop(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
+    import Harness.noop
 
     // fit-once per scaled corpus (the apply line measures SERVING)
     val ivfCache = scala.collection.mutable.Map.empty[Long, Similarity.IvfPqModel]
@@ -235,16 +226,13 @@ object Soak {
     // scale). One untimed sequential read per table levels the field.
     def touchTrade(d: String): Unit = {
       Seq("orders", "lineitem", "customer").foreach { t =>
-        try Tables.load(spark, d, t).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        try noop(Tables.load(spark, d, t)) catch { case _: Throwable => () }
       }
-      try Tables.events(spark, d).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      try noop(Tables.events(spark, d)) catch { case _: Throwable => () }
     }
     def touchDocs(docs: DataFrame, emb: DataFrame): Unit =
       Seq(docs, emb).foreach { df =>
-        try df.write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        try noop(df) catch { case _: Throwable => () }
       }
     def tradeFamilies(d: String): Seq[(String, () => Unit)] = Seq(
       "pagerank" -> (() => noop(SparkEntry.queries("q_pagerank")(spark, d))),
@@ -408,8 +396,7 @@ object Soak {
 
     // per-family median-of-N (the Bench discipline — single-run soak
     // numbers at x10 swung up to 5× with machine noise; the median is
-    // the comparable unit). SPARK_GRAFT_SOAK_RUNS overrides (default 3).
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SOAK_RUNS", "3").toInt
+    // the comparable unit). SPARK_GRAFT_RUNS overrides (default 3).
     val results = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.LinkedHashMap[Int, Double]]
     val rowCounts = scala.collection.mutable.LinkedHashMap.empty[Int, (Long, Long)]
@@ -441,20 +428,13 @@ object Soak {
         Map.empty[String, Long]
       }
       System.err.println(s"[soak] x$n edges: ${edgeCounts(n)}")
-      // SPARK_GRAFT_SOAK_FAMILIES=a,b,c restricts to named families
-      // (iteration aid — the per-round evidence run times everything)
-      val only = sys.env.get("SPARK_GRAFT_SOAK_FAMILIES")
-        .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+      // SPARK_GRAFT_ONLY=a,b,c restricts to named families (iteration
+      // aid — the per-round evidence run times everything)
       (families(d, e) ++ tradeFamilies(td))
-        .filter { case (name, _) => only.isEmpty || only(name) }
+        .filter { case (name, _) => Harness.only.forall(_.contains(name)) }
         .foreach { case (name, f) =>
-        val secs = (1 to runs).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try { f(); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case ex: Throwable =>
-            System.err.println(s"[soak] x$n $name failed: ${ex.getMessage}"); None }
-        }
-        val med = if (secs.isEmpty) -1.0 else secs.sorted.apply(secs.length / 2)
+        val secs = Harness.timings(s"[soak] x$n $name", Harness.runs)(f())
+        val med = Harness.median(secs)
         results.getOrElseUpdate(name,
           scala.collection.mutable.LinkedHashMap.empty)(n) =
           if (med >= 0) math.rint(med * 1000) / 1000 else -1.0

@@ -24,6 +24,57 @@ class RegistrySpec extends SparkTestBase {
     "SimilarityQueries" -> graft.queries.SimilarityQueries.declarations,
     "AnalyticsQueries" -> graft.queries.AnalyticsQueries.declarations)
 
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    if (d.isDirectory) d.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
+    else if (d.getName.endsWith(".scala")) Seq(d) else Nil
+  // drops // and (nested) /* */ comments; string and char literals are
+  // copied through, so a "//" or quote inside one is not misread
+  private def stripComments(t: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    val n = t.length
+    while (i < n) {
+      if (t.startsWith("//", i)) {
+        while (i < n && t(i) != '\n') i += 1
+      } else if (t.startsWith("/*", i)) {
+        var depth = 0
+        while (i < n && !(depth == 1 && t.startsWith("*/", i))) {
+          if (t.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (t.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else i += 1
+        }
+        i += 2
+      } else if (t.startsWith("\"\"\"", i)) {
+        val end = t.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) n else end + 3
+        out ++= t.substring(i, stop)
+        i = stop
+      } else if (t(i) == '"') {
+        out += t(i)
+        i += 1
+        while (i < n && t(i) != '"' && t(i) != '\n') {
+          if (t(i) == '\\' && i + 1 < n) { out += t(i); i += 1 }
+          out += t(i)
+          i += 1
+        }
+      } else if (t(i) == '\'' && i + 2 < n && t(i + 2) == '\'') {
+        out ++= t.substring(i, i + 3)
+        i += 3
+      } else if (t(i) == '\'' && i + 3 < n && t(i + 1) == '\\' && t(i + 3) == '\'') {
+        out ++= t.substring(i, i + 4)
+        i += 4
+      } else {
+        out += t(i)
+        i += 1
+      }
+    }
+    out.toString
+  }
+  private def read(f: java.io.File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try stripComments(src.mkString) finally src.close()
+  }
+
   test("no query-name collisions across modules (++ merge would drop one)") {
     // counted over the declarations themselves, not the derived Map,
     // which would keep one of two equal names — a duplicate inside one
@@ -47,56 +98,6 @@ class RegistrySpec extends SparkTestBase {
     val frameworkCalled = Set("main", "bufferEncoder", "outputEncoder")
     val mainDir = new java.io.File("src/main/scala")
     assume(mainDir.isDirectory, "source dir not visible from test cwd")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      if (d.isDirectory) d.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (d.getName.endsWith(".scala")) Seq(d) else Nil
-    // drops // and (nested) /* */ comments; string and char literals are
-    // copied through, so a "//" or quote inside one is not misread
-    def stripComments(t: String): String = {
-      val out = new StringBuilder
-      var i = 0
-      val n = t.length
-      while (i < n) {
-        if (t.startsWith("//", i)) {
-          while (i < n && t(i) != '\n') i += 1
-        } else if (t.startsWith("/*", i)) {
-          var depth = 0
-          while (i < n && !(depth == 1 && t.startsWith("*/", i))) {
-            if (t.startsWith("/*", i)) { depth += 1; i += 2 }
-            else if (t.startsWith("*/", i)) { depth -= 1; i += 2 }
-            else i += 1
-          }
-          i += 2
-        } else if (t.startsWith("\"\"\"", i)) {
-          val end = t.indexOf("\"\"\"", i + 3)
-          val stop = if (end < 0) n else end + 3
-          out ++= t.substring(i, stop)
-          i = stop
-        } else if (t(i) == '"') {
-          out += t(i)
-          i += 1
-          while (i < n && t(i) != '"' && t(i) != '\n') {
-            if (t(i) == '\\' && i + 1 < n) { out += t(i); i += 1 }
-            out += t(i)
-            i += 1
-          }
-        } else if (t(i) == '\'' && i + 2 < n && t(i + 2) == '\'') {
-          out ++= t.substring(i, i + 3)
-          i += 3
-        } else if (t(i) == '\'' && i + 3 < n && t(i + 1) == '\\' && t(i + 3) == '\'') {
-          out ++= t.substring(i, i + 4)
-          i += 4
-        } else {
-          out += t(i)
-          i += 1
-        }
-      }
-      out.toString
-    }
-    def read(f: java.io.File): String = {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try stripComments(src.mkString) finally src.close()
-    }
     val mainTexts = scalaFiles(mainDir).map(read)
     val otherTexts = Seq("src/test/scala", "perfbench/src/main/scala")
       .flatMap(d => scalaFiles(new java.io.File(d))).map(read)
@@ -152,6 +153,45 @@ class RegistrySpec extends SparkTestBase {
     }.sum
     assert(g.group(5).toInt == nTests,
       s"README says ${g.group(5)} tests, source registers $nTests")
+  }
+
+  test("SparkSession.builder() occurs in src/main only inside Harness (source scan)") {
+    // one session builder for every hand-run main: the place a shared
+    // listener or a session setting attaches once
+    val mainDir = new java.io.File("src/main/scala")
+    assume(mainDir.isDirectory, "source dir not visible from test cwd")
+    val builderRe = """SparkSession\s*\.\s*builder\b""".r
+    val sites = scalaFiles(mainDir).flatMap(f =>
+      builderRe.findAllIn(read(f)).map(_ => f.getPath).toSeq)
+    val harness = "src/main/scala/graft/Harness.scala"
+    assert(sites == Seq(harness),
+      s"SparkSession.builder() outside Harness: ${sites.filterNot(_ == harness).mkString(", ")}")
+  }
+
+  test("Bench.reconcile substitutes only a >2x in-slot reading whose spread is tight") {
+    // readings measured by hand; spread medians are the upper median
+    val tight = Seq(1.0, 1.2, 1.1, 1.05, 1.15) // median 1.1, max 1.2 <= 1.7
+    val lines = Seq("slow" -> 3.0, "loose" -> 3.0, "edge2x" -> 2.2,
+      "edgeGate" -> 2.5, "failed" -> -1.0, "noSpread" -> 5.0, "fast" -> 1.0)
+    val spreads = Map(
+      "slow" -> tight,
+      "loose" -> Seq(0.5, 1.0, 1.1, 1.2, 2.0), // max 2.0 > 1.5*0.5 + 0.2
+      "edge2x" -> tight, // 2.2 is not MORE than 2 x 1.1
+      "edgeGate" -> Seq(1.0, 1.1, 1.2, 1.7, 1.7), // max == 1.5*1.0 + 0.2
+      "failed" -> tight, "fast" -> tight)
+    val (adjusted, anomalies) = Bench.reconcile(lines, spreads)
+    assert(anomalies == Seq(("slow", 3.0, 1.1), ("edgeGate", 2.5, 1.2)))
+    assert(adjusted == Seq("slow" -> 1.1, "loose" -> 3.0, "edge2x" -> 2.2,
+      "edgeGate" -> 1.2, "failed" -> -1.0, "noSpread" -> 5.0, "fast" -> 1.0))
+  }
+
+  test("Verify.jsonString round-trips every oracle SQL and control characters through a JSON parser") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val strings = SparkEntry.oracleSql.toSeq.flatMap { case (k, v) => Seq(k, v) } :+
+      "tab\tcr\rlf\nsoh\u0001quote\"backslash\\"
+    strings.foreach { s =>
+      assert(mapper.readValue(Verify.jsonString(s), classOf[String]) == s, s)
+    }
   }
 
   test("no-oracle queries are EXACTLY the declared exemptions, each with a reason") {
