@@ -471,19 +471,9 @@ object Soak {
         val e1 = edgeCounts.getOrElse(1, Map.empty).getOrElse(ek, 0L)
         val eN = edgeCounts.getOrElse(maxN, Map.empty).getOrElse(ek, 0L)
         val t1 = m.getOrElse(1, -1.0); val tN = m.getOrElse(maxN, -1.0)
-        if (e1 > 0 && eN > 0 && t1 > 0 && tN > 0) {
-          val pm1 = t1 / (e1 / 1e6); val pmN = tN / (eN / 1e6)
-          val r = math.rint(pmN / pm1 * 100) / 100
-          val verdict =
-            if (r <= 1.5) "per-edge flat: time growth is edge densification"
-            else "per-edge cost grows: plan term super-linear in edges"
-          Some(s""""$name":{"edge_kind":"$ek","edges_x1":$e1,""" +
-            s""""edges_x$maxN":$eN,"edge_ratio":${
-              math.rint(eN.toDouble / e1 * 100) / 100},""" +
-            s""""s_per_medge_x1":${math.rint(pm1 * 1000) / 1000},""" +
-            s""""s_per_medge_x$maxN":${math.rint(pmN * 1000) / 1000},""" +
-            s""""per_edge_ratio":$r,"verdict":"$verdict"}""")
-        } else None
+        if (e1 > 0 && eN > 0 && t1 > 0 && tN > 0)
+          Some(s""""$name":${graphDecompJson(ek, maxN, e1, eN, t1, tN)}""")
+        else None
       }
     }.mkString(",")
     val edgesJson = edgeCounts.map { case (n, m) =>
@@ -493,5 +483,26 @@ object Soak {
       s""""data_ratio":$maxN,"rows":{$rows},"edges":{$edgesJson},""" +
       s""""graph_decomp":{$graphFams},"families":{$fams}}}""")
     spark.stop()
+  }
+
+  /** One family's `graph_decomp` object: edge counts and seconds per
+    * million edges at x1 (`e1`, `t1`) and at the largest scale `maxN`
+    * (`eN`, `tN`), their x1→xmax ratios and a verdict. With one scale the
+    * x1 and x`maxN` keys coincide, so each key is written once.
+    */
+  def graphDecompJson(edgeKind: String, maxN: Int, e1: Long, eN: Long,
+      t1: Double, tN: Double): String = {
+    val pm1 = t1 / (e1 / 1e6); val pmN = tN / (eN / 1e6)
+    val r = math.rint(pmN / pm1 * 100) / 100
+    val verdict =
+      if (r <= 1.5) "per-edge flat: time growth is edge densification"
+      else "per-edge cost grows: plan term super-linear in edges"
+    val at = Seq(1 -> (e1, pm1), maxN -> (eN, pmN)).distinctBy(_._1)
+    (Seq(s""""edge_kind":"$edgeKind"""") ++
+      at.map { case (n, (e, _)) => s""""edges_x$n":$e""" } ++
+      Seq(s""""edge_ratio":${math.rint(eN.toDouble / e1 * 100) / 100}""") ++
+      at.map { case (n, (_, pm)) => s""""s_per_medge_x$n":${math.rint(pm * 1000) / 1000}""" } ++
+      Seq(s""""per_edge_ratio":$r""", s""""verdict":"$verdict""""))
+      .mkString("{", ",", "}")
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -94,6 +95,24 @@ object TextHashFunctions {
 
   /** static entry point for generated code */
   def shingleEval(u: UTF8String, n: Int): ArrayData = {
+    val out = new java.util.LinkedHashSet[String]
+    walkGrams(u, n, g => { out.add(g); false })
+    val arr = new Array[Any](out.size)
+    val it = out.iterator()
+    var k = 0
+    while (it.hasNext) { arr(k) = UTF8String.fromString(it.next()); k += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+  }
+
+  /** The one word-`n`-gram walker behind [[ShingleSet]], [[BloomGramHit]]
+    * and [[GramSetHit]]: tokenize (lowercase per code point; any
+    * non-letter/digit delimits), then hand each n-token window, joined
+    * by single spaces, to `stop` in document order — or, when
+    * 0 < |tokens| < n, the one full-token join; a token-less doc yields
+    * nothing. Stops at the first gram `stop` accepts and returns whether
+    * it did, so the probes exit early and never build a gram array.
+    */
+  def walkGrams(u: UTF8String, n: Int, stop: String => Boolean): Boolean = {
     val s = u.toString
     val toks = new java.util.ArrayList[String]
     val sb = new java.lang.StringBuilder
@@ -107,26 +126,21 @@ object TextHashFunctions {
     }
     if (sb.length > 0) toks.add(sb.toString)
     val m = toks.size
-    val out = new java.util.LinkedHashSet[String]
-    if (m > 0 && m < n) {
-      out.add(String.join(" ", toks))
-    } else {
+    if (m > 0 && m < n) stop(String.join(" ", toks))
+    else {
+      var hit = false
       var start = 0
-      while (start <= m - n) {
+      while (!hit && start <= m - n) {
         val g = new java.lang.StringBuilder
         var j = 0
         while (j < n) {
           if (j > 0) g.append(' ')
           g.append(toks.get(start + j)); j += 1
         }
-        out.add(g.toString); start += 1
+        hit = stop(g.toString); start += 1
       }
+      hit
     }
-    val arr = new Array[Any](out.size)
-    val it = out.iterator()
-    var k = 0
-    while (it.hasNext) { arr(k) = UTF8String.fromString(it.next()); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
   }
 
   def shingle_set(text: Column, n: Int): Column =
@@ -433,8 +447,8 @@ object TextHashFunctions {
 
   /** TRUE iff any word `n`-gram of `child`'s text MIGHT be in the bloom
     * filter (serialized `org.apache.spark.util.sketch.BloomFilter`
-    * bytes). Gram construction is byte-identical to [[ShingleSet]] (same
-    * tokenizer, same `m < n` whole-doc fallback), so a bloom built over
+    * bytes). Its grams come from [[walkGrams]], the walker [[ShingleSet]]
+    * uses (same tokenizer, same `m < n` whole-doc fallback), so a bloom built over
     * `explode(shingle_set(bench))` has NO false negatives against this
     * predicate — `false` here proves the document shares no gram with
     * the bench set.
@@ -478,40 +492,12 @@ object TextHashFunctions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** static entry point for generated code — tokenize exactly like
-    * [[shingleEval]], but test each gram against the bloom and
-    * early-exit on the first possible hit (no gram array is built).
+  /** static entry point for generated code — [[walkGrams]] against the
+    * bloom, exiting on the first possible hit
     */
   def bloomGramHitEval(u: UTF8String,
-      bloom: org.apache.spark.util.sketch.BloomFilter, n: Int): Boolean = {
-    val s = u.toString
-    val toks = new java.util.ArrayList[String]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isLetter(cp) || Character.isDigit(cp))
-        sb.appendCodePoint(Character.toLowerCase(cp))
-      else if (sb.length > 0) { toks.add(sb.toString); sb.setLength(0) }
-      i += Character.charCount(cp)
-    }
-    if (sb.length > 0) toks.add(sb.toString)
-    val m = toks.size
-    if (m == 0) return false
-    if (m < n) return bloom.mightContainString(String.join(" ", toks))
-    var start = 0
-    while (start <= m - n) {
-      val g = new java.lang.StringBuilder
-      var j = 0
-      while (j < n) {
-        if (j > 0) g.append(' ')
-        g.append(toks.get(start + j)); j += 1
-      }
-      if (bloom.mightContainString(g.toString)) return true
-      start += 1
-    }
-    false
-  }
+      bloom: org.apache.spark.util.sketch.BloomFilter, n: Int): Boolean =
+    walkGrams(u, n, bloom.mightContainString)
 
   def bloom_gram_hit(text: Column,
       bloom: org.apache.spark.util.sketch.BloomFilter, n: Int): Column = {
@@ -561,6 +547,94 @@ object TextHashFunctions {
     bloom.writeTo(bos)
     Bridge.column(BloomHit(Bridge.expression(s), bos.toByteArray))
   }
+
+  /** EXACT membership probes against a string set shipped ONCE as a
+    * broadcast variable — the exact siblings of [[BloomGramHit]] and
+    * [[BloomHit]], for reference state bounded enough to hold exactly
+    * (the bench grams under `maxBroadcastGrams`, a batch's confirmed
+    * duplicate hashes). The set rides neither the plan nor the task
+    * closure: the expression carries the broadcast handle, and the
+    * generated code reads the set once per partition. Null in, null
+    * out; the column builders coalesce that to `false`, so a null key
+    * never matches — the semantics of the equi-joins these probes
+    * replace.
+    */
+  sealed abstract class BroadcastSetProbe extends UnaryExpression {
+    def set: Broadcast[java.util.Set[String]]
+    /** the probe, shared by interpreted eval and the generated code */
+    def hit(u: UTF8String, s: java.util.Set[String]): Boolean
+    override def dataType: DataType = BooleanType
+    override def nullSafeEval(a: Any): Any = hit(a.asInstanceOf[UTF8String], set.value)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val probe = ctx.addReferenceObj("setProbe", this, getClass.getName)
+      val s = ctx.addMutableState("java.util.Set", "probeSet",
+        v => s"$v = (java.util.Set) $probe.set().value();")
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $probe.hit($a, $s);")
+    }
+  }
+
+  /** TRUE iff some word `n`-gram of `child`'s text ([[walkGrams]], the
+    * [[ShingleSet]] grams) is in the set: the exact form of
+    * [[BloomGramHit]], exiting on the first hit.
+    */
+  case class GramSetHit(child: Expression, set: Broadcast[java.util.Set[String]], n: Int)
+      extends BroadcastSetProbe {
+    override def hit(u: UTF8String, s: java.util.Set[String]): Boolean =
+      walkGrams(u, n, s.contains)
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** TRUE iff the whole `child` string is in the set: the exact form of
+    * [[BloomHit]].
+    */
+  case class SetHit(child: Expression, set: Broadcast[java.util.Set[String]])
+      extends BroadcastSetProbe {
+    override def hit(u: UTF8String, s: java.util.Set[String]): Boolean =
+      s.contains(u.toString)
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** The distinct strings a job's tasks add, merged on the driver as
+    * each task finishes.
+    */
+  private final class SetAccumulator
+      extends org.apache.spark.util.AccumulatorV2[String, java.util.Set[String]] {
+    private val set = new java.util.HashSet[String]
+    override def isZero: Boolean = set.isEmpty
+    override def copy(): SetAccumulator = { val c = new SetAccumulator; c.set.addAll(set); c }
+    override def reset(): Unit = set.clear()
+    override def add(v: String): Unit = set.add(v)
+    override def merge(o: org.apache.spark.util.AccumulatorV2[String, java.util.Set[String]])
+        : Unit = set.addAll(o.value)
+    override def value: java.util.Set[String] = set
+  }
+
+  /** Ships the distinct values of `xs` once, as the broadcast set the
+    * probes above read. One job: each task gathers its partition's
+    * distinct values and the driver merges them as tasks finish, so it
+    * never holds a row array or a string array beside the set. A
+    * `java.util.HashSet` of word 5-grams (31 chars on average) measures
+    * ~90 bytes per entry on the heap and ~35 serialized (`SizeEstimator`
+    * / Java serialization, 1M entries, JDK 17): every executor holds the
+    * whole set deserialized.
+    */
+  def broadcastSet(xs: org.apache.spark.sql.Dataset[String]): Broadcast[java.util.Set[String]] = {
+    val sc = xs.sparkSession.sparkContext
+    val acc = new SetAccumulator
+    sc.register(acc)
+    xs.foreach((s: String) => acc.add(s))
+    sc.broadcast[java.util.Set[String]](acc.value)
+  }
+
+  def gram_set_hit(text: Column, grams: Broadcast[java.util.Set[String]], n: Int): Column =
+    org.apache.spark.sql.functions.coalesce(
+      Bridge.column(GramSetHit(Bridge.expression(text), grams, n)),
+      org.apache.spark.sql.functions.lit(false))
+
+  def set_hit(s: Column, set: Broadcast[java.util.Set[String]]): Column =
+    org.apache.spark.sql.functions.coalesce(
+      Bridge.column(SetHit(Bridge.expression(s), set)),
+      org.apache.spark.sql.functions.lit(false))
 
   /** Jaro-Winkler similarity — the STANDARD variant (match window
     * `max(|a|,|b|)/2 − 1`, FLOORED half-transpositions, Winkler prefix boost

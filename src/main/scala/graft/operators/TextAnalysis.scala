@@ -495,12 +495,22 @@ object TextAnalysis {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The streaming intakes' default `maxBroadcastGrams`. Under it they
+    * ship the grams as a hash set of strings
+    * ([[graft.functions.TextHashFunctions.broadcastSet]]: ~90 bytes per
+    * 5-gram on the heap, measured) instead of the batch join's relation,
+    * whose 5M bound assumes ~30 bytes per gram — so a third of that
+    * bound keeps each executor's share near the same ~135 MB.
+    */
+  private[graft] val IntakeMaxBroadcastGrams = 1500000L
+
   /** The bench side every decontamination gate shares — the batch
     * operators below and the streaming intakes, which build it ONCE at
     * wiring so they pay the bench scan once instead of per micro-batch:
     * the distinct `n`-gram relation (eagerly localCheckpoint'ed, so the
     * count and every downstream join share one evaluation), its count,
-    * and the measured broadcast choice for the verify join.
+    * and the measured broadcast choice — for the verify join, and for
+    * the intakes' exact in-scan label ([[BenchGrams.intakeFlag]]).
     */
   private[graft] final case class BenchGrams(grams: DataFrame, nGrams: Long,
       n: Int, broadcastUsed: Boolean) {
@@ -522,6 +532,33 @@ object TextAnalysis {
       docs.select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
         .join(if (broadcastUsed) broadcast(grams) else grams, Seq("g"))
         .select(col(idCol)).distinct()
+
+    /** The distinct grams, gathered once and shipped as a broadcast set —
+      * on the broadcast path only, in place of the bloom's aggregate.
+      */
+    private lazy val gramSet = graft.functions.TextHashFunctions.broadcastSet(
+      grams.select(col("g")).as(org.apache.spark.sql.Encoders.STRING))
+
+    /** The per-row flag a streaming intake computes in-scan. Under the
+      * broadcast bound it is EXACT ([[graft.functions.TextHashFunctions
+      * .GramSetHit]] over [[gramSet]], `false` for null text): a flagged
+      * doc IS contaminated. Above the bound it is the bloom [[probe]]: a
+      * flagged doc MIGHT be.
+      */
+    def intakeFlag(text: Column, fpp: Double): Column =
+      if (broadcastUsed) graft.functions.TextHashFunctions.gram_set_hit(text, gramSet, n)
+      else probe(text, fpp)
+
+    /** `docs` minus its contaminated docs, given `flag` = [[intakeFlag]]:
+      * a filter when the flag is exact (no join, no exchange); above the
+      * bound, [[hitIds]] of the flagged docs and one anti-join. Both
+      * paths put `idCol` first, the anti-join's using-column order.
+      */
+    def dropFlagged(docs: DataFrame, flag: Column, idCol: String = "doc_id"): DataFrame =
+      if (broadcastUsed)
+        docs.filter(!flag)
+          .select((idCol +: docs.columns.filterNot(_ == idCol)).toIndexedSeq.map(col): _*)
+      else docs.join(hitIds(docs.filter(flag), idCol = idCol), Seq(idCol), "left_anti")
   }
 
   private[graft] def benchGrams(bench: DataFrame, n: Int = 5,

@@ -264,4 +264,44 @@ class PropertySpec extends SparkTestBase {
           s"extra=${(bloomed -- exact).take(5)} missing=${(exact -- bloomed).take(5)}")
     }
   }
+
+  test("GramSetHit ≡ hitIds membership on generated docs (short, empty, null, " +
+      "mixed-case and non-ASCII text)") {
+    // words mix case, non-ASCII letters and digits (Arabic-Indic ٤٢ is
+    // a digit, "—" and "_" delimit); 1–6 tokens against n = 3, so many
+    // docs fall back to their whole-doc gram
+    val word = Gen.oneOf("alpha", "Alpha", "BETA", "beta", "ñandú", "ÑANDÚ",
+      "straße", "日本", "Ωmega", "ωmega", "42", "٤٢", "x9")
+    val sep = Gen.oneOf(" ", ", ", "—", "_", "!? ")
+    val doc: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None), 1 -> Gen.const(Some("")), 1 -> Gen.const(Some("!? —")),
+      12 -> Gen.chooseNum(1, 6).flatMap(k => Gen.listOfN(k, Gen.zip(word, sep)))
+        .map(ws => Some(ws.map { case (w, s) => w + s }.mkString)))
+    val all = cases(doc, 240).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val bench = all.filter(col("doc_id") < 20)
+    val train = all.filter(col("doc_id") >= 20)
+    val g = graft.operators.TextAnalysis.benchGrams(bench, n = 3)
+    assert(g.broadcastUsed)
+    val viaJoin = g.hitIds(train).as[Long].collect().toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft_gramsethit").toString
+    train.write.mode("overwrite").parquet(dir)
+    // the local relation folds to interpreted eval; the scan runs codegen,
+    // here with no silent fallback to interpreted eval
+    val strict = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prior = strict.map { case (k, _) => k -> spark.conf.getOption(k) }
+    strict.foreach { case (k, v) => spark.conf.set(k, v) }
+    try for ((path, docs) <- Seq("interpreted" -> train, "codegen" -> spark.read.parquet(dir))) {
+      val flags = docs.select(col("doc_id"), g.intakeFlag(col("text"), 0.01).as("hit"))
+      assert(flags.filter(col("hit").isNull).isEmpty, s"$path: a null flag")
+      val hit = flags.filter(col("hit")).select(col("doc_id")).as[Long].collect().toSet
+      assert(hit == viaJoin, s"$path: probe-only ${hit -- viaJoin}, join-only ${viaJoin -- hit}")
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val nTrain = train.count()
+    assert(viaJoin.nonEmpty && viaJoin.size < nTrain, s"${viaJoin.size} of $nTrain hit")
+  }
 }

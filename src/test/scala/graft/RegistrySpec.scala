@@ -194,6 +194,24 @@ class RegistrySpec extends SparkTestBase {
     }
   }
 
+  test("Soak.graphDecompJson writes each key once, at one scale and at three") {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.core.JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    for ((maxN, eN, tN) <- Seq((1, 2888L, 0.5), (3, 9100L, 2.1))) {
+      val line = s"""{"graph_decomp":{"pagerank":""" +
+        Soak.graphDecompJson("trade_sym_edges", maxN, 2888L, eN, 0.5, tN) + "}}"
+      val obj = mapper.readTree(line).get("graph_decomp").get("pagerank")
+      val keys = obj.fieldNames().asScala.toSeq
+      val scaled = Seq(1, maxN).distinct
+      assert(keys == Seq("edge_kind") ++ scaled.map(n => s"edges_x$n") ++
+        Seq("edge_ratio") ++ scaled.map(n => s"s_per_medge_x$n") ++
+        Seq("per_edge_ratio", "verdict"), line)
+      assert(obj.get(s"edges_x$maxN").asLong == eN, line)
+      assert(obj.get("edge_ratio").asDouble == math.rint(eN / 2888.0 * 100) / 100, line)
+    }
+  }
+
   test("no-oracle queries are EXACTLY the declared exemptions, each with a reason") {
     // "no_oracle" in CORRECTNESS must stay a design decision, not an
     // omission: a query ships with an oracle (static OR model-literal

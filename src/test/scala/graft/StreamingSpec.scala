@@ -1422,81 +1422,180 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(indexDir).count() == 4L)
   }
 
+  /** Per job: (stream query id, batch id, SQL execution id). Per SQL
+    * execution: the nodes of its plans (the initial one and every
+    * adaptive update).
+    */
+  private final class JobRecorder extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    import scala.jdk.CollectionConverters._
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    private val nodes = new java.util.concurrent.ConcurrentHashMap[String, Seq[SparkPlanInfo]]()
+    private def walk(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(walk)
+    private def record(id: Long, p: SparkPlanInfo): Unit =
+      nodes.merge(id.toString, walk(p), _ ++ _)
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = e.properties
+      jobs.add((p.getProperty("sql.streaming.queryId", ""),
+        p.getProperty("streaming.sql.batchId", ""),
+        p.getProperty("spark.sql.execution.id", "")))
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => record(s.executionId, s.sparkPlanInfo)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => record(u.executionId, u.sparkPlanInfo)
+      case _ =>
+    }
+    /** Runs `body` with this recorder attached; every event posted before
+      * it returns has been delivered once the marker job's start is seen.
+      */
+    def during[T](body: => T): T = {
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      spark.sparkContext.addSparkListener(this)
+      try body
+      finally {
+        val marker = java.util.UUID.randomUUID().toString
+        spark.sparkContext.setLocalProperty("streaming.sql.batchId", marker)
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setLocalProperty("streaming.sql.batchId", null)
+        eventually(timeout(10.seconds), interval(20.millis)) {
+          assert(jobs.asScala.exists(_._2 == marker))
+        }
+        spark.sparkContext.removeSparkListener(this)
+      }
+    }
+    /** The jobs of `batchId` of stream query `queryId`, as execution ids. */
+    def batchJobs(queryId: java.util.UUID, batchId: Long): Seq[String] =
+      jobs.asScala.toSeq.collect {
+        case (q, b, e) if q == queryId.toString && b == batchId.toString => e
+      }
+    private def planOf(execution: String): Seq[SparkPlanInfo] =
+      Option(nodes.get(execution)).getOrElse(Nil)
+    /** Whether a plan of `execution` scans a file under `dir`. */
+    def scans(dir: String)(execution: String): Boolean = {
+      val path = new java.io.File(dir).toURI.toString.stripSuffix("/")
+      planOf(execution).exists(_.metadata.get("Location").exists(_.contains(path)))
+    }
+    def nodeNames(execution: String): Set[String] = planOf(execution).map(_.nodeName).toSet
+  }
+
+  /** Feeds each doc group as one micro-batch of `q`; returns their batch ids. */
+  private def feedBatches[T](mem: MemoryStream[T],
+      q: org.apache.spark.sql.streaming.StreamingQuery, groups: Seq[Seq[T]]): Seq[Long] =
+    groups.map { docs =>
+      mem.addData(docs: _*); q.processAllAvailable()
+      q.recentProgress.filter(_.numInputRows > 0).last.batchId
+    }
+
   test("curationIntake per-micro-batch job budget; a batch with no flagged " +
       "row reads no index file") {
     implicit val sc = spark.sqlContext
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.SparkPlanInfo
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    import scala.jdk.CollectionConverters._
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
     val f = new CurationFixture
-    // (query id, batch id, SQL execution id) per job, and the SQL
-    // executions whose plan scans a file under the index dir
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
-    val indexScans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val indexPath = new java.io.File(f.indexDir).toURI.toString.stripSuffix("/")
-    def scansIndex(p: SparkPlanInfo): Boolean =
-      p.metadata.get("Location").exists(_.contains(indexPath)) ||
-        p.children.exists(scansIndex)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        jobs.add((p.getProperty("sql.streaming.queryId", ""),
-          p.getProperty("streaming.sql.batchId", ""),
-          p.getProperty("spark.sql.execution.id", "")))
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if scansIndex(s.sparkPlanInfo) =>
-          indexScans.add(s.executionId.toString)
-        case _ =>
-      }
-    }
-    // every event posted before the marker job's start has been delivered
-    // once the listener sees that start
-    def drainBus(): Unit = {
-      val marker = java.util.UUID.randomUUID().toString
-      spark.sparkContext.setLocalProperty("streaming.sql.batchId", marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty("streaming.sql.batchId", null)
-      eventually(timeout(10.seconds), interval(20.millis)) {
-        assert(jobs.asScala.exists(_._2 == marker))
-      }
-    }
+    val rec = new JobRecorder
     // a fifth clean doc: its hash is not in the one-hash index and misses
     // the wiring-time bloom, so no row of its batch is flagged; s2's
     // budget is spent by cycle 1, so the funnel rejects it at gate 7
     val unflagged = Seq(EventStreams.SourcedDoc(30, ts(30), "s2",
       "data document five with clean english words for the intake test"))
-    spark.sparkContext.addSparkListener(listener)
     val mem = MemoryStream[EventStreams.SourcedDoc]
     val q = f.wire(mem).start()
-    val (flaggedBatch, cleanBatch) = try {
-      def dataBatch(docs: Seq[EventStreams.SourcedDoc]): String = {
-        mem.addData(docs: _*); q.processAllAvailable()
-        q.recentProgress.filter(_.numInputRows > 0).last.batchId.toString
-      }
-      (dataBatch(f.c1), dataBatch(unflagged))
-    } finally { q.stop(); drainBus(); spark.sparkContext.removeSparkListener(listener) }
-    val byBatch = jobs.asScala.filter(_._1 == q.id.toString).toSeq.groupBy(_._2)
-    val flaggedJobs = byBatch(flaggedBatch)
-    val cleanJobs = byBatch(cleanBatch)
-    // the detector sees the flagged batch's index probe ...
-    assert(flaggedJobs.exists(j => indexScans.contains(j._3)),
-      "the flagged batch must verify against the index")
-    // ... and the unflagged batch plans no index scan at all (gate 6a)
-    val touched = cleanJobs.count(j => indexScans.contains(j._3))
+    val Seq(flaggedBatch, cleanBatch) = rec.during {
+      try feedBatches(mem, q, Seq(f.c1, unflagged)) finally q.stop()
+    }
+    val flaggedJobs = rec.batchJobs(q.id, flaggedBatch)
+    val cleanJobs = rec.batchJobs(q.id, cleanBatch)
+    // the flagged batch verifies against the index in exactly one job
+    // (gate 6a's confirmed hashes are computed once, then a label) ...
+    val scanning = flaggedJobs.count(rec.scans(f.indexDir))
+    assert(scanning == 1, s"flagged batch scanned the index in $scanning jobs")
+    // ... and the unflagged batch plans no index scan at all
+    val touched = cleanJobs.count(rec.scans(f.indexDir))
     assert(touched == 0, s"unflagged batch read the index in $touched jobs")
-    // the budget: the batch-size-and-flag aggregate, one ≤64-hash collect
-    // (flagged batch only), the labeled funnel with its grouped collect,
-    // and the sink, index and ledger writes
-    assert(flaggedJobs.size <= 9, s"flagged batch ran ${flaggedJobs.size} jobs")
-    assert(cleanJobs.size <= 7, s"unflagged batch ran ${cleanJobs.size} jobs")
+    // the budget: the batch-size-and-flag aggregate, the flagged-hash
+    // collect and the index scan (flagged batch only), the labeled
+    // funnel with its grouped collect, and the sink, index and ledger
+    // writes
+    assert(flaggedJobs.size <= 8, s"flagged batch ran ${flaggedJobs.size} jobs")
+    assert(cleanJobs.size <= 6, s"unflagged batch ran ${cleanJobs.size} jobs")
     val ledger = spark.read.parquet(f.ledgerDir).orderBy(col("batch_id"))
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(ledger == Seq((6L, 4L, 3L), (1L, 1L, 0L)), s"ledger $ledger")
+  }
+
+  test("curationIntake job budget for a dup-heavy batch: the index is " +
+      "scanned in exactly one job") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val known = (0 until 70).map(i => s"data known doc $i already sits in the corpus index")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_curation_many").toString
+    known.toDF("text").select(md5(col("text")).as("content_hash")).write.parquet(s"$tmp/index")
+    val rec = new JobRecorder
+    // 67 index hashes and two novel docs in one batch
+    val batch = known.drop(3).zipWithIndex.map { case (t, i) =>
+      EventStreams.SourcedDoc(100 + i, ts(i), "s1", t)
+    } ++ Seq(EventStreams.SourcedDoc(1, ts(80), "s1", f.novelA),
+      EventStreams.SourcedDoc(2, ts(81), "s1", f.novelB))
+    val mem = MemoryStream[EventStreams.SourcedDoc]
+    val q = EventStreams.curationIntake(mem.toDF(), f.quality, f.tauQ, f.bm25, 0.01,
+      f.bench, f.ref, 0.6, None, s"$tmp/index", s"$tmp/sink", s"$tmp/ledger").start()
+    val Seq(manyBatch) = rec.during {
+      try feedBatches(mem, q, Seq(batch)) finally q.stop()
+    }
+    val jobs = rec.batchJobs(q.id, manyBatch)
+    val scanning = jobs.count(rec.scans(s"$tmp/index"))
+    assert(scanning == 1, s"dup-heavy batch scanned the index in $scanning jobs")
+    assert(jobs.size <= 7, s"dup-heavy batch ran ${jobs.size} jobs")
+    val ledger = spark.read.parquet(s"$tmp/ledger")
+      .select(col("n_batch"), col("n_clean"), col("n_admitted"))
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(ledger == Seq((69L, 2L, 2L)), s"ledger $ledger")
+  }
+
+  test("decontamIntake under the broadcast bound: a batch is a map-only " +
+      "label, with no broadcast of the bench grams") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val sinkDir = s"${f.tmp}/decontam_sink"
+    val rec = new JobRecorder
+    val mem = MemoryStream[EventStreams.Doc]
+    val q = EventStreams.decontamIntake(mem.toDF(), f.bench, sinkDir).start()
+    val Seq(batch) = rec.during {
+      try feedBatches(mem, q, Seq(Seq(EventStreams.Doc(1, ts(0), f.contaminated),
+        EventStreams.Doc(2, ts(1), f.novelA), EventStreams.Doc(3, ts(2), f.novelB))))
+      finally q.stop()
+    }
+    val jobs = rec.batchJobs(q.id, batch)
+    assert(jobs.nonEmpty)
+    jobs.foreach { e =>
+      val exchanges = rec.nodeNames(e).filter(_.contains("Exchange"))
+      assert(exchanges.isEmpty, s"execution $e planned $exchanges")
+    }
+    val kept = spark.read.parquet(sinkDir).select(col("doc_id")).as[Long].collect().toSet
+    assert(kept == Set(2L, 3L), s"kept $kept")
+  }
+
+  test("decontamIntake above the broadcast bound: the shuffle verify keeps " +
+      "the same docs and unpersists every batch") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val sinkDir = s"${f.tmp}/decontam_shuffle_sink"
+    val mem = MemoryStream[EventStreams.Doc]
+    val wired = EventStreams.decontamIntake(mem.toDF(), f.bench, sinkDir,
+      maxBroadcastGrams = 0L)
+    // after wiring, which keeps the bench grams checkpointed for the run
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val q = wired.start()
+    try feedBatches(mem, q, Seq(Seq(EventStreams.Doc(1, ts(0), f.contaminated),
+      EventStreams.Doc(2, ts(1), f.novelA), EventStreams.Doc(3, ts(2), f.novelB))))
+    finally q.stop()
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- cachedBefore
+    assert(left.isEmpty, s"batch left cached RDDs $left")
+    val kept = spark.read.parquet(sinkDir).select(col("doc_id")).as[Long].collect().toSet
+    assert(kept == Set(2L, 3L), s"kept $kept")
   }
 
   test("curationIntake fallbacks (shuffle verify, no index bloom, >64 flagged " +
@@ -1514,8 +1613,7 @@ class StreamingSpec extends SparkTestBase {
     // 70 distinct gate-passing docs already in the index
     val known = (0 until 70).map(i => s"data known doc $i already sits in the corpus index")
     def doc(id: Long, min: Int, text: String) = EventStreams.SourcedDoc(id, ts(min), "s1", text)
-    // batch 1 flags 3 index hashes (the pushed-literal probe); batch 2
-    // flags the other 67 (above the 64-hash cap: the broadcast semi-join)
+    // batch 1 flags 3 index hashes, batch 2 the other 67
     val batch1 = Seq(
       doc(1, 0, "$$% ##@ !!++ ^^&& ;;:: ??//"),
       doc(2, 1, "the filler words carry no relevance to the fixed terms"),

@@ -50,6 +50,18 @@ def seed_list(spec):
     return seeds
 
 
+def build_trees(parent):
+    """{"parent": PARENT_DIR, "change": this checkout}, each with its benchmark built."""
+    parent = parent.resolve()
+    if not (parent / "perfbench" / "run.py").is_file():
+        sys.exit(f"{parent} has no perfbench/run.py")
+    trees = {"parent": parent, "change": ROOT}
+    for tree in trees.values():
+        subprocess.run([sys.executable, "perfbench/build.py"], cwd=tree, check=True,
+                       stdout=subprocess.DEVNULL)
+    return trees
+
+
 def run(tree, workload, seed, seconds):
     """One run's result line, or None if the run crashed or printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -104,16 +116,10 @@ def main():
     ap.add_argument("--seeds", default="61-70",
                     help="one pair per seed, e.g. 61-70 or 1,3,5-8 (default 61-70)")
     args = ap.parse_args()
-    parent = args.parent.resolve()
-    if not (parent / "perfbench" / "run.py").is_file():
-        ap.error(f"{parent} has no perfbench/run.py")
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
     seeds = seed_list(args.seeds)
     seconds = bench["run_seconds"]
-    trees = {"parent": parent, "change": ROOT}
-    for tree in trees.values():
-        subprocess.run([sys.executable, "perfbench/build.py"], cwd=tree, check=True,
-                       stdout=subprocess.DEVNULL)
+    trees = build_trees(args.parent)
 
     failed = 0
     for w in workloads:
