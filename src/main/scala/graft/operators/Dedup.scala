@@ -508,20 +508,30 @@ object Dedup {
     // r17: the candidate+verify tail was 2 consecutive single-task
     // jobs ≈ 1 s of the 2.9 s line)
     val shuffleN = sets.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = prefix.select(col("g"), col("id").as("id_a"),
-        col("sz").as("sza"), col("pos").as("pa"))
-      .repartition(shuffleN, col("g"))
-      .join(prefix.select(col("g"), col("id").as("id_b"),
-        col("sz").as("szb"), col("pos").as("pb")), Seq("g"))
-      .filter(col("id_a") < col("id_b") &&
-        lit(tn) * greatest(col("sza"), col("szb")) <=
-          lit(td) * least(col("sza"), col("szb")) &&
+    val cand = prefixPairs(prefix, shuffleN, tn, td)
+      .filter(
         posFilter(col("pa"), col("pb"), col("sza"), col("szb"), tn, td))
       .select(col("id_a"), col("id_b"))
       .repartition(shuffleN, col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
     verifyJaccard(cand, sets, sets, tn, td, "id_a", "id_b")
   }
+
+  /** The PPJoin prefix self-join: pairs `id_a < id_b` sharing a prefix
+    * token `g` whose sizes pass the length filter, with both sizes and
+    * prefix positions. The join input is pinned to `shuffleN` hash
+    * partitions on `g`.
+    */
+  private def prefixPairs(prefix: DataFrame, shuffleN: Int,
+      tn: Int, td: Int): DataFrame =
+    prefix.select(col("g"), col("id").as("id_a"),
+        col("sz").as("sza"), col("pos").as("pa"))
+      .repartition(shuffleN, col("g"))
+      .join(prefix.select(col("g"), col("id").as("id_b"),
+        col("sz").as("szb"), col("pos").as("pb")), Seq("g"))
+      .filter(col("id_a") < col("id_b") &&
+        lit(tn) * greatest(col("sza"), col("szb")) <=
+          lit(td) * least(col("sza"), col("szb")))
 
   /** Incremental PPJoin probe: exact Jaccard ≥ tn/td pairs between an
     * incoming `batch` and the indexed `corpus` ONLY (within-batch and
@@ -758,14 +768,7 @@ object Dedup {
     // carries both funnel counts and the verify input — identical
     // counts, identical verified set, two fewer exchanges and one
     // fewer checkpoint
-    val grouped = prefix.select(col("g"), col("id").as("id_a"),
-        col("sz").as("sza"), col("pos").as("pa"))
-      .repartition(shuffleN, col("g"))
-      .join(prefix.select(col("g"), col("id").as("id_b"),
-        col("sz").as("szb"), col("pos").as("pb")), Seq("g"))
-      .filter(col("id_a") < col("id_b") &&
-        lit(tn) * greatest(col("sza"), col("szb")) <=
-          lit(td) * least(col("sza"), col("szb")))
+    val grouped = prefixPairs(prefix, shuffleN, tn, td)
       .withColumn("pos_ok",
         posFilter(col("pa"), col("pb"), col("sza"), col("szb"), tn, td))
       .repartition(shuffleN, col("id_a"), col("id_b"))

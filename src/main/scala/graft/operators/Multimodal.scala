@@ -99,6 +99,19 @@ object Multimodal {
       * the format, not of luck.
       */
     def encodePng(width: Int, height: Int, seed: Long): Array[Byte] = {
+      val img = raster(width, height, seed)
+      val bos = new java.io.ByteArrayOutputStream()
+      // memory-cached output stream — see the JPEG encode note (no temp
+      // file per image; identical bytes)
+      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      try javax.imageio.ImageIO.write(img, "png", ios) finally ios.close()
+      bos.toByteArray
+    }
+
+    /** A w×h RGB raster whose pixel (x, y) is a splitmix64 of
+      * (seed, x, y). */
+    private[Multimodal] def raster(width: Int, height: Int,
+        seed: Long): java.awt.image.BufferedImage = {
       val img = new java.awt.image.BufferedImage(
         width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
       var y = 0
@@ -113,12 +126,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      // memory-cached output stream — see the JPEG encode note (no temp
-      // file per image; identical bytes)
-      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-      try javax.imageio.ImageIO.write(img, "png", ios) finally ios.close()
-      bos.toByteArray
+      img
     }
 
     final case class Decoded(width: Int, height: Int, nChannels: Int,
@@ -244,6 +252,21 @@ object Multimodal {
     final case class Decoded(sampleRate: Int, nSamples: Long,
       sumSq: Long, sumAbs: Long, zeroCrossings: Long)
 
+    /** AudioSystem parses the RIFF/WAVE container; the format must be
+      * 16-bit mono PCM. Returns the format and the little-endian sample
+      * bytes. */
+    private def readPcm16Mono(bytes: Array[Byte])
+        : (javax.sound.sampled.AudioFormat, Array[Byte]) = {
+      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try {
+        val fmt = ais.getFormat
+        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+          s"expected 16-bit mono PCM, got $fmt")
+        (fmt, ais.readAllBytes())
+      } finally ais.close()
+    }
+
     /** REAL decode: AudioSystem parses the RIFF/WAVE container and frame
       * format; EXACT integer sample moments (Σv², Σ|v|) + zero-crossing
       * count come from the actual PCM samples — the standard cheap
@@ -254,31 +277,24 @@ object Multimodal {
       * correctly-rounded ops only, bit-reproducible on any engine.
       */
     def decodeStats(bytes: Array[Byte]): Decoded = {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt = ais.getFormat
-        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"expected 16-bit mono PCM, got $fmt")
-        val raw = ais.readAllBytes()
-        var sumSq = 0L
-        var sumAbs = 0L
-        var zc = 0L
-        var prevPos = true
-        var n = 0L
-        var i = 0
-        while (i + 1 < raw.length) {
-          val s = ((raw(i) & 0xFF) | (raw(i + 1) << 8)).toShort
-          sumSq += s.toLong * s
-          sumAbs += math.abs(s.toLong)
-          val pos = s >= 0
-          if (n > 0 && pos != prevPos) zc += 1
-          prevPos = pos
-          n += 1
-          i += 2
-        }
-        Decoded(fmt.getSampleRate.toInt, n, sumSq, sumAbs, zc)
-      } finally ais.close()
+      val (fmt, raw) = readPcm16Mono(bytes)
+      var sumSq = 0L
+      var sumAbs = 0L
+      var zc = 0L
+      var prevPos = true
+      var n = 0L
+      var i = 0
+      while (i + 1 < raw.length) {
+        val s = ((raw(i) & 0xFF) | (raw(i + 1) << 8)).toShort
+        sumSq += s.toLong * s
+        sumAbs += math.abs(s.toLong)
+        val pos = s >= 0
+        if (n > 0 && pos != prevPos) zc += 1
+        prevPos = pos
+        n += 1
+        i += 2
+      }
+      Decoded(fmt.getSampleRate.toInt, n, sumSq, sumAbs, zc)
     }
 
     /** 64 frame-energy cells + per-frame SAMPLE COUNTS from REAL decoded
@@ -294,26 +310,19 @@ object Multimodal {
       * multiplied exact (see [[Multimodal.audioAHash]]).
       */
     def frameEnergies(bytes: Array[Byte]): (Long, Array[Long], Array[Long]) = {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt = ais.getFormat
-        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-          s"expected 16-bit mono PCM, got $fmt")
-        val raw = ais.readAllBytes()
-        val n = raw.length / 2
-        val e = new Array[Long](64)
-        val c = new Array[Long](64)
-        var i = 0
-        while (i + 1 < raw.length) {
-          val s = ((raw(i) & 0xFF) | (raw(i + 1) << 8)).toShort
-          val k = ((i / 2).toLong * 64 / n).toInt
-          e(k) += math.abs(s.toLong)
-          c(k) += 1
-          i += 2
-        }
-        (n.toLong, e, c)
-      } finally ais.close()
+      val raw = readPcm16Mono(bytes)._2
+      val n = raw.length / 2
+      val e = new Array[Long](64)
+      val c = new Array[Long](64)
+      var i = 0
+      while (i + 1 < raw.length) {
+        val s = ((raw(i) & 0xFF) | (raw(i + 1) << 8)).toShort
+        val k = ((i / 2).toLong * 64 / n).toInt
+        e(k) += math.abs(s.toLong)
+        c(k) += 1
+        i += 2
+      }
+      (n.toLong, e, c)
     }
   }
 
@@ -338,21 +347,10 @@ object Multimodal {
     def encodeAvi(width: Int, height: Int, fps: Int, nFrames: Int,
         seed: Long): Array[Byte] = {
       val frames = (0 until nFrames).map { f =>
-        val img = new java.awt.image.BufferedImage(
-          width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < height) {
-          var x = 0
-          while (x < width) {
-            var z = seed + f * 0x8C6E1D29B5A1D3F7L +
-              x * 0x9E3779B97F4A7C15L + y * 0xC2B2AE3D27D4EB4FL
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            img.setRGB(x, y, ((z ^ (z >>> 31)) & 0xFFFFFF).toInt)
-            x += 1
-          }
-          y += 1
-        }
+        // wrapping Long adds: the same pixels as folding the frame term
+        // into each pixel's sum
+        val img = ImageCodec.raster(width, height,
+          seed + f * 0x8C6E1D29B5A1D3F7L)
         val bos = new java.io.ByteArrayOutputStream()
         // memory-cached output stream: ImageIO.write(_, _, OutputStream)
         // would otherwise spill through a temp FILE per frame
@@ -444,56 +442,22 @@ object Multimodal {
       * container-framed, codec-decoded pixel bytes.
       */
     def decodeFrames(bytes: Array[Byte]): FrameStats = {
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var pos = 12
       var lumaSum = 0.0
       var nPix = 0L
-      var n = 0
-      // ONE JPEG reader reused across the clip's frames:
-      // ImageIO.read(stream) re-runs plugin discovery per call — for
-      // tiny MJPEG frames that overhead is material (measured 4.73 s
-      // → 3.62 s for q_video_decode at sf0.1, −23%)
-      val reader = javax.imageio.ImageIO
-        .getImageReadersByFormatName("jpeg").next()
-      try {
-        while (pos + 8 <= bytes.length) {
-          val id = bb.getInt(pos)
-          val sz = bb.getInt(pos + 4)
-          if (id == 0x5453494C) { // 'LIST'
-            val kind = bb.getInt(pos + 8)
-            if (kind == 0x69766F6D) pos += 12 // descend movi
-            else pos += 8 + sz + (sz & 1)
-          } else if (id == 0x63643030) { // '00dc'
-            // MemoryCacheImageInputStream, NOT createImageInputStream:
-            // the latter returns a FileCacheImageInputStream under the
-            // ImageIO cache default — a temp FILE per frame, i.e.
-            // hundreds of thousands of file create/deletes per bench
-            // run for tiny in-memory MJPEG frames
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(bytes, pos + 8, sz))
-            val img = try {
-              reader.setInput(iis, true, true)
-              reader.read(0)
-            } finally iis.close()
-            require(img != null, s"undecodable frame $n")
-            // bulk row-major fetch; double accumulation order is
-            // identical to the per-(x,y) loop → bit-identical mean
-            val fw = img.getWidth
-            val px = img.getRGB(0, 0, fw, img.getHeight, null, 0, fw)
-            var k = 0
-            while (k < px.length) {
-              val p = px(k)
-              lumaSum += 0.299 * ((p >>> 16) & 0xFF) +
-                0.587 * ((p >>> 8) & 0xFF) + 0.114 * (p & 0xFF)
-              k += 1
-            }
-            nPix += px.length
-            n += 1
-            pos += 8 + sz + (sz & 1)
-          } else pos += 8 + sz + (sz & 1)
+      val n = foreachFrame(bytes) { img =>
+        // bulk row-major fetch; double accumulation order is
+        // identical to the per-(x,y) loop → bit-identical mean
+        val fw = img.getWidth
+        val px = img.getRGB(0, 0, fw, img.getHeight, null, 0, fw)
+        var k = 0
+        while (k < px.length) {
+          val p = px(k)
+          lumaSum += 0.299 * ((p >>> 16) & 0xFF) +
+            0.587 * ((p >>> 8) & 0xFF) + 0.114 * (p & 0xFF)
+          k += 1
         }
-      } finally reader.dispose()
+        nPix += px.length
+      }
       FrameStats(n, if (nPix == 0) 0.0 else lumaSum / nPix)
     }
 
@@ -509,48 +473,66 @@ object Multimodal {
       * near-dup robustness property. Returns (framesDecoded, grid[64]).
       */
     def frameLumaGrid(bytes: Array[Byte]): (Int, Array[Long]) = {
+      val grid = new Array[Long](64)
+      val n = foreachFrame(bytes) { img =>
+        val w = img.getWidth; val h = img.getHeight
+        var k = 0; var j = 0
+        while (j < 8) {
+          var i = 0
+          while (i < 8) {
+            val rgb = img.getRGB((2 * i + 1) * w / 16, (2 * j + 1) * h / 16)
+            grid(k) += 299L * ((rgb >> 16) & 0xff) +
+              587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
+            k += 1; i += 1
+          }
+          j += 1
+        }
+      }
+      (n, grid)
+    }
+
+    /** Walks the `movi` list's `00dc` chunks in order and decodes each
+      * JPEG frame for `f`; returns the number of frames. */
+    private def foreachFrame(bytes: Array[Byte])(
+        f: java.awt.image.BufferedImage => Unit): Int = {
       val bb = java.nio.ByteBuffer.wrap(bytes)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       var pos = 12
-      val grid = new Array[Long](64)
       var n = 0
-      // one reused JPEG reader + memory-cached streams — the
-      // decodeFrames discipline (plugin discovery / temp-file costs)
+      // ONE JPEG reader reused across the clip's frames:
+      // ImageIO.read(stream) re-runs plugin discovery per call — for
+      // tiny MJPEG frames that overhead is material (measured 4.73 s
+      // → 3.62 s for q_video_decode at sf0.1, −23%)
       val reader = javax.imageio.ImageIO
         .getImageReadersByFormatName("jpeg").next()
       try {
         while (pos + 8 <= bytes.length) {
           val id = bb.getInt(pos)
           val sz = bb.getInt(pos + 4)
-          if (id == 0x5453494C) { // 'LIST'
-            if (bb.getInt(pos + 8) == 0x69766F6D) pos += 12 // descend movi
-            else pos += 8 + sz + (sz & 1)
-          } else if (id == 0x63643030) { // '00dc'
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(bytes, pos + 8, sz))
-            val img = try {
-              reader.setInput(iis, true, true)
-              reader.read(0)
-            } finally iis.close()
-            require(img != null, s"undecodable frame $n")
-            val w = img.getWidth; val h = img.getHeight
-            var k = 0; var j = 0
-            while (j < 8) {
-              var i = 0
-              while (i < 8) {
-                val rgb = img.getRGB((2 * i + 1) * w / 16, (2 * j + 1) * h / 16)
-                grid(k) += 299L * ((rgb >> 16) & 0xff) +
-                  587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
-                k += 1; i += 1
-              }
-              j += 1
+          if (id == 0x5453494C && bb.getInt(pos + 8) == 0x69766F6D)
+            pos += 12 // 'LIST' movi: descend
+          else {
+            if (id == 0x63643030) { // '00dc'
+              // MemoryCacheImageInputStream, NOT createImageInputStream:
+              // the latter returns a FileCacheImageInputStream under the
+              // ImageIO cache default — a temp FILE per frame, i.e.
+              // hundreds of thousands of file create/deletes per bench
+              // run for tiny in-memory MJPEG frames
+              val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+                new java.io.ByteArrayInputStream(bytes, pos + 8, sz))
+              val img = try {
+                reader.setInput(iis, true, true)
+                reader.read(0)
+              } finally iis.close()
+              require(img != null, s"undecodable frame $n")
+              f(img)
+              n += 1
             }
-            n += 1
             pos += 8 + sz + (sz & 1)
-          } else pos += 8 + sz + (sz & 1)
+          }
         }
       } finally reader.dispose()
-      (n, grid)
+      n
     }
   }
 
@@ -589,20 +571,14 @@ object Multimodal {
     * executors.
     */
   def contentVideoTable(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val ch = graft.functions.TextHashFunctions.fnv64(
-            text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          def m(n: Long) = java.lang.Long.remainderUnsigned(ch, n).toInt
-          val w = (m(9) + 2) * 2
-          val h = (m(7) + 2) * 2
-          val fps = (m(4) + 1) * 5
-          val nf = m(12) + 2
-          (id, "video", VideoCodec.encodeAvi(w, h, fps, nf, ch), w, h, nf)
-        }
-      }.toDF("media_id", "kind", "bytes", "width", "height", "n_frames_meta")
+    byContentHash(docs) { (id, ch) =>
+      def m(n: Long) = java.lang.Long.remainderUnsigned(ch, n).toInt
+      val w = (m(9) + 2) * 2
+      val h = (m(7) + 2) * 2
+      val fps = (m(4) + 1) * 5
+      val nf = m(12) + 2
+      (id, "video", VideoCodec.encodeAvi(w, h, fps, nf, ch), w, h, nf)
+    }.toDF("media_id", "kind", "bytes", "width", "height", "n_frames_meta")
   }
 
   /** Per-clip video perceptual-hash row: four 16-bit bands over the
@@ -720,16 +696,10 @@ object Multimodal {
     * twin). Map-only; bytes born on executors.
     */
   def contentAudioTable(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val ch = graft.functions.TextHashFunctions.fnv64(
-            text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          val n = java.lang.Long.remainderUnsigned(ch, 400).toInt + 100
-          (id, "audio", AudioCodec.encodeWav(n, 16000, ch), 16000, n)
-        }
-      }.toDF("media_id", "kind", "bytes", "sample_rate", "n_samples_meta")
+    byContentHash(docs) { (id, ch) =>
+      val n = java.lang.Long.remainderUnsigned(ch, 400).toInt + 100
+      (id, "audio", AudioCodec.encodeWav(n, 16000, ch), 16000, n)
+    }.toDF("media_id", "kind", "bytes", "sample_rate", "n_samples_meta")
   }
 
   /** Per-clip audio perceptual-hash row: four 16-bit energy-signature
@@ -799,6 +769,18 @@ object Multimodal {
     }.toDF("media_id", "kind", "bytes", "width", "height")
   }
 
+  /** `f(doc_id, h)` per document, `h` the FNV-1a 64 hash of its UTF-8
+    * text — the seed of the content-seeded media tables. Map-only. */
+  private def byContentHash[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      docs: DataFrame)(f: (Long, Long) => T): Dataset[T] = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) =>
+        f(id, graft.functions.TextHashFunctions.fnv64(
+          text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      })
+  }
+
   /** Content-seeded media table: like [[syntheticImageTable]] but dims
     * AND raster seed derive from a CONTENT hash (FNV-1a 64 of the UTF-8
     * text) instead of the row id — so exact-duplicate documents get
@@ -808,17 +790,11 @@ object Multimodal {
     * media corpus. Generation is map-only; bytes born on executors.
     */
   def contentImageTable(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val ch = graft.functions.TextHashFunctions.fnv64(
-            text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          val w = java.lang.Long.remainderUnsigned(ch, 31).toInt + 2
-          val h = java.lang.Long.remainderUnsigned(ch, 23).toInt + 2
-          (id, "image", ImageCodec.encodePng(w, h, ch), w, h)
-        }
-      }.toDF("media_id", "kind", "bytes", "width", "height")
+    byContentHash(docs) { (id, ch) =>
+      val w = java.lang.Long.remainderUnsigned(ch, 31).toInt + 2
+      val h = java.lang.Long.remainderUnsigned(ch, 23).toInt + 2
+      (id, "image", ImageCodec.encodePng(w, h, ch), w, h)
+    }.toDF("media_id", "kind", "bytes", "width", "height")
   }
 
   /** Per-image perceptual-hash row: four 16-bit aHash bands (always

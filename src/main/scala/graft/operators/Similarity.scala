@@ -369,12 +369,24 @@ object Similarity {
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("__lut", pqLut(books, col("__qv"))))
 
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = codes.crossJoin(q)
+    val scored = codes.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc", adcScore(col("codes"), col("__lut"), nCentroids) /
         when(col("xnorm") > 0.0, col("xnorm")).otherwise(1.0))
+    exactRerank(scored, corpus, idCol, vecCol, k, rerank)
+  }
+
+  /** Keeps each query's top `k·rerank` candidates by `adc` (ties →
+    * neighbor_id), joins their true corpus vectors back by id and
+    * re-ranks by exact cosine to the top `k`: `(query_id, neighbor_id,
+    * rank, cos)`. `scored` carries `query_id`, `neighbor_id`, the query
+    * vector `__qv` and `adc`.
+    */
+  private def exactRerank(scored: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int, rerank: Int): DataFrame = {
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc").desc, col("neighbor_id"))
+    val cand = scored
       .withColumn("__ar", row_number().over(wAdc))
       .filter(col("__ar") <= k * rerank)
       .select(col("query_id"), col("neighbor_id"), col("__qv"))
@@ -600,26 +612,12 @@ object Similarity {
 
     // one cell per corpus vector × nProbe distinct cells per query ⇒ a
     // candidate pair can appear at most once: no dropDuplicates needed
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = codes.join(q, Seq("centroid_id"))
+    val scored = codes.join(q, Seq("centroid_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc",
         (col("__qdotc") + adcScore(col("codes"), col("__lut"), nCentroids)) /
           when(col("xnorm") > 0.0, col("xnorm")).otherwise(1.0))
-      .withColumn("__ar", row_number().over(wAdc))
-      .filter(col("__ar") <= k * rerank)
-      .select(col("query_id"), col("neighbor_id"), col("__qv"))
-
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
-        Seq("neighbor_id"))
-      .withColumn("cos", cosine_similarity(col("__qv"), col("__cv")))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+    exactRerank(scored, corpus, idCol, vecCol, k, rerank)
   }
 
   /** Convenience fit+apply composition (fit on the bounded sample, then

@@ -486,21 +486,29 @@ object TextAnalysis {
     * the plan record (the repo's no-silent-caps norm); both paths are
     * asserted value-equal in CurationSpec.
     *
-    * Default threshold: 5M grams ≈ a few hundred MB broadcast at ~30
-    * bytes/gram — inside the 8GB broadcast-table hard cap with a wide
-    * margin, and well past any sane eval suite.
+    * Default threshold: [[BatchMaxBroadcastGrams]].
     */
   final case class DecontaminationPlan(
     contaminatedIds: DataFrame, nBenchGrams: Long, broadcastUsed: Boolean)
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The batch operators' default `maxBroadcastGrams`: 5M distinct
+    * grams. The broadcast relation (an `UnsafeHashedRelation` on one
+    * string key) measured 167.8 bytes per gram: `BroadcastExchangeExec`
+    * `dataSize` 838,860,528 bytes for 5M distinct 31-char word 5-grams
+    * (83.9 MB at 500k, 302 MB at 2M; JDK 17, local[4]). That is under
+    * 1 GB at the bound and inside Spark's 8 GB broadcast cap, and past
+    * any eval suite's gram count.
+    */
+  private[graft] val BatchMaxBroadcastGrams = 5000000L
+
   /** The streaming intakes' default `maxBroadcastGrams`. Under it they
     * ship the grams as a hash set of strings
     * ([[graft.functions.TextHashFunctions.broadcastSet]]: ~90 bytes per
-    * 5-gram on the heap, measured) instead of the batch join's relation,
-    * whose 5M bound assumes ~30 bytes per gram — so a third of that
-    * bound keeps each executor's share near the same ~135 MB.
+    * 5-gram on the heap, measured) instead of the batch join's relation.
+    * Every executor holds the set for the life of the stream, so the
+    * bound is set on its own: 1.5M grams, ~135 MB per executor.
     */
   private[graft] val IntakeMaxBroadcastGrams = 1500000L
 
@@ -562,7 +570,7 @@ object TextAnalysis {
   }
 
   private[graft] def benchGrams(bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = 5000000L, textCol: String = "text"): BenchGrams = {
+      maxBroadcastGrams: Long = BatchMaxBroadcastGrams, textCol: String = "text"): BenchGrams = {
     val grams = bench
       .select(explode(Dedup.shingles(col(textCol), n)).as("g"))
       .distinct().localCheckpoint(true)
@@ -575,7 +583,7 @@ object TextAnalysis {
   }
 
   def contaminationPlan(train: DataFrame, bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = 5000000L,
+      maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
       textCol: String = "text", idCol: String = "doc_id"): DecontaminationPlan = {
     val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
     DecontaminationPlan(g.hitIds(train, textCol, idCol), g.nGrams, g.broadcastUsed)
@@ -586,7 +594,7 @@ object TextAnalysis {
     * left-anti join.
     */
   def decontaminate(train: DataFrame, bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = 5000000L,
+      maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     train.join(
       contaminationPlan(train, bench, n, maxBroadcastGrams, textCol, idCol)
@@ -608,7 +616,7 @@ object TextAnalysis {
     * exact path's — same oracle SQL verifies both.
     */
   def decontaminateBloom(train: DataFrame, bench: DataFrame, n: Int = 5,
-      fpp: Double = 0.01, maxBroadcastGrams: Long = 5000000L,
+      fpp: Double = 0.01, maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
     val candidates = train.filter(g.probe(col(textCol), fpp))

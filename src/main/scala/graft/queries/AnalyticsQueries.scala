@@ -21,6 +21,7 @@ object AnalyticsQueries {
 
   private def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
   private def cents(c: Column) = round(c * 100, 0).cast("long")
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** DECIMAL(38,0) → BIGINT output cast that FAILS LOUDLY on overflow
     * instead of Spark's silent non-ANSI NULL (ADVICE r15: DuckDB's CAST
@@ -87,6 +88,23 @@ object AnalyticsQueries {
       .localCheckpoint(true)
   }
 
+  /** The symmetrized edge set `e`: true degrees `deg(a, deg)` and the
+    * wedges `(mid, u, w)`, u < w, over each center's first 64 neighbors
+    * by id — shared by [[linkScores]] and q_lcc_topk.
+    */
+  private def cappedWedges(e: DataFrame): (DataFrame, DataFrame) = {
+    val sym = e.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(e.select(col("v").as("a"), col("u").as("b")))
+    val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+    val wcap = Window.partitionBy(col("a")).orderBy(col("b"))
+    val capped = sym.withColumn("rn", row_number().over(wcap))
+      .filter(col("rn") <= 64).drop("rn")
+    val wedges = capped.select(col("a").as("mid"), col("b").as("u"))
+      .join(capped.select(col("a").as("mid"), col("b").as("w")), Seq("mid"))
+      .filter(col("u") < col("w"))
+    (deg, wedges)
+  }
+
   /** Link-prediction scores over [[coPurchaseEdges]] — ONE definition
     * shared by q_link_predict and q_link_recs so the pair set and the
     * three measures can never drift between the ranking and the per-node
@@ -101,15 +119,7 @@ object AnalyticsQueries {
     */
   private def linkScores(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)
-    val sym = e.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(e.select(col("v").as("a"), col("u").as("b")))
-    val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-    val wcap = Window.partitionBy(col("a")).orderBy(col("b"))
-    val capped = sym.withColumn("rn", row_number().over(wcap))
-      .filter(col("rn") <= 64).drop("rn")
-    val wedges = capped.select(col("a").as("mid"), col("b").as("u"))
-      .join(capped.select(col("a").as("mid"), col("b").as("w")), Seq("mid"))
-      .filter(col("u") < col("w"))
+    val (deg, wedges) = cappedWedges(e)
     val nonAdj = wedges.join(
       e.select(col("u").as("eu"), col("v").as("ew")),
       col("u") === col("eu") && col("w") === col("ew"), "left_anti")
@@ -128,6 +138,21 @@ object AnalyticsQueries {
           .as("jacc_r"))
   }
 
+  /** The source×lang contingency cells `o` with their row total
+    * `rtot`, column total `ctot` and `n_total` attached (marginals
+    * broadcast) — shared by [[chi2Agg]] and q_chi2_residuals.
+    */
+  private def chi2Cells(s: SparkSession, d: String): DataFrame = {
+    val cells = Tables.documents(s, d)
+      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
+    val rows = cells.groupBy(col("source")).agg(sum(col("o")).as("rtot"))
+    val colsM = cells.groupBy(col("lang")).agg(sum(col("o")).as("ctot"))
+    val tot = cells.agg(sum(col("o")).as("n_total"))
+    cells.join(broadcast(rows), Seq("source"))
+      .join(broadcast(colsM), Seq("lang"))
+      .crossJoin(broadcast(tot))
+  }
+
   /** The χ² independence chain over the source×lang contingency —
     * ONE definition shared by q_chi2_independence and q_cramers_v:
     * exact DECIMAL numerators per cell, the float term folded in
@@ -136,17 +161,9 @@ object AnalyticsQueries {
     * nr, nc).
     */
   private def chi2Agg(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.documents(s, d)
-      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
-    val rows = cells.groupBy(col("source")).agg(sum(col("o")).as("rtot"))
-    val colsM = cells.groupBy(col("lang")).agg(sum(col("o")).as("ctot"))
-    val tot = cells.agg(sum(col("o")).as("n_total"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val numd = (dec(col("o")) * dec(col("n_total")) -
       dec(col("rtot")) * dec(col("ctot"))).cast("double")
-    val terms = cells.join(broadcast(rows), Seq("source"))
-      .join(broadcast(colsM), Seq("lang"))
-      .crossJoin(broadcast(tot))
+    val terms = chi2Cells(s, d)
       .select(col("source"), col("lang"), col("o"), col("n_total"),
         (numd * numd /
           (dec(col("rtot")) * dec(col("ctot"))).cast("double") /
@@ -159,6 +176,30 @@ object AnalyticsQueries {
       countDistinct(col("source")).as("nr"),
       countDistinct(col("lang")).as("nc"),
       sum(col("o")).as("n_total"))
+  }
+
+  private val momentNames = Seq("qty", "price", "disc", "tax")
+
+  /** One single-row aggregate of exact lineitem moments over
+    * [[momentNames]] (quantity and integer cents): `n`, `s_<c>` and
+    * `sp_<c>_<c'>` (c <= c') as DECIMAL(38,0) sums — shared by
+    * q_corr_matrix and q_pca_power.
+    */
+  private def lineitemMoments(s: SparkSession, d: String): DataFrame = {
+    val names = momentNames
+    val li = t(s, d, "lineitem").select(
+      col("l_quantity").cast("long").as("qty"),
+      cents(col("l_extendedprice")).as("price"),
+      cents(col("l_discount")).as("disc"),
+      cents(col("l_tax")).as("tax"))
+    val pairAggs = for {
+      i <- names.indices; j <- i until names.size
+    } yield sum((col(names(i)) * col(names(j))).cast("decimal(38,0)"))
+      .as(s"sp_${names(i)}_${names(j)}")
+    val aggs = (count(lit(1)).cast("decimal(38,0)").as("n") +:
+      names.map(nm => sum(col(nm).cast("decimal(38,0)")).as(s"s_$nm"))) ++
+      pairAggs
+    li.agg(aggs.head, aggs.tail: _*)
   }
 
   private def blockedPartPairs(s: SparkSession, d: String): DataFrame = {
@@ -178,6 +219,61 @@ object AnalyticsQueries {
       .withColumn("jw_r", round(
         graft.functions.TextHashFunctions.jaro_winkler(col("a"), col("b")), 6))
       .filter(col("jw_r") >= 0.9)
+
+  /** The oracles' blocking of distinct `part` names on their last word:
+    * `n(p_name, block)` and `r(p_name, block, rn)` with `rn` the name's
+    * rank inside its block. */
+  private val partBlockCtes =
+    """n AS (
+      |  SELECT DISTINCT p_name,
+      |    list_extract(string_split(p_name, ' '), -1) AS block
+      |  FROM part
+      |), r AS (
+      |  SELECT p_name, block,
+      |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
+      |  FROM n
+      |)""".stripMargin
+
+  /** Dedup.blockedPairs' capped candidates over [[partBlockCtes]]: the
+    * first 1000 names of a block pair fully, later ones pair once with
+    * the block's first name. Exposes `cand(block, a, b)`. */
+  private val cappedNameCandCte =
+    """cand AS (
+      |  SELECT a.block, a.p_name AS a, b.p_name AS b
+      |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
+      |  WHERE a.rn <= 1000 AND b.rn <= 1000
+      |  UNION ALL
+      |  SELECT o.block, m.p_name AS a, o.p_name AS b
+      |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
+      |  WHERE o.rn > 1000
+      |)""".stripMargin
+
+  /** The oracles' source×lang contingency: `cells(source, lang, o)`,
+    * row and column marginals `r`/`cl` and the total `tt(n_total)`. */
+  private val chi2CellCtes =
+    """cells AS (
+      |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
+      |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
+      |      FROM cells GROUP BY 1),
+      |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
+      |       FROM cells GROUP BY 1),
+      |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells)""".stripMargin
+
+  /** [[chi2CellCtes]] + the per-cell χ² term (exact DECIMAL numerator,
+    * float division): `terms(o, source, lang, term)`. */
+  private val chi2TermCtes =
+    s"""$chi2CellCtes,
+       |nums AS (
+       |  SELECT c.o, c.source, c.lang,
+       |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
+       |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
+       |      AS DOUBLE) AS numd,
+       |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
+       |    CAST(t.n_total AS DOUBLE) AS ntd
+       |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
+       |terms AS (
+       |  SELECT o, source, lang, numd * numd / dend / ntd AS term
+       |  FROM nums)""".stripMargin
 
   // DuckDB mirror of Dedup.tokens over the documents table (same contract
   // as TextQueries.duckToks — kept in sync with the tokenizer scaladoc)
@@ -1788,23 +1884,7 @@ object AnalyticsQueries {
     }, Sql(
       // mirrors Dedup.blockedPairs' CAP: rn ≤ 1000 members pair fully,
       // overflow members pair once against the block min (rn = 1)
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |)
+      s"""WITH $partBlockCtes, $cappedNameCandCte
         |SELECT block, a, b, CAST(levenshtein(a, b) AS BIGINT) AS dist
         |FROM cand
         |WHERE levenshtein(a, b) <= 2
@@ -1828,23 +1908,7 @@ object AnalyticsQueries {
       // jaro_winkler_similarity is the same standard variant as the
       // engine's codegen'd expression, so the 6dp-rounded SCORE is the
       // compared value (threshold on the rounded score on both sides)
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |), scored AS (
+      s"""WITH $partBlockCtes, $cappedNameCandCte, scored AS (
         |  SELECT block, a, b,
         |    ROUND(jaro_winkler_similarity(a, b), 6) AS jw_r
         |  FROM cand
@@ -2151,20 +2215,8 @@ object AnalyticsQueries {
     // CPUS=3 vs 8 sweep can flip a 6dp round), exact moments make the
     // result a deterministic pure function of the data.
     Query("q_corr_matrix", (s, d) => {
-      val names = Seq("qty", "price", "disc", "tax")
-      val li = t(s, d, "lineitem").select(
-        col("l_quantity").cast("long").as("qty"),
-        cents(col("l_extendedprice")).as("price"),
-        cents(col("l_discount")).as("disc"),
-        cents(col("l_tax")).as("tax"))
-      val pairAggs = for {
-        i <- names.indices; j <- i until names.size
-      } yield sum((col(names(i)) * col(names(j))).cast("decimal(38,0)"))
-        .as(s"sp_${names(i)}_${names(j)}")
-      val aggs = (count(lit(1)).cast("decimal(38,0)").as("n") +:
-        names.map(nm => sum(col(nm).cast("decimal(38,0)")).as(s"s_$nm"))) ++
-        pairAggs
-      val one = li.agg(aggs.head, aggs.tail: _*)
+      val names = momentNames
+      val one = lineitemMoments(s, d)
       def variance(a: String) =
         (col("n") * col(s"sp_${a}_$a") - col(s"s_$a") * col(s"s_$a"))
           .cast("double")
@@ -2418,15 +2470,7 @@ object AnalyticsQueries {
         .select(col("block"), col("a"), col("b"), col("jw_r"))
         .orderBy(col("a"), col("b"))
     }, Sql(
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
+      s"""WITH $partBlockCtes, cand AS (
         |  SELECT a.block, a.p_name AS a, b.p_name AS b
         |  FROM r a JOIN r b
         |    ON a.block = b.block AND b.rn - a.rn BETWEEN 1 AND 4
@@ -2571,23 +2615,7 @@ object AnalyticsQueries {
       // same blocked-JW match relation as q_fuzzy_jw, closed with a
       // cycle-safe recursive UNION (the undirected match graph may have
       // cycles; UNION's dedup terminates the fixpoint)
-      """WITH RECURSIVE n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
-        |  SELECT a.block, a.p_name AS a, b.p_name AS b
-        |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
-        |  WHERE a.rn <= 1000 AND b.rn <= 1000
-        |  UNION ALL
-        |  SELECT o.block, m.p_name AS a, o.p_name AS b
-        |  FROM r o JOIN r m ON o.block = m.block AND m.rn = 1
-        |  WHERE o.rn > 1000
-        |), m AS (
+      s"""WITH RECURSIVE $partBlockCtes, $cappedNameCandCte, m AS (
         |  SELECT a, b FROM cand
         |  WHERE ROUND(jaro_winkler_similarity(a, b), 6) >= 0.9
         |), e AS (
@@ -2753,7 +2781,6 @@ object AnalyticsQueries {
       val li = t(s, d, "lineitem").select(col("l_returnflag"),
         col("l_quantity").cast("long").as("x"),
         cents(col("l_extendedprice")).as("y"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val m = li.groupBy(col("l_returnflag")).agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
@@ -2818,7 +2845,6 @@ object AnalyticsQueries {
         col("l_quantity").cast("long").as("x1"),
         cents(col("l_discount")).as("x2"),
         cents(col("l_extendedprice")).as("y"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val m = li.agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(dec(col("x1"))).as("s1"), sum(dec(col("x2"))).as("s2"),
@@ -2903,24 +2929,7 @@ object AnalyticsQueries {
       // per-cell exact DECIMAL numerator, float per-cell division; the
       // oracle's single-node SUM vs the engine's sorted fold differ only
       // below the 6dp contract
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
-        |nums AS (
-        |  SELECT c.o, c.source, c.lang,
-        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
-        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
-        |      AS DOUBLE) AS numd,
-        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
-        |    CAST(t.n_total AS DOUBLE) AS ntd
-        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
-        |terms AS (
-        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
-        |  FROM nums)
+      s"""WITH $chi2TermCtes
         |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
         |  (COUNT(DISTINCT source) - 1) * (COUNT(DISTINCT lang) - 1) AS dof,
         |  CAST(SUM(o) AS BIGINT) AS n_total
@@ -2939,24 +2948,7 @@ object AnalyticsQueries {
             .cast("double"))).as("v_r")),
       Sql(
       // the chi2 chain + the extra normalization, same op order
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells),
-        |nums AS (
-        |  SELECT c.o, c.source, c.lang,
-        |    CAST(CAST(c.o AS DECIMAL(38,0)) * CAST(t.n_total AS DECIMAL(38,0))
-        |      - CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0))
-        |      AS DOUBLE) AS numd,
-        |    CAST(CAST(r.rtot AS DECIMAL(38,0)) * CAST(cl.ctot AS DECIMAL(38,0)) AS DOUBLE) AS dend,
-        |    CAST(t.n_total AS DOUBLE) AS ntd
-        |  FROM cells c JOIN r USING (source) JOIN cl USING (lang), tt t),
-        |terms AS (
-        |  SELECT o, source, lang, numd * numd / dend / ntd AS term
-        |  FROM nums)
+      s"""WITH $chi2TermCtes
         |SELECT ${det6Sql("SUM(term)")} AS chi2_r,
         |  CAST(SUM(o) AS BIGINT) AS n_total,
         |  COUNT(DISTINCT source) AS nr, COUNT(DISTINCT lang) AS nc,
@@ -2972,15 +2964,7 @@ object AnalyticsQueries {
     // exact DECIMAL numerator, det6 on the mirrored float tail. Same
     // domain-bounded one-shuffle shape as the test itself.
     Query("q_chi2_residuals", (s, d) => {
-      val cells = Tables.documents(s, d)
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
-      val rows = cells.groupBy(col("source")).agg(sum(col("o")).as("rtot"))
-      val colsM = cells.groupBy(col("lang")).agg(sum(col("o")).as("ctot"))
-      val tot = cells.agg(sum(col("o")).as("n_total"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
-      cells.join(broadcast(rows), Seq("source"))
-        .join(broadcast(colsM), Seq("lang"))
-        .crossJoin(broadcast(tot))
+      chi2Cells(s, d)
         .select(col("source"), col("lang"), col("o"),
           ratio6(dec(col("rtot")) * dec(col("ctot")), col("n_total"))
             .as("expected_r"),
@@ -2991,13 +2975,7 @@ object AnalyticsQueries {
         .orderBy(col("source"), col("lang"))
     }, Sql(
       // exact HUGEINT/DECIMAL numerators; det6 on the mirrored float tail
-      s"""WITH cells AS (
-        |  SELECT source, lang, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT source, CAST(SUM(o) AS BIGINT) AS rtot
-        |      FROM cells GROUP BY 1),
-        |cl AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS ctot
-        |       FROM cells GROUP BY 1),
-        |tt AS (SELECT CAST(SUM(o) AS BIGINT) AS n_total FROM cells)
+      s"""WITH $chi2CellCtes
         |SELECT c.source, c.lang, c.o,
         |  ${ratio6Sql("CAST(r.rtot AS HUGEINT) * cl.ctot", "t.n_total")}
         |    AS expected_r,
@@ -3036,16 +3014,7 @@ object AnalyticsQueries {
     // an exact integer pair; cutoff ordered on the ROUNDED value + node.
     Query("q_lcc_topk", (s, d) => {
       val e = coPurchaseEdges(s, d)
-      val sym = e.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(e.select(col("v").as("a"), col("u").as("b")))
-      val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-      val wcap = Window.partitionBy(col("a")).orderBy(col("b"))
-      val capped = sym.withColumn("rn", row_number().over(wcap))
-        .filter(col("rn") <= 64).drop("rn")
-      val wedges = capped.select(col("a").as("mid"), col("b").as("u"))
-        .join(capped.select(col("a").as("mid"), col("b").as("w")),
-          Seq("mid"))
-        .filter(col("u") < col("w"))
+      val (deg, wedges) = cappedWedges(e)
       val tri = wedges
         .join(e.select(col("u").as("eu"), col("v").as("ev")),
           col("u") === col("eu") && col("w") === col("ev"), "left_semi")
@@ -3091,7 +3060,6 @@ object AnalyticsQueries {
     // single-partition window), every sum EXACT in DECIMAL(38,0), ONE
     // float at the final division.
     Query("q_gini_revenue", (s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val rev = t(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
@@ -3315,7 +3283,6 @@ object AnalyticsQueries {
     // S_g²/n_g terms (folded in SORTED group order — the q_chi2
     // discipline: partition-count-independent) and the final F ratio.
     Query("q_anova_f", (s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val x = Tables.documents(s, d)
         .select(col("source"), col("n_chars").as("x"))
       val g = x.groupBy(col("source")).agg(
@@ -3460,7 +3427,6 @@ object AnalyticsQueries {
       val tot = dd.agg(
         sum(when(col("source") === "src0", 1L).otherwise(0L)).as("n1"),
         sum(when(col("source") === "src1", 1L).otherwise(0L)).as("n2"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       cum.crossJoin(broadcast(tot))
         .select(col("n1"), col("n2"),
           abs(dec(col("f1")) * dec(col("n2")) -
@@ -3523,7 +3489,6 @@ object AnalyticsQueries {
         .filter(col("l_returnflag").isin("A", "R"))
         .select(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("x"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val cells = li.groupBy(col("x")).agg(
         sum(when(col("g") === "A", 1L).otherwise(0L)).as("m1"),
         count(lit(1)).as("m"))
@@ -3625,15 +3590,7 @@ object AnalyticsQueries {
       // the same capped blocked-candidate CTE as q_fuzzy_parts/q_fuzzy_jw
       // (rn<=1000 + overflow star-attach), length band as post-filter;
       // both engines' levenshtein is the textbook DP — exact integers
-      """WITH n AS (
-        |  SELECT DISTINCT p_name,
-        |    list_extract(string_split(p_name, ' '), -1) AS block
-        |  FROM part
-        |), r AS (
-        |  SELECT p_name, block,
-        |    ROW_NUMBER() OVER (PARTITION BY block ORDER BY p_name) AS rn
-        |  FROM n
-        |), cand AS (
+      s"""WITH $partBlockCtes, cand AS (
         |  SELECT a.p_name AS a, b.p_name AS b
         |  FROM r a JOIN r b ON a.block = b.block AND a.p_name < b.p_name
         |  WHERE a.rn <= 1000 AND b.rn <= 1000
@@ -3931,7 +3888,6 @@ object AnalyticsQueries {
     // relation the census reports; Σe_c needs only the total
     // equal-label edge count, Σd_c² one per-label degree rollup.
     Query("q_modularity", (s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val e = coPurchaseEdges(s, d).localCheckpoint(true)
       val labels = graft.operators.Graph.lpaSteps(e, rounds = 3)
       val sym = e.select(col("u").as("a"), col("v").as("b"))
@@ -4064,20 +4020,8 @@ object AnalyticsQueries {
     // The heavy work is ONE moment aggregate over the fact scan — the
     // iteration is O(1) on a one-row relation at any scale.
     Query("q_pca_power", (s, d) => {
-      val names = Seq("qty", "price", "disc", "tax")
-      val li = t(s, d, "lineitem").select(
-        col("l_quantity").cast("long").as("qty"),
-        cents(col("l_extendedprice")).as("price"),
-        cents(col("l_discount")).as("disc"),
-        cents(col("l_tax")).as("tax"))
-      val pairAggs = for {
-        i <- names.indices; j <- i until names.size
-      } yield sum((col(names(i)) * col(names(j))).cast("decimal(38,0)"))
-        .as(s"sp_${names(i)}_${names(j)}")
-      val aggs = (count(lit(1)).cast("decimal(38,0)").as("n") +:
-        names.map(nm => sum(col(nm).cast("decimal(38,0)")).as(s"s_$nm"))) ++
-        pairAggs
-      val one = li.agg(aggs.head, aggs.tail: _*)
+      val names = momentNames
+      val one = lineitemMoments(s, d)
       def mom(a: String, b: String): Column = {
         val (x, y) =
           if (names.indexOf(a) <= names.indexOf(b)) (a, b) else (b, a)
@@ -4121,7 +4065,6 @@ object AnalyticsQueries {
         .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
       val (run, nCust, totC) = graft.operators.Rank.withRankAndRunningTotal(
         rev, "k", "cum_c", "rev_c", col("rev_c").desc, col("o_custkey"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val m = (dec(col("cum_c")) * lit(nCust) - dec(col("k")) * lit(totC))
         .as("m")
       run.select(col("k"), col("cum_c"), m)
@@ -4173,7 +4116,6 @@ object AnalyticsQueries {
       val xy = sym
         .join(deg.select(col("a"), col("deg").as("x")), Seq("a"))
         .join(deg.select(col("a").as("b"), col("deg").as("y")), Seq("b"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val one = xy.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
         sum(dec(col("x")) * dec(col("y"))).as("sxy"),
@@ -4284,7 +4226,6 @@ object AnalyticsQueries {
         .join(broadcast(t(s, d, "part")
           .select(col("p_partkey").as("l_partkey"), col("p_brand"))),
           Seq("l_partkey"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val m = li.groupBy(col("p_brand")).agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
@@ -4327,7 +4268,6 @@ object AnalyticsQueries {
     // (ratio6), zero float ops; per-customer revenue is one rollup and
     // the nation key rides a broadcast dimension join.
     Query("q_hhi", (s, d) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val rev = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(sum(cents(col("o_totalprice"))).as("rev_c"))
         .join(broadcast(t(s, d, "customer")
@@ -4673,6 +4613,27 @@ object AnalyticsQueries {
       body + s",\nvisits AS (\n$out)"
   }
 
+  /** The moment oracles' exact HUGEINT sums over lineitem in integer
+    * cents: `m(n, s_<c>, sp_<c>_<c'>)` for c <= c' in (qty, price, disc,
+    * tax). */
+  private def lineitemMomentCtes: String = {
+    val names = Seq("qty", "price", "disc", "tax")
+    val moments = (Seq("CAST(COUNT(*) AS HUGEINT) AS n") ++
+      names.map(a => s"CAST(SUM(CAST($a AS HUGEINT)) AS HUGEINT) AS s_$a") ++
+      (for { i <- names.indices; j <- i until names.size } yield
+        s"CAST(SUM(CAST(${names(i)} * ${names(j)} AS HUGEINT)) AS HUGEINT)" +
+          s" AS sp_${names(i)}_${names(j)}")).mkString(",\n  ")
+    s"""WITH b AS (
+       |  SELECT CAST(l_quantity AS BIGINT) AS qty,
+       |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price,
+       |    CAST(ROUND(l_discount * 100) AS BIGINT) AS disc,
+       |    CAST(ROUND(l_tax * 100) AS BIGINT) AS tax
+       |  FROM lineitem),
+       |m AS (SELECT
+       |  $moments
+       |FROM b)""".stripMargin
+  }
+
   /** q_corr_matrix's twin: the same exact-integer moments as HUGEINT
     * sums and the same corr formula with the single double seam at the
     * final divide (op order mirrored: numerator cast, two variance
@@ -4680,11 +4641,6 @@ object AnalyticsQueries {
     */
   private def corrMatrixOracle: String = {
     val names = Seq("qty", "price", "disc", "tax")
-    val moments = (Seq("CAST(COUNT(*) AS HUGEINT) AS n") ++
-      names.map(a => s"CAST(SUM(CAST($a AS HUGEINT)) AS HUGEINT) AS s_$a") ++
-      (for { i <- names.indices; j <- i until names.size } yield
-        s"CAST(SUM(CAST(${names(i)} * ${names(j)} AS HUGEINT)) AS HUGEINT)" +
-          s" AS sp_${names(i)}_${names(j)}")).mkString(",\n  ")
     val rows = (for { i <- names.indices; j <- (i + 1) until names.size }
       yield {
         val (a, b) = (names(i), names(j))
@@ -4694,15 +4650,7 @@ object AnalyticsQueries {
                         s"CAST(n * sp_${b}_$b - s_$b * s_$b AS DOUBLE))")}
            |    AS corr_r FROM m""".stripMargin
       }).mkString("\nUNION ALL\n")
-    s"""WITH b AS (
-       |  SELECT CAST(l_quantity AS BIGINT) AS qty,
-       |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price,
-       |    CAST(ROUND(l_discount * 100) AS BIGINT) AS disc,
-       |    CAST(ROUND(l_tax * 100) AS BIGINT) AS tax
-       |  FROM lineitem),
-       |m AS (SELECT
-       |  $moments
-       |FROM b)
+    s"""$lineitemMomentCtes
        |$rows
        |ORDER BY col_a, col_b""".stripMargin
   }
@@ -4714,11 +4662,6 @@ object AnalyticsQueries {
     */
   private def pcaPowerOracle: String = {
     val names = Seq("qty", "price", "disc", "tax")
-    val moments = (Seq("CAST(COUNT(*) AS HUGEINT) AS n") ++
-      names.map(a => s"CAST(SUM(CAST($a AS HUGEINT)) AS HUGEINT) AS s_$a") ++
-      (for { i <- names.indices; j <- i until names.size } yield
-        s"CAST(SUM(CAST(${names(i)} * ${names(j)} AS HUGEINT)) AS HUGEINT)" +
-          s" AS sp_${names(i)}_${names(j)}")).mkString(",\n  ")
     def momSql(a: String, b: String): String = {
       val (x, y) =
         if (names.indexOf(a) <= names.indexOf(b)) (a, b) else (b, a)
@@ -4742,15 +4685,7 @@ object AnalyticsQueries {
          |    sqrt($nrm) AS lam
          |  FROM w$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH b AS (
-       |  SELECT CAST(l_quantity AS BIGINT) AS qty,
-       |    CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price,
-       |    CAST(ROUND(l_discount * 100) AS BIGINT) AS disc,
-       |    CAST(ROUND(l_tax * 100) AS BIGINT) AS tax
-       |  FROM lineitem),
-       |m AS (SELECT
-       |  $moments
-       |FROM b),
+    s"""$lineitemMomentCtes,
        |it0 AS (SELECT m.*,
        |  ${names.map(a => s"CAST(0.5 AS DOUBLE) AS v_$a").mkString(", ")},
        |  CAST(0.0 AS DOUBLE) AS lam FROM m),

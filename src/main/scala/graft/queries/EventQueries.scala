@@ -539,6 +539,63 @@ object EventQueries {
        |  GROUP BY l.doc_id, k // 16)""".stripMargin
   }
 
+  /** Purchases and clicks of the events table with microsecond epoch
+    * `us` — the two sides of the as-of joins. */
+  private def purchasesAndClicks(
+      s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"), col("us"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+    (purchases, clicks)
+  }
+
+  /** The as-of oracles' sides: `p(user_id, event_id, us)` purchases and
+    * `c(user_id, click_id, us)` clicks. */
+  private val purchaseClickCtes =
+    """e AS (
+      |  SELECT user_id, event_id, event_type,
+      |    epoch_us(ts) AS us
+      |  FROM events
+      |),
+      |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
+      |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')""".stripMargin
+
+  /** Incremental banded media dedup: media_id % 10 == 3 is the batch,
+    * probing the band index of the rest. */
+  private def incrementalMediaDedup(ph: DataFrame): DataFrame = {
+    val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
+    val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
+    graft.operators.Dedup.incrementalBandedDedup(
+      batch, graft.operators.Dedup.bandHashIndex(corpus))
+      .orderBy(col("new_id"), col("corpus_id"))
+  }
+
+  /** Hourly event counts over a gap-free spine of hours (zero-count
+    * hours filled): `(hr, n)`. */
+  private def hourlyFilled(s: SparkSession, d: String): DataFrame = {
+    val hourly = ev(s, d)
+      .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
+      .agg(count(lit(1)).as("n"))
+    val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
+    spine.join(hourly, Seq("hr"), "left")
+      .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
+  }
+
+  /** [[hourlyFilled]]'s oracle twin: `filled(hr, n)`. */
+  private val hourlyFilledCtes =
+    """WITH hourly AS (
+      |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
+      |  FROM events GROUP BY 1
+      |), spine AS (
+      |  SELECT unnest(range(MIN(hr), MAX(hr) + 1)) AS hr FROM hourly
+      |), filled AS (
+      |  SELECT s.hr, COALESCE(h.n, 0) AS n
+      |  FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
+      |)""".stripMargin
+
   val declarations: Seq[Query] = Seq(
     // tumbling 1h windows via window() — the batch twin of
     // EventStreams.tumblingCounts
@@ -830,23 +887,13 @@ object EventQueries {
     // Microsecond epochs: distinct across events, so ties can't make the
     // DuckDB ASOF oracle ambiguous.
     Query("q_events_asof", (s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
         attach = Map("click_id" -> "last_click_id"), rightTiebreak = "click_id")
         .select(col("user_id"), col("event_id"), col("us"), col("last_click_id"))
         .orderBy(col("user_id"), col("us"))
     }, Sql(
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us
-        |  FROM events
-        |),
-        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
+      s"""WITH $purchaseClickCtes
         |SELECT p.user_id, p.event_id, p.us, c.click_id AS last_click_id
         |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us >= c.us
         |ORDER BY p.user_id, p.us""".stripMargin)),
@@ -854,23 +901,13 @@ object EventQueries {
     // as-of FORWARD join: each purchase gets the user's NEXT click
     // at-or-after it (same union+window operator, reversed sweep).
     Query("q_events_asof_fwd", (s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsofJoin.asofForward(purchases, clicks, "user_id", "us", "us",
         attach = Map("click_id" -> "next_click_id"), rightTiebreak = "click_id")
         .select(col("user_id"), col("event_id"), col("us"), col("next_click_id"))
         .orderBy(col("user_id"), col("us"))
     }, Sql(
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS us
-        |  FROM events
-        |),
-        |p AS (SELECT user_id, event_id, us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, event_id AS click_id, us FROM e WHERE event_type = 'click')
+      s"""WITH $purchaseClickCtes
         |SELECT p.user_id, p.event_id, p.us, c.click_id AS next_click_id
         |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.us <= c.us
         |ORDER BY p.user_id, p.us""".stripMargin), headline = false),
@@ -888,11 +925,7 @@ object EventQueries {
     // (the two sweeps' own tiebreaks — the oracle's side-dependent
     // CASE sign reproduces both).
     Query("q_events_asof_nearest", (s, d) => {
-      val e = ev(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("us"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       val b = AsofJoin.asofBackward(purchases, clicks, "user_id", "us", "us",
         attach = Map("click_id" -> "b_id", "us" -> "b_us"),
         rightTiebreak = "click_id")
@@ -1344,12 +1377,7 @@ object EventQueries {
     // Multimodal dedup becomes probe-and-append maintainable instead
     // of rebuild-only. Fully oracled via the shared phash replay CTEs.
     Query("q_image_dedup_incremental", (s, d) => {
-      val ph = imagePhash(s, d)
-      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
-      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
-      graft.operators.Dedup.incrementalBandedDedup(
-        batch, graft.operators.Dedup.bandHashIndex(corpus))
-        .orderBy(col("new_id"), col("corpus_id"))
+      incrementalMediaDedup(imagePhash(s, d))
     }, Sql(
       // incremental image dedup: the index side (media_id%10<>3) capped
       // at 256 per (band,bval) in id order — the bandHashIndex cap — the
@@ -1386,12 +1414,7 @@ object EventQueries {
     // verify fetches hashes by matched id. Fully oracled via the shared
     // audio-phash replay CTEs.
     Query("q_audio_dedup_incremental", (s, d) => {
-      val ph = audioPhash(s, d)
-      val batch = ph.filter(pmod(col("media_id"), lit(10)) === 3)
-      val corpus = ph.filter(pmod(col("media_id"), lit(10)) =!= 3)
-      graft.operators.Dedup.incrementalBandedDedup(
-        batch, graft.operators.Dedup.bandHashIndex(corpus))
-        .orderBy(col("new_id"), col("corpus_id"))
+      incrementalMediaDedup(audioPhash(s, d))
     }, Sql(
       // incremental audio dedup: same algebra over the audio-phash bands
       // (index side capped at 256 per (band,bval) in id order, batch side
@@ -1567,13 +1590,7 @@ object EventQueries {
     // derives from the ROUNDED z; warmup hours (fewer than 2 trailing
     // points or zero variance) are excluded identically on both engines.
     Query("q_events_anomaly", (s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
-      val filled = spine.join(hourly, Seq("hr"), "left")
-        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
+      val filled = hourlyFilled(s, d)
       val w = Window.orderBy(col("hr")).rowsBetween(-24, -1)
       filled
         .withColumn("mu", avg(col("n")).over(w))
@@ -1584,15 +1601,7 @@ object EventQueries {
         .withColumn("is_anomaly", abs(col("z")) > 3.0)
         .orderBy(col("hr"))
     }, Sql(
-      """WITH hourly AS (
-        |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
-        |  FROM events GROUP BY 1
-        |), spine AS (
-        |  SELECT unnest(range(MIN(hr), MAX(hr) + 1)) AS hr FROM hourly
-        |), filled AS (
-        |  SELECT s.hr, COALESCE(h.n, 0) AS n
-        |  FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
-        |), win AS (
+      s"""$hourlyFilledCtes, win AS (
         |  SELECT hr, n,
         |    AVG(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS mu,
         |    STDDEV_SAMP(n) OVER (ORDER BY hr ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS sd
@@ -1638,13 +1647,7 @@ object EventQueries {
     // rows with a full K-hour history emit (partial windows would
     // renormalize differently).
     Query("q_events_ewma", (s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(floor(unix_timestamp(col("ts")) / 3600).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val spine = hourly.agg(min(col("hr")).as("lo"), max(col("hr")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("hr"))
-      val filled = spine.join(hourly, Seq("hr"), "left")
-        .select(col("hr"), coalesce(col("n"), lit(0L)).as("n"))
+      val filled = hourlyFilled(s, d)
       val w = Window.orderBy(col("hr"))
       val wts = ewmaWeights(ewmaK)
       val ewma = wts.zipWithIndex
@@ -1662,15 +1665,7 @@ object EventQueries {
         .orderBy(col("hr"))
     }, Sql({
       val (ew, ma) = ewmaOracleTerms
-      s"""WITH hourly AS (
-         |  SELECT (epoch_us(ts) // 1000000) // 3600 AS hr, COUNT(*) AS n
-         |  FROM events GROUP BY 1
-         |), spine AS (
-         |  SELECT unnest(range(MIN(hr), MAX(hr) + 1)) AS hr FROM hourly
-         |), filled AS (
-         |  SELECT s.hr, COALESCE(h.n, 0) AS n
-         |  FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
-         |), win AS (
+      s"""$hourlyFilledCtes, win AS (
          |  SELECT hr, n, ROW_NUMBER() OVER w AS rn,
          |    $ew AS ewma,
          |    $ma AS ma

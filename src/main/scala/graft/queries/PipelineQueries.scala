@@ -85,6 +85,16 @@ object PipelineQueries {
         row_number().over(Window.orderBy(col("score_r").desc, col("movieId"))).cast("long"))
       .select(col("movieId"), col("rank"))
 
+  /** Each user's own top-10 train items by mean rating (ties → movieId)
+    * — the deterministic per-user recs of the MAP/precision/MRR checks. */
+  private def ownTop10(train: DataFrame): DataFrame = {
+    val dedup = train.groupBy(col("userId"), col("movieId"))
+      .agg(avg(col("rating")).as("r"))
+    Recommend.topKPerKey(dedup, "userId",
+      Seq(col("r").desc, col("movieId")), 10)
+      .select(col("userId"), col("movieId"), col("rank"))
+  }
+
   // oracle fragment: same ranked top-100 in ANSI SQL
   private val rankedTop100Sql =
     s"""agg AS (
@@ -105,6 +115,22 @@ object PipelineQueries {
        |  FROM scored
        |  QUALIFY rank <= $K
        |)""".stripMargin
+
+  /** The oracles' twin of [[ownTop10]] over `train`, plus the
+    * validation labels: `recs(userId, movieId, rank)` and
+    * `labels(userId, movieId)`. */
+  private val ownTop10Sql =
+    """dedup AS (
+      |  SELECT userId, movieId, AVG(rating) AS r
+      |  FROM train GROUP BY userId, movieId
+      |),
+      |recs AS (
+      |  SELECT userId, movieId,
+      |    CAST(ROW_NUMBER() OVER (PARTITION BY userId
+      |      ORDER BY r DESC, movieId) AS BIGINT) AS rank
+      |  FROM dedup QUALIFY rank <= 10
+      |),
+      |labels AS (SELECT DISTINCT userId, movieId FROM val)""".stripMargin
 
   private val splitSql =
     s"""${Tables.ratingsSql},
@@ -139,17 +165,7 @@ object PipelineQueries {
     */
   private def mapAtKOracle(alias: String): String =
     s"""WITH $splitSql,
-       |dedup AS (
-       |  SELECT userId, movieId, AVG(rating) AS r
-       |  FROM train GROUP BY userId, movieId
-       |),
-       |recs AS (
-       |  SELECT userId, movieId,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY userId
-       |      ORDER BY r DESC, movieId) AS BIGINT) AS rank
-       |  FROM dedup QUALIFY rank <= 10
-       |),
-       |labels AS (SELECT DISTINCT userId, movieId FROM val),
+       |$ownTop10Sql,
        |nlab AS (SELECT userId, COUNT(*) AS n FROM labels GROUP BY userId),
        |hits AS (
        |  SELECT r.userId, r.rank,
@@ -306,11 +322,7 @@ object PipelineQueries {
     // train items — deterministic, exercises window top-k + hit ranking.
     Query("q_eval_map_std", (s, d) => {
       val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
+      val recs = ownTop10(train)
       Eval.standardMapAtK(v, recs, 10)
     }, Sql(mapAtKOracle("map_at_k"))),
 
@@ -321,27 +333,13 @@ object PipelineQueries {
     // both columns, fully DuckDB-oracled.
     Query("q_eval_precision_k", (s, d) => {
       val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
+      val recs = ownTop10(train)
       Eval.precisionAtKPerUser(v, recs, 10)
         .crossJoin(Eval.precisionAtKGlobal(v, rankedTop100(train), K))
     }, Sql(
       s"""WITH $splitSql,
          |$rankedTop100Sql,
-         |dedup AS (
-         |  SELECT userId, movieId, AVG(rating) AS r
-         |  FROM train GROUP BY userId, movieId
-         |),
-         |recs AS (
-         |  SELECT userId, movieId,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY userId
-         |      ORDER BY r DESC, movieId) AS BIGINT) AS rank
-         |  FROM dedup QUALIFY rank <= 10
-         |),
-         |labels AS (SELECT DISTINCT userId, movieId FROM val),
+         |$ownTop10Sql,
          |hits AS (
          |  SELECT r.userId, COUNT(*) AS n_hits
          |  FROM recs r JOIN labels l ON r.userId = l.userId AND r.movieId = l.movieId
@@ -366,11 +364,7 @@ object PipelineQueries {
     // but no hit contribute 0 (the standard convention).
     Query("q_eval_mrr", (s, d) => {
       val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
+      val recs = ownTop10(train)
       val labels = v.select(col("userId"), col("movieId")).distinct()
       val firstHit = recs.join(labels, Seq("userId", "movieId"))
         .groupBy(col("userId")).agg(min(col("rank")).as("fr"))
@@ -385,17 +379,7 @@ object PipelineQueries {
     }, Sql(
       // the same recs/labels relations; 2520//fr integer reciprocals
       s"""WITH $splitSql,
-         |dedup AS (
-         |  SELECT userId, movieId, AVG(rating) AS r
-         |  FROM train GROUP BY userId, movieId
-         |),
-         |recs AS (
-         |  SELECT userId, movieId,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY userId
-         |      ORDER BY r DESC, movieId) AS BIGINT) AS rank
-         |  FROM dedup QUALIFY rank <= 10
-         |),
-         |labels AS (SELECT DISTINCT userId, movieId FROM val),
+         |$ownTop10Sql,
          |fh AS (
          |  SELECT r.userId, MIN(r.rank) AS fr
          |  FROM recs r JOIN labels l
@@ -438,11 +422,7 @@ object PipelineQueries {
     // scalatest.
     Query("q_eval_map_mllib", (s, d) => {
       val (train, v, _) = hashSplit(Tables.ratings(s, d))
-      val dedup = train.groupBy(col("userId"), col("movieId"))
-        .agg(avg(col("rating")).as("r"))
-      val recs = Recommend.topKPerKey(dedup, "userId",
-        Seq(col("r").desc, col("movieId")), 10)
-        .select(col("userId"), col("movieId"), col("rank"))
+      val recs = ownTop10(train)
       Eval.rankingMetricsMapAtK(v, recs, 10)
     }, Sql(
       // DE-EXEMPTED r12: the RDD RankingMetrics form is asserted EQUAL to

@@ -85,6 +85,24 @@ object RelationalQueries {
         col("valid_to"), col("n_orders"), col("is_current"))
   }
 
+  /** The oracles' SCD2 versioning of each customer's order status:
+    * `islands(o_custkey, o_orderstatus, d, version)`, the version
+    * counting status changes in (order date, orderkey) order. */
+  private val statusIslandsCtes =
+    """flagged AS (
+      |  SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS d, o_orderstatus,
+      |    CASE WHEN LAG(o_orderstatus) OVER w IS NULL
+      |           OR LAG(o_orderstatus) OVER w <> o_orderstatus
+      |         THEN 1 ELSE 0 END AS chg
+      |  FROM orders
+      |  WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE), o_orderkey)
+      |), islands AS (
+      |  SELECT o_custkey, o_orderstatus, d,
+      |    SUM(chg) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey
+      |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
+      |  FROM flagged
+      |)""".stripMargin
+
   val declarations: Seq[Query] = Seq(
     // J1: inner equi-join fact⋈dim — dim broadcast, no shuffle of orders.
     Query("q_join_inner", (s, d) => {
@@ -400,19 +418,7 @@ object RelationalQueries {
     Query("q_scd2_intervals", (s, d) =>
       scd2Dim(s, d).orderBy(col("o_custkey"), col("version")),
       Sql(
-      """WITH flagged AS (
-        |  SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS d, o_orderstatus,
-        |    CASE WHEN LAG(o_orderstatus) OVER w IS NULL
-        |           OR LAG(o_orderstatus) OVER w <> o_orderstatus
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE), o_orderkey)
-        |), islands AS (
-        |  SELECT o_custkey, o_orderstatus, d,
-        |    SUM(chg) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        |  FROM flagged
-        |), iv AS (
+      s"""WITH $statusIslandsCtes, iv AS (
         |  SELECT o_custkey, CAST(version AS BIGINT) AS version, o_orderstatus,
         |    MIN(d) AS valid_from, COUNT(*) AS n_orders
         |  FROM islands GROUP BY 1, 2, 3
@@ -463,19 +469,7 @@ object RelationalQueries {
       // valid_from, so the half-open BETWEEN join is value-identical to
       // the engine's as-of-backward sweep (boundary facts land in the NEW
       // version on both forms).
-      """WITH flagged AS (
-        |  SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS d, o_orderstatus,
-        |    CASE WHEN LAG(o_orderstatus) OVER w IS NULL
-        |           OR LAG(o_orderstatus) OVER w <> o_orderstatus
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE), o_orderkey)
-        |), islands AS (
-        |  SELECT o_custkey, o_orderstatus, d,
-        |    SUM(chg) OVER (PARTITION BY o_custkey ORDER BY d, o_orderkey
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS version
-        |  FROM flagged
-        |), iv AS (
+      s"""WITH $statusIslandsCtes, iv AS (
         |  SELECT o_custkey, version, o_orderstatus, MIN(d) AS valid_from
         |  FROM islands GROUP BY o_custkey, version, o_orderstatus
         |), scd2 AS (

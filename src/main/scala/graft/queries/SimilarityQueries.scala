@@ -155,25 +155,7 @@ object SimilarityQueries {
     * cos)` with the bit-identical unrounded cosine.
     */
   private def rpScoredCte: String =
-    s"""numbered AS (
-       |  SELECT vec_id AS id, band, bucket,
-       |    ROW_NUMBER() OVER (PARTITION BY band, bucket ORDER BY vec_id) AS rn,
-       |    MIN(vec_id) OVER (PARTITION BY band, bucket) AS mn
-       |  FROM rp_buckets
-       |),
-       |expanded AS (
-       |  SELECT a.id AS id_a, b.id AS id_b
-       |  FROM numbered a JOIN numbered b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-       |   AND a.rn <= 256 AND b.rn <= 256
-       |),
-       |overflow AS (
-       |  SELECT mn AS id_a, id AS id_b FROM numbered WHERE rn > 256
-       |),
-       |cand AS (
-       |  SELECT DISTINCT id_a, id_b
-       |  FROM (SELECT * FROM expanded UNION ALL SELECT * FROM overflow)
-       |),
+    s"""${TextQueries.cappedPairCtes("vec_id", "rp_buckets")},
        |parts AS (
        |  SELECT c.id_a, c.id_b,
        |    ${duckCosParts("ea.embedding", "eb.embedding")}

@@ -35,6 +35,15 @@ object TextQueries {
   private val duckToks =
     """list_filter(string_split_regex(lower(regexp_replace(text, '[^\p{L}\p{N}\s]', ' ', 'g')), '\s+'), x -> len(x) > 0)"""
 
+  /** Dedup.shingles' SQL twin over the token list `tk`: every run of
+    * `n` consecutive tokens joined by spaces, the whole list as one
+    * shingle when it is shorter than `n`, and none for no tokens. */
+  private def shingleListSql(tk: String, n: Int): String =
+    s"""CASE WHEN len($tk) = 0 THEN CAST([] AS VARCHAR[])
+       |         WHEN len($tk) < $n THEN [array_to_string($tk, ' ')]
+       |         ELSE [array_to_string($tk[i:i+${n - 1}], ' ') FOR i IN range(1, len($tk) - ${n - 2})]
+       |    END""".stripMargin
+
   /** DuckDB mirrors of the quality-metric expressions, factored so the
     * q_text_quality oracle and every composition that gates on quality
     * (q_corpus_pipeline) share ONE definition. All assume a CTE exposing
@@ -91,6 +100,157 @@ object TextQueries {
   /** The fixed query-term set shared by q_bm25_topk, q_bm25_serve and
     * the fit — ONE definition so Spark and the oracle can never drift. */
   private[graft] val bm25Terms = Seq("query", "stream", "vector", "hash")
+
+  /** DuckDB twin of the BM25 fit over `documents` (k1 = 1.2, b = 0.75):
+    * tokens `tf(doc_id, term, tf)`, doc lengths `dl`, and the corpus
+    * statistics `st(sum_dl, n_dl)` and `n(n_docs)`. Shared by the
+    * q_bm25_* oracles.
+    */
+  private val bm25StatCtes =
+    s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
+       |tok AS (SELECT doc_id, UNNEST(tk) AS term FROM t),
+       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
+       |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
+       |st AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
+       |              CAST(COUNT(*) AS DOUBLE) AS n_dl FROM dl),
+       |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents)""".stripMargin
+
+  /** The per-doc BM25 sum over the matched (term, tf) rows; the
+    * continuation line keeps the oracles' 8-space indent. */
+  private val bm25Sum =
+    """SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
+      |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))""".stripMargin
+
+  /** [[bm25StatCtes]] + the [[bm25Terms]] query: `sc(doc_id, score)`,
+    * unrounded, for docs matching at least one term. */
+  private val bm25Ctes =
+    s"""$bm25StatCtes,
+       |q AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
+       |qtf AS (SELECT tf.* FROM tf JOIN q USING (term)),
+       |dfq AS (SELECT term, COUNT(*) AS df FROM qtf GROUP BY 1),
+       |sc AS (
+       |  SELECT doc_id,
+       |    $bm25Sum
+       |      AS score
+       |  FROM qtf JOIN dfq USING (term) JOIN dl USING (doc_id), st, n
+       |  GROUP BY doc_id
+       |)""".stripMargin
+
+  /** [[bm25Ctes]] with `b`-prefixed names over the caller's `t(doc_id,
+    * toks)` CTE, ending at `bsc(doc_id, score)` — the relevance half of
+    * the oracles that score BM25 beside other columns of `t`.
+    */
+  private val bm25ServeCtes =
+    s"""btok AS (
+       |  SELECT doc_id, UNNEST(toks) AS term FROM t
+       |), btf AS (SELECT doc_id, term, COUNT(*) AS tf FROM btok GROUP BY 1, 2),
+       |bdl AS (SELECT doc_id, SUM(tf) AS dl FROM btf GROUP BY 1),
+       |bst AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
+       |               CAST(COUNT(*) AS DOUBLE) AS n_dl FROM bdl),
+       |bn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
+       |bq AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
+       |bqtf AS (SELECT btf.* FROM btf JOIN bq USING (term)),
+       |bdfq AS (SELECT term, COUNT(*) AS df FROM bqtf GROUP BY 1),
+       |bsc AS (
+       |  SELECT doc_id,
+       |    $bm25Sum
+       |      AS score
+       |  FROM bqtf JOIN bdfq USING (term) JOIN bdl USING (doc_id), bst, bn
+       |  GROUP BY doc_id
+       |)""".stripMargin
+
+  /** q_corpus_pipeline's survivor set, shared by v1/v2/v3: `t` (all
+    * docs with `toks` and `nchar`), `dd` (non-bench docs with rounded
+    * quality `q` >= 0.75, one per token fingerprint) and
+    * `contaminated(doc_id)` (the `dd` docs sharing a 5-gram with the
+    * bench slice).
+    */
+  private val corpusSurvivorCtes =
+    s"""WITH t AS (
+       |  SELECT doc_id, source, n_chars, text, $duckToks AS toks,
+       |    CAST(length(text) AS DOUBLE) AS nchar
+       |  FROM documents
+       |), train AS (
+       |  SELECT doc_id, source, n_chars, toks, $duckQuality AS q
+       |  FROM t WHERE doc_id % 10 != 7 AND $duckQuality >= 0.75
+       |), keep AS (
+       |  SELECT MIN(doc_id) AS doc_id FROM (
+       |    SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM train
+       |  ) GROUP BY fp
+       |), dd AS (
+       |  SELECT train.* FROM train JOIN keep USING (doc_id)
+       |), grams AS (
+       |  SELECT doc_id, UNNEST(
+       |    ${shingleListSql("toks", 5)}) AS g
+       |  FROM dd
+       |), bench_g AS (
+       |  SELECT DISTINCT UNNEST(
+       |    ${shingleListSql("toks", 5)}) AS g
+       |  FROM t WHERE doc_id % 10 = 7
+       |), contaminated AS (
+       |  SELECT DISTINCT doc_id FROM grams JOIN bench_g USING (g)
+       |)""".stripMargin
+
+  /** q_decontaminate's oracle; the bloom variant is exact, so
+    * q_decontaminate_bloom is checked against the same SQL. */
+  private val decontaminateSql =
+    s"""WITH t AS (SELECT doc_id, source, n_chars, $duckToks AS tk FROM documents),
+       |sh AS (
+       |  SELECT doc_id, UNNEST(list_distinct(
+       |    ${shingleListSql("tk", 5)})) AS g
+       |  FROM t
+       |),
+       |contaminated AS (
+       |  SELECT DISTINCT a.doc_id
+       |  FROM sh a JOIN (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 7) b
+       |    ON a.g = b.g
+       |  WHERE a.doc_id % 10 != 7
+       |)
+       |SELECT source, COUNT(*) AS n_kept,
+       |  CAST(SUM(n_chars) AS BIGINT) AS n_chars_kept
+       |FROM t
+       |WHERE doc_id % 10 != 7 AND doc_id NOT IN (SELECT doc_id FROM contaminated)
+       |GROUP BY source ORDER BY source""".stripMargin
+
+  /** The capped in-bucket pairing mirror (cappedKeyedPairs with cap
+    * 256): all pairs among the first 256 ids of a (band, bucket), and
+    * each later id star-attached to the bucket's min id. Reads
+    * `buckets(id, band, bucket)`; exposes `cand(id_a, id_b)`.
+    */
+  private[queries] def cappedPairCtes(id: String, buckets: String): String =
+    s"""numbered AS (
+       |  SELECT $id AS id, band, bucket,
+       |    ROW_NUMBER() OVER (PARTITION BY band, bucket ORDER BY $id) AS rn,
+       |    MIN($id) OVER (PARTITION BY band, bucket) AS mn
+       |  FROM $buckets
+       |),
+       |expanded AS (
+       |  SELECT a.id AS id_a, b.id AS id_b
+       |  FROM numbered a JOIN numbered b
+       |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
+       |   AND a.rn <= 256 AND b.rn <= 256
+       |),
+       |overflow AS (
+       |  SELECT mn AS id_a, id AS id_b FROM numbered WHERE rn > 256
+       |),
+       |cand AS (
+       |  SELECT DISTINCT id_a, id_b
+       |  FROM (SELECT * FROM expanded UNION ALL SELECT * FROM overflow)
+       |)""".stripMargin
+
+  /** Temperature mix targets (α = 0.5 over per-source doc counts,
+    * 200-doc budget): `tg(source, target)`. */
+  private val mixTargetCtes =
+    s"""WITH g AS (
+       |  SELECT source, POWER(CAST(COUNT(*) AS DOUBLE), 0.5) AS w
+       |  FROM documents GROUP BY source
+       |), t AS (SELECT SUM(w) AS tw FROM g),
+       |tg AS (
+       |  SELECT source,
+       |    CAST(FLOOR(CAST(ROUND(w / tw, 6) AS DECIMAL(18,6)) * 200)
+       |      AS BIGINT) AS target
+       |  FROM g, t
+       |)""".stripMargin
 
   /** BM25 stats as a PERSISTED artifact, memoized per scale dir — the
     * same discipline as every other fit here (ALS factors, IVF-PQ
@@ -182,21 +342,6 @@ object TextQueries {
     s"(((($a) % 4294967296) * $b + (((($a) // 4294967296) * $b) % 4294967296)" +
       s" * 4294967296) % 18446744073709551616)"
 
-  /** The MinHash banding twin, shared by every oracle that consumes the
-    * REAL banding (q_minhash_sigs, q_minhash_bucket_health,
-    * q_dedup_minhash, q_dedup_incremental_near): the permutation-hash
-    * arithmetic of MinHashBandBuckets unrolled over `documents` —
-    * per shingle fnv64 over its bytes (ASCII fixture ⇒ codepoints ARE
-    * the bytes — asserted in TextSpec), per hash function j the
-    * splitmix avalanche of base ^ (seed + j·golden), minima taken over
-    * SIGNED longs (the Spark comparison), then the per-band FNV fold.
-    * All values carried as unsigned HUGEINT residues; logical
-    * shift-right = floor division (residues are nonnegative); the
-    * staged CTEs (h0..h3) keep each splitmix step referencing a COLUMN
-    * so the split-multiply's textual duplication never compounds.
-    * Exposes `mh_shingles(doc_id, shs)` (the distinct shingle list) and
-    * `mh_buckets(doc_id, band BIGINT, bucket BIGINT signed)`.
-    */
   /** Shared CTE prefix of the q_cross_doc_spans / q_source_span_overlap
     * oracles (Dedup.crossDocSpans' twin, factored so the doc-pair and
     * source-pair views can never drift): positional 5-grams, rare-gram
@@ -243,13 +388,25 @@ object TextQueries {
     s"""mh_t AS (SELECT doc_id, $duckToks AS tk FROM documents),
        |mh_shingles AS (
        |  SELECT doc_id, list_distinct(
-       |    CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-       |         WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-       |         ELSE [array_to_string(tk[i:i+2], ' ') FOR i IN range(1, len(tk) - 1)]
-       |    END) AS shs
+       |    ${shingleListSql("tk", 3)}) AS shs
        |  FROM mh_t
        |)""".stripMargin
 
+  /** The MinHash banding twin, shared by every oracle that consumes the
+    * REAL banding (q_minhash_sigs, q_minhash_bucket_health,
+    * q_dedup_minhash, q_dedup_incremental_near): the permutation-hash
+    * arithmetic of MinHashBandBuckets unrolled over `documents` —
+    * per shingle fnv64 over its bytes (ASCII fixture ⇒ codepoints ARE
+    * the bytes — asserted in TextSpec), per hash function j the
+    * splitmix avalanche of base ^ (seed + j·golden), minima taken over
+    * SIGNED longs (the Spark comparison), then the per-band FNV fold.
+    * All values carried as unsigned HUGEINT residues; logical
+    * shift-right = floor division (residues are nonnegative); the
+    * staged CTEs (h0..h3) keep each splitmix step referencing a COLUMN
+    * so the split-multiply's textual duplication never compounds.
+    * Exposes `mh_shingles(doc_id, shs)` (the distinct shingle list) and
+    * `mh_buckets(doc_id, band BIGINT, bucket BIGINT signed)`.
+    */
   private def minhashCte: String =
     s"""$shinglesCte,
        |mh_sh AS (SELECT doc_id, UNNEST(shs) AS g FROM mh_shingles),
@@ -525,6 +682,54 @@ object TextQueries {
        |    LEFT JOIN rc3 c3 USING (doc_id)
        |    LEFT JOIN rcc cc USING (doc_id))""".stripMargin
 
+  /** q_corpus_pipeline's gate chain, shared by v1/v2/v3: non-bench
+    * docs with rounded quality `q` >= 0.75, then exact dedup (the min
+    * doc id per token fingerprint).
+    */
+  private def qualityDeduped(base: DataFrame): DataFrame = {
+    // eager pin (the coPurchaseEdges discipline): train is consumed
+    // by the fingerprint build AND the semi-join left side, and the
+    // column-pruning fork re-ran the qualityScore+tokenize scan twice
+    val train = base.filter(pmod(col("doc_id"), lit(10)) =!= 7)
+      .withColumn("q", round(TextAnalysis.qualityScore(col("text")), 6))
+      .filter(col("q") >= 0.75)
+      .localCheckpoint(true)
+    val keep = train
+      .select(col("doc_id"),
+        md5(concat_ws(" ", Dedup.tokens(col("text")))).as("fp"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
+    train.join(keep, Seq("doc_id"), "left_semi")
+  }
+
+  /** The planted q_dedup_cc graph: each customer's orders below 5000,
+    * chained in order-key order (`id_a` the previous order, `id_b` the
+    * next), so the components are the customers with two or more.
+    */
+  private def orderChainPairs(s: SparkSession, d: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
+    Tables.orders(s, d).filter(col("o_orderkey") < 5000)
+      .select(col("o_custkey"), col("o_orderkey"))
+      .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
+      .filter(col("prev").isNotNull)
+      .select(col("prev").as("id_a"), col("o_orderkey").as("id_b"))
+  }
+
+  /** The q_dedup_cc components without recursion (a per-customer window
+    * min); q_dedup_cc_incremental must reproduce the same closure. */
+  private val dedupCcSql =
+    """WITH o AS (
+      |  SELECT o_custkey, o_orderkey FROM orders WHERE o_orderkey < 5000
+      |), c AS (
+      |  SELECT o_orderkey,
+      |    COUNT(*) OVER (PARTITION BY o_custkey) AS n,
+      |    MIN(o_orderkey) OVER (PARTITION BY o_custkey) AS comp
+      |  FROM o
+      |)
+      |SELECT o_orderkey AS id, comp FROM c WHERE n > 1
+      |ORDER BY id""".stripMargin
+
   val declarations: Seq[Query] = Seq(
     // token counting: whitespace + BPE-ish pre-tokenizer regex
     Query("q_token_count", (s, d) => {
@@ -736,25 +941,7 @@ object TextQueries {
       // threshold on the UNROUNDED value (small-int division is
       // IEEE-identical cross-engine), 6dp round at output only.
       s"""WITH $minhashCte,
-         |numbered AS (
-         |  SELECT doc_id AS id, band, bucket,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bucket ORDER BY doc_id) AS rn,
-         |    MIN(doc_id) OVER (PARTITION BY band, bucket) AS mn
-         |  FROM mh_buckets
-         |),
-         |expanded AS (
-         |  SELECT a.id AS id_a, b.id AS id_b
-         |  FROM numbered a JOIN numbered b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-         |   AND a.rn <= 256 AND b.rn <= 256
-         |),
-         |overflow AS (
-         |  SELECT mn AS id_a, id AS id_b FROM numbered WHERE rn > 256
-         |),
-         |cand AS (
-         |  SELECT DISTINCT id_a, id_b
-         |  FROM (SELECT * FROM expanded UNION ALL SELECT * FROM overflow)
-         |),
+         |${cappedPairCtes("doc_id", "mh_buckets")},
          |j AS (
          |  SELECT c.id_a, c.id_b,
          |    CAST(len(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS inter,
@@ -895,25 +1082,7 @@ object TextQueries {
       // both pair relations replayed (the banding chain verbatim from
       // q_dedup_minhash, the brute force from q_ssjoin_exact) + counts
       s"""WITH $minhashCte,
-         |numbered AS (
-         |  SELECT doc_id AS id, band, bucket,
-         |    ROW_NUMBER() OVER (PARTITION BY band, bucket ORDER BY doc_id) AS rn,
-         |    MIN(doc_id) OVER (PARTITION BY band, bucket) AS mn
-         |  FROM mh_buckets
-         |),
-         |expanded AS (
-         |  SELECT a.id AS id_a, b.id AS id_b
-         |  FROM numbered a JOIN numbered b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-         |   AND a.rn <= 256 AND b.rn <= 256
-         |),
-         |overflow AS (
-         |  SELECT mn AS id_a, id AS id_b FROM numbered WHERE rn > 256
-         |),
-         |cand AS (
-         |  SELECT DISTINCT id_a, id_b
-         |  FROM (SELECT * FROM expanded UNION ALL SELECT * FROM overflow)
-         |),
+         |${cappedPairCtes("doc_id", "mh_buckets")},
          |jl AS (
          |  SELECT c.id_a, c.id_b,
          |    CAST(len(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS inter,
@@ -1349,10 +1518,7 @@ object TextQueries {
       s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
          |sh AS (
          |  SELECT doc_id, UNNEST(list_distinct(
-         |    CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-         |         ELSE [array_to_string(tk[i:i+2], ' ') FOR i IN range(1, len(tk) - 1)]
-         |    END)) AS ngram
+         |    ${shingleListSql("tk", 3)})) AS ngram
          |  FROM t
          |)
          |SELECT ngram, COUNT(*) AS n_docs FROM sh GROUP BY ngram
@@ -1572,16 +1738,7 @@ object TextQueries {
         targets, col("source"), Seq(col("doc_id")))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH g AS (
-        |  SELECT source, POWER(CAST(COUNT(*) AS DOUBLE), 0.5) AS w
-        |  FROM documents GROUP BY source
-        |), t AS (SELECT SUM(w) AS tw FROM g),
-        |tg AS (
-        |  SELECT source,
-        |    CAST(FLOOR(CAST(ROUND(w / tw, 6) AS DECIMAL(18,6)) * 200)
-        |      AS BIGINT) AS target
-        |  FROM g, t
-        |), k AS (
+      s"""$mixTargetCtes, k AS (
         |  SELECT doc_id, source,
         |    CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
         |      || ':' || CAST(doc_id AS VARCHAR) AS ks
@@ -1610,16 +1767,7 @@ object TextQueries {
         targets, col("source"), Seq(col("doc_id")))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH g AS (
-        |  SELECT source, POWER(CAST(COUNT(*) AS DOUBLE), 0.5) AS w
-        |  FROM documents GROUP BY source
-        |), t AS (SELECT SUM(w) AS tw FROM g),
-        |tg AS (
-        |  SELECT source,
-        |    CAST(FLOOR(CAST(ROUND(w / tw, 6) AS DECIMAL(18,6)) * 200)
-        |      AS BIGINT) AS target
-        |  FROM g, t
-        |), r AS (
+      s"""$mixTargetCtes, r AS (
         |  SELECT doc_id, source,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
         |  FROM documents
@@ -2090,24 +2238,7 @@ object TextQueries {
         .select(col("doc_id"), round(contrib, 6).as("score_r"))
         .orderBy(col("score_r").desc, col("doc_id")).limit(100)
     }, Sql(
-      s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
-         |tok AS (SELECT doc_id, UNNEST(tk) AS term FROM t),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-         |st AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |              CAST(COUNT(*) AS DOUBLE) AS n_dl FROM dl),
-         |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-         |q AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
-         |qtf AS (SELECT tf.* FROM tf JOIN q USING (term)),
-         |dfq AS (SELECT term, COUNT(*) AS df FROM qtf GROUP BY 1),
-         |sc AS (
-         |  SELECT doc_id,
-         |    SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))
-         |      AS score
-         |  FROM qtf JOIN dfq USING (term) JOIN dl USING (doc_id), st, n
-         |  GROUP BY doc_id
-         |)
+      s"""$bm25Ctes
          |SELECT doc_id, ROUND(score, 6) AS score_r FROM sc
          |ORDER BY score_r DESC, doc_id LIMIT 100""".stripMargin)),
 
@@ -2163,13 +2294,7 @@ object TextQueries {
     }, Sql(
       // per-(query,doc) sums over the query-term join; ranks on the
       // ROUNDED score with doc_id tiebreak, exactly like the Spark side
-      s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
-         |tok AS (SELECT doc_id, UNNEST(tk) AS term FROM t),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-         |st AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |              CAST(COUNT(*) AS DOUBLE) AS n_dl FROM dl),
-         |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
+      s"""$bm25StatCtes,
          |q AS (SELECT * FROM (VALUES
          |  (1, 'query'), (1, 'stream'),
          |  (2, 'vector'), (2, 'hash'),
@@ -2180,8 +2305,7 @@ object TextQueries {
          |),
          |sc AS (
          |  SELECT q.query_id, tf.doc_id,
-         |    ROUND(SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl)))), 6)
+         |    ROUND($bm25Sum, 6)
          |      AS score_r
          |  FROM q JOIN tf USING (term) JOIN dfq USING (term)
          |       JOIN dl ON tf.doc_id = dl.doc_id, st, n
@@ -2300,8 +2424,7 @@ object TextQueries {
          |),
          |sc AS (
          |  SELECT qv.query_id, tf.doc_id,
-         |    ROUND(SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl)))), 6)
+         |    ROUND($bm25Sum, 6)
          |      AS score_r
          |  FROM qv JOIN tf USING (term) JOIN dfq USING (term)
          |       JOIN dl ON tf.doc_id = dl.doc_id, st, n
@@ -2349,24 +2472,7 @@ object TextQueries {
          |  SELECT doc_id, text, $duckToks AS toks,
          |    CAST(length(text) AS DOUBLE) AS nchar
          |  FROM documents
-         |), btok AS (
-         |  SELECT doc_id, UNNEST(toks) AS term FROM t
-         |), btf AS (SELECT doc_id, term, COUNT(*) AS tf FROM btok GROUP BY 1, 2),
-         |bdl AS (SELECT doc_id, SUM(tf) AS dl FROM btf GROUP BY 1),
-         |bst AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |               CAST(COUNT(*) AS DOUBLE) AS n_dl FROM bdl),
-         |bn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-         |bq AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
-         |bqtf AS (SELECT btf.* FROM btf JOIN bq USING (term)),
-         |bdfq AS (SELECT term, COUNT(*) AS df FROM bqtf GROUP BY 1),
-         |bsc AS (
-         |  SELECT doc_id,
-         |    SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))
-         |      AS score
-         |  FROM bqtf JOIN bdfq USING (term) JOIN bdl USING (doc_id), bst, bn
-         |  GROUP BY doc_id
-         |), scored AS (
+         |), $bm25ServeCtes, scored AS (
          |  SELECT t.doc_id, ROUND(COALESCE(bsc.score, 0), 6) AS s_rel,
          |    ROUND(COALESCE($duckQuality, 0), 6) AS s_q
          |  FROM t LEFT JOIN bsc USING (doc_id)
@@ -2399,24 +2505,7 @@ object TextQueries {
     }, Sql(
       // all-docs serving twin: LEFT JOIN + COALESCE(0) — a doc with no
       // query term (or no tokens) serves exactly 0
-      s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
-         |tok AS (SELECT doc_id, UNNEST(tk) AS term FROM t),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-         |st AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |              CAST(COUNT(*) AS DOUBLE) AS n_dl FROM dl),
-         |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-         |q AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
-         |qtf AS (SELECT tf.* FROM tf JOIN q USING (term)),
-         |dfq AS (SELECT term, COUNT(*) AS df FROM qtf GROUP BY 1),
-         |sc AS (
-         |  SELECT doc_id,
-         |    SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))
-         |      AS score
-         |  FROM qtf JOIN dfq USING (term) JOIN dl USING (doc_id), st, n
-         |  GROUP BY doc_id
-         |)
+      s"""$bm25Ctes
          |SELECT d.doc_id, ROUND(COALESCE(sc.score, 0), 6) AS score_r
          |FROM documents d LEFT JOIN sc USING (doc_id)
          |ORDER BY d.doc_id""".stripMargin)),
@@ -2442,10 +2531,7 @@ object TextQueries {
       s"""WITH t AS (SELECT doc_id, $duckToks AS tk FROM documents),
          |sh AS (
          |  SELECT doc_id, UNNEST(list_distinct(
-         |    CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-         |         ELSE [array_to_string(tk[i:i+4], ' ') FOR i IN range(1, len(tk) - 3)]
-         |    END)) AS g
+         |    ${shingleListSql("tk", 5)})) AS g
          |  FROM t
          |)
          |SELECT a.doc_id AS doc_id, b.doc_id AS bench_id, COUNT(*) AS n_shared
@@ -2467,22 +2553,9 @@ object TextQueries {
     // bounded aggregate.
     Query("q_corpus_pipeline", (s, d) => {
       val base = docs(s, d)
-      // eager pin (the coPurchaseEdges discipline): train is consumed
-      // by the fingerprint build AND the semi-join left side, and the
-      // column-pruning fork re-ran the qualityScore+tokenize scan twice
-      val train = base.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .withColumn("q", round(TextAnalysis.qualityScore(col("text")), 6))
-        .filter(col("q") >= 0.75)
-        .localCheckpoint(true)
-      val keep = train
-        .select(col("doc_id"),
-          md5(concat_ws(" ", Dedup.tokens(col("text")))).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
       // pinned too: read by the contamination gram join AND the final
       // anti-join survivors side
-      val deduped = train.join(keep, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
+      val deduped = qualityDeduped(base).localCheckpoint(true)
       val bench = base.filter(pmod(col("doc_id"), lit(10)) === 7)
       // guarded gram join (broadcast under the threshold, shuffle past
       // it — TextAnalysis.contaminationPlan owns the choice + logging)
@@ -2494,36 +2567,7 @@ object TextQueries {
           round(avg(col("q")), 6).as("mean_quality"))
         .orderBy(col("source"))
     }, Sql(
-      s"""WITH t AS (
-         |  SELECT doc_id, source, n_chars, text, $duckToks AS toks,
-         |    CAST(length(text) AS DOUBLE) AS nchar
-         |  FROM documents
-         |), train AS (
-         |  SELECT doc_id, source, n_chars, toks, $duckQuality AS q
-         |  FROM t WHERE doc_id % 10 != 7 AND $duckQuality >= 0.75
-         |), keep AS (
-         |  SELECT MIN(doc_id) AS doc_id FROM (
-         |    SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM train
-         |  ) GROUP BY fp
-         |), dd AS (
-         |  SELECT train.* FROM train JOIN keep USING (doc_id)
-         |), grams AS (
-         |  SELECT doc_id, UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM dd
-         |), bench_g AS (
-         |  SELECT DISTINCT UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM t WHERE doc_id % 10 = 7
-         |), contaminated AS (
-         |  SELECT DISTINCT doc_id FROM grams JOIN bench_g USING (g)
-         |)
+      s"""$corpusSurvivorCtes
          |SELECT source, COUNT(*) AS n_kept,
          |  CAST(SUM(n_chars) AS BIGINT) AS n_chars_kept,
          |  ROUND(AVG(q), 6) AS mean_quality
@@ -2542,19 +2586,7 @@ object TextQueries {
     Query("q_corpus_pipeline_v2", (s, d) => {
       val base = docs(s, d)
       val m = bm25Model(s, d)
-      // eager pin (the coPurchaseEdges discipline): train is consumed
-      // by the fingerprint build AND the semi-join left side, and the
-      // column-pruning fork re-ran the qualityScore+tokenize scan twice
-      val train = base.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .withColumn("q", round(TextAnalysis.qualityScore(col("text")), 6))
-        .filter(col("q") >= 0.75)
-        .localCheckpoint(true)
-      val keep = train
-        .select(col("doc_id"),
-          md5(concat_ws(" ", Dedup.tokens(col("text")))).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      val deduped = train.join(keep, Seq("doc_id"), "left_semi")
+      val deduped = qualityDeduped(base)
       val bench = base.filter(pmod(col("doc_id"), lit(10)) === 7)
       TextAnalysis.decontaminateBloom(deduped, bench)
         .withColumn("rel_r",
@@ -2568,53 +2600,7 @@ object TextQueries {
       // v2 = v1's survivor set verbatim (bloom decontamination is exact)
       // + the BM25 relevance of what survived; the bm25 CTEs (b*) mirror
       // q_bm25_serve over the FULL documents table, matching fitBm25
-      s"""WITH t AS (
-         |  SELECT doc_id, source, n_chars, text, $duckToks AS toks,
-         |    CAST(length(text) AS DOUBLE) AS nchar
-         |  FROM documents
-         |), train AS (
-         |  SELECT doc_id, source, n_chars, toks, $duckQuality AS q
-         |  FROM t WHERE doc_id % 10 != 7 AND $duckQuality >= 0.75
-         |), keep AS (
-         |  SELECT MIN(doc_id) AS doc_id FROM (
-         |    SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM train
-         |  ) GROUP BY fp
-         |), dd AS (
-         |  SELECT train.* FROM train JOIN keep USING (doc_id)
-         |), grams AS (
-         |  SELECT doc_id, UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM dd
-         |), bench_g AS (
-         |  SELECT DISTINCT UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM t WHERE doc_id % 10 = 7
-         |), contaminated AS (
-         |  SELECT DISTINCT doc_id FROM grams JOIN bench_g USING (g)
-         |), btok AS (
-         |  SELECT doc_id, UNNEST(toks) AS term FROM t
-         |), btf AS (SELECT doc_id, term, COUNT(*) AS tf FROM btok GROUP BY 1, 2),
-         |bdl AS (SELECT doc_id, SUM(tf) AS dl FROM btf GROUP BY 1),
-         |bst AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |               CAST(COUNT(*) AS DOUBLE) AS n_dl FROM bdl),
-         |bn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-         |bq AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
-         |bqtf AS (SELECT btf.* FROM btf JOIN bq USING (term)),
-         |bdfq AS (SELECT term, COUNT(*) AS df FROM bqtf GROUP BY 1),
-         |bsc AS (
-         |  SELECT doc_id,
-         |    SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))
-         |      AS score
-         |  FROM bqtf JOIN bdfq USING (term) JOIN bdl USING (doc_id), bst, bn
-         |  GROUP BY doc_id
-         |), survivors AS (
+      s"""$corpusSurvivorCtes, $bm25ServeCtes, survivors AS (
          |  SELECT dd.*, ROUND(COALESCE(bsc.score, 0), 6) AS rel_r
          |  FROM dd LEFT JOIN bsc USING (doc_id)
          |  WHERE dd.doc_id NOT IN (SELECT doc_id FROM contaminated)
@@ -2643,19 +2629,7 @@ object TextQueries {
     Query("q_corpus_pipeline_v3", (s, d) => {
       val base = docs(s, d)
       val m = bm25Model(s, d)
-      // eager pin (the coPurchaseEdges discipline): train is consumed
-      // by the fingerprint build AND the semi-join left side, and the
-      // column-pruning fork re-ran the qualityScore+tokenize scan twice
-      val train = base.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .withColumn("q", round(TextAnalysis.qualityScore(col("text")), 6))
-        .filter(col("q") >= 0.75)
-        .localCheckpoint(true)
-      val keep = train
-        .select(col("doc_id"),
-          md5(concat_ws(" ", Dedup.tokens(col("text")))).as("fp"))
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      val deduped = train.join(keep, Seq("doc_id"), "left_semi")
+      val deduped = qualityDeduped(base)
       val bench = base.filter(pmod(col("doc_id"), lit(10)) === 7)
       val candidates = TextAnalysis.decontaminateBloom(deduped, bench)
         .withColumn("rel_r",
@@ -2668,53 +2642,7 @@ object TextQueries {
         .select(col("source"), col("doc_id"), col("q"), col("rel_r"))
         .orderBy(col("source"), col("doc_id"))
     }, Sql(
-      s"""WITH t AS (
-         |  SELECT doc_id, source, n_chars, text, $duckToks AS toks,
-         |    CAST(length(text) AS DOUBLE) AS nchar
-         |  FROM documents
-         |), train AS (
-         |  SELECT doc_id, source, n_chars, toks, $duckQuality AS q
-         |  FROM t WHERE doc_id % 10 != 7 AND $duckQuality >= 0.75
-         |), keep AS (
-         |  SELECT MIN(doc_id) AS doc_id FROM (
-         |    SELECT doc_id, md5(array_to_string(toks, ' ')) AS fp FROM train
-         |  ) GROUP BY fp
-         |), dd AS (
-         |  SELECT train.* FROM train JOIN keep USING (doc_id)
-         |), grams AS (
-         |  SELECT doc_id, UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM dd
-         |), bench_g AS (
-         |  SELECT DISTINCT UNNEST(
-         |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+4], ' ') FOR i IN range(1, len(toks) - 3)]
-         |    END) AS g
-         |  FROM t WHERE doc_id % 10 = 7
-         |), contaminated AS (
-         |  SELECT DISTINCT doc_id FROM grams JOIN bench_g USING (g)
-         |), btok AS (
-         |  SELECT doc_id, UNNEST(toks) AS term FROM t
-         |), btf AS (SELECT doc_id, term, COUNT(*) AS tf FROM btok GROUP BY 1, 2),
-         |bdl AS (SELECT doc_id, SUM(tf) AS dl FROM btf GROUP BY 1),
-         |bst AS (SELECT CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-         |               CAST(COUNT(*) AS DOUBLE) AS n_dl FROM bdl),
-         |bn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-         |bq AS (SELECT * FROM (VALUES ('query'), ('stream'), ('vector'), ('hash')) AS q(term)),
-         |bqtf AS (SELECT btf.* FROM btf JOIN bq USING (term)),
-         |bdfq AS (SELECT term, COUNT(*) AS df FROM bqtf GROUP BY 1),
-         |bsc AS (
-         |  SELECT doc_id,
-         |    SUM(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-         |        (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (sum_dl / n_dl))))
-         |      AS score
-         |  FROM bqtf JOIN bdfq USING (term) JOIN bdl USING (doc_id), bst, bn
-         |  GROUP BY doc_id
-         |), candidates AS (
+      s"""$corpusSurvivorCtes, $bm25ServeCtes, candidates AS (
          |  SELECT dd.source, dd.doc_id, dd.q,
          |    ROUND(COALESCE(bsc.score, 0), 6) AS rel_r
          |  FROM dd LEFT JOIN bsc USING (doc_id)
@@ -2751,27 +2679,7 @@ object TextQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("n_chars_kept"))
         .orderBy(col("source"))
-    }, Sql(
-      s"""WITH t AS (SELECT doc_id, source, n_chars, $duckToks AS tk FROM documents),
-         |sh AS (
-         |  SELECT doc_id, UNNEST(list_distinct(
-         |    CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-         |         ELSE [array_to_string(tk[i:i+4], ' ') FOR i IN range(1, len(tk) - 3)]
-         |    END)) AS g
-         |  FROM t
-         |),
-         |contaminated AS (
-         |  SELECT DISTINCT a.doc_id
-         |  FROM sh a JOIN (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 7) b
-         |    ON a.g = b.g
-         |  WHERE a.doc_id % 10 != 7
-         |)
-         |SELECT source, COUNT(*) AS n_kept,
-         |  CAST(SUM(n_chars) AS BIGINT) AS n_chars_kept
-         |FROM t
-         |WHERE doc_id % 10 != 7 AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |GROUP BY source ORDER BY source""".stripMargin)),
+    }, Sql(decontaminateSql)),
 
     // bloom-pre-filtered decontamination — BIT-IDENTICAL result to
     // q_decontaminate (no false negatives; same gram construction), so
@@ -2789,27 +2697,8 @@ object TextQueries {
         .orderBy(col("source"))
     }, Sql(
       // the bloom variant is exact (no false negatives + exact verify
-      // join), so it shares q_decontaminate's oracle verbatim
-      s"""WITH t AS (SELECT doc_id, source, n_chars, $duckToks AS tk FROM documents),
-         |sh AS (
-         |  SELECT doc_id, UNNEST(list_distinct(
-         |    CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-         |         WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-         |         ELSE [array_to_string(tk[i:i+4], ' ') FOR i IN range(1, len(tk) - 3)]
-         |    END)) AS g
-         |  FROM t
-         |),
-         |contaminated AS (
-         |  SELECT DISTINCT a.doc_id
-         |  FROM sh a JOIN (SELECT DISTINCT g FROM sh WHERE doc_id % 10 = 7) b
-         |    ON a.g = b.g
-         |  WHERE a.doc_id % 10 != 7
-         |)
-         |SELECT source, COUNT(*) AS n_kept,
-         |  CAST(SUM(n_chars) AS BIGINT) AS n_chars_kept
-         |FROM t
-         |WHERE doc_id % 10 != 7 AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |GROUP BY source ORDER BY source""".stripMargin)),
+      // join), so it shares q_decontaminate's oracle
+      decontaminateSql)),
 
     // repetition score: most-frequent-token share per document — the
     // cheap garbage/spam detector (a doc that is one token over and over
@@ -3080,27 +2969,11 @@ object TextQueries {
     // one-hop star-collapse gets wrong. Oracle needs no recursion because
     // the planted topology makes the answer a per-customer window min.
     Query("q_dedup_cc", (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      val pairs = Tables.orders(s, d).filter(col("o_orderkey") < 5000)
-        .select(col("o_custkey"), col("o_orderkey"))
-        .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("id_a"), col("o_orderkey").as("id_b"))
+      val pairs = orderChainPairs(s, d)
       Dedup.connectedComponents(pairs)
         .select(col("id"), col("comp"))
         .orderBy(col("id"))
-    }, Sql(
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderkey FROM orders WHERE o_orderkey < 5000
-        |), c AS (
-        |  SELECT o_orderkey,
-        |    COUNT(*) OVER (PARTITION BY o_custkey) AS n,
-        |    MIN(o_orderkey) OVER (PARTITION BY o_custkey) AS comp
-        |  FROM o
-        |)
-        |SELECT o_orderkey AS id, comp FROM c WHERE n > 1
-        |ORDER BY id""".stripMargin)),
+    }, Sql(dedupCcSql)),
 
     // EXACT-N deterministic holdout: the 50 docs with the smallest
     // md5(doc_id) — "hold out exactly N docs" where the hash-fraction
@@ -3156,13 +3029,7 @@ object TextQueries {
     // this shares q_dedup_cc's EXACT oracle: the driver witnesses that
     // the maintained label map equals a from-scratch recompute.
     Query("q_dedup_cc_incremental", (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      val pairs = Tables.orders(s, d).filter(col("o_orderkey") < 5000)
-        .select(col("o_custkey"), col("o_orderkey"))
-        .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("id_a"), col("o_orderkey").as("id_b"))
+      val pairs = orderChainPairs(s, d)
       val old = pairs.filter(col("id_b") < 4000)
       val fresh = pairs.filter(col("id_b") >= 4000)
       Dedup.incrementalCC(Dedup.connectedComponents(old), fresh)
@@ -3171,16 +3038,7 @@ object TextQueries {
     }, Sql(
       // identical to q_dedup_cc by construction: incremental maintenance
       // over the split edge stream must reproduce the full closure
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderkey FROM orders WHERE o_orderkey < 5000
-        |), c AS (
-        |  SELECT o_orderkey,
-        |    COUNT(*) OVER (PARTITION BY o_custkey) AS n,
-        |    MIN(o_orderkey) OVER (PARTITION BY o_custkey) AS comp
-        |  FROM o
-        |)
-        |SELECT o_orderkey AS id, comp FROM c WHERE n > 1
-        |ORDER BY id""".stripMargin)),
+      dedupCcSql)),
 
     // the ONLINE label map's serving view (Artifacts.resolveLabels —
     // exactly what maintainedClusterIntake reads between compactions):
@@ -3257,13 +3115,7 @@ object TextQueries {
     // (chains of consecutive orders), clusters = customers with >= 2
     // orders in range. Two bounded aggregates after the CC loop.
     Query("q_dedup_cluster_sizes", (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      val pairs = Tables.orders(s, d).filter(col("o_orderkey") < 5000)
-        .select(col("o_custkey"), col("o_orderkey"))
-        .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .select(col("prev").as("id_a"), col("o_orderkey").as("id_b"))
+      val pairs = orderChainPairs(s, d)
       Dedup.connectedComponents(pairs)
         .groupBy(col("comp")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))

@@ -62,6 +62,30 @@ class RecommendSpec extends SparkTestBase {
     assert(p1 == p2, "reloaded factors must serve bit-identical predictions")
   }
 
+  test("same-seed ALS refit at the default block count gives identical top-100 lists (Footrule 0)") {
+    // the refit row of the recommenders' ranking-stability census: two
+    // fits of the reference hyperparameters (MLlib's default 10 user and
+    // item blocks) on one pinned fixture must rank every user's items
+    // identically. Normalized top-k Spearman Footrule ("Distributed
+    // Similarity Joins over Top-K Rankings", EDBT 2020): a missing item
+    // takes position k + 1, the sum is divided by its maximum k(k + 1).
+    val k = 100
+    def lists(): Map[Int, Seq[Int]] =
+      Recommend.recommendTopK(Recommend.train(fixture), k).collect()
+        .groupBy(_.getInt(0)).map { case (u, rs) =>
+          u -> rs.sortBy(_.getLong(2)).map(_.getInt(1)).toSeq }
+    def footrule(x: Seq[Int], y: Seq[Int]): Double = {
+      val (px, py) = (x.zipWithIndex.toMap, y.zipWithIndex.toMap)
+      (px.keySet ++ py.keySet).toSeq.map(i =>
+        math.abs(px.getOrElse(i, k) - py.getOrElse(i, k))).sum.toDouble / (k * (k + 1))
+    }
+    val (a, b) = (lists(), lists())
+    assert(a.size == 40 && a.keySet == b.keySet, s"users ${a.size} vs ${b.size}")
+    val worst = a.keys.map(u => footrule(a(u), b(u))).max
+    assert(worst == 0.0, s"max per-user Footrule $worst between two same-seed fits")
+    assert(a == b)
+  }
+
   test("torn ALS save (pointerless partial v= dir) reads as absent → refit, not crash") {
     // ALSModel.save writes metadata + two factor matrices with no
     // atomicity across them; a versioned publish makes the crash window

@@ -194,6 +194,19 @@ class RegistrySpec extends SparkTestBase {
     }
   }
 
+  test("no static oracle SQL holds a leftover interpolation marker") {
+    // oracles are composed from shared fragments; a fragment spliced
+    // into a """…""" that lost its `s` prefix reaches DuckDB as literal
+    // `$name` / `${…}` text and would fail only in tools/check.py. A `$`
+    // before `.` is a DuckDB JSON path ('$.k' in q_events_json and
+    // q_events_variant), not a marker, so the pattern skips it.
+    val marker = """\$(\{|[A-Za-z_])""".r
+    val leftovers = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (k, v) =>
+      marker.findFirstMatchIn(v).map(m => s"$k: ${v.slice(m.start, m.start + 40)}")
+    }
+    assert(leftovers.isEmpty, s"uninterpolated markers: ${leftovers.mkString("; ")}")
+  }
+
   test("Soak.graphDecompJson writes each key once, at one scale and at three") {
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
