@@ -266,9 +266,8 @@ object TextHashFunctions {
     MinHashBandBuckets(null, bands, rowsPerBand, seed).nullSafeEval(arr)
       .asInstanceOf[ArrayData]
 
-  def minhash_band_buckets(tokens: Column, bands: Int, rowsPerBand: Int,
-      seed: Long = 42L): Column =
-    Bridge.column(MinHashBandBuckets(Bridge.expression(tokens), bands, rowsPerBand, seed))
+  def minhash_band_buckets(tokens: Column, bands: Int, rowsPerBand: Int): Column =
+    Bridge.column(MinHashBandBuckets(Bridge.expression(tokens), bands, rowsPerBand, 42L))
 
   /** Winnowing-style rolling fingerprints in ONE pass: normalize
     * (tokenize + single-space join, same tokenizer as [[ShingleSet]]),

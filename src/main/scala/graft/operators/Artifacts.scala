@@ -29,6 +29,9 @@ import org.apache.spark.sql.functions._
   */
 object Artifacts {
 
+  /** Versions a compaction keeps after its [[pruneVersions]] sweep. */
+  final val KeepVersions = 2
+
   // ---- MinhashIndex (near-dup corpus index) ----
 
   /** Persist a [[Dedup.MinhashIndex]] as `dir/buckets` + `dir/content`.
@@ -55,11 +58,11 @@ object Artifacts {
     * index at `dir`: the closed-loop step of the near-dup intakes, so
     * the next cycle's gate sees this cycle's docs.
     */
-  def appendMinhashIndex(docs: DataFrame, dir: String, nShingle: Int,
-      bands: Int, rowsPerBand: Int): Unit =
-    writeMinhashIndex(Dedup.minhashBuckets(docs, nShingle, bands, rowsPerBand),
+  def appendMinhashIndex(docs: DataFrame, dir: String): Unit =
+    writeMinhashIndex(
+      Dedup.minhashBuckets(docs, Dedup.IndexShingle, Dedup.IndexBands, Dedup.IndexRowsPerBand),
       docs.select(col("doc_id").as("id"),
-        Dedup.shingles(col("text"), nShingle).as("sh")),
+        Dedup.shingles(col("text"), Dedup.IndexShingle).as("sh")),
       dir, "append")
 
   private def writeMinhashIndex(buckets: DataFrame, content: DataFrame,
@@ -108,7 +111,7 @@ object Artifacts {
     * absent from the new version.
     */
   def compactMinhashIndex(spark: SparkSession, dir: String,
-      maxBucket: Int = 256, keepVersions: Int = 2): Unit = {
+      maxBucket: Int = Dedup.MaxBucket): Unit = {
     val idx = loadMinhashIndex(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket")).orderBy(col("id"))
@@ -128,7 +131,7 @@ object Artifacts {
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, true)
     }
-    pruneVersions(spark, dir, keepVersions)
+    pruneVersions(spark, dir)
   }
 
   /** Crash-safe COMPACTION of the at-rest IVF-PQ index — the ANN twin of
@@ -152,8 +155,7 @@ object Artifacts {
     * [[publishVersion]] (write a fresh version with
     * `Similarity.writeIvfPqIndex` inside the `write` callback).
     */
-  def compactIvfPqIndex(spark: SparkSession, root: String,
-      keepVersions: Int = 2): Unit = {
+  def compactIvfPqIndex(spark: SparkSession, root: String): Unit = {
     val codes = spark.read.parquet(resolveLive(spark, root))
     publishVersion(spark, root)(target =>
       codes.repartition(col("centroid_id"))
@@ -169,7 +171,7 @@ object Artifacts {
         .filter(s => s.getPath.getName.startsWith("centroid_id=") ||
           s.getPath.getName == "_SUCCESS")
         .foreach(s => fs.delete(s.getPath, true))
-    pruneVersions(spark, root, keepVersions)
+    pruneVersions(spark, root)
   }
 
   /** At-rest LAYOUT health of the live IVF-PQ index version: parquet
@@ -218,8 +220,8 @@ object Artifacts {
     * compaction — the cadence driver [[compactMinhashIndex]]'s scaladoc
     * promises but leaves to the operator. Compacts the at-rest IVF-PQ
     * index iff the live layout is degraded: hot-cell file skew
-    * (`p99/mean > maxSkew`, appends concentrating on few cells) OR
-    * uniform small-file proliferation (`mean > maxAvgFiles`, every cell
+    * (`p99/mean > 3`, appends concentrating on few cells) OR
+    * uniform small-file proliferation (`mean > 4`, every cell
     * fragmented by many batches — skew stays ~1 but every probe pays the
     * per-file open cost). Below both bounds it is a metadata-only no-op,
     * so calling it on every maintenance tick is safe and cheap; serving
@@ -229,13 +231,11 @@ object Artifacts {
     *
     * @return true iff a compaction was triggered and published
     */
-  def maintainIvfPqIndex(spark: SparkSession, root: String,
-      maxSkew: Double = 3.0, maxAvgFiles: Double = 4.0,
-      keepVersions: Int = 2): Boolean = {
+  def maintainIvfPqIndex(spark: SparkSession, root: String): Boolean = {
     val st = ivfLayoutStats(spark, root)
     val degraded = st.nCells > 0 &&
-      (st.skew > maxSkew || st.avgFilesPerCell > maxAvgFiles)
-    if (degraded) compactIvfPqIndex(spark, root, keepVersions)
+      (st.skew > 3.0 || st.avgFilesPerCell > 4.0)
+    if (degraded) compactIvfPqIndex(spark, root)
     degraded
   }
 
@@ -248,9 +248,8 @@ object Artifacts {
     * root must target [[resolveLive]] (what the maintained intake loops
     * do), not the root itself.
     */
-  def saveFingerprintIndex(index: DataFrame, dir: String,
-      mode: String = "overwrite"): Unit =
-    index.write.mode(mode).parquet(dir)
+  def saveFingerprintIndex(index: DataFrame, dir: String): Unit =
+    index.write.mode("overwrite").parquet(dir)
 
   /** Load pair of [[saveFingerprintIndex]], resolving the `_LATEST`
     * pointer first so versioned and flat layouts load identically.
@@ -312,8 +311,7 @@ object Artifacts {
     * contract: torn versions inert, run quiesced, legacy flat files
     * swept after the pointer flip, history pruned).
     */
-  def compactLabels(spark: SparkSession, root: String,
-      keepVersions: Int = 2): Unit = {
+  def compactLabels(spark: SparkSession, root: String): Unit = {
     val resolved = currentLabels(spark, root)
     publishVersion(spark, root)(target =>
       resolved.select(col("id"), col("comp"), lit(1L).as("seq"))
@@ -328,7 +326,7 @@ object Artifacts {
           !n.startsWith("v=") && n != "_LATEST" && !n.startsWith("._LATEST")
         }
         .foreach(s => fs.delete(s.getPath, true))
-    pruneVersions(spark, root, keepVersions)
+    pruneVersions(spark, root)
   }
 
   // ---- IvfPqModel (ANN build artifact) ----
@@ -480,7 +478,8 @@ object Artifacts {
     * way the interleaving cannot delete a complete live version
     * (property-driven in DedupSimilaritySpec via the injection seam).
     */
-  def pruneVersions(spark: SparkSession, root: String, keep: Int = 2): Unit =
+  def pruneVersions(spark: SparkSession, root: String,
+      keep: Int = KeepVersions): Unit =
     pruneVersionsImpl(spark, root, keep, () => ())
 
   /** [[pruneVersions]] with a test seam: `betweenListAndPointerRead` runs
@@ -711,13 +710,12 @@ object Artifacts {
     * restart); absent or torn roots build from `ratings` and publish.
     */
   def loadOrBuildItemIndex(spark: SparkSession, root: String,
-      ratings: => DataFrame, cap: Int = 30, topK: Int = 5,
-      minSupport: Long = 2L): (DataFrame, DataFrame) = {
+      ratings: => DataFrame): (DataFrame, DataFrame) = {
     if (latestVersion(spark, root).isEmpty) {
       val r = ratings
       saveItemIndex(spark, root,
-        Recommend.itemNeighbors(r, cap, topK, minSupport),
-        Recommend.cappedInteractions(r, cap))
+        Recommend.itemNeighbors(r, 30, 5, 2L),
+        Recommend.cappedInteractions(r, 30))
     }
     loadItemIndex(spark, root)
   }

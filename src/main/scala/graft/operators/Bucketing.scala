@@ -34,8 +34,7 @@ object Bucketing {
     * is dropped and rebuilt.
     */
   def ensureBucketedTable(s: SparkSession, df: => DataFrame, table: String,
-                          path: String, key: String,
-                          buckets: Int = 8): String = {
+      path: String, key: String): String = {
     if (s.catalog.tableExists(table)) {
       // resolve through the PUBLIC catalog API first: tableExists is
       // true for temp views too, and getTableMetadata on an unqualified
@@ -72,7 +71,7 @@ object Bucketing {
     }
     if (!s.catalog.tableExists(table)) {
       df.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, key).sortBy(key)
+        .bucketBy(8, key).sortBy(key)
         .option("path", path).saveAsTable(table)
     }
     table

@@ -47,9 +47,9 @@ object Dedup {
     * ARBITRARY row — unacceptable for a reproducible pipeline, so min-id
     * it is.)
     */
-  def exactDedup(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
+  def exactDedup(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("content_hash"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Incremental exact dedup — the corpus-MAINTENANCE form: a new ingest
     * batch dedups against (a) itself (min-id winner per content hash, as
@@ -63,15 +63,14 @@ object Dedup {
     * Near-dup incrementality composes the same way with a persisted
     * minhash band-bucket index in place of the hash column.
     */
-  def incrementalDedup(newDocs: DataFrame, knownHashes: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    exactDedup(newDocs, textCol, idCol)
+  def incrementalDedup(newDocs: DataFrame, knownHashes: DataFrame): DataFrame =
+    exactDedup(newDocs)
       .join(knownHashes.select(col("content_hash")), Seq("content_hash"), "left_anti")
 
   /** Persistable MinHash index of a corpus, as TWO relations — the shape
     * that survives 100 TB:
     *  - `buckets(band, bucket, id)`: ids-only rows (×bands per doc),
-    *    capped at `maxBucket` ids per (band, bucket) (same hot-bucket
+    *    capped at [[MaxBucket]] ids per (band, bucket) (same hot-bucket
     *    bound as [[bucketPairs]]: an adversarial bucket must not make
     *    every future batch pay O(bucket) candidates);
     *  - `content(id, sh)`: ONE shingle set per doc.
@@ -83,16 +82,28 @@ object Dedup {
     */
   final case class MinhashIndex(buckets: DataFrame, content: DataFrame)
 
-  def minhashIndex(corpus: DataFrame, nShingle: Int = 3, bands: Int = 8,
-      rowsPerBand: Int = 4, maxBucket: Int = 256,
-      textCol: String = "text", idCol: String = "doc_id"): MinhashIndex = {
+  /** The hot-bucket bound: ids kept per (band, bucket) by the persisted
+    * indexes and by the in-memory pair expansion ([[bucketPairs]]).
+    */
+  final val MaxBucket = 256
+
+  /** The persisted [[MinhashIndex]]'s banding: shingle size, bands and
+    * rows per band. A batch collides with the index only when it is
+    * banded the same way, so every index build, append and probe reads
+    * this one shape.
+    */
+  final val IndexShingle = 3
+  final val IndexBands = 8
+  final val IndexRowsPerBand = 4
+
+  def minhashIndex(corpus: DataFrame): MinhashIndex = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket")).orderBy(col("id"))
-    val buckets = minhashBuckets(corpus, nShingle, bands, rowsPerBand, textCol, idCol)
+    val buckets = minhashBuckets(corpus, IndexShingle, IndexBands, IndexRowsPerBand)
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucket).drop("__rn")
+      .filter(col("__rn") <= MaxBucket).drop("__rn")
     val content = corpus
-      .select(col(idCol).as("id"), shingles(col(textCol), nShingle).as("sh"))
+      .select(col("doc_id").as("id"), shingles(col("text"), IndexShingle).as("sh"))
       .groupBy(col("id")).agg(first(col("sh")).as("sh"))
     MinhashIndex(buckets, content)
   }
@@ -109,14 +120,12 @@ object Dedup {
     * — asserted in DedupSimilaritySpec.
     */
   def incrementalNearDup(newDocs: DataFrame, index: MinhashIndex,
-      threshold: Double, nShingle: Int = 3, bands: Int = 8,
-      rowsPerBand: Int = 4, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      threshold: Double): DataFrame = {
     val batchBuckets =
-      minhashBuckets(newDocs, nShingle, bands, rowsPerBand, textCol, idCol)
+      minhashBuckets(newDocs, IndexShingle, IndexBands, IndexRowsPerBand)
         .select(col("band"), col("bucket"), col("id").as("new_id"))
     val batchContent = newDocs
-      .select(col(idCol).as("new_id"), shingles(col(textCol), nShingle).as("sh_n"))
+      .select(col("doc_id").as("new_id"), shingles(col("text"), IndexShingle).as("sh_n"))
       .groupBy(col("new_id")).agg(first(col("sh_n")).as("sh_n"))
     val cands = batchBuckets
       .join(index.buckets.select(col("band"), col("bucket"),
@@ -136,11 +145,10 @@ object Dedup {
     * (q_minhash_bucket_health), not just a stand-in.
     */
   def minhashBuckets(
-      docs: DataFrame, nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol).as("id"),
+      docs: DataFrame, nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
+    docs.select(col("doc_id").as("id"),
       posexplode(TextHashFunctions.minhash_band_buckets(
-        shingles(col(textCol), nShingle), bands, rowsPerBand))
+        shingles(col("text"), nShingle), bands, rowsPerBand))
         .as(Seq("band", "bucket")))
 
   /** MinHash LSH candidate pairs: docs whose signatures collide in ≥1 band,
@@ -148,14 +156,13 @@ object Dedup {
     * thresholding. `bands × rowsPerBand = k` hash functions.
     */
   def minhashCandidates(
-      docs: DataFrame, nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      docs: DataFrame, nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     // band buckets via ONE fused expression (tokens touched once per hash
     // fn) — the composable transform/array_min pipeline re-evaluates the
     // tokenizer inside every lambda (see MinHashBandBuckets scaladoc;
     // observed 128 tokenizations/doc). Bucket rows carry bare ids only:
     // shingle arrays must not ride the ×bands replicated shuffle.
-    val banded = minhashBuckets(docs, nShingle, bands, rowsPerBand, textCol, idCol)
+    val banded = minhashBuckets(docs, nShingle, bands, rowsPerBand)
     val pairs = bucketPairs(banded)
     // aggregate barrier (id is unique, first() is a no-op): without it
     // CollapseProject inlines the shingles() expression ABOVE the pair
@@ -163,7 +170,7 @@ object Dedup {
     // (observed 3× bench regression). The barrier pins one computation
     // per doc; the arrays then shuffle once on id — the intended shape.
     val content = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), nShingle).as("sh"))
+      .select(col("doc_id").as("id"), shingles(col("text"), nShingle).as("sh"))
       .groupBy(col("id")).agg(first(col("sh")).as("sh"))
     pairs
       .join(content.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
@@ -212,7 +219,7 @@ object Dedup {
     *                  (default 256 → ≤ 32,640 expanded pairs per bucket
     *                  plus one star pair per overflow id)
     */
-  def bucketPairs(buckets: DataFrame, maxBucket: Int = 256): DataFrame =
+  def bucketPairs(buckets: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
     cappedKeyedPairs(buckets, Seq("band", "bucket"), "id", maxBucket,
       "id_a", "id_b")
       .select(col("id_a"), col("id_b"))
@@ -292,8 +299,8 @@ object Dedup {
     * dup queries, the persisted index, and the specs so the banding
     * can't drift.
     */
-  def bandHashBuckets(hashes: DataFrame, idCol: String = "media_id"): DataFrame =
-    hashes.select(col(idCol).as("id"),
+  def bandHashBuckets(hashes: DataFrame): DataFrame =
+    hashes.select(col("media_id").as("id"),
       explode(array((0 to 3).map(t =>
         struct(lit(t.toLong).as("band"), col(s"b$t").as("bucket"))): _*))
         .as("e"))
@@ -302,7 +309,7 @@ object Dedup {
 
   /** Persistable banded-hash index of a media corpus — the
     * [[MinhashIndex]] pattern for perceptual hashes, TWO relations:
-    *  - `buckets(band, bucket, id)`: ids-only, capped at `maxBucket`
+    *  - `buckets(band, bucket, id)`: ids-only, capped at [[MaxBucket]]
     *    ids per (band, bucket) (hot-bucket bound — an adversarial
     *    bucket must not make every future batch pay O(bucket));
     *  - `hashes(id, b0..b3)`: one hash row per media item, for the
@@ -321,14 +328,13 @@ object Dedup {
     */
   final case class BandHashIndex(buckets: DataFrame, hashes: DataFrame)
 
-  def bandHashIndex(hashes: DataFrame, maxBucket: Int = 256,
-      idCol: String = "media_id"): BandHashIndex = {
+  def bandHashIndex(hashes: DataFrame): BandHashIndex = {
     val w = Window.partitionBy(col("band"), col("bucket")).orderBy(col("id"))
-    val buckets = bandHashBuckets(hashes, idCol)
+    val buckets = bandHashBuckets(hashes)
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucket).drop("__rn")
+      .filter(col("__rn") <= MaxBucket).drop("__rn")
     BandHashIndex(buckets,
-      hashes.select(col(idCol).as("id"), col("b0"), col("b1"), col("b2"),
+      hashes.select(col("media_id").as("id"), col("b0"), col("b1"), col("b2"),
         col("b3")))
   }
 
@@ -339,28 +345,27 @@ object Dedup {
     * with IDS ONLY riding the replicated join, candidates dedupe to
     * (new_id, corpus_id), and the exact hamming verify fetches each
     * side's 4 bands by id — corpus hashes shuffle only for MATCHED ids.
-    * Returns pairs at hamming ≤ `maxHamming` (lossless for ≤ 3 under
+    * Returns pairs at hamming ≤ 3 (lossless under
     * the 4-band split). Same banding ⇒ same collisions as a full-corpus
     * run restricted to (new × corpus) — asserted in RecommendSpec.
     */
-  def incrementalBandedDedup(newHashes: DataFrame, index: BandHashIndex,
-      maxHamming: Int = 3, idCol: String = "media_id"): DataFrame = {
+  def incrementalBandedDedup(newHashes: DataFrame, index: BandHashIndex): DataFrame = {
     val hx = (t: Int) => graft.functions.TextHashFunctions
       .hamming64(col(s"a$t"), col(s"z$t")).cast("long")
-    val cands = bandHashBuckets(newHashes, idCol)
+    val cands = bandHashBuckets(newHashes)
       .select(col("band"), col("bucket"), col("id").as("new_id"))
       .join(index.buckets.select(col("band"), col("bucket"),
         col("id").as("corpus_id")), Seq("band", "bucket"))
       .select(col("new_id"), col("corpus_id")).distinct()
     cands
-      .join(newHashes.select(col(idCol).as("new_id"), col("b0").as("a0"),
+      .join(newHashes.select(col("media_id").as("new_id"), col("b0").as("a0"),
         col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")),
         Seq("new_id"))
       .join(index.hashes.select(col("id").as("corpus_id"),
         col("b0").as("z0"), col("b1").as("z1"), col("b2").as("z2"),
         col("b3").as("z3")), Seq("corpus_id"))
       .withColumn("hamming", hx(0) + hx(1) + hx(2) + hx(3))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .select(col("new_id"), col("corpus_id"), col("hamming"))
   }
 
@@ -370,19 +375,18 @@ object Dedup {
     * q_image_phash_dups / q_audio_phash_dups pipeline as ONE shared
     * definition. Returns (a, b, hamming) with a < b.
     */
-  def bandedHashDups(hashes: DataFrame, maxHamming: Int = 3,
-      idCol: String = "media_id"): DataFrame = {
+  def bandedHashDups(hashes: DataFrame): DataFrame = {
     val hx = (t: Int) => graft.functions.TextHashFunctions
       .hamming64(col(s"a$t"), col(s"z$t")).cast("long")
-    bucketPairs(bandHashBuckets(hashes, idCol))
-      .join(hashes.select(col(idCol).as("id_a"), col("b0").as("a0"),
+    bucketPairs(bandHashBuckets(hashes))
+      .join(hashes.select(col("media_id").as("id_a"), col("b0").as("a0"),
         col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")),
         Seq("id_a"))
-      .join(hashes.select(col(idCol).as("id_b"), col("b0").as("z0"),
+      .join(hashes.select(col("media_id").as("id_b"), col("b0").as("z0"),
         col("b1").as("z1"), col("b2").as("z2"), col("b3").as("z3")),
         Seq("id_b"))
       .withColumn("hamming", hx(0) + hx(1) + hx(2) + hx(3))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .select(col("id_a").as("a"), col("id_b").as("b"), col("hamming"))
   }
 
@@ -392,7 +396,7 @@ object Dedup {
     * the same bucket relation (one count aggregate, trivially cheap next
     * to the pair join) and alert on `n_truncated > 0`.
     */
-  def bucketStats(buckets: DataFrame, maxBucket: Int = 256): DataFrame =
+  def bucketStats(buckets: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
     // note: `ids_dropped` counts ids beyond the cap — since the overflow
     // star-attach they are demoted (not lost), but they ARE excluded from
     // the quadratic expansion, so a nonzero value still means "retune"
@@ -484,10 +488,8 @@ object Dedup {
     * jaccard) with id_a < id_b; empty shingle sets drop out (a
     * token-less doc has J = 0 against everything).
     */
-  def prefixJaccardJoin(docs: DataFrame, tn: Int, td: Int,
-      nShingle: Int = 3, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    prefixJaccardJoinFromSets(shingleSets(docs, nShingle, textCol, idCol),
+  def prefixJaccardJoin(docs: DataFrame, tn: Int, td: Int, nShingle: Int = 3): DataFrame =
+    prefixJaccardJoinFromSets(shingleSets(docs, nShingle),
       tn, td)
 
   /** [[prefixJaccardJoin]] over a PRE-SHINGLED checkpointed relation —
@@ -544,17 +546,16 @@ object Dedup {
     * Losslessness needs both sides' prefixes under ONE total order,
     * which both forms satisfy.
     */
-  def prefixJaccardProbe(corpus: DataFrame, batch: DataFrame,
-      tn: Int, td: Int, nShingle: Int = 3, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def prefixJaccardProbe(corpus: DataFrame, batch: DataFrame, tn: Int, td: Int,
+      nShingle: Int = 3): DataFrame = {
     require(tn > 0 && td > 0 && tn <= td, s"threshold $tn/$td not in (0,1]")
     // the two shingle passes and (below) the two prefix builds are
     // INDEPENDENT eager checkpoints — run each pair overlapped from two
     // driver threads (guide §2.6, the q_lsh_recall pattern) instead of
     // serially; neither pipeline's own result depends on the other
     val Seq(cSets, bSets) = Guarded.pinAll(corpus.sparkSession)(Seq(
-      () => shingleSets(corpus, nShingle, textCol, idCol),
-      () => shingleSets(batch, nShingle, textCol, idCol)))
+      () => shingleSets(corpus, nShingle),
+      () => shingleSets(batch, nShingle)))
     val dfreq = cSets.select(explode(col("shs")).as("g"))
       .unionAll(bSets.select(explode(col("shs")).as("g")))
       .groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
@@ -589,9 +590,8 @@ object Dedup {
     * the query layer so multi-operator audits (q_lsh_recall) can share
     * ONE pass across the LSH and exact pipelines.
     */
-  private[graft] def shingleSets(docs: DataFrame, nShingle: Int,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = docs
-    .select(col(idCol).as("id"), shingles(col(textCol), nShingle).as("shs"))
+  private[graft] def shingleSets(docs: DataFrame, nShingle: Int): DataFrame = docs
+    .select(col("doc_id").as("id"), shingles(col("text"), nShingle).as("shs"))
     .filter(size(col("shs")) > 0)
     .withColumn("sz", size(col("shs")).cast("long"))
     .localCheckpoint(true)
@@ -660,10 +660,9 @@ object Dedup {
     * contained doc. Empty shingle sets drop out.
     */
   def prefixContainmentJoin(docs: DataFrame, tn: Int, td: Int,
-      nShingle: Int = 3, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      nShingle: Int = 3): DataFrame = {
     require(tn > 0 && td > 0 && tn <= td, s"threshold $tn/$td not in (0,1]")
-    val sets = shingleSets(docs, nShingle, textCol, idCol)
+    val sets = shingleSets(docs, nShingle)
     val dfreq = sets.select(explode(col("shs")).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
     val wDoc = Window.partitionBy(col("id")).orderBy(col("dfreq"), col("g"))
@@ -741,9 +740,8 @@ object Dedup {
     * pattern).
     */
   def prefixJaccardFunnel(docs: DataFrame, tn: Int, td: Int,
-      nShingle: Int = 3, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val sets = shingleSets(docs, nShingle, textCol, idCol)
+      nShingle: Int = 3): DataFrame = {
+    val sets = shingleSets(docs, nShingle)
     val nDocs = sets.agg(count(lit(1)).as("n_docs"))
     val hist = sets.groupBy(col("sz")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // self-joined below
@@ -798,8 +796,8 @@ object Dedup {
 
   /** Corpus-vs-corpus shared-substring spans (the "Deduplicating
     * Training Data" exact-substring direction): positional 5-grams,
-    * candidate doc pairs blocked on RARE grams (corpus dfreq ≤
-    * `dfreqCap` — a span made entirely of boilerplate grams is the
+    * candidate doc pairs blocked on RARE grams (corpus dfreq ≤ 20 —
+    * a span made entirely of boilerplate grams is the
     * repetition family's business; the cap bounds per-gram fan-out at
     * cap·(cap−1)/2 pairs), then the longest common run per pair via
     * DIAGONAL islands: matches of pair (a,b) at positions (pa, pb) lie
@@ -807,12 +805,11 @@ object Dedup {
     * shared substring (pos − ROW_NUMBER islands, windows keyed by
     * (pair, diagonal) so parallelism grows with pairs). Returns
     * (a, b, max_run, n_matched, span_tokens) for pairs with
-    * max_run ≥ `minRun`, unordered/unlimited — callers rank and cut.
+    * max_run ≥ 3, unordered/unlimited — callers rank and cut.
     */
-  def crossDocSpans(docs: DataFrame, dfreqCap: Int = 20, minRun: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def crossDocSpans(docs: DataFrame): DataFrame = {
     val toks5 = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
       .groupBy(col("doc_id")).agg(first(col("tk")).as("tk")) // HOF barrier
       .filter(size(col("tk")) >= 5)
     val posGrams = toks5.select(col("doc_id"),
@@ -821,7 +818,7 @@ object Dedup {
         .as(Seq("pos", "g")))
       .localCheckpoint(true) // dfreq + both sides of the pair join
     val rare = posGrams.groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") <= dfreqCap).select(col("g"))
+      .filter(col("dfreq") <= 20).select(col("g"))
     val occ = posGrams.join(rare, Seq("g"))
     val pr = occ.select(col("g"), col("doc_id").as("a"), col("pos").as("pa"))
       .join(occ.select(col("g"), col("doc_id").as("b"), col("pos").as("pb")),
@@ -836,14 +833,14 @@ object Dedup {
       .agg(count(lit(1)).as("run"))
       .groupBy(col("a"), col("b"))
       .agg(max(col("run")).as("max_run"), sum(col("run")).as("n_matched"))
-      .filter(col("max_run") >= minRun)
+      .filter(col("max_run") >= 3)
       .select(col("a"), col("b"), col("max_run"), col("n_matched"),
         (col("max_run") + 4).as("span_tokens"))
   }
 
   /** Corpus-vs-corpus span dedup (VERDICT r14 Next #7b): [[crossDocSpans]]
     * generalized from doc pairs to SOURCE pairs — per unordered source
-    * pair, how many doc pairs share a verbatim ≥`minRun`-diagonal 5-gram
+    * pair, how many doc pairs share a verbatim ≥3-diagonal 5-gram
     * span, the total matched-gram mass, and the longest run. This is the
     * cross-source twin of the contamination-span report: at corpus scale
     * it answers "which two ingest feeds are syndicating each other's
@@ -851,14 +848,12 @@ object Dedup {
     * report already computes (one extra broadcast-sized doc→source join
     * + a |sources|²-bounded aggregate — no new heavy shuffle).
     */
-  def sourceSpanOverlap(docs: DataFrame, dfreqCap: Int = 20,
-      minRun: Int = 3, textCol: String = "text", idCol: String = "doc_id",
-      srcCol: String = "source"): DataFrame = {
-    val pairSpans = crossDocSpans(docs, dfreqCap, minRun, textCol, idCol)
-    val src = docs.select(col(idCol), col(srcCol))
+  def sourceSpanOverlap(docs: DataFrame): DataFrame = {
+    val pairSpans = crossDocSpans(docs)
+    val src = docs.select(col("doc_id"), col("source"))
     pairSpans
-      .join(src.select(col(idCol).as("a"), col(srcCol).as("sa")), Seq("a"))
-      .join(src.select(col(idCol).as("b"), col(srcCol).as("sb")), Seq("b"))
+      .join(src.select(col("doc_id").as("a"), col("source").as("sa")), Seq("a"))
+      .join(src.select(col("doc_id").as("b"), col("source").as("sb")), Seq("b"))
       .select(least(col("sa"), col("sb")).as("source_a"),
         greatest(col("sa"), col("sb")).as("source_b"),
         col("max_run"), col("n_matched"))
@@ -873,10 +868,9 @@ object Dedup {
     * distance ≤ 3 are guaranteed to collide in ≥1 band by pigeonhole),
     * then exact Hamming verification.
     */
-  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sig = docs.select(col(idCol).as("id"),
-      TextHashFunctions.simhash64(tokens(col(textCol))).as("sig"))
+  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sig = docs.select(col("doc_id").as("id"),
+      TextHashFunctions.simhash64(tokens(col("text"))).as("sig"))
     val bandBits = 16
     val banded = sig.select(col("id"),
       posexplode(array((0 until 4).map(bnd =>
@@ -892,17 +886,16 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs via the Similarity LSH machinery. */
   def cosineNearDups(embeddings: DataFrame, threshold: Double = 0.95,
-      bands: Int = 8, bandBits: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      bands: Int = 8, bandBits: Int = 8): DataFrame = {
     // same id-only bucket shape as minhashCandidates: vectors join back
     // after pair dedup, never through the ×bands shuffle
-    val buckets = Similarity.lshBuckets(embeddings, bands, bandBits, 42, idCol, vecCol)
-      .select(col("band"), col("bucket"), col(idCol).as("id"))
+    val buckets = Similarity.lshBuckets(embeddings, bands, bandBits)
+      .select(col("band"), col("bucket"), col("vec_id").as("id"))
     val pairs = bucketPairs(buckets)
-    val vecs = embeddings.select(col(idCol), col(vecCol))
+    val vecs = embeddings.select(col("vec_id"), col("embedding"))
     pairs
-      .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("va")), Seq("id_a"))
-      .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("vb")), Seq("id_b"))
+      .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
+      .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
       .withColumn("cos", cosine_similarity(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
@@ -912,7 +905,7 @@ object Dedup {
     * corpus runs when whole-doc dedup is too coarse — boilerplate,
     * repeated headers, syndicated spans) as a per-document report in ONE
     * tokenization pass: each document's token stream splits into fixed
-    * `k`-token passages, and only each passage's FIRST corpus-wide
+    * 20-token passages, and only each passage's FIRST corpus-wide
     * occurrence (ordered by (doc_id, idx) — deterministic) survives.
     * Returns (doc_id, n_chunks, n_kept, dedup_hash) where `n_chunks`
     * counts all of the doc's passages, `n_kept` the first occurrences
@@ -936,20 +929,19 @@ object Dedup {
     * passages were ALL deduplicated away still get a row (n_kept=0,
     * hash of empty text) — no left join needed.
     */
-  def passageDedupReport(docs: DataFrame, k: Int = 20,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def passageDedupReport(docs: DataFrame): DataFrame = {
     val toksDf = docs
-      .select(col(idCol), tokens(col(textCol)).as("toks"))
-      .groupBy(col(idCol)).agg(first(col("toks")).as("toks")) // HOF barrier
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .groupBy(col("doc_id")).agg(first(col("toks")).as("toks")) // HOF barrier
       .filter(size(col("toks")) > 0)
-    val chunks = toksDf.select(col(idCol),
+    val chunks = toksDf.select(col("doc_id"),
       posexplode(transform(
-        sequence(lit(0), ceil(size(col("toks")) / lit(k.toDouble)).cast("int") - 1),
-        i => array_join(slice(col("toks"), i * k + 1, lit(k)), " ")))
+        sequence(lit(0), ceil(size(col("toks")) / lit(20.0)).cast("int") - 1),
+        i => array_join(slice(col("toks"), i * 20 + 1, lit(20)), " ")))
         .as(Seq("idx", "para")))
-    val w = Window.partitionBy(md5(col("para"))).orderBy(col(idCol), col("idx"))
+    val w = Window.partitionBy(md5(col("para"))).orderBy(col("doc_id"), col("idx"))
     chunks.withColumn("__rn", row_number().over(w))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_chunks"),
         count(when(col("__rn") === 1, 1)).as("n_kept"),
@@ -965,9 +957,9 @@ object Dedup {
     * single-pass path; over-keeps on CHAINS A~B~C where A≁C directly —
     * use [[dedupKeepSetClosure]] when transitive duplicates matter).
     */
-  def dedupKeepSet(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val demoted = pairs.select(col("id_b").as(idCol)).distinct()
-    docs.select(col(idCol)).join(demoted, Seq(idCol), "left_anti")
+  def dedupKeepSet(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val demoted = pairs.select(col("id_b").as("doc_id")).distinct()
+    docs.select(col("doc_id")).join(demoted, Seq("doc_id"), "left_anti")
   }
 
   /** Connected components of the near-dup pair graph: (id, comp) where
@@ -980,7 +972,7 @@ object Dedup {
     * (`comp(comp(v))`). Plain neighbor propagation needs O(diameter)
     * rounds — a 1000-doc chain would need 1000 shuffles; the jump halves
     * the remaining depth each round, so convergence is O(log diameter)
-    * and `maxIter = 20` covers components of astronomical diameter.
+    * and the 20-round cap covers components of astronomical diameter.
     * Each round is two equi-joins + one aggregate over the (id, comp)
     * relation. Iteration hygiene for real depth:
     *  - the (static) edge relation is hash-partitioned ONCE on the
@@ -988,7 +980,7 @@ object Dedup {
     *    round's `edges ⋈ labels` reads that layout instead of
     *    re-shuffling the edges (the r3 form re-exchanged them per round);
     *  - per-round results are persisted and the previous round
-    *    unpersisted; every `checkpointEvery` rounds the round result is
+    *    unpersisted; every 5th round's result is
     *    `localCheckpoint`ed instead, truncating the join-chain lineage a
     *    failure would otherwise have to recompute from round 0;
     *  - the RESULT is materialized (localCheckpoint) before the loop's
@@ -996,8 +988,7 @@ object Dedup {
     *    lifetime cache entries (the r3 form leaked the last round's
     *    persist per call).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      checkpointEvery: Int = 5, localThreshold: Long = 200000L): DataFrame = {
+  def connectedComponents(pairs: DataFrame, localThreshold: Long = 200000L): DataFrame = {
     // SMALL-GRAPH FAST PATH, dispatched via the shared [[Guarded.iterate]]
     // (eager checkpoint BEFORE the guard count — see its scaladoc for why
     // that ordering is load-bearing; here the checkpoint additionally
@@ -1050,12 +1041,11 @@ object Dedup {
             java.lang.Long.compare).toDF("id", "comp")
           .select(col("id").cast(idT).as("id"), col("comp").cast(idT).as("comp"))
     } { (p, _) =>
-      distributedCC(p, maxIter, checkpointEvery)
+      distributedCC(p)
     }
   }
 
-  private def distributedCC(p: DataFrame, maxIter: Int,
-      checkpointEvery: Int): DataFrame = {
+  private def distributedCC(p: DataFrame): DataFrame = {
     val edges = p.select(col("id_a").as("id"), col("id_b").as("nbr"))
       .union(p.select(col("id_b").as("id"), col("id_a").as("nbr")))
       .repartition(col("nbr"))
@@ -1066,7 +1056,7 @@ object Dedup {
     var cached: Option[DataFrame] = Some(labels)
     var converged = false
     var i = 0
-    while (i < maxIter && !converged) {
+    while (i < 20 && !converged) {
       // (a) min over neighbors' current labels; the round's starting comp
       // rides along as `prev` so convergence detection below is a plain
       // filter on the SAME relation — one Spark action per round total,
@@ -1084,10 +1074,10 @@ object Dedup {
           Seq("comp"), "left")
         .select(col("id"), col("prev"),
           least(col("comp"), coalesce(col("cc"), col("comp"))).as("comp"))
-      // every `checkpointEvery`-th round: localCheckpoint (eager) instead
+      // every 5th round: localCheckpoint (eager) instead
       // of persist — same blocks-in-memory effect, but the lineage is cut
       // so a late-round recompute never replays the whole join chain
-      val ckpt = checkpointEvery > 0 && (i + 1) % checkpointEvery == 0
+      val ckpt = (i + 1) % 5 == 0
       val next = if (ckpt) nextPlan.localCheckpoint(true) else nextPlan.persist()
       val changed = next.filter(col("comp") < col("prev")).count()
       cached.foreach(_.unpersist())
@@ -1166,8 +1156,7 @@ object Dedup {
     * previous call of this); `newPairs` is (id_a, id_b). Output covers
     * every previously-labeled node plus every node of `newPairs`.
     */
-  def incrementalCC(labels: DataFrame, newPairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
+  def incrementalCC(labels: DataFrame, newPairs: DataFrame): DataFrame = {
     // checkpoint: `labels` feeds three plan branches below (two endpoint
     // contractions + the remap/anti) — bound any caller lineage to one
     // evaluation, the connectedComponents discipline
@@ -1181,7 +1170,7 @@ object Dedup {
       .select(coalesce(col("__ca"), col("id_a")).as("id_a"),
         coalesce(col("__cb"), col("id_b")).as("id_b"))
     // batch-sized closure: nodes are touched components + new ids only
-    val roots = connectedComponents(contracted, maxIter)
+    val roots = connectedComponents(contracted)
     // corpus-sized work ends here: one remap join on the OLD comp label
     // (roots' ids that are old labels re-point their whole component)...
     val remapped = l
@@ -1200,8 +1189,8 @@ object Dedup {
     * keeps {A} only if B happened to be listed as an `id_b`.
     */
   def dedupKeepSetClosure(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id", maxIter: Int = 20): DataFrame = {
-    val demoted = connectedComponents(pairs, maxIter)
+      idCol: String = "doc_id"): DataFrame = {
+    val demoted = connectedComponents(pairs)
       .filter(col("comp") =!= col("id"))
       .select(col("id").as(idCol))
     docs.select(col(idCol)).join(demoted, Seq(idCol), "left_anti")
@@ -1226,17 +1215,16 @@ object Dedup {
     * input is the capped [[bucketPairs]] output, so no component
     * exceeds what the banding admits).
     */
-  def dedupKeepSetBest(docs: DataFrame, pairs: DataFrame, score: Column,
-      idCol: String = "doc_id", maxIter: Int = 20): DataFrame = {
-    val cc = connectedComponents(pairs, maxIter)
-      .withColumnRenamed("id", idCol)
+  def dedupKeepSetBest(docs: DataFrame, pairs: DataFrame, score: Column): DataFrame = {
+    val cc = connectedComponents(pairs)
+      .withColumnRenamed("id", "doc_id")
     val w = Window.partitionBy(col("__comp"))
-      .orderBy(col("__s").desc, col(idCol))
-    docs.select(col(idCol), score.as("__s"))
-      .join(cc, Seq(idCol), "left")
-      .withColumn("__comp", coalesce(col("comp"), col(idCol)))
+      .orderBy(col("__s").desc, col("doc_id"))
+    docs.select(col("doc_id"), score.as("__s"))
+      .join(cc, Seq("doc_id"), "left")
+      .withColumn("__comp", coalesce(col("comp"), col("doc_id")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .select(col(idCol))
+      .select(col("doc_id"))
   }
 }

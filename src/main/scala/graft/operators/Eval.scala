@@ -26,10 +26,10 @@ object Eval {
     * Scale shape: broadcast the k-row rec list; a broadcast-hash left join
     * + avg — the label relation streams, nothing collects.
     */
-  def hitRatioGlobal(labelRows: DataFrame, topK: DataFrame, keyCol: String = "movieId"): DataFrame = {
-    val recs = broadcast(topK.select(col(keyCol)).withColumn("__hit", lit(1.0)))
-    labelRows.select(col(keyCol))
-      .join(recs, Seq(keyCol), "left")
+  def hitRatioGlobal(labelRows: DataFrame, topK: DataFrame): DataFrame = {
+    val recs = broadcast(topK.select(col("movieId")).withColumn("__hit", lit(1.0)))
+    labelRows.select(col("movieId"))
+      .join(recs, Seq("movieId"), "left")
       .agg(round(avg(coalesce(col("__hit"), lit(0.0))), 6).as("hit_ratio"))
   }
 
@@ -39,14 +39,14 @@ object Eval {
     * `(1 + 1/(r+1)) / k`; labels not found contribute 0; the score is the
     * mean over labels. Replicated exactly (documented quirk, SURVEY §7.4).
     *
-    * Global form: one row. `rankedTopK` must carry (keyCol, rank) with
+    * Global form: one row. `rankedTopK` must carry (movieId, rank) with
     * rank 1-based; then contribution = (1 + 1/rank) / k.
     */
-  def referenceMapGlobal(labelRows: DataFrame, rankedTopK: DataFrame, k: Int,
-      keyCol: String = "movieId"): DataFrame = {
-    val recs = broadcast(rankedTopK.select(col(keyCol), col("rank")))
-    labelRows.select(col(keyCol))
-      .join(recs, Seq(keyCol), "left")
+  def referenceMapGlobal(labelRows: DataFrame, rankedTopK: DataFrame,
+      k: Int): DataFrame = {
+    val recs = broadcast(rankedTopK.select(col("movieId"), col("rank")))
+    labelRows.select(col("movieId"))
+      .join(recs, Seq("movieId"), "left")
       .select(coalesce((lit(1.0) + lit(1.0) / col("rank")) / lit(k.toDouble), lit(0.0)).as("c"))
       .agg(round(avg(col("c")), 6).as("map_ref"))
   }
@@ -55,14 +55,14 @@ object Eval {
     * grouped by user; AP_u = mean of per-label contributions; MAP = mean of
     * AP_u. One shuffle on userId; the rec list is broadcast.
     */
-  def referenceMapPerUser(labelRows: DataFrame, rankedTopK: DataFrame, k: Int,
-      userCol: String = "userId", keyCol: String = "movieId"): DataFrame = {
-    val recs = broadcast(rankedTopK.select(col(keyCol), col("rank")))
-    labelRows.select(col(userCol), col(keyCol))
-      .join(recs, Seq(keyCol), "left")
-      .select(col(userCol),
+  def referenceMapPerUser(labelRows: DataFrame, rankedTopK: DataFrame,
+      k: Int): DataFrame = {
+    val recs = broadcast(rankedTopK.select(col("movieId"), col("rank")))
+    labelRows.select(col("userId"), col("movieId"))
+      .join(recs, Seq("movieId"), "left")
+      .select(col("userId"),
         coalesce((lit(1.0) + lit(1.0) / col("rank")) / lit(k.toDouble), lit(0.0)).as("c"))
-      .groupBy(col(userCol)).agg(avg(col("c")).as("ap"))
+      .groupBy(col("userId")).agg(avg(col("c")).as("ap"))
       .agg(round(avg(col("ap")), 6).as("map_ref_user"))
   }
 
@@ -70,23 +70,22 @@ object Eval {
     * to the quirky one, SURVEY §2.8 U2 note + M7): per user, hits in rank
     * order contribute precision-at-that-rank; AP = sum / min(k, |labels|).
     *
-    * Input: per-user ranked recommendations (userCol, keyCol, rank 1-based)
+    * Input: per-user ranked recommendations (userId, movieId, rank 1-based)
     * and per-user label rows. Join on (user, item) keeps only hits; a
     * window over rank numbers them. Shuffles: one on (user,item) for the
     * join, one on user for the window+agg — both on high-cardinality keys.
     */
-  def standardMapAtK(labelRows: DataFrame, userRecs: DataFrame, k: Int,
-      userCol: String = "userId", keyCol: String = "movieId"): DataFrame = {
-    val labels = labelRows.select(col(userCol), col(keyCol)).distinct()
-    val nLabels = labels.groupBy(col(userCol)).agg(count(lit(1)).as("n_labels"))
-    val hits = userRecs.join(labels, Seq(userCol, keyCol), "left_semi")
-    val w = Window.partitionBy(col(userCol)).orderBy(col("rank"))
+  def standardMapAtK(labelRows: DataFrame, userRecs: DataFrame, k: Int): DataFrame = {
+    val labels = labelRows.select(col("userId"), col("movieId")).distinct()
+    val nLabels = labels.groupBy(col("userId")).agg(count(lit(1)).as("n_labels"))
+    val hits = userRecs.join(labels, Seq("userId", "movieId"), "left_semi")
+    val w = Window.partitionBy(col("userId")).orderBy(col("rank"))
     val perUser = hits
       .withColumn("i", row_number().over(w))
-      .select(col(userCol), (col("i").cast("double") / col("rank")).as("prec"))
-      .groupBy(col(userCol)).agg(sum(col("prec")).as("sum_prec"))
-    nLabels.join(perUser, Seq(userCol), "left")
-      .select(col(userCol),
+      .select(col("userId"), (col("i").cast("double") / col("rank")).as("prec"))
+      .groupBy(col("userId")).agg(sum(col("prec")).as("sum_prec"))
+    nLabels.join(perUser, Seq("userId"), "left")
+      .select(col("userId"),
         (coalesce(col("sum_prec"), lit(0.0)) /
           least(col("n_labels"), lit(k)).cast("double")).as("ap"))
       .agg(round(avg(col("ap")), 6).as("map_at_k"))
@@ -103,14 +102,14 @@ object Eval {
     * Shuffles: one (user,item) join for hits, one user agg — both on
     * high-cardinality keys; nothing collects.
     */
-  def precisionAtKPerUser(labelRows: DataFrame, userRecs: DataFrame, k: Int,
-      userCol: String = "userId", keyCol: String = "movieId"): DataFrame = {
-    val labels = labelRows.select(col(userCol), col(keyCol)).distinct()
-    val labelUsers = labels.select(col(userCol)).distinct()
+  def precisionAtKPerUser(labelRows: DataFrame, userRecs: DataFrame,
+      k: Int): DataFrame = {
+    val labels = labelRows.select(col("userId"), col("movieId")).distinct()
+    val labelUsers = labels.select(col("userId")).distinct()
     val hits = userRecs.filter(col("rank") <= k)
-      .join(labels, Seq(userCol, keyCol), "left_semi")
-      .groupBy(col(userCol)).agg(count(lit(1)).as("n_hits"))
-    labelUsers.join(hits, Seq(userCol), "left")
+      .join(labels, Seq("userId", "movieId"), "left_semi")
+      .groupBy(col("userId")).agg(count(lit(1)).as("n_hits"))
+    labelUsers.join(hits, Seq("userId"), "left")
       .select((coalesce(col("n_hits"), lit(0L)).cast("double") / lit(k.toDouble)).as("p"))
       .agg(round(avg(col("p")), 6).as("precision_user"))
   }
@@ -121,11 +120,10 @@ object Eval {
     * k-row list, semi-join PRUNES the label stream to ≤k distinct items
     * BEFORE the distinct — the dedup shuffle only ever sees hit rows.
     */
-  def precisionAtKGlobal(labelRows: DataFrame, topK: DataFrame, k: Int,
-      keyCol: String = "movieId"): DataFrame = {
-    val recs = broadcast(topK.filter(col("rank") <= k).select(col(keyCol)))
-    labelRows.select(col(keyCol))
-      .join(recs, Seq(keyCol), "left_semi")
+  def precisionAtKGlobal(labelRows: DataFrame, topK: DataFrame, k: Int): DataFrame = {
+    val recs = broadcast(topK.filter(col("rank") <= k).select(col("movieId")))
+    labelRows.select(col("movieId"))
+      .join(recs, Seq("movieId"), "left_semi")
       .distinct()
       .agg(round(count(lit(1)).cast("double") / lit(k.toDouble), 6)
         .as("precision_global"))
@@ -134,10 +132,9 @@ object Eval {
   /** M5: RMSE as a plain expression (no evaluator object needed;
     * reference `als.py:49,103`).
     */
-  def rmse(predictions: DataFrame, labelCol: String = "rating",
-      predCol: String = "prediction"): DataFrame =
+  def rmse(predictions: DataFrame): DataFrame =
     predictions.agg(
-      round(sqrt(avg(pow(col(predCol) - col(labelCol), 2.0))), 6).as("rmse"))
+      round(sqrt(avg(pow(col("prediction") - col("rating"), 2.0))), 6).as("rmse"))
 
   /** M7: the standard-MAP cross-check via
     * `org.apache.spark.mllib.evaluation.RankingMetrics` — the exact API the
@@ -147,19 +144,19 @@ object Eval {
     * Note: RDD-based (collects per-user arrays onto executors, not the
     * driver) — fine as a cross-check, the column form is the scale path.
     */
-  def rankingMetricsMapAtK(labelRows: DataFrame, userRecs: DataFrame, k: Int,
-      userCol: String = "userId", keyCol: String = "movieId"): DataFrame = {
+  def rankingMetricsMapAtK(labelRows: DataFrame, userRecs: DataFrame,
+      k: Int): DataFrame = {
     val spark = labelRows.sparkSession
     import spark.implicits._
     val recsByUser = userRecs
-      .groupBy(col(userCol))
-      .agg(sort_array(collect_list(struct(col("rank"), col(keyCol)))).as("rl"))
-      .select(col(userCol), col("rl").getField(keyCol).as("recs"))
-    val labelsByUser = labelRows.select(col(userCol), col(keyCol)).distinct()
-      .groupBy(col(userCol)).agg(collect_list(col(keyCol)).as("labels"))
+      .groupBy(col("userId"))
+      .agg(sort_array(collect_list(struct(col("rank"), col("movieId")))).as("rl"))
+      .select(col("userId"), col("rl").getField("movieId").as("recs"))
+    val labelsByUser = labelRows.select(col("userId"), col("movieId")).distinct()
+      .groupBy(col("userId")).agg(collect_list(col("movieId")).as("labels"))
     // right join: users with labels but NO recommendations still count
     // (AP 0), matching standardMapAtK's left-join-from-labels semantics
-    val pairs = recsByUser.join(labelsByUser, Seq(userCol), "right")
+    val pairs = recsByUser.join(labelsByUser, Seq("userId"), "right")
       .select(coalesce(col("recs"), array()).as("recs"), col("labels"))
       .as[(Seq[Long], Seq[Long])]
       .rdd.map { case (r, l) => (r.toArray, l.toArray) }
@@ -175,23 +172,23 @@ object Eval {
     * per user, each RECOMMENDED item is looked up in the user's LABEL
     * list position.
     */
-  def referenceMapPerUserSwapped(labelRows: DataFrame, rankedTopK: DataFrame, k: Int,
-      userCol: String = "userId", keyCol: String = "movieId"): DataFrame = {
+  def referenceMapPerUserSwapped(labelRows: DataFrame, rankedTopK: DataFrame,
+      k: Int): DataFrame = {
     // labels (per user) play the role of the ranked list: rank = position
-    // by ascending keyCol order is NOT the reference's order — the
+    // by ascending movieId order is NOT the reference's order — the
     // reference's list order is collect_list order, which is
     // nondeterministic; we fix it to sorted order and document the choice.
-    val w = Window.partitionBy(col(userCol)).orderBy(col(keyCol))
-    val labelRanked = labelRows.select(col(userCol), col(keyCol)).distinct()
+    val w = Window.partitionBy(col("userId")).orderBy(col("movieId"))
+    val labelRanked = labelRows.select(col("userId"), col("movieId")).distinct()
       .withColumn("lrank", row_number().over(w))
-    val nLabels = labelRanked.groupBy(col(userCol)).agg(count(lit(1)).as("n_labels"))
-    val recs = broadcast(rankedTopK.select(col(keyCol)))
-    val hits = recs.join(labelRanked, Seq(keyCol)) // recommended ∧ in labels
-      .select(col(userCol),
+    val nLabels = labelRanked.groupBy(col("userId")).agg(count(lit(1)).as("n_labels"))
+    val recs = broadcast(rankedTopK.select(col("movieId")))
+    val hits = recs.join(labelRanked, Seq("movieId")) // recommended ∧ in labels
+      .select(col("userId"),
         (lit(1.0) + lit(1.0) / col("lrank")).as("raw"))
-      .groupBy(col(userCol)).agg(sum(col("raw")).as("sum_raw"))
+      .groupBy(col("userId")).agg(sum(col("raw")).as("sum_raw"))
     // AP_u = (Σ_hits (1 + 1/lrank) / n_labels) / k; users w/o hits → 0
-    nLabels.join(hits, Seq(userCol), "left")
+    nLabels.join(hits, Seq("userId"), "left")
       .select((coalesce(col("sum_raw"), lit(0.0)) / col("n_labels") / lit(k.toDouble)).as("ap"))
       .agg(round(avg(col("ap")), 6).as("map_ref_swapped"))
   }

@@ -30,7 +30,7 @@ object Graph {
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** PageRank with `iterations` fixed power-iteration rounds at the
-    * given damping and UNIFORM teleport. `edges` must be `(src, dst)`;
+    * damping 0.85 and UNIFORM teleport. `edges` must be `(src, dst)`;
     * every node that should receive teleport mass must appear as a
     * `src` at least once (a symmetric edge set satisfies this trivially
     * and has no dangling nodes — callers with genuinely directed graphs
@@ -51,10 +51,8 @@ object Graph {
     * same graphs.
     */
   def pageRank(edges: DataFrame, iterations: Int = 5,
-               damping: Double = 0.85,
-               maxBroadcastNodes: Long = 1000000L,
-               localThreshold: Long = 2000000L): DataFrame =
-    run(edges, None, iterations, damping, maxBroadcastNodes, localThreshold)
+      maxBroadcastNodes: Long = 1000000L, localThreshold: Long = 2000000L): DataFrame =
+    run(edges, None, iterations, maxBroadcastNodes, localThreshold)
 
   /** Personalized PageRank: teleport mass ∝ `seeds` `(node, w)` weights
     * instead of uniform — the graph-based related-entities recommender
@@ -68,15 +66,18 @@ object Graph {
     * rounding contract as [[pageRank]].
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iterations: Int = 5, damping: Double = 0.85,
-                           maxBroadcastNodes: Long = 1000000L,
-                           localThreshold: Long = 2000000L): DataFrame =
+      iterations: Int = 5, maxBroadcastNodes: Long = 1000000L,
+      localThreshold: Long = 2000000L): DataFrame =
     run(edges, Some(seeds.select(col("node"), col("w").cast("double"))),
-      iterations, damping, maxBroadcastNodes, localThreshold)
+      iterations, maxBroadcastNodes, localThreshold)
 
-  private def run(edges: DataFrame, seeds: Option[DataFrame],
-                  iterations: Int, damping: Double,
-                  maxBroadcastNodes: Long, localThreshold: Long): DataFrame = {
+  /** PageRank's damping factor, the reference value both the local and
+    * the distributed recurrence use.
+    */
+  private final val Damping = 0.85
+
+  private def run(edges: DataFrame, seeds: Option[DataFrame], iterations: Int,
+      maxBroadcastNodes: Long, localThreshold: Long): DataFrame = {
     // Duplicate (node, w) seed rows would silently break the distributed
     // path's one-row-per-node rank relation (the left join would emit
     // duplicate tele rows) while the local path sums them — aggregate
@@ -91,15 +92,14 @@ object Graph {
     Guarded.iterate(edges.select(col("src"), col("dst")), localThreshold) {
       (e, m) =>
         require(m > 0, "pageRank over an empty edge set")
-        localRun(e, aggSeeds, iterations, damping)
+        localRun(e, aggSeeds, iterations)
     } { (e, m) =>
-      distributedRun(e, m, aggSeeds, iterations, damping, maxBroadcastNodes)
+      distributedRun(e, m, aggSeeds, iterations, maxBroadcastNodes)
     }
   }
 
   private def distributedRun(e: DataFrame, m: Long, seeds: Option[DataFrame],
-                             iterations: Int, damping: Double,
-                             maxBroadcastNodes: Long): DataFrame = {
+      iterations: Int, maxBroadcastNodes: Long): DataFrame = {
     // guard here too: a forced-distributed call (negative threshold)
     // on an empty edge set must fail with the message, not silently
     // build a 1/0 teleport over zero nodes
@@ -144,8 +144,8 @@ object Graph {
         .agg(sum(col("contrib")).as("in_sum"))
       ranks = tele.join(inSum, Seq("node"), "left")
         .select(col("node"),
-          (lit(1.0 - damping) * col("p") +
-            lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
+          (lit(1.0 - Damping) * col("p") +
+            lit(Damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
     }
     ranks
   }
@@ -796,7 +796,7 @@ object Graph {
     * result is a pure function of the collected edge list.
     */
   private def localRun(e: DataFrame, seeds: Option[DataFrame],
-                       iterations: Int, damping: Double): DataFrame = {
+      iterations: Int): DataFrame = {
     val edges = new LocalEdges(e, 2)
     val ix = new NodeIndex(edges)
     val m = edges.m
@@ -831,7 +831,7 @@ object Graph {
         if (t >= 0) acc(t) += rank(srcIx(j)) / outDeg(srcIx(j))
         j += 1
       }
-      rank = Array.tabulate(n)(k => (1.0 - damping) * p(k) + damping * acc(k))
+      rank = Array.tabulate(n)(k => (1.0 - Damping) * p(k) + Damping * acc(k))
     }
     localFrame(e.sparkSession, StructType(Seq(
         e.schema.fields(0).copy(name = "node"),

@@ -969,8 +969,8 @@ object Multimodal {
   }
 
   /** Resize stage (metadata-real, pixel-stub): map-only projection. */
-  def resize(media: DataFrame, maxSide: Int = 512): DataFrame = {
-    val scale = least(lit(maxSide) / greatest(col("width"), col("height")), lit(1.0))
+  def resize(media: DataFrame): DataFrame = {
+    val scale = least(lit(512) / greatest(col("width"), col("height")), lit(1.0))
     media
       .withColumn("resized_width", greatest(floor(col("width") * scale), lit(1)).cast("int"))
       .withColumn("resized_height", greatest(floor(col("height") * scale), lit(1)).cast("int"))

@@ -16,31 +16,29 @@ import org.apache.spark.sql.functions._
   */
 object Recommend {
 
-  /** Reference hyperparameters (`als.py:36-46`). */
+  /** Reference hyperparameters (`als.py:36-46`). The reference's other
+    * settings are fixed in [[estimator]]: non-negative factors, explicit
+    * ratings, cold-start rows dropped, and the (userId, movieId, rating)
+    * columns.
+    */
   case class AlsConfig(
       rank: Int = 100,
       maxIter: Int = 3,
       regParam: Double = 0.15,
-      nonnegative: Boolean = true,
-      implicitPrefs: Boolean = false,
-      coldStartStrategy: String = "drop",
-      seed: Long = 1234L,
-      userCol: String = "userId",
-      itemCol: String = "movieId",
-      ratingCol: String = "rating")
+      seed: Long = 1234L)
 
   def estimator(cfg: AlsConfig = AlsConfig()): ALS =
     new ALS()
       .setRank(cfg.rank)
       .setMaxIter(cfg.maxIter)
       .setRegParam(cfg.regParam)
-      .setNonnegative(cfg.nonnegative)
-      .setImplicitPrefs(cfg.implicitPrefs)
-      .setColdStartStrategy(cfg.coldStartStrategy)
+      .setNonnegative(true)
+      .setImplicitPrefs(false)
+      .setColdStartStrategy("drop")
       .setSeed(cfg.seed)
-      .setUserCol(cfg.userCol)
-      .setItemCol(cfg.itemCol)
-      .setRatingCol(cfg.ratingCol)
+      .setUserCol("userId")
+      .setItemCol("movieId")
+      .setRatingCol("rating")
 
   /** M2: fit (reference `als.py:87`). */
   def train(ratings: DataFrame, cfg: AlsConfig = AlsConfig()): ALSModel =

@@ -23,16 +23,15 @@ object Similarity {
 
   /** Exact top-k neighbors for each query vector.
     *
-    * @param corpus  (idCol, vecCol) relation — the big side, streamed
-    * @param queries (idCol, vecCol) relation — small, broadcast
+    * @param corpus  (vec_id, embedding) relation — the big side, streamed
+    * @param queries (vec_id, embedding) relation — small, broadcast
     */
   def bruteForceTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv")))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv")))
     val scored = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("__cv"))
       .crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", cosine_similarity(col("__qv"), col("__cv")))
@@ -51,13 +50,12 @@ object Similarity {
     * @param bandBits signature bits per band (more bits → higher precision)
     */
   def lshBuckets(
-      corpus: DataFrame, bands: Int = 8, bandBits: Int = 8, seed: Int = 42,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sig = rp_signature(col(vecCol), seed, bands * bandBits)
+      corpus: DataFrame, bands: Int = 8, bandBits: Int = 8): DataFrame = {
+    val sig = rp_signature(col("embedding"), 42, bands * bandBits)
     val mask = (1L << bandBits) - 1L
     corpus
-      .select(col(idCol), col(vecCol), sig.as("__sig"))
-      .select(col(idCol), col(vecCol),
+      .select(col("vec_id"), col("embedding"), sig.as("__sig"))
+      .select(col("vec_id"), col("embedding"),
         posexplode(array((0 until bands).map { b =>
           shiftright(col("__sig"), b * bandBits).bitwiseAND(lit(mask))
         }: _*)).as(Seq("band", "bucket")))
@@ -69,16 +67,15 @@ object Similarity {
     * rerank window shuffles candidates on query_id. No cross join anywhere.
     */
   def lshTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      bands: Int = 8, bandBits: Int = 8, seed: Int = 42,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      corpus: DataFrame, queries: DataFrame, k: Int, bands: Int = 8,
+      bandBits: Int = 8): DataFrame = {
     // id-only band join: corpus vectors must not ride the ×bands
     // replicated shuffle — they are joined back per deduplicated
     // candidate pair (the query side is small and broadcast anyway)
-    val cb = lshBuckets(corpus, bands, bandBits, seed, idCol, vecCol)
-      .select(col("band"), col("bucket"), col(idCol).as("neighbor_id"))
-    val qb = lshBuckets(queries, bands, bandBits, seed, idCol, vecCol)
-      .select(col("band"), col("bucket"), col(idCol).as("query_id"))
+    val cb = lshBuckets(corpus, bands, bandBits)
+      .select(col("band"), col("bucket"), col("vec_id").as("neighbor_id"))
+    val qb = lshBuckets(queries, bands, bandBits)
+      .select(col("band"), col("bucket"), col("vec_id").as("query_id"))
     val candidates = qb.join(cb, Seq("band", "bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
@@ -86,9 +83,10 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     candidates
-      .join(broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))),
+      .join(broadcast(
+        queries.select(col("vec_id").as("query_id"), col("embedding").as("__qv"))),
         Seq("query_id"))
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
+      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("__cv")),
         Seq("neighbor_id"))
       .withColumn("cos", cosine_similarity(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -104,37 +102,34 @@ object Similarity {
     * the quality path; see `ivfKmeansTopK`).
     */
   def ivfTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      corpus: DataFrame, queries: DataFrame, k: Int, nCentroids: Int = 16,
+      nProbe: Int = 2): DataFrame =
     ivfWithCentroids(corpus, queries,
-      hashCentroids(corpus, nCentroids, idCol, vecCol), k, nProbe, idCol, vecCol)
+      hashCentroids(corpus, nCentroids), k, nProbe)
 
   /** IVF with KMeans centroids (one MLlib fit over the corpus — at 100 TB
     * fit on a sample; assignment stays a broadcast join + codegen'd cosine).
     */
   def ivfKmeansTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 2, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      corpus: DataFrame, queries: DataFrame, k: Int, nCentroids: Int = 16,
+      nProbe: Int = 2): DataFrame =
     ivfWithCentroids(corpus, queries,
-      kmeansCentroids(corpus, nCentroids, seed, vecCol), k, nProbe, idCol, vecCol)
+      kmeansCentroids(corpus, nCentroids), k, nProbe)
 
   /** Deterministic "centroids": the nCentroids corpus vectors with the
     * smallest xxhash64(id) — stable under any partitioning.
     */
-  def hashCentroids(corpus: DataFrame, nCentroids: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def hashCentroids(corpus: DataFrame, nCentroids: Int): DataFrame = {
     // bound to nCentroids rows FIRST (TakeOrdered: per-partition heaps +
     // driver merge), then number the survivors — the global ranking window
     // only ever sees nCentroids rows, never the corpus
-    val w = Window.orderBy(col("__h"), col(idCol))
-    corpus.select(col(idCol), col(vecCol))
-      .withColumn("__h", xxhash64(col(idCol)))
-      .orderBy(col("__h"), col(idCol))
+    val w = Window.orderBy(col("__h"), col("vec_id"))
+    corpus.select(col("vec_id"), col("embedding"))
+      .withColumn("__h", xxhash64(col("vec_id")))
+      .orderBy(col("__h"), col("vec_id"))
       .limit(nCentroids)
       .withColumn("__r", row_number().over(w))
-      .select(col("__r").as("centroid_id"), col(vecCol).as("__centv"))
+      .select(col("__r").as("centroid_id"), col("embedding").as("__centv"))
   }
 
   /** Default cap on rows entering a codebook/centroid KMeans fit. */
@@ -170,6 +165,12 @@ object Similarity {
           lit(math.max(1L, cap * 1000000L / n)))
     sampled.repartition(1).sortWithinPartitions(col("__v"))
   }
+
+  /** The seed of every KMeans fit here (IVF cells and PQ codebooks;
+    * subspace `s` fits with `FitSeed + s`), so codebooks are a pure
+    * function of the data.
+    */
+  private final val FitSeed = 42L
 
   /** One KMeans fit over a pinned `(__v ARRAY<FLOAT>)` relation from
     * [[fitInput]]; returns the centers as float arrays.
@@ -213,13 +214,12 @@ object Similarity {
     * are bounded; nothing quadratic, nothing point-count-sized leaves
     * the executors.
     */
-  def lloydSteps(emb: DataFrame, k: Int, rounds: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def lloydSteps(emb: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     require(k > 0 && rounds >= 0, s"need k>0, rounds>=0 (got $k, $rounds)")
-    val pts = emb.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v")).localCheckpoint(true)
+    val pts = emb.select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("v")).localCheckpoint(true)
     var cents: Seq[(Long, Seq[Double])] = pts.orderBy(col("id")).limit(k)
       .collect().zipWithIndex
       .map { case (r, i) => ((i + 1).toLong, r.getSeq[Double](1)) }.toSeq
@@ -256,11 +256,10 @@ object Similarity {
   /** KMeans centroids as a (centroid_id, __centv ARRAY<FLOAT>) relation —
     * fit on the bounded deterministic [[fitInput]] sample.
     */
-  def kmeansCentroids(corpus: DataFrame, nCentroids: Int, seed: Long,
-      vecCol: String = "embedding"): DataFrame = {
+  def kmeansCentroids(corpus: DataFrame, nCentroids: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    fitKmeans(fitInput(corpus, vecCol), nCentroids, seed).zipWithIndex
+    fitKmeans(fitInput(corpus, "embedding"), nCentroids, FitSeed).zipWithIndex
       .map { case (c, i) => (i + 1, c) }
       .toSeq.toDF("centroid_id", "__centv")
   }
@@ -272,15 +271,15 @@ object Similarity {
     * re-pinned the corpus `m` times). Returns, per subspace, the
     * centroids in centroid-id order.
     */
-  def pqCodebooks(corpus: DataFrame, dim: Int, m: Int = 4, nCentroids: Int = 16,
-      seed: Long = 42L, vecCol: String = "embedding"): Array[Array[Array[Float]]] = {
+  def pqCodebooks(corpus: DataFrame, dim: Int, m: Int = 4,
+      nCentroids: Int = 16): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val dsub = dim / m
-    val pinned = fitInput(corpus, vecCol).persist()
+    val pinned = fitInput(corpus, "embedding").persist()
     try {
       parSubspaceFits(pinned, m, s =>
         fitKmeans(pinned.select(slice(col("__v"), s * dsub + 1, dsub).as("__v")),
-          nCentroids, seed + s))
+          nCentroids, FitSeed + s))
     } finally pinned.unpersist()
   }
 
@@ -350,30 +349,29 @@ object Similarity {
     * arrays (same zero-shuffle pattern as [[nearestCells]]).
     */
   def pqTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, nCentroids: Int = 32, seed: Long = 42L, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
-    val books = pqCodebooks(corpus, dim, m, nCentroids, seed, vecCol)
+      corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
+      nCentroids: Int = 32, rerank: Int = 8): DataFrame = {
+    val dim = corpus.select(size(col("embedding"))).first().getInt(0)
+    val books = pqCodebooks(corpus, dim, m, nCentroids)
 
     // codes + the vector's own norm (4 extra bytes): ADC estimates the
     // DOT product, but the truth metric is cosine — ranking candidates by
     // adc/||x|| (||q|| is constant per query) aligns the two; without the
     // stored norm, unnormalized corpora mis-rank badly (measured recall
     // 0.36 -> 0.88 on the sf0.001 fixture)
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      pqEncode(books, col(vecCol)).as("codes"),
-      graft.functions.VectorFunctions.l2_norm(col(vecCol)).as("xnorm"))
+    val codes = corpus.select(col("vec_id").as("neighbor_id"),
+      pqEncode(books, col("embedding")).as("codes"),
+      graft.functions.VectorFunctions.l2_norm(col("embedding")).as("xnorm"))
 
     val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
       .withColumn("__lut", pqLut(books, col("__qv"))))
 
     val scored = codes.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc", adcScore(col("codes"), col("__lut"), nCentroids) /
         when(col("xnorm") > 0.0, col("xnorm")).otherwise(1.0))
-    exactRerank(scored, corpus, idCol, vecCol, k, rerank)
+    exactRerank(scored, corpus, k, rerank)
   }
 
   /** Keeps each query's top `k·rerank` candidates by `adc` (ties →
@@ -382,8 +380,8 @@ object Similarity {
     * rank, cos)`. `scored` carries `query_id`, `neighbor_id`, the query
     * vector `__qv` and `adc`.
     */
-  private def exactRerank(scored: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, rerank: Int): DataFrame = {
+  private def exactRerank(scored: DataFrame, corpus: DataFrame, k: Int,
+      rerank: Int): DataFrame = {
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("neighbor_id"))
     val cand = scored
@@ -394,7 +392,7 @@ object Similarity {
     val wCos = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     cand
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
+      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("__cv")),
         Seq("neighbor_id"))
       .withColumn("cos", cosine_similarity(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(wCos).cast("long"))
@@ -435,22 +433,21 @@ object Similarity {
     * (persisted single-partition sample, sliced per subspace).
     */
   def fitIvfPq(
-      corpus: DataFrame, nCells: Int = 16,
-      m: Int = 8, nCentroids: Int = 32, seed: Long = 42L,
-      vecCol: String = "embedding"): IvfPqModel = {
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
+      corpus: DataFrame, nCells: Int = 16, m: Int = 8,
+      nCentroids: Int = 32): IvfPqModel = {
+    val dim = corpus.select(size(col("embedding"))).first().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val dsub = dim / m
-    val pinned = fitInput(corpus, vecCol).persist()
+    val pinned = fitInput(corpus, "embedding").persist()
     try {
-      val cents = fitKmeans(pinned, nCells, seed).zipWithIndex
+      val cents = fitKmeans(pinned, nCells, FitSeed).zipWithIndex
         .map { case (c, i) => (i + 1, c) }
       // residuals of the pinned sample: map-only projection, order
       // preserved — the subspace fits stay deterministic
       val resid = pinned.select(residual(cents, col("__v")).as("__v"))
       val books = parSubspaceFits(pinned, m, s =>
         fitKmeans(resid.select(slice(col("__v"), s * dsub + 1, dsub).as("__v")),
-          nCentroids, seed + 1 + s))
+          nCentroids, FitSeed + 1 + s))
       IvfPqModel(cents, books)
     } finally pinned.unpersist()
   }
@@ -486,10 +483,9 @@ object Similarity {
     */
   def ivfPqApply(
       corpus: DataFrame, queries: DataFrame, k: Int, model: IvfPqModel,
-      nProbe: Int = 4, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfPqServe(ivfPqEncodedCorpus(corpus, model, idCol, vecCol),
-      corpus, queries, k, model, nProbe, rerank, idCol, vecCol)
+      nProbe: Int = 4, rerank: Int = 8): DataFrame =
+    ivfPqServe(ivfPqEncodedCorpus(corpus, model),
+      corpus, queries, k, model, nProbe, rerank)
 
   /** The corpus-side IVF-PQ encode relation: (centroid_id, neighbor_id,
     * codes, xnorm) — ONE fused expression for the whole encode (cell +
@@ -499,12 +495,11 @@ object Similarity {
     * ~all of q_cosine_ivfpq's 7.7 s apply at sf0.1). Struct-field
     * access of one expression is CSE'd: exactly one pass per row.
     */
-  private def ivfPqEncodedCorpus(corpus: DataFrame, model: IvfPqModel,
-      idCol: String, vecCol: String): DataFrame = {
-    val enc = graft.functions.VectorFunctions.ivf_pq_encode(col(vecCol),
+  private def ivfPqEncodedCorpus(corpus: DataFrame, model: IvfPqModel): DataFrame = {
+    val enc = graft.functions.VectorFunctions.ivf_pq_encode(col("embedding"),
       model.cents.sortBy(_._1).map(_._2), model.books)
     corpus
-      .select(col(idCol).as("neighbor_id"), enc.as("__e"))
+      .select(col("vec_id").as("neighbor_id"), enc.as("__e"))
       .select(col("__e.cell").as("centroid_id"), col("neighbor_id"),
         col("__e.codes").as("codes"), col("__e.xnorm").as("xnorm"))
   }
@@ -525,9 +520,8 @@ object Similarity {
     * directory gets one file set (no tiny-files explosion) — the same
     * writer discipline as [[Mix.writeShards]].
     */
-  def writeIvfPqIndex(corpus: DataFrame, model: IvfPqModel, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    ivfPqEncodedCorpus(corpus, model, idCol, vecCol)
+  def writeIvfPqIndex(corpus: DataFrame, model: IvfPqModel, dir: String): Unit =
+    ivfPqEncodedCorpus(corpus, model)
       .repartition(col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
 
@@ -548,9 +542,8 @@ object Similarity {
     * QUIESCED index (appends racing its read would miss the new
     * version), the same cadence contract as the minhash compaction.
     */
-  def appendToIvfPqIndex(newVecs: DataFrame, model: IvfPqModel, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    ivfPqEncodedCorpus(newVecs, model, idCol, vecCol)
+  def appendToIvfPqIndex(newVecs: DataFrame, model: IvfPqModel, dir: String): Unit =
+    ivfPqEncodedCorpus(newVecs, model)
       .repartition(col("centroid_id"))
       .write.mode("append").partitionBy("centroid_id")
       .parquet(Artifacts.resolveLive(newVecs.sparkSession, dir))
@@ -569,18 +562,17 @@ object Similarity {
     */
   def ivfPqApplyFromDisk(
       indexDir: String, corpus: DataFrame, queries: DataFrame, k: Int,
-      model: IvfPqModel, nProbe: Int = 4, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      model: IvfPqModel, nProbe: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     val probeCells = queries
-      .select(explode(nearestCells(model.cents, col(vecCol), nProbe)).as("__c"))
+      .select(explode(nearestCells(model.cents, col("embedding"), nProbe)).as("__c"))
       .select(col("__c.cid")).distinct()
       .collect().map(_.getInt(0)).sorted
     // resolve the crash-safe `_LATEST` pointer first (Artifacts layout);
     // a flat index dir resolves to itself, so both layouts serve here
     val codes = spark.read.parquet(Artifacts.resolveLive(spark, indexDir))
       .filter(col("centroid_id").isin(probeCells.map(Int.box): _*))
-    ivfPqServe(codes, corpus, queries, k, model, nProbe, rerank, idCol, vecCol)
+    ivfPqServe(codes, corpus, queries, k, model, nProbe, 8)
   }
 
   /** Shared IVF-PQ serving join over any (centroid_id, neighbor_id,
@@ -590,15 +582,14 @@ object Similarity {
     */
   private def ivfPqServe(
       codes: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
-      model: IvfPqModel, nProbe: Int, rerank: Int,
-      idCol: String, vecCol: String): DataFrame = {
+      model: IvfPqModel, nProbe: Int, rerank: Int): DataFrame = {
     val cents = model.cents
     val books = model.books
     val nCentroids = model.nCentroids
     val centArr = array(cents.sortBy(_._1).map { case (_, cv) => typedlit(cv) }: _*)
 
     val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
       .withColumn("__lut", pqLut(books, col("__qv")))
       .select(col("query_id"), col("__qv"), col("__lut"),
         explode(nearestCells(cents, col("__qv"), nProbe)).as("__c"))
@@ -617,7 +608,7 @@ object Similarity {
       .withColumn("adc",
         (col("__qdotc") + adcScore(col("codes"), col("__lut"), nCentroids)) /
           when(col("xnorm") > 0.0, col("xnorm")).otherwise(1.0))
-    exactRerank(scored, corpus, idCol, vecCol, k, rerank)
+    exactRerank(scored, corpus, k, rerank)
   }
 
   /** Convenience fit+apply composition (fit on the bounded sample, then
@@ -625,13 +616,11 @@ object Similarity {
     * reused, which at scale is always.
     */
   def ivfPqTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 8, nCentroids: Int = 32, seed: Long = 42L, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      corpus: DataFrame, queries: DataFrame, k: Int, nCells: Int = 16,
+      nProbe: Int = 4, m: Int = 8, nCentroids: Int = 32, rerank: Int = 8): DataFrame =
     ivfPqApply(corpus, queries, k,
-      fitIvfPq(corpus, nCells, m, nCentroids, seed, vecCol),
-      nProbe, rerank, idCol, vecCol)
+      fitIvfPq(corpus, nCells, m, nCentroids),
+      nProbe, rerank)
 
   /** Nearest-`keep` centroid cells of a vector as a MAP-ONLY projection.
     *
@@ -677,10 +666,9 @@ object Similarity {
     * serving path uses. `skew = max/avg` makes a degenerate quantizer
     * (one cell attracting most of the corpus) visible at a glance.
     */
-  def cellStats(corpus: DataFrame, cents: Array[(Int, Array[Float])],
-      vecCol: String = "embedding"): DataFrame = {
+  def cellStats(corpus: DataFrame, cents: Array[(Int, Array[Float])]): DataFrame = {
     val perCell = corpus
-      .select(assignCell(cents, col(vecCol)).as("centroid_id"))
+      .select(assignCell(cents, col("embedding")).as("centroid_id"))
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n_vecs"))
     perCell.agg(
       count(lit(1)).as("n_cells_used"),
@@ -695,24 +683,24 @@ object Similarity {
   }
 
   private def ivfWithCentroids(
-      corpus: DataFrame, queries: DataFrame, centroidDf: DataFrame,
-      k: Int, nProbe: Int, idCol: String, vecCol: String): DataFrame = {
+      corpus: DataFrame, queries: DataFrame, centroidDf: DataFrame, k: Int,
+      nProbe: Int): DataFrame = {
     val cents = centroidDf.collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
     // corpus side: exactly one cell per vector — a single projected column
-    val corpusCells = corpus.select(col(idCol), col(vecCol))
+    val corpusCells = corpus.select(col("vec_id"), col("embedding"))
       .withColumn("centroid_id",
-        element_at(nearestCells(cents, col(vecCol), 1), 1).getField("cid"))
-      .select(col("centroid_id"), col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
+        element_at(nearestCells(cents, col("embedding"), 1), 1).getField("cid"))
+      .select(col("centroid_id"), col("vec_id").as("neighbor_id"), col("embedding").as("__cv"))
 
     // query side: nProbe cells per query (tiny relation; explode is fine)
-    val queryCells = queries.select(col(idCol), col(vecCol))
-      .select(col(idCol), col(vecCol),
-        explode(nearestCells(cents, col(vecCol), nProbe)).as("__c"))
+    val queryCells = queries.select(col("vec_id"), col("embedding"))
+      .select(col("vec_id"), col("embedding"),
+        explode(nearestCells(cents, col("embedding"), nProbe)).as("__c"))
       .select(col("__c.cid").as("centroid_id"),
-        col(idCol).as("query_id"), col(vecCol).as("__qv"))
+        col("vec_id").as("query_id"), col("embedding").as("__qv"))
 
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))

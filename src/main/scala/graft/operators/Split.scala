@@ -29,9 +29,8 @@ object Split {
       df: DataFrame,
       key: String,
       trainIds: Seq[Long],
-      valIds: Seq[Long],
-      labelCol: String = "train_val_test"): DataFrame =
-    df.withColumn(labelCol,
+      valIds: Seq[Long]): DataFrame =
+    df.withColumn("train_val_test",
       when(col(key).isin(trainIds: _*), lit("train"))
         .when(col(key).isin(valIds: _*), lit("validation"))
         .otherwise(lit("test")))
@@ -159,20 +158,15 @@ object Split {
   /** Deterministic modulo-hash split — the scale-safe, oracle-reproducible
     * replacement for driver-built id lists: label is a pure function of the
     * key, needs no shuffle, no driver state, and is identical in ANSI SQL.
-    * Buckets [0,trainUpTo) → train, [trainUpTo,valUpTo) → validation,
-    * rest → test.
+    * Of 10 buckets, [0,6) → train, [6,8) → validation, rest → test.
     */
   def labelByHash(
       df: DataFrame,
-      key: String,
-      buckets: Int = 10,
-      trainUpTo: Int = 6,
-      valUpTo: Int = 8,
-      labelCol: String = "train_val_test"): DataFrame = {
-    val b = pmod(col(key), lit(buckets))
-    df.withColumn(labelCol,
-      when(b < trainUpTo, lit("train"))
-        .when(b < valUpTo, lit("validation"))
+      key: String): DataFrame = {
+    val b = pmod(col(key), lit(10))
+    df.withColumn("train_val_test",
+      when(b < 6, lit("train"))
+        .when(b < 8, lit("validation"))
         .otherwise(lit("test")))
   }
 
@@ -200,10 +194,9 @@ object Split {
     * partitioning, and re-evaluation — the only sound construction for a
     * sample that downstream anti-joins must agree with.
     */
-  def perGroupSample(df: DataFrame, key: String, frac: Double, seed: Long,
-      saltCols: Seq[String] = Nil): DataFrame =
+  def perGroupSample(df: DataFrame, key: String, frac: Double, seed: Long): DataFrame =
     df.withColumn("__pick", seededPick(Seq(col(key)), frac, seed,
-        if (saltCols.nonEmpty) saltCols else df.columns.toSeq))
+        df.columns.toSeq))
       .filter(col("__pick"))
       .drop("__pick")
 

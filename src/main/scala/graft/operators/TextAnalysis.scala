@@ -23,7 +23,7 @@ object TextAnalysis {
   /** Intra-document repetition census (the Gopher / RefinedWeb
     * repetition-rule family — Rae et al. 2021 §A1.1, Penedo et al. 2023;
     * public heuristics): per document the top-2-gram concentration, the
-    * duplicate-3-gram mass, and the duplicate fixed-`chunk`-token block
+    * duplicate-3-gram mass, and the duplicate fixed-10-token block
     * count — the signals that catch boilerplate loops, keyword stuffing
     * and copy-paste padding, which per-corpus dedup never sees because
     * the repetition is INSIDE one doc.
@@ -42,9 +42,7 @@ object TextAnalysis {
     * assembly joins are per-doc-keyed. Nothing global, nothing driver-
     * side.
     */
-  def repetitionStats(docs: DataFrame, chunk: Int = 10,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    require(chunk >= 2, s"chunk $chunk")
+  def repetitionStats(docs: DataFrame): DataFrame = {
     // ONE fused codegen'd pass over the token array (TextStats.rep_stats
     // — the TextStatsExpr fusion discipline applied to the census): the
     // former shape was three explode → two-level-count branches off a
@@ -59,9 +57,9 @@ object TextAnalysis {
     // token count — the bound the explode form carried into its
     // shuffles anyway.
     val r = graft.functions.TextStats.rep_stats(
-      Dedup.tokens(col(textCol)), chunk)
-    docs.select(col(idCol), r.as("__r"))
-      .select(col(idCol),
+      Dedup.tokens(col("text")), 10)
+    docs.select(col("doc_id"), r.as("__r"))
+      .select(col("doc_id"),
         col("__r.n_tokens").as("n_tokens"),
         col("__r.top2_n").as("top2_n"),
         col("__r.g2_tot").as("g2_tot"),
@@ -190,9 +188,9 @@ object TextAnalysis {
     * 100 TB, train on a sample (the LM is a statistic, not a per-row
     * artifact).
     */
-  def trainTrigramLm(docs: DataFrame, textCol: String = "text"): (Map[String, Long], Long) = {
+  def trainTrigramLm(docs: DataFrame): (Map[String, Long], Long) = {
     val rows = docs
-      .select(explode(graft.functions.TextHashFunctions.char_trigrams(col(textCol))).as("tri"))
+      .select(explode(graft.functions.TextHashFunctions.char_trigrams(col("text"))).as("tri"))
       .groupBy(col("tri")).agg(count(lit(1)).as("c"))
       .collect()
     // the bound's OWNER is char_trigrams' normalization (lowercase +
@@ -219,21 +217,20 @@ object TextAnalysis {
     * 1-row-per-doc barrier aggregate. `sequence(0, nChunks−1)` is guarded
     * (greatest 0) against the `sequence(0, −1) == [0, −1]` trap.
     */
-  def chunkDocs(docs: DataFrame, k: Int = 20, stride: Int = 10,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def chunkDocs(docs: DataFrame, k: Int = 20, stride: Int = 10): DataFrame = {
     require(stride >= 1 && stride <= k, s"stride $stride must be in [1, $k]")
     val toksDf = docs
-      .select(col(idCol), Dedup.tokens(col(textCol)).as("toks"))
-      .groupBy(col(idCol)).agg(first(col("toks")).as("toks")) // HOF barrier
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      .groupBy(col("doc_id")).agg(first(col("toks")).as("toks")) // HOF barrier
       .filter(size(col("toks")) > 0)
     val n = size(col("toks"))
     val nChunks = lit(1) + greatest(lit(0),
       ceil((n - lit(k)).cast("double") / stride).cast("int"))
     toksDf
-      .select(col(idCol), col("toks"), n.as("__n"),
+      .select(col("doc_id"), col("toks"), n.as("__n"),
         posexplode(transform(sequence(lit(0), nChunks - 1),
           i => array_join(slice(col("toks"), i * stride + 1, lit(k)), " "))))
-      .select(col(idCol),
+      .select(col("doc_id"),
         col("pos").cast("long").as("chunk_idx"),
         col("col").as("chunk_text"),
         least(lit(k), col("__n") - col("pos") * stride).cast("long").as("n_tokens_chunk"))
@@ -284,7 +281,6 @@ object TextAnalysis {
     * caches leak.
     */
   def bpeMerges(vocab: DataFrame, rounds: Int,
-      wordCol: String = "w", freqCol: String = "freq",
       localThreshold: Long = 200000L): DataFrame = {
     // SMALL-VOCAB FAST PATH, dispatched via the shared [[Guarded.iterate]]
     // (eager checkpoint BEFORE the guard count — its scaladoc owns the
@@ -300,8 +296,8 @@ object TextAnalysis {
     // distributed rounds run unchanged: at real scale the vocabulary is
     // the bounded-but-large relation the loop exists for.
     Guarded.iterate(
-      vocab.select(split(col(wordCol), "").as("syms"),
-          col(freqCol).cast("long").as("freq"))
+      vocab.select(split(col("w"), "").as("syms"),
+          col("freq").cast("long").as("freq"))
         .filter(size(col("syms")) > 0), localThreshold) { (syms, _) =>
       localBpe(syms, rounds)
     } { (syms, _) =>
@@ -430,11 +426,10 @@ object TextAnalysis {
   final case class DsirModel(target: Map[String, Long], nTarget: Long,
     corpus: Map[String, Long], nCorpus: Long, vocab: Long)
 
-  def trainDsirLms(docs: DataFrame, isTarget: Column,
-      textCol: String = "text"): DsirModel = {
+  def trainDsirLms(docs: DataFrame, isTarget: Column): DsirModel = {
     val rows = docs
       .select(isTarget.as("__t"),
-        explode(graft.functions.TextHashFunctions.char_trigrams(col(textCol))).as("tri"))
+        explode(graft.functions.TextHashFunctions.char_trigrams(col("text"))).as("tri"))
       .groupBy(col("tri"))
       .agg(count(lit(1)).as("c_s"), count(when(col("__t"), 1)).as("c_t"))
       .collect()
@@ -512,6 +507,9 @@ object TextAnalysis {
     */
   private[graft] val IntakeMaxBroadcastGrams = 1500000L
 
+  /** The n of the n-grams every decontamination gate matches. */
+  final val BenchGramN = 5
+
   /** The bench side every decontamination gate shares — the batch
     * operators below and the streaming intakes, which build it ONCE at
     * wiring so they pay the bench scan once instead of per micro-batch:
@@ -535,11 +533,10 @@ object TextAnalysis {
     /** The exact verify: ids of `docs` sharing an `n`-gram with the
       * bench — explode → guarded join → distinct ids.
       */
-    def hitIds(docs: DataFrame, textCol: String = "text",
-        idCol: String = "doc_id"): DataFrame =
-      docs.select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
+    def hitIds(docs: DataFrame): DataFrame =
+      docs.select(col("doc_id"), explode(Dedup.shingles(col("text"), n)).as("g"))
         .join(if (broadcastUsed) broadcast(grams) else grams, Seq("g"))
-        .select(col(idCol)).distinct()
+        .select(col("doc_id")).distinct()
 
     /** The distinct grams, gathered once and shipped as a broadcast set —
       * on the broadcast path only, in place of the bloom's aggregate.
@@ -560,19 +557,19 @@ object TextAnalysis {
     /** `docs` minus its contaminated docs, given `flag` = [[intakeFlag]]:
       * a filter when the flag is exact (no join, no exchange); above the
       * bound, [[hitIds]] of the flagged docs and one anti-join. Both
-      * paths put `idCol` first, the anti-join's using-column order.
+      * paths put `doc_id` first, the anti-join's using-column order.
       */
-    def dropFlagged(docs: DataFrame, flag: Column, idCol: String = "doc_id"): DataFrame =
+    def dropFlagged(docs: DataFrame, flag: Column): DataFrame =
       if (broadcastUsed)
         docs.filter(!flag)
-          .select((idCol +: docs.columns.filterNot(_ == idCol)).toIndexedSeq.map(col): _*)
-      else docs.join(hitIds(docs.filter(flag), idCol = idCol), Seq(idCol), "left_anti")
+          .select(("doc_id" +: docs.columns.filterNot(_ == "doc_id")).toIndexedSeq.map(col): _*)
+      else docs.join(hitIds(docs.filter(flag)), Seq("doc_id"), "left_anti")
   }
 
-  private[graft] def benchGrams(bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = BatchMaxBroadcastGrams, textCol: String = "text"): BenchGrams = {
+  private[graft] def benchGrams(bench: DataFrame, n: Int = BenchGramN,
+      maxBroadcastGrams: Long = BatchMaxBroadcastGrams): BenchGrams = {
     val grams = bench
-      .select(explode(Dedup.shingles(col(textCol), n)).as("g"))
+      .select(explode(Dedup.shingles(col("text"), n)).as("g"))
       .distinct().localCheckpoint(true)
     val nG = grams.count()
     val useBroadcast = nG <= maxBroadcastGrams
@@ -582,24 +579,21 @@ object TextAnalysis {
     BenchGrams(grams, nG, n, useBroadcast)
   }
 
-  def contaminationPlan(train: DataFrame, bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
-      textCol: String = "text", idCol: String = "doc_id"): DecontaminationPlan = {
-    val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
-    DecontaminationPlan(g.hitIds(train, textCol, idCol), g.nGrams, g.broadcastUsed)
+  def contaminationPlan(train: DataFrame, bench: DataFrame, n: Int = BenchGramN,
+      maxBroadcastGrams: Long = BatchMaxBroadcastGrams): DecontaminationPlan = {
+    val g = benchGrams(bench, n, maxBroadcastGrams)
+    DecontaminationPlan(g.hitIds(train), g.nGrams, g.broadcastUsed)
   }
 
   /** Remove every train doc sharing an `n`-gram with the bench set —
     * [[contaminationPlan]]'s ids-only candidate relation applied as one
     * left-anti join.
     */
-  def decontaminate(train: DataFrame, bench: DataFrame, n: Int = 5,
-      maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+  def decontaminate(train: DataFrame, bench: DataFrame, n: Int = BenchGramN): DataFrame =
     train.join(
-      contaminationPlan(train, bench, n, maxBroadcastGrams, textCol, idCol)
+      contaminationPlan(train, bench, n)
         .contaminatedIds,
-      Seq(idCol), "left_anti")
+      Seq("doc_id"), "left_anti")
 
   /** [[decontaminate]] with a BLOOM pre-filter — bit-identical output,
     * 100 TB cost profile. The exact path explodes EVERY train doc into
@@ -615,12 +609,11 @@ object TextAnalysis {
     * ⊇ contaminated exactly, and the final anti-join result equals the
     * exact path's — same oracle SQL verifies both.
     */
-  def decontaminateBloom(train: DataFrame, bench: DataFrame, n: Int = 5,
-      fpp: Double = 0.01, maxBroadcastGrams: Long = BatchMaxBroadcastGrams,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val g = benchGrams(bench, n, maxBroadcastGrams, textCol)
-    val candidates = train.filter(g.probe(col(textCol), fpp))
-    train.join(g.hitIds(candidates, textCol, idCol), Seq(idCol), "left_anti")
+  def decontaminateBloom(train: DataFrame, bench: DataFrame,
+      n: Int = BenchGramN): DataFrame = {
+    val g = benchGrams(bench, n)
+    val candidates = train.filter(g.probe(col("text"), 0.01))
+    train.join(g.hitIds(candidates), Seq("doc_id"), "left_anti")
   }
 
   /** Feature vector the trained quality gate fits AND serves on — one
@@ -668,7 +661,7 @@ object TextAnalysis {
     * of (data, hyperparams) and survives the CPUS=3/8 sweep.
     * At 100 TB the model is a statistic, so the fit input is BOUNDED
     * before the single-partition pin: a deterministic content-hash
-    * sample keyed on `idCol` caps what the one LBFGS task materializes
+    * sample keyed on `doc_id` caps what the one LBFGS task materializes
     * at `fitCap` rows (the [[Similarity.fitInput]] pattern — r4 flagged
     * the unbounded form for KMeans, r5's verdict flagged its recreation
     * here). Keying on the STABLE id (not the text) keeps the sampled
@@ -678,37 +671,36 @@ object TextAnalysis {
     */
   final case class QualityLrModel(intercept: Double, weights: Array[Double])
 
-  def fitQualityLr(docs: DataFrame, label: Column, idCol: String = "doc_id",
-      textCol: String = "text", regParam: Double = 0.01,
+  def fitQualityLr(docs: DataFrame, label: Column,
       fitCap: Long = Similarity.fitSampleCap): QualityLrModel = {
     val names = (0 until qualityLrDim).map(i => s"__f$i")
     // null text ⇒ null features ⇒ VectorAssembler (handleInvalid=error)
     // throws mid-fit — gate here so a real corpus with absent texts
     // fits on its non-null rows instead of crashing
-    val base = docs.filter(col(textCol).isNotNull && label.isNotNull)
+    val base = docs.filter(col("text").isNotNull && label.isNotNull)
     val n = base.count()
     val sampled =
       if (n <= fitCap) base
       else base.filter(
-        pmod(xxhash64(col(idCol)), lit(1000000L)) <
+        pmod(xxhash64(col("doc_id")), lit(1000000L)) <
           lit(math.max(1L, fitCap * 1000000L / n)))
     val feats = sampled
       .select(
-        Seq(col(idCol), label.cast("double").as("__y")) ++
-          qualityLrFeatures(col(textCol)).zip(names).map { case (c, n) => c.as(n) }: _*)
-      .repartition(1).sortWithinPartitions(col(idCol))
+        Seq(col("doc_id"), label.cast("double").as("__y")) ++
+          qualityLrFeatures(col("text")).zip(names).map { case (c, n) => c.as(n) }: _*)
+      .repartition(1).sortWithinPartitions(col("doc_id"))
     val assembled = new org.apache.spark.ml.feature.VectorAssembler()
       .setInputCols(names.toArray).setOutputCol("__x")
       .transform(feats)
     val m = new org.apache.spark.ml.classification.LogisticRegression()
       .setLabelCol("__y").setFeaturesCol("__x")
-      .setMaxIter(50).setRegParam(regParam).setStandardization(true)
+      .setMaxIter(50).setRegParam(0.01).setStandardization(true)
       .fit(assembled)
     QualityLrModel(m.intercept, m.coefficients.toArray)
   }
 
   /** Token-length-bucket reference distribution — the drift-detection
-    * build artifact: ≤ `nBuckets`+1 doubles of driver state, fit once
+    * build artifact: ≤ `LenBuckets`+1 doubles of driver state, fit once
     * over a trusted corpus snapshot and compared against every incoming
     * micro-batch by [[jsdVsRef]]. Bucket definition shared with the
     * oracled `q_source_drift` (floor(ws-tokens/8) capped at 20).
@@ -718,20 +710,22 @@ object TextAnalysis {
       "reference histogram must be a distribution")
   }
 
-  def lenBucket(text: Column, nBuckets: Int = 20): Column =
+  /** Length buckets of [[lenBucket]]: 8 tokens each, the last one open. */
+  final val LenBuckets = 20
+
+  def lenBucket(text: Column): Column =
     // coalesce BEFORE least: Spark's least skips nulls, so a null text
     // would otherwise land in the TOP bucket (reads as "very long doc"
     // drift) instead of bucket 0
     least(floor(coalesce(tokenCountWs(text), lit(0L)) / 8),
-      lit(nBuckets.toLong)).cast("long")
+      lit(LenBuckets.toLong)).cast("long")
 
-  /** Doc counts per [[lenBucket]] — one bounded aggregate (≤ nBuckets+1
+  /** Doc counts per [[lenBucket]] — one bounded aggregate (≤ LenBuckets+1
     * rows collected). The histogram every drift check reads: the
     * reference fit below, and each batch compared by [[jsdVsRef]].
     */
-  def lenBucketCounts(docs: DataFrame, nBuckets: Int = 20,
-      textCol: String = "text"): Map[Int, Long] =
-    docs.select(lenBucket(col(textCol), nBuckets).as("bucket"))
+  def lenBucketCounts(docs: DataFrame): Map[Int, Long] =
+    docs.select(lenBucket(col("text")).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
 
@@ -739,16 +733,15 @@ object TextAnalysis {
     * Laplace-smoothed so JSD against it is finite for any batch (empty
     * reference cells get pseudo-count 1).
     */
-  def fitLenHistogram(docs: DataFrame, nBuckets: Int = 20,
-      textCol: String = "text"): LenHistogram = {
-    val counts = lenBucketCounts(docs, nBuckets, textCol)
-    val raw = Array.tabulate(nBuckets + 1)(i => counts.getOrElse(i, 0L) + 1.0)
+  def fitLenHistogram(docs: DataFrame): LenHistogram = {
+    val counts = lenBucketCounts(docs)
+    val raw = Array.tabulate(LenBuckets + 1)(i => counts.getOrElse(i, 0L) + 1.0)
     val z = raw.sum
     LenHistogram(raw.map(_ / z))
   }
 
   /** Jensen-Shannon divergence (nats) of a bucket-count histogram
-    * against the reference — plain driver math over ≤ nBuckets+1 cells.
+    * against the reference — plain driver math over ≤ LenBuckets+1 cells.
     * Same JSD form as the oracled q_source_drift (0-count batch cells
     * contribute only the reference half).
     */
@@ -782,9 +775,7 @@ object TextAnalysis {
     * `q_bm25_topk` pipeline (dl from token counts; N over ALL docs;
     * avgdl over docs with ≥1 token; Lucene idf = ln(1+(N-df+.5)/(df+.5))).
     */
-  def fitBm25(docs: DataFrame, qTerms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75,
-      textCol: String = "text", idCol: String = "doc_id"): Bm25Model = {
+  def fitBm25(docs: DataFrame, qTerms: Seq[String]): Bm25Model = {
     require(qTerms.nonEmpty && qTerms.size <= 64,
       s"qTerms must be 1..64 terms (driver state is O(|qTerms|)), got ${qTerms.size}")
     // ONE corpus tokenization: per-term tf and dl fold into a single
@@ -795,8 +786,8 @@ object TextAnalysis {
     // into three tokenize+shuffle subtrees under column pruning.
     val terms = qTerms.distinct.sorted
     val perDoc = docs
-      .select(col(idCol), explode(Dedup.tokens(col(textCol))).as("term"))
-      .groupBy(col(idCol)).agg(
+      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
+      .groupBy(col("doc_id")).agg(
         count(lit(1)).as("dl"),
         terms.map(t => sum(when(col("term") === t, 1L).otherwise(0L)).as(s"tf_$t")): _*)
     val statCols =
@@ -810,7 +801,7 @@ object TextAnalysis {
       val df = row.getAs[Double](s"df_$t")
       t -> math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
     }.toMap
-    Bm25Model(k1, b, if (nDl == 0) 1.0 else sumDl / nDl, idf)
+    Bm25Model(k1 = 1.2, b = 0.75, if (nDl == 0) 1.0 else sumDl / nDl, idf)
   }
 
   /** Stateless BM25 score column. ONE tokenization per doc: term counts

@@ -4329,7 +4329,7 @@ object AnalyticsQueries {
   private[graft] def pagerankFull(s: SparkSession, d: String,
       localThreshold: Long): DataFrame =
     graft.operators.Graph.pageRank(tradeEdges(s, d),
-        iterations = 5, damping = 0.85, localThreshold = localThreshold)
+        iterations = 5, localThreshold = localThreshold)
       .select(tradeNodeLabel(col("node")).as("node"),
         round(col("rank"), 6).as("rank_r"))
       .orderBy(col("node"))

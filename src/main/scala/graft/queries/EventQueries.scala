@@ -1074,7 +1074,7 @@ object EventQueries {
 
     // multimodal: synthetic media table → metadata-real resize stage
     Query("q_media_resize", (s, d) => {
-      Multimodal.resize(Multimodal.syntheticMediaTable(Tables.documents(s, d)), 512)
+      Multimodal.resize(Multimodal.syntheticMediaTable(Tables.documents(s, d)))
         .select(col("media_id"), col("kind"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),

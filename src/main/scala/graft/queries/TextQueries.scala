@@ -2932,7 +2932,7 @@ object TextQueries {
     // not the text itself, keeps the output compact). The sub-document
     // pass for boilerplate/syndicated spans.
     Query("q_dedup_passages", (s, d) => {
-      Dedup.passageDedupReport(docs(s, d), 20)
+      Dedup.passageDedupReport(docs(s, d))
         .select(col("doc_id"), col("n_chunks"), col("n_kept"), col("dedup_hash"))
         .orderBy(col("doc_id"))
     }, Sql(

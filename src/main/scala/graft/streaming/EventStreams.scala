@@ -25,6 +25,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
+  /** The curation intakes' event-time horizon: dedup state and the
+    * stream-static probes keep this much lateness.
+    */
+  final val IntakeWatermark = "2 hours"
+
+  /** The curation intakes' quality floor ([[TextAnalysis.heuristicGate]]). */
+  final val IntakeMinQuality = 0.5
+
   /** Tumbling-window counts/sums per event type, watermarked. */
   def tumblingCounts(events: DataFrame, window_ : String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
@@ -109,12 +117,11 @@ object EventStreams {
     * every junk/foreign doc in the watermark horizon. Filters go before
     * the stateful op.
     */
-  def curateDocs(docs: DataFrame, watermark: String = "2 hours",
-      minQuality: Double = 0.5): DataFrame =
+  def curateDocs(docs: DataFrame): DataFrame =
     docs
-      .filter(TextAnalysis.heuristicGate(col("text"), minQuality))
+      .filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality))
       .withColumn("content_hash", md5(col("text")))
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", IntakeWatermark)
       .dropDuplicatesWithinWatermark("content_hash")
 
   /** [[curateDocs]] with INCREMENTAL dedup against a STATIC historical
@@ -131,13 +138,12 @@ object EventStreams {
     * watermark-bounded dedup state covers re-arrivals of anything the
     * run itself admitted.
     */
-  def incrementalIntake(docs: DataFrame, knownHashes: DataFrame,
-      watermark: String = "2 hours", minQuality: Double = 0.5): DataFrame =
+  def incrementalIntake(docs: DataFrame, knownHashes: DataFrame): DataFrame =
     docs
-      .filter(TextAnalysis.heuristicGate(col("text"), minQuality))
+      .filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality))
       .withColumn("content_hash", md5(col("text")))
       .join(knownHashes.select(col("content_hash")), Seq("content_hash"), "left_anti")
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", IntakeWatermark)
       .dropDuplicatesWithinWatermark("content_hash")
 
   /** [[curateDocs]] with INCREMENTAL NEAR-dup dedup against a persisted
@@ -190,23 +196,22 @@ object EventStreams {
     * timeout degrade to no-ops), so batch ≡ stream equivalence is
     * asserted directly in StreamingSpec rather than via a twin.
     */
-  def incrementalNearIntake(docs: DataFrame,
-      index: Dedup.MinhashIndex,
-      nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      watermark: String = "2 hours", minQuality: Double = 0.5): DataFrame = {
+  def incrementalNearIntake(docs: DataFrame, index: Dedup.MinhashIndex): DataFrame = {
     val streaming = docs.isStreaming
     val delayMs = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(watermark))
+      .stringToInterval(
+        org.apache.spark.unsafe.types.UTF8String.fromString(IntakeWatermark))
     val delayMillis =
       org.apache.spark.sql.catalyst.util.IntervalUtils.getDuration(
         delayMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     val outSchema = docs.schema
     val nOut = outSchema.length
     val gated = docs
-      .filter(TextAnalysis.heuristicGate(col("text"), minQuality))
+      .filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality))
       .withColumn("__sig", graft.functions.TextHashFunctions.minhash_band_buckets(
-        Dedup.shingles(col("text"), nShingle), bands, rowsPerBand))
-      .withWatermark("ts", watermark)
+        Dedup.shingles(col("text"), Dedup.IndexShingle), Dedup.IndexBands,
+        Dedup.IndexRowsPerBand))
+      .withWatermark("ts", IntakeWatermark)
     val exploded = gated
       .select((docs.columns.map(col) :+
         concat_ws(",", col("__sig").cast("array<string>")).as("__sig_key") :+
@@ -236,7 +241,7 @@ object EventStreams {
             // all rows here share one signature → one index-gate outcome;
             // a doc is novel iff ALL its band rows survived the anti-join
             val byDoc = rows.toSeq.groupBy(_.getLong(idIdx))
-            val full = byDoc.filter(_._2.size == bands)
+            val full = byDoc.filter(_._2.size == Dedup.IndexBands)
             if (state.exists || full.isEmpty) Iterator.empty
             else {
               val first = full.values.map(_.head).minBy(r =>
@@ -280,23 +285,40 @@ object EventStreams {
     * version; the next compaction re-publishes a clean version, so torn
     * files never outlive one maintenance cycle.
     */
-  def maintainedIntake(docs: DataFrame, indexDir: String, sinkDir: String,
-      watermark: String = "2 hours", minQuality: Double = 0.5)
+  def maintainedIntake(docs: DataFrame, indexDir: String, sinkDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = docs.sparkSession
     val liveDir = Artifacts.resolveLive(spark, indexDir)
     val curated = incrementalIntake(docs,
-      spark.read.parquet(liveDir), watermark, minQuality)
+      spark.read.parquet(liveDir))
     curated.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
-        b.write.mode("append").parquet(sinkDir)
-        // hashes are unique per batch: incrementalIntake ends in
-        // dropDuplicatesWithinWatermark("content_hash")
-        b.select(col("content_hash")).write.mode("append").parquet(liveDir)
+        rowPartitions(b).foreach { rows =>
+          rows.write.mode("append").parquet(sinkDir)
+          // hashes are unique per batch: incrementalIntake ends in
+          // dropDuplicatesWithinWatermark("content_hash")
+          rows.select(col("content_hash")).write.mode("append").parquet(liveDir)
+        }
         b.unpersist()
         ()
       }
+  }
+
+  /** The partitions of a persisted micro-batch that hold rows, or None
+    * for an empty batch, found by one job over the batch. Spark's file
+    * writer always writes partition 0, so appending a batch whose rows
+    * sit elsewhere — or the no-data micro-batch that advances the
+    * watermark after each data batch — would leave a 0-row file that
+    * every later read of the directory lists and opens.
+    */
+  private def rowPartitions(b: DataFrame): Option[DataFrame] = {
+    val rdd = org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(b)
+    val keep = rdd.mapPartitionsWithIndex((i, it) =>
+      if (it.hasNext) Iterator(i) else Iterator.empty).collect().toSet
+    if (keep.isEmpty) None
+    else Some(org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
+      b.sparkSession, new org.apache.spark.rdd.PartitionPruningRDD(rdd, keep), b.schema))
   }
 
   /** [[maintainedIntake]]'s NEAR-dup twin: [[incrementalNearIntake]]
@@ -314,20 +336,19 @@ object EventStreams {
     * to one version for the whole run ([[maintainedIntake]]'s contract,
     * same torn-append/compaction-cadence story).
     */
-  def maintainedNearIntake(docs: DataFrame, indexDir: String, sinkDir: String,
-      nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      watermark: String = "2 hours", minQuality: Double = 0.5)
+  def maintainedNearIntake(docs: DataFrame, indexDir: String, sinkDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = docs.sparkSession
     val liveDir = Artifacts.resolveLive(spark, indexDir)
     val idx = Artifacts.loadMinhashIndex(spark, liveDir)
-    val curated = incrementalNearIntake(docs, idx, nShingle, bands,
-      rowsPerBand, watermark, minQuality)
+    val curated = incrementalNearIntake(docs, idx)
     curated.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
-        b.write.mode("append").parquet(sinkDir)
-        Artifacts.appendMinhashIndex(b, liveDir, nShingle, bands, rowsPerBand)
+        rowPartitions(b).foreach { rows =>
+          rows.write.mode("append").parquet(sinkDir)
+          Artifacts.appendMinhashIndex(rows, liveDir)
+        }
         b.unpersist()
         ()
       }
@@ -355,17 +376,14 @@ object EventStreams {
     * `.start()` it (with a checkpointLocation for exactly-once).
     */
   def maintainedIvfIntake(vecs: DataFrame,
-      model: graft.operators.Similarity.IvfPqModel,
-      indexDir: String, sinkDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maintainEvery: Int = 0)
+      model: graft.operators.Similarity.IvfPqModel, indexDir: String,
+      sinkDir: String, maintainEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.persist()
         b.write.mode("append").parquet(sinkDir)
-        graft.operators.Similarity.appendToIvfPqIndex(b, model, indexDir,
-          idCol, vecCol)
+        graft.operators.Similarity.appendToIvfPqIndex(b, model, indexDir)
         b.unpersist()
         // maintenance cadence (maintainEvery > 0): run the layout-health
         // tick every N batches. foreachBatch serializes, and this loop is
@@ -399,11 +417,9 @@ object EventStreams {
     * drops are expensive; the native gate when intake volume dominates.
     */
   def maintainedNearIntakeVerified(docs: DataFrame, indexDir: String,
-      sinkDir: String, threshold: Double = 0.7, nShingle: Int = 3,
-      bands: Int = 8, rowsPerBand: Int = 4, minQuality: Double = 0.5)
+      sinkDir: String, threshold: Double = 0.7)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    verifiedNearLoop(docs, indexDir, sinkDir, threshold, nShingle, bands,
-      rowsPerBand, minQuality)((_, _) => ())
+    verifiedNearLoop(docs, indexDir, sinkDir, threshold)((_, _) => ())
 
   /** The per-batch body of the verified near-dup intakes: the verified
     * edges — exact-Jaccard index hits `(new_id, corpus_id)` and in-batch
@@ -413,23 +429,22 @@ object EventStreams {
     * pointer resolves per batch: the gate re-loads the index each batch
     * anyway, so load + appends stay on one version.
     */
-  private def verifiedNearLoop(docs: DataFrame, indexDir: String,
-      sinkDir: String, threshold: Double, nShingle: Int, bands: Int,
-      rowsPerBand: Int, minQuality: Double)
-      (onEdges: (DataFrame, DataFrame) => Unit)
+  private def verifiedNearLoop(docs: DataFrame, indexDir: String, sinkDir: String,
+      threshold: Double)(onEdges: (DataFrame, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = docs.sparkSession
-    docs.filter(TextAnalysis.heuristicGate(col("text"), minQuality))
+    docs.filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality))
       .writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
         val liveDir = Artifacts.resolveLive(spark, indexDir)
         val idx = Artifacts.loadMinhashIndex(spark, liveDir)
         val hitPairs = Dedup
-          .incrementalNearDup(b, idx, threshold, nShingle, bands, rowsPerBand)
+          .incrementalNearDup(b, idx, threshold)
           .select(col("new_id"), col("corpus_id"))
         val inBatchPairs = Dedup
-          .minhashNearDups(b, threshold, nShingle, bands, rowsPerBand)
+          .minhashNearDups(b, threshold, Dedup.IndexShingle, Dedup.IndexBands,
+            Dedup.IndexRowsPerBand)
           .select(col("id_a"), col("id_b"))
         onEdges(hitPairs, inBatchPairs)
         val keep = Dedup.dedupKeepSetClosure(b, inBatchPairs)
@@ -439,8 +454,7 @@ object EventStreams {
           .join(indexHits, Seq("doc_id"), "left_anti")
           .persist()
         survivors.write.mode("append").parquet(sinkDir)
-        Artifacts.appendMinhashIndex(survivors, liveDir, nShingle, bands,
-          rowsPerBand)
+        Artifacts.appendMinhashIndex(survivors, liveDir)
         survivors.unpersist()
         b.unpersist()
         ()
@@ -464,14 +478,11 @@ object EventStreams {
     * (StreamingSpec drives two cycles across a restart and asserts the
     * map equals the full closure of every edge ever seen).
     */
-  def maintainedClusterIntake(docs: DataFrame, indexDir: String,
-      sinkDir: String, labelsDir: String, threshold: Double = 0.7,
-      nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      minQuality: Double = 0.5)
+  def maintainedClusterIntake(docs: DataFrame, indexDir: String, sinkDir: String,
+      labelsDir: String, threshold: Double = 0.7)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = docs.sparkSession
-    verifiedNearLoop(docs, indexDir, sinkDir, threshold, nShingle, bands,
-        rowsPerBand, minQuality) { (hitPairs, inBatchPairs) =>
+    verifiedNearLoop(docs, indexDir, sinkDir, threshold) { (hitPairs, inBatchPairs) =>
       // label maintenance runs before the intake step (dup docs must
       // still receive labels — that is what a cluster map is for): merge
       // every verified edge, append only the changed rows
@@ -506,14 +517,12 @@ object EventStreams {
     * `dropDuplicatesWithinWatermark` (jaccard is a pure function of the
     * pair, so which collision survives is immaterial).
     */
-  def nearDupMatches(docs: DataFrame,
-      index: Dedup.MinhashIndex, threshold: Double,
-      nShingle: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      watermark: String = "2 hours"): DataFrame = {
+  def nearDupMatches(docs: DataFrame, index: Dedup.MinhashIndex,
+      threshold: Double): DataFrame = {
     val withSig = docs.select(col("doc_id").as("new_id"), col("ts"),
-      Dedup.shingles(col("text"), nShingle).as("__sh"))
+      Dedup.shingles(col("text"), Dedup.IndexShingle).as("__sh"))
       .withColumn("__sig", graft.functions.TextHashFunctions.minhash_band_buckets(
-        col("__sh"), bands, rowsPerBand))
+        col("__sh"), Dedup.IndexBands, Dedup.IndexRowsPerBand))
     val banded = withSig.select(col("new_id"), col("ts"), col("__sh"),
       posexplode(col("__sig")).as(Seq("band", "bucket")))
     banded
@@ -523,7 +532,7 @@ object EventStreams {
         Seq("corpus_id"))
       .withColumn("jaccard", Dedup.jaccard(col("__sh"), col("__shc")))
       .filter(col("jaccard") >= threshold)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", IntakeWatermark)
       .dropDuplicatesWithinWatermark("new_id", "corpus_id")
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
@@ -593,9 +602,9 @@ object EventStreams {
     * all).
     */
   def decontamIntake(docs: DataFrame, bench: DataFrame, sinkDir: String,
-      n: Int = 5, maxBroadcastGrams: Long = TextAnalysis.IntakeMaxBroadcastGrams)
+      maxBroadcastGrams: Long = TextAnalysis.IntakeMaxBroadcastGrams)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val grams = TextAnalysis.benchGrams(bench, n, maxBroadcastGrams)
+    val grams = TextAnalysis.benchGrams(bench, TextAnalysis.BenchGramN, maxBroadcastGrams)
     val flag = grams.intakeFlag(col("text"), 0.01)
     docs.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -838,8 +847,9 @@ object EventStreams {
       ref: TextAnalysis.LenHistogram,
       tauDrift: Double,
       targets: Option[Map[String, Long]],
-      indexDir: String, sinkDir: String, ledgerDir: String,
-      n: Int = 5, watermark: String = "2 hours",
+      indexDir: String,
+      sinkDir: String,
+      ledgerDir: String,
       maxBroadcastGrams: Long = TextAnalysis.IntakeMaxBroadcastGrams,
       maxBloomHashes: Long = 10000000L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -847,7 +857,7 @@ object EventStreams {
       "budget admission needs a `source` column")
     val spark = docs.sparkSession
     // fit-once reference state, resolved at WIRING time (never per batch)
-    val grams = TextAnalysis.benchGrams(bench, n, maxBroadcastGrams)
+    val grams = TextAnalysis.benchGrams(bench, TextAnalysis.BenchGramN, maxBroadcastGrams)
     val maybeContam = grams.intakeFlag(col("text"), 0.01)
     val liveIndex = Artifacts.resolveLive(spark, indexDir)
     val knownHashes = spark.read.parquet(liveIndex)
@@ -888,7 +898,7 @@ object EventStreams {
       })
       .select((srcCols.map(col) :+ col("content_hash") :+
         col("__maybe_contam") :+ col("__maybe_dup")): _*)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", IntakeWatermark)
       .dropDuplicatesWithinWatermark("content_hash")
     // gate 6a's confirmed duplicates, for a batch with flagged rows: the
     // flagged hashes ship as a broadcast set (one job over the batch)
@@ -1034,38 +1044,27 @@ object EventStreams {
     * semantics session_window can't express — here: emit an update per
     * batch with running totals).
     *
-    * `withIdleTimeout = true` expires state after 1h idle via
-    * ProcessingTimeTimeout. NOTE: with a processing-time timeout the
-    * engine keeps scheduling micro-batches to evict state, so
-    * `processAllAvailable()` never quiesces — callers that drive the
-    * query synchronously (tests, backfills) must use the default
-    * NoTimeout. Observed as a hang, not inferred.
+    * State never times out. A processing-time timeout would keep the
+    * engine scheduling micro-batches to evict state, so
+    * `processAllAvailable()` would never quiesce for callers that drive
+    * the query synchronously (tests, backfills). Observed as a hang, not
+    * inferred.
     */
-  def runningUserTotals(events: Dataset[Ev], withIdleTimeout: Boolean = false)
-      : Dataset[SessionUpdate] = {
+  def runningUserTotals(events: Dataset[Ev]): Dataset[SessionUpdate] = {
     import events.sparkSession.implicits._
-    val timeout =
-      if (withIdleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     events
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserSession, SessionUpdate](OutputMode.Append, timeout) {
+      .flatMapGroupsWithState[UserSession, SessionUpdate](OutputMode.Append,
+        GroupStateTimeout.NoTimeout) {
         (uid: Long, evs: Iterator[Ev], state: GroupState[UserSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionUpdate(uid, s.n_events, s.total_value))
-          } else {
-            val buf = evs.toSeq
-            val prev = state.getOption.getOrElse(UserSession(uid, 0L, 0.0, 0L))
-            val next = UserSession(uid,
-              prev.n_events + buf.size,
-              prev.total_value + buf.map(_.value).sum,
-              math.max(prev.last_ts, buf.map(_.ts.getTime).foldLeft(0L)(math.max)))
-            state.update(next)
-            if (withIdleTimeout) state.setTimeoutDuration("1 hour")
-            Iterator(SessionUpdate(uid, next.n_events, next.total_value))
-          }
+          val buf = evs.toSeq
+          val prev = state.getOption.getOrElse(UserSession(uid, 0L, 0.0, 0L))
+          val next = UserSession(uid,
+            prev.n_events + buf.size,
+            prev.total_value + buf.map(_.value).sum,
+            math.max(prev.last_ts, buf.map(_.ts.getTime).foldLeft(0L)(math.max)))
+          state.update(next)
+          Iterator(SessionUpdate(uid, next.n_events, next.total_value))
       }
   }
 
@@ -1111,18 +1110,17 @@ object EventStreams {
     * are dropped FIRST: a null would hash to a null shard key and crash
     * the typed decode on a single bad event — a poison-pill stream.
     */
-  private def mgItems(events: DataFrame, shards: Int,
-      itemCol: String): DataFrame =
+  private def mgItems(events: DataFrame, shards: Int): DataFrame =
     events
-      .filter(col(itemCol).isNotNull)
-      .select(col(itemCol).cast("string").as("item"),
-        pmod(xxhash64(col(itemCol).cast("string")), lit(shards.toLong))
+      .filter(col("event_type").isNotNull)
+      .select(col("event_type").cast("string").as("item"),
+        pmod(xxhash64(col("event_type").cast("string")), lit(shards.toLong))
           .as("shard"))
 
-  def heavyHittersIntake(events: DataFrame, k: Int = 16, shards: Int = 8,
-      itemCol: String = "event_type"): Dataset[ShardedCount] = {
+  def heavyHittersIntake(events: DataFrame, k: Int = 16,
+      shards: Int = 8): Dataset[ShardedCount] = {
     import events.sparkSession.implicits._
-    mgItems(events, shards, itemCol)
+    mgItems(events, shards)
       .as[(String, Long)]
       .groupByKey(_._2)
       .flatMapGroupsWithState[Map[String, Long], ShardedCount](
@@ -1149,10 +1147,10 @@ object EventStreams {
     * rides those two facts to a full DuckDB value oracle; the eviction
     * regime is covered by StreamingSpec's planted-skew invariants.
     */
-  def heavyHittersBatch(events: DataFrame, k: Int = 16, shards: Int = 8,
-      itemCol: String = "event_type"): Dataset[ShardedCount] = {
+  def heavyHittersBatch(events: DataFrame, k: Int = 16,
+      shards: Int = 8): Dataset[ShardedCount] = {
     import events.sparkSession.implicits._
-    mgItems(events, shards, itemCol)
+    mgItems(events, shards)
       .as[(String, Long)]
       .groupByKey(_._2)
       .flatMapGroups { (shard: Long, rows: Iterator[(String, Long)]) =>

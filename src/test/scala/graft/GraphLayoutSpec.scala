@@ -68,6 +68,45 @@ class GraphLayoutSpec extends SparkTestBase {
     }
   }
 
+  test("distributed loops: shuffle-hash score side ≡ broadcast score side") {
+    // maxBroadcastNodes = 0 sends pageRank, PPR, HITS and SSSP down
+    // scoreSide's shuffle-hash branch (the > 1M-node path); the
+    // forced-distributed run at the default bound broadcasts instead
+    val rnd = new scala.util.Random(5)
+    val ids = Seq.fill(300)((s"n${rnd.nextInt(40)}", s"n${rnd.nextInt(40)}"))
+    val sym = (ids ++ ids.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq(("n1", 1.0), ("n9", 2.0)).toDF("node", "w")
+    val weighted = (ids ++ ids.map(_.swap)).zipWithIndex
+      .map { case ((a, b), i) => (a, b, (i % 3 + 1).toLong) }.toDF("src", "dst", "w")
+    def rows(df: DataFrame): (Map[Seq[Any], Double], String) = {
+      val out = df.collect().map { r =>
+        r.toSeq.init -> r.toSeq.last.asInstanceOf[Number].doubleValue }.toMap
+      (out, df.queryExecution.executedPlan.toString)
+    }
+    def sides(maxBroadcastNodes: Long): Seq[(Map[Seq[Any], Double], String)] = Seq(
+      rows(Graph.pageRank(sym, iterations = 5,
+        maxBroadcastNodes = maxBroadcastNodes, localThreshold = 0L)),
+      rows(Graph.personalizedPageRank(sym, seeds, iterations = 5,
+        maxBroadcastNodes = maxBroadcastNodes, localThreshold = 0L)),
+      rows(Graph.hits(sym, iterations = 5,
+        maxBroadcastNodes = maxBroadcastNodes, localThreshold = 0L)),
+      rows(Graph.sssp(weighted, seeds.select(col("node")), rounds = 4,
+        maxBroadcastNodes = maxBroadcastNodes, localThreshold = 0L)))
+    val shuffled = sides(0L)
+    val broadcasted = sides(1000000L)
+    Seq("pageRank", "personalizedPageRank", "hits", "sssp").zipWithIndex.foreach {
+      case (op, i) =>
+        val ((s, sPlan), (b, bPlan)) = (shuffled(i), broadcasted(i))
+        // pageRank's and PPR's rounds stay in the result's plan (HITS and
+        // SSSP checkpoint theirs), so the branch taken shows there
+        if (i < 2) assert(sPlan.contains("ShuffledHashJoin") &&
+          !bPlan.contains("ShuffledHashJoin"), s"$op: score side not shuffle-hash")
+        assert(s.nonEmpty && s.keySet == b.keySet, s"$op: node sets differ")
+        s.foreach { case (k, v) =>
+          assert(math.abs(v - b(k)) < 1e-12, s"$op $k: $v vs ${b(k)}") }
+    }
+  }
+
   test("personalizedPageRank: mass conserved, seed neighborhood outranks, junk seeds ignored, fast ≡ distributed") {
     val es = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
     val sym = (es ++ es.map(_.swap)).toDF("src", "dst")

@@ -21,6 +21,17 @@ class StreamingSpec extends SparkTestBase {
 
   private def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${min / 60}%02d:${min % 60}%02d:00")
 
+  /** Parquet files under `dir` (recursively) that hold no row — what
+    * appending a no-data micro-batch, or an empty partition 0 of a data
+    * batch, leaves behind.
+    */
+  private def zeroRowFiles(dir: String): Seq[String] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    files(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet"))
+      .filter(p => spark.read.parquet(p).count() == 0L)
+  }
+
   test("tumblingCounts aggregates per hour/type over a memory stream") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[E]
@@ -596,6 +607,10 @@ class StreamingSpec extends SparkTestBase {
     // and the index now carries all three content hashes, none twice
     assert(spark.read.parquet(indexDir).distinct().count() == 3L)
     assert(spark.read.parquet(indexDir).count() == 3L)
+    // no append left a 0-row file (the no-data micro-batch after each
+    // data batch, or a data batch's empty partition 0)
+    assert(zeroRowFiles(sinkDir).isEmpty && zeroRowFiles(indexDir).isEmpty,
+      s"0-row files: ${zeroRowFiles(sinkDir) ++ zeroRowFiles(indexDir)}")
   }
 
   test("maintainedNearIntake: near-dup of a cycle-1 survivor is dropped in cycle 2") {
@@ -629,6 +644,8 @@ class StreamingSpec extends SparkTestBase {
     } finally q2.stop()
     assert(spark.read.parquet(sinkDir).select(col("doc_id"))
       .as[Long].collect().toSet == Set(11L), "near-dup of survivor not dropped")
+    assert(zeroRowFiles(sinkDir).isEmpty && zeroRowFiles(indexDir).isEmpty,
+      s"0-row files: ${zeroRowFiles(sinkDir) ++ zeroRowFiles(indexDir)}")
   }
 
   test("maintainedNearIntake + versioned compaction: the closed loop survives a compaction between cycles") {
