@@ -135,7 +135,7 @@ object IntakeSoak {
     // BATCH (hash generation + a bucket hash-join whose probe side is
     // the batch), not the cumulative index — a flat curve while the
     // index multiplies ~15×.
-    import graft.operators.{Dedup, Multimodal}
+    import graft.operators.{Artifacts, Dedup, Multimodal}
     val mediaBatches = sys.env.getOrElse("SPARK_GRAFT_IMGIDX_BATCHES", "15").toInt
     // ONE family runner, applied to image AND (r17, VERDICT Next #5)
     // audio — the two modalities share the band-index pipeline, so the
@@ -165,9 +165,9 @@ object IntakeSoak {
           spark.read.parquet(s"$itmp/hashes"))
         val bh = hashesOf(bdocs).localCheckpoint(true)
         dups += Dedup.incrementalBandedDedup(bh, idx).count()
-        Dedup.bandHashBuckets(bh).write.mode("append").parquet(s"$itmp/buckets")
-        bh.select(col("media_id").as("id"), col("b0"), col("b1"),
-          col("b2"), col("b3")).write.mode("append").parquet(s"$itmp/hashes")
+        Artifacts.append(Dedup.bandHashBuckets(bh), s"$itmp/buckets")
+        Artifacts.append(bh.select(col("media_id").as("id"), col("b0"), col("b1"),
+          col("b2"), col("b3")), s"$itmp/hashes")
         val secs = (System.nanoTime() - t0) / 1e9
         perB += math.rint(secs * 1000) / 1000
         System.err.println(f"[${tag}idx] batch $i%2d  $secs%.2f s")

@@ -32,6 +32,32 @@ object Artifacts {
   /** Versions a compaction keeps after its [[pruneVersions]] sweep. */
   final val KeepVersions = 2
 
+  // ---- append-only directories ----
+
+  /** Append `df` as parquet to the append-only directory `dir`
+    * (partitioned by `partitionBy`, if given), without the `_SUCCESS`
+    * marker a job commit would otherwise rewrite on every append. Every
+    * append write in the engine goes through here.
+    *
+    * Contract: an append-only directory carries no marker, and nothing
+    * judges its completeness by one — `spark.read` skips `_` files,
+    * versioned roots are judged by their `_LATEST` pointer
+    * ([[publishVersion]]) and [[artifactExists]] by their data files;
+    * Spark's own `FileStreamSink` writes no marker either. Rewriting it
+    * per append costs a create (one PUT on an object store) and, on a
+    * local filesystem, an overwrite of its checksum sidecar that can
+    * block on writeback: on a 4-core box with an ext4 root, local[4],
+    * the curation intake's batch (three appends) took 0.90 s with the
+    * marker and 0.71 s without. Overwrite writes and [[publishVersion]]'s
+    * versioned publishes keep their markers: they write into fresh
+    * directories. The setting rides this one write's options, not the
+    * session.
+    */
+  def append(df: DataFrame, dir: String, partitionBy: String*): Unit =
+    df.write.mode("append")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(partitionBy: _*).parquet(dir)
+
   // ---- MinhashIndex (near-dup corpus index) ----
 
   /** Persist a [[Dedup.MinhashIndex]] as `dir/buckets` + `dir/content`.
@@ -46,11 +72,12 @@ object Artifacts {
     * next [[compactMinhashIndex]] re-clusters within bands and
     * re-enforces the cap.
     */
-  def saveMinhashIndex(index: Dedup.MinhashIndex, dir: String): Unit =
-    writeMinhashIndex(
-      index.buckets.select(col("id"), col("band"), col("bucket"))
-        .repartition(col("band"), col("bucket")),
-      index.content, dir, "overwrite")
+  def saveMinhashIndex(index: Dedup.MinhashIndex, dir: String): Unit = {
+    index.buckets.select(col("id"), col("band"), col("bucket"))
+      .repartition(col("band"), col("bucket"))
+      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/buckets")
+    index.content.write.mode("overwrite").parquet(s"$dir/content")
+  }
 
   /** Append `docs`' index rows — band-bucket rows and shingle sets, the
     * [[Dedup.minhashIndex]] shapes without its bucket cap and per-id
@@ -58,17 +85,11 @@ object Artifacts {
     * index at `dir`: the closed-loop step of the near-dup intakes, so
     * the next cycle's gate sees this cycle's docs.
     */
-  def appendMinhashIndex(docs: DataFrame, dir: String): Unit =
-    writeMinhashIndex(
-      Dedup.minhashBuckets(docs, Dedup.IndexShingle, Dedup.IndexBands, Dedup.IndexRowsPerBand),
-      docs.select(col("doc_id").as("id"),
-        Dedup.shingles(col("text"), Dedup.IndexShingle).as("sh")),
-      dir, "append")
-
-  private def writeMinhashIndex(buckets: DataFrame, content: DataFrame,
-      dir: String, mode: String): Unit = {
-    buckets.write.mode(mode).partitionBy("band").parquet(s"$dir/buckets")
-    content.write.mode(mode).parquet(s"$dir/content")
+  def appendMinhashIndex(docs: DataFrame, dir: String): Unit = {
+    append(Dedup.minhashBuckets(docs, Dedup.IndexShingle, Dedup.IndexBands,
+      Dedup.IndexRowsPerBand), s"$dir/buckets", "band")
+    append(docs.select(col("doc_id").as("id"),
+      Dedup.shingles(col("text"), Dedup.IndexShingle).as("sh")), s"$dir/content")
   }
 
   /** Load pair of [[saveMinhashIndex]]. Resolves the crash-safe `_LATEST`
@@ -243,7 +264,7 @@ object Artifacts {
 
   /** Persist the exact-dedup fingerprint index (`content_hash` plus any
     * carried columns, e.g. keep_id). Pairs with [[Dedup.incrementalDedup]]:
-    * each completed ingest appends its survivors' hashes (mode=append)
+    * each completed ingest appends its survivors' hashes ([[append]])
     * and the next batch anti-joins the union. Appends against a VERSIONED
     * root must target [[resolveLive]] (what the maintained intake loops
     * do), not the root itself.
@@ -270,8 +291,8 @@ object Artifacts {
     * strictly increases per append, so the per-id resolve has no ties.
     */
   def appendLabelDeltas(delta: DataFrame, dir: String, seq: Long): Unit =
-    delta.select(col("id"), col("comp"), lit(seq).as("seq"))
-      .write.mode("append").parquet(resolveLive(delta.sparkSession, dir))
+    append(delta.select(col("id"), col("comp"), lit(seq).as("seq")),
+      resolveLive(delta.sparkSession, dir))
 
   /** Latest label per id over an (id, comp, seq) delta-log RELATION —
     * the resolve the label map serves through; factored out of

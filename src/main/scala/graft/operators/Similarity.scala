@@ -543,10 +543,8 @@ object Similarity {
     * version), the same cadence contract as the minhash compaction.
     */
   def appendToIvfPqIndex(newVecs: DataFrame, model: IvfPqModel, dir: String): Unit =
-    ivfPqEncodedCorpus(newVecs, model)
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(Artifacts.resolveLive(newVecs.sparkSession, dir))
+    Artifacts.append(ivfPqEncodedCorpus(newVecs, model).repartition(col("centroid_id")),
+      Artifacts.resolveLive(newVecs.sparkSession, dir), "centroid_id")
 
   /** IVF-PQ serving from the AT-REST index written by [[writeIvfPqIndex]]:
     * the scan carries a static `centroid_id IN (probe cells)` partition

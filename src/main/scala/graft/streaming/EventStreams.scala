@@ -295,10 +295,10 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
         rowPartitions(b).foreach { rows =>
-          rows.write.mode("append").parquet(sinkDir)
+          Artifacts.append(rows, sinkDir)
           // hashes are unique per batch: incrementalIntake ends in
           // dropDuplicatesWithinWatermark("content_hash")
-          rows.select(col("content_hash")).write.mode("append").parquet(liveDir)
+          Artifacts.append(rows.select(col("content_hash")), liveDir)
         }
         b.unpersist()
         ()
@@ -346,7 +346,7 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
         rowPartitions(b).foreach { rows =>
-          rows.write.mode("append").parquet(sinkDir)
+          Artifacts.append(rows, sinkDir)
           Artifacts.appendMinhashIndex(rows, liveDir)
         }
         b.unpersist()
@@ -382,7 +382,7 @@ object EventStreams {
     vecs.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.persist()
-        b.write.mode("append").parquet(sinkDir)
+        Artifacts.append(b, sinkDir)
         graft.operators.Similarity.appendToIvfPqIndex(b, model, indexDir)
         b.unpersist()
         // maintenance cadence (maintainEvery > 0): run the layout-health
@@ -453,7 +453,7 @@ object EventStreams {
           .join(keep, Seq("doc_id"), "left_semi")
           .join(indexHits, Seq("doc_id"), "left_anti")
           .persist()
-        survivors.write.mode("append").parquet(sinkDir)
+        Artifacts.append(survivors, sinkDir)
         Artifacts.appendMinhashIndex(survivors, liveDir)
         survivors.unpersist()
         b.unpersist()
@@ -611,7 +611,7 @@ object EventStreams {
         // the shuffle degrade reads the batch twice (flagged rows, then
         // the anti-join); the exact label reads it once
         if (!grams.broadcastUsed) batch.persist()
-        grams.dropFlagged(batch, flag).write.mode("append").parquet(sinkDir)
+        Artifacts.append(grams.dropFlagged(batch, flag), sinkDir)
         if (!grams.broadcastUsed) batch.unpersist()
         ()
       }
@@ -641,9 +641,8 @@ object EventStreams {
         val jsd = TextAnalysis.jsdVsRef(counts, ref)
         val spark = batch.sparkSession
         import spark.implicits._
-        Seq((batchId, n, math.rint(jsd * 1e6) / 1e6, jsd > tau))
-          .toDF("batch_id", "n_docs", "jsd_r", "alarm")
-          .write.mode("append").parquet(sinkDir)
+        Artifacts.append(Seq((batchId, n, math.rint(jsd * 1e6) / 1e6, jsd > tau))
+          .toDF("batch_id", "n_docs", "jsd_r", "alarm"), sinkDir)
         ()
       }
 
@@ -665,7 +664,7 @@ object EventStreams {
       .filter(TextAnalysis.bm25Score(model)(col("text")) >= tau)
       .writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
+        Artifacts.append(batch, sinkDir)
         ()
       }
 
@@ -967,13 +966,12 @@ object EventStreams {
           // then sink + index append-back + funnel/alarm ledger
           val a = labeled.filter(col("__admit"))
             .select((srcCols.map(col) :+ col("content_hash")): _*)
-          a.write.mode("append").parquet(sinkDir)
-          a.select(col("content_hash")).write.mode("append").parquet(liveIndex)
-          Seq((batchId, nBatch, nClean, nAdmitted,
+          Artifacts.append(a, sinkDir)
+          Artifacts.append(a.select(col("content_hash")), liveIndex)
+          Artifacts.append(Seq((batchId, nBatch, nClean, nAdmitted,
             math.rint(jsd * 1e6) / 1e6, jsd > tauDrift))
             .toDF("batch_id", "n_batch", "n_clean", "n_admitted",
-              "jsd_r", "alarm")
-            .write.mode("append").parquet(ledgerDir)
+              "jsd_r", "alarm"), ledgerDir)
           labeled.unpersist()
           dups.foreach(_.destroy())
         }

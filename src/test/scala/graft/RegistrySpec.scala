@@ -168,6 +168,37 @@ class RegistrySpec extends SparkTestBase {
       s"SparkSession.builder() outside Harness: ${sites.filterNot(_ == harness).mkString(", ")}")
   }
 
+  test("append writes occur in src/main only inside Artifacts.append (source scan)") {
+    // one append path, so no append-only directory gets its _SUCCESS
+    // marker rewritten per batch. A .mode(...) whose argument is not a
+    // literal non-append mode counts as an append too, so a mode passed
+    // through a variable cannot hide one
+    val mainDir = new java.io.File("src/main/scala")
+    assume(mainDir.isDirectory, "source dir not visible from test cwd")
+    val siteRe = """\.mode\s*\(([^)]*)\)|SaveMode\s*\.\s*Append\b""".r
+    val nonAppend = Seq("overwrite", "ignore", "error", "errorifexists")
+      .flatMap(m => Seq("\"" + m + "\"", "savemode." + m)).toSet
+    val helperFile = "src/main/scala/graft/operators/Artifacts.scala"
+    val sites = scalaFiles(mainDir).flatMap { f =>
+      val t = read(f)
+      // the helper's body: from its `def` to the next one
+      val helper = if (f.getPath != helperFile) None
+        else """\bdef\s+append\s*\(""".r.findFirstMatchIn(t).map { m =>
+          m.start until """\bdef\s""".r.findFirstMatchIn(t.substring(m.end))
+            .fold(t.length)(m.end + _.start)
+        }
+      siteRe.findAllMatchIn(t)
+        .filter(m => Option(m.group(1)).forall(a =>
+          !nonAppend(a.replaceAll("\\s", "").toLowerCase)))
+        .map(m => (f.getName.stripSuffix(".scala"), helper.exists(_.contains(m.start))))
+        .toSeq
+    }
+    val outside = sites.filterNot(_._2).groupBy(_._1)
+      .map { case (n, v) => s"$n (${v.size})" }.toSeq.sorted
+    assert(outside.isEmpty, s"append writes outside Artifacts.append: ${outside.mkString(", ")}")
+    assert(sites.count(_._2) == 1, s"Artifacts.append holds ${sites.count(_._2)} append writes")
+  }
+
   test("Bench.reconcile substitutes only a >2x in-slot reading whose spread is tight") {
     // readings measured by hand; spread medians are the upper median
     val tight = Seq(1.0, 1.2, 1.1, 1.05, 1.15) // median 1.1, max 1.2 <= 1.7

@@ -25,11 +25,24 @@ class StreamingSpec extends SparkTestBase {
     * appending a no-data micro-batch, or an empty partition 0 of a data
     * batch, leaves behind.
     */
-  private def zeroRowFiles(dir: String): Seq[String] = {
+  private def zeroRowFiles(dir: String): Seq[String] =
+    filesUnder(dir).filter(_.endsWith(".parquet"))
+      .filter(p => spark.read.parquet(p).count() == 0L)
+
+  /** `_SUCCESS` job-commit markers and their `._SUCCESS.crc` checksum
+    * sidecars under `dir` (recursively) — what an append that keeps the
+    * marker rewrites on every micro-batch.
+    */
+  private def successMarkers(dir: String): Seq[String] =
+    filesUnder(dir).filter { p =>
+      val n = new java.io.File(p).getName
+      n == "_SUCCESS" || n == "._SUCCESS.crc"
+    }
+
+  private def filesUnder(dir: String): Seq[String] = {
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    files(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet"))
-      .filter(p => spark.read.parquet(p).count() == 0L)
+    files(new java.io.File(dir)).map(_.getPath)
   }
 
   test("tumblingCounts aggregates per hour/type over a memory stream") {
@@ -575,9 +588,10 @@ class StreamingSpec extends SparkTestBase {
       "and the language gate for the test of the incremental intake path"
     val novel2 = "another fresh document where the tokens clear the gates " +
       "and the content is not in the index for this second cycle test"
-    // seed the durable index with one known hash
-    Seq(seeded).toDF("text").select(md5(col("text")).as("content_hash"))
-      .write.parquet(indexDir)
+    // seed the durable index with one known hash: an append-only
+    // directory from its first write
+    graft.operators.Artifacts.append(
+      Seq(seeded).toDF("text").select(md5(col("text")).as("content_hash")), indexDir)
     // cycle 1
     val mem1 = MemoryStream[EventStreams.Doc]
     val q1 = EventStreams.maintainedIntake(mem1.toDF(), indexDir, sinkDir).start()
@@ -611,6 +625,9 @@ class StreamingSpec extends SparkTestBase {
     // data batch, or a data batch's empty partition 0)
     assert(zeroRowFiles(sinkDir).isEmpty && zeroRowFiles(indexDir).isEmpty,
       s"0-row files: ${zeroRowFiles(sinkDir) ++ zeroRowFiles(indexDir)}")
+    // and none rewrote a _SUCCESS marker: the dirs are append-only
+    val markers = successMarkers(sinkDir) ++ successMarkers(indexDir)
+    assert(markers.isEmpty, s"markers in append-only dirs: $markers")
   }
 
   test("maintainedNearIntake: near-dup of a cycle-1 survivor is dropped in cycle 2") {
@@ -1354,8 +1371,8 @@ class StreamingSpec extends SparkTestBase {
       Seq(novelA, novelB, novelC, novelD).toDF("text"))
     val bench = Seq((100L, benchDoc)).toDF("doc_id", "text")
     val targets = Some(Map("s1" -> 2L, "s2" -> 1L))
-    Seq(knownDoc).toDF("text").select(md5(col("text")).as("content_hash"))
-      .write.parquet(indexDir)
+    graft.operators.Artifacts.append(
+      Seq(knownDoc).toDF("text").select(md5(col("text")).as("content_hash")), indexDir)
     def wire(mem: MemoryStream[EventStreams.SourcedDoc]) =
       EventStreams.curationIntake(mem.toDF(), quality, tauQ, bm25, 0.01,
         bench, ref, 0.6, targets, indexDir, sinkDir, ledgerDir)
@@ -1437,6 +1454,9 @@ class StreamingSpec extends SparkTestBase {
     // appended once (the append-back writes the batch's unique hashes)
     assert(spark.read.parquet(indexDir).distinct().count() == 4L)
     assert(spark.read.parquet(indexDir).count() == 4L)
+    // sink, index and ledger are append-only: no append left a marker
+    val markers = Seq(sinkDir, indexDir, ledgerDir).flatMap(successMarkers)
+    assert(markers.isEmpty, s"markers in append-only dirs: $markers")
   }
 
   /** Per job: (stream query id, batch id, SQL execution id). Per SQL

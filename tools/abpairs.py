@@ -28,9 +28,12 @@ pairs the change won (ties count for neither side) and a verdict:
               runs spread too widely to tell
 
 A run that exits non-zero or prints no result line is a crashed run. Per
-side it prints the crashed runs and the share of failed operations (the
-result lines' failed / attempted). Exit 0 unless a run crashed or an
-operation failed.
+side it prints the crashed runs, the share of failed operations (the
+result lines' failed / attempted) and the median work count, read from
+the run's `metric batches` or `metric passes` line: a 10 s run completes
+as many batches or passes as the box's speed allows, and a reading such
+as `live_heap_mb` that grows with that count moves with it. Exit 0
+unless a run crashed or an operation failed.
 """
 import argparse
 import json
@@ -40,6 +43,7 @@ import subprocess
 import sys
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
+WORK_COUNTS = ("batches", "passes")
 
 
 def seed_list(spec):
@@ -63,7 +67,9 @@ def build_trees(parent):
 
 
 def run(tree, workload, seed, seconds):
-    """One run's result line, or None if the run crashed or printed none."""
+    """One run's result line and its work count as (name, value), None
+    when it prints none; (None, None) if the run crashed or printed no
+    result line."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds)]
     res = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
@@ -71,8 +77,10 @@ def run(tree, workload, seed, seconds):
     lines = res.stdout.strip().splitlines()
     if res.returncode != 0 or not lines or not lines[-1].startswith("{"):
         print("\n".join(res.stderr.strip().splitlines()[-5:]), file=sys.stderr)
-        return None
-    return json.loads(lines[-1])
+        return None, None
+    count = next(((f[1], float(f[2])) for f in map(str.split, lines)
+                  if len(f) > 2 and f[0] == "metric" and f[1] in WORK_COUNTS), None)
+    return json.loads(lines[-1]), count
 
 
 def values(result):
@@ -124,15 +132,19 @@ def main():
     failed = 0
     for w in workloads:
         runs = {"parent": [], "change": []}
+        counts = {"parent": [], "change": []}
         for i, seed in enumerate(seeds):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for side in order:
-                res = run(trees[side], w, seed, seconds)
+                res, count = run(trees[side], w, seed, seconds)
                 runs[side].append(res)
+                if count is not None:
+                    counts[side].append(count)
                 m = values(res)
                 print(f"[{w} seed {seed}] {side}: " + (
                     "FAILED" if m is None else
-                    " ".join(f"{e['name']}={m.get(e['name'])}" for e in bench["end_to_end"])),
+                    " ".join(f"{e['name']}={m.get(e['name'])}" for e in bench["end_to_end"])
+                    + (f" {count[0]}={count[1]:g}" if count else "")),
                     file=sys.stderr, flush=True)
         print(f"\n{w}: {len(seeds)} pairs, seeds {args.seeds}, {seconds} s runs")
         for side in ("parent", "change"):
@@ -141,8 +153,11 @@ def main():
             ops = sum(r["attempted"] for r in done)
             bad = sum(r["failed"] for r in done)
             failed += crashed + bad
+            work = (f"median {counts[side][0][0]} "
+                    f"{statistics.median(c for _, c in counts[side]):g}"
+                    if counts[side] else "no work count")
             print(f"  {side}: {crashed}/{len(seeds)} runs crashed, "
-                  f"{bad}/{ops} operations failed")
+                  f"{bad}/{ops} operations failed, {work}")
         runs = {side: [values(r) for r in rs] for side, rs in runs.items()}
         print(f"  {'metric':14s} {'parent median [q1, q3]':>30s} "
               f"{'change median [q1, q3]':>30s} {'wins':>6s}  verdict")
