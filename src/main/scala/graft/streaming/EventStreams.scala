@@ -3,9 +3,11 @@ package graft.streaming
 import graft.functions.TextHashFunctions
 import graft.operators.{Artifacts, Dedup, Mix, TextAnalysis}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
 /** Structured Streaming pipelines over the `events` shape
   * (`event_id, ts, user_id, event_type, value, props` — TESTDATA.md).
@@ -97,7 +99,7 @@ object EventStreams {
   case class Doc(doc_id: Long, ts: java.sql.Timestamp, text: String)
 
   /** Embedding-stream row for [[maintainedIvfIntake]] (no event-time
-    * column: the intake is a foreachBatch append loop with no
+    * column: the intake is an [[intakeLoop]] append loop with no
     * watermarked state).
     */
   case class Vec(vec_id: Long, embedding: Array[Float])
@@ -226,16 +228,13 @@ object EventStreams {
     val tsIdx = outSchema.fieldIndex("ts")
     val idIdx = outSchema.fieldIndex("doc_id")
     val keyIdx = nOut // __sig_key right after the doc columns
-    implicit val rowEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    implicit val boolEnc: org.apache.spark.sql.Encoder[Boolean] =
-      org.apache.spark.sql.Encoders.scalaBoolean
+    implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
+    implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
     survivors
-      .groupByKey(_.getString(keyIdx))(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Boolean, org.apache.spark.sql.Row](
+      .groupByKey(_.getString(keyIdx))(Encoders.STRING)
+      .flatMapGroupsWithState[Boolean, Row](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[org.apache.spark.sql.Row],
-         state: GroupState[Boolean]) =>
+        (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             // all rows here share one signature → one index-gate outcome;
@@ -249,28 +248,24 @@ object EventStreams {
               state.update(true)
               if (streaming) state.setTimeoutTimestamp(
                 first.getTimestamp(tsIdx).getTime + delayMillis)
-              Iterator.single(org.apache.spark.sql.Row.fromSeq(
-                first.toSeq.take(nOut)))
+              Iterator.single(Row.fromSeq(first.toSeq.take(nOut)))
             }
           }
       }
   }
 
   /** CLOSED-LOOP exact-dedup intake: [[incrementalIntake]] gating against
-    * the PERSISTED fingerprint index at `indexDir`, with a `foreachBatch`
-    * sink that (a) appends survivors to `sinkDir` and (b) appends their
+    * the PERSISTED fingerprint index at `indexDir`, with an [[intakeLoop]]
+    * step that (a) appends survivors to `sinkDir` and (b) appends their
     * content hashes back to the index — so the NEXT ingest cycle (or the
     * next process after a restart) anti-joins an index that already
     * contains this cycle's docs. This is the maintenance loop the
     * incremental story needs across RESTARTS: the index is durable
     * parquet, not session memos (StreamingSpec drives two cycles with a
     * stop between them and asserts cycle-2 drops cycle-1's docs).
-    * Returns the wired writer — callers `.start()` it (adding a
-    * checkpointLocation for exactly-once across crashes).
-    *
-    * Scale notes: per micro-batch the appended hash set is batch-sized
-    * (ids-only); `foreachBatch` persists the micro-batch so the two
-    * writes share one evaluation (the [[Mix.writeShards]] discipline).
+    * Returns the wired writer — callers `.start()` it; delivery is
+    * [[intakeLoop]]'s at-least-once. Per micro-batch the appended hash
+    * set is batch-sized (ids-only).
     *
     * Versioned-index story: if `indexDir` is a crash-safe
     * [[graft.operators.Artifacts.publishVersion]] root, BOTH the gate's
@@ -286,31 +281,78 @@ object EventStreams {
     * files never outlive one maintenance cycle.
     */
   def maintainedIntake(docs: DataFrame, indexDir: String, sinkDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val spark = docs.sparkSession
     val liveDir = Artifacts.resolveLive(spark, indexDir)
-    val curated = incrementalIntake(docs,
-      spark.read.parquet(liveDir))
-    curated.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.persist()
-        rowPartitions(b).foreach { rows =>
-          Artifacts.append(rows, sinkDir)
-          // hashes are unique per batch: incrementalIntake ends in
-          // dropDuplicatesWithinWatermark("content_hash")
-          Artifacts.append(rows.select(col("content_hash")), liveDir)
-        }
-        b.unpersist()
-        ()
-      }
+    intakeLoop(incrementalIntake(docs, spark.read.parquet(liveDir)), Some(sinkDir)) { mb =>
+      // hashes are unique per batch: incrementalIntake ends in
+      // dropDuplicatesWithinWatermark("content_hash")
+      WriteBack(Some(mb.rows),
+        index = r => Artifacts.append(r.select(col("content_hash")), liveDir))
+    }
   }
 
-  /** The partitions of a persisted micro-batch that hold rows, or None
-    * for an empty batch, found by one job over the batch. Spark's file
-    * writer always writes partition 0, so appending a batch whose rows
-    * sit elsewhere — or the no-data micro-batch that advances the
-    * watermark after each data batch — would leave a 0-row file that
-    * every later read of the directory lists and opens.
+  /** One micro-batch inside [[intakeLoop]]: the pinned batch `rows`, its
+    * `id`, and the frames and broadcasts the step pins or ships for it,
+    * all released when the batch ends, whether its write-back threw or not.
+    */
+  private final class MicroBatch(batch: DataFrame, val id: Long) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    /** `df`, persisted until the batch ends. */
+    def pin(df: DataFrame): DataFrame = { held += (() => df.unpersist()); df.persist() }
+    /** `b`, destroyed when the batch ends. */
+    def ship[T](b: Broadcast[T]): Broadcast[T] = { held += (() => b.destroy()); b }
+    val rows: DataFrame = pin(batch)
+    def release(): Unit = held.reverseIterator.foreach(_())
+  }
+
+  /** What an intake step hands back to [[intakeLoop]]: `rows` for the
+    * sink and then `index`, and the one-row `ledger`. `nRows` is the
+    * count of `rows` when the step has already counted them.
+    */
+  private final case class WriteBack(rows: Option[DataFrame],
+      nRows: Option[Long] = None,
+      index: DataFrame => Unit = _ => (),
+      ledger: Option[DataFrame] = None)
+
+  /** The one micro-batch loop of the intakes. Per batch it pins the
+    * batch ([[MicroBatch]]), runs `step`, and writes back in one order:
+    * rows to `sinkDir`, then to the index, then the ledger row to
+    * `ledgerDir`, each through [[Artifacts.append]]. A `finally` releases
+    * what the batch pinned or shipped, so a write that throws leaves no
+    * cache behind. Empty rows write no file: a counted 0 skips the sink
+    * and the index with no job, uncounted rows go through
+    * [[rowPartitions]]; the ledger is always one row.
+    *
+    * Delivery is AT-LEAST-ONCE, with or without a `checkpointLocation`:
+    * the appends ignore the batch id, so a batch replayed after a crash
+    * between its appends and its commit-log entry appends again (a
+    * replayed decontamIntake batch was measured writing every row twice).
+    */
+  private def intakeLoop(stream: DataFrame, sinkDir: Option[String],
+      ledgerDir: Option[String] = None)(step: MicroBatch => WriteBack)
+      : DataStreamWriter[Row] =
+    stream.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val mb = new MicroBatch(batch, batchId)
+        try {
+          val wb = step(mb)
+          val rows = wb.rows.flatMap(r => wb.nRows match {
+            case Some(n) => Option.when(n > 0)(r)
+            case None => rowPartitions(r)
+          })
+          rows.foreach { r => sinkDir.foreach(Artifacts.append(r, _)); wb.index(r) }
+          for (l <- wb.ledger; dir <- ledgerDir) Artifacts.append(l, dir)
+        } finally mb.release()
+      }
+
+  /** The partitions of `b` that hold rows, or None when it has none,
+    * found by one job over `b` (map-only over a pinned batch). Spark's
+    * file writer always writes partition 0, so appending rows that sit
+    * elsewhere — or the no-data micro-batch that advances the watermark
+    * after each data batch — would leave a 0-row file that every later
+    * read of the directory lists and opens. The pruned frame wraps the
+    * same RDD, so writing it re-runs none of the probe's shuffles.
     */
   private def rowPartitions(b: DataFrame): Option[DataFrame] = {
     val rdd = org.apache.spark.sql.graftbridge.Bridge.toInternalRdd(b)
@@ -337,21 +379,13 @@ object EventStreams {
     * same torn-append/compaction-cadence story).
     */
   def maintainedNearIntake(docs: DataFrame, indexDir: String, sinkDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val spark = docs.sparkSession
     val liveDir = Artifacts.resolveLive(spark, indexDir)
     val idx = Artifacts.loadMinhashIndex(spark, liveDir)
-    val curated = incrementalNearIntake(docs, idx)
-    curated.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.persist()
-        rowPartitions(b).foreach { rows =>
-          Artifacts.append(rows, sinkDir)
-          Artifacts.appendMinhashIndex(rows, liveDir)
-        }
-        b.unpersist()
-        ()
-      }
+    intakeLoop(incrementalNearIntake(docs, idx), Some(sinkDir)) { mb =>
+      WriteBack(Some(mb.rows), index = Artifacts.appendMinhashIndex(_, liveDir))
+    }
   }
 
   /** The at-rest ANN index's streaming maintenance twin of
@@ -373,36 +407,31 @@ object EventStreams {
     * as index build — per batch, batch-sized work, one clustered write
     * per touched cell; float vectors ride the batch once and land in the
     * primary store, never a shuffle. Returns the wired writer — callers
-    * `.start()` it (with a checkpointLocation for exactly-once).
+    * `.start()` it; delivery is [[intakeLoop]]'s at-least-once.
     */
   def maintainedIvfIntake(vecs: DataFrame,
       model: graft.operators.Similarity.IvfPqModel, indexDir: String,
       sinkDir: String, maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.persist()
-        Artifacts.append(b, sinkDir)
-        graft.operators.Similarity.appendToIvfPqIndex(b, model, indexDir)
-        b.unpersist()
-        // maintenance cadence (maintainEvery > 0): run the layout-health
-        // tick every N batches. foreachBatch serializes, and this loop is
-        // the index's only appender, so the compaction's quiesced-index
-        // precondition holds BY CONSTRUCTION here — the one place the
-        // trigger can run with no external coordination. A healthy
-        // layout makes the tick a metadata-only no-op.
-        if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0)
-          Artifacts.maintainIvfPqIndex(
-            b.sparkSession, indexDir)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    intakeLoop(vecs, Some(sinkDir)) { mb =>
+      WriteBack(Some(mb.rows), index = { r =>
+        graft.operators.Similarity.appendToIvfPqIndex(r, model, indexDir)
+        // maintenance cadence (maintainEvery > 0): the layout-health tick
+        // after every Nth batch's append (a batch with no rows skips it).
+        // The loop serializes batches and is the index's only appender,
+        // so the compaction's quiesced-index precondition holds BY
+        // CONSTRUCTION here. A healthy layout makes the tick a no-op.
+        if (maintainEvery > 0 && (mb.id + 1) % maintainEvery == 0)
+          Artifacts.maintainIvfPqIndex(r.sparkSession, indexDir)
+      })
+    }
 
   /** [[maintainedNearIntake]] with FULL Jaccard verification — exact
     * batch-equivalent semantics per micro-batch, where the streaming-
     * native gate drops on ANY band collision (conservative: a chance
     * collision below the threshold costs a good doc). Here each
-    * micro-batch runs the real batch operators inside `foreachBatch`
-    * (the standard Structured Streaming escape hatch for per-batch
+    * micro-batch runs the real batch operators inside [[intakeLoop]]'s
+    * step (the standard Structured Streaming escape hatch for per-batch
     * relational work): verified index hits via
     * [[graft.operators.Dedup.incrementalNearDup]] (candidates at
     * `threshold`+ only), in-batch near-dups collapsed transitively via
@@ -418,7 +447,7 @@ object EventStreams {
     */
   def maintainedNearIntakeVerified(docs: DataFrame, indexDir: String,
       sinkDir: String, threshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     verifiedNearLoop(docs, indexDir, sinkDir, threshold)((_, _) => ())
 
   /** The per-batch body of the verified near-dup intakes: the verified
@@ -431,34 +460,29 @@ object EventStreams {
     */
   private def verifiedNearLoop(docs: DataFrame, indexDir: String, sinkDir: String,
       threshold: Double)(onEdges: (DataFrame, DataFrame) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val spark = docs.sparkSession
-    docs.filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.persist()
-        val liveDir = Artifacts.resolveLive(spark, indexDir)
-        val idx = Artifacts.loadMinhashIndex(spark, liveDir)
-        val hitPairs = Dedup
-          .incrementalNearDup(b, idx, threshold)
-          .select(col("new_id"), col("corpus_id"))
-        val inBatchPairs = Dedup
-          .minhashNearDups(b, threshold, Dedup.IndexShingle, Dedup.IndexBands,
-            Dedup.IndexRowsPerBand)
-          .select(col("id_a"), col("id_b"))
-        onEdges(hitPairs, inBatchPairs)
-        val keep = Dedup.dedupKeepSetClosure(b, inBatchPairs)
-        val indexHits = hitPairs.select(col("new_id").as("doc_id")).distinct()
-        val survivors = b
-          .join(keep, Seq("doc_id"), "left_semi")
-          .join(indexHits, Seq("doc_id"), "left_anti")
-          .persist()
-        Artifacts.append(survivors, sinkDir)
-        Artifacts.appendMinhashIndex(survivors, liveDir)
-        survivors.unpersist()
-        b.unpersist()
-        ()
-      }
+    intakeLoop(docs.filter(TextAnalysis.heuristicGate(col("text"), IntakeMinQuality)),
+      Some(sinkDir)) { mb =>
+      val b = mb.rows
+      val liveDir = Artifacts.resolveLive(spark, indexDir)
+      val idx = Artifacts.loadMinhashIndex(spark, liveDir)
+      val hitPairs = Dedup
+        .incrementalNearDup(b, idx, threshold)
+        .select(col("new_id"), col("corpus_id"))
+      val inBatchPairs = Dedup
+        .minhashNearDups(b, threshold, Dedup.IndexShingle, Dedup.IndexBands,
+          Dedup.IndexRowsPerBand)
+        .select(col("id_a"), col("id_b"))
+      onEdges(hitPairs, inBatchPairs)
+      val keep = Dedup.dedupKeepSetClosure(b, inBatchPairs)
+      val indexHits = hitPairs.select(col("new_id").as("doc_id")).distinct()
+      // pinned: the row probe and both appends read the survivors
+      val survivors = mb.pin(b
+        .join(keep, Seq("doc_id"), "left_semi")
+        .join(indexHits, Seq("doc_id"), "left_anti"))
+      WriteBack(Some(survivors), index = Artifacts.appendMinhashIndex(_, liveDir))
+    }
   }
 
   /** [[maintainedNearIntakeVerified]] that ALSO maintains the dedup
@@ -480,7 +504,7 @@ object EventStreams {
     */
   def maintainedClusterIntake(docs: DataFrame, indexDir: String, sinkDir: String,
       labelsDir: String, threshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val spark = docs.sparkSession
     verifiedNearLoop(docs, indexDir, sinkDir, threshold) { (hitPairs, inBatchPairs) =>
       // label maintenance runs before the intake step (dup docs must
@@ -540,7 +564,15 @@ object EventStreams {
   case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
   case class UserSession(user_id: Long, n_events: Long, total_value: Double,
-      last_ts: Long)
+      last_ts: Long) {
+    /** The running totals once `evs` arrive: one more event each, their
+      * values added, the latest event time (epoch ms) kept.
+      */
+    def add(evs: Seq[Ev]): UserSession = copy(
+      n_events = n_events + evs.size,
+      total_value = total_value + evs.map(_.value).sum,
+      last_ts = math.max(last_ts, evs.map(_.ts.getTime).foldLeft(0L)(math.max)))
+  }
   case class SessionUpdate(user_id: Long, n_events: Long, total_value: Double)
 
   /** The same running-totals state machine on the Spark 4 arbitrary-state
@@ -551,23 +583,15 @@ object EventStreams {
     * the forward path for custom streaming state; `runningUserTotals`
     * (flatMapGroupsWithState) is kept as the v1 form.
     */
-  class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, SessionUpdate] {
-    @transient private var totals: org.apache.spark.sql.streaming.ValueState[UserSession] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+  class RunningTotalsProcessor extends StatefulProcessor[Long, Ev, SessionUpdate] {
+    @transient private var totals: ValueState[UserSession] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       totals = getHandle.getValueState[UserSession]("totals",
-        org.apache.spark.sql.Encoders.product[UserSession],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[UserSession], TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[SessionUpdate] = {
-      val buf = rows.toSeq
+        timerValues: TimerValues): Iterator[SessionUpdate] = {
       val prev = if (totals.exists()) totals.get() else UserSession(uid, 0L, 0.0, 0L)
-      val next = UserSession(uid,
-        prev.n_events + buf.size,
-        prev.total_value + buf.map(_.value).sum,
-        math.max(prev.last_ts, buf.map(_.ts.getTime).foldLeft(0L)(math.max)))
+      val next = prev.add(rows.toSeq)
       totals.update(next)
       Iterator(SessionUpdate(uid, next.n_events, next.total_value))
     }
@@ -578,9 +602,7 @@ object EventStreams {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Append())
   }
 
   /** ONLINE benchmark decontamination — the streaming twin of
@@ -603,18 +625,10 @@ object EventStreams {
     */
   def decontamIntake(docs: DataFrame, bench: DataFrame, sinkDir: String,
       maxBroadcastGrams: Long = TextAnalysis.IntakeMaxBroadcastGrams)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     val grams = TextAnalysis.benchGrams(bench, TextAnalysis.BenchGramN, maxBroadcastGrams)
     val flag = grams.intakeFlag(col("text"), 0.01)
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the shuffle degrade reads the batch twice (flagged rows, then
-        // the anti-join); the exact label reads it once
-        if (!grams.broadcastUsed) batch.persist()
-        Artifacts.append(grams.dropFlagged(batch, flag), sinkDir)
-        if (!grams.broadcastUsed) batch.unpersist()
-        ()
-      }
+    intakeLoop(docs, Some(sinkDir))(mb => WriteBack(Some(grams.dropFlagged(mb.rows, flag))))
   }
 
   /** ONLINE distribution-drift alarm — the streaming twin of the
@@ -633,18 +647,16 @@ object EventStreams {
   def driftAlarmIntake(docs: DataFrame,
       ref: TextAnalysis.LenHistogram, sinkDir: String,
       tau: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val counts = TextAnalysis.lenBucketCounts(batch)
-        val n = counts.values.sum
-        val jsd = TextAnalysis.jsdVsRef(counts, ref)
-        val spark = batch.sparkSession
-        import spark.implicits._
-        Artifacts.append(Seq((batchId, n, math.rint(jsd * 1e6) / 1e6, jsd > tau))
-          .toDF("batch_id", "n_docs", "jsd_r", "alarm"), sinkDir)
-        ()
-      }
+      : DataStreamWriter[Row] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    intakeLoop(docs, None, Some(sinkDir)) { mb =>
+      val counts = TextAnalysis.lenBucketCounts(mb.rows)
+      val jsd = TextAnalysis.jsdVsRef(counts, ref)
+      WriteBack(None, ledger = Some(Seq((mb.id, counts.values.sum,
+        math.rint(jsd * 1e6) / 1e6, jsd > tau)).toDF("batch_id", "n_docs", "jsd_r", "alarm")))
+    }
+  }
 
   /** ONLINE query-relevance gate: every incoming doc is scored against a
     * fixed query-term set with the PRE-FIT corpus statistics
@@ -659,14 +671,9 @@ object EventStreams {
   def bm25GateIntake(docs: DataFrame,
       model: TextAnalysis.Bm25Model, sinkDir: String,
       tau: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs
-      .filter(TextAnalysis.bm25Score(model)(col("text")) >= tau)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Artifacts.append(batch, sinkDir)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    intakeLoop(docs.filter(TextAnalysis.bm25Score(model)(col("text")) >= tau),
+      Some(sinkDir))(mb => WriteBack(Some(mb.rows)))
 
   case class SourcedDoc(doc_id: Long, ts: java.sql.Timestamp, source: String,
       text: String)
@@ -696,17 +703,12 @@ object EventStreams {
     * intake throttle.
     */
   class MixBudgetProcessor(targets: Map[String, Long])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SourcedDoc, AdmittedDoc] {
-    @transient private var admitted: org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      admitted = getHandle.getValueState[Long]("admitted",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends StatefulProcessor[String, SourcedDoc, AdmittedDoc] {
+    @transient private var admitted: ValueState[Long] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      admitted = getHandle.getValueState[Long]("admitted", Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(source: String, rows: Iterator[SourcedDoc],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[AdmittedDoc] = {
+        timerValues: TimerValues): Iterator[AdmittedDoc] = {
       val buf = rows.toSeq.sortBy(d => (d.ts.getTime, d.doc_id))
       val prev = if (admitted.exists()) admitted.get() else 0L
       val room = math.max(0L, targets.getOrElse(source, 0L) - prev)
@@ -724,9 +726,7 @@ object EventStreams {
     import docs.sparkSession.implicits._
     docs
       .groupByKey(_.source)
-      .transformWithState(new MixBudgetProcessor(targets),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new MixBudgetProcessor(targets), TimeMode.None(), OutputMode.Append())
   }
 
   /** THE composed ONLINE intake — every serving gate this file proves
@@ -767,7 +767,7 @@ object EventStreams {
     *     pure filter, so the state store holds hashes of docs that
     *     passed quality+relevance, never junk: the [[curateDocs]]
     *     state-size argument, compounded);
-    *  then per micro-batch (`foreachBatch`, serialized), as ONE funnel
+    *  then per micro-batch ([[intakeLoop]], serialized), as ONE funnel
     *  pass over the persisted batch:
     *  6a. index-dedup VERIFY on the bloom-flagged rows only, as a
     *     LABEL. The batch's first action is one aggregate, (rows,
@@ -851,7 +851,7 @@ object EventStreams {
       ledgerDir: String,
       maxBroadcastGrams: Long = TextAnalysis.IntakeMaxBroadcastGrams,
       maxBloomHashes: Long = 10000000L)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(targets.isEmpty || docs.columns.contains("source"),
       "budget admission needs a `source` column")
     val spark = docs.sparkSession
@@ -889,7 +889,7 @@ object EventStreams {
       .withColumn("content_hash", md5(col("text")))
       .withColumn("__maybe_contam", maybeContam)
       // gate 4: index-dedup bloom PROBE (map-only) — the verify join
-      // moved to gate 6a in foreachBatch, so the per-batch plan no
+      // moved to gate 6a in the loop's step, so the per-batch plan no
       // longer re-reads the full index (VERDICT r11 Missing #2)
       .withColumn("__maybe_dup", idxBloom match {
         case Some(bf) => TextHashFunctions.bloom_hit(col("content_hash"), bf)
@@ -908,76 +908,71 @@ object EventStreams {
       val hashes = Encoders.STRING
       val flagged = TextHashFunctions.broadcastSet(
         b.filter(col("__maybe_dup")).select(col("content_hash")).as(hashes))
-      val confirmed = TextHashFunctions.broadcastSet(knownHashes.select(col("content_hash"))
+      try TextHashFunctions.broadcastSet(knownHashes.select(col("content_hash"))
         .filter(TextHashFunctions.set_hit(col("content_hash"), flagged)).as(hashes))
-      flagged.destroy()
-      confirmed
+      finally flagged.destroy()
     }
-    gated.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import spark.implicits._
-        val b = batch.persist()
-        // first action: batch size and bloom-flagged count in one
-        // aggregate. Hashes are unique within a micro-batch (gate 5), so
-        // the flagged count is the distinct flagged-hash count.
-        val sizes = b.agg(count(lit(1)), count_if(col("__maybe_dup"))).head()
-        val nBatch = sizes.getLong(0)
-        val nFlagged = sizes.getLong(1)
-        // empty micro-batches (watermark-advance ticks) produce no
-        // writes and no ledger row
-        if (nBatch > 0) {
-          // gate 6a: index-dedup VERIFY of the bloom-flagged rows, then
-          // a membership label; a batch with no flagged row never
-          // touches the index
-          val dups = if (nFlagged == 0) None else Some(confirmedDups(b))
-          val b1 = dups.fold(b)(d => b.filter(!TextHashFunctions.set_hit(col("content_hash"), d)))
-          // gate 6: the in-scan contamination flag, exact under the
-          // broadcast bound (a filter), bloom-verified above it
-          val clean = grams.dropFlagged(b1, col("__maybe_contam"))
-            .select((srcCols.map(col) :+ col("content_hash")): _*)
-          // gate 7: per-source budget on the REMAINING room, as a label
-          // so the rejected rows still count in the funnel below
-          val labeled = (targets match {
-            case None => clean.withColumn("__admit", lit(true))
-            case Some(t) =>
-              val room = t.toSeq.map { case (s0, tgt) =>
-                (s0, math.max(0L, tgt - admittedSoFar.getOrElse(s0, 0L)))
-              }.toDF("source", "target")
-              Mix.labelByBudget(clean, room, col("source"),
-                Seq(col("ts"), col("doc_id")))
-          }).withColumn("__bucket", TextAnalysis.lenBucket(col("text")))
-            .persist()
-          // gate 8: the whole funnel in one grouped collect,
-          // ≤ 21·|sources|·2 rows: n_clean, the drift histogram on the
-          // corpus-candidate profile, n_admitted and the per-source
-          // budget ledger
-          val source = if (targets.isDefined) col("source") else lit(null).cast("string")
-          val funnel = labeled.groupBy(col("__bucket"), col("__admit"), source)
-            .count().collect()
-            .map(r => (r.getLong(0).toInt, r.getBoolean(1), r.getString(2), r.getLong(3)))
-          val nClean = funnel.map(_._4).sum
-          val admittedRows = funnel.filter(_._2)
-          val nAdmitted = admittedRows.map(_._4).sum
-          val jsd = TextAnalysis.jsdVsRef(
-            funnel.groupMapReduce(_._1)(_._4)(_ + _), ref)
-          if (targets.isDefined)
-            admittedRows.foreach { case (_, _, s0, c) =>
-              admittedSoFar(s0) = admittedSoFar.getOrElse(s0, 0L) + c }
-          // then sink + index append-back + funnel/alarm ledger
-          val a = labeled.filter(col("__admit"))
-            .select((srcCols.map(col) :+ col("content_hash")): _*)
-          Artifacts.append(a, sinkDir)
-          Artifacts.append(a.select(col("content_hash")), liveIndex)
-          Artifacts.append(Seq((batchId, nBatch, nClean, nAdmitted,
+    import spark.implicits._
+    intakeLoop(gated, Some(sinkDir), Some(ledgerDir)) { mb =>
+      val b = mb.rows
+      // first action: batch size and bloom-flagged count in one
+      // aggregate. Hashes are unique within a micro-batch (gate 5), so
+      // the flagged count is the distinct flagged-hash count.
+      val sizes = b.agg(count(lit(1)), count_if(col("__maybe_dup"))).head()
+      val nBatch = sizes.getLong(0)
+      val nFlagged = sizes.getLong(1)
+      // empty micro-batches (watermark-advance ticks) produce no
+      // writes and no ledger row
+      if (nBatch == 0) WriteBack(None)
+      else {
+        // gate 6a: index-dedup VERIFY of the bloom-flagged rows, then
+        // a membership label; a batch with no flagged row never
+        // touches the index
+        val dups = Option.when(nFlagged > 0)(mb.ship(confirmedDups(b)))
+        val b1 = dups.fold(b)(d => b.filter(!TextHashFunctions.set_hit(col("content_hash"), d)))
+        // gate 6: the in-scan contamination flag, exact under the
+        // broadcast bound (a filter), bloom-verified above it
+        val clean = grams.dropFlagged(b1, col("__maybe_contam"))
+          .select((srcCols.map(col) :+ col("content_hash")): _*)
+        // gate 7: per-source budget on the REMAINING room, as a label
+        // so the rejected rows still count in the funnel below
+        val labeled = mb.pin((targets match {
+          case None => clean.withColumn("__admit", lit(true))
+          case Some(t) =>
+            val room = t.toSeq.map { case (s0, tgt) =>
+              (s0, math.max(0L, tgt - admittedSoFar.getOrElse(s0, 0L)))
+            }.toDF("source", "target")
+            Mix.labelByBudget(clean, room, col("source"),
+              Seq(col("ts"), col("doc_id")))
+        }).withColumn("__bucket", TextAnalysis.lenBucket(col("text"))))
+        // gate 8: the whole funnel in one grouped collect,
+        // ≤ 21·|sources|·2 rows: n_clean, the drift histogram on the
+        // corpus-candidate profile, n_admitted and the per-source
+        // budget ledger
+        val source = if (targets.isDefined) col("source") else lit(null).cast("string")
+        val funnel = labeled.groupBy(col("__bucket"), col("__admit"), source)
+          .count().collect()
+          .map(r => (r.getLong(0).toInt, r.getBoolean(1), r.getString(2), r.getLong(3)))
+        val nClean = funnel.map(_._4).sum
+        val admittedRows = funnel.filter(_._2)
+        val nAdmitted = admittedRows.map(_._4).sum
+        val jsd = TextAnalysis.jsdVsRef(
+          funnel.groupMapReduce(_._1)(_._4)(_ + _), ref)
+        if (targets.isDefined)
+          admittedRows.foreach { case (_, _, s0, c) =>
+            admittedSoFar(s0) = admittedSoFar.getOrElse(s0, 0L) + c }
+        // then sink + index append-back (the funnel counted the admitted
+        // rows) + funnel/alarm ledger
+        WriteBack(
+          Some(labeled.filter(col("__admit"))
+            .select((srcCols.map(col) :+ col("content_hash")): _*)),
+          Some(nAdmitted),
+          index = a => Artifacts.append(a.select(col("content_hash")), liveIndex),
+          ledger = Some(Seq((mb.id, nBatch, nClean, nAdmitted,
             math.rint(jsd * 1e6) / 1e6, jsd > tauDrift))
-            .toDF("batch_id", "n_batch", "n_clean", "n_admitted",
-              "jsd_r", "alarm"), ledgerDir)
-          labeled.unpersist()
-          dups.foreach(_.destroy())
-        }
-        b.unpersist()
-        ()
+            .toDF("batch_id", "n_batch", "n_clean", "n_admitted", "jsd_r", "alarm")))
       }
+    }
   }
 
   case class ClosedSession(user_id: Long, n_events: Long, total_value: Double,
@@ -992,32 +987,23 @@ object EventStreams {
     * timer per live user, cleared on close.
     */
   class SessionCloseProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, ClosedSession] {
-    @transient private var sess: org.apache.spark.sql.streaming.ValueState[UserSession] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+      extends StatefulProcessor[Long, Ev, ClosedSession] {
+    @transient private var sess: ValueState[UserSession] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       sess = getHandle.getValueState[UserSession]("sess",
-        org.apache.spark.sql.Encoders.product[UserSession],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[UserSession], TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[ClosedSession] = {
-      val buf = rows.toSeq
+        timerValues: TimerValues): Iterator[ClosedSession] = {
       val prev = if (sess.exists()) sess.get() else UserSession(uid, 0L, 0.0, 0L)
-      val next = UserSession(uid,
-        prev.n_events + buf.size,
-        prev.total_value + buf.map(_.value).sum,
-        math.max(prev.last_ts, buf.map(_.ts.getTime).foldLeft(0L)(math.max)))
+      val next = prev.add(rows.toSeq)
       sess.update(next)
       // slide the single close timer to the new last-event + gap
       if (prev.n_events > 0) getHandle.deleteTimer(prev.last_ts + gapMs)
       getHandle.registerTimer(next.last_ts + gapMs)
       Iterator.empty
     }
-    override def handleExpiredTimer(uid: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[ClosedSession] = {
+    override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[ClosedSession] = {
       val s = sess.get()
       sess.clear()
       Iterator(ClosedSession(uid, s.n_events, s.total_value, s.last_ts / 1000L))
@@ -1034,8 +1020,7 @@ object EventStreams {
       .withWatermark("ts", "10 seconds")
       .groupByKey(_.user_id)
       .transformWithState(new SessionCloseProcessor(gapMinutes * 60000L),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Custom per-key state machine (the mapGroupsWithState escape hatch for
@@ -1055,12 +1040,7 @@ object EventStreams {
       .flatMapGroupsWithState[UserSession, SessionUpdate](OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (uid: Long, evs: Iterator[Ev], state: GroupState[UserSession]) =>
-          val buf = evs.toSeq
-          val prev = state.getOption.getOrElse(UserSession(uid, 0L, 0.0, 0L))
-          val next = UserSession(uid,
-            prev.n_events + buf.size,
-            prev.total_value + buf.map(_.value).sum,
-            math.max(prev.last_ts, buf.map(_.ts.getTime).foldLeft(0L)(math.max)))
+          val next = state.getOption.getOrElse(UserSession(uid, 0L, 0.0, 0L)).add(evs.toSeq)
           state.update(next)
           Iterator(SessionUpdate(uid, next.n_events, next.total_value))
       }
@@ -1261,7 +1241,7 @@ object EventStreams {
     * key sees new observations — consumers keep, per `(key, version)`,
     * the closed row if one exists, else the LATEST open row (exactly
     * the upsert a MERGE INTO a dimension table performs; the spec's
-    * foreachBatch sink materializes that reduction and asserts
+    * micro-batch sink materializes that reduction and asserts
     * batch ≡ stream against q_scd2_intervals).
     *
     * Ordering contract (same as budgetedMixIntake's admission order):

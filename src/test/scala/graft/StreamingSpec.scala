@@ -300,10 +300,14 @@ class StreamingSpec extends SparkTestBase {
       q.processAllAvailable()
       mem.addData(EventStreams.Doc(3, ts(2), clean2))
       q.processAllAvailable()
+      // a batch whose only doc is contaminated: nothing goes back
+      mem.addData(EventStreams.Doc(4, ts(3), leaked))
+      q.processAllAvailable()
     } finally q.stop()
     val kept = spark.read.parquet(sinkDir).select(col("doc_id"))
       .as[Long].collect().toSet
     assert(kept == Set(2L, 3L), s"kept $kept")
+    assert(zeroRowFiles(sinkDir).isEmpty, s"0-row files: ${zeroRowFiles(sinkDir)}")
     // batch ≡ stream: the batch operator on the same input keeps the
     // same docs (per-doc decision is stateless — exact equivalence)
     val all = Seq((1L, leaked), (2L, clean1), (3L, clean2))
@@ -902,7 +906,13 @@ class StreamingSpec extends SparkTestBase {
       val kept = spark.read.parquet(sinkDir).select(col("doc_id"))
         .as[Long].collect().toSet
       assert(kept == Set(12L, 13L), s"kept $kept")
+      // a second batch that is only a dup of the first: a verified index
+      // hit, so nothing goes back to the sink or the index
+      mem.addData(EventStreams.Doc(15, ts(4), novel))
+      q.processAllAvailable()
     } finally q.stop()
+    assert(zeroRowFiles(sinkDir).isEmpty && zeroRowFiles(indexDir).isEmpty,
+      s"0-row files: ${zeroRowFiles(sinkDir) ++ zeroRowFiles(indexDir)}")
     // verify the jaccard premises the test leans on
     val j = Seq((1L, corpusDoc)).toDF("doc_id", "text")
       .crossJoin(Seq((2L, heavyDup), (3L, lightOverlap)).toDF("id2", "t2"))
@@ -1129,10 +1139,14 @@ class StreamingSpec extends SparkTestBase {
       q.processAllAvailable()
       mem.addData(EventStreams.Doc(3, ts(2), "vector hash padding words"))
       q.processAllAvailable()
+      // a batch whose only doc scores below tau: nothing goes back
+      mem.addData(EventStreams.Doc(4, ts(3), offTopic))
+      q.processAllAvailable()
     } finally q.stop()
     val kept = spark.read.parquet(sinkDir).select(col("doc_id"))
       .as[Long].collect().toSet
     assert(kept == Set(1L, 3L), s"kept $kept")
+    assert(zeroRowFiles(sinkDir).isEmpty, s"0-row files: ${zeroRowFiles(sinkDir)}")
     // batch ≡ stream on the same rows
     val batchKept = Seq((1L, relevant), (2L, offTopic),
       (3L, "vector hash padding words")).toDF("doc_id", "text")
@@ -1561,6 +1575,9 @@ class StreamingSpec extends SparkTestBase {
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(ledger == Seq((6L, 4L, 3L), (1L, 1L, 0L)), s"ledger $ledger")
+    // the unflagged batch admits nothing: no sink or index file
+    assert(zeroRowFiles(f.sinkDir).isEmpty && zeroRowFiles(f.indexDir).isEmpty,
+      s"0-row files: ${zeroRowFiles(f.sinkDir) ++ zeroRowFiles(f.indexDir)}")
   }
 
   test("curationIntake job budget for a dup-heavy batch: the index is " +
@@ -1590,6 +1607,75 @@ class StreamingSpec extends SparkTestBase {
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(ledger == Seq((69L, 2L, 2L)), s"ledger $ledger")
+  }
+
+  test("maintainedIntake per-micro-batch job budget") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val sinkDir = s"${f.tmp}/maintained_sink"
+    val rec = new JobRecorder
+    val mem = MemoryStream[EventStreams.Doc]
+    val q = EventStreams.maintainedIntake(mem.toDF(), f.indexDir, sinkDir).start()
+    val Seq(batch) = rec.during {
+      try feedBatches(mem, q, Seq(Seq(EventStreams.Doc(1, ts(0), f.knownDoc),
+        EventStreams.Doc(2, ts(1), f.novelA), EventStreams.Doc(3, ts(2), f.novelB))))
+      finally q.stop()
+    }
+    // the count measured before the intakes shared one loop: this
+    // intake already paid the rows-per-partition probe then
+    val jobs = rec.batchJobs(q.id, batch)
+    assert(jobs.size <= 4, s"maintainedIntake batch ran ${jobs.size} jobs")
+    val kept = spark.read.parquet(sinkDir).select(col("doc_id")).as[Long].collect().toSet
+    assert(kept == Set(2L, 3L), s"kept $kept")
+  }
+
+  test("maintainedNearIntakeVerified per-micro-batch job budget") {
+    implicit val sc = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_vbudget").toString
+    val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
+    val corpusDoc = "the quick brown fox jumps over the lazy dog near the " +
+      "river bank today while the sun is high and the water is clear"
+    graft.operators.Artifacts.saveMinhashIndex(
+      graft.operators.Dedup.minhashIndex(
+        Seq((1L, corpusDoc)).toDF("doc_id", "text")), indexDir)
+    val heavyDup = "the quick brown fox jumps over the lazy dog near the " +
+      "river bank today while the sun is high and the water is warm"
+    val novel = "a new document with the words that pass the quality gate " +
+      "and the language gate for the test of the incremental intake path"
+    val rec = new JobRecorder
+    val mem = MemoryStream[EventStreams.Doc]
+    val q = EventStreams.maintainedNearIntakeVerified(mem.toDF(), indexDir, sinkDir).start()
+    val Seq(batch) = rec.during {
+      try feedBatches(mem, q, Seq(Seq(EventStreams.Doc(11, ts(0), heavyDup),
+        EventStreams.Doc(12, ts(1), novel), EventStreams.Doc(13, ts(2), novel))))
+      finally q.stop()
+    }
+    // the 42 jobs measured before the intakes shared one loop, plus the
+    // rows-per-partition probe the loop adds (it measures 32)
+    val jobs = rec.batchJobs(q.id, batch)
+    assert(jobs.size <= 43, s"verified batch ran ${jobs.size} jobs")
+    val kept = spark.read.parquet(sinkDir).select(col("doc_id")).as[Long].collect().toSet
+    assert(kept == Set(12L), s"kept $kept")
+  }
+
+  test("maintainedIntake: a write-back that throws still releases the batch") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    // a sink path that is a regular file: the sink append throws
+    val sinkDir = s"${f.tmp}/sink_is_a_file"
+    java.nio.file.Files.write(java.nio.file.Paths.get(sinkDir), Array[Byte](1))
+    val mem = MemoryStream[EventStreams.Doc]
+    val wired = EventStreams.maintainedIntake(mem.toDF(), f.indexDir, sinkDir)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val q = wired.start()
+    try {
+      mem.addData(EventStreams.Doc(1, ts(0), f.novelA))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- cachedBefore
+    assert(left.isEmpty, s"failed batch left cached RDDs $left")
   }
 
   test("decontamIntake under the broadcast bound: a batch is a map-only " +
