@@ -164,7 +164,7 @@ object Bench {
       Harness.timeMedian("[bench] sentinel q1_agg", runs)(query("q1_agg", sfDir)())
 
     import graft.operators.{Recommend, Similarity, TextAnalysis}
-    import graft.queries.{PipelineQueries, SimilarityQueries, TextQueries}
+    import graft.queries.{ContextMemo, PipelineQueries, SimilarityQueries, TextQueries}
     // fit section, timed SEPARATELY from the headline (VERDICT r4
     // #2/#3/#9): at scale these are BUILD artifacts — fit once on a
     // bounded sample, shipped to every serving query — so benching a
@@ -178,14 +178,15 @@ object Bench {
     // recounts (q_item_neighbors).
     def docs = Tables.load(spark, sfDir, "documents")
     def emb = Tables.load(spark, sfDir, "embeddings")
+    // q_ivfpq_write writes a fresh index directory on every run
+    val ivfWrites = new java.util.concurrent.atomic.AtomicInteger
     val fit = runSection(Section("fit", "fit ", Seq(
       Line("q_ivfpq_fit", () => Similarity.fitIvfPq(emb),
         () => SimilarityQueries.ivfpqModel(spark, sfDir)),
-      Line("q_ivfpq_write", () => {
-        val dir = java.nio.file.Files.createTempDirectory("bench_ivf").toString
-        Similarity.writeIvfPqIndex(emb,
-          SimilarityQueries.ivfpqModel(spark, sfDir), s"$dir/idx")
-      }, () => SimilarityQueries.ivfIndexDir(spark, sfDir)),
+      Line("q_ivfpq_write", () => ContextMemo.dir(spark.sparkContext,
+          s"bench_ivf_${ivfWrites.incrementAndGet()}")(Similarity.writeIvfPqIndex(emb,
+            SimilarityQueries.ivfpqModel(spark, sfDir), _)),
+        () => SimilarityQueries.ivfIndexDir(spark, sfDir)),
       Line("q_bpe_fit", () => {
         val vocab = docs
           .select(explode(graft.operators.Dedup.tokens(col("text"))).as("w"))
@@ -227,8 +228,8 @@ object Bench {
     // itself (VERDICT r10 Missing #3: the scale curve of MLlib ALS). The
     // ALS fit (the reference's flagship build artifact, als.py:87) is
     // timed as a raw fit on exactly the q_als_* train input; its populate
-    // persists the model, so the q_als_map line measures the post-fit
-    // lifecycle (recommend + distributed eval).
+    // fills the model memo q_als_map serves from, so that line measures
+    // the post-fit lifecycle (recommend + distributed eval).
     val mlDir = sys.env.getOrElse("SPARK_GRAFT_ML_DIR",
       new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath)
     if (!new java.io.File(mlDir).isDirectory)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.ContextMemo
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -77,7 +78,7 @@ object IntakeSoak {
     val sources = base.map(_._2).distinct
     val targets = Some(sources.map(s => s -> 100000000L).toMap)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft_intake_soak").toString
+    val tmp = ContextMemo.dir(spark.sparkContext, "intake_soak")(_ => ())
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val ledgerDir = s"$tmp/ledger"
     // seed the index (resolveLive's flat-dir contract); the pregrown
@@ -94,7 +95,7 @@ object IntakeSoak {
     // content into a THROWAWAY sink/index absorbs JIT/codegen before the
     // timed loop (the Bench/Soak discipline)
     locally {
-      val wtmp = java.nio.file.Files.createTempDirectory("graft_intake_warm").toString
+      val wtmp = ContextMemo.dir(spark.sparkContext, "intake_warm")(_ => ())
       Seq("__seed__").toDF("text").select(md5(col("text")).as("content_hash"))
         .write.parquet(s"$wtmp/index")
       val mem = MemoryStream[EventStreams.SourcedDoc]

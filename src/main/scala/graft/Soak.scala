@@ -48,7 +48,7 @@ object Soak {
       .select(col("doc_id"), col("text")).persist()
     queries.count(); bench.count()
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val tmp = graft.queries.ContextMemo.dir(spark.sparkContext, "soak")(_ => ())
     def materialize(name: String, scale: Int): (DataFrame, DataFrame) = {
       val d = s"$tmp/${name}_x$scale"
       (0 until scale).map { i =>

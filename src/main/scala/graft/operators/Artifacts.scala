@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  - BPE merge tables (a few string pairs);
   *  - [[TextAnalysis.QualityLrModel]] (intercept + weights).
   *
-  * The in-process memo TrieMaps (queries.TextQueries / SimilarityQueries)
-  * die with the session — this module is the cross-process form the
+  * The query layer's build memo (queries.ContextMemo) lives only as long
+  * as its process — this module is the cross-process form the
   * incremental operators' scaladocs promise ("built ONCE, persisted as
   * parquet"; Dedup.scala). All persistence is plain parquet written with
   * the session's writer, so the artifacts live next to the data they

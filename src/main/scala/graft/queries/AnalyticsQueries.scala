@@ -56,12 +56,11 @@ object AnalyticsQueries {
     * time, so schema-only consumers — RegistrySpec's all-queries lints,
     * Explain, Bench's ceiling re-constructions — paid the full aggregate
     * once per coPurchaseEdges() call, and each of the 10+ graph queries
-    * paid its own. One job per (SparkContext, dir) now serves them all;
-    * keyed WEAKLY by the context itself via [[ContextMemo]] because a
-    * checkpointed plan dies with it.)
+    * paid its own. One job per (SparkContext, dir) now serves them all
+    * through [[ContextMemo]].)
     */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
-    ContextMemo.getOrElseUpdate(s.sparkContext, s"copurchase:$d") {
+    ContextMemo(s.sparkContext, s"copurchase:$d") {
     val lp = t(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       // pin the cap-window exchange width (byte-tiny → AQE would fold

@@ -1,33 +1,42 @@
 package graft.queries
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Per-SparkContext memo for checkpointed relations (the co-purchase /
-  * perceptual-hash memos). Keyed WEAKLY by the SparkContext object
-  * itself rather than `System.identityHashCode(sc)`: identity hashes
-  * are not unique, so a stale entry from a stopped context could be
-  * served to a new one, and integer-keyed entries for dead contexts
-  * were never evicted — an unbounded memo in long-lived multi-session
-  * JVMs (ADVICE r16). A WeakHashMap entry dies with its context; while
-  * the context is alive the active session holds it strongly, so
-  * nothing is evicted early. A checkpointed plan dies with its context,
-  * which is exactly the lifetime this gives the cached DataFrames.
+/** The one build memo of the engine: every "build once per scale dir,
+  * then reuse" value (fitted models, checkpointed relations) and every
+  * directory written once (media tables, at-rest indexes, bucketed
+  * tables) goes through here, and so does every scratch directory a
+  * main writes.
+  *
+  * Entries are keyed by (SparkContext, key) in one concurrent map and
+  * live for the process: a cached DataFrame holds its session and
+  * through it the context, so no weak key could ever be collected. A
+  * new context never sees another context's entries. Two racing first
+  * calls may both build; one result is kept.
+  *
+  * Directories live under one per-process scratch root made by Spark's
+  * `Utils.createTempDir`, which deletes it at JVM shutdown.
   */
-private[queries] object ContextMemo {
-  private val memos = new java.util.WeakHashMap[
-    SparkContext, scala.collection.concurrent.TrieMap[String, DataFrame]]()
+private[graft] object ContextMemo {
+  private val memo =
+    scala.collection.concurrent.TrieMap.empty[(SparkContext, String), Any]
 
-  def getOrElseUpdate(sc: SparkContext, key: String)
-      (build: => DataFrame): DataFrame = {
-    val m = memos.synchronized {
-      var t = memos.get(sc)
-      if (t == null) {
-        t = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        memos.put(sc, t)
-      }
-      t
+  def apply[T](sc: SparkContext, key: String)(build: => T): T =
+    memo.getOrElseUpdate((sc, key), build).asInstanceOf[T]
+
+  private lazy val root = Bridge.createTempDir("graft_build")
+  private val made = new java.util.concurrent.atomic.AtomicLong
+
+  /** A fresh directory under the scratch root, made and filled by
+    * `write` on the first call for (sc, key); later calls return it.
+    */
+  def dir(sc: SparkContext, key: String)(write: String => Unit): String =
+    apply(sc, s"dir:$key") {
+      val d = new java.io.File(root,
+        s"${made.incrementAndGet()}_${key.replaceAll("[^A-Za-z0-9.]+", "_")}")
+      d.mkdirs()
+      write(d.getPath)
+      d.getPath
     }
-    m.getOrElseUpdate(key, build)
-  }
 }

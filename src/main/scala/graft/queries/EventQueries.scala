@@ -6,6 +6,7 @@ import graft.operators.{AsofJoin, Multimodal}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Event-time analytics (batch form of the streaming pipelines in
   * `graft.streaming.EventStreams` — same groupBy(window)/sessionization
@@ -130,67 +131,22 @@ object EventQueries {
     * parquet files are one row group, unsplittable — so the CPU-bound
     * codec ran nearly serial (q_video_decode: 2 tasks × ~1.1 s); N
     * files give every decode scan N-way parallelism with zero runtime
-    * shuffle of the bytes.
+    * shuffle of the bytes. One table per kind (`c*`: content-seeded,
+    * the phash family's input), each written once per (context, dir).
     */
-  private val mediaDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def imageDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("png", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_png")
-        .toString + "/media"
-      Multimodal.syntheticImageTable(Tables.documents(s, d))
+  private val mediaTables = ListMap[String, DataFrame => DataFrame](
+    "png" -> Multimodal.syntheticImageTable,
+    "wav" -> Multimodal.syntheticAudioTable,
+    "avi" -> Multimodal.syntheticVideoTable,
+    "cpng" -> Multimodal.contentImageTable,
+    "cwav" -> Multimodal.contentAudioTable,
+    "cavi" -> Multimodal.contentVideoTable)
+  private def mediaDir(s: SparkSession, d: String, kind: String): String =
+    ContextMemo.dir(s.sparkContext, s"media_$kind:$d") { dir =>
+      mediaTables(kind)(Tables.documents(s, d))
         .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  private def audioDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("wav", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_wav")
-        .toString + "/media"
-      Multimodal.syntheticAudioTable(Tables.documents(s, d))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  private def videoDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("avi", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_avi")
-        .toString + "/media"
-      Multimodal.syntheticVideoTable(Tables.documents(s, d))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-
-  private def contentImageDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("cpng", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_cpng")
-        .toString + "/media"
-      Multimodal.contentImageTable(Tables.documents(s, d))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-
-  private def contentAudioDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("cwav", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_cwav")
-        .toString + "/media"
-      Multimodal.contentAudioTable(Tables.documents(s, d))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-
-  private def contentVideoDir(s: SparkSession, d: String): String =
-    mediaDirs.getOrElseUpdate(("cavi", d), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_cavi")
-        .toString + "/media"
-      Multimodal.contentVideoTable(Tables.documents(s, d))
-        .repartition(s.sessionState.conf.numShufflePartitions, col("media_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
 
   /** Force-build every memoized media table for a scale dir. The bench
     * warmup calls this at the TIMED sf so no timed `q_media_* /
@@ -200,10 +156,14 @@ object EventQueries {
     * mid-bench, the suspected BENCH_r07 q_audio_decode 6.7× anomaly).
     */
   def materializeMediaDirs(s: SparkSession, d: String): Unit = {
-    imageDir(s, d); audioDir(s, d); videoDir(s, d); contentImageDir(s, d)
-    contentAudioDir(s, d); contentVideoDir(s, d)
-    imagePhash(s, d); audioPhash(s, d); videoPhash(s, d)
+    mediaTables.keys.foreach(mediaDir(s, d, _))
+    mediaHashes.keys.foreach(phash(s, d, _))
   }
+
+  private val mediaHashes = ListMap[String, DataFrame => DataFrame](
+    "cpng" -> (Multimodal.imageAHash(_).toDF()),
+    "cwav" -> (Multimodal.audioAHash(_).toDF()),
+    "cavi" -> (Multimodal.videoAHash(_).toDF()))
 
   /** Memoized CHECKPOINTED perceptual-hash relations per (SparkContext,
     * dir) — the coPurchaseEdges discipline applied to the multimodal
@@ -225,18 +185,10 @@ object EventQueries {
   // join schedule 32 near-empty tasks per stage (measured r17: the
   // whole phash family drifted +0.2-0.3 s/line). repartition(8) is a
   // 16 KB shuffle — decode keeps its width, the checkpoint lands compact.
-  private def imagePhash(s: SparkSession, d: String): DataFrame =
-    ContextMemo.getOrElseUpdate(s.sparkContext, s"img:$d")(
-      Multimodal.imageAHash(s.read.parquet(contentImageDir(s, d)))
-        .toDF().repartition(8).localCheckpoint(true))
-  private def audioPhash(s: SparkSession, d: String): DataFrame =
-    ContextMemo.getOrElseUpdate(s.sparkContext, s"wav:$d")(
-      Multimodal.audioAHash(s.read.parquet(contentAudioDir(s, d)))
-        .toDF().repartition(8).localCheckpoint(true))
-  private def videoPhash(s: SparkSession, d: String): DataFrame =
-    ContextMemo.getOrElseUpdate(s.sparkContext, s"avi:$d")(
-      Multimodal.videoAHash(s.read.parquet(contentVideoDir(s, d)))
-        .toDF().repartition(8).localCheckpoint(true))
+  private def phash(s: SparkSession, d: String, kind: String): DataFrame =
+    ContextMemo(s.sparkContext, s"phash_$kind:$d")(
+      mediaHashes(kind)(s.read.parquet(mediaDir(s, d, kind)))
+        .repartition(8).localCheckpoint(true))
 
   /** One-line JSON provenance for the memoized media tables: row count,
     * total binary bytes, and the meta-declared decode workload (frames /
@@ -255,13 +207,10 @@ object EventQueries {
       val work = workCol.map(_ => s""","work":${r.getAs[Long]("work")}""").getOrElse("")
       s"""{"rows":${r.getAs[Long]("rows")},"bytes":${r.getAs[Long]("bytes")}$work}"""
     }
-    val png = stats(imageDir(s, d), None)
-    val wav = stats(audioDir(s, d), Some("n_samples_meta"))
-    val avi = stats(videoDir(s, d), Some("n_frames_meta"))
-    val cpng = stats(contentImageDir(s, d), None)
-    val cwav = stats(contentAudioDir(s, d), Some("n_samples_meta"))
-    val cavi = stats(contentVideoDir(s, d), Some("n_frames_meta"))
-    s"""{"png":$png,"wav":$wav,"avi":$avi,"cpng":$cpng,"cwav":$cwav,"cavi":$cavi}"""
+    val work = Map("wav" -> "n_samples_meta", "avi" -> "n_frames_meta")
+    mediaTables.keys.map(k =>
+      s""""$k":${stats(mediaDir(s, d, k), work.get(k.stripPrefix("c")))}""")
+      .mkString("{", ",", "}")
   }
 
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100, 0).cast("long")
@@ -1104,7 +1053,7 @@ object EventQueries {
     // the same generator-parity convention as q_media_resize.
     Query("q_media_frames", (s, d) => {
       Multimodal.sampleFrames(
-        Multimodal.videoMeta(s.read.parquet(videoDir(s, d))).toDF()
+        Multimodal.videoMeta(s.read.parquet(mediaDir(s, d, "avi"))).toDF()
           .withColumn("kind", lit("video")), 3)
         .select(col("media_id"), col("n_frames").cast("long").as("n_frames"),
           col("duration_ms"), col("frame_idx").cast("long").as("frame_idx"))
@@ -1136,7 +1085,7 @@ object EventQueries {
     // Rows-only (a JPEG decoder is not SQL-expressible); generator
     // parity + determinism asserted in RecommendSpec.
     Query("q_video_decode", (s, d) => {
-      Multimodal.videoFeatures(s.read.parquet(videoDir(s, d)))
+      Multimodal.videoFeatures(s.read.parquet(mediaDir(s, d, "avi")))
         .toDF()
         .select(col("media_id"),
           col("vid_width").cast("long").as("vid_width"),
@@ -1202,7 +1151,7 @@ object EventQueries {
     // recomputes the expected pixels. Bytes never shuffle; only 4 small
     // ints leave the codec.
     Query("q_image_phash", (s, d) => {
-      imagePhash(s, d)
+      phash(s, d, "cpng")
         .select(col("media_id"), col("img_width"), col("img_height"),
           col("b0"), col("b1"), col("b2"), col("b3"))
         .orderBy(col("media_id"))
@@ -1226,7 +1175,7 @@ object EventQueries {
     // bit-identical rasters by construction, so the verified pair set is
     // the image twin of q_dedup_exact's cluster structure.
     Query("q_image_phash_dups", (s, d) => {
-      graft.operators.Dedup.bandedHashDups(imagePhash(s, d))
+      graft.operators.Dedup.bandedHashDups(phash(s, d, "cpng"))
         .orderBy(col("a"), col("b"))
     }, Sql(
       // the same capped band-bucket candidate algebra as Dedup.bucketPairs
@@ -1274,7 +1223,7 @@ object EventQueries {
     // decoder. Bytes never shuffle; the hash relation is checkpointed
     // once per (context, dir) and shared with the dups query.
     Query("q_audio_phash", (s, d) => {
-      audioPhash(s, d)
+      phash(s, d, "cwav")
         .select(col("media_id"), col("n_samples"),
           col("b0"), col("b1"), col("b2"), col("b3"))
         .orderBy(col("media_id"))
@@ -1294,7 +1243,7 @@ object EventQueries {
     // documents get bit-identical WAVs by construction, so the verified
     // pair set is the audio twin of q_dedup_exact's cluster structure.
     Query("q_audio_phash_dups", (s, d) => {
-      graft.operators.Dedup.bandedHashDups(audioPhash(s, d))
+      graft.operators.Dedup.bandedHashDups(phash(s, d, "cwav"))
         .orderBy(col("a"), col("b"))
     }, Sql(
       // same capped band-bucket candidate algebra as the image twin
@@ -1342,8 +1291,8 @@ object EventQueries {
           graft.operators.Dedup.bandHashBuckets(ph))
           .select(lit(tag).as("modality"), col("n_buckets"),
             col("max_bucket"), col("n_truncated"), col("ids_dropped"))
-      side("audio", audioPhash(s, d))
-        .unionByName(side("image", imagePhash(s, d)))
+      side("audio", phash(s, d, "cwav"))
+        .unionByName(side("image", phash(s, d, "cpng")))
         .orderBy(col("modality"))
     }, Sql(
       // bucket health of both modalities' band relations (cap 256, the
@@ -1377,7 +1326,7 @@ object EventQueries {
     // Multimodal dedup becomes probe-and-append maintainable instead
     // of rebuild-only. Fully oracled via the shared phash replay CTEs.
     Query("q_image_dedup_incremental", (s, d) => {
-      incrementalMediaDedup(imagePhash(s, d))
+      incrementalMediaDedup(phash(s, d, "cpng"))
     }, Sql(
       // incremental image dedup: the index side (media_id%10<>3) capped
       // at 256 per (band,bval) in id order — the bandHashIndex cap — the
@@ -1414,7 +1363,7 @@ object EventQueries {
     // verify fetches hashes by matched id. Fully oracled via the shared
     // audio-phash replay CTEs.
     Query("q_audio_dedup_incremental", (s, d) => {
-      incrementalMediaDedup(audioPhash(s, d))
+      incrementalMediaDedup(phash(s, d, "cwav"))
     }, Sql(
       // incremental audio dedup: same algebra over the audio-phash bands
       // (index side capped at 256 per (band,bval) in id order, batch side
@@ -1450,7 +1399,7 @@ object EventQueries {
     // pixels are not replayable arithmetic — planted-dup +
     // discrimination census in RecommendSpec instead.
     Query("q_video_phash", (s, d) => {
-      videoPhash(s, d)
+      phash(s, d, "cavi")
         .select(col("media_id"), col("n_frames"),
           col("b0"), col("b1"), col("b2"), col("b3"))
         .orderBy(col("media_id"))
@@ -1477,7 +1426,7 @@ object EventQueries {
       val phPlanted = Multimodal.videoAHash(
         Multimodal.contentVideoTable(plantedDocs)).toDF()
       graft.operators.Dedup.bandedHashDups(
-        videoPhash(s, d).unionByName(phPlanted))
+        phash(s, d, "cavi").unionByName(phPlanted))
         .orderBy(col("a"), col("b"))
     }, Exempt(
       "PERMANENTLY exempt (lossy JPEG pixels); planted-witness form — re-keyed copies ride the query so the row set is never vacuously empty; exact pair-set + noise-rejection test in RecommendSpec")),
@@ -1491,7 +1440,7 @@ object EventQueries {
     // pairs are all exact). The oracle replays both rasters from the
     // splitmix arithmetic, perturbation included.
     Query("q_image_phash_stability", (s, d) => {
-      Multimodal.imageAHashStability(s.read.parquet(contentImageDir(s, d)))
+      Multimodal.imageAHashStability(s.read.parquet(mediaDir(s, d, "cpng")))
         .groupBy(col("hamming")).agg(count(lit(1)).as("n_images"))
         .orderBy(col("hamming"))
     }, Sql(
@@ -1514,7 +1463,7 @@ object EventQueries {
     // meets the decoder at the same pixels. Means via ExactRatio, so
     // no ROUND(DOUBLE) seam anywhere in the output.
     Query("q_media_decode", (s, d) => {
-      Multimodal.imageFeatures(s.read.parquet(imageDir(s, d)))
+      Multimodal.imageFeatures(s.read.parquet(mediaDir(s, d, "png")))
         .toDF()
         .select(col("media_id"),
           col("img_width").cast("long").as("img_width"),
@@ -1547,7 +1496,7 @@ object EventQueries {
     // sample with `%`/`//`/`abs`. RMS = sqrt(sum_sq/n)/32768 — IEEE
     // correctly-rounded ops in mirrored order, pinned via det6.
     Query("q_audio_decode", (s, d) => {
-      Multimodal.audioFeatures(s.read.parquet(audioDir(s, d)))
+      Multimodal.audioFeatures(s.read.parquet(mediaDir(s, d, "wav")))
         .toDF()
         .select(col("media_id"),
           col("sample_rate").cast("long").as("sample_rate"),

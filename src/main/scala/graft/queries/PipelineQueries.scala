@@ -34,31 +34,17 @@ object PipelineQueries {
   private[graft] def alsTrainInput(s: SparkSession, d: String): DataFrame =
     interactionSplit(Tables.ratings(s, d))._1
 
-  /** Fitted ALS models as PERSISTED artifacts, memoized per
-    * (scale dir, config) — the reference's flagship build artifact
-    * (`als.py:87`, the ~30-min cluster fit it recomputes every run) goes
-    * through [[graft.operators.Artifacts.loadOrFitAls]]: first demand in
-    * a process fits once and saves; any later process over the same
-    * (data, config) loads the factor matrices instead of refitting
-    * (warm-restart no-refit is spec-asserted in RecommendSpec). The fit
-    * is deterministic given (data, config, seed) — ALS blocking is fixed
-    * by numUserBlocks/numItemBlocks, not cluster parallelism — so a
-    * loaded model serves bit-identical recommendations.
+  /** The fitted ALS model per (scale dir, config), fit once per context
+    * — the reference refits on every run (`als.py:87`). The fit is
+    * deterministic given (data, config, seed): ALS blocking is fixed by
+    * numUserBlocks/numItemBlocks, not cluster parallelism. A deployment
+    * that must not refit across restarts persists the factors with
+    * [[graft.operators.Artifacts.loadOrFitAls]].
     */
-  private lazy val alsRoot =
-    java.nio.file.Files.createTempDirectory("graft_als_artifacts").toString
-  private val alsModels = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.recommendation.ALSModel]
   private[graft] def alsModel(s: SparkSession, d: String,
       cfg: Recommend.AlsConfig): org.apache.spark.ml.recommendation.ALSModel =
-    alsModels.getOrElseUpdate(s"$d|$cfg", {
-      val dir = new java.io.File(alsRoot,
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$d|$cfg".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString).getPath
-      graft.operators.Artifacts.loadOrFitAls(s, dir)(
-        Recommend.train(alsTrainInput(s, d), cfg))
-    })
+    ContextMemo(s.sparkContext, s"als:$d|$cfg")(
+      Recommend.train(alsTrainInput(s, d), cfg))
 
   private def hashSplit(r: DataFrame) = (
     r.filter(pmod(col("movieId"), lit(10)) < 6),
@@ -137,26 +123,20 @@ object PipelineQueries {
        |train AS (SELECT * FROM ratings WHERE movieId % 10 < 6),
        |val AS (SELECT * FROM ratings WHERE movieId % 10 IN (6,7))""".stripMargin
 
-  /** At-rest item-neighbor index per scale dir — published through the
-    * crash-safe versioned artifact store (Artifacts.saveItemIndex:
-    * `_LATEST`-resolved, index + its source interaction snapshot as ONE
-    * version) so a restarted serving job loads the fitting run's index
-    * instead of silently refitting against whatever the ratings now are
-    * — the same discipline as ALS/IVF-PQ/BPE/quality-LR/BM25. Built
-    * once per (process, dir); nobody recounts 6M co-occurrence pairs
-    * per request. Values are partition-independent (exact integer
+  /** At-rest item-neighbor index per scale dir, served from disk — built
+    * into its [[ContextMemo.dir]] root through the crash-safe versioned
+    * artifact store (Artifacts.saveItemIndex: `_LATEST`-resolved, index
+    * + its source interaction snapshot as ONE version). Built once per
+    * (context, dir); nobody recounts 6M co-occurrence pairs per
+    * request. Values are partition-independent (exact integer
     * counts → 6dp-rounded scores), so the index is a pure function of
     * the data.
     */
-  private val itemIndexRoots =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def itemIndex(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = itemIndexRoots.getOrElseUpdate(d,
-      java.nio.file.Files.createTempDirectory("graft_item_idx").toString)
-    graft.operators.Artifacts.loadOrBuildItemIndex(s, root,
+      s: SparkSession, d: String): (DataFrame, DataFrame) =
+    graft.operators.Artifacts.loadOrBuildItemIndex(s,
+      ContextMemo.dir(s.sparkContext, s"item_idx:$d")(_ => ()),
       Tables.ratings(s, d))
-  }
 
   /** ONE MAP@10 oracle body for the DataFrame (`q_eval_map_std`) and
     * RDD-RankingMetrics (`q_eval_map_mllib`) forms — they compute the

@@ -25,21 +25,14 @@ object RelationalQueries {
   private def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
   private def cents(c: Column) = round(c * 100, 0).cast("long")
 
-  /** Per-scale-dir root for the bucketed-table parquet (built once per
-    * process, same memo discipline as SimilarityQueries.ivfIndexDirs).
-    */
-  private val bucketRoots =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Bucketed lineitem/orders pair for `d`, both bucketed ×8 on their
-    * orderkey (matching counts — the co-location contract). Idempotent:
-    * the write happens once per (process, scale dir); a fresh session in
-    * the same process re-registers over the existing parquet.
+    * orderkey (matching counts — the co-location contract), under a
+    * per-(context, scale dir) [[ContextMemo.dir]] root. Idempotent: the
+    * write happens once per catalog entry.
     */
   private[graft] def bucketedTradeTables(
       s: SparkSession, d: String): (String, String) = {
-    val root = bucketRoots.getOrElseUpdate(d,
-      java.nio.file.Files.createTempDirectory("graft_bucketed").toString)
+    val root = ContextMemo.dir(s.sparkContext, s"bucketed:$d")(_ => ())
     // table names derive from the SANITIZED path, not a hash — two scale
     // dirs can never collide onto one catalog entry
     val tag = d.replaceAll("[^a-zA-Z0-9]", "_")

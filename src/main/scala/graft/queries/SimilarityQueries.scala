@@ -25,12 +25,10 @@ object SimilarityQueries {
     * inside every serving query misstates ANN cost at scale, where the
     * model is fit once and shipped to every query). The model is pure
     * driver-side data (a few KB), deterministic given (data, seed), and
-    * session-independent — safe to cache for the process lifetime.
+    * session-independent.
     */
-  private val ivfpqModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfPqModel]
   private[graft] def ivfpqModel(s: SparkSession, d: String): Similarity.IvfPqModel =
-    ivfpqModels.getOrElseUpdate(d,
+    ContextMemo(s.sparkContext, s"ivfpq:$d")(
       Similarity.fitIvfPq(emb(s, d), nCells = 16, m = 8, nCentroids = 32))
 
   /** At-rest IVF-PQ index location per scale dir — built ONCE (encode at
@@ -40,15 +38,9 @@ object SimilarityQueries {
     * are identical to the in-memory path (operator-level equality is
     * asserted in DedupSimilaritySpec).
     */
-  private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def ivfIndexDir(s: SparkSession, d: String): String =
-    ivfIndexDirs.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rest")
-        .toString + "/idx"
-      Similarity.writeIvfPqIndex(emb(s, d), ivfpqModel(s, d), dir)
-      dir
-    })
+    ContextMemo.dir(s.sparkContext, s"ivf_rest:$d")(
+      Similarity.writeIvfPqIndex(emb(s, d), ivfpqModel(s, d), _))
 
   /** Shared per-label centroid relation — `(label, n_vecs, centroid)`
     * with centroid elements avg'd in double and ROUNDED to 6dp (that

@@ -70,16 +70,14 @@ object TextQueries {
     * query. Driver-side pure data (10 string pairs), deterministic given
     * the corpus.
     */
-  private val bpeModels =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
   private[graft] def bpeModel(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeModels.getOrElseUpdate(d, {
+    ContextMemo(s.sparkContext, s"bpe:$d") {
       val vocab = docs(s, d)
         .select(explode(Dedup.tokens(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       TextAnalysis.bpeMerges(vocab, rounds = 10).orderBy(col("round"))
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    })
+    }
 
   /** Trained quality-gate model memoized per scale dir (same build-
     * artifact pattern as [[bpeModel]]): LR fit once on the corpus, with
@@ -90,10 +88,8 @@ object TextQueries {
     * language from content instead — so the teacher must be a function
     * of the text.)
     */
-  private val qlrModels =
-    scala.collection.concurrent.TrieMap.empty[String, TextAnalysis.QualityLrModel]
   private[graft] def qlrModel(s: SparkSession, d: String): TextAnalysis.QualityLrModel =
-    qlrModels.getOrElseUpdate(d,
+    ContextMemo(s.sparkContext, s"qlr:$d")(
       TextAnalysis.fitQualityLr(docs(s, d),
         TextAnalysis.qualityScore(col("text")) >= 0.77))
 
@@ -252,29 +248,16 @@ object TextQueries {
        |  FROM g, t
        |)""".stripMargin
 
-  /** BM25 stats as a PERSISTED artifact, memoized per scale dir — the
-    * same discipline as every other fit here (ALS factors, IVF-PQ
-    * codebooks, BPE merges, quality-LR weights): first demand fits once
-    * and publishes through the crash-safe versioned
-    * [[graft.operators.Artifacts.saveBm25]]; any later process over the
-    * same corpus LOADS the fitting run's statistics instead of silently
-    * refitting against whatever the corpus has drifted to. Reloaded
-    * stats are IEEE-exact, so served scores are bit-identical across the
-    * restart (spec-asserted in CurationSpec).
+  /** BM25 corpus statistics memoized per scale dir (same build-artifact
+    * pattern as [[bpeModel]]). A deployment that must serve the fitting
+    * run's statistics across restarts, rather than refit against a
+    * drifted corpus, persists them with
+    * [[graft.operators.Artifacts.loadOrFitBm25]]; reloaded stats are
+    * IEEE-exact (spec-asserted in CurationSpec).
     */
-  private lazy val bm25Root =
-    java.nio.file.Files.createTempDirectory("graft_bm25_artifacts").toString
-  private val bm25Models =
-    scala.collection.concurrent.TrieMap.empty[String, TextAnalysis.Bm25Model]
   private[graft] def bm25Model(s: SparkSession, d: String): TextAnalysis.Bm25Model =
-    bm25Models.getOrElseUpdate(d, {
-      val key = s"$d|${bm25Terms.mkString(",")}"
-      val dir = new java.io.File(bm25Root,
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString).getPath
-      graft.operators.Artifacts.loadOrFitBm25(s, dir)(
-        TextAnalysis.fitBm25(docs(s, d), bm25Terms))
-    })
+    ContextMemo(s.sparkContext, s"bm25:$d")(
+      TextAnalysis.fitBm25(docs(s, d), bm25Terms))
 
   /** Shared DSIR weights relation — `(doc_id, source, n_trigrams, w)`
     * with `w` the 6dp-rounded Laplace-smoothed target/corpus log-ratio.

@@ -44,4 +44,10 @@ object Bridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `Utils.createTempDir` (private[spark]): a fresh directory under
+    * `java.io.tmpdir`, deleted at JVM shutdown.
+    */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 }

@@ -199,6 +199,77 @@ class RegistrySpec extends SparkTestBase {
     assert(sites.count(_._2) == 1, s"Artifacts.append holds ${sites.count(_._2)} append writes")
   }
 
+  test("build memos and temp directories occur in src/main only in ContextMemo (source scan)") {
+    // one build memo and one scratch root, deleted at JVM shutdown: a
+    // hand-rolled memo or temp directory elsewhere leaks a directory
+    // per process. Bridge holds the one forwarder to Spark's temp dir
+    val mainDir = new java.io.File("src/main/scala")
+    assume(mainDir.isDirectory, "source dir not visible from test cwd")
+    val siteRe = """\b(TrieMap|WeakHashMap|createTempDirectory|createTempDir)\b""".r
+    val sites = scalaFiles(mainDir).filterNot(_.getName == "ContextMemo.scala")
+      .flatMap { f =>
+        val t = read(f)
+        // the forwarder's body: from its `def` to the next one
+        val forwarder = if (f.getName != "Bridge.scala") None
+          else """\bdef\s+createTempDir\b""".r.findFirstMatchIn(t).map { m =>
+            m.start until """\bdef\s""".r.findFirstMatchIn(t.substring(m.end))
+              .fold(t.length)(m.end + _.start)
+          }
+        siteRe.findAllMatchIn(t).filterNot(m => forwarder.exists(_.contains(m.start)))
+          .map(_ => f.getName.stripSuffix(".scala")).toSeq
+      }
+    val outside = sites.groupBy(identity)
+      .map { case (n, v) => s"$n (${v.size})" }.toSeq.sorted
+    assert(outside.isEmpty,
+      s"build memos or temp directories outside ContextMemo: ${outside.mkString(", ")}")
+  }
+
+  test("ContextMemo builds once per (context, key) and writes each dir once under one scratch root") {
+    import graft.queries.ContextMemo
+    val sc = spark.sparkContext
+    val key = s"memo_spec_${System.nanoTime}"
+    var builds = 0
+    def value(k: String): Int = ContextMemo(sc, k) { builds += 1; builds }
+    assert(value(key) == 1 && value(key) == 1 && builds == 1)
+    assert(value(key + "_b") == 2 && builds == 2)
+    var writes = 0
+    def dir(k: String): String = ContextMemo.dir(sc, k) { p =>
+      writes += 1
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "part"), k)
+    }
+    val d = dir(key)
+    assert(dir(key) == d && writes == 1)
+    val f = new java.io.File(d)
+    assert(f.isDirectory && new java.io.File(f, "part").isFile)
+    val other = new java.io.File(dir(key + "_b"))
+    assert(writes == 2 && other != f && other.getParentFile == f.getParentFile)
+    val root = f.getParentFile
+    assert(root.getName.startsWith("graft_build") && root.getParentFile ==
+      new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalFile)
+  }
+
+  test("oracled queries give identical rows at 3 and 8 shuffle partitions") {
+    // a fixed sample of cheap oracled queries from every module, none of
+    // which reads a memoized build (a memo built at one width would be
+    // served at the other). Rows compare as sorted lists, the
+    // order-insensitive compare of tools/check.py
+    val sample = Seq("q_pop_top100", "q_pop_stats", "q_join_inner",
+      "q_window_topk", "q_rollup", "q_eval_map_std", "q_eval_mrr",
+      "q_token_count", "q_dedup_exact", "q_top_ngrams", "q_events_hourly",
+      "q_events_sessions", "q_events_funnel", "q_cosine_topk",
+      "q_embed_centroids", "q_tpch_q3", "q_stats_agg", "q_percentiles")
+    sample.foreach(n => assert(!SparkEntry.oracleExempt.contains(n), n))
+    assert(modules.forall(_._2.exists(q => sample.contains(q.name))))
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def rows(width: Int): Seq[Seq[String]] = try {
+      spark.conf.set(key, width.toString)
+      sample.map(n => SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq.sorted)
+    } finally spark.conf.set(key, saved)
+    val (at3, at8) = (rows(3), rows(8))
+    sample.indices.foreach(i => assert(at3(i) == at8(i), sample(i)))
+  }
+
   test("Bench.reconcile substitutes only a >2x in-slot reading whose spread is tight") {
     // readings measured by hand; spread medians are the upper median
     val tight = Seq(1.0, 1.2, 1.1, 1.05, 1.15) // median 1.1, max 1.2 <= 1.7
