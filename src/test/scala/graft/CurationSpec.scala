@@ -42,7 +42,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q_mad_outliers: planted extreme length is flagged, bulk is not") {
-    val dir = java.nio.file.Files.createTempDirectory("mad").toString
+    val dir = tempDir("mad").toString
     val docs = ((1 to 60).map(i => (i.toLong, "plain text here", "en", "src0",
       (100 + i % 7).toLong)) :+ (999L, "huge", "en", "src0", 5000000L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -105,7 +105,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q_embed_centroids: hand-computed fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("cent").toString
+    val dir = tempDir("cent").toString
     Seq((1L, Array(1.0f, 3.0f), 0), (2L, Array(3.0f, 5.0f), 0),
       (3L, Array(10.0f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
@@ -142,7 +142,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q_events_anomaly: a dead feed (planted gap) is gap-filled and flagged") {
-    val dir = java.nio.file.Files.createTempDirectory("anomaly").toString
+    val dir = tempDir("anomaly").toString
     // 40 hours of alternating volume (so the trailing stddev is nonzero),
     // with hours 30-32 completely absent — the dead-feed case
     val rows = (0 until 40).filterNot(h => h >= 30 && h <= 32).flatMap { h =>
@@ -285,7 +285,7 @@ class CurationSpec extends SparkTestBase {
     // stays inside whole-stage codegen (the in-scan predicate claim) —
     // through a real scan: ConvertToLocalRelation folds a filter over a
     // local Seq away entirely
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomhit").toString
+    val dir = tempDir("graft_bloomhit").toString
     novel.write.mode("overwrite").parquet(dir)
     val probe = spark.read.parquet(dir).filter(pred)
     probe.collect()
@@ -372,7 +372,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("QualityLrModel save/load: bit-identical weights and served scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qlr").toString
+    val dir = tempDir("graft_qlr").toString
     val docs = graft.Tables.documents(spark, sf)
     val m = graft.operators.TextAnalysis.fitQualityLr(docs,
       graft.operators.TextAnalysis.qualityScore(col("text")) >= 0.77)
@@ -410,7 +410,7 @@ class CurationSpec extends SparkTestBase {
 
   test("torn QualityLr save (pointerless partial v= dir) → refit + versioned publish") {
     import graft.operators.{Artifacts, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("graft_qlr_torn")
+    val dir = tempDir("graft_qlr_torn")
       .toString + "/qlr"
     new java.io.File(s"$dir/v=1").mkdirs()
     java.nio.file.Files.write(
@@ -436,7 +436,7 @@ class CurationSpec extends SparkTestBase {
       (2L, "a stream of words with no relevance terms"),
       (3L, "query query query"),
       (4L, "")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_art")
+    val dir = tempDir("graft_bm25_art")
       .toString + "/bm25"
     var fits = 0
     val fitted = Artifacts.loadOrFitBm25(spark, dir) {
@@ -464,7 +464,7 @@ class CurationSpec extends SparkTestBase {
     import graft.operators.{Artifacts, TextAnalysis}
     val docs = Seq.tabulate(50)(i => (i.toLong, ("w " * (i % 30 * 6)).trim))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist_art")
+    val dir = tempDir("graft_hist_art")
       .toString + "/hist"
     var fits = 0
     val ref = Artifacts.loadOrFitLenHistogram(spark, dir) {

@@ -695,7 +695,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("MinhashIndex save/load: reloaded index gives bit-identical incrementalNearDup") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidx").toString
+    val dir = tempDir("graft_mhidx").toString
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "spark engines shuffle data between executors during wide transformations"),
@@ -723,7 +723,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("fingerprint-index save/load: reloaded index gives identical incrementalDedup") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_fpidx").toString
+    val dir = tempDir("graft_fpidx").toString
     val hist = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text")
     val batch = Seq((10L, "alpha beta gamma"), (11L, "novel content here"))
@@ -740,7 +740,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("IvfPqModel save/load: bit-identical model, identical serving output") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = tempDir("graft_ivfpq").toString
     val emb = Tables.embeddings(spark, sf)
     val model = Similarity.fitIvfPq(emb, nCells = 8, m = 8, nCentroids = 16)
     Artifacts.saveIvfPqModel(spark, model, dir)
@@ -757,7 +757,7 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("ivfPqApplyFromDisk: partition-pruned scan, results identical to in-memory apply") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfrest").toString
+    val dir = tempDir("graft_ivfrest").toString
     val emb = Tables.embeddings(spark, sf)
     val nCells = 16
     val model = Similarity.fitIvfPq(emb, nCells = nCells, m = 8, nCentroids = 16)
@@ -793,7 +793,7 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("appendToIvfPqIndex: incremental at-rest index ≡ full rebuild, serving unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfapp").toString
+    val dir = tempDir("graft_ivfapp").toString
     val emb = Tables.embeddings(spark, sf)
     val model = Similarity.fitIvfPq(emb, nCells = 16, m = 8, nCentroids = 16)
     // build from the first half, append the second half under the SAME model
@@ -830,7 +830,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("compactIvfPqIndex: versioned publication — serving identical, appends follow the live version, crash-safe") {
     import graft.operators.Artifacts
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfver")
+    val root = tempDir("graft_ivfver")
       .toString + "/idx"
     val emb = Tables.embeddings(spark, sf)
     val model = Similarity.fitIvfPq(emb, nCells = 8, m = 8, nCentroids = 8)
@@ -890,7 +890,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("maintainIvfPqIndex: skewed appends trigger compaction, balanced layout, serving identical throughout") {
     import graft.operators.Artifacts
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfmaint")
+    val root = tempDir("graft_ivfmaint")
       .toString + "/idx"
     val emb = Tables.embeddings(spark, sf)
     val model = Similarity.fitIvfPq(emb, nCells = 8, m = 8, nCentroids = 8)
@@ -944,7 +944,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("publishVersion: readers follow _LATEST; a crashed write never corrupts the live artifact") {
     import graft.operators.Artifacts
-    val root = java.nio.file.Files.createTempDirectory("graft_ver").toString + "/idx"
+    val root = tempDir("graft_ver").toString + "/idx"
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
     assert(Artifacts.latestVersion(spark, root).isEmpty)
@@ -972,7 +972,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("pruneVersions: old versions deleted, the live pointer target always survives") {
     import graft.operators.Artifacts
-    val root = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/idx"
+    val root = tempDir("graft_prune").toString + "/idx"
     val corpus = Seq((1L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
     (1 to 4).foreach { _ =>
@@ -999,7 +999,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("loadOrFit: cold call fits once + persists; warm call loads without refitting") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_lof").toString + "/ivfpq"
+    val dir = tempDir("graft_lof").toString + "/ivfpq"
     val emb = Tables.embeddings(spark, sf)
     var fits = 0
     def fit() = { fits += 1; Similarity.fitIvfPq(emb, nCells = 4, m = 8, nCentroids = 8) }
@@ -1013,7 +1013,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("torn IvfPq save (pointerless partial v= dir) reads as absent → refit, not crash") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_torn")
+    val dir = tempDir("graft_ivfpq_torn")
       .toString + "/m"
     // remnant of a save that crashed mid-write: a partial v=1 payload,
     // no _LATEST pointer (publishVersion flips it only after the write)
@@ -1039,7 +1039,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // and the load-time type normalization (cast on the partition
     // column) must not defeat it (SimplifyCasts removes the no-op cast)
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhprune").toString
+    val dir = tempDir("graft_mhprune").toString
     val corpus = (1L to 30L).map(i =>
       (i, s"document number $i with plenty of shared tokens plus suffix $i"))
       .toDF("doc_id", "text")
@@ -1057,7 +1057,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("compactMinhashIndex: re-caps hot buckets and dedups content after appends") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhcompact").toString
+    val dir = tempDir("graft_mhcompact").toString
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "spark engines shuffle data between executors during wide transformations"))
@@ -1097,7 +1097,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   test("crash mid-compaction: a partial v=n+1 with no pointer flip never corrupts serving") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhcrash").toString
+    val dir = tempDir("graft_mhcrash").toString
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "spark engines shuffle data between executors during wide transformations"))
@@ -1151,8 +1151,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // into the list→pointer-read window — the live pointer target must
     // survive and stay loadable in every interleaving
     (0 to 3).foreach { keep =>
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_prrace$keep").toString + "/idx"
+      val root = tempDir(s"graft_prrace$keep").toString + "/idx"
       (1 to 3).foreach(_ => publish(root))
       Artifacts.pruneVersionsImpl(spark, root, keep, () => publish(root))
       val live = Artifacts.latestVersion(spark, root)
@@ -1167,7 +1166,7 @@ class DedupSimilaritySpec extends SparkTestBase {
       assert(left == math.max(keep, 1), s"keep=$keep left $left")
     }
     // keep=0 (now legal per the scaladoc contract): only the live version
-    val root0 = java.nio.file.Files.createTempDirectory("graft_pr0").toString + "/idx"
+    val root0 = tempDir("graft_pr0").toString + "/idx"
     (1 to 3).foreach(_ => publish(root0))
     Artifacts.pruneVersions(spark, root0, keep = 0)
     val left0 = new java.io.File(root0).list().filter(_.startsWith("v=")).toSeq

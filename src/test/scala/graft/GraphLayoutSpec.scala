@@ -424,7 +424,7 @@ class GraphLayoutSpec extends SparkTestBase {
   }
 
   test("zorderWrite: files carry disjoint z-ranges and all rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zw").toString
+    val dir = tempDir("graft_zw").toString
     val src = Tables.load(spark, sf, "lineitem")
       .select(pmod(col("l_partkey"), lit(1024L)).cast("long").as("x"),
         pmod(col("l_suppkey"), lit(1024L)).cast("long").as("y"))

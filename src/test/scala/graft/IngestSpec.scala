@@ -77,7 +77,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("CSV round-trip: headered write → schema-at-scan read (S1/S5)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     val src = Seq((1, 10, 4.5, 111), (2, 20, 3.0, 222))
       .toDF("userId", "movieId", "rating", "timestamp")
       .select(col("userId"), col("movieId"),
@@ -95,7 +95,7 @@ class IngestSpec extends SparkTestBase {
     // at 100 TB some rows WILL be malformed; the ingest contract is
     // explicit: PERMISSIVE null-fills + captures the raw line in
     // _corrupt_record for quarantine, FAILFAST turns the batch red.
-    val dir = Files.createTempDirectory("graft_corrupt").toString
+    val dir = tempDir("graft_corrupt").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/in.csv"),
       "1,2.5\n2,not_a_double\n3,4.0\n")
@@ -119,7 +119,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("headerless CSV + positional rename (S2/S4)") {
-    val dir = Files.createTempDirectory("graft_csv2").toString
+    val dir = tempDir("graft_csv2").toString
     Seq((5, 50, 2.5, 999)).toDF("a", "b", "c", "d")
       .write.mode("overwrite").csv(s"$dir/bare")
     // the reference's idiom: read positionally, rename with toDF, cast
@@ -132,7 +132,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("parquet sink round-trip preserves types (engine default sink)") {
-    val dir = Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     val src = Tables.ratings(spark, sf).limit(100)
     src.write.mode("overwrite").parquet(s"$dir/r")
     val back = spark.read.parquet(s"$dir/r")
@@ -141,7 +141,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("ORC and JSON sinks round-trip (S5 generalization)") {
-    val dir = Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink").toString
     val src = Tables.ratings(spark, sf).limit(50)
     src.write.mode("overwrite").orc(s"$dir/orc")
     src.write.mode("overwrite").json(s"$dir/json")
@@ -153,7 +153,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("binaryFile source: media bytes arrive schema'd and whole") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = tempDir("graft_bin")
     val payloads = Map("a.bin" -> Array[Byte](1, 2, 3),
       "b.bin" -> Array.tabulate[Byte](256)(_.toByte))
     payloads.foreach { case (n, bytes) =>
@@ -171,7 +171,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("text source: one row per line, pipelines into the doc operators") {
-    val dir = Files.createTempDirectory("graft_txt").toString
+    val dir = tempDir("graft_txt").toString
     Seq("The quick brown fox", "hello world hello").toDF("value")
       .write.mode("overwrite").text(dir)
     val docs = spark.read.text(dir)

@@ -22,7 +22,7 @@ class MixSpec extends SparkTestBase {
   }
 
   test("writeShards: round-trips, manifest conserves counts, balance, determinism") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards").toString
     val docs = Tables.documents(spark, sf)
     val m1 = Mix.writeShards(docs, dir, 8, "doc_id", col("n_chars")).collect()
     // manifest conservation: rows and tokens sum to the corpus totals
@@ -45,7 +45,7 @@ class MixSpec extends SparkTestBase {
       col("shard") =!= pmod(xxhash64(col("doc_id")), lit(8L))).count()
     assert(misplaced == 0, s"$misplaced rows in the wrong shard file")
     // re-export reproduces the manifest bit-for-bit (checksums included)
-    val dir2 = java.nio.file.Files.createTempDirectory("shards2").toString
+    val dir2 = tempDir("shards2").toString
     val m2 = Mix.writeShards(docs, dir2, 8, "doc_id", col("n_chars")).collect()
     assert(m1.map(_.toString).toSeq == m2.map(_.toString).toSeq)
     // writeShards owns the 'shard' name — a clashing input must be refused
@@ -63,8 +63,8 @@ class MixSpec extends SparkTestBase {
       .toDF("doc_id", "text", "n_tok")
     val b = Seq((1L, "SUBSTITUTED text", 10L), (2L, "second doc", 10L))
       .toDF("doc_id", "text", "n_tok")
-    val da = java.nio.file.Files.createTempDirectory("ck_a").toString
-    val db = java.nio.file.Files.createTempDirectory("ck_b").toString
+    val da = tempDir("ck_a").toString
+    val db = tempDir("ck_b").toString
     val ma = Mix.writeShards(a, da, 1, "doc_id", col("n_tok"))
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     val mb = Mix.writeShards(b, db, 1, "doc_id", col("n_tok"))

@@ -165,7 +165,7 @@ class PropertySpec extends SparkTestBase {
     val total = docs.count()
     val totalTok = docs.agg(sum(col("n_chars"))).first().getLong(0)
     for (nShards <- cases(Gen.chooseNum(1, 16), 4).distinct) {
-      val dir = java.nio.file.Files.createTempDirectory(s"psh$nShards").toString
+      val dir = tempDir(s"psh$nShards").toString
       val m = graft.operators.Mix.writeShards(docs, dir, nShards, "doc_id",
         col("n_chars")).collect()
       assert(m.map(_.getLong(1)).sum == total, s"nShards=$nShards rows")
@@ -284,7 +284,7 @@ class PropertySpec extends SparkTestBase {
     val g = graft.operators.TextAnalysis.benchGrams(bench, n = 3)
     assert(g.broadcastUsed)
     val viaJoin = g.hitIds(train).as[Long].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_gramsethit").toString
+    val dir = tempDir("graft_gramsethit").toString
     train.write.mode("overwrite").parquet(dir)
     // the local relation folds to interpreted eval; the scan runs codegen,
     // here with no silent fallback to interpreted eval

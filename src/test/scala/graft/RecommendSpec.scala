@@ -40,7 +40,7 @@ class RecommendSpec extends SparkTestBase {
 
   test("loadOrFitAls: cold call fits once + persists; warm call loads without refit, recs bit-identical") {
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_als_lof")
+    val dir = tempDir("graft_als_lof")
       .toString + "/als"
     val cfg = Recommend.AlsConfig(rank = 8, maxIter = 5, regParam = 0.1, seed = 7L)
     var fits = 0
@@ -91,7 +91,7 @@ class RecommendSpec extends SparkTestBase {
     // atomicity across them; a versioned publish makes the crash window
     // invisible to loaders — a torn v=1 with no pointer is just garbage
     import graft.operators.Artifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_als_torn")
+    val dir = tempDir("graft_als_torn")
       .toString + "/als"
     new java.io.File(s"$dir/v=1/metadata").mkdirs()
     java.nio.file.Files.write(
@@ -411,7 +411,7 @@ class RecommendSpec extends SparkTestBase {
     val batch = ph.filter(col("media_id") >= 1000000L)
     val corpus = ph.filter(col("media_id") < 1000000L)
     // round-trip the index through parquet — it is a PERSISTED artifact
-    val dir = java.nio.file.Files.createTempDirectory("graft_imgidx").toString
+    val dir = tempDir("graft_imgidx").toString
     val built = graft.operators.Dedup.bandHashIndex(corpus)
     built.buckets.write.parquet(s"$dir/buckets")
     built.hashes.write.parquet(s"$dir/hashes")
@@ -575,7 +575,7 @@ class RecommendSpec extends SparkTestBase {
     import graft.operators.Artifacts
     val r = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L), (3L, 10L),
       (3L, 20L)).toDF("userId", "movieId").withColumn("rating", lit(5.0))
-    val root = java.nio.file.Files.createTempDirectory("graft_item_torn")
+    val root = tempDir("graft_item_torn")
       .toString + "/idx"
     // torn: a partial pointerless v=1 (crash between write and publish)
     new java.io.File(s"$root/v=1/idx").mkdirs()

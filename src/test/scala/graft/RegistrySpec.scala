@@ -224,6 +224,20 @@ class RegistrySpec extends SparkTestBase {
       s"build memos or temp directories outside ContextMemo: ${outside.mkString(", ")}")
   }
 
+  test("temp directories occur in src/test only in SparkTestBase (source scan)") {
+    // SparkTestBase.tempDir's directories are deleted at JVM exit; a
+    // suite that makes its own leaves one behind per run. This file's
+    // scans name the calls in their patterns, so it is not scanned
+    val testDir = new java.io.File("src/test/scala")
+    assume(testDir.isDirectory, "source dir not visible from test cwd")
+    val siteRe = """\bcreateTemp(Directory|Dir)\b""".r
+    val outside = scalaFiles(testDir)
+      .filterNot(f => Set("SparkTestBase.scala", "RegistrySpec.scala")(f.getName))
+      .map(f => (f.getName.stripSuffix(".scala"), siteRe.findAllMatchIn(read(f)).size))
+      .collect { case (n, k) if k > 0 => s"$n ($k)" }
+    assert(outside.isEmpty, s"temp directories outside SparkTestBase: ${outside.mkString(", ")}")
+  }
+
   test("ContextMemo builds once per (context, key) and writes each dir once under one scratch root") {
     import graft.queries.ContextMemo
     val sc = spark.sparkContext

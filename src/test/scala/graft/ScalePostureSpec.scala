@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{Eval, Popularity, Split}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Evidence for the SCALING.md claims that the local harness can't show
   * through the flat testdata: partition pruning on partitioned layouts,
@@ -15,7 +14,7 @@ class ScalePostureSpec extends SparkTestBase {
   import spark.implicits._
 
   test("partitioned parquet: partition filters prune the scan") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val src = Tables.ratings(spark, sf)
       .withColumn("bucket", pmod(col("movieId"), lit(10)))
     src.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/r")
@@ -83,7 +82,7 @@ class ScalePostureSpec extends SparkTestBase {
     import graft.operators.Bucketing
     val tbl = "graft_stale_probe"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val dir1 = Files.createTempDirectory("graft_bkt_probe").toString
+    val dir1 = tempDir("graft_bkt_probe").toString
     var builds = 0
     def src = { builds += 1; Tables.nation(spark, sf) }
     Bucketing.ensureBucketedTable(spark, src, tbl, s"$dir1/t", "n_nationkey")
@@ -92,7 +91,7 @@ class ScalePostureSpec extends SparkTestBase {
     // healthy catalog entry: second call is a no-op even with a FRESH
     // path argument (the registered location is what scans read — the
     // guard must check it, not the argument)
-    val dir2 = Files.createTempDirectory("graft_bkt_probe2").toString
+    val dir2 = tempDir("graft_bkt_probe2").toString
     Bucketing.ensureBucketedTable(spark, src, tbl, s"$dir2/t", "n_nationkey")
     assert(builds == 1, "healthy table was rebuilt")
     // delete the REGISTERED data dir: the stale entry must be dropped
@@ -112,7 +111,7 @@ class ScalePostureSpec extends SparkTestBase {
     reg.listFiles().filter(f => f.isFile && !f.getName.startsWith("_"))
       .foreach(_.delete())
     assert(reg.listFiles().nonEmpty, "marker files should remain")
-    val dir3 = Files.createTempDirectory("graft_bkt_probe3").toString
+    val dir3 = tempDir("graft_bkt_probe3").toString
     Bucketing.ensureBucketedTable(spark, src, tbl, s"$dir3/t", "n_nationkey")
     assert(builds == 3, "marker-only stale table was not rebuilt")
     assert(spark.table(tbl).count() == n)
@@ -654,7 +653,7 @@ class ScalePostureSpec extends SparkTestBase {
   }
 
   test("reference-user migration path: CSV → split → popularity → eval, public API only") {
-    val dir = Files.createTempDirectory("graft_ml").toString
+    val dir = tempDir("graft_ml").toString
     // a MovieLens-shaped CSV written the way the reference's data arrives
     Tables.ratings(spark, sf)
       .select(col("userId"), col("movieId"), col("rating"),
@@ -707,7 +706,7 @@ class ScalePostureSpec extends SparkTestBase {
 
   test("compactMinhashIndex is idempotent: second compaction is a no-op") {
     import graft.operators.{Artifacts, Dedup}
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidem").toString
+    val dir = tempDir("graft_mhidem").toString
     val corpus = (1L to 20L).map(i =>
       (i, s"document number $i with a shared prefix of tokens and suffix $i"))
       .toDF("doc_id", "text")

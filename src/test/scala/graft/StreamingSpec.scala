@@ -153,7 +153,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("file sink + checkpoint: restart resumes without reprocessing") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val mem = MemoryStream[E]
     def start() = EventStreams.dedupe(mem.toDF(), "2 hours")
       .writeStream.outputMode("append")
@@ -290,8 +290,7 @@ class StreamingSpec extends SparkTestBase {
       "with tomatoes and basil in a large pot of salted water"
     val clean2 = "another unrelated document describing a bicycle repair " +
       "procedure for a flat tire on a rainy day in the city"
-    val sinkDir = java.nio.file.Files
-      .createTempDirectory("graft_decontam").toString + "/sink"
+    val sinkDir = tempDir("graft_decontam").toString + "/sink"
     val mem = MemoryStream[EventStreams.Doc]
     val q = EventStreams.decontamIntake(mem.toDF(), bench, sinkDir).start()
     try {
@@ -537,7 +536,7 @@ class StreamingSpec extends SparkTestBase {
     // upgrade starts re-listing, this fails loudly and the docs can be
     // upgraded to the stronger claim.
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_static_vis")
+    val dir = tempDir("graft_static_vis")
       .toString + "/idx"
     val appended = "the quick brown fox jumps over the lazy dog and the cat " +
       "is in the house with a dog for the day and the night is long"
@@ -584,7 +583,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("maintainedIntake: closed loop across a RESTART — cycle 2 drops cycle 1's docs") {
     implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_loop").toString
+    val tmp = tempDir("graft_loop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val seeded = "the quick brown fox jumps over the lazy dog and the cat " +
       "is in the house with a dog for the day and the night is long"
@@ -636,7 +635,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("maintainedNearIntake: near-dup of a cycle-1 survivor is dropped in cycle 2") {
     implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nearloop").toString
+    val tmp = tempDir("graft_nearloop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val corpusDoc = "the quick brown fox jumps over the lazy dog near the river bank today"
     graft.operators.Artifacts.saveMinhashIndex(
@@ -676,7 +675,7 @@ class StreamingSpec extends SparkTestBase {
     // still drops a near-dup of the cycle-1 survivor AND keeps appending
     // into the live version.
     implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_verloop").toString
+    val tmp = tempDir("graft_verloop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val corpusDoc = "the quick brown fox jumps over the lazy dog near the river bank today"
     graft.operators.Artifacts.saveMinhashIndex(
@@ -722,7 +721,7 @@ class StreamingSpec extends SparkTestBase {
     // with no index rebuild and no model refit.
     implicit val sc = spark.sqlContext
     import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfloop").toString
+    val tmp = tempDir("graft_ivfloop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     def vec(seed: Long): Array[Float] =
       Array.tabulate(8)(i => (((seed * 31 + i * 17) % 13) - 6).toFloat)
@@ -781,7 +780,7 @@ class StreamingSpec extends SparkTestBase {
     // and serving retrieves every appended vector afterwards.
     implicit val sc = spark.sqlContext
     import graft.operators.{Artifacts, Similarity}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfcad").toString
+    val tmp = tempDir("graft_ivfcad").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     def vec(seed: Long): Array[Float] =
       Array.tabulate(8)(i => (((seed * 31 + i * 17) % 13) - 6).toFloat)
@@ -822,7 +821,7 @@ class StreamingSpec extends SparkTestBase {
   test("maintainedClusterIntake: label map maintained across a RESTART equals the full closure; compaction preserves it") {
     implicit val sc = spark.sqlContext
     import graft.operators.{Artifacts, Dedup}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_clusterloop").toString
+    val tmp = tempDir("graft_clusterloop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val labelsDir = s"$tmp/labels"
     val corpusDoc = "the quick brown fox jumps over the lazy dog near the " +
@@ -877,7 +876,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("maintainedNearIntakeVerified: below-threshold doc survives, dup dropped, in-batch closure") {
     implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vloop").toString
+    val tmp = tempDir("graft_vloop").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val corpusDoc = "the quick brown fox jumps over the lazy dog near the " +
       "river bank today while the sun is high and the water is clear"
@@ -1047,7 +1046,7 @@ class StreamingSpec extends SparkTestBase {
     // reference: short docs (1-2 tokens → bucket 0)
     val refDocs = (0 until 50).map(i => (i.toLong, s"tok$i word")).toDF("doc_id", "text")
     val ref = TextAnalysis.fitLenHistogram(refDocs)
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val sinkDir = tempDir("graft_drift").toString
     val mem = MemoryStream[EventStreams.Doc]
     val q = EventStreams.driftAlarmIntake(mem.toDF(), ref, sinkDir, tau = 0.2).start()
     try {
@@ -1094,7 +1093,7 @@ class StreamingSpec extends SparkTestBase {
       .select(col("doc_id"), col("text")).collect()
       .map(r => EventStreams.Doc(r.getLong(0), ts(r.getLong(0).toInt % 60),
         r.getString(1)))
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_drift_twin").toString
+    val sinkDir = tempDir("graft_drift_twin").toString
     val mem = MemoryStream[EventStreams.Doc]
     val q = EventStreams.driftAlarmIntake(mem.toDF(), ref, sinkDir, tau = 0.15).start()
     try {
@@ -1127,7 +1126,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.queries.TextQueries
     val m = TextQueries.bm25Model(spark, "/root/testdata/sf0.001")
     val score = graft.operators.TextAnalysis.bm25Score(m) _
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_bm25_gate").toString
+    val sinkDir = tempDir("graft_bm25_gate").toString
     val mem = MemoryStream[EventStreams.Doc]
     // tau between the relevant and irrelevant docs' scores
     val relevant = "query stream hash vector query table scan"
@@ -1254,7 +1253,7 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tws").toString
+      val dir = tempDir("graft_tws").toString
       val mem = MemoryStream[EventStreams.Ev]
       def start() = EventStreams.runningUserTotalsV2(mem.toDS())
         .writeStream.outputMode("append")
@@ -1285,7 +1284,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("file stream source: new parquet files picked up incrementally") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fsrc").toString
+    val dir = tempDir("graft_fsrc").toString
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
     val e1 = Seq((1L, ts(0), 1L, "a", 1.0), (2L, ts(1), 1L, "b", 2.0))
       .toDF(cols: _*)
@@ -1311,7 +1310,7 @@ class StreamingSpec extends SparkTestBase {
     // the operational pattern for periodic 100 TB ingest: run as a batch
     // job, process exactly the files that have arrived, checkpoint, exit;
     // the next run picks up only new files.
-    val dir = java.nio.file.Files.createTempDirectory("graft_avnow").toString
+    val dir = tempDir("graft_avnow").toString
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
     Seq((1L, ts(0), 1L, "a", 1.0), (2L, ts(1), 1L, "b", 2.0))
       .toDF(cols: _*).write.mode("append").parquet(s"$dir/in")
@@ -1360,7 +1359,7 @@ class StreamingSpec extends SparkTestBase {
     */
   private class CurationFixture {
     import graft.operators.TextAnalysis
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curation").toString
+    val tmp = tempDir("graft_curation").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val ledgerDir = s"$tmp/ledger"
     // every admissible doc carries the BM25 query term "data"
@@ -1565,12 +1564,12 @@ class StreamingSpec extends SparkTestBase {
     // ... and the unflagged batch plans no index scan at all
     val touched = cleanJobs.count(rec.scans(f.indexDir))
     assert(touched == 0, s"unflagged batch read the index in $touched jobs")
-    // the budget: the batch-size-and-flag aggregate, the flagged-hash
-    // collect and the index scan (flagged batch only), the labeled
-    // funnel with its grouped collect, and the sink, index and ledger
-    // writes
-    assert(flaggedJobs.size <= 8, s"flagged batch ran ${flaggedJobs.size} jobs")
-    assert(cleanJobs.size <= 6, s"unflagged batch ran ${cleanJobs.size} jobs")
+    // the budget: the map-only key collect, the index scan (flagged
+    // batch only), the broadcast of the sources' remaining room, the
+    // funnel's grouped collect, the sink and index writes (the flagged
+    // batch only: the unflagged one admits nothing) and the ledger write
+    assert(flaggedJobs.size <= 7, s"flagged batch ran ${flaggedJobs.size} jobs")
+    assert(cleanJobs.size <= 4, s"unflagged batch ran ${cleanJobs.size} jobs")
     val ledger = spark.read.parquet(f.ledgerDir).orderBy(col("batch_id"))
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
@@ -1585,7 +1584,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sc = spark.sqlContext
     val f = new CurationFixture
     val known = (0 until 70).map(i => s"data known doc $i already sits in the corpus index")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curation_many").toString
+    val tmp = tempDir("graft_curation_many").toString
     known.toDF("text").select(md5(col("text")).as("content_hash")).write.parquet(s"$tmp/index")
     val rec = new JobRecorder
     // 67 index hashes and two novel docs in one batch
@@ -1602,11 +1601,61 @@ class StreamingSpec extends SparkTestBase {
     val jobs = rec.batchJobs(q.id, manyBatch)
     val scanning = jobs.count(rec.scans(s"$tmp/index"))
     assert(scanning == 1, s"dup-heavy batch scanned the index in $scanning jobs")
-    assert(jobs.size <= 7, s"dup-heavy batch ran ${jobs.size} jobs")
+    // the key collect, the index scan, the funnel's grouped collect and
+    // the sink, index and ledger writes (no budget, so no room broadcast)
+    assert(jobs.size <= 6, s"dup-heavy batch ran ${jobs.size} jobs")
     val ledger = spark.read.parquet(s"$tmp/ledger")
       .select(col("n_batch"), col("n_clean"), col("n_admitted"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(ledger == Seq((69L, 2L, 2L)), s"ledger $ledger")
+  }
+
+  test("curationIntake: an admitted doc replayed after a 2-hour watermark " +
+      "would have expired stays out") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val tmp = tempDir("graft_curation_replay").toString
+    val mem = MemoryStream[EventStreams.SourcedDoc]
+    val q = EventStreams.curationIntake(mem.toDF(), f.quality, f.tauQ, f.bm25, 0.01,
+      f.bench, f.ref, 0.6, None, f.indexDir, s"$tmp/sink", s"$tmp/ledger").start()
+    // novelA, then three batches 6 h apart, then novelA again 20 h after
+    // its first copy: the run set still holds its hash
+    try feedBatches(mem, q, Seq(
+      Seq(EventStreams.SourcedDoc(1, ts(0), "s1", f.novelA)),
+      Seq(EventStreams.SourcedDoc(2, ts(360), "s1", f.novelB)),
+      Seq(EventStreams.SourcedDoc(3, ts(720), "s1", f.novelC)),
+      Seq(EventStreams.SourcedDoc(4, ts(1080), "s1", f.novelD)),
+      Seq(EventStreams.SourcedDoc(5, ts(1200), "s1", f.novelA))))
+    finally q.stop()
+    val sink = spark.read.parquet(s"$tmp/sink").select(col("text")).as[String].collect().toSeq
+    assert(sink.count(_ == f.novelA) == 1, s"novelA admitted ${sink.count(_ == f.novelA)} times")
+    assert(sink.sorted == Seq(f.novelA, f.novelB, f.novelC, f.novelD).sorted, s"sink $sink")
+  }
+
+  test("curationIntake runs no no-data micro-batch and writes no 0-row file") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val mem = MemoryStream[EventStreams.SourcedDoc]
+    val q = f.wire(mem).start()
+    // c1, then 6 h later a repeat of c1's novelA and a doc past s2's budget
+    val later = Seq(EventStreams.SourcedDoc(30, ts(360), "s1", f.novelA),
+      EventStreams.SourcedDoc(31, ts(361), "s2",
+        "data document five with clean english words for the intake test"))
+    try Seq(f.c1, later).foreach { docs =>
+      feedBatches(mem, q, Seq(docs))
+      val empty = zeroRowFiles(f.sinkDir) ++ zeroRowFiles(f.indexDir)
+      assert(empty.isEmpty, s"0-row files: $empty")
+    } finally q.stop()
+    // the micro-batches that ran (an idle stream also reports progress)
+    val progress = q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+    assert(progress.map(_.batchId) == Seq(0L, 1L) && progress.forall(_.numInputRows > 0),
+      s"micro-batches ${progress.map(p => p.batchId -> p.numInputRows)}")
+    // no stateful operator and no event-time watermark in the plan
+    assert(progress.forall(p => p.stateOperators.isEmpty && !p.eventTime.containsKey("watermark")))
+    val ledger = spark.read.parquet(f.ledgerDir).orderBy(col("batch_id"))
+      .select(col("n_batch"), col("n_clean"), col("n_admitted"))
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(ledger == Seq((6L, 4L, 3L), (1L, 1L, 0L)), s"ledger $ledger")
   }
 
   test("maintainedIntake per-micro-batch job budget") {
@@ -1631,7 +1680,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("maintainedNearIntakeVerified per-micro-batch job budget") {
     implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vbudget").toString
+    val tmp = tempDir("graft_vbudget").toString
     val indexDir = s"$tmp/index"; val sinkDir = s"$tmp/sink"
     val corpusDoc = "the quick brown fox jumps over the lazy dog near the " +
       "river bank today while the sun is high and the water is clear"
@@ -1749,7 +1798,7 @@ class StreamingSpec extends SparkTestBase {
       known.drop(3).zipWithIndex.map { case (t, i) => doc(300 + i, 130 + i, t) }
     def run(maxBroadcastGrams: Long, maxBloomHashes: Long)
         : (Set[String], Seq[(Long, Long, Long, Double, Boolean)]) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_curation_fb").toString
+      val tmp = tempDir("graft_curation_fb").toString
       known.toDF("text").select(md5(col("text")).as("content_hash"))
         .write.parquet(s"$tmp/index")
       val mem = MemoryStream[EventStreams.SourcedDoc]

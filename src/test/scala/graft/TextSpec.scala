@@ -221,7 +221,7 @@ class TextSpec extends SparkTestBase {
     import graft.operators.Artifacts
     val merges = Seq(("e", "s"), ("es", "t"))
     // torn versioned save: partial v=1, no pointer → refit exactly once
-    val torn = java.nio.file.Files.createTempDirectory("graft_bpe_torn")
+    val torn = tempDir("graft_bpe_torn")
       .toString + "/bpe"
     new java.io.File(s"$torn/v=1").mkdirs()
     java.nio.file.Files.write(
@@ -233,7 +233,7 @@ class TextSpec extends SparkTestBase {
     assert(Artifacts.latestVersion(spark, torn).exists(_.endsWith("v=2")))
     // legacy pre-versioning flat layout: loads as-is, no refit
     import spark.implicits._
-    val flat = java.nio.file.Files.createTempDirectory("graft_bpe_flat")
+    val flat = tempDir("graft_bpe_flat")
       .toString + "/bpe"
     merges.zipWithIndex.map { case ((l, r), i) => (i + 1, l, r) }
       .toDF("round", "left", "right").write.parquet(flat)
@@ -246,7 +246,7 @@ class TextSpec extends SparkTestBase {
   }
 
   test("BPE merge table save/load: order preserved, served encoding identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = tempDir("graft_bpe").toString
     val merges = Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w"))
     graft.operators.Artifacts.saveBpeMerges(spark, merges, dir)
     val re = graft.operators.Artifacts.loadBpeMerges(spark, dir)
@@ -408,7 +408,7 @@ class TextSpec extends SparkTestBase {
       (4L, "filler words only here")                 // no query terms
     ).toDF("doc_id", "text")
     // run the same pipeline via a temp dir parquet (queries take a dir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
+    val dir = tempDir("graft_bm25").toString
     frame.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_bm25_topk")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -10,9 +10,12 @@ trees build their benchmark (perfbench/build.py) and run
 output directory (perfbench/run.py deletes its own). The ledger, sink
 and index rows of the timed intake (`intake-2/`; `intake-0/1` are the
 set-up repeats) are then compared as multisets of whole rows, columns
-in file order. Each run's timed loop lasts one second, so both trees
-run the feed's minimum of 5 batches; differing batch counts are a
-failure.
+in file order. For a part that differs, the rows only one side holds are
+counted per feed doc kind (`doc_id / 10^5 % 10`, a..e as in
+perfbench/README.md); an index row takes the kind of the sink row with
+its content hash, `?` when neither sink holds it. Each run's timed loop
+lasts one second, so both trees run the feed's minimum of 5 batches;
+differing batch counts are a failure.
 
 Per seed and side it also prints the run's `dup_leaks` and batch count
 and, from the trace, the jobs/tasks of each `EventStreams.curationIntake
@@ -23,6 +26,7 @@ Exit 0 iff every part is identical for every seed, both trees ran the
 same batches, and no run failed.
 """
 import argparse
+import collections
 import json
 import os
 import pathlib
@@ -41,6 +45,7 @@ from abpairs import build_trees, seed_list  # noqa: E402
 TIMED = "intake-2"
 BATCH_SPAN = "EventStreams.curationIntake.batch"
 WIRE_SPAN = "EventStreams.curationIntake.wire"
+KINDS = "?abcde"  # doc_id / 10^5 % 10 → the feed's doc kind
 
 
 def run_intake(tree, seed, out):
@@ -75,21 +80,53 @@ def span_counts(spans, name):
 
 
 def rows(con, part_dir):
+    """(column names, rows in order) of the parquet files in `part_dir`."""
     files = sorted(str(p) for p in part_dir.glob("*.parquet"))
     if not files:
-        return []
-    return con.execute(f"SELECT * FROM read_parquet({json.dumps(files)}) "
-                       "ORDER BY ALL").fetchall()
+        return [], []
+    cur = con.execute(f"SELECT * FROM read_parquet({json.dumps(files)}) ORDER BY ALL")
+    return [d[0] for d in cur.description], cur.fetchall()
+
+
+def kind(doc_id):
+    k = doc_id // 100000 % 10
+    return KINDS[k] if 0 < k < len(KINDS) else "?"
+
+
+def by_kind(only, kind_of):
+    """'a=3 d=30' for the rows `only` (a Counter), by `kind_of(row)`."""
+    per = collections.Counter()
+    for r, n in only.items():
+        per[kind_of(r)] += n
+    return " ".join(f"{k}={n}" for k, n in sorted(per.items())) or "-"
 
 
 def compare(con, parent_dir, change_dir):
     """{part: verdict} for the ledger, sink and index of the timed intake."""
-    verdicts = {}
+    verdicts, hash_kind = {}, {}
     for part in ("ledger", "sink", "index"):
-        a = rows(con, parent_dir / TIMED / part)
-        b = rows(con, change_dir / TIMED / part)
-        verdicts[part] = ("identical" if a == b else
-                          f"DIFFERENT ({len(a)} parent rows, {len(b)} change rows)")
+        (cols_a, a), (cols_b, b) = (rows(con, d / TIMED / part) for d in (parent_dir, change_dir))
+        cols = cols_a or cols_b
+        ca, cb = collections.Counter(a), collections.Counter(b)
+        if part == "sink" and cols:
+            # content hash → doc kind for the index rows: a differing sink
+            # row's kind wins over a shared one (a repeat shares its hash)
+            d, h = cols.index("doc_id"), cols.index("content_hash")
+            for r in sorted(ca + cb, key=lambda r: ca[r] == cb[r]):
+                hash_kind.setdefault(r[h], kind(r[d]))
+        if a == b:
+            verdicts[part] = "identical"
+            continue
+        verdicts[part] = f"DIFFERENT ({len(a)} parent rows, {len(b)} change rows)"
+        if part == "ledger":
+            continue
+        if part == "sink":
+            kind_of = lambda r: kind(r[d])  # noqa: E731
+        else:
+            h = cols.index("content_hash")
+            kind_of = lambda r: hash_kind.get(r[h], "?")  # noqa: E731
+        verdicts[part] += (f"; parent only by kind: {by_kind(ca - cb, kind_of)}"
+                           f"; change only by kind: {by_kind(cb - ca, kind_of)}")
     return verdicts
 
 
