@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.TextHashFunctions
 import graft.operators.{Artifacts, Dedup, Mix, TextAnalysis}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
@@ -334,13 +334,6 @@ object EventStreams {
     * the partitions that hold rows, known from the step or else found by
     * [[rowPartitions]]; the ledger is always one row.
     *
-    * The step's plans are non-adaptive. Spark turns adaptive planning
-    * off in a stream's own session only when the stream's plan has a
-    * stateful operator; in a stateless intake each exchange of the step
-    * would run as its own adaptive job (the curation funnel alone ran
-    * 4). So the loop turns it off on the batch's session, which is the
-    * stream's clone: the caller's session keeps its setting.
-    *
     * Delivery is AT-LEAST-ONCE, with or without a `checkpointLocation`:
     * the appends ignore the batch id, so a batch replayed after a crash
     * between its appends and its commit-log entry appends again (a
@@ -351,7 +344,6 @@ object EventStreams {
       : DataStreamWriter[Row] =
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
         val mb = new MicroBatch(batch, batchId)
         try {
           val wb = step(mb)
@@ -748,6 +740,40 @@ object EventStreams {
       .transformWithState(new MixBudgetProcessor(targets), TimeMode.None(), OutputMode.Append())
   }
 
+  /** [[curationIntake]]'s view of the live index at `liveIndex` for
+    * gates 4 and 6a: a snapshot (its file listing pinned when read) and
+    * the bloom flag over it. fpp 0.001 → ~0.1% of a clean batch pays the
+    * gate-6a verify; 10M hashes ≈ 18 MB of task-shipped reference state
+    * (the maxBroadcastGrams discipline — beyond `maxBloomHashes`, no
+    * bloom and every row verifies, the honest degrade).
+    */
+  private[graft] def indexGate(spark: SparkSession, liveIndex: String,
+      maxBloomHashes: Long): (DataFrame, Column) = {
+    val known = spark.read.parquet(liveIndex)
+    val n = known.count()
+    (known, if (n > maxBloomHashes) lit(true) else TextHashFunctions.bloom_hit(
+      col("content_hash"), known.stat.bloomFilter("content_hash", math.max(n, 1L), 0.001)))
+  }
+
+  /** [[curationIntake]]'s gate 5 run state: every content hash seen in
+    * this run, next to the index gate `wire` builds (at construction).
+    * Once the set holds `max` hashes, [[gate]] wires again and clears
+    * the set, as a restart does: the hashes admitted so far were
+    * appended to the index, so the new gate still catches them, and
+    * only the budget-rejected ones are forgotten.
+    */
+  private[graft] final class RunDedup(max: Long, wire: () => (DataFrame, Column)) {
+    private val seen = new java.util.HashSet[String]
+    private var wired = wire()
+    /** The index gate for the next batch, re-wired first if the set is full. */
+    def gate(): (DataFrame, Column) = {
+      if (seen.size >= max) { wired = wire(); seen.clear() }
+      wired
+    }
+    /** Whether `hash` is new to the set, adding it. */
+    def firstSeen(hash: String): Boolean = seen.add(hash)
+  }
+
   /** THE composed ONLINE intake — every serving gate this file proves
     * individually, chained in ONE maintained loop the way
     * `q_corpus_pipeline_v2` chains the batch stages. A production corpus
@@ -790,11 +816,13 @@ object EventStreams {
     *     7 admits in. What survives is `n_batch` and, with its bloom
     *     flags, the flagged set. Runs before this one are covered by the
     *     index: every admitted hash is appended back to it, so the bloom
-    *     and gate 6a catch it. The run set is bounded by
+    *     and gate 6a catch it. The run set ([[RunDedup]]) is bounded by
     *     [[IntakeMaxRunHashes]]; once it holds that many, the next batch
     *     first re-runs the wiring path — it re-lists the live index,
     *     refits the bloom and clears the set — which is what a restart
-    *     does;
+    *     does. With no event-time watermark nothing is dropped for
+    *     lateness: a row hours behind the batches before it passes
+    *     through every gate like any other and can be admitted;
     *  6a. index-dedup VERIFY on the bloom-flagged survivors only. A
     *     batch with NO flagged rows touches the index ZERO times.
     *     Otherwise the flagged hashes ship once as a broadcast set and
@@ -893,21 +921,7 @@ object EventStreams {
     val grams = TextAnalysis.benchGrams(bench, TextAnalysis.BenchGramN, maxBroadcastGrams)
     val maybeContam = grams.intakeFlag(col("text"), 0.01)
     val liveIndex = Artifacts.resolveLive(spark, indexDir)
-    // gates 4 and 6a's view of the index: a snapshot (its file listing
-    // pinned when read) and the bloom flag over it, fit at wiring and
-    // again when the run set fills. fpp 0.001 → ~0.1% of a clean batch
-    // pays the gate-6a verify; 10M hashes ≈ 18 MB of task-shipped
-    // reference state (the maxBroadcastGrams discipline — beyond the
-    // bound, no bloom and every row verifies, the honest degrade).
-    def indexGate(): (DataFrame, Column) = {
-      val known = spark.read.parquet(liveIndex)
-      val n = known.count()
-      (known, if (n > maxBloomHashes) lit(true) else TextHashFunctions.bloom_hit(
-        col("content_hash"), known.stat.bloomFilter("content_hash", math.max(n, 1L), 0.001)))
-    }
-    var index = indexGate()
-    // gate 5's run set: every content hash past gates 1–2 in this run
-    val seen = new java.util.HashSet[String]
+    val run = new RunDedup(IntakeMaxRunHashes, () => indexGate(spark, liveIndex, maxBloomHashes))
     val srcCols = docs.columns.toSeq
     // budget ledger: |sources| driver longs, REDERIVED from the sink so a
     // restart resumes where the durable output stands
@@ -924,14 +938,18 @@ object EventStreams {
       .filter(TextAnalysis.bm25Score(relevance)(col("text")) >= tauRelevance)
       .withColumn("content_hash", md5(col("text")))
       .withColumn("__maybe_contam", maybeContam)
-    def ship(xs: Seq[String]): Broadcast[java.util.Set[String]] =
+    def broadcastOf(xs: Seq[String]): Broadcast[java.util.Set[String]] =
       spark.sparkContext.broadcast[java.util.Set[String]](
         new java.util.HashSet[String](java.util.Arrays.asList(xs: _*)))
     def key(r: Row, i: Int): Option[Long] = Option.when(!r.isNullAt(i))(r.getLong(i))
     import spark.implicits._
     intakeLoop(gated, Some(sinkDir), Some(ledgerDir)) { mb =>
-      if (seen.size >= IntakeMaxRunHashes) { index = indexGate(); seen.clear() }
-      val (knownHashes, maybeDup) = index
+      // Spark plans a stream adaptively unless its plan is stateful, and
+      // this one is not: adaptive, every exchange below would run as its
+      // own job (the funnel alone ran 4). The batch's session is the
+      // stream's clone, so the caller's session keeps its setting.
+      mb.rows.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+      val (knownHashes, maybeDup) = run.gate()
       val b = mb.rows.withColumn("__rid", monotonically_increasing_id().cast("string"))
       // first action, map-only: gate 4's bloom flag and gate 5's keys.
       // The first copy in (ts, doc_id) order of each hash not yet in the
@@ -940,7 +958,7 @@ object EventStreams {
       val (kept, repeats) = b.select(col("content_hash"), unix_micros(col("ts")),
           col("doc_id"), maybeDup, col("__rid")).collect()
         .sortBy(r => (key(r, 1), key(r, 2)))
-        .partition(r => seen.add(r.getString(0)))
+        .partition(r => run.firstSeen(r.getString(0)))
       val nBatch = kept.length.toLong
       // a batch of repeats only produces no writes and no ledger row
       if (nBatch == 0) WriteBack(None)
@@ -952,13 +970,13 @@ object EventStreams {
         val dups =
           if (flagged.isEmpty) Set.empty[String]
           else knownHashes.select(col("content_hash"))
-            .filter(TextHashFunctions.set_hit(col("content_hash"), mb.ship(ship(flagged))))
+            .filter(TextHashFunctions.set_hit(col("content_hash"), mb.ship(broadcastOf(flagged))))
             .as(Encoders.STRING).collect().toSet
         // gates 5 and 6a drop their rows by row id, in one filter
         val gone = repeats.map(_.getString(4)) ++
           kept.filter(r => dups(r.getString(0))).map(_.getString(4))
         val b1 = if (gone.isEmpty) b
-          else b.filter(!TextHashFunctions.set_hit(col("__rid"), mb.ship(ship(gone))))
+          else b.filter(!TextHashFunctions.set_hit(col("__rid"), mb.ship(broadcastOf(gone))))
         // gate 6: the in-scan contamination flag, exact under the
         // broadcast bound (a filter), bloom-verified above it
         val clean = grams.dropFlagged(b1, col("__maybe_contam"))

@@ -1658,6 +1658,48 @@ class StreamingSpec extends SparkTestBase {
     assert(ledger == Seq((6L, 4L, 3L), (1L, 1L, 0L)), s"ledger $ledger")
   }
 
+  test("curationIntake admits a row hours behind the batches before it") {
+    implicit val sc = spark.sqlContext
+    val f = new CurationFixture
+    val tmp = tempDir("graft_curation_late").toString
+    val mem = MemoryStream[EventStreams.SourcedDoc]
+    val q = EventStreams.curationIntake(mem.toDF(), f.quality, f.tauQ, f.bm25, 0.01,
+      f.bench, f.ref, 0.6, None, f.indexDir, s"$tmp/sink", s"$tmp/ledger").start()
+    // novelA 18 h behind novelB: no watermark, so nothing drops it as late
+    try feedBatches(mem, q, Seq(
+      Seq(EventStreams.SourcedDoc(1, ts(1080), "s1", f.novelB)),
+      Seq(EventStreams.SourcedDoc(2, ts(0), "s1", f.novelA))))
+    finally q.stop()
+    val sink = spark.read.parquet(s"$tmp/sink").select(col("text")).as[String].collect().toSet
+    assert(sink == Set(f.novelA, f.novelB), s"sink $sink")
+  }
+
+  test("curationIntake's run set: a full set re-wires the index gate and still " +
+      "catches every admitted hash") {
+    val dir = tempDir("graft_run_dedup").toString + "/index"
+    graft.operators.Artifacts.append(Seq("h0").toDF("content_hash"), dir)
+    var wirings = 0
+    val run = new EventStreams.RunDedup(2, () => {
+      wirings += 1; EventStreams.indexGate(spark, dir, 10L) })
+    def known(g: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column)) =
+      g._1.as[String].collect().toSet
+    def flagged(g: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column)) =
+      Seq("h0", "h1", "h2", "h3").toDF("content_hash")
+        .filter(g._2).as[String].collect().toSet
+    assert(run.firstSeen("h1") && !run.firstSeen("h1"))
+    assert(known(run.gate()) == Set("h0") && wirings == 1, "a set below the bound re-wired")
+    // h1 admitted and appended back, h2 budget-rejected: the set is full
+    assert(run.firstSeen("h2"))
+    graft.operators.Artifacts.append(Seq("h1").toDF("content_hash"), dir)
+    val g = run.gate()
+    assert(wirings == 2, s"$wirings wirings")
+    // the set is clear, the index gate now holds the admitted h1, and
+    // only the budget-rejected h2 is forgotten
+    assert(run.firstSeen("h1") && run.firstSeen("h2"))
+    assert(known(g) == Set("h0", "h1"), s"index ${known(g)}")
+    assert(Set("h0", "h1").subsetOf(flagged(g)), s"bloom flagged ${flagged(g)}")
+  }
+
   test("maintainedIntake per-micro-batch job budget") {
     implicit val sc = spark.sqlContext
     val f = new CurationFixture
